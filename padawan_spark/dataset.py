@@ -785,20 +785,18 @@ class Dataset:
                              AppendError,
                              f"index columns differ: {old.index_columns} vs "
                              f"{self.index_columns}")
-                    schema_json = self._check_evolution(old, merge_schema)
-                    before = set(_list_parquet(path))
-                    self.df.write.mode("append").parquet(path)
-                    new_files = sorted(set(_list_parquet(path)) - before)
-                    return self._finish_write(path, old, new_files,
-                                              manifest_table,
-                                              schema_json=schema_json)
+                    _commit(self.spark, path, self.df, self.index_columns,
+                            self._check_evolution(old, merge_schema),
+                            old=old, keep=range(len(old.files)),
+                            manifest_table=manifest_table)
             except _meta.CommitConflictError as e:
                 raise AppendError(str(e)) from None
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        self.df.write.mode("overwrite").parquet(path)
-        new_files = sorted(_list_parquet(path))
-        return self._finish_write(path, None, new_files, manifest_table)
+        else:
+            if os.path.exists(path):
+                shutil.rmtree(path)
+            _commit(self.spark, path, self.df, self.index_columns,
+                    self.df.schema.json(), manifest_table=manifest_table)
+        return scan_parquet(self.spark, path)
 
     def _check_evolution(self, old, merge_schema: bool) -> str | None:
         """Append-side schema contract.  Default: the appended schema
@@ -812,7 +810,7 @@ class Dataset:
         with the manifest schema.  Returns the schema_json to record."""
         if not old.schema_json:
             return self.df.schema.json()
-        old_schema = StructType.fromJson(json.loads(old.schema_json))
+        old_schema = old.schema
         old_t = {f.name: f.dataType for f in old_schema.fields}
         new_fields = list(self.df.schema.fields)
         conflicts = [f.name for f in new_fields
@@ -834,40 +832,6 @@ class Dataset:
             _SF(f.name, f.dataType, True) for f in new_fields
             if f.name not in old_t]
         return StructType(merged).json()
-
-    def _finish_write(self, path: str, old, new_files, manifest_table: bool,
-                      schema_json: str | None = None) -> "Dataset":
-
-        sizes_by_file = _file_stats(self.spark, [os.path.join(path, f) for f in new_files],
-                                    self.index_columns)
-        # empty partitions: skipped in the manifest but schema still recorded
-        # (dataset.py:340-347)
-        def _k(f):
-            return os.path.abspath(os.path.join(path, f))
-        kept = [f for f in new_files if _k(f) in sizes_by_file]
-        files = (old.files if old else []) + kept
-        sizes = ([*(old.sizes or [])] if old else []) + [sizes_by_file[_k(f)][0] for f in kept]
-        lbs = ([*(old.lower_bounds or [])] if old else []) + [sizes_by_file[_k(f)][1] for f in kept]
-        ubs = ([*(old.upper_bounds or [])] if old else []) + [sizes_by_file[_k(f)][2] for f in kept]
-        man = _meta.Manifest(
-            index_columns=self.index_columns, files=files, sizes=sizes,
-            lower_bounds=lbs if self.index_columns else None,
-            upper_bounds=ubs if self.index_columns else None,
-            max_partition_index=(old.max_partition_index if old else -1) + len(kept),
-            schema_json=schema_json or self.df.schema.json(),
-        )
-        if not self.index_columns:
-            man.lower_bounds = [() for _ in files]
-            man.upper_bounds = [() for _ in files]
-        _meta.write_manifest(path, man)
-        # keep the parquet-form manifest in lockstep with the JSON one:
-        # refresh when asked for explicitly OR when the dataset already
-        # carries one (append without manifest_table=True must not leave
-        # a stale table behind — scan_parquet_pruned would silently omit
-        # the appended files; mirrors compact_parquet's auto-refresh)
-        if manifest_table or os.path.isdir(_meta.manifest_table_path(path)):
-            _meta.write_manifest_table(self.spark, path, man)
-        return scan_parquet(self.spark, path)
 
     def collect(self, progress: Callable[[int, int], None] | None = None):
         """Materialize as a single in-memory pandas DataFrame
@@ -1049,6 +1013,63 @@ def _file_stats(spark: SparkSession, files: list[str], ix: tuple[str, ...],
             for r in rows}
 
 
+def _commit(spark: SparkSession, path: str, df: DataFrame | None,
+            index_columns, schema_json: str | None, old=None, keep=(),
+            manifest_table: bool = False) -> None:
+    """The commit every table writer ends with.
+
+    ``df`` is appended to ``path`` as new data files; ``df=None`` adopts
+    every parquet file already there.  Only the added files are statted, and
+    empty ones are dropped (``dataset.py:340-347``).  The new manifest
+    lists ``old``'s files at the positions in ``keep``, then the added
+    files; ``schema_json=None`` records the added files' schema (still
+    ``None`` when no added file has rows).  The JSON manifest is
+    published with its version snapshot, and the manifest table is
+    rewritten when asked for or already present, so ``scan_parquet`` and
+    ``scan_parquet_pruned`` always see the same files.  Writers that
+    read-modify-write the manifest call this inside the commit lock."""
+    before = set()
+    if df is not None:
+        before = set(_list_parquet(path))
+        df.write.mode("append").parquet(path)
+    paths = {f: os.path.abspath(os.path.join(path, f))
+             for f in _list_parquet(path) if f not in before}
+    stats = _file_stats(spark, list(paths.values()), tuple(index_columns))
+    added = [f for f in paths if paths[f] in stats]
+    old = old or _meta.Manifest()
+
+    def _extend(old_vals, j):
+        if keep and old_vals is None:
+            return None                 # unknown before, unknown after
+        return ([old_vals[i] for i in keep]
+                + [stats[paths[f]][j] for f in added])
+
+    if schema_json is None and added:
+        schema_json = spark.read.parquet(
+            *[paths[f] for f in added]).schema.json()
+    man = _meta.Manifest(
+        index_columns=tuple(index_columns),
+        files=[old.files[i] for i in keep] + added,
+        sizes=_extend(old.sizes, 0),
+        lower_bounds=_extend(old.lower_bounds, 1),
+        upper_bounds=_extend(old.upper_bounds, 2),
+        max_partition_index=old.max_partition_index + len(added),
+        schema_json=schema_json,
+    )
+    _meta.write_manifest(path, man)
+    if manifest_table or os.path.isdir(_meta.manifest_table_path(path)):
+        _meta.write_manifest_table(spark, path, man)
+
+
+def _manifest_dataset(spark: SparkSession, path: str, man) -> Dataset:
+    """The file-backed Dataset a manifest describes, read with its
+    recorded schema."""
+    return Dataset(spark, files=[os.path.join(path, f) for f in man.files],
+                   index_columns=man.index_columns, sizes=man.sizes,
+                   lower_bounds=man.lower_bounds,
+                   upper_bounds=man.upper_bounds, schema=man.schema)
+
+
 def scan_parquet(spark: SparkSession, path: str,
                  version: int | None = None,
                  as_of=None) -> Dataset:
@@ -1073,26 +1094,13 @@ def scan_parquet(spark: SparkSession, path: str,
         _require(version is None, ValueError,
                  "version= requires a manifest directory, not a file")
         return Dataset(spark, files=[path])
-    if version is not None:
-        _require(_meta.has_manifest(path), ValueError,
+    if not _meta.has_manifest(path):
+        _require(version is None, ValueError,
                  f"version= requires a manifest at {path}")
-        man = _meta.load_manifest(path, version=version)
-        files = [os.path.join(path, f) for f in man.files]
-        schema = (StructType.fromJson(__import__("json").loads(man.schema_json))
-                  if man.schema_json else None)
-        return Dataset(spark, files=files, index_columns=man.index_columns,
-                       sizes=man.sizes, lower_bounds=man.lower_bounds,
-                       upper_bounds=man.upper_bounds, schema=schema)
-    if _meta.has_manifest(path):
-        man = _meta.load_manifest(path)
-        files = [os.path.join(path, f) for f in man.files]
-        schema = (StructType.fromJson(__import__("json").loads(man.schema_json))
-                  if man.schema_json else None)
-        return Dataset(spark, files=files, index_columns=man.index_columns,
-                       sizes=man.sizes, lower_bounds=man.lower_bounds,
-                       upper_bounds=man.upper_bounds, schema=schema)
-    files = [os.path.join(path, f) for f in _list_parquet(path)]
-    return Dataset(spark, files=files)
+        return Dataset(spark, files=[os.path.join(path, f)
+                                     for f in _list_parquet(path)])
+    return _manifest_dataset(spark, path,
+                             _meta.load_manifest(path, version=version))
 
 
 def scan_parquet_pruned(spark: SparkSession, path: str,
@@ -1119,9 +1127,6 @@ def scan_parquet_pruned(spark: SparkSession, path: str,
     subset — so results are identical to the driver-side path by
     construction, only cheaper to plan."""
     import datetime as _dt
-    import json as _json
-
-    from pyspark.sql import functions as F
 
     _require(os.path.isdir(_meta.manifest_table_path(path)), ValueError,
              f"scan_parquet_pruned requires a manifest table at {path} "
@@ -1165,29 +1170,7 @@ def scan_parquet_pruned(spark: SparkSession, path: str,
             keep = keep & (k.isNull() | (k >= _probe_lit(lb[0])))
     rows = (t.where(keep | F.col("lb").isNull() | F.col("ub").isNull())
             .orderBy("pos").collect())
-
-    with open(os.path.join(path,
-                           _meta.MANIFEST_TABLE_DIR + "_meta.json")) as f:
-        tmeta = _json.load(f)
-    ix = tuple(tmeta["index_columns"])
-    files = [os.path.join(path, r["file"]) for r in rows]
-    sizes = [r["size"] for r in rows]
-    lbs = [tuple(_meta._decode_value(v) for v in _json.loads(r["lb"]))
-           if r["lb"] is not None else None for r in rows]
-    ubs = [tuple(_meta._decode_value(v) for v in _json.loads(r["ub"]))
-           if r["ub"] is not None else None for r in rows]
-    schema = None
-    sp = os.path.join(path, _meta.SCHEMA_FILE)
-    if os.path.exists(sp):
-        with open(sp) as f:
-            schema = StructType.fromJson(_json.loads(f.read()))
-    ds = Dataset(
-        spark, files=files, index_columns=ix,
-        sizes=None if any(s is None for s in sizes) else sizes,
-        lower_bounds=None if any(b is None for b in lbs) else lbs,
-        upper_bounds=None if any(b is None for b in ubs) else ubs,
-        schema=schema,
-    )
+    ds = _manifest_dataset(spark, path, _meta._manifest_from_rows(path, rows))
     if lb is None and ub is None:
         return ds
     return ds.slice(lb, ub, inclusive=inclusive)
@@ -1271,22 +1254,10 @@ def write_metadata(spark: SparkSession, path: str,
                    index_columns: Sequence[str]) -> None:
     """Retro-fit a manifest onto a directory of foreign parquet files
     (``write_metadata.py:22-79``): distributed stats job, empty files
-    dropped."""
-    names = _list_parquet(path)
-    stats = _file_stats(spark, [os.path.join(path, f) for f in names],
-                        tuple(index_columns))
-    def _k(f):
-        return os.path.abspath(os.path.join(path, f))
-    kept = [f for f in names if _k(f) in stats]
-    man = _meta.Manifest(
-        index_columns=tuple(index_columns), files=kept,
-        sizes=[stats[_k(f)][0] for f in kept],
-        lower_bounds=[stats[_k(f)][1] for f in kept],
-        upper_bounds=[stats[_k(f)][2] for f in kept],
-        max_partition_index=len(kept) - 1,
-        schema_json=spark.read.parquet(path).schema.json() if kept else None,
-    )
-    _meta.write_manifest(path, man)
+    dropped.  It commits like every writer: under the commit lock, as a
+    new version snapshot, refreshing the manifest table if there is one."""
+    with _meta.commit_lock(path, "write_metadata"):
+        _commit(spark, path, None, index_columns, None)
 
 
 def compact_parquet(spark: SparkSession, path: str,
@@ -1309,33 +1280,11 @@ def compact_parquet(spark: SparkSession, path: str,
     _require(_meta.has_manifest(path), ValueError,
              f"compact_parquet requires a manifest at {path}")
     with _meta.commit_lock(path, "compact"):
-        ds = scan_parquet(spark, path)
-        comp = ds.collate(rows_per_partition)
-        before = set(_list_parquet(path))
-        comp.df.write.mode("append").parquet(path)
-        new_files = sorted(set(_list_parquet(path)) - before)
-        stats = _file_stats(spark, [os.path.join(path, f) for f in new_files],
-                            ds.index_columns)
-
-        def _k(f):
-            return os.path.abspath(os.path.join(path, f))
-        kept = [f for f in new_files if _k(f) in stats]
         old = _meta.load_manifest(path)
-        man = _meta.Manifest(
-            index_columns=ds.index_columns, files=kept,
-            sizes=[stats[_k(f)][0] for f in kept],
-            lower_bounds=[stats[_k(f)][1] for f in kept] if ds.index_columns else [() for _ in kept],
-            upper_bounds=[stats[_k(f)][2] for f in kept] if ds.index_columns else [() for _ in kept],
-            max_partition_index=old.max_partition_index + len(kept),
-            schema_json=ds.df.schema.json(),
-        )
-        _meta.write_manifest(path, man)
-        # a dataset written with manifest_table=True also carries the
-        # parquet manifest-TABLE form; leaving it listing the superseded
-        # small files would dangle after vacuum — refresh it in the same
-        # commit (mirrors _finish_write's manifest_table handling)
-        if os.path.isdir(_meta.manifest_table_path(path)):
-            _meta.write_manifest_table(spark, path, man)
+        ds = _manifest_dataset(spark, path, old)
+        comp = ds.collate(rows_per_partition)
+        _commit(spark, path, comp.df, old.index_columns, ds.df.schema.json(),
+                old=old)
     return scan_parquet(spark, path)
 
 
@@ -1389,37 +1338,12 @@ def delete_rows(spark: SparkSession, path: str, lb=None, ub=None,
         if ub is not None:
             c = (_ord.columns_leq if hi_incl else _ord.columns_lt)(ix, ub)
             cond = c if cond is None else (cond & c)
-        keep = ~F.coalesce(cond, F.lit(False))   # null-safe complement
-        rdr = (spark.read.schema(StructType.fromJson(
-            json.loads(old.schema_json))) if old.schema_json
-            else spark.read)
+        survives = ~F.coalesce(cond, F.lit(False))   # null-safe complement
+        rdr = spark.read.schema(old.schema) if old.schema_json else spark.read
         rewritten = (rdr.parquet(
-            *[os.path.join(path, f) for f in affected]).where(keep))
-        before = set(_list_parquet(path))
-        rewritten.write.mode("append").parquet(path)
-        new_files = sorted(set(_list_parquet(path)) - before)
-        stats = _file_stats(spark, [os.path.join(path, f) for f in new_files],
-                            ix)
-
-        def _k(f):
-            return os.path.abspath(os.path.join(path, f))
-        kept_new = [f for f in new_files if _k(f) in stats]
-        man = _meta.Manifest(
-            index_columns=ix,
-            files=[old.files[i] for i in untouched] + kept_new,
-            sizes=([old.sizes[i] for i in untouched]
-                   + [stats[_k(f)][0] for f in kept_new])
-            if old.known_sizes else None,
-            lower_bounds=([old.lower_bounds[i] for i in untouched]
-                          + [stats[_k(f)][1] for f in kept_new]),
-            upper_bounds=([old.upper_bounds[i] for i in untouched]
-                          + [stats[_k(f)][2] for f in kept_new]),
-            max_partition_index=old.max_partition_index + len(kept_new),
-            schema_json=old.schema_json,
-        )
-        _meta.write_manifest(path, man)
-        if os.path.isdir(_meta.manifest_table_path(path)):
-            _meta.write_manifest_table(spark, path, man)
+            *[os.path.join(path, f) for f in affected]).where(survives))
+        _commit(spark, path, rewritten, ix, old.schema_json, old=old,
+                keep=untouched)
     return scan_parquet(spark, path)
 
 
@@ -1459,9 +1383,8 @@ def merge_rows(spark: SparkSession, path: str, batch: "Dataset") -> Dataset:
                  f"batch index {batch.index_columns} != table index {ix}")
         _require(old.known_bounds, ValueError,
                  "merge_rows requires manifest bounds")
-        table_cols = [f["name"] for f in
-                      __import__("json").loads(old.schema_json)["fields"]] \
-            if old.schema_json else batch.df.columns
+        table_cols = (old.schema.names if old.schema_json
+                      else batch.df.columns)
         _require(set(batch.df.columns) == set(table_cols), ValueError,
                  f"batch columns {sorted(batch.df.columns)} != table "
                  f"columns {sorted(table_cols)}")
@@ -1602,13 +1525,8 @@ def merge_rows(spark: SparkSession, path: str, batch: "Dataset") -> Dataset:
         # null-safe survivor anti-join: a table row with a NULL index key
         # must still be replaced by a null-keyed batch row — plain-equality
         # anti-join would keep it and duplicate the key
-        _anti = functools.reduce(
-            lambda acc, c: acc & F.col(f"t.{c}").eqNullSafe(F.col(f"b.{c}")),
-            ix[1:],
-            F.col(f"t.{ix[0]}").eqNullSafe(F.col(f"b.{ix[0]}")))
-        srdr = (spark.read.schema(StructType.fromJson(
-            json.loads(old.schema_json))) if old.schema_json
-            else spark.read)
+        _anti = _ord.keys_eq(ix, "t", "b")
+        srdr = spark.read.schema(old.schema) if old.schema_json else spark.read
         parts = []
         for rr in work:
             part = batch.df.where(_region_pred(rr)).select(*table_cols)
@@ -1635,31 +1553,8 @@ def merge_rows(spark: SparkSession, path: str, batch: "Dataset") -> Dataset:
             merged_ds = concat([
                 Dataset(spark, d.df.localCheckpoint(eager=True),
                         index_columns=ix) for d in parts])
-        before = set(_list_parquet(path))
-        merged_ds.df.write.mode("append").parquet(path)
-        new_files = sorted(set(_list_parquet(path)) - before)
-        stats = _file_stats(spark,
-                            [os.path.join(path, f) for f in new_files], ix)
-
-        def _k(f):
-            return os.path.abspath(os.path.join(path, f))
-        kept_new = [f for f in new_files if _k(f) in stats]
-        man = _meta.Manifest(
-            index_columns=ix,
-            files=[old.files[i] for i in untouched] + kept_new,
-            sizes=([old.sizes[i] for i in untouched]
-                   + [stats[_k(f)][0] for f in kept_new])
-            if old.known_sizes else None,
-            lower_bounds=([old.lower_bounds[i] for i in untouched]
-                          + [stats[_k(f)][1] for f in kept_new]),
-            upper_bounds=([old.upper_bounds[i] for i in untouched]
-                          + [stats[_k(f)][2] for f in kept_new]),
-            max_partition_index=old.max_partition_index + len(kept_new),
-            schema_json=old.schema_json,
-        )
-        _meta.write_manifest(path, man)
-        if os.path.isdir(_meta.manifest_table_path(path)):
-            _meta.write_manifest_table(spark, path, man)
+        _commit(spark, path, merged_ds.df, ix, old.schema_json, old=old,
+                keep=untouched)
     return scan_parquet(spark, path)
 
 
@@ -1712,16 +1607,16 @@ def read_changes(spark: SparkSession, path: str, from_version: int,
              f"have {versions}")
     span = [v for v in versions if from_version <= v <= to_version]
     mans = {v: _meta.load_manifest(path, version=v) for v in span}
-    # compact_parquet records schema_json=None when it keeps zero files —
-    # fall back to the newest snapshot in the span that has a schema
-    # (the same guard scan_parquet applies), else fail descriptively
-    schema_json = next((mans[v].schema_json for v in reversed(span)
-                        if mans[v].schema_json), None)
-    _require(schema_json is not None, ValueError,
+    # a snapshot records no schema when write_metadata adopted a
+    # directory without a non-empty parquet file (every other commit
+    # records one) — fall back to the newest snapshot in the span that
+    # has a schema, else fail descriptively
+    schema = next((mans[v].schema for v in reversed(span)
+                   if mans[v].schema_json), None)
+    _require(schema is not None, ValueError,
              f"no snapshot in [{from_version}, {to_version}] at {path} "
              "records a schema (every snapshot in the span is an empty "
              "table); cannot build a change feed")
-    schema = StructType.fromJson(json.loads(schema_json))
     cols = schema.names
     empty = spark.createDataFrame([], schema)
 
@@ -1761,12 +1656,6 @@ def read_changes(spark: SparkSession, path: str, from_version: int,
         deletes = before.exceptAll(after)
         ix = list(cur.index_columns)
         if ix:
-            def _keys_eq(a: str, b: str):
-                return functools.reduce(
-                    lambda acc, c: acc & F.col(f"{a}.{c}").eqNullSafe(
-                        F.col(f"{b}.{c}")),
-                    ix[1:],
-                    F.col(f"{a}.{ix[0]}").eqNullSafe(F.col(f"{b}.{ix[0]}")))
             # the changed-key set is O(changes), small by contract —
             # broadcast both the build join and the classification
             # probes so the plan is deterministic (broadcast hash join)
@@ -1775,14 +1664,14 @@ def read_changes(spark: SparkSession, path: str, from_version: int,
                 inserts.select(*ix).distinct().alias("ik")
                 .join(F.broadcast(deletes.select(*ix).distinct()
                                   ).alias("dk"),
-                      on=_keys_eq("ik", "dk"), how="inner")
+                      on=_ord.keys_eq(ix, "ik", "dk"), how="inner")
                 .select(*[F.col(f"ik.{c}").alias(c) for c in ix])
                 .withColumn("__upd", F.lit(1)))
 
             def _classify(side: DataFrame, hit: str, miss: str) -> DataFrame:
                 return (side.alias("s")
                         .join(upd_keys.alias("uk"),
-                              on=_keys_eq("s", "uk"), how="left")
+                              on=_ord.keys_eq(ix, "s", "uk"), how="left")
                         .select(*[F.col(f"s.{c}") for c in cols],
                                 F.when(F.col("uk.__upd").isNotNull(), hit)
                                  .otherwise(miss).alias("_change_type")))
@@ -1852,20 +1741,13 @@ def fold_changes_into_aggregate(spark: SparkSession, target_path: str,
     # rows (no exchange on the MV side), then as the probe side of the
     # outer join against that reduced set.  Null-safe equality
     # throughout — group keys may be NULL.
-    def _keys_eq(a: str, b: str):
-        return functools.reduce(
-            lambda acc, c: acc & F.col(f"{a}.{c}").eqNullSafe(
-                F.col(f"{b}.{c}")),
-            keys[1:],
-            F.col(f"{a}.{keys[0]}").eqNullSafe(F.col(f"{b}.{keys[0]}")))
-
     cur = scan_parquet(spark, target_path).df
     affected = cur.alias("m").join(
         F.broadcast(delta.select(*keys)).alias("dk"),
-        on=_keys_eq("m", "dk"), how="leftsemi")
+        on=_ord.keys_eq(keys, "m", "dk"), how="leftsemi")
     joined = delta.alias("d").join(
         F.broadcast(affected.alias("m")),
-        on=_keys_eq("d", "m"), how="left")
+        on=_ord.keys_eq(keys, "d", "m"), how="left")
     upd = joined.select(
         *[F.col(f"d.{c}") for c in keys],
         (F.coalesce(F.col("m.cnt"), F.lit(0))
@@ -2064,9 +1946,7 @@ def scan_point_lookup(spark: SparkSession, path: str, column: str,
                for w, bits in need.items())]
     if not survivors:
         return ds.df.where(pred).limit(0)
-    man = _meta.load_manifest(path)
-    schema = (StructType.fromJson(json.loads(man.schema_json))
-              if man.schema_json else None)
+    schema = _meta.load_manifest(path).schema
     rd = spark.read.schema(schema) if schema else spark.read
     return rd.parquet(*[os.path.join(path, f)
                         for f in survivors]).where(pred)

@@ -16,9 +16,10 @@ Differences from the reference, by design:
   an empty parquet file — self-describing parquet makes the sidecar purely
   informational in Spark.
 - At 100 TB / millions of files a single JSON manifest is the wrong shape;
-  :func:`write_manifest` caps inline bounds and the scale path is the
-  stats *job* in :mod:`padawan_spark.dataset` (bounds live in parquet
-  footers and are recomputed distributed, never collected wholesale).
+  the scale form is the manifest TABLE (:func:`write_manifest_table`,
+  one row per file), and per-file bounds come from a distributed stats
+  job in :mod:`padawan_spark.dataset` that returns one row per file,
+  never the data.
 """
 
 from __future__ import annotations
@@ -146,6 +147,15 @@ class Manifest:
     def known_bounds(self) -> bool:
         return self.lower_bounds is not None and self.upper_bounds is not None
 
+    @property
+    def schema(self):
+        """The recorded Spark ``StructType``, or ``None`` when the
+        manifest records no schema."""
+        if not self.schema_json:
+            return None
+        from pyspark.sql.types import StructType
+        return StructType.fromJson(json.loads(self.schema_json))
+
 
 def manifest_path(path: str) -> str:
     return os.path.join(path, METADATA_FILE)
@@ -219,35 +229,27 @@ def version_at(path: str, ts) -> int:
     return best
 
 
+def _read_schema(path: str) -> str | None:
+    """The current schema sidecar's JSON, or ``None`` when there is none."""
+    sp = os.path.join(path, SCHEMA_FILE)
+    if not os.path.exists(sp):
+        return None
+    with open(sp) as f:
+        return f.read()
+
+
 def load_manifest(path: str, version: int | None = None) -> Manifest:
     """Load the current manifest, or a pinned SNAPSHOT when ``version``
     is given (time travel: append-only writes retain every file, so any
     archived manifest still describes readable data)."""
+    src = manifest_path(path)
     if version is not None:
-        vp = os.path.join(_versions_dir(path), f"v{version}.json")
-        if not os.path.exists(vp):
+        src = os.path.join(_versions_dir(path), f"v{version}.json")
+        if not os.path.exists(src):
             raise FileNotFoundError(
                 f"no snapshot v{version} at {path}; have {list_versions(path)}")
-        with open(vp) as f:
-            raw = json.load(f)
-        return Manifest(
-            index_columns=tuple(raw["index_columns"]),
-            files=list(raw["files"]),
-            sizes=(list(raw["sizes"])
-                   if raw.get("sizes") is not None else None),
-            lower_bounds=decode_bounds(raw.get("lower_bounds")),
-            upper_bounds=decode_bounds(raw.get("upper_bounds")),
-            max_partition_index=raw.get("max_partition_index",
-                                        len(raw["files"]) - 1),
-            schema_json=raw.get("schema_json"),
-        )
-    with open(manifest_path(path)) as f:
+    with open(src) as f:
         raw = json.load(f)
-    schema_json = None
-    sp = os.path.join(path, SCHEMA_FILE)
-    if os.path.exists(sp):
-        with open(sp) as f:
-            schema_json = f.read()
     return Manifest(
         index_columns=tuple(raw["index_columns"]),
         files=list(raw["files"]),
@@ -255,7 +257,9 @@ def load_manifest(path: str, version: int | None = None) -> Manifest:
         lower_bounds=decode_bounds(raw.get("lower_bounds")),
         upper_bounds=decode_bounds(raw.get("upper_bounds")),
         max_partition_index=raw.get("max_partition_index", len(raw["files"]) - 1),
-        schema_json=schema_json,
+        # a snapshot embeds its schema; the current one is the sidecar
+        schema_json=(raw.get("schema_json") if version is not None
+                     else _read_schema(path)),
     )
 
 
@@ -391,9 +395,16 @@ def load_manifest_table(spark, path: str):
 def manifest_from_table(spark, path: str) -> Manifest:
     """Small-count convenience: collapse the table form back into an
     in-memory :class:`Manifest` (ordered by pos)."""
+    return _manifest_from_rows(
+        path, load_manifest_table(spark, path).orderBy("pos").collect())
+
+
+def _manifest_from_rows(path: str, rows) -> Manifest:
+    """Decode manifest-table rows (ordered by pos), with the table's
+    index columns and the schema sidecar, into a :class:`Manifest`.  A
+    stat unknown for any row is unknown for the whole manifest."""
     with open(os.path.join(path, MANIFEST_TABLE_DIR + "_meta.json")) as f:
         meta = json.load(f)
-    rows = load_manifest_table(spark, path).orderBy("pos").collect()
     files = [r["file"] for r in rows]
     sizes = [r["size"] for r in rows]
     lbs = [tuple(_decode_value(v) for v in json.loads(r["lb"]))
@@ -407,4 +418,5 @@ def manifest_from_table(spark, path: str) -> Manifest:
         lower_bounds=None if any(b is None for b in lbs) else lbs,
         upper_bounds=None if any(b is None for b in ubs) else ubs,
         max_partition_index=meta["max_partition_index"],
+        schema_json=_read_schema(path),
     )

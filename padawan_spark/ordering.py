@@ -14,6 +14,8 @@ null-aware min/max must be built explicitly:
   into the parquet scan (row-group min/max skipping) — this is the
   scale-path replacement for the reference's driver-side partition
   pruning (``sliced_dataset.py:41-77``).
+- :func:`keys_eq` is null-safe key equality between two aliased sides,
+  the join condition for key joins where a NULL key matches a NULL key.
 - :func:`sort_key_cols` produces ``(null-rank, value)`` pairs so
   ``F.min_by`` / ``F.max_by`` order exactly like the reference's
   ``lex_min`` / ``lex_max`` (nulls smallest), which plain ``F.min`` /
@@ -27,7 +29,8 @@ columns only), mirroring ``sliced_dataset.py:43-48``.
 
 from __future__ import annotations
 
-from functools import total_ordering
+import operator
+from functools import reduce, total_ordering
 from typing import Sequence
 
 from pyspark.sql import Column
@@ -138,6 +141,15 @@ def cols_gt_cols(columns: Sequence, bounds: Sequence) -> Column:
 def cols_geq_cols(columns: Sequence, bounds: Sequence) -> Column:
     return _cc_expand(_as_cols(columns)[: len(bounds)], _as_cols(bounds),
                       _cc_gt, empty=True)
+
+
+def keys_eq(columns: Sequence[str], left: str, right: str) -> Column:
+    """``left.c <=> right.c`` for every key column ``c``, AND-ed: key
+    equality between two aliased sides under which NULL keys match each
+    other (legal keys under null-first semantics)."""
+    return reduce(operator.and_, [
+        F.col(f"{left}.{c}").eqNullSafe(F.col(f"{right}.{c}"))
+        for c in columns])
 
 
 def sort_key_cols(columns: Sequence) -> list[Column]:

@@ -612,17 +612,13 @@ class ManifestCDFSource(DataSource):
         return "padawan_cdf"
 
     def schema(self):
-        import json as _json
-
-        from pyspark.sql.types import (LongType, StringType, StructField,
-                                       StructType)
+        from pyspark.sql.types import StringType
 
         from .. import metadata as _meta
-        man = _meta.load_manifest(self.options["path"])
-        if not man.schema_json:
+        st = _meta.load_manifest(self.options["path"]).schema
+        if st is None:
             raise ValueError(
                 f"padawan_cdf: {self.options['path']} records no schema")
-        st = StructType.fromJson(_json.loads(man.schema_json))
         return StructType(list(st.fields)
                           + [StructField("_commit_version", LongType()),
                              StructField("_change_type", StringType())])

@@ -1155,6 +1155,88 @@ def test_scan_parquet_pruned_date_index(spark, tmp_path):
     assert len(got_ds._files) < len(full._files)
 
 
+def _kv(spark, keys, v=None):
+    from padawan_spark import from_pandas
+    keys = list(keys)
+    return from_pandas(spark, pd.DataFrame(
+        {"k": keys, "v": keys if v is None else [v] * len(keys)}),
+        index_columns=("k",))
+
+
+def _drop_foreign_file(p, keys):
+    """A parquet file written outside the facade, as write_metadata
+    adopts them."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    keys = pa.array(list(keys), pa.int64())
+    pq.write_table(pa.table({"k": keys, "v": keys}),
+                   os.path.join(p, "foreign.parquet"))
+
+
+def test_write_metadata_takes_lock_and_refreshes_manifest_table(
+        spark, tmp_path):
+    """write_metadata commits like every writer: a held commit lock
+    fails it, and adopting a file dropped into a manifest-table dataset
+    refreshes the table, so the pruned scan sees the adopted rows too."""
+    from padawan_spark import scan_parquet_pruned
+    from padawan_spark.metadata import LOCK_FILE, CommitConflictError
+
+    p = str(tmp_path / "retro_tab")
+    _kv(spark, range(1000)).repartition(250).write_parquet(
+        p, manifest_table=True)
+    _drop_foreign_file(p, range(1000, 1100))
+    write_metadata(spark, p, ("k",))
+    assert scan_parquet(spark, p).slice((900,), (1100,)).df.count() == 200
+    assert scan_parquet_pruned(spark, p, (900,), (1100,)).df.count() == 200
+    lock = os.path.join(p, LOCK_FILE)
+    with open(lock, "w") as fh:
+        fh.write("999 append")
+    with pytest.raises(CommitConflictError, match="concurrent write_metadata"):
+        write_metadata(spark, p, ("k",))
+    os.unlink(lock)
+
+
+def _commit_by(writer, spark, p):
+    from padawan_spark import compact_parquet, delete_rows, merge_rows
+    if writer == "overwrite":
+        _kv(spark, range(40)).repartition(10).write_parquet(
+            p, manifest_table=True)
+    elif writer == "append":
+        _kv(spark, range(40, 50)).write_parquet(p, append=True)
+    elif writer == "merge_rows":
+        merge_rows(spark, p, _kv(spark, [5, 100], v=-1))
+    elif writer == "delete_rows":
+        delete_rows(spark, p, (10,), (19,), inclusive="both")
+    elif writer == "compact_parquet":
+        compact_parquet(spark, p, 20)
+    else:
+        _drop_foreign_file(p, range(200, 210))
+        write_metadata(spark, p, ("k",))
+
+
+@pytest.mark.parametrize("writer", [
+    "overwrite", "append", "merge_rows", "delete_rows", "compact_parquet",
+    "write_metadata"])
+def test_commit_keeps_manifest_forms_in_lockstep(spark, tmp_path, writer):
+    """Every writer's commit leaves the JSON manifest and the manifest
+    table describing the same files, adds exactly one snapshot, and the
+    pruned scan reads the same rows as the JSON-manifest scan."""
+    from padawan_spark import list_versions, scan_parquet_pruned
+    from padawan_spark.metadata import load_manifest, manifest_from_table
+
+    p = str(tmp_path / writer)
+    if writer != "overwrite":
+        _commit_by("overwrite", spark, p)
+    versions = len(list_versions(p))
+    _commit_by(writer, spark, p)
+    man, tab = load_manifest(p), manifest_from_table(spark, p)
+    assert (tab.files, tab.sizes, tab.lower_bounds, tab.upper_bounds) \
+        == (man.files, man.sizes, man.lower_bounds, man.upper_bounds)
+    assert len(list_versions(p)) == versions + 1
+    assert scan_parquet_pruned(spark, p, (-1,), (10**6,)).df.count() \
+        == scan_parquet(spark, p).df.count()
+
+
 def test_delete_rows_surgical_rewrite(spark, sf_dir, tmp_path):
     """delete_rows (copy-on-write DELETE): non-overlapping files stay
     byte-identical, overlapping files are rewritten without the slice's

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from padawan_spark.ordering import (
-    columns_geq, columns_gt, columns_leq, columns_lt,
+    columns_geq, columns_gt, columns_leq, columns_lt, keys_eq,
     lex_cmp, lex_key, nullable_cmp, sort_partitions,
 )
 
@@ -50,6 +50,16 @@ def test_predicates_match_python(spark, tuples_df, bound):
                tuples_df.where(builder(("x", "y"), bound)).collect()}
         want = {i for i, t in rows.items() if check(t)}
         assert got == want, f"{builder.__name__} {bound}: {got} != {want}"
+
+
+def test_keys_eq_null_safe(tuples_df):
+    """keys_eq matches NULL keys to NULL keys: self-joining every
+    2-tuple over {None, 1, 2} x {None, 'a', 'b'} pairs each row with
+    exactly itself, the NULL-keyed rows included."""
+    got = (tuples_df.alias("l")
+           .join(tuples_df.alias("r"), on=keys_eq(("x", "y"), "l", "r"))
+           .select("l.i", "r.i").collect())
+    assert sorted(tuple(r) for r in got) == [(i, i) for i in range(len(VALUES))]
 
 
 def test_lex_cmp_nulls_first():
