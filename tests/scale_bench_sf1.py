@@ -25,12 +25,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE, ITERATIVE  # noqa: E402
+from bench import HEADLINE, warm  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
 BIG = os.environ.get("SMOKE_DIR", "/tmp/padawan_sfbig")
 COPIES = 10
 FLAG_RATIO = 15.0
+# iterative queries (a fixed per-round job overhead) get one extra pass
+ITERATIVE = ["graph_pagerank_users", "sim_kmeans_train"]
 
 
 def make_sfbig(spark, src: str = SF01, out: str = BIG) -> None:
@@ -201,12 +203,7 @@ def main() -> None:
         print(f"synthesized {BIG} in {time.perf_counter() - t0:.1f}s",
               file=sys.stderr)
 
-    # JVM warm pass at the smallest SF (classloading, codegen)
-    for name in HEADLINE:
-        try:
-            QUERIES[name](spark, "/root/testdata/sf0.001").collect()
-        except Exception:
-            pass
+    warm(spark, HEADLINE)
 
     def timed(name: str, sf_dir: str) -> tuple[float, int]:
         fn = QUERIES[name]

@@ -49,29 +49,37 @@ def test_doc_counts_match_registry():
                            f"but the registry has {n}")
 
 
-def test_doc_pytest_count_matches_collection():
-    """r9 (VERDICT r8 task 6): COVERAGE.md quotes the pytest collection
-    size; it drifted in r8 (claimed 154, actual 172).  Pin the
-    documented count to `pytest --collect-only -q` reality so adding
-    tests without refreshing the doc fails here instead of shipping a
-    stale number."""
-    import re
+def test_bench_baseline_is_last_engine_change(tmp_path):
+    """The bench A/B baseline is the newest commit whose padawan_spark/
+    tree differs from the benched tree; commit subjects play no part."""
     import subprocess
     import sys
 
-    out = subprocess.run(
-        [sys.executable, "-m", "pytest", "tests/", "--collect-only",
-         "-q", "--no-header", "-p", "no:cacheprovider"],
-        cwd=_ROOT, capture_output=True, text=True, timeout=300)
-    m = re.search(r"(\d+) tests collected", out.stdout)
-    assert m, f"could not parse collection output: {out.stdout[-500:]}"
-    actual = int(m.group(1))
-    text = open(os.path.join(_ROOT, "COVERAGE.md")).read()
-    doc = re.search(r"(\d+) collected pytest tests", text)
-    assert doc, "COVERAGE.md must quote the collected-test count"
-    assert int(doc.group(1)) == actual, (
-        f"COVERAGE.md claims {doc.group(1)} collected pytest tests but "
-        f"collection finds {actual} — refresh the doc")
+    sys.path.insert(0, _ROOT)
+    from bench import baseline_commit
+
+    def git(*args):
+        return subprocess.run(
+            ["git", "-c", "user.name=t", "-c", "user.email=t@t", *args],
+            cwd=tmp_path, check=True, capture_output=True,
+            text=True).stdout.strip()
+
+    def commit(path, text, subject):
+        (tmp_path / path).parent.mkdir(exist_ok=True)
+        (tmp_path / path).write_text(text)
+        git("add", "-A")
+        git("commit", "-q", "-m", subject)
+        return git("rev-parse", "HEAD")
+
+    git("init", "-q")
+    first = commit("padawan_spark/core.py", "v1\n", "engine change")
+    commit("padawan_spark/core.py", "v2\n", "second engine change")
+    commit("README.md", "docs\n", "docs")
+    head = commit("README.md", "more docs\n", "round 99: x")
+
+    assert baseline_commit(str(tmp_path)) == first
+    (tmp_path / "padawan_spark" / "core.py").write_text("v3\n")
+    assert baseline_commit(str(tmp_path)) == head
 
 
 def test_scale_smoke_sf1_table_matches_headline_set():

@@ -1,18 +1,18 @@
-"""r17 optimization-round profiler.
+"""Query profiler: for each named query, capture .explain("formatted")
+into plans/r17/<name>_<tag>.txt, then time the computation with the
+noop sink (computes every column of every row, no sink cost), min of N
+passes, each labeled via setJobDescription.
 
-For each named query: capture .explain("formatted") into
-plans/r17/<name>_<tag>.txt, then time the computation with the noop
-sink (guide §1.4 — computes every column of every row, no sink cost),
-min of N passes, labeled via setJobDescription (guide §1.5).
-
-Wall-clock on this box cannot resolve <2x deltas (r16 measurement
-caveat), so the profiler ALSO records executor task-time and shuffle
-bytes per pass from the Spark REST API (UI enabled on a local port):
-task-time is contention-robust and was the r16 discriminator.
+Wall-clock on a shared box cannot resolve <2x deltas, so the profiler
+ALSO records executor task-time and shuffle bytes per pass from the
+Spark REST API (UI enabled on a local port): task-time is
+contention-robust.  Warm-up, per-pass reset and the default query set
+are bench.py's.
 
 Usage:
-    python tools/profile_r17.py <tag> [query ...]       # default: headline
-    SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS / PROFILE_PASSES as in bench.py.
+    python tools/profile_r17.py <tag> [query ...]       # default: HEADLINE
+    SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in bench.py; PROFILE_PASSES
+    (default 3) and PROFILE_UI_PORT (default 4099).
 
 Prints one JSON line {"tag": ..., "noop_sec": {...}, "task_sec": {...},
 "shuffle_mb": {...}} at the end.
@@ -28,24 +28,13 @@ import time
 import urllib.request
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, HERE)
 
-from padawan_spark import get_spark  # noqa: E402
+from bench import HEADLINE, SF_DIR, reset, session, warm  # noqa: E402
 from padawan_spark.queries import QUERIES  # noqa: E402
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 PASSES = int(os.environ.get("PROFILE_PASSES", "3"))
-HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-HEADLINE = [
-    "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier_volume",
-    "q6_forecast_revenue", "q18_large_volume", "ana_win_topn_per_group",
-    "op_repartition_range", "dedup_minhash_lsh", "text_quality_score",
-    "sim_knn_bruteforce", "adv_asof_join", "scale_bucketed_join_read",
-    "graph_pagerank_users", "sim_kmeans_train", "dedup_segments",
-    "text_tfidf", "dedup_ngram_jaccard", "ev_downsample_lttb",
-    "sim_ann_ivfpq", "op_pruned_scan_read",
-]
 
 
 def _stage_totals(ui: str) -> tuple[float, float]:
@@ -69,23 +58,13 @@ def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     names = sys.argv[2:] or HEADLINE
     port = int(os.environ.get("PROFILE_UI_PORT", "4099"))
-    spark = get_spark(app_name=f"padawan-profile-{tag}", extra_conf={
-        "spark.ui.showConsoleProgress": "false",
+    spark = session(f"padawan-profile-{tag}", {
         "spark.ui.enabled": "true",
         "spark.ui.port": str(port),
         "spark.ui.retainedStages": "5000",
     })
-    spark.sparkContext.setLogLevel("ERROR")
     ui = f"http://localhost:{port}"
-
-    # warm pass at sf0.001 (same protocol as bench.py)
-    for name in names:
-        fn = QUERIES.get(name)
-        if fn is not None:
-            try:
-                fn(spark, "/root/testdata/sf0.001").collect()
-            except Exception:
-                pass
+    warm(spark, names)
 
     out: dict[str, float | None] = {}
     task: dict[str, float | None] = {}
@@ -106,12 +85,11 @@ def main() -> None:
         tbest = None
         sbest = None
         for i in range(PASSES):
+            reset(spark, name, SF_DIR)
             spark.sparkContext.setJobDescription(f"{name} noop pass {i}")
             ts0, sh0 = _stage_totals(ui)
             t0 = time.perf_counter()
-            # fresh DataFrame per pass: memoized-write queries aside, the
-            # plan itself is cheap to rebuild and this matches bench.py's
-            # fn(...) call per pass
+            # fresh DataFrame per pass, like bench.py's fn(...) per pass
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             el = round(time.perf_counter() - t0, 3)
             ts1, sh1 = _stage_totals(ui)
