@@ -51,8 +51,6 @@ class AppendError(Exception):
     (``/root/reference/src/padawan/dataset.py:364-381``)."""
 
 
-_INCLUSIVE = ("none", "lower", "upper", "both")
-
 #: Sentinel for ``partition_ids``: the slot→physical-partition mapping is
 #: genuinely unknown (e.g. a concat that had to fall back to a DataFrame
 #: union over a file-backed child, whose scan packs files into
@@ -133,16 +131,7 @@ class Dataset:
         if df is None:
             _require(files is not None, ValueError, "need df or files")
             if self._files:
-                # manifest-backed scans read with the RECORDED schema:
-                # stable column set under schema evolution (files written
-                # before a merge_schema append lack the new columns and
-                # surface them as nulls), no footer schema inference, and
-                # time travel reproduces each snapshot's own schema
-                reader = (spark.read.schema(schema) if schema is not None
-                          else spark.read)
-                df = reader.parquet(*self._files)
-                if residual is not None:
-                    df = df.where(residual)
+                df = _read_files(spark, self._files, schema, residual)
             else:
                 _require(schema is not None, ValueError,
                          "zero-partition dataset requires an explicit schema")
@@ -208,11 +197,8 @@ class Dataset:
             i += n
         _require(0 <= i < n, IndexError, f"partition {i} out of range ({n})")
         if self._files is not None:
-            # schema-pinned so pre-evolution files surface added columns
-            # as nulls, identical to the whole-dataset view
-            part = (self.spark.read.schema(self.df.schema)
-                    .parquet(self._files[i]))
-            return part.where(self._residual) if self._residual is not None else part
+            return _read_files(self.spark, [self._files[i]], self.df.schema,
+                               self._residual)
         _require(self._partition_ids is not PIDS_UNKNOWN, StatsUnknownError,
                  "physical partition mapping unknown (concat over a "
                  "file-backed input); call reindex() to recompute it")
@@ -258,7 +244,7 @@ class Dataset:
             # (survey §7.4 trap 6).  Empty files are dropped
             # (reindexed_dataset.py:59-67).
             stats = _file_stats(self.spark, self._files, ix,
-                                residual=self._residual)
+                                self.df.schema, self._residual)
             kept = [f for f in self._files if os.path.abspath(f) in stats]
             st = [stats[os.path.abspath(f)] for f in kept]
             return Dataset(self.spark, files=kept, index_columns=ix,
@@ -267,46 +253,14 @@ class Dataset:
                            lower_bounds=[s[1] for s in st],
                            upper_bounds=[s[2] for s in st],
                            residual=self._residual)
-        sizes, lbs, ubs, nonempty = self._stats_job(ix)
-        return self._with_meta(index_columns=ix, sizes=sizes,
-                               lower_bounds=lbs, upper_bounds=ubs,
-                               partition_ids=nonempty)
-
-    def _stats_job(self, ix: tuple[str, ...]):
-        """One distributed pass: per-partition count + null-first lex min/max.
-
-        Returns (sizes, lower_bounds, upper_bounds, nonempty_partition_ids),
-        ordered by partition id.  Collects one row per partition — safe at
-        any data scale (bounded by partition count).
-        """
-        df = self.df
-        pid = F.spark_partition_id().alias("__pid")
-        if not ix:
-            rows = (df.select(pid).groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
-                    .collect())
-            stats = {r["__pid"]: (r["__n"], (), ()) for r in rows}
-        else:
-            key = F.struct(*_ord.sort_key_cols(ix))
-            val = F.struct(*[F.col(c) for c in ix])
-            rows = (
-                df.select(pid, key.alias("__k"), val.alias("__v"))
-                .groupBy("__pid")
-                .agg(F.count(F.lit(1)).alias("__n"),
-                     F.min_by("__v", "__k").alias("__lb"),
-                     F.max_by("__v", "__k").alias("__ub"))
-                .collect()
-            )
-            stats = {
-                r["__pid"]: (r["__n"],
-                             tuple(r["__lb"][c] for c in ix),
-                             tuple(r["__ub"][c] for c in ix))
-                for r in rows
-            }
+        # one row per non-empty physical partition, ordered by its id
+        stats = _index_stats(self.df, F.spark_partition_id(), ix)
         nonempty = sorted(stats)
-        sizes = [stats[i][0] for i in nonempty]
-        lbs = [stats[i][1] for i in nonempty]
-        ubs = [stats[i][2] for i in nonempty]
-        return sizes, lbs, ubs, nonempty
+        return self._with_meta(index_columns=ix,
+                               sizes=[stats[i][0] for i in nonempty],
+                               lower_bounds=[stats[i][1] for i in nonempty],
+                               upper_bounds=[stats[i][2] for i in nonempty],
+                               partition_ids=nonempty)
 
     # ------------------------------------------------------------------
     # map: per-partition escape hatch (parity: mapped_dataset.py:72-143)
@@ -348,7 +302,7 @@ class Dataset:
         unpacked into the call for that partition.  Naive positional
         indexing is not stable across shuffles, so partition identity is
         resolved by KEY, not position: file path for file-backed datasets
-        (joined executor-side via ``input_file_name``), physical
+        (each row tagged executor-side with its source file), physical
         ``spark_partition_id`` otherwise (mapped through the recorded
         partition-id list when empty partitions were dropped).  Rows are
         buffered per partition key across the task's Arrow batches so
@@ -390,9 +344,7 @@ class Dataset:
             if self._files is not None:
                 slot_of = {os.path.abspath(f): i
                            for i, f in enumerate(self._files)}
-                tagged = self.df.withColumn(
-                    key_col, F.regexp_replace(F.input_file_name(),
-                                              "^file:/+", "/"))
+                tagged = self.df.withColumn(key_col, _file_path())
             else:
                 _require(self._partition_ids is not PIDS_UNKNOWN,
                          StatsUnknownError,
@@ -472,21 +424,11 @@ class Dataset:
         and file-level pruning is done on the manifest when bounds are
         known — same effect, one expression.
         """
-        _require(inclusive in _INCLUSIVE, ValueError,
-                 f"inclusive must be one of {_INCLUSIVE}: {inclusive}")
+        lo_incl, hi_incl = _ord.inclusive_ends(inclusive)
         _require(self.index_columns != (), ValueError,
                  "slice requires index columns")
         ix = self.index_columns
-        lo_incl = inclusive in ("lower", "both")
-        hi_incl = inclusive in ("upper", "both")
-
-        cond = None
-        if lb is not None:
-            c = (_ord.columns_geq if lo_incl else _ord.columns_gt)(ix, lb)
-            cond = c if cond is None else (cond & c)
-        if ub is not None:
-            c = (_ord.columns_leq if hi_incl else _ord.columns_lt)(ix, ub)
-            cond = c if cond is None else (cond & c)
+        cond = _ord.range_predicate(ix, lb, ub, inclusive)
         # Compose with any prior residual: a file-backed re-slice rebuilds
         # the scan from raw files, so ALL predicates applied so far must be
         # carried, not just this call's.
@@ -524,9 +466,11 @@ class Dataset:
                     return Dataset(self.spark, index_columns=ix, files=[],
                                    schema=self.df.schema, sizes=[],
                                    lower_bounds=[], upper_bounds=[])
+                # the recorded schema, not the surviving files' own: the
+                # columns must not depend on which files survive pruning
                 return Dataset(self.spark, files=files, index_columns=ix,
                                sizes=sizes, lower_bounds=lbs, upper_bounds=ubs,
-                               residual=residual)
+                               schema=self.df.schema, residual=residual)
         new_df = self.df.where(cond) if cond is not None else self.df
         return Dataset(self.spark, new_df, index_columns=ix,
                        sizes=sizes, lower_bounds=lbs, upper_bounds=ubs,
@@ -684,15 +628,10 @@ class Dataset:
                      for gi, g in enumerate(groups) for i in g]
             map_df = self.spark.createDataFrame(
                 pairs, "__path string, __label int")
-            base = self.spark.read.schema(self.df.schema).parquet(
-                *[self._files[i] for g in groups for i in g])
-            if self._residual is not None:
-                base = base.where(self._residual)
-            tagged = (base
-                      # file:///x/y → /x/y, matching os.path.abspath keys
-                      .withColumn("__path",
-                                  F.regexp_replace(F.input_file_name(),
-                                                   "^file:/+", "/"))
+            base = _read_files(self.spark,
+                               [self._files[i] for g in groups for i in g],
+                               self.df.schema, self._residual)
+            tagged = (base.withColumn("__path", _file_path())
                       .join(F.broadcast(map_df), "__path")
                       .drop("__path"))
             out = tagged.repartition(k, "__label").drop("__label")
@@ -973,44 +912,62 @@ def _list_parquet(path: str) -> list[str]:
                   for p in _glob.glob(os.path.join(path, "*.parquet")))
 
 
-def _norm_file_uri(uri: str) -> str:
-    """file:///x/y.parquet → /x/y.parquet (normalized absolute path)."""
-    if uri.startswith("file:"):
-        uri = uri[len("file:"):]
-    return os.path.abspath(uri)
+def _read_files(spark: SparkSession, files: list[str],
+                schema: StructType | None = None, residual=None) -> DataFrame:
+    """The one parquet read of table files.  A table's files are read with
+    its RECORDED ``schema``: the column set is stable under schema
+    evolution (files written before a merge_schema append surface the new
+    columns as nulls), there is no footer schema inference, and time
+    travel reproduces each snapshot's own schema.  ``schema=None`` infers
+    it from the files.  ``residual`` is a slice predicate to apply."""
+    df = (spark.read.schema(schema) if schema is not None
+          else spark.read).parquet(*files)
+    return df.where(residual) if residual is not None else df
 
 
-def _file_stats(spark: SparkSession, files: list[str], ix: tuple[str, ...],
-                residual=None):
-    """Distributed per-file stats: {abspath: (nrows, lb, ub)}.
+def _file_path():
+    """The absolute path of the file each row was read from, as the
+    manifest holds it.  Spark names the file by URI
+    (``file:///a/with%20space/x.parquet``): the scheme is stripped and
+    percent-escapes decoded, escaping ``+`` first since ``url_decode``
+    reads it as a space."""
+    uri = F.regexp_replace(F.input_file_name(), "^file:/+", "/")
+    return F.url_decode(F.regexp_replace(uri, r"\+", "%2B"))
 
-    Uses ``input_file_name()`` grouping so a file split across tasks is
-    still aggregated once; one output row per file (bounded by file count,
-    not data size — safe at 100 TB).  ``residual`` restricts the stats to
-    rows surviving a slice predicate (files with no surviving rows drop
-    out, like empty files)."""
+
+def _index_stats_aggs(ix: Sequence[str]) -> list:
+    """Aggregates ``__n`` (row count) and, with index columns, ``__lb`` /
+    ``__ub``: the null-first lexicographic min/max of the index struct
+    (ordered by :func:`ordering.sort_key_cols`, since plain
+    ``min``/``max`` skip nulls)."""
+    aggs = [F.count(F.lit(1)).alias("__n")]
+    if ix:
+        key = F.struct(*_ord.sort_key_cols(ix))
+        val = F.struct(*[F.col(c) for c in ix])
+        aggs += [F.min_by(val, key).alias("__lb"),
+                 F.max_by(val, key).alias("__ub")]
+    return aggs
+
+
+def _index_stats(df: DataFrame, group, ix: Sequence[str]) -> dict:
+    """One distributed pass: ``{group value: (rows, lb, ub)}`` for every
+    value of the ``group`` column that has rows.  Collects one row per
+    group (bounded by partition or file count, not data size)."""
+    rows = df.groupBy(group.alias("__g")).agg(*_index_stats_aggs(ix)).collect()
+    return {r["__g"]: (r["__n"], tuple(r["__lb"]) if ix else (),
+                       tuple(r["__ub"]) if ix else ()) for r in rows}
+
+
+def _file_stats(spark: SparkSession, files: list[str], ix: Sequence[str],
+                schema: StructType | None = None, residual=None) -> dict:
+    """Per-file stats ``{abspath: (rows, lb, ub)}``, grouped by file so a
+    file split across tasks is still aggregated once.  ``residual``
+    restricts the stats to rows surviving a slice predicate (files with no
+    surviving rows drop out, like empty files)."""
     if not files:
         return {}
-    df = spark.read.parquet(*files)
-    if residual is not None:
-        df = df.where(residual)
-    fname = F.input_file_name().alias("__f")
-    if not ix:
-        rows = df.select(fname).groupBy("__f").agg(
-            F.count(F.lit(1)).alias("__n")).collect()
-        return {_norm_file_uri(r["__f"]): (r["__n"], (), ()) for r in rows}
-    key = F.struct(*_ord.sort_key_cols(ix))
-    val = F.struct(*[F.col(c) for c in ix])
-    rows = (df.select(fname, key.alias("__k"), val.alias("__v"))
-            .groupBy("__f")
-            .agg(F.count(F.lit(1)).alias("__n"),
-                 F.min_by("__v", "__k").alias("__lb"),
-                 F.max_by("__v", "__k").alias("__ub"))
-            .collect())
-    return {_norm_file_uri(r["__f"]): (r["__n"],
-                                       tuple(r["__lb"][c] for c in ix),
-                                       tuple(r["__ub"][c] for c in ix))
-            for r in rows}
+    return _index_stats(_read_files(spark, files, schema, residual),
+                        _file_path(), ix)
 
 
 def _commit(spark: SparkSession, path: str, df: DataFrame | None,
@@ -1034,7 +991,9 @@ def _commit(spark: SparkSession, path: str, df: DataFrame | None,
         df.write.mode("append").parquet(path)
     paths = {f: os.path.abspath(os.path.join(path, f))
              for f in _list_parquet(path) if f not in before}
-    stats = _file_stats(spark, list(paths.values()), tuple(index_columns))
+    stats = _file_stats(spark, list(paths.values()), index_columns,
+                        StructType.fromJson(json.loads(schema_json))
+                        if schema_json else None)
     added = [f for f in paths if paths[f] in stats]
     old = old or _meta.Manifest()
 
@@ -1227,7 +1186,7 @@ def concat(spark_or_datasets, datasets: list[Dataset] | None = None) -> Dataset:
         # Identity (None) is only trustworthy for DF-backed children —
         # that is the constructor invariant.  A FILE-backed child forced
         # onto this path (sibling non-file, or residual present) reads as
-        # spark.read.parquet(*files), which packs small files into
+        # one parquet scan over its files, which packs small files into
         # FilePartitions largest-first: slot count and order diverge from
         # physical partitions, so its slot→pid map is simply unknown —
         # emit no pids at all rather than silently wrong ones.
@@ -1312,16 +1271,13 @@ def delete_rows(spark: SparkSession, path: str, lb=None, ub=None,
              f"delete_rows requires a manifest at {path}")
     _require(lb is not None or ub is not None, ValueError,
              "delete_rows requires at least one bound (lb/ub)")
-    _require(inclusive in _INCLUSIVE, ValueError,
-             f"inclusive must be one of {_INCLUSIVE}: {inclusive}")
+    lo_incl, hi_incl = _ord.inclusive_ends(inclusive)
     with _meta.commit_lock(path, "delete"):
         old = _meta.load_manifest(path)
         ix = old.index_columns
         _require(ix != (), ValueError, "delete_rows requires index columns")
         _require(old.known_bounds, ValueError,
                  "delete_rows requires manifest bounds")
-        lo_incl = inclusive in ("lower", "both")
-        hi_incl = inclusive in ("upper", "both")
         untouched, affected = [], []
         for i, f in enumerate(old.files):
             if _overlaps(old.lower_bounds[i], old.upper_bounds[i],
@@ -1331,17 +1287,11 @@ def delete_rows(spark: SparkSession, path: str, lb=None, ub=None,
                 untouched.append(i)
         if not affected:            # nothing overlaps: no-op, no version
             return scan_parquet(spark, path)
-        cond = None
-        if lb is not None:
-            c = (_ord.columns_geq if lo_incl else _ord.columns_gt)(ix, lb)
-            cond = c if cond is None else (cond & c)
-        if ub is not None:
-            c = (_ord.columns_leq if hi_incl else _ord.columns_lt)(ix, ub)
-            cond = c if cond is None else (cond & c)
+        cond = _ord.range_predicate(ix, lb, ub, inclusive)
         survives = ~F.coalesce(cond, F.lit(False))   # null-safe complement
-        rdr = spark.read.schema(old.schema) if old.schema_json else spark.read
-        rewritten = (rdr.parquet(
-            *[os.path.join(path, f) for f in affected]).where(survives))
+        rewritten = _read_files(spark, [os.path.join(path, f)
+                                        for f in affected],
+                                old.schema, survives)
         _commit(spark, path, rewritten, ix, old.schema_json, old=old,
                 keep=untouched)
     return scan_parquet(spark, path)
@@ -1393,20 +1343,15 @@ def merge_rows(spark: SparkSession, path: str, batch: "Dataset") -> Dataset:
         # bare columns drops null-keyed rows (legal under null-first
         # semantics), which would misreport a single null-key row as a
         # duplicate.
-        key = F.struct(*_ord.sort_key_cols(ix))
-        val = F.struct(*[F.col(c) for c in ix])
         agg = batch.df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct(val).alias("nd"),
-            F.min_by(val, key).alias("lb"),
-            F.max_by(val, key).alias("ub")).collect()[0]
-        if agg["n"] == 0:                    # empty batch: no-op
+            F.countDistinct(F.struct(*[F.col(c) for c in ix])).alias("nd"),
+            *_index_stats_aggs(ix)).collect()[0]
+        if agg["__n"] == 0:                  # empty batch: no-op
             return scan_parquet(spark, path)
-        _require(agg["n"] == agg["nd"], ValueError,
+        _require(agg["__n"] == agg["nd"], ValueError,
                  f"batch has duplicate index keys "
-                 f"({agg['n']} rows, {agg['nd']} distinct)")
-        blb = tuple(agg["lb"][c] for c in ix)
-        bub = tuple(agg["ub"][c] for c in ix)
+                 f"({agg['__n']} rows, {agg['nd']} distinct)")
+        blb, bub = tuple(agg["__lb"]), tuple(agg["__ub"])
         untouched, candidates = [], []
         for i, f in enumerate(old.files):
             if _overlaps(old.lower_bounds[i], old.upper_bounds[i],
@@ -1430,29 +1375,38 @@ def merge_rows(spark: SparkSession, path: str, batch: "Dataset") -> Dataset:
                                       old.lower_bounds[b])))
         ix_fields = [batch.df.schema[c] for c in ix]
         key_df = batch.df.select(*[F.col(c) for c in ix])
+        probe_schema = StructType(
+            [StructField("__bid", LongType(), False),
+             StructField("__has_lo", BooleanType(), False),
+             StructField("__has_hi", BooleanType(), False)]
+            + [StructField(f"__{e}_{j}", f.dataType, True)
+               for e in ("lo", "hi") for j, f in enumerate(ix_fields)])
+        lo_cols = [F.col(f"__lo_{j}") for j in range(len(ix))]
+        hi_cols = [F.col(f"__hi_{j}") for j in range(len(ix))]
+        none_b = (None,) * len(ix)
 
-        def _probe(rows, schema, cond) -> set:
-            """One broadcast-NL-join job: which bounds rows match ≥1 key."""
-            bdf = spark.createDataFrame(rows, schema)
+        def _probe(intervals, inclusive: str) -> set:
+            """Ids of the ``(id, lo, hi)`` intervals holding at least one
+            batch key, in ONE broadcast nested-loop join job.  A ``None``
+            end is open: it carries an explicit has_lo/has_hi flag because
+            a NULL bound VALUE is legal (null-first ranges)."""
+            if not intervals:
+                return set()
+            bdf = spark.createDataFrame(
+                [(i, lo is not None, hi is not None,
+                  *(none_b if lo is None else lo),
+                  *(none_b if hi is None else hi))
+                 for i, lo, hi in intervals], probe_schema)
+            cond = ((~F.col("__has_lo") | _ord.range_predicate(
+                        ix, lo_cols, None, inclusive))
+                    & (~F.col("__has_hi") | _ord.range_predicate(
+                        ix, None, hi_cols, inclusive)))
             hit = (key_df.join(F.broadcast(bdf), on=cond, how="inner")
                    .select("__bid").distinct().collect())
             return {r["__bid"] for r in hit}
 
-        nb = len(ix_fields)
-        file_schema = StructType(
-            [StructField("__bid", LongType(), False)]
-            + [StructField(f"__lb_{j}", f.dataType, True)
-               for j, f in enumerate(ix_fields)]
-            + [StructField(f"__ub_{j}", f.dataType, True)
-               for j, f in enumerate(ix_fields)])
-        lb_cols = [F.col(f"__lb_{j}") for j in range(nb)]
-        ub_cols = [F.col(f"__ub_{j}") for j in range(nb)]
-        inside_set = _probe(
-            [(i, *old.lower_bounds[i], *old.upper_bounds[i])
-             for i in candidates],
-            file_schema,
-            _ord.cols_geq_cols(ix, lb_cols) & _ord.cols_leq_cols(ix, ub_cols)
-        ) if candidates else set()
+        inside_set = _probe([(i, old.lower_bounds[i], old.upper_bounds[i])
+                             for i in candidates], "both")
         affected = [i for i in candidates if i in inside_set]
         spared = [i for i in candidates if i not in inside_set]
         untouched = sorted(untouched + spared)
@@ -1466,15 +1420,14 @@ def merge_rows(spark: SparkSession, path: str, batch: "Dataset") -> Dataset:
         # ends at the extremes; every batch key and every affected file
         # falls strictly inside one region (a key on a spared bound
         # would have made that file affected).
+        def _region(r):
+            """Region r's open (lo, hi) ends; None where unbounded."""
+            return (old.upper_bounds[spared[r - 1]] if r > 0 else None,
+                    old.lower_bounds[spared[r]] if r < len(spared) else None)
+
         def _region_pred(r):
-            p = None
-            if r > 0:
-                p = _ord.columns_gt(ix, old.upper_bounds[spared[r - 1]])
-            if r < len(spared):
-                c = _ord.columns_lt(ix, old.lower_bounds[spared[r]])
-                p = c if p is None else (p & c)
-            return (F.lit(True) if p is None
-                    else F.coalesce(p, F.lit(False)))
+            p = _ord.range_predicate(ix, *_region(r), "none")
+            return F.lit(True) if p is None else F.coalesce(p, F.lit(False))
         region_files: dict[int, list[int]] = {}
         r = 0
         for i in affected:           # both lists ascend by lower bound
@@ -1484,31 +1437,9 @@ def merge_rows(spark: SparkSession, path: str, batch: "Dataset") -> Dataset:
             region_files.setdefault(r, []).append(i)
         work = sorted(region_files)
         # pure-insert regions (keys landing in a gap with no affected
-        # file): same single broadcast-join probe, gap bounds table this
-        # time.  Open ends carry an explicit has_lo/has_hi flag because a
-        # NULL bound VALUE is legal (null-first ranges) and cannot double
-        # as the open-end sentinel.
-        rest = [r for r in range(len(spared) + 1) if r not in region_files]
-        if rest:
-            region_schema = StructType(
-                [StructField("__bid", LongType(), False),
-                 StructField("__has_lo", BooleanType(), False),
-                 StructField("__has_hi", BooleanType(), False)]
-                + [StructField(f"__lo_{j}", f.dataType, True)
-                   for j, f in enumerate(ix_fields)]
-                + [StructField(f"__hi_{j}", f.dataType, True)
-                   for j, f in enumerate(ix_fields)])
-            none_b = (None,) * nb
-            rows = [(r, r > 0, r < len(spared),
-                     *(old.upper_bounds[spared[r - 1]] if r > 0 else none_b),
-                     *(old.lower_bounds[spared[r]] if r < len(spared)
-                       else none_b))
-                    for r in rest]
-            lo_cols = [F.col(f"__lo_{j}") for j in range(nb)]
-            hi_cols = [F.col(f"__hi_{j}") for j in range(nb)]
-            cond = ((~F.col("__has_lo") | _ord.cols_gt_cols(ix, lo_cols))
-                    & (~F.col("__has_hi") | _ord.cols_lt_cols(ix, hi_cols)))
-            work += sorted(_probe(rows, region_schema, cond))
+        # file): the same probe over the open region gaps
+        work += _probe([(r, *_region(r)) for r in range(len(spared) + 1)
+                        if r not in region_files], "none")
         work.sort()
         # re-collate each region to the table's prevailing file size so
         # merge does not degrade layout over time
@@ -1526,16 +1457,16 @@ def merge_rows(spark: SparkSession, path: str, batch: "Dataset") -> Dataset:
         # must still be replaced by a null-keyed batch row — plain-equality
         # anti-join would keep it and duplicate the key
         _anti = _ord.keys_eq(ix, "t", "b")
-        srdr = spark.read.schema(old.schema) if old.schema_json else spark.read
         parts = []
         for rr in work:
             part = batch.df.where(_region_pred(rr)).select(*table_cols)
             files_r = region_files.get(rr, [])
             if files_r:
-                surv = (srdr.parquet(
-                    *[os.path.join(path, old.files[i]) for i in files_r])
-                    .alias("t")
-                    .join(batch_keys.alias("b"), on=_anti, how="left_anti"))
+                surv = (_read_files(spark, [os.path.join(path, old.files[i])
+                                            for i in files_r], old.schema)
+                        .alias("t")
+                        .join(batch_keys.alias("b"), on=_anti,
+                              how="left_anti"))
                 part = surv.select(*table_cols).unionByName(part)
             parts.append(Dataset(spark, part, index_columns=ix
                                  ).reindex(ix).repartition(rpp))
@@ -1624,6 +1555,10 @@ def read_changes(spark: SparkSession, path: str, from_version: int,
         return (df.withColumn("_commit_version", F.lit(v).cast("bigint"))
                 .select(*cols, "_commit_version", "_change_type"))
 
+    def _rows(files):
+        return (_read_files(spark, [os.path.join(path, f) for f in files],
+                            schema).select(*cols) if files else None)
+
     chunks: list[DataFrame] = []
     for v_prev, v in zip(span, span[1:]):
         prev, cur = mans[v_prev], mans[v]
@@ -1632,14 +1567,7 @@ def read_changes(spark: SparkSession, path: str, from_version: int,
         added = [f for f in cur.files if f not in prev_set]
         if not removed and not added:
             continue
-        # schema-pinned reads: files predating a merge_schema append
-        # lack the added columns and must surface them as nulls
-        after = (spark.read.schema(schema).parquet(
-            *[os.path.join(path, f) for f in added]).select(*cols)
-            if added else None)
-        before = (spark.read.schema(schema).parquet(
-            *[os.path.join(path, f) for f in removed]).select(*cols)
-            if removed else None)
+        after, before = _rows(added), _rows(removed)
         if before is None:
             # pure append: every added row is an insert — no carried-over
             # rows can exist, so skip the EXCEPT ALL shuffle entirely
@@ -1884,11 +1812,10 @@ def build_bloom_index(spark: SparkSession, path: str, column: str,
         sidecar = {"column": column, "m": m, "k": k,
                    "version": _meta.list_versions(path)[-1], "files": {}}
     else:
-        df = spark.read.parquet(*files)
+        df = _read_files(spark, files, man.schema)
         dtype = dict(df.dtypes)[column]
-        fname = F.regexp_replace(F.input_file_name(), "^file:", "")
         pairs = df.select(
-            fname.alias("__f"),
+            _file_path().alias("__f"),
             F.explode(F.array(*[
                 F.abs(F.xxhash64(F.col(column).cast(dtype), F.lit(i))) % m
                 for i in range(k)])).alias("__pos"))
@@ -1903,7 +1830,7 @@ def build_bloom_index(spark: SparkSession, path: str, column: str,
         base = os.path.abspath(path)
         per_file: dict = {}
         for r in words:
-            rel = os.path.relpath(os.path.abspath(r["__f"]), base)
+            rel = os.path.relpath(r["__f"], base)
             per_file.setdefault(rel, {})[str(r["__w"])] = int(r["__bits"])
         sidecar = {"column": column, "m": m, "k": k, "dtype": dtype,
                    "version": _meta.list_versions(path)[-1],
@@ -1946,10 +1873,8 @@ def scan_point_lookup(spark: SparkSession, path: str, column: str,
                for w, bits in need.items())]
     if not survivors:
         return ds.df.where(pred).limit(0)
-    schema = _meta.load_manifest(path).schema
-    rd = spark.read.schema(schema) if schema else spark.read
-    return rd.parquet(*[os.path.join(path, f)
-                        for f in survivors]).where(pred)
+    return _read_files(spark, [os.path.join(path, f) for f in survivors],
+                       ds.df.schema, pred)
 
 
 def describe_history(spark: SparkSession, path: str) -> DataFrame:

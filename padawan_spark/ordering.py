@@ -9,11 +9,16 @@ null-aware min/max must be built explicitly:
 
 - :func:`columns_lt` / :func:`columns_leq` / :func:`columns_gt` /
   :func:`columns_geq` expand ``(c1,c2,...) OP (b1,b2,...)`` into nested
-  boolean column expressions.  Because they are plain Catalyst boolean
-  trees over the raw columns, the leading-column conjuncts are pushed
-  into the parquet scan (row-group min/max skipping) — this is the
-  scale-path replacement for the reference's driver-side partition
-  pruning (``sliced_dataset.py:41-77``).
+  boolean column expressions through one recursive expander.  A bound
+  item is a literal or a Column (e.g. a broadcast table of file bounds,
+  so one join tests every (row, bound) pair).  Literal bounds fold their
+  nullness at build time, so the predicate is a plain Catalyst boolean
+  tree over the raw columns and its leading-column conjuncts push into
+  the parquet scan (row-group min/max skipping) — this is the scale-path
+  replacement for the reference's driver-side partition pruning
+  (``sliced_dataset.py:41-77``).
+- :func:`range_predicate` joins a lower and an upper bound under one of
+  the four ``inclusive`` modes; :func:`inclusive_ends` validates a mode.
 - :func:`keys_eq` is null-safe key equality between two aliased sides,
   the join condition for key joins where a NULL key matches a NULL key.
 - :func:`sort_key_cols` produces ``(null-rank, value)`` pairs so
@@ -41,37 +46,41 @@ from pyspark.sql import functions as F
 # Column-expression builders (executor side, Catalyst-optimizable)
 # ---------------------------------------------------------------------------
 
-def _lit(value):
-    return F.lit(value)
+INCLUSIVE = ("none", "lower", "upper", "both")
 
 
-def _null_lt(col: Column, value) -> Column:
-    """col < value under null-first order."""
-    if value is None:
+def _lt(col: Column, b) -> Column:
+    """``col < b`` under null-first order.  A literal ``b`` folds its
+    nullness into the expression now, so a slice pushes plain comparisons
+    into the parquet scan; a Column ``b`` is null or not per row."""
+    if isinstance(b, Column):
+        return b.isNotNull() & (col.isNull() | (col < b))
+    if b is None:
         return F.lit(False)  # nothing is smaller than null
-    return col.isNull() | (col < _lit(value))
+    return col.isNull() | (col < F.lit(b))
 
 
-def _null_gt(col: Column, value) -> Column:
-    """col > value under null-first order."""
-    if value is None:
+def _gt(col: Column, b) -> Column:
+    """``col > b`` under null-first order."""
+    if isinstance(b, Column):
+        return col.isNotNull() & (b.isNull() | (col > b))
+    if b is None:
         return col.isNotNull()  # everything non-null is larger than null
-    return col.isNotNull() & (col > _lit(value))
+    return col.isNotNull() & (col > F.lit(b))
 
 
-def _null_eq(col: Column, value) -> Column:
-    if value is None:
-        return col.isNull()
-    return col == _lit(value)
+def _eq(col: Column, b) -> Column:
+    if isinstance(b, Column):
+        return col.eqNullSafe(b)
+    return col.isNull() if b is None else col == F.lit(b)
 
 
-def _expand(columns: Sequence[Column], bound: Sequence, strict_atom, empty: bool) -> Column:
+def _expand(columns: list[Column], bound: Sequence, strict, empty: bool) -> Column:
     """Recursive lexicographic expansion: ``c0 OP b0 OR (c0 == b0 AND rest)``."""
     if len(bound) == 0:
         return F.lit(empty)
-    head_c, head_b = columns[0], bound[0]
-    rest = _expand(columns[1:], bound[1:], strict_atom, empty)
-    return strict_atom(head_c, head_b) | (_null_eq(head_c, head_b) & rest)
+    rest = _expand(columns[1:], bound[1:], strict, empty)
+    return strict(columns[0], bound[0]) | (_eq(columns[0], bound[0]) & rest)
 
 
 def _as_cols(columns: Sequence) -> list[Column]:
@@ -79,68 +88,42 @@ def _as_cols(columns: Sequence) -> list[Column]:
 
 
 def columns_lt(columns: Sequence, bound: Sequence) -> Column:
-    """``(columns...) < (bound...)`` lexicographic, null-first; bound may be a prefix."""
-    cols = _as_cols(columns)[: len(bound)]
-    return _expand(cols, list(bound), _null_lt, empty=False)
+    """``(columns...) < (bound...)`` lexicographic, null-first.  ``bound``
+    may be a prefix; its items are literals or Columns."""
+    return _expand(_as_cols(columns), bound, _lt, empty=False)
 
 
 def columns_leq(columns: Sequence, bound: Sequence) -> Column:
-    cols = _as_cols(columns)[: len(bound)]
-    return _expand(cols, list(bound), _null_lt, empty=True)
+    return _expand(_as_cols(columns), bound, _lt, empty=True)
 
 
 def columns_gt(columns: Sequence, bound: Sequence) -> Column:
-    cols = _as_cols(columns)[: len(bound)]
-    return _expand(cols, list(bound), _null_gt, empty=False)
+    return _expand(_as_cols(columns), bound, _gt, empty=False)
 
 
 def columns_geq(columns: Sequence, bound: Sequence) -> Column:
-    cols = _as_cols(columns)[: len(bound)]
-    return _expand(cols, list(bound), _null_gt, empty=True)
+    return _expand(_as_cols(columns), bound, _gt, empty=True)
 
 
-def _cc_lt(col: Column, bound: Column) -> Column:
-    """``col < bound`` under null-first order, bound itself a COLUMN whose
-    null-ness is only known at runtime (vs ``_null_lt``, which folds a
-    literal bound's null-ness at plan-build time)."""
-    return bound.isNotNull() & (col.isNull() | (col < bound))
+def inclusive_ends(inclusive: str) -> tuple[bool, bool]:
+    """``(lower closed, upper closed)`` for an ``inclusive`` mode."""
+    if inclusive not in INCLUSIVE:
+        raise ValueError(f"inclusive must be one of {INCLUSIVE}: {inclusive}")
+    return inclusive in ("lower", "both"), inclusive in ("upper", "both")
 
 
-def _cc_gt(col: Column, bound: Column) -> Column:
-    """``col > bound`` under null-first order, column-valued bound."""
-    return col.isNotNull() & (bound.isNull() | (col > bound))
-
-
-def _cc_expand(columns: list[Column], bounds: list[Column],
-               strict_atom, empty: bool) -> Column:
-    if not bounds:
-        return F.lit(empty)
-    rest = _cc_expand(columns[1:], bounds[1:], strict_atom, empty)
-    return strict_atom(columns[0], bounds[0]) | (
-        columns[0].eqNullSafe(bounds[0]) & rest)
-
-
-def cols_lt_cols(columns: Sequence, bounds: Sequence) -> Column:
-    """``(columns...) < (bounds...)`` lexicographic null-first where the
-    bound side is COLUMNS too (e.g. a broadcast manifest-bounds table),
-    so one join evaluates every (row, file-bound) pair in a single job."""
-    return _cc_expand(_as_cols(columns)[: len(bounds)], _as_cols(bounds),
-                      _cc_lt, empty=False)
-
-
-def cols_leq_cols(columns: Sequence, bounds: Sequence) -> Column:
-    return _cc_expand(_as_cols(columns)[: len(bounds)], _as_cols(bounds),
-                      _cc_lt, empty=True)
-
-
-def cols_gt_cols(columns: Sequence, bounds: Sequence) -> Column:
-    return _cc_expand(_as_cols(columns)[: len(bounds)], _as_cols(bounds),
-                      _cc_gt, empty=False)
-
-
-def cols_geq_cols(columns: Sequence, bounds: Sequence) -> Column:
-    return _cc_expand(_as_cols(columns)[: len(bounds)], _as_cols(bounds),
-                      _cc_gt, empty=True)
+def range_predicate(columns: Sequence, lb: Sequence | None,
+                    ub: Sequence | None, inclusive: str) -> Column | None:
+    """``lb <(=) (columns...) <(=) ub``, each end closed or open per
+    ``inclusive``; a ``None`` bound leaves that end unbounded, and with
+    both ends unbounded there is no predicate (``None``)."""
+    lo_incl, hi_incl = inclusive_ends(inclusive)
+    conds = []
+    if lb is not None:
+        conds.append((columns_geq if lo_incl else columns_gt)(columns, lb))
+    if ub is not None:
+        conds.append((columns_leq if hi_incl else columns_lt)(columns, ub))
+    return reduce(operator.and_, conds) if conds else None
 
 
 def keys_eq(columns: Sequence[str], left: str, right: str) -> Column:

@@ -307,6 +307,27 @@ def test_map_extra_args_file_backed(spark, sample_dir):
     assert rows == expect
 
 
+@pytest.mark.parametrize("leaf", ["plain", "with space", "pct%41x", "a+b"])
+def test_table_path_with_uri_escapes(spark, tmp_path, leaf):
+    """Spark names the file a row was read from by URI (a space becomes
+    %20, a literal % becomes %25) while the manifest holds plain paths:
+    every rule that maps rows back to files decodes the URI, and keeps a
+    '+' (which a form decoder would turn into a space)."""
+    from padawan_spark import build_bloom_index, scan_point_lookup
+    p, n = str(tmp_path / leaf), 40
+    src = Dataset(spark, spark.range(n).selectExpr("id AS k", "id * 10 AS v"),
+                  index_columns=("k",))
+    ds = src.repartition(10).write_parquet(p)
+    assert len(ds) > 1 and sum(ds.sizes) == n
+    assert sum(Dataset(spark, files=ds._files,
+                       index_columns=("k",)).reindex().sizes) == n
+    assert ds.collate(20).df.count() == n
+    assert ds.map(lambda pdf, slot: pdf,
+                  extra_args=[(i,) for i in range(len(ds))]).df.count() == n
+    build_bloom_index(spark, p, "v")
+    assert [r.k for r in scan_point_lookup(spark, p, "v", 70).collect()] == [7]
+
+
 def test_map_extra_args_length_mismatch(spark, sample_dir):
     r = scan_parquet(spark, sample_dir).reindex(("date", "hour", "t"))
     with pytest.raises(ValueError):
@@ -1780,6 +1801,13 @@ def test_schema_evolution_lifecycle(spark, tmp_path):
     assert set(cur.columns) == {"k", "v", "w"}
     got = {r.k: r.w for r in cur.collect()}
     assert got[100] == "x" and all(got[k] is None for k in range(10))
+    # a slice pruned to pre-evolution files keeps the recorded schema
+    assert "w" in scan_parquet(spark, p).slice((0,), (5,)).df.columns
+    # a bloom index over the added column reads every file with it
+    from padawan_spark import build_bloom_index, scan_point_lookup
+    build_bloom_index(spark, p, "w")
+    assert [r.k for r in scan_point_lookup(spark, p, "w", "x").collect()] \
+        == [100]
     # append missing the evolved column: nulls backfill on read
     from_pandas(spark, pd.DataFrame({"k": [200], "v": [2]}),
                 index_columns=("k",)).write_parquet(p, append=True,

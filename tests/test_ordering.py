@@ -9,8 +9,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from padawan_spark.ordering import (
-    columns_geq, columns_gt, columns_leq, columns_lt, keys_eq,
-    lex_cmp, lex_key, nullable_cmp, sort_partitions,
+    INCLUSIVE, columns_geq, columns_gt, columns_leq, columns_lt,
+    inclusive_ends, keys_eq, lex_cmp, lex_key, nullable_cmp,
+    range_predicate, sort_partitions,
 )
 
 # every 2-tuple over {None, 1, 2} x {None, 'a', 'b'}
@@ -33,23 +34,53 @@ def tuples_df(spark):
     ).cache()
 
 
+def py_cmp(t, bound):
+    """Ground truth: -1/0/1 comparing t's prefix with ``bound``."""
+    p = t[:len(bound)]
+    return -1 if py_lex_lt(p, bound) else int(py_lex_lt(bound, p))
+
+
+OPS = {columns_lt: lambda c: c < 0, columns_leq: lambda c: c <= 0,
+       columns_gt: lambda c: c > 0, columns_geq: lambda c: c >= 0}
+
+
 @pytest.mark.parametrize("bound", [(1, "a"), (2, "b"), (None, "a"), (1, None),
                                    (1,), (None,), (2,)])
-@pytest.mark.slow
 def test_predicates_match_python(spark, tuples_df, bound):
-    rows = {r["i"]: (r["x"], r["y"]) for r in tuples_df.collect()}
-    for builder, check in [
-        (columns_lt, lambda t: py_lex_lt(t, bound)),
-        (columns_gt, lambda t: py_lex_lt(bound, t[:len(bound)]) if len(bound) < 2
-         else py_lex_lt(bound, t)),
-        (columns_leq, lambda t: not (py_lex_lt(bound, t[:len(bound)])
-                                     if len(bound) < 2 else py_lex_lt(bound, t))),
-        (columns_geq, lambda t: not py_lex_lt(t, bound)),
-    ]:
-        got = {r["i"] for r in
-               tuples_df.where(builder(("x", "y"), bound)).collect()}
-        want = {i for i, t in rows.items() if check(t)}
-        assert got == want, f"{builder.__name__} {bound}: {got} != {want}"
+    """Every builder, and range_predicate in each inclusive mode up to
+    the prefix bound (2,), keeps exactly the rows the Python truth table
+    keeps, for literal bounds and for Column bounds read from a joined
+    one-row table (their nullness known only per row)."""
+    ub = (2,)
+    names = [f"b{j}" for j in range(len(bound))]
+    bdf = spark.createDataFrame(
+        [(*bound, *ub)],
+        ", ".join([f"{n} {t}" for n, t in zip(names, ("int", "string"))]
+                  + ["u0 int"]))
+    preds, want = {}, {}
+    for form, lo, hi in [("lit", bound, ub),
+                         ("col", [F.col(n) for n in names], [F.col("u0")])]:
+        for builder, op in OPS.items():
+            preds[f"{builder.__name__}/{form}"] = builder(("x", "y"), lo)
+            want[f"{builder.__name__}/{form}"] = lambda t, op=op: op(
+                py_cmp(t, bound))
+        for inc in INCLUSIVE:
+            lo_incl, hi_incl = inclusive_ends(inc)
+            preds[f"range {inc}/{form}"] = range_predicate(("x", "y"), lo,
+                                                            hi, inc)
+            want[f"range {inc}/{form}"] = lambda t, a=lo_incl, b=hi_incl: (
+                py_cmp(t, bound) >= (0 if a else 1)
+                and py_cmp(t, ub) <= (0 if b else -1))
+    rows = tuples_df.crossJoin(bdf).select(
+        "i", "x", "y", *[p.alias(n) for n, p in preds.items()]).collect()
+    for name in preds:
+        # a NULL predicate drops the row, like a false one
+        got = {r["i"] for r in rows if r[name]}
+        exp = {r["i"] for r in rows if want[name]((r["x"], r["y"]))}
+        assert got == exp, f"{name} {bound}: {got} != {exp}"
+    assert range_predicate(("x", "y"), None, None, "both") is None
+    with pytest.raises(ValueError, match="inclusive"):
+        range_predicate(("x", "y"), bound, None, "closed")
 
 
 def test_keys_eq_null_safe(tuples_df):
