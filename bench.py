@@ -114,7 +114,8 @@ def warm(spark, names) -> None:
 
 def reset(spark, name: str, sf_dir: str) -> None:
     """Run before every timed pass.  Clearing the CacheManager keeps a
-    pass from reading an earlier pass's ``.cache()`` blocks; dropping
+    pass from reading blocks an earlier pass cached: the registry
+    queries cache nothing, but an older baseline tree may; dropping
     the memoized bucketed tables makes every ``scale_bucketed_join``
     pass pay the write it exists to measure, so min-of-N compares like
     with like."""

@@ -121,16 +121,13 @@ def dedup_minhash_signatures(spark, sf_dir):
 
 
 def _bands_spark(spark, sf_dir) -> DataFrame:
-    """LSH band keys, one row per (doc, band), MATERIALIZED (cache):
-    the band table is referenced twice by the candidate self-join and
-    Catalyst does not dedupe common subplans — without materialization
-    the whole minhash pipeline would run once per reference.  At corpus
-    scale this is the persisted signature table of a real pipeline."""
+    """LSH band keys, one row per (doc, band).  Both sides of the
+    candidate self-join read the same minhash aggregation exchange, which
+    AQE reuses, so the minhash pipeline runs once per query."""
     mh = _minhash_spark(spark, sf_dir)
     band_keys = F.array(*[
         F.concat(F.col(f"h{2*b}"), F.col(f"h{2*b+1}")) for b in range(_N_BANDS)])
-    return (mh.select("doc_id", F.posexplode(band_keys).alias("band", "key"))
-            .cache())
+    return mh.select("doc_id", F.posexplode(band_keys).alias("band", "key"))
 
 
 @query("dedup_minhash_lsh", oracle=f"""
@@ -189,31 +186,15 @@ JOIN cnt cb ON doc_b = cb.doc_id
 WHERE CAST(i AS DOUBLE) / (ca.n + cb.n - i) >= 0.5
 """)
 def dedup_ngram_jaccard(spark, sf_dir):
-    # materialize the df-capped table ONCE (r16, guide §2.4/§5):
-    # Catalyst does not dedupe common subplans, so the un-materialized
-    # plan ran the tokenize → explode → distinct subtree 8 times
-    # (plan-audited: 8 Generate nodes, 23 Exchanges).  sh itself is NOT
-    # checkpointed — its two references share the distinct Exchange,
-    # which AQE reuses at runtime (measured: same 14 task-sec either
-    # way, one serial materialization barrier less).  At corpus scale
-    # shc is the persisted shingle table of a real pipeline; eager
-    # localCheckpoint pins it per invocation with no cross-run reuse.
     sh = _shingles_spark(load(spark, sf_dir, "documents", wide=True))
-    # r17 measured-then-reverted (VERDICT r16 task 9): a df >= 2 prune
-    # of the self-join sides (singleton shingles cannot form a pair;
-    # per-doc sizes still count them, so jaccard is unchanged) measured
-    # ~18% SLOWER here in a 3-variant same-session alternating A/B
-    # (1.92 -> 2.26 s min-of-5) and prunes nothing on this corpus —
-    # df histogram at sf0.1: 207 singletons of 27213 shingles (0.8‰),
-    # zero shingles over the cap, join rows 260388 -> 260181.  The
-    # synthetic corpus draws from a small vocabulary, so almost every
-    # shingle repeats; on a real web corpus (singletons dominate) the
-    # prune is the standard inverted-index move, but this bench cannot
-    # show it and the extra filter+project on both join sides costs
-    # real time.  AQE skew-split was also checked: no shingle key is
-    # near skewedPartitionThresholdInBytes at this SF.
+    # No df >= 2 prune of the self-join sides: singleton shingles cannot
+    # form a pair, but this small-vocabulary corpus has almost none (207
+    # of 27,213 at sf0.1) and the extra filter on both sides measured
+    # slower.  On a real web corpus it is the standard inverted-index move.
     rare = (sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
             .where(F.col("df") <= _DF_CAP).select("s"))
+    # pinned: cnt and both self-join sides would each redo the capping
+    # join (AQE reuses only the exchanges below it)
     shc = sh.join(rare, "s").localCheckpoint(eager=True)
     cnt = shc.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = shc.alias("a")
@@ -263,16 +244,12 @@ def dedup_containment(spark, sf_dir):
     turns intersections into both directed containment ratios.  Exact
     integer counts, one double division per side.
     """
-    # same capped-table materialization as dedup_ngram_jaccard (r16);
-    # sh itself is NOT checkpointed — its references share the distinct
-    # Exchange, which AQE reuses at runtime (measured: same task-sec,
-    # one serial barrier less)
+    # the dedup_ngram_jaccard plan: pinned capped table, no df >= 2 prune
     sh = _shingles_spark(load(spark, sf_dir, "documents", wide=True))
-    # df >= 2 join-side prune measured-then-reverted like
-    # dedup_ngram_jaccard (r17): no-op on this small-vocabulary corpus,
-    # ~18% filter overhead.
     rare = (sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
             .where(F.col("df") <= _DF_CAP).select("s"))
+    # pinned: cnt and both self-join sides would each redo the capping
+    # join (AQE reuses only the exchanges below it)
     shc = sh.join(rare, "s").localCheckpoint(eager=True)
     cnt = shc.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = shc.alias("a")
@@ -356,8 +333,7 @@ def dedup_simhash_pairs(spark, sf_dir):
     sim = _simhash_spark(spark, sf_dir)
     bands = (sim.select("doc_id", "simhash",
                         F.explode(F.expr("sequence(0, 2)")).alias("b"))
-             .withColumn("key", F.expr("(simhash >> (b * 8)) & 255"))
-             .cache())  # referenced twice by the self-join
+             .withColumn("key", F.expr("(simhash >> (b * 8)) & 255")))
     a = bands.alias("a")
     b = bands.alias("b")
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
@@ -626,13 +602,8 @@ def dedup_minhash_estimate(spark, sf_dir):
     table shows the estimator variance at n_hash=8 directly.  The
     exact side is restricted to already-similar pairs so the join stays
     bounded; integer counting + one division per side — engine-exact."""
-    mh = _minhash_spark(spark, sf_dir).cache()
-    # materialized once (r16): referenced by cnt and both self-join
-    # sides; measured 43.7 vs 94.0 task-sec with the checkpoint — here
-    # the join keys differ per reference, so AQE exchange reuse does
-    # NOT cover the recompute the way it does in dedup_ngram_jaccard
-    sh = (_shingles_spark(load(spark, sf_dir, "documents", wide=True))
-          .localCheckpoint(eager=True))
+    mh = _minhash_spark(spark, sf_dir)
+    sh = _shingles_spark(load(spark, sf_dir, "documents", wide=True))
     cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (a.join(b, (F.col("a.s") == F.col("b.s"))
@@ -994,7 +965,7 @@ def dedup_funnel(spark, sf_dir):
     integer-exact.
 
     Scale shape: each stage reuses the suite's own bounded plans
-    (digest group-by; cached band table equi-join; df-capped shingle
+    (digest group-by; band table equi-join; df-capped shingle
     self-join gated by the candidate set), and the stage counters are
     single-row aggregates cross-joined into the 2-row result — no
     collect, no driver-side loop."""
@@ -1009,13 +980,11 @@ def dedup_funnel(spark, sf_dir):
             .select(F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b"))
             .distinct())
-    # same capped-table materialization as dedup_ngram_jaccard (r16);
-    # the canon-restricted sh shares its Exchange across references
-    # (AQE runtime reuse), so only shc is checkpointed
+    # the dedup_ngram_jaccard verify join over the canonical docs
     sh = _shingles_spark(d).join(canon, "doc_id")
     rare = (sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
             .where(F.col("df") <= _DF_CAP).select("s"))
-    shc = sh.join(rare, "s").localCheckpoint(eager=True)
+    shc = sh.join(rare, "s")
     cnt = shc.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     sa, sb = shc.alias("sa"), shc.alias("sb")
     inter = (sa.join(sb, (F.col("sa.s") == F.col("sb.s"))

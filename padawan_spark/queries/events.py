@@ -640,9 +640,7 @@ def _lttb_buckets(spark, sf_dir):
     partition the (ts, event_id) order, so global rank = rank within
     (series, day) + the exclusive prefix count of earlier days — the
     prefix table is types x days rows, windowed in negligible time,
-    and the heavy rank runs (series x day)-parallel.  (Exposed as a
-    helper so tests can pin this plan shape; the query materializes
-    it once via localCheckpoint.)"""
+    and the heavy rank runs (series x day)-parallel."""
     from pyspark.sql.window import Window
     e = load(spark, sf_dir, "events")
     ed = e.withColumn("day", F.date_trunc("DAY", "ts"))
@@ -707,11 +705,7 @@ def ev_downsample_lttb(spark, sf_dir):
     through exact decimal; the area formula is identical per-row IEEE
     arithmetic in both engines; argmax ties break on (ts, event_id)."""
     from pyspark.sql.window import Window
-    # materialized once (r16, guide §5): bk feeds both the bucket-stats
-    # aggregation and the area scoring join — Catalyst does not dedupe
-    # the shared subtree, so the scan + per-day rank + offset join
-    # otherwise runs twice
-    bk = _lttb_buckets(spark, sf_dir).localCheckpoint(eager=True)
+    bk = _lttb_buckets(spark, sf_dir)
     d6 = "decimal(38,6)"
     stats = (bk.groupBy("event_type", "bucket")
              .agg((F.sum(F.unix_micros("ts").cast(d6)).cast("double")

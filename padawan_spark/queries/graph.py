@@ -120,10 +120,7 @@ def _pagerank(edges, out_col: str):
     O(total rounds)).
 
     Edges/verts are lazy localCheckpoints whose materialization the
-    verts.count() below triggers in one job (r16 made them eager after
-    finding the dead .cache()+unpersist pair; r17 makes them lazy —
-    same single materialization, two fewer result-stage jobs).
-    Checkpointing pins the materialized rows to this invocation's RDDs
+    verts.count() below triggers in one job.  Checkpointing pins the materialized rows to this invocation's RDDs
     (no CacheManager plan-key, so a fresh call never reuses a previous
     run's data) and every downstream reference reads them."""
     edges = edges.localCheckpoint(eager=False)
@@ -328,7 +325,7 @@ def graph_triangle_count(spark, sf_dir):
               F.when((F.col("da") < F.col("db"))
                      | ((F.col("da") == F.col("db"))
                         & (F.col("a") < F.col("b"))), F.col("b"))
-              .otherwise(F.col("a")).alias("hi"))).cache()
+              .otherwise(F.col("a")).alias("hi")))
     # wedges at the low-degree center: (lo -> hi1), (lo -> hi2); closed
     # iff the third edge exists in EITHER orientation
     e1 = oe.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
@@ -397,9 +394,7 @@ def graph_bfs_distance(spark, sf_dir):
     iterative-loop policy).  The oracle's recursive CTE enumerates all
     bounded-hop walks and takes MIN(d), which equals BFS distance.
     Integer arithmetic only: engine-exact."""
-    # eager localCheckpoint, not .cache(): the old cache was unpersisted
-    # at plan-build time (before the action), so every round's expansion
-    # re-ran the whole event-window edge subtree (r16, guide §5)
+    # pinned: every round's expansion reads the edge table
     edges = (_user_edges_spark(spark, sf_dir).select("src", "dst")
              .localCheckpoint(eager=True))
     seeds = (edges.where(F.col("src") % 97 == 0)
@@ -474,9 +469,7 @@ def graph_community_lpa(spark, sf_dir):
     lowering.  Labels localCheckpoint per round (iterative-loop
     policy).  Integer counting only: engine-exact."""
     e = _user_edges_spark(spark, sf_dir).select("src", "dst")
-    # eager localCheckpoint, not .cache(): the old cache was unpersisted
-    # at plan-build time (before the action), so every round's histogram
-    # re-ran the whole edge-build subtree (r16, guide §5)
+    # pinned: every round's histogram reads the edge table
     ue = (e.select(F.col("src").alias("u"), F.col("dst").alias("v"))
           .union(e.select(F.col("dst").alias("u"), F.col("src").alias("v")))
           .distinct().localCheckpoint(eager=True))
@@ -550,9 +543,7 @@ def graph_kcore(spark, sf_dir):
     no full-graph broadcast.  Integer arithmetic only: engine-exact."""
     e = (_user_edges_spark(spark, sf_dir).select("src", "dst")
          .where(F.col("src") != F.col("dst")).distinct())
-    # eager localCheckpoint, not .cache(): the old cache was unpersisted
-    # at plan-build time (before the action), so every peel round re-ran
-    # the whole edge-build subtree (r16, guide §5)
+    # pinned: every peel round reads the edge table
     ue = (e.unionByName(e.select(F.col("dst").alias("src"),
                                  F.col("src").alias("dst")))
           .distinct().localCheckpoint(eager=True))

@@ -393,14 +393,10 @@ def pipe_importance_resampling(spark, sf_dir):
     # scan, so corpus-vs-target needs one explode + one shuffle, not
     # two of each plus a vocabulary join (tf == the old left-join +
     # coalesce(tf, 0): a vocab word with no en occurrences counts 0).
-    # freq is vocabulary-sized and feeds both the totals row and the
-    # ratio table — materialized once (Catalyst would re-run the whole
-    # aggregation per reference).
     freq = (tok.groupBy("w")
             .agg(F.count(F.lit(1)).alias("cf"),
                  F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
-                 .cast("bigint").alias("tf"))
-            .localCheckpoint(eager=True))
+                 .cast("bigint").alias("tf")))
     tot = freq.agg(F.sum("tf").alias("nt"), F.sum("cf").alias("nc"),
                    F.count(F.lit(1)).alias("v"))
     llr = (freq.crossJoin(F.broadcast(tot))

@@ -24,10 +24,12 @@ is deterministic across engines; **aggregation order is not**.  Policy:
 
 from __future__ import annotations
 
+import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -63,6 +65,12 @@ def ensure_session_conf(spark: SparkSession) -> None:
             pass  # immutable in this deployment; keep going
 
 
+# footer-inferred schema per file identity (path, size, mtime): only the
+# first load of a file runs Spark's schema-inference job, and a rewritten
+# file is inferred again
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
 def load(spark: SparkSession, sf_dir: str, name: str,
          wide: bool = False) -> DataFrame:
     """Read one testdata table.  ``wide=True`` routes through
@@ -71,7 +79,14 @@ def load(spark: SparkSession, sf_dir: str, name: str,
     directly onto the scan, so a single-row-group file doesn't serialize
     the whole pipeline onto one task."""
     ensure_session_conf(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = os.path.abspath(f"{sf_dir}/{name}.parquet")
+    st = os.stat(path)
+    key = (path, st.st_size, st.st_mtime_ns)
+    if key in _SCHEMAS:
+        df = spark.read.schema(_SCHEMAS[key]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
     if name == "events":
         # ts type is generation-dependent: TIMESTAMP(NANOS) reads as long
         # (nanosAsLong) and truncates to microseconds matching DuckDB's

@@ -326,22 +326,12 @@ def q15(spark, sf_dir):
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp")))
     s = load(spark, sf_dir, "supplier")
-    # the aggregated per-supplier table is materialized ONCE
-    # (localCheckpoint; lazy — the broadcast-side job below triggers it,
-    # so no separate materialization job) and the global max is a
-    # parallel scalar agg over it, broadcast back as a 1-row equi-join.
-    # History: r15 computed the max as a second full quarter-scan +
-    # aggregation (Catalyst doesn't dedupe, broadcast sides are exempt
-    # from AQE exchange reuse); r16 replaced that with a window over the
-    # aggregated rows, but Window.partitionBy() funnels EVERY supplier
-    # row through ONE task with no partial aggregation — at the 100 TB
-    # stance that's all suppliers in one partition (r17, VERDICT r16
-    # task 4, guide §2.2/§2.4).  The scalar agg keeps partial+final
-    # parallelism; lineitem is still scanned once.
+    # the global max is a parallel scalar agg over the per-supplier
+    # table, broadcast back as a 1-row equi-join (a global window would
+    # funnel every supplier through one task)
     rev = (l.groupBy(F.col("l_suppkey").alias("supplier_no"))
            .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")),
-                     "total_revenue"))
-           .localCheckpoint(eager=False))
+                     "total_revenue")))
     mx = rev.agg(F.max("total_revenue").alias("__mx"))
     return (rev.join(F.broadcast(mx),
                      F.col("total_revenue") == F.col("__mx"))
@@ -661,23 +651,14 @@ def q11(spark, sf_dir):
     l = load(spark, sf_dir, "lineitem")
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation").where(F.col("n_name") == "NATION_3")
-    # the aggregated per-part table is materialized ONCE (lazy
-    # localCheckpoint — the threshold broadcast job triggers it) and the
-    # 0.001×total threshold is a parallel scalar agg over it, broadcast
-    # back as a 1-row cross join.  History: r15 re-ran the full
-    # lineitem⋈supplier⋈nation join + partkey aggregation for the
-    # threshold's broadcast side (Catalyst doesn't dedupe, broadcast
-    # sides are exempt from AQE exchange reuse); r16 used a window over
-    # the aggregated rows, but Window.partitionBy() funnels every
-    # Germany-supplied partkey through ONE task with no partial
-    # aggregation (r17, VERDICT r16 task 4, guide §2.2/§2.4).  Same
-    # arithmetic: 0.001 * (double)SUM(val) over all parts.
+    # the 0.001 x total threshold is a parallel scalar agg over the
+    # per-part table, broadcast back as a 1-row cross join (a global
+    # window would funnel every part through one task)
     vbp = (l.join(broadcast(s.join(broadcast(n),
                                    s.s_nationkey == n.n_nationkey)),
                   l.l_suppkey == F.col("s_suppkey"))
            .groupBy(F.col("l_partkey").alias("p_partkey"))
-           .agg(F.sum(F.col("l_extendedprice").cast(DEC)).alias("val"))
-           .localCheckpoint(eager=False))
+           .agg(F.sum(F.col("l_extendedprice").cast(DEC)).alias("val")))
     thr = vbp.agg((F.lit(0.001) * F.sum("val").cast("double"))
                   .alias("__thr"))
     return (vbp.crossJoin(F.broadcast(thr))

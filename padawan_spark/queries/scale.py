@@ -185,8 +185,11 @@ def scale_dedup_clusters(spark, sf_dir):
                     & (F.col("a.doc_id") < F.col("b.doc_id")))
              .select(F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"))
              .distinct())
+    # every round's job reads edges: pinned so the rounds do not rerun
+    # the minhash -> bands -> pairs pipeline
     edges = pairs.unionByName(
-        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))).cache()
+        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    ).localCheckpoint(eager=False)
 
     # The loop runs over the CONNECTED SUBGRAPH only: a document with no
     # candidate edge keeps cluster_id = doc_id forever, and near-dup
@@ -238,7 +241,6 @@ def scale_dedup_clusters(spark, sf_dir):
             break
     isolated = (docs.join(active, "doc_id", "left_anti")
                 .withColumn("label", F.col("doc_id")))
-    edges.unpersist()
     return (labels.unionByName(isolated)
             .select("doc_id", F.col("label").cast("bigint").alias("cluster_id")))
 

@@ -139,14 +139,10 @@ FROM dots GROUP BY label
 """)
 def sim_label_centroids(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings", wide=True)
-    # materialized once (r16, guide §5): comp feeds both the centroid
-    # aggregation and the member-to-centroid join — Catalyst does not
-    # dedupe the shared explode subtree, so it otherwise runs twice
     comp = (e.select(
         "vec_id", "label",
         F.posexplode(F.col("embedding").cast("array<double>"))
-        .alias("pos", "val")).withColumn("dim", F.col("pos") + 1).drop("pos")
-        .localCheckpoint(eager=True))
+        .alias("pos", "val")).withColumn("dim", F.col("pos") + 1).drop("pos"))
     d9 = "decimal(38,9)"
     cent = (comp.groupBy("label", "dim")
             .agg((F.sum(F.col("val").cast(d9)).cast("double")
@@ -386,12 +382,8 @@ def sim_kmeans_train(spark, sf_dir):
     centroids localCheckpoint per round (O(1) plan depth, same policy
     as graph_pagerank)."""
     e = load(spark, sf_dir, "embeddings", wide=True)
-    # eager localCheckpoint, not .cache() (r16, guide §5): the old
-    # .cache() + unpersist-before-return pair deregistered the cache at
-    # plan-build time, before the returned DataFrame ever ran — the
-    # action then re-scanned the parquet and re-cast per reference
-    # (2 per round + cent0 ≈ 5 passes).  The checkpoint pins the
-    # vector table to this invocation's RDDs exactly once.
+    # pinned: every round (two references each) and cent0 read the
+    # vector table, which is scanned and cast once
     vec = (e.select("vec_id",
                     F.col("embedding").cast("array<double>").alias("x"))
            .localCheckpoint(eager=True))
@@ -527,16 +519,12 @@ def sim_pq_encode(spark, sf_dir):
     """
     d9 = "decimal(38,9)"
     e = load(spark, sf_dir, "embeddings", wide=True)
-    # materialized once (r16, guide §5): comp feeds both the codebook
-    # aggregation and the distance join — Catalyst does not dedupe the
-    # shared explode subtree, so it otherwise runs twice
     comp = (e.select("vec_id", "label",
                      F.posexplode(F.col("embedding").cast("array<double>"))
                      .alias("pos", "val"))
             .withColumn("dim", F.col("pos") + 1)
             .withColumn("sub", (F.col("pos") / _PQ_DSUB)
-                        .cast("int")).drop("pos")
-            .localCheckpoint(eager=True))
+                        .cast("int")).drop("pos"))
     codebook = (comp.groupBy(F.col("label").alias("code"), "sub", "dim")
                 .agg((F.sum(F.col("val").cast(d9)).cast("double")
                       / F.count(F.lit(1))).alias("cval")))
@@ -598,12 +586,10 @@ def sim_pq_adc_topk(spark, sf_dir):
                      .alias("pos", "val"))
             .withColumn("dim", F.col("pos") + 1)
             .withColumn("sub", (F.col("pos") / _PQ_DSUB)
-                        .cast("int")).drop("pos").cache())
-    # codebook materialized ONCE (r17, guide §2.4/§5): it feeds TWO
-    # broadcast builds (dists and lut) and broadcast sides are exempt
-    # from AQE exchange reuse, so the aggregation over the full
-    # component table otherwise runs twice.  Lazy checkpoint: the first
-    # broadcast build materializes the 5120 rows.
+                        .cast("int")).drop("pos"))
+    # pinned (lazily: the first broadcast build fills it): two broadcast
+    # builds read the codebook, and AQE does not share the aggregation
+    # below them
     codebook = (comp.groupBy(F.col("label").alias("code"), "sub", "dim")
                 .agg((F.sum(F.col("val").cast(d9)).cast("double")
                       / F.count(F.lit(1))).alias("cval"))
@@ -708,22 +694,16 @@ def sim_ann_ivfpq(spark, sf_dir):
                      .alias("pos", "val"))
             .withColumn("dim", F.col("pos") + 1)
             .withColumn("sub", (F.col("pos") / _PQ_DSUB)
-                        .cast("int")).drop("pos").cache())
-    # PQ codebook, materialized ONCE (r17, guide §2.4/§5): it is
-    # referenced by THREE broadcast builds (the dists join, the lut
-    # join, and the coarse-centroid projection below) and broadcast
-    # sides are exempt from AQE runtime exchange reuse, so the
-    # un-materialized r16 plan ran the (label, sub, dim) aggregation
-    # over the full component table three times — stage profiling
-    # showed those duplicate partial-agg passes at ~22 of the query's
-    # 41 executor-task-seconds.  Lazy checkpoint: the first broadcast
-    # build triggers the single materialization (5120 rows).
+                        .cast("int")).drop("pos"))
+    # pinned (lazily: the first broadcast build fills it): three
+    # broadcast builds read the codebook, and AQE does not share the
+    # aggregation below them
     codebook = (comp.groupBy(F.col("label").alias("code"), "sub", "dim")
                 .agg((F.sum(F.col("val").cast(d9)).cast("double")
                       / F.count(F.lit(1))).alias("cval"))
                 .localCheckpoint(eager=False))
     # coarse quantizer: the full-width centroid table IS the codebook
-    # re-keyed (r17): `sub` is a pure function of `dim` (sub =
+    # re-keyed: `sub` is a pure function of `dim` (sub =
     # (dim-1)//8), so grouping by (label, sub, dim) == grouping by
     # (label, dim) — same groups, same SUM(CAST(val AS DECIMAL(38,9)))
     # / COUNT(*), bit-identical gcval.  The oracle computes the two

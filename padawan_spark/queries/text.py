@@ -240,16 +240,8 @@ def text_tfidf(spark, sf_dir):
     from pyspark.sql.window import Window
     d = load(spark, sf_dir, "documents", wide=True)
     toks = d.select("doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("term"))
-    # tf MATERIALIZED once (r16, guide §5): it feeds both the scored
-    # join and the df aggregation below — Catalyst does not dedupe the
-    # shared scan+explode+agg subtree, so without this the corpus is
-    # tokenized twice.  At 100 TB this is the persisted tf table of a
-    # real pipeline; eager localCheckpoint pins it per invocation.
-    # (r16 refinement note: dropping this checkpoint was measured at
-    # 29.1 vs 13.0 task-sec — the df reference sits under a
-    # BroadcastExchange, where runtime exchange reuse does not dedupe
-    # the tokenize subtree — so unlike the dedup-suite sh tables this
-    # materialization stays.)
+    # pinned: the df reference sits under a broadcast exchange, so AQE
+    # exchange reuse would not stop the corpus being tokenized twice
     tf = (toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
           .localCheckpoint(eager=True))
     # df DERIVED from tf (r16, guide §2.3/§2.4): tf already holds one row
@@ -643,14 +635,10 @@ def text_bigram_logprob(spark, sf_dir):
     unic = uni.groupBy("w").agg(F.count(F.lit(1)).alias("cw"))
     nuni = unic.agg(F.sum("cw").alias("total"),
                     F.count(F.lit(1)).alias("vocab"))
-    # bi MATERIALIZED once (r16, guide §5): it feeds both the bigram
-    # count table and the scoring join — without this the
-    # sequence+transform bigram explode runs twice over the corpus
-    bi = (t.select("doc_id", F.explode(F.expr(
+    bi = t.select("doc_id", F.explode(F.expr(
         "transform(sequence(1, size(toks) - 1),"
         " i -> concat(element_at(toks, i), ' ',"
         " element_at(toks, i + 1)))")).alias("bg"))
-        .localCheckpoint(eager=True))
     bic = bi.groupBy("bg").agg(F.count(F.lit(1)).alias("cbg"))
     w1 = F.split(F.col("bg"), " ").getItem(0)
     scored = (bi
@@ -710,11 +698,9 @@ def text_cooccurrence(spark, sf_dir):
     pair aggregation.  Counts are integers; lift is a single division
     rounded for the hash gate."""
     d = load(spark, sf_dir, "documents", wide=True)
-    # words MATERIALIZED once (r16, guide §5): it feeds both the top-K
-    # vocabulary aggregate and the pair join's base — without this the
-    # explode + distinct shuffle runs twice; vw (K-vocab-filtered,
-    # small) is pinned too so the self-join's two references don't run
-    # the broadcast join twice.
+    # pinned: words feeds the broadcast top-K vocabulary and the join
+    # it filters, and vw both sides of the self-join; exchange reuse does
+    # not reach under the broadcast, so each unpinned table runs twice
     words = (d.select("doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("word"))
              .distinct().localCheckpoint(eager=True))
     vocab = (words.groupBy("word").agg(F.count(F.lit(1)).alias("dfreq"))

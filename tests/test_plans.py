@@ -609,18 +609,17 @@ def test_feature_hashing_partial_agg_single_scan(spark):
 def test_lttb_no_flat_series_window(spark):
     # the rank must come from the two-level (series, day) window — a flat
     # partitionBy(event_type) sort would serialize each series onto one
-    # task; plan must hash-partition on (event_type, day) somewhere.
-    # r16: the query materializes the bucket table once (localCheckpoint),
-    # so the rank subtree no longer appears in the final plan — pin the
-    # helper that builds it instead.
-    from padawan_spark.queries.events import _lttb_buckets
-    a = audit(_lttb_buckets(spark, SF))
-    assert "hashpartitioning(event_type#" in a.plan.replace(" ", "") \
-        or "event_type" in a.plan  # structural floor
-    low = a.plan.lower()
-    assert "day" in low, a.plan
-    assert not a.has_cartesian
-    # and the full query stays cartesian-free
+    # task.  Every row_number window of the query partitions by more
+    # than the series, and the rank's partitions by (event_type, day).
+    import re
+    from padawan_spark.plans.audit import physical_plan
+    p = physical_plan(QUERIES["ev_downsample_lttb"](spark, SF),
+                      mode="simple")
+    specs = [[c.split("#")[0] for c in spec.split(", ")]
+             for spec in re.findall(
+                 r"Window \[row_number\(\).*?\], \[([^\]]*)\]", p)]
+    assert ["event_type", "day"] in specs, specs
+    assert ["event_type"] not in specs, specs
     assert not plan_of(spark, "ev_downsample_lttb").has_cartesian
 
 
@@ -743,6 +742,59 @@ def test_pruned_scan_read_prunes_before_scan(spark):
     a = plan_of(spark, "op_pruned_scan_read")
     assert a.pushed("o_orderdate")
     assert not a.has_cartesian
+
+
+@pytest.mark.parametrize("name", [
+    "dedup_minhash_lsh", "dedup_blocking_stats", "dedup_incremental",
+    "dedup_funnel", "scale_dedup_clusters", "dedup_simhash_pairs",
+    "dedup_minhash_estimate", "graph_triangle_count", "sim_pq_adc_topk",
+    "sim_ann_ivfpq"])
+def test_query_leaves_no_cache_manager_entry(spark, name):
+    """Queries that read one subtree from several places share it through
+    exchange reuse or a per-call localCheckpoint, never through the
+    session-wide CacheManager: its entries outlive the call, and the
+    next call of the same plan reads them warm."""
+    spark.catalog.clearCache()
+    QUERIES[name](spark, SF).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), name
+
+
+def test_load_infers_schema_once_per_file(spark, tmp_path):
+    """``load`` runs Spark's footer-inference job on the first read of a
+    file only, and infers again once the file is rewritten."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from padawan_spark.queries.registry import load
+
+    sc = spark.sparkContext
+    path = tmp_path / "nation.parquet"
+    shutil.copy(f"{SF}/nation.parquet", path)
+
+    def load_and_count_jobs(group):
+        sc.setJobGroup(group, group)
+        try:
+            df = load(spark, str(tmp_path), "nation")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    first, first_jobs = load_and_count_jobs(f"{tmp_path}-1")
+    second, second_jobs = load_and_count_jobs(f"{tmp_path}-2")
+    assert (first_jobs, second_jobs) == (1, 0)
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+    t = pq.read_table(path)
+    pq.write_table(t.append_column("n_extra", pa.array(range(t.num_rows))),
+                   path)
+    third, third_jobs = load_and_count_jobs(f"{tmp_path}-3")
+    assert third_jobs == 1
+    assert third.columns == first.columns + ["n_extra"]
+    assert third.count() == t.num_rows
 
 
 def test_build_head_latest_round_wins(tmp_path):
