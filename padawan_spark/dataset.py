@@ -724,7 +724,7 @@ class Dataset:
                              AppendError,
                              f"index columns differ: {old.index_columns} vs "
                              f"{self.index_columns}")
-                    _commit(self.spark, path, self.df, self.index_columns,
+                    _commit(self.spark, path, [self.df], self.index_columns,
                             self._check_evolution(old, merge_schema),
                             old=old, keep=range(len(old.files)),
                             manifest_table=manifest_table)
@@ -733,7 +733,7 @@ class Dataset:
         else:
             if os.path.exists(path):
                 shutil.rmtree(path)
-            _commit(self.spark, path, self.df, self.index_columns,
+            _commit(self.spark, path, [self.df], self.index_columns,
                     self.df.schema.json(), manifest_table=manifest_table)
         return scan_parquet(self.spark, path)
 
@@ -970,13 +970,15 @@ def _file_stats(spark: SparkSession, files: list[str], ix: Sequence[str],
                         _file_path(), ix)
 
 
-def _commit(spark: SparkSession, path: str, df: DataFrame | None,
+def _commit(spark: SparkSession, path: str, frames: list[DataFrame] | None,
             index_columns, schema_json: str | None, old=None, keep=(),
             manifest_table: bool = False) -> None:
     """The commit every table writer ends with.
 
-    ``df`` is appended to ``path`` as new data files; ``df=None`` adopts
-    every parquet file already there.  Only the added files are statted, and
+    Each of ``frames`` is appended to ``path`` in turn as new data files
+    (``frames=None`` adopts the parquet files already there); a failed
+    write removes what earlier frames added, which no manifest lists and
+    ``vacuum`` would never reclaim.  Only added files are statted, and
     empty ones are dropped (``dataset.py:340-347``).  The new manifest
     lists ``old``'s files at the positions in ``keep``, then the added
     files; ``schema_json=None`` records the added files' schema (still
@@ -985,10 +987,14 @@ def _commit(spark: SparkSession, path: str, df: DataFrame | None,
     rewritten when asked for or already present, so ``scan_parquet`` and
     ``scan_parquet_pruned`` always see the same files.  Writers that
     read-modify-write the manifest call this inside the commit lock."""
-    before = set()
-    if df is not None:
-        before = set(_list_parquet(path))
-        df.write.mode("append").parquet(path)
+    before = set() if frames is None else set(_list_parquet(path))
+    try:
+        for df in frames or ():
+            df.write.mode("append").parquet(path)
+    except BaseException:
+        for f in set(_list_parquet(path)) - before:
+            os.remove(os.path.join(path, f))
+        raise
     paths = {f: os.path.abspath(os.path.join(path, f))
              for f in _list_parquet(path) if f not in before}
     stats = _file_stats(spark, list(paths.values()), index_columns,
@@ -1242,8 +1248,8 @@ def compact_parquet(spark: SparkSession, path: str,
         old = _meta.load_manifest(path)
         ds = _manifest_dataset(spark, path, old)
         comp = ds.collate(rows_per_partition)
-        _commit(spark, path, comp.df, old.index_columns, ds.df.schema.json(),
-                old=old)
+        _commit(spark, path, [comp.df], old.index_columns,
+                ds.df.schema.json(), old=old)
     return scan_parquet(spark, path)
 
 
@@ -1292,7 +1298,7 @@ def delete_rows(spark: SparkSession, path: str, lb=None, ub=None,
         rewritten = _read_files(spark, [os.path.join(path, f)
                                         for f in affected],
                                 old.schema, survives)
-        _commit(spark, path, rewritten, ix, old.schema_json, old=old,
+        _commit(spark, path, [rewritten], ix, old.schema_json, old=old,
                 keep=untouched)
     return scan_parquet(spark, path)
 
@@ -1302,27 +1308,26 @@ def merge_rows(spark: SparkSession, path: str, batch: "Dataset") -> Dataset:
     DELETE+INSERT in one commit: every ``batch`` row replaces the
     table row with the same index key (if any); the rest insert.
 
-    Copy-on-write like :func:`delete_rows`: the rewrite set is the
-    files that actually CONTAIN a batch key — envelope overlap against
-    the manifest picks candidates (file-count work, no table scan),
-    then ONE broadcast join of the small-by-contract batch keys against
-    a (file, bounds) table tests per-file key membership, so a 2-key
-    batch at opposite table ends rewrites 2 files, not every file the
-    min/max envelope spans.
-    Surviving rows — a left-anti join against the batch's keys over
-    ONLY the affected files — union with the batch and re-collate into
-    fresh range-disjoint files, collated per REGION (the gaps between
-    kept files) so the rewritten files never straddle a kept file's
-    range.  Untouched files stay byte-identical, and older pins
-    (``scan_parquet(version=k)``) keep reading their exact snapshot
-    until :func:`padawan_spark.metadata.vacuum`.
+    Copy-on-write like :func:`delete_rows`: envelope overlap against the
+    manifest picks candidate files (no table scan), then ONE broadcast join
+    of the small-by-contract batch keys against a (file, bounds) table keeps
+    the files that CONTAIN a batch key, so a 2-key batch at opposite table
+    ends rewrites 2 files, not every file the min/max envelope spans.
+    Surviving rows — a left-anti join against the batch's keys over ONLY the
+    affected files — union with the batch and are written per REGION (the
+    gaps between kept files) as fresh range-disjoint files that never
+    straddle a kept file's range.  Untouched files stay byte-identical, and
+    older pins (``scan_parquet(version=k)``) keep reading their exact
+    snapshot until :func:`padawan_spark.metadata.vacuum`.
 
-    Scale shape: cost is O(files touched + batch), never O(table); a
-    daily upsert against a date-collated 100 TB corpus rewrites one
-    day of files, and a scattered batch rewrites only the files its
-    keys land in (two fixed-size metadata probe jobs total, however
-    many candidates).  The whole read-manifest → rewrite → publish sequence
-    holds the commit lock, same as append/compact/delete."""
+    Batch columns are cast to the table's recorded types, as an INSERT
+    casts to its target; a value that does not fit raises and publishes
+    no version.  An append rejects a type change instead: it may evolve
+    the schema, so there a type change is a schema change.
+
+    Scale shape: O(files touched + batch), never O(table), with two
+    fixed-size metadata probe jobs however many candidates.  The whole
+    read-manifest → rewrite → publish sequence holds the commit lock."""
     _require(_meta.has_manifest(path), ValueError,
              f"merge_rows requires a manifest at {path}")
     with _meta.commit_lock(path, "merge"):
@@ -1457,9 +1462,16 @@ def merge_rows(spark: SparkSession, path: str, batch: "Dataset") -> Dataset:
         # must still be replaced by a null-keyed batch row — plain-equality
         # anti-join would keep it and duplicate the key
         _anti = _ord.keys_eq(ix, "t", "b")
-        parts = []
+        # the batch takes the table's recorded column types, as Spark's
+        # INSERT casts to its target; a value that does not fit raises
+        conform = ([F.col(c).cast(old.schema[c].dataType) for c in table_cols]
+                   if old.schema_json else table_cols)
+        # each region is written as its own frame: a Union of the regions'
+        # range exchanges could be coalesced by AQE into a partition that
+        # straddles the spared files between two regions
+        frames = []
         for rr in work:
-            part = batch.df.where(_region_pred(rr)).select(*table_cols)
+            part = batch.df.where(_region_pred(rr)).select(*conform)
             files_r = region_files.get(rr, [])
             if files_r:
                 surv = (_read_files(spark, [os.path.join(path, old.files[i])
@@ -1468,23 +1480,9 @@ def merge_rows(spark: SparkSession, path: str, batch: "Dataset") -> Dataset:
                         .join(batch_keys.alias("b"), on=_anti,
                               how="left_anti"))
                 part = surv.select(*table_cols).unionByName(part)
-            parts.append(Dataset(spark, part, index_columns=ix
-                                 ).reindex(ix).repartition(rpp))
-        if len(parts) == 1:
-            merged_ds = parts[0]
-        else:
-            # pin each region's range partitioning before the union: AQE
-            # coalesces a Union of shuffle exchanges across children, and
-            # a fused partition spanning two regions would straddle the
-            # spared files between them — breaking range-disjointness.
-            # localCheckpoint materializes the partitioning (same trick
-            # as repartition's sample_fraction path); regions are small
-            # (O(files touched + batch)), so the extra materialization
-            # is bounded by the rewrite itself.
-            merged_ds = concat([
-                Dataset(spark, d.df.localCheckpoint(eager=True),
-                        index_columns=ix) for d in parts])
-        _commit(spark, path, merged_ds.df, ix, old.schema_json, old=old,
+            frames.append(Dataset(spark, part, index_columns=ix)
+                          .repartition(rpp).df)
+        _commit(spark, path, frames, ix, old.schema_json, old=old,
                 keep=untouched)
     return scan_parquet(spark, path)
 
@@ -1695,7 +1693,7 @@ def refresh_aggregate(spark: SparkSession, source_path: str,
                       target_path: str, keys: Sequence[str],
                       sum_cols: Sequence[str] = ()) -> Dataset:
     """Incrementally maintained materialized aggregate — the flagship
-    consumer of :func:`read_changes` (r8).
+    consumer of :func:`read_changes`.
 
     Maintains ``target_path`` as a lakehouse table indexed by ``keys``
     holding ``cnt`` (source row count per group) and ``sum_<c>`` for
@@ -1789,7 +1787,7 @@ def _bloom_positions(spark: SparkSession, value, m: int, k: int,
 def build_bloom_index(spark: SparkSession, path: str, column: str,
                       m: int = 1 << 16, k: int = 4) -> dict:
     """Per-FILE Bloom-filter index over a NON-index column (the
-    Delta/Hudi bloom-index idea, r8): manifest range pruning answers
+    Delta/Hudi bloom-index idea): manifest range pruning answers
     index-column predicates; point lookups on any other column
     otherwise scan every file.  One distributed pass computes each
     file's m-bit bloom of ``column`` (k xxhash64 probes per value) as
@@ -1878,7 +1876,7 @@ def scan_point_lookup(spark: SparkSession, path: str, column: str,
 
 
 def describe_history(spark: SparkSession, path: str) -> DataFrame:
-    """Table history (the DESCRIBE HISTORY operational surface, r8):
+    """Table history (the DESCRIBE HISTORY operational surface):
     one row per snapshot with its file count, total bytes (when the
     manifest records sizes), and the file delta against the previous
     snapshot — derived purely from the archived manifests, O(files)
@@ -1907,7 +1905,7 @@ FOOTER_STATS_SCHEMA = ("file string, row_group int, column string, "
 
 
 def scan_parquet_footers(spark: SparkSession, files) -> DataFrame:
-    """Distributed parquet FOOTER statistics scan (r8): one row per
+    """Distributed parquet FOOTER statistics scan: one row per
     (file, row group, column) with value counts, null counts, and
     min/max statistics — the debugging/ops view behind every pruning
     decision ("why didn't this row group get skipped?").  The file

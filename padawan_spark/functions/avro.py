@@ -63,7 +63,7 @@ def _norm_type(t):
 
 def read_datum(b: bytes, pos: int, typ):
     """Generic datum decoder over the FULL recursive type grammar
-    (r8, needed for Iceberg manifests): records -> dicts, arrays ->
+    (needed for Iceberg manifests): records -> dicts, arrays ->
     lists, maps -> dicts, fixed -> bytes, plus all primitives and
     [null, T] unions."""
     typ, null_idx = _norm_type(typ)
@@ -304,7 +304,7 @@ def _decode_blocks(b: bytes, pos: int, end: int, specs, codec,
                     if idx == null_idx:   # the declared null branch
                         row.append(None)
                         continue
-                # complex types (record/array/map — r13, nested
+                # complex types (record/array/map — nested
                 # columns) route through the generic datum decoder
                 v, bp = (_read_value(block, bp, typ)
                          if isinstance(typ, str)
@@ -401,7 +401,7 @@ def encode_avro_py(fields, rows, codec: str = "null",
                    field_ids: dict | None = None) -> bytes:
     """Build a container file; ``fields`` is ``[(name, type,
     nullable)]``.  Fixture/round-trip twin of :func:`decode_avro_py`.
-    ``field_ids`` (r11): ``{name: id}`` stamps each field with the
+    ``field_ids``: ``{name: id}`` stamps each field with the
     ``field-id`` attribute Iceberg's Avro writers record — what lets
     an evolved reader resolve columns by id."""
     import zlib
@@ -434,7 +434,7 @@ def encode_avro_py(fields, rows, codec: str = "null",
                 if isinstance(typ, str):
                     _write_value(body, v, typ)
                 else:
-                    write_datum(body, v, typ)   # nested (r13)
+                    write_datum(body, v, typ)   # nested
         payload = (zlib.compress(bytes(body))[2:-4] if codec == "deflate"
                    else bytes(body))
         out += _zigzag_encode(len(chunk))
@@ -449,7 +449,7 @@ AVRO_TO_SPARK = {"boolean": "boolean", "int": "int", "long": "bigint",
 
 
 def avro_type_ddl(t) -> str:
-    """Avro type -> Spark DDL, recursive (r13: record/array/map —
+    """Avro type -> Spark DDL, recursive (record/array/map —
     nested Avro columns read natively); [null, T] unions unwrap;
     ``fixed`` scans as binary; logical-type annotations gate."""
     t, _nl = _norm_type(t)

@@ -18,15 +18,15 @@ retention-cleaned still reads correctly), and deletion vectors
 column mapping (physical ``col-<uuid>`` parquet columns aliased back
 to logical names via the schemaString's per-field
 ``delta.columnMapping.physicalName`` metadata; partition columns and
-partitionValues are physically keyed too), and ``id``-mode mapping
-(r9): each data file's parquet footer field ids are matched to the
+partitionValues are physically keyed too), and ``id``-mode mapping:
+each data file's parquet footer field ids are matched to the
 schemaString's ``delta.columnMapping.id`` values, files are grouped
 by physical layout, and each group scans with its own physical DDL —
 so files whose physical names differ (e.g. written by different
-engines) still read correctly.  V2 checkpoints (r9): the UUID-named
+engines) still read correctly.  V2 checkpoints: the UUID-named
 top-level checkpoint plus ``_sidecars/`` parquet files replay
 driver-side like classic ones — in BOTH spec-legal top-file formats,
-parquet and JSON lines (r12).
+parquet and JSON lines.
 """
 
 from __future__ import annotations
@@ -50,7 +50,7 @@ def list_delta_versions(path: str) -> list[int]:
 
 
 def resolve_delta_version_at(path: str, ts_ms: int) -> int:
-    """Timestamp time travel (r12): the LATEST commit at or before
+    """Timestamp time travel: the LATEST commit at or before
     ``ts_ms``, resolved the way delta readers do — from each
     commit's ``inCommitTimestamp`` (commitInfo action) when the
     table records one, else the commit JSON file's modification
@@ -59,8 +59,8 @@ def resolve_delta_version_at(path: str, ts_ms: int) -> int:
     timestamp left to compare, matching real behavior: time travel
     reaches only the retained history.
 
-    Timestamps are made MONOTONIC the way Delta readers do (r13,
-    ADVICE): each commit's effective timestamp is
+    Timestamps are made MONOTONIC the way Delta readers do:
+    each commit's effective timestamp is
     ``max(previous + 1ms, recorded)`` — so clock-skewed file mtimes
     (v1 older than v0) can never resolve an earlier version than a
     later one, which would otherwise time-travel to a state the
@@ -103,7 +103,7 @@ def _list_checkpoints(path: str):
     -> the UUID-named top-level file, PARQUET or JSON format (both
     spec-legal for v2: ``<v>.checkpoint.<uuid>.parquet`` /
     ``.json``), whose ``sidecar`` actions point into
-    ``_delta_log/_sidecars/`` (sidecars are always parquet, r12)."""
+    ``_delta_log/_sidecars/`` (sidecars are always parquet)."""
     d = os.path.join(path, "_delta_log")
     classic: dict[int, list[str]] = {}
     v2: dict[int, str] = {}
@@ -165,18 +165,18 @@ class _Replay:
         elif action.get("protocol"):
             p = action["protocol"]
             feats = set(p.get("readerFeatures") or [])
-            # typeWidening (r14, VERDICT r13 task 2): each data
+            # typeWidening: each data
             # file scans with the TABLE's (wider) schema and the
             # vectorized parquet reader performs the per-file
             # promotion (byte->short->int->long, float->double,
             # int->double, date->timestamp_ntz, decimal widening)
             # natively — and fails CLOSED on a non-widenable
             # physical/logical mismatch, naming the column
-            # variantType (r14): Spark 4 reads parquet VARIANT
+            # variantType: Spark 4 reads parquet VARIANT
             # natively, so a `variant` leaf in the schemaString scans
             # straight through the declared-schema path; id-mode
             # column mapping over VARIANT resolves through the
-            # in-repo thrift footer walk (r15 — pyarrow refuses the
+            # in-repo thrift footer walk (pyarrow refuses the
             # VARIANT logical type, functions/parquetfooter.py
             # recovers the field-id tree)
             unsupported = feats - {"deletionVectors", "v2Checkpoint",
@@ -222,12 +222,12 @@ def _replay_checkpoint(state: _Replay, part_files: list[str]) -> None:
 
 def _replay_v2_checkpoint(state: _Replay, table: str,
                           top_file: str) -> None:
-    """Fold a V2 checkpoint (r9): the UUID-named top-level file holds
+    """Fold a V2 checkpoint: the UUID-named top-level file holds
     protocol/metaData (+ possibly inlined file actions) and
     ``sidecar`` actions pointing at parquet files under
     ``_delta_log/_sidecars/`` that carry the add/remove set — the
     layout modern writers emit with the ``v2Checkpoint`` feature.
-    The top file comes in BOTH spec formats (r12): parquet
+    The top file comes in BOTH spec formats: parquet
     (action-typed columns) or JSON (one action object per line);
     sidecars are always parquet.  Driver-side, O(actions)."""
     import pyarrow.parquet as pq
@@ -270,7 +270,7 @@ def replay_delta_log(path: str, version: int | None = None,
     where ``files`` is a list of ``(relative_path,
     partition_values_dict, deletion_vector_descriptor_or_None)`` and
     ``column_mapping_mode`` is ``"none"``, ``"name"`` or ``"id"``.
-    ``with_row_ids=True`` (row tracking, r16) instead returns
+    ``with_row_ids=True`` (row tracking) instead returns
     ``(schema_json, partition_columns, files5, mapping, config)``
     with 5-tuple files carrying each add action's ``baseRowId`` and
     ``defaultRowCommitVersion`` and the metaData ``configuration``
@@ -335,7 +335,7 @@ def replay_delta_log(path: str, version: int | None = None,
 def _delta_type_ddl(t) -> str:
     """Delta schemaString type -> Spark DDL type.  Delta's
     schemaString IS Spark's schema JSON, so struct/array/map recurse
-    directly (r13, VERDICT task 1); flat types (incl. decimal) pass
+    directly; flat types (incl. decimal) pass
     through."""
     from .nested import spark_json_type_ddl
     return spark_json_type_ddl(t)
@@ -343,7 +343,7 @@ def _delta_type_ddl(t) -> str:
 
 def _contains_variant(t) -> bool:
     """True when the schemaString type carries a VARIANT leaf at any
-    depth — the one leaf pyarrow's footer reader cannot open (r14)."""
+    depth — the one leaf pyarrow's footer reader cannot open."""
     if isinstance(t, str):
         return t == "variant"
     k = t.get("type")
@@ -401,17 +401,17 @@ def read_delta(spark, path: str, version: int | None = None,
     small — the DV'd files still read in the same distributed scan,
     no rewrite, and files without DVs skip the join entirely.
 
-    ``filters`` (r10): ``{partition_column: value}`` equality
+    ``filters``: ``{partition_column: value}`` equality
     predicates prune the FILE LIST on the driver through each add
     action's ``partitionValues`` — Delta's partition pruning, so a
     point lookup on a partitioned key plans O(files-in-partition),
     not O(table) — then re-apply as row predicates (free exactness;
     non-partition columns in ``filters`` simply skip pruning and
-    filter rows).  ``as_of_ms`` (r12) time-travels by TIMESTAMP the
+    filter rows).  ``as_of_ms`` time-travels by TIMESTAMP the
     way delta readers do — inCommitTimestamp when recorded, commit
     file mtime otherwise.
 
-    ``row_tracking=True`` (r16 — the Delta analog of Iceberg row
+    ``row_tracking=True`` (the Delta analog of Iceberg row
     lineage) appends the spec's ``_row_id`` and
     ``_row_commit_version`` columns: each is the MATERIALIZED hidden
     column when the file carries one (rewritten files preserve
@@ -476,7 +476,7 @@ def read_delta(spark, path: str, version: int | None = None,
                    if f["name"] not in logical_parts]
 
     def _ptype(f):
-        # physical TYPE of a column (r13): in a mapped table, struct
+        # physical TYPE of a column: in a mapped table, struct
         # fields inside nested columns are renamed to their
         # physicalName at EVERY level; unmapped tables read logical
         from .nested import delta_physical_type
@@ -528,14 +528,13 @@ def read_delta(spark, path: str, version: int | None = None,
         # footer, not by name — files from different writers (e.g. an
         # Iceberg conversion) may use different physical names for
         # the same logical column; the ids are the stable key.  ONE
-        # distributed footer job resolves every file's layout (r10 —
-        # never a driver-side open per data file); the footer TREES
-        # carry nested ids too (r13), so renamed struct fields INSIDE
+        # distributed footer job resolves every file's layout (never
+        # a driver-side open per data file); the footer TREES
+        # carry nested ids too, so renamed struct fields INSIDE
         # a column resolve per file as well.
-        # VARIANT columns no longer gate here (r15, VERDICT r14 task
-        # 4): the footer tap falls back to the in-repo thrift walk
-        # (functions/parquetfooter.py) when pyarrow refuses the
-        # VARIANT logical type
+        # VARIANT columns do not gate here: the footer tap falls back
+        # to the in-repo thrift walk (functions/parquetfooter.py) when
+        # pyarrow refuses the VARIANT logical type
         from .nested import match_tree_delta, parquet_field_trees
         raw = parquet_field_trees(
             spark, [p for p, _pv, _dv in files_abs])
@@ -546,8 +545,8 @@ def read_delta(spark, path: str, version: int | None = None,
                 fid = (f.get("metadata") or {}).get(
                     "delta.columnMapping.id")
                 if fid is None:
-                    # the deliberate gate, not a bare KeyError
-                    # (ADVICE r13): an id-mapped table whose field
+                    # the deliberate gate, not a bare KeyError:
+                    # an id-mapped table whose field
                     # lacks the id metadata is malformed
                     raise NotImplementedError(
                         f"id-mapped table field {f['name']!r} lacks "
@@ -568,7 +567,7 @@ def read_delta(spark, path: str, version: int | None = None,
             layouts[p] = tuple(sorted(m.items()))
     # ONE parquet scan per distinct PHYSICAL LAYOUT (a handful at
     # most — one per schema epoch), never per partition tuple: at 10k
-    # partitions a per-tuple union is a 10k-arm plan (r9 verdict #5).
+    # partitions a per-tuple union is a 10k-arm plan.
     # Partition values re-attach via a small broadcast
     # file→partition-values table joined on _metadata.file_path.
     groups: dict[tuple, list[str]] = {}
@@ -605,7 +604,7 @@ def read_delta(spark, path: str, version: int | None = None,
         df = spark.read.schema(ddl_g).parquet(*paths)
         # alias physical data columns back to their logical names;
         # nested columns additionally REBUILD their inner structure
-        # logically (r13) — JVM-side struct/transform expressions,
+        # logically — JVM-side struct/transform expressions,
         # identity when nothing inside was renamed
         for f in data_fields:
             pn, pt = lmap[f["name"]]
@@ -633,7 +632,7 @@ def read_delta(spark, path: str, version: int | None = None,
             f"`{c}` string" for c in logical_parts))
         pmap = F.broadcast(spark.createDataFrame(pmap_rows, pmap_ddl))
         out = out.join(pmap, on="__fp", how="left")
-        # ADVICE r10: the path-keyed attach join must fail CLOSED — a
+        # the path-keyed attach join must fail CLOSED — a
         # normalization miss (URI-escaped table path) would otherwise
         # silently null every partition value; the marker column
         # distinguishes a missed join from a genuinely-null value
@@ -675,7 +674,7 @@ def read_delta(spark, path: str, version: int | None = None,
     if has_dv:
         # DV positions decode in a DISTRIBUTED task per (file,
         # descriptor) — one row per deleted position, built on the
-        # executors (r10: never materialized on the driver) — then
+        # executors, never materialized on the driver — then
         # anti-join; AQE picks broadcast when the set is small.
         table_root = os.path.abspath(path)
 
@@ -750,7 +749,7 @@ def write_delta_fixture(spark, df, path: str, partition_by=(),
     phys = {c: (f"col-{uuid.uuid5(uuid.NAMESPACE_URL, c).hex[:12]}"
                 if cm_mode else c) for c in df.columns}
     fids = {c: i + 1 for i, c in enumerate(df.columns)}
-    # nested columns (r13): the schemaString needs the JSON type tree
+    # nested columns: the schemaString needs the JSON type tree
     # (Delta's schemaString is Spark's schema JSON); flat columns keep
     # the DDL string form for continuity
     json_types = {f["name"]: f["type"]
@@ -812,7 +811,7 @@ def write_delta_fixture(spark, df, path: str, partition_by=(),
                  "delta.columnMapping.maxColumnId": str(max_id)}
                 if cm_mode else {})
         if row_tracking:
-            # row tracking (r16): enabled + the MATERIALIZED hidden
+            # row tracking: enabled + the MATERIALIZED hidden
             # column names, the shape a real Delta writer records
             conf = {**conf, "delta.rowTracking.enabled": "true",
                     "delta.rowTracking."
@@ -823,11 +822,11 @@ def write_delta_fixture(spark, df, path: str, partition_by=(),
                         "_fixture_row_cv"}
         if any(_contains_variant(json_types[c]) for c in df.columns):
             # a real Delta 4 writer publishes variant tables at
-            # table-features protocol with variantType listed (r14);
-            # detection walks the schema-JSON type tree (ADVICE r14:
-            # a DDL substring match would also fire on a struct FIELD
-            # NAME containing "variant" and flip a plain table onto
-            # the JVM-writer path)
+            # table-features protocol with variantType listed;
+            # detection walks the schema-JSON type tree (a DDL
+            # substring match would also fire on a struct FIELD NAME
+            # containing "variant" and flip a plain table onto the
+            # JVM-writer path)
             rf = (["variantType", "columnMapping"] if cm_mode
                   else ["variantType"])
             actions.append({"protocol": {
@@ -875,7 +874,7 @@ def write_delta_fixture(spark, df, path: str, partition_by=(),
     if cm_mode == "id" and has_nested:
         # parquet field ids keyed by the WRITTEN (physical) path —
         # nested struct fields carry their schema-assigned ids so an
-        # id-matching reader resolves renames at every depth (r13)
+        # id-matching reader resolves renames at every depth
         def _collect_ids(t, prefix):
             if isinstance(t, str):
                 return
@@ -916,7 +915,7 @@ def write_delta_fixture(spark, df, path: str, partition_by=(),
         import pyarrow as pa
         import pyarrow.parquet as pq
         if any(_contains_variant(json_types[c]) for c in data_cols):
-            # VARIANT columns (r14): neither pandas nor this
+            # VARIANT columns: neither pandas nor this
             # container's pyarrow can carry variant values, so the
             # data file writes through Spark's OWN parquet writer —
             # the same binary layout a real Delta 4 writer emits —
@@ -926,7 +925,7 @@ def write_delta_fixture(spark, df, path: str, partition_by=(),
 
             from pyspark.sql import functions as SF
             if cm_mode == "id":
-                # id-mode (r15, VERDICT r14 task 4): the JVM writer
+                # id-mode: the JVM writer
                 # stamps parquet field ids from `parquet.field.id`
                 # field metadata — commit-varying physical names
                 # with stable ids, the same layout the pyarrow id
@@ -960,7 +959,7 @@ def write_delta_fixture(spark, df, path: str, partition_by=(),
                 "modificationTime": 0, "dataChange": True}})
             continue
         if has_nested:
-            # nested columns (r13): Arrow path — pandas cannot carry
+            # nested columns: Arrow path — pandas cannot carry
             # structs faithfully; logical -> physical renames happen
             # as JVM expressions before collection, and id mode
             # stamps nested parquet field ids from the schema
@@ -1110,9 +1109,9 @@ def materialize_delta_rowids_fixture(path: str) -> int:
         tb = pq.read_table(full)
         n = tb.num_rows
         # re-materializing an ALREADY-materialized file keeps its
-        # existing columns verbatim (they hold the rows' true ids —
-        # found by the r16 probe: a blind append duplicated the
-        # hidden column and broke every later read)
+        # existing columns verbatim (they hold the rows' true ids:
+        # a blind append would duplicate the
+        # hidden column and break every later read)
         if mat_rid not in tb.schema.names:
             tb = tb.append_column(
                 mat_rid, pa.array(np.arange(brid, brid + n),
@@ -1178,7 +1177,7 @@ def add_dv_fixture(path: str, dv_by_rel: dict[str, list[int]],
         actions.append({"remove": {"path": rel, "deletionTimestamp": 0,
                                    "dataChange": True}})
         # the DV re-add recommits the SAME file: its row-id
-        # assignment carries verbatim (r16 — dropping it would break
+        # assignment carries verbatim (dropping it would break
         # row-tracking reads after a DELETE)
         actions.append({"add": {"path": rel, "partitionValues": pv,
                                 "size": os.path.getsize(
@@ -1195,7 +1194,7 @@ def add_dv_fixture(path: str, dv_by_rel: dict[str, list[int]],
 
 
 def widen_delta_fixture(path: str, changes: dict[str, str]) -> int:
-    """FIXTURE: commit a ``typeWidening`` schema change (r14).
+    """FIXTURE: commit a ``typeWidening`` schema change.
     ``changes`` maps dotted column paths (``"a"``, ``"s.x"``) to
     their NEW, wider Delta type name.  Emits one metadata-only
     commit: the patched schemaString with per-field
@@ -1282,7 +1281,7 @@ def write_delta_checkpoint_fixture(path: str,
     checkpointMetadata plus ``sidecar`` pointers, with the add
     actions split across ``n_sidecars`` parquet files under
     ``_delta_log/_sidecars/``; ``json_format=True`` writes the v2
-    top file as JSON lines, the spec's other legal format (r12)."""
+    top file as JSON lines, the spec's other legal format."""
     import uuid as _uuid
 
     import pyarrow as pa
@@ -1415,7 +1414,7 @@ def remove_delta_files_fixture(path: str, match) -> int:
     """Fixture commit that REMOVEs every live file whose relative path
     satisfies ``match`` (a predicate on the path string).  Like the
     writer fixture, the next version continues after a
-    retention-cleaned log's checkpoint (r12: a clean may leave ZERO
+    retention-cleaned log's checkpoint (a clean may leave ZERO
     JSON commits behind)."""
     versions = list_delta_versions(path)
     classic, v2s = _list_checkpoints(path)
@@ -1434,7 +1433,7 @@ def remove_delta_files_fixture(path: str, match) -> int:
 
 def read_delta_changes(spark, path: str, starting_version: int = 0,
                        ending_version: int | None = None):
-    """Change Data Feed interop (r9): row-level changes between two
+    """Change Data Feed interop: row-level changes between two
     commit versions of an EXISTING Delta table, the way the protocol
     defines them — commits carrying ``cdc`` actions (files under
     ``_change_data/`` with a ``_change_type`` column: CDF-enabled
@@ -1444,11 +1443,11 @@ def read_delta_changes(spark, path: str, starting_version: int = 0,
     pre-vacuum, partition values recovered from the pre-remove
     state).  Output: data columns + ``_change_type`` +
     ``_commit_version``, one distributed scan per change file, no
-    driver row work.  Column-mapped tables are fully supported
-    (r10): ``name`` mode aliases physical columns back to logical;
+    driver row work.  Column-mapped tables are fully supported:
+    ``name`` mode aliases physical columns back to logical;
     ``id`` mode resolves each change file's physical layout by
     PARQUET FIELD ID through one distributed footer job
-    (:mod:`.layouts`).  Deletion-vector commits are SUPPORTED (r11):
+    (:mod:`.layouts`).  Deletion-vector commits are SUPPORTED:
     a same-commit remove+re-add of one path carrying a DV — the shape
     a modern DELETE writes — emits delete rows for exactly the
     newly-dead positions (new DV minus old DV), decoded in
@@ -1456,12 +1455,12 @@ def read_delta_changes(spark, path: str, starting_version: int = 0,
     semi/anti joins; a tombstoned DV'd file emits deletes only for
     its still-live rows.  File state entering the range initializes
     from the newest CHECKPOINT below ``starting_version`` when one
-    exists (r12, same contract as the stream source): a
+    exists (same contract as the stream source): a
     log-retention-cleaned table reads as long as the checkpoint
     covers the cleaned prefix.  Commits INSIDE the range still need
     their own JSON — a checkpoint compacts state and has no
     per-commit changes — and a cleaned in-range commit raises rather
-    than return a silently-partial feed (ADVICE r9)."""
+    than return a silently-partial feed."""
     from pyspark.sql import functions as F
     versions = list_delta_versions(path)
     if not versions:
@@ -1529,7 +1528,7 @@ def read_delta_changes(spark, path: str, starting_version: int = 0,
                 df = df.withColumnRenamed(phys[n], n)
             if remap_needed(ptypes[n], fld_json[n]["type"]):
                 # nested columns in a mapped table rebuild their
-                # inner structure logically (r13)
+                # inner structure logically
                 df = df.withColumn(
                     n, remap_expr(F.col(f"`{n}`"), ptypes[n],
                                   fld_json[n]["type"]))
@@ -1545,7 +1544,7 @@ def read_delta_changes(spark, path: str, starting_version: int = 0,
     live: dict[str, tuple] = {}   # rel -> (partitionValues, dv desc)
     if 0 < starting_version <= ending_version:
         # state entering the range from the checkpoint-aware replay —
-        # O(commits since checkpoint), works on cleaned logs (r12).
+        # O(commits since checkpoint), works on cleaned logs.
         # (an empty range needs no state: zero events below)
         _sj2, _pc2, files0, _m2 = replay_delta_log(
             path, version=starting_version - 1)
@@ -1575,7 +1574,7 @@ def read_delta_changes(spark, path: str, starting_version: int = 0,
         # modern DELETE leaves when it attaches a deletion vector
         # (remove old add + re-add the SAME file with the DV).  Its
         # change rows are the NEWLY-dead positions (new DV minus old
-        # DV), not a remove-all/insert-all pair (r11).
+        # DV), not a remove-all/insert-all pair.
         repl = ({ad["path"] for ad in adds_all}
                 & {rm["path"] for rm in removes_all})
         derived: list[tuple] = []
@@ -1589,7 +1588,7 @@ def read_delta_changes(spark, path: str, starting_version: int = 0,
                 stash[p] = (old_pv, old_dv)
                 continue
             if rm.get("dataChange", True):
-                # ADVICE r9: a tombstoned file whose rows were partly
+                # a tombstoned file whose rows were partly
                 # DV-deleted must not re-emit the already-dead rows
                 derived.append(("delete", p, old_pv, None, old_dv))
         for ad in adds_all:
@@ -1617,11 +1616,11 @@ def read_delta_changes(spark, path: str, starting_version: int = 0,
                        for kind, rel, pv, inc, exc in derived]
     # id mode: each change file's physical layout resolves by parquet
     # field id — ONE distributed footer job over every file in range;
-    # footer TREES carry nested ids too (r13)
+    # footer TREES carry nested ids too
     lmaps: dict[str, dict[str, tuple]] = {}
     if mapping == "id" and events:
         # VARIANT columns resolve through the thrift footer-walk
-        # fallback (r15) — no gate needed
+        # fallback — no gate needed
         from .nested import match_tree_delta, parquet_field_trees
         raw = parquet_field_trees(
             spark, [os.path.abspath(os.path.join(path, rel))
@@ -1635,7 +1634,6 @@ def read_delta_changes(spark, path: str, starting_version: int = 0,
                     "delta.columnMapping.id")
                 if fid is None:
                     # the deliberate gate, not a bare KeyError
-                    # (ADVICE r13)
                     raise NotImplementedError(
                         f"id-mapped table field {n!r} lacks "
                         "delta.columnMapping.id metadata")
@@ -1774,7 +1772,7 @@ def update_delta_cdc_fixture(spark, path: str, part_col: str,
         new = old.withColumn(
             set_col, F.col(set_col) + F.lit(add_amount))
         new_rel = f"part-{v:05d}-{uuid.uuid4().hex}.parquet"
-        # Arrow path (r13): nested columns survive the rewrite —
+        # Arrow path: nested columns survive the rewrite —
         # pandas cannot carry structs faithfully
         pq.write_table(new.toArrow(), os.path.join(path, new_rel))
         cdc_df = (old.withColumn("_change_type",
@@ -1802,7 +1800,7 @@ def update_delta_cdc_fixture(spark, path: str, part_col: str,
 
 
 def delta_history(spark, path: str):
-    """DESCRIBE HISTORY for a Delta table (r15): one row per RETAINED
+    """DESCRIBE HISTORY for a Delta table: one row per RETAINED
     commit — version, effective timestamp (the same monotonic
     ``inCommitTimestamp``/file-mtime rule timestamp time travel
     resolves by, so history and travel can never disagree), the
@@ -1849,7 +1847,7 @@ def delta_history(spark, path: str):
 
 
 def delta_detail(spark, path: str):
-    """DESCRIBE DETAIL for a Delta table (r15): a one-row DataFrame
+    """DESCRIBE DETAIL for a Delta table: a one-row DataFrame
     with the table-level facts real engines report — format, live
     file count and total size, LOGICAL partition columns (mapped
     back through column mapping), column-mapping mode, protocol
@@ -1896,7 +1894,7 @@ def delta_detail(spark, path: str):
 def delta_vacuum_plan(spark, path: str,
                       retention_ms: int = 7 * 24 * 3600 * 1000,
                       now_ms: int | None = None):
-    """Table MAINTENANCE (r16): the deletion plan ``VACUUM``
+    """Table MAINTENANCE: the deletion plan ``VACUUM``
     computes — data files under the table location that the CURRENT
     version does not reference, split into ``tombstoned`` (a
     ``remove`` action exists and its ``deletionTimestamp`` is older

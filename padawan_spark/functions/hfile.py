@@ -1,6 +1,6 @@
 """HFile (HBase file format v2/v3) codec, dependency-free — the base
-file format real Hudi uses for its internal ``.hoodie/metadata`` table
-(r12, VERDICT r11 task 4).  Only what a metadata-table FILES-partition
+file format real Hudi uses for its internal ``.hoodie/metadata`` table.
+Only what a metadata-table FILES-partition
 read needs: sorted key/value cells out of DATA blocks, plus the
 file-info map (Hudi stores the records' Avro schema there under the
 ``schema`` key, where ``HoodieHFileWriter.appendFileInfo`` puts it).
@@ -40,7 +40,7 @@ and LZ4 block compression are handled (Snappy and LZ4 through
 dependency-free raw decoders under Hadoop's BlockCompressorStream
 framing), and ``ENCODED_DATA`` blocks decode for the THREE delta
 encodings real deployments use — ``PREFIX``, ``DIFF`` and
-``FAST_DIFF`` (r13, VERDICT r12 task 3 — the DATA_BLOCK_ENCODING
+``FAST_DIFF`` (the DATA_BLOCK_ENCODING
 HBase-tuned Hudi metadata tables actually enable); other codecs and
 encodings (LZO/ZSTD, PREFIX_TREE/ROW_INDEX_V1) raise
 ``NotImplementedError`` so callers fall back honestly.  Checksums
@@ -237,7 +237,7 @@ def _hadoop_block_codec_decompress(data: bytes, uncompressed_len: int,
             if not chunk:
                 # a truncated/empty segment would leave `got`
                 # unchanged and loop forever on untrusted input
-                # (ADVICE r13) — fail loudly instead
+                # — fail loudly instead
                 raise ValueError(
                     "hadoop block codec: segment at offset "
                     f"{pos} decompressed to zero bytes "
@@ -424,8 +424,8 @@ def _decode_cells(data: bytes, with_mvcc: bool,
         value = data[pos:pos + vlen]
         pos += vlen
         if with_tags:
-            # HBase serializes the tags length UNSIGNED (r13,
-            # ADVICE): '>h' would turn >=32KiB of tags into a
+            # HBase serializes the tags length UNSIGNED:
+            # '>h' would turn >=32KiB of tags into a
             # negative length and silently corrupt the block walk
             (tlen,) = struct.unpack_from(">H", data, pos)
             pos += 2 + tlen
@@ -562,7 +562,7 @@ def _encode_fast_diff(cells_kv: list[tuple[bytes, bytes]]) -> bytes:
                 # PREVIOUS cell's family at decode, so it is only
                 # byte-correct when the current cell's family section
                 # matches — two families in one block would round-trip
-                # to a silently wrong key (ADVICE r13): gate loudly.
+                # to a silently wrong key: gate loudly.
                 body += key[common:row_with_size]
                 fam_len = key[row_with_size]
                 q_start = row_with_size + 1 + fam_len
@@ -804,8 +804,8 @@ def read_hfile_bytes(buf: bytes, label: str = "<bytes>"
         if magic == DATA_MAGIC:
             cells += _decode_cells(payload, with_mvcc, with_tags)
         elif magic == ENCODED_DATA_MAGIC:
-            # 2-byte DataBlockEncoding id leads the payload (r13,
-            # VERDICT r12 task 3): FAST_DIFF, PREFIX and DIFF all
+            # 2-byte DataBlockEncoding id leads the payload:
+            # FAST_DIFF, PREFIX and DIFF all
             # decode; PREFIX_TREE/ROW_INDEX_V1 still gate honestly
             (enc_id,) = struct.unpack_from(">h", payload, 0)
             dec = {_ENC_FAST_DIFF: _decode_fast_diff,
@@ -881,7 +881,7 @@ def write_hfile(path: str, cells: list[tuple[bytes, bytes]],
     single-level index; ``compression="gz"``/``"snappy"`` compresses
     every block (the codecs real clusters keep for HFiles);
     ``encoding="fast_diff"`` writes ENCODED_DATA blocks through the
-    FastDiff delta encoder (r13) — the DATA_BLOCK_ENCODING real
+    FastDiff delta encoder — the DATA_BLOCK_ENCODING real
     HBase-tuned Hudi metadata tables enable."""
     with open(path, "wb") as fh:
         fh.write(build_hfile_bytes(cells, file_info,

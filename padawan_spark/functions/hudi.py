@@ -10,7 +10,7 @@ Copy-on-write semantics: each commit rewrites whole file groups, so
 the live view at an instant keeps, per ``fileId``, the base file
 written by the LATEST completed commit at or before that instant.
 
-Merge-on-read semantics (r9): delta commits append typed blocks to
+Merge-on-read semantics: delta commits append typed blocks to
 ``.log`` files (:mod:`padawan_spark.functions.hudilog`) instead of
 rewriting bases; the snapshot read merges each file slice — base
 rows plus log upserts/deletes — LATEST-WINS per
@@ -28,12 +28,12 @@ target instant's blocks inside the codec.
 
 Supported: CoW tables, MOR tables with parquet bases + avro-block
 logs, instant-time time travel on both, and ``replacecommit``
-instants (r9 — clustering / insert_overwrite: the file groups listed
+instants (clustering / insert_overwrite: the file groups listed
 in ``partitionToReplaceFileIds`` are retired wholesale, logs and
 all, in favor of the commit's new base files), LOG-ONLY file
-groups (r9 — a deltacommit INSERT into a partition with no base
+groups (a deltacommit INSERT into a partition with no base
 yet: its rows live purely in the log and merge like any other
-slice), and tables consisting ONLY of log-only groups (r11 — the
+slice), and tables consisting ONLY of log-only groups (the
 merge schema recovers from the log's embedded Avro writer schema,
 logical-type annotations included, so a freshly-bootstrapped
 streaming-ingest table with no compaction yet reads correctly).
@@ -75,7 +75,7 @@ def list_hudi_commits(path: str) -> list[str]:
 
 def hudi_metadata_files(path: str):
     """Driver-side read of the ``.hoodie/metadata`` table's FILES
-    partition (r11): Hudi's internal MOR table whose ``files``
+    partition: Hudi's internal MOR table whose ``files``
     partition maps each data partition to its file listing — the
     replacement for per-partition directory listing (and here, for
     the full O(timeline) commit-JSON replay) in the planning path.
@@ -88,9 +88,9 @@ def hudi_metadata_files(path: str):
     HoodieMetadataPayload (``key`` + ``filesystemMetadata`` map),
     whose semantics are a MAP MERGE — each record adds/updates its
     map's files and an ``isDeleted`` entry removes one, so records
-    FOLD per key in commit order rather than replace (ADVICE r11).
+    FOLD per key in commit order rather than replace.
     HFile base files (real Hudi's metadata base format after
-    compaction) decode through :mod:`.hfile` (r12).  Any other
+    compaction) decode through :mod:`.hfile`.  Any other
     record shape raises (fail closed) and :func:`live_hudi_slices`
     falls back to the timeline replay, the source of truth."""
     mroot = os.path.join(path, ".hoodie", "metadata")
@@ -109,7 +109,7 @@ def hudi_metadata_files(path: str):
         """(key, kind, payload) of one decoded data record; raises
         NotImplementedError on any shape this decoder does not
         understand — a silent guess here would DROP files from the
-        listing (ADVICE r11)."""
+        listing."""
         if "filenames" in r and "_hoodie_record_key" in r:
             return (r["_hoodie_record_key"], "replace",
                     list(r["filenames"]))
@@ -130,7 +130,7 @@ def hudi_metadata_files(path: str):
 
     for fid, s in sorted(inner.items()):
         if s["part"] not in ("files", ""):
-            # other metadata partitions (column_stats, r16) carry
+            # other metadata partitions (column_stats) carry
             # different record shapes and fold through their own
             # readers — only the FILES partition is a listing
             continue
@@ -167,7 +167,7 @@ def hudi_metadata_files(path: str):
                 ordk = (inst, lidx, seq)
                 if blk["type"] in DATA_BLOCK_TYPES:
                     # real metadata tables write HFILE log blocks by
-                    # default — all data-block kinds decode here (r12)
+                    # default — all data-block kinds decode here
                     for r in decode_data_block(blk):
                         key, kind, payload = _classify(r)
                         recs.setdefault(key, []).append(
@@ -257,7 +257,7 @@ def live_hudi_slices(path: str, as_of: str | None = None,
     A commit's base file supersedes the group's accumulated logs
     (compaction); a deltacommit appends log files.
 
-    When the table carries a ``.hoodie/metadata`` table (r11) and the
+    When the table carries a ``.hoodie/metadata`` table and the
     read is at the LATEST instant, the slice view comes from its
     FILES partition — O(partitions) records instead of an O(timeline)
     commit-JSON replay (and, on a real object store, instead of
@@ -270,7 +270,7 @@ def live_hudi_slices(path: str, as_of: str | None = None,
             # a metadata table this decoder cannot read — an
             # unsupported record/block shape (NotImplementedError) OR
             # a malformed record that surfaces as a raw decode error
-            # (ADVICE r11: KeyError/ValueError from a payload field
+            # (a KeyError/ValueError from a payload field
             # probe must not fail a read the replay serves) — falls
             # back to the commit replay below, the source of truth
             listing = None
@@ -311,7 +311,7 @@ def live_hudi_slices(path: str, as_of: str | None = None,
                                    "part": part, "logs": []}
                 else:
                     if fid not in slices:
-                        # log-only file group (r9): a deltacommit
+                        # log-only file group: a deltacommit
                         # INSERT into a group with no base yet —
                         # rows live in the log until compaction
                         slices[fid] = {"base": None, "part": part,
@@ -362,7 +362,7 @@ def _parse_ddl_type(t: str):
     """Spark DDL simple-string type -> tree: ``("prim", name)`` |
     ``("array", elem)`` | ``("map", key, value)`` | ``("struct",
     [(field_name, tree), ...])`` — the shape every nested log-payload
-    helper below walks (r14)."""
+    helper below walks."""
     t = t.strip()
     if t.startswith("array<") and t.endswith(">"):
         return ("array", _parse_ddl_type(t[6:-1]))
@@ -386,7 +386,7 @@ def _parse_ddl_type(t: str):
 def _avroize_value(v):
     """Python value -> Avro-datum shape, recursively: temporal
     leaves become their logical-type ints (micros / epoch days),
-    Rows become dicts (r14)."""
+    Rows become dicts."""
     import datetime as _dt
     if isinstance(v, _dt.datetime):
         return ((v - _dt.datetime(1970, 1, 1))
@@ -427,7 +427,7 @@ def _payload_avroizer(t: str):
     Decimal leaves quantize to the DECLARED scale and encode as
     unscaled big-endian two's-complement bytes (the Avro logical
     decimal wire form); temporal leaves and Rows ride the generic
-    :func:`_avroize_value` conversions (r14)."""
+    :func:`_avroize_value` conversions."""
     import decimal as _decimal
     try:
         tree = _parse_ddl_type(t)
@@ -447,7 +447,7 @@ def _payload_avroizer(t: str):
                 def f(v):
                     if v is None:
                         return None
-                    # ADVICE r14: quantize must be VALUE-PRESERVING —
+                    # quantize must be VALUE-PRESERVING —
                     # ROUND_HALF_EVEN on an out-of-scale upsert value
                     # would round-trip it silently ALTERED; precision
                     # overflow raises InvalidOperation uncaught.  Gate
@@ -524,7 +524,7 @@ def _tree_has_decimal(tree) -> bool:
 def _pa_payload_type(tree):
     """pyarrow type of a DDL tree, LOGICAL leaves (us/UTC
     timestamps, date32, decimal128) — the explicit-arrow build of
-    nested/decimal payload values (r14).  ``pa.array`` treats naive
+    nested/decimal payload values.  ``pa.array`` treats naive
     datetimes as UTC wall time, matching the Avro logical-type
     epoch convention the log codecs use on the wire."""
     import pyarrow as pa
@@ -561,7 +561,7 @@ def _pa_payload_type(tree):
 def _log_safe_type(t: str) -> bool:
     """True when the payload type rides the log codecs: any nesting
     of array/struct/map over the safe primitives — temporal leaves
-    INSIDE nested types included (r14, VERDICT r13 task 1: they
+    INSIDE nested types included (they
     convert per element through :func:`_temporal_reviver`).  Avro
     maps key by string, so only string map keys qualify."""
     def ok(tree) -> bool:
@@ -589,7 +589,7 @@ def _temporal_reviver(t: str):
     Tolerant by design: Avro/HFile datums carry logical-type ints
     (micros / epoch days) while parquet data blocks may surface
     already-typed (possibly tz-aware) values — both normalize to the
-    naive-UTC shapes the Arrow batch build takes (r14)."""
+    naive-UTC shapes the Arrow batch build takes."""
     import datetime as _dt
 
     def build(tree):
@@ -621,8 +621,8 @@ def _temporal_reviver(t: str):
             m = _DEC_RE.match(tree[1])
             if m:
                 # Avro logical decimal: unscaled big-endian
-                # two's-complement bytes at the DECLARED scale
-                # (r14); parquet data blocks surface real Decimals
+                # two's-complement bytes at the DECLARED scale;
+                # parquet data blocks surface real Decimals
                 # — pass through
                 import decimal as _decimal
                 scale = int(m.group(2))
@@ -644,7 +644,7 @@ def _temporal_reviver(t: str):
             return (lambda v: None if v is None
                     else [f(x) for x in v])
         if k == "map":
-            # keys convert too (ADVICE r14): parquet data blocks may
+            # keys convert too: parquet data blocks may
             # carry map<date,...> / map<timestamp,...> whose keys
             # surface as epoch ints from to_pylist — Avro-wire maps
             # are string-keyed and never hit the key converter
@@ -687,7 +687,7 @@ def read_hudi(spark, path: str, as_of: str | None = None,
     log rows get NULL commit-time/seqno/partition/file-name, since
     a log block holds only the record key and payload).
 
-    Scale shape of the merge (r10): the decoded log rows are
+    Scale shape of the merge: the decoded log rows are
     materialized once (``localCheckpoint`` — logs are small relative
     to the base by MOR design; compaction exists precisely to keep
     them so), their distinct record keys broadcast, and the base
@@ -703,11 +703,11 @@ def read_hudi(spark, path: str, as_of: str | None = None,
     pass-through of duplicate-key base rows a bulk insert may have
     left) never depends on log size.
 
-    ``partitions`` (r10): an iterable of partition-path strings —
+    ``partitions``: an iterable of partition-path strings —
     prune the read to those partitions' file slices (Hudi's
     partition pruning: driver metadata work, O(partition) scan).
 
-    ``filters`` (r16, VERDICT r15 task 7): ``{column: value}``
+    ``filters``: ``{column: value}``
     equality predicates — file slices prune against the metadata
     table's COLUMN_STATS index before any job runs (data skipping:
     a slice whose base-file [min, max] bounds exclude the value is
@@ -740,7 +740,7 @@ def read_hudi(spark, path: str, as_of: str | None = None,
         return df
     if not slices:
         if had_slices:
-            # ADVICE r10: pruning every slice away is a valid query —
+            # pruning every slice away is a valid query —
             # return zero rows WITH the table schema (the Delta path's
             # behavior), never an error
             cols = hudi_table_schema(path)
@@ -764,10 +764,10 @@ def read_hudi(spark, path: str, as_of: str | None = None,
         # schema probe over ONE file (Hudi enforces a uniform schema
         # across a table's base files) — building the full file index
         # here would triple the driver's listing work once the merge
-        # builds its own untouched/touched scans (r11)
+        # builds its own untouched/touched scans
         base_df = spark.read.parquet(bases[0])
     else:
-        # table consisting ONLY of log-only file groups (r11 — a
+        # table consisting ONLY of log-only file groups (a
         # freshly-bootstrapped streaming-ingest table): the merge
         # schema comes from the log's embedded Avro writer schema;
         # the base side of the merge is an empty frame with the five
@@ -777,10 +777,10 @@ def read_hudi(spark, path: str, as_of: str | None = None,
         base_df = spark.createDataFrame([], ", ".join(
             [f"{c} string" for c in _META_COLS]
             + [f"`{c}` {t}" for c, t in cols]))
-    # ADVICE r9: real Hudi rolls .log.1/.log.2 per file group — the
+    # real Hudi rolls .log.1/.log.2 per file group — the
     # ordering key must be global per group, so each log file carries
     # its position in the slice's commit-ordered log list (lidx) and
-    # latest-wins orders by (instant, lidx, block index).  r11: each
+    # latest-wins orders by (instant, lidx, block index).  Each
     # log file also carries its file-group id — the merge is PER FILE
     # SLICE, the way real MOR readers run it (a key's updates land
     # only in its own group's logs).
@@ -814,7 +814,7 @@ def read_hudi(spark, path: str, as_of: str | None = None,
     # temporal log payloads ride Avro logical types (micros / days
     # from epoch) and convert back on the pandas side of the decode;
     # temporal leaves INSIDE nested types convert per element through
-    # a reviver built once from the column's DDL (r14)
+    # a reviver built once from the column's DDL
     ts_cols = [c for c in data_cols if dtypes[c] == "timestamp"]
     date_cols = [c for c in data_cols if dtypes[c] == "date"]
     nested_revive = {c: r for c in data_cols
@@ -847,7 +847,7 @@ def read_hudi(spark, path: str, as_of: str | None = None,
                         continue            # failed / future write
                     if blk["type"] in DATA_BLOCK_TYPES:
                         # avro / hfile / parquet blocks all decode to
-                        # the same record dicts (r12)
+                        # the same record dicts
                         for r in decode_data_block(blk):
                             rows.append(
                                 [r["_hoodie_record_key"], gid, inst,
@@ -872,7 +872,7 @@ def read_hudi(spark, path: str, as_of: str | None = None,
             yield pdf_out
 
     # one task per log file, floored at the cluster's parallelism —
-    # not an arbitrary constant (r9 verdict item #7)
+    # not an arbitrary constant
     n_tasks = min(len(log_files),
                   max(32, spark.sparkContext.defaultParallelism))
     paths_df = spark.createDataFrame(
@@ -885,7 +885,7 @@ def read_hudi(spark, path: str, as_of: str | None = None,
     extra_meta = [c for c in _META_COLS
                   if c != "_hoodie_record_key"
                   and c in base_df.columns] if keep_meta else []
-    # Per-file-slice merge (r11): base files of groups with NO logs
+    # Per-file-slice merge: base files of groups with NO logs
     # never enter any join — their scan unions straight into the
     # output.  Only touched GROUPS' base files feed the key split,
     # so the anti/semi branches scan log-touched files, not the
@@ -947,10 +947,9 @@ def read_hudi(spark, path: str, as_of: str | None = None,
     # already bounds the key count: even a delete-block record with
     # a 1-char key costs >2 raw bytes in the real (Avro HoodieKey)
     # encoding, so bytes/2 under the limit proves the broadcast safe
-    # (ADVICE r11 tightened the divisor from 4 — short-key delete
-    # blocks could undercount); only the ambiguous middle pays a
-    # count (r11 — the count job was pure overhead for every
-    # normal-sized log).
+    # (a divisor of 4 would let short-key delete blocks
+    # undercount); only the ambiguous middle pays a count (a count
+    # job would be pure overhead for every normal-sized log).
     total_log_bytes = sum(os.path.getsize(p)
                           for p, _l, _f in log_files)
     if log_key_limit <= 0:
@@ -1014,7 +1013,7 @@ def write_hudi_metadata_fixture(spark, path: str) -> str | None:
     df = spark.createDataFrame(
         rows, "key string, filenames array<string>, p string")
     # real Hudi writes its metadata table's log blocks as HFILE data
-    # blocks — the fixture matches that shape by default (r12)
+    # blocks — the fixture matches that shape by default
     return write_hudi_delta_fixture(spark, mroot, upserts=df,
                                     partition_field="p",
                                     block_format="hfile")
@@ -1041,15 +1040,15 @@ def compact_hudi_metadata_fixture(path: str,
     """FIXTURE: compact the ``.hoodie/metadata`` FILES partition into
     an HFILE base file — the shape every real metadata table takes
     after its first inline compaction (HFile is Hudi's metadata base
-    format; VERDICT r11 task 4).  Cells carry REAL-shaped
+    format).  Cells carry REAL-shaped
     ``HoodieMetadataPayload`` records (``key`` + ``type`` +
     ``filesystemMetadata`` map) so the read path exercises the
     map-merge decode, with the record Avro schema in the HFile
     file-info under ``schema`` exactly where ``HoodieHFileWriter``
     puts it.  The compaction registers as a ``commit`` on the inner
     timeline, superseding the group's logs.  ``compression`` /
-    ``encoding`` pass through to the HFile writer (r13:
-    ``"snappy"`` and ``"fast_diff"`` exercise the codec paths an
+    ``encoding`` pass through to the HFile writer
+    (``"snappy"`` and ``"fast_diff"`` exercise the codec paths an
     HBase-tuned deployment enables).  Returns the instant."""
     from .avro import write_datum
     from .hfile import write_hfile
@@ -1155,7 +1154,7 @@ def _touched_file_ids(path: str, begin: str, end: str) -> set:
 
 def read_hudi_incremental(spark, path: str, begin: str,
                           end: str | None = None):
-    """INCREMENTAL query (r9) — Hudi's third query type next to
+    """INCREMENTAL query — Hudi's third query type next to
     snapshot and read-optimized: the LATEST state of every record
     key CHANGED in the instant window ``(begin, end]``, without
     returning the unchanged rows.  Built on the snapshot merge with
@@ -1165,7 +1164,7 @@ def read_hudi_incremental(spark, path: str, begin: str,
     block's instant).  Keys whose latest event is a delete are not
     emitted (Hudi's default incremental semantics).
 
-    Scale shape (r10): the read scans ONLY the file slices whose
+    Scale shape: the read scans ONLY the file slices whose
     groups were written inside the window — the window's commits
     name them in ``partitionToWriteStats``
     (:func:`_touched_file_ids`); a key in an untouched group cannot
@@ -1211,7 +1210,7 @@ def read_hudi_incremental(spark, path: str, begin: str,
 
 def hudi_column_stats(path: str):
     """Driver-side read of the ``.hoodie/metadata`` table's
-    COLUMN_STATS partition (r16, VERDICT r15 task 7): Hudi's
+    COLUMN_STATS partition: Hudi's
     data-skipping index — per (data file, column) min/max and value/
     null counts, the analog of Iceberg's manifest-level column
     bounds.  Returns ``{(partition, file_name, column): {"min", "max",
@@ -1431,7 +1430,7 @@ def _bloom_might_contain(bits: bytes, m: int, k: int,
 
 def hudi_bloom_filters(path: str):
     """Driver-side read of the metadata table's BLOOM_FILTERS
-    partition (r16): per base file, a bloom filter over its
+    partition: per base file, a bloom filter over its
     ``_hoodie_record_key`` values — Hudi's point-lookup index.
     Returns ``{(partition, file_name): (m, k, bits)}`` or ``None``
     when absent; latest record per key wins, ``isDeleted``
@@ -1567,8 +1566,8 @@ def write_hudi_bloom_fixture(spark, path: str, key_field: str,
 
 def prune_hudi_slices_colstats(path: str, slices: dict,
                                filters: dict) -> dict:
-    """Data skipping via the metadata table's column_stats index
-    (r16): drop file slices whose base-file [min, max] bounds prove
+    """Data skipping via the metadata table's column_stats index:
+    drop file slices whose base-file [min, max] bounds prove
     no row can match the equality ``filters`` — the Hudi analog of
     the Iceberg manifest-level pruning.  CONSERVATIVE by
     construction: a slice survives unless it has NO live log files
@@ -1578,7 +1577,7 @@ def prune_hudi_slices_colstats(path: str, slices: dict,
     Stats are advisory — an unreadable column_stats partition means
     no pruning, never a failed read.
 
-    Bloom pruning (r16): when the metadata table also publishes the
+    Bloom pruning: when the metadata table also publishes the
     BLOOM_FILTERS partition and ``hoodie.properties`` names a single
     record-key field that appears in ``filters``, a slice whose
     bloom DEFINITELY excludes the key's string form is dropped too —
@@ -1691,7 +1690,7 @@ def write_hudi_fixture(spark, df, path: str,
 
         data = {c: [_pyize(r[c]) for r in prows] for c in df.columns}
         # nested columns carrying maps or temporal leaves build with
-        # EXPLICIT arrow types (r14): pandas inference turns a python
+        # EXPLICIT arrow types: pandas inference turns a python
         # dict into a STRUCT and guesses temporal units; other nested
         # shapes keep the inference path (e.g. decimal leaves)
         explicit: dict[str, tuple] = {}
@@ -1701,7 +1700,7 @@ def write_hudi_fixture(spark, df, path: str,
             except ValueError:
                 continue
             # maps and temporal leaves mis-infer through pandas;
-            # decimals (flat included, r14) infer with VALUE-derived
+            # decimals (flat included) infer with VALUE-derived
             # precision/scale instead of the declared type
             if _tree_has_map(tree) or _tree_has_temporal(tree) \
                     or _tree_has_decimal(tree):
@@ -1721,7 +1720,7 @@ def write_hudi_fixture(spark, df, path: str,
         tb = pa.Table.from_pandas(pdf, preserve_index=False)
         order = list(meta) + list(df.columns)
         for c, tree in explicit.items():     # ascending column order
-            # direct logical build (r14): collected python values
+            # direct logical build: collected python values
             # (naive datetimes = UTC wall, dates, Decimals, dicts)
             # carry straight into the declared arrow type
             arr = pa.array(data[c], type=_pa_payload_type(tree))
@@ -1780,7 +1779,7 @@ _SPARK_TO_AVRO = {"bigint": "long", "int": "int", "double": "double",
                   # primitives (micros / days from epoch), ANNOTATED
                   # the way a real Hudi writer stamps them — the
                   # annotation is what lets a log-only table's schema
-                  # round-trip (r11)
+                  # round-trip
                   "timestamp": {"type": "long",
                                 "logicalType": "timestamp-micros"},
                   "date": {"type": "int", "logicalType": "date"},
@@ -1790,7 +1789,7 @@ _SPARK_TO_AVRO = {"bigint": "long", "int": "int", "double": "double",
 def _avro_payload_type(col: str, t: str):
     """Spark DDL type -> Avro schema for a log payload column: any
     nesting of array/struct/map over the safe primitives, temporal
-    leaves annotated with their logical types at EVERY depth (r14) —
+    leaves annotated with their logical types at EVERY depth —
     the wire shape a real Hudi writer's Avro converter produces.
     Record names are deterministic per (column, walk order) so two
     writes of the same shape compare equal under the log schema
@@ -1864,7 +1863,7 @@ def write_hudi_delta_fixture(spark, path: str, upserts=None,
                           encode_parquet_data_block,
                           encode_rollback_block)
     # "hfile" optionally extends to "hfile/<compression>/<encoding>"
-    # (r13) — e.g. "hfile/snappy/fast_diff", the HBase-tuned shape
+    # — e.g. "hfile/snappy/fast_diff", the HBase-tuned shape
     hfile_opts = ("none", "none")
     if block_format.startswith("hfile"):
         bits = block_format.split("/")
@@ -1918,7 +1917,7 @@ def write_hudi_delta_fixture(spark, path: str, upserts=None,
         from pyspark.sql import Row as _Row
 
         def _avroize(v):
-            # recursive (r14): temporal leaves INSIDE rows/lists/maps
+            # recursive: temporal leaves INSIDE rows/lists/maps
             # convert to their logical-type ints at every depth
             if isinstance(v, _dt.datetime):
                 return (v - _dt.datetime(1970, 1, 1)) \
@@ -1986,7 +1985,7 @@ def write_hudi_delta_fixture(spark, path: str, upserts=None,
                             # temporal/decimal values: revive the
                             # avroized datums back to logical
                             # python objects and build with the
-                            # declared arrow type (r14 — pa.array
+                            # declared arrow type (pa.array
                             # takes naive datetimes as UTC)
                             rv = _temporal_reviver(t)
                             lv = ([rv(x) for x in vals] if rv
@@ -2082,9 +2081,9 @@ def _avro_field_ddl(t) -> str:
 def hudi_log_table_schema(log_paths) -> list[tuple[str, str]]:
     """``[(name, spark_ddl_type)]`` recovered from the Avro data
     blocks' embedded writer schemas across ``log_paths`` — the schema
-    source for a table consisting only of log-only file groups (r11).
+    source for a table consisting only of log-only file groups.
     EVERY data block's SCHEMA header is inspected and a field-set
-    mismatch raises (ADVICE r11): taking only the first block's
+    mismatch raises: taking only the first block's
     schema would silently drop a column a later deltacommit added.
     Driver work is O(block headers), not O(rows) — datums are never
     decoded."""
@@ -2127,7 +2126,7 @@ def hudi_log_table_schema(log_paths) -> list[tuple[str, str]]:
                 names, first_at = flds, p
                 out = flds
             elif flds != names:
-                # full (name, type) comparison (r13, ADVICE): two
+                # full (name, type) comparison: two
                 # blocks with identical names but evolved TYPES
                 # (int -> bigint) must gate too, or the first
                 # block's narrower DDL would misread wider values
@@ -2148,7 +2147,7 @@ def hudi_table_schema(path: str):
     (``_hoodie_*`` meta excluded), from one base file's parquet
     footer — planning-only driver work; a table with ONLY log-only
     file groups recovers its schema from the log's embedded Avro
-    writer schema instead (r11).  Timestamp/date surface as their
+    writer schema instead.  Timestamp/date surface as their
     Spark types; other non-primitives gate."""
     import pyarrow.parquet as pq
     slices = live_hudi_slices(path)
@@ -2163,7 +2162,7 @@ def hudi_table_schema(path: str):
 
 def _pa_type_ddl(t) -> str:
     """pyarrow type -> Spark DDL, recursively through
-    lists/structs/maps (r14); unknown leaves gate loudly."""
+    lists/structs/maps; unknown leaves gate loudly."""
     import pyarrow as pa
     s = str(t)
     if s.startswith("timestamp"):
@@ -2187,7 +2186,7 @@ def _pa_type_ddl(t) -> str:
 
 
 def hudi_timeline_table(spark, path: str):
-    """The Hudi TIMELINE as a DataFrame (r15) — one row per COMPLETED
+    """The Hudi TIMELINE as a DataFrame — one row per COMPLETED
     instant (the ``show_commits``/timeline inspection surface):
     instant id, action kind (``commit`` / ``deltacommit`` /
     ``replacecommit``), and its ordinal position.  Driver work is one
@@ -2200,7 +2199,7 @@ def hudi_timeline_table(spark, path: str):
 
 
 def hudi_clean_plan(spark, path: str, keep_versions: int = 1):
-    """Table MAINTENANCE (r16): the deletion plan Hudi's CLEANER
+    """Table MAINTENANCE: the deletion plan Hudi's CLEANER
     computes under KEEP_LATEST_FILE_VERSIONS — per file group, base
     files beyond the newest ``keep_versions`` and the log files of
     SUPERSEDED slices (logs whose blocks a later compaction/rewrite

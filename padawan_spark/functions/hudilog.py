@@ -46,7 +46,7 @@ BLOCK_AVRO_DATA = 3
 # real HoodieLogBlockType ordinals continue: 2=CORRUPT (never written
 # deliberately), 4=HFILE_DATA, 5=PARQUET_DATA — the formats real Hudi
 # writes for metadata tables (HFile, the default) and for
-# hoodie.logfile.data.block.format=parquet tables (r12)
+# hoodie.logfile.data.block.format=parquet tables
 BLOCK_HFILE_DATA = 4
 BLOCK_PARQUET_DATA = 5
 
@@ -181,7 +181,7 @@ def decode_data_block(block: dict) -> list[dict]:
     header's writer schema, Parquet (5) through pyarrow with temporal
     columns normalized to the Avro logical-type conventions (micros /
     epoch-days ints), so every consumer merges uniformly regardless
-    of which block format the writer chose (r12)."""
+    of which block format the writer chose."""
     t = block["type"]
     if t == BLOCK_AVRO_DATA:
         return decode_avro_data_block(block)
@@ -201,7 +201,7 @@ def encode_hfile_data_block(instant: str, avro_schema: dict,
     are the record keys and whose values are binary Avro datums of
     the SCHEMA header's writer schema — the block format real Hudi
     writes for its metadata table.  ``compression``/``encoding``
-    pass through to the HFile writer (r13: GZ/Snappy blocks,
+    pass through to the HFile writer (GZ/Snappy blocks,
     PREFIX/DIFF/FAST_DIFF cell encodings)."""
     from .avro import write_datum
     from .hfile import build_hfile_bytes
@@ -288,7 +288,7 @@ def decode_parquet_data_block(block: dict) -> list[dict]:
         return t
 
     for i, f in enumerate(tb.schema):
-        # normalize temporals (at ANY depth, r14) to the Avro
+        # normalize temporals (at ANY depth) to the Avro
         # logical-type conventions every other data-block kind uses
         # (micros / epoch-day ints)
         if _has_temporal(f.type):

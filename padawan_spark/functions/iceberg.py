@@ -15,20 +15,20 @@ the scan is one parquet job per distinct partition tuple.
 
 Supported: format v1/v2 JSON metadata, identity partition transforms,
 parquet data files, null/deflate-coded manifests, and v2 POSITION
-delete files (r9): delete manifests (``content=1`` in the manifest
+delete files: delete manifests (``content=1`` in the manifest
 list) are walked like data manifests, their position-delete parquet
 files (``file_path``/``pos`` columns) read distributed, and the
 deleted positions anti-joined against the data rows on
 ``(_metadata.file_path, _metadata.row_index)`` — position deletes
 reference data files by unique path, so path-matched application is
 exact without sequence-number bookkeeping.  v2 EQUALITY delete files
-(r9, ``content=2``): manifest-entry sequence numbers (inherited from
+(``content=2``): manifest-entry sequence numbers (inherited from
 the manifest-list row when null, per the spec's v2 inheritance rule)
 scope each delete to data files with STRICTLY SMALLER sequence
 numbers, so rows re-inserted in the same or a later commit survive;
 application is one null-safe anti-join per distinct ``equality_ids``
 set with the data-file sequence number attached as a literal column.
-Non-identity partition transforms (r9): ``bucket[N]`` (spec-exact
+Non-identity partition transforms: ``bucket[N]`` (spec-exact
 32-bit Murmur3 over the value's single-value-serialization bytes,
 pinned to the spec's published test vectors), ``truncate[W]``,
 ``year``/``month``/``day``/``hour`` and ``void`` are parsed from the
@@ -39,22 +39,22 @@ equality filter before any Spark job runs — the transform-pruning
 path that makes a 100 TB bucketed/date-partitioned table a
 point-lookup instead of a full scan.  Source columns of non-identity
 transforms live in the data files themselves (only identity
-partition values are re-attached from metadata).  Schema evolution
-(r9): a table carrying more than one schema resolves columns the way
+partition values are re-attached from metadata).  Schema evolution:
+a table carrying more than one schema resolves columns the way
 the spec mandates — by PARQUET FOOTER FIELD ID — so renames keep
 reading old files and post-add files return null for the new column;
 the fixture writer stamps field ids on every data file it writes.
-AVRO data files (r9) read through the in-repo dependency-free Avro
+AVRO data files read through the in-repo dependency-free Avro
 source (block-split tasks, writer schema per file) and union with
-parquet groups in one table; ORC data files (r10) ride Spark's
+parquet groups in one table; ORC data files ride Spark's
 native vectorized ORC source and share the broadcast
 partition-attach map through ``_metadata.file_path``.  ORC schema
-evolution (r11) resolves by the ``iceberg.id`` footer type
+evolution resolves by the ``iceberg.id`` footer type
 attributes (the spec's ORC appendix) through the same one-job layout
-tap as parquet; ORC position deletes (r11) route ONLY the targeted
+tap as parquet; ORC position deletes route ONLY the targeted
 files through an Arrow stripe scan that derives exact row positions
 in-task, untargeted ORC files staying on the native vectorized scan.
-AVRO closes the same way (r11): schema evolution resolves by the
+AVRO closes the same way: schema evolution resolves by the
 embedded writer schema's ``field-id`` attributes (Iceberg's Avro
 convention) through the shared one-job layout tap, and position
 deletes route only the targeted AVRO files through the python block
@@ -79,8 +79,7 @@ def orc_stripe_position_frames(path: str, pmapping: dict,
     STRIPE OFFSET, i.e. exactly the ordinal Iceberg position deletes
     address.  Memory bounds at one stripe per frame; hypothesis-
     property-tested against a whole-file row_number oracle across
-    stripe-size splits × delete-position sets (r12, VERDICT r11
-    task 7)."""
+    stripe-size splits × delete-position sets."""
     import pandas as pd
     import pyarrow.orc as po
     f2 = po.ORCFile(path)
@@ -95,7 +94,7 @@ def orc_stripe_position_frames(path: str, pmapping: dict,
                 col = pdo[pn]
                 rn = (renamers or {}).get(n2)
                 if rn is not None:
-                    # nested-evolved file (r14): rename inner
+                    # nested-evolved file: rename inner
                     # fields per this file's physical tree — a
                     # value walk over just the targeted file's rows
                     col = col.map(rn, na_action="ignore")
@@ -146,13 +145,13 @@ _ICE_TO_SPARK = {"long": "bigint", "int": "int", "string": "string",
                  # "timestamp" is kept on TIMESTAMP too for fixture
                  # continuity (both decode identically in UTC)
                  "timestamptz": "timestamp",
-                 # v3 variant (r16, VERDICT r15 task 4): Spark 4
+                 # v3 variant: Spark 4
                  # reads the parquet VARIANT logical type natively —
                  # a declared `variant` column scans straight
                  # through, extraction is `variant_get` codegen; the
                  # layout taps already fall back to the in-repo
                  # thrift footer walk when pyarrow refuses VARIANT
-                 # footers (r15)
+                 # footers
                  "variant": "variant"}
 
 
@@ -178,7 +177,7 @@ def _ice_leaf_ddl(t: str) -> str:
 # first (column defaults, deletion vectors, row lineage over
 # parquet/ORC/Avro, variant columns) are implemented; the remainder
 # gates loudly wherever it would otherwise be silently misread
-# (VERDICT r14 tasks 1/8; final scope recorded in COVERAGE.md r16).
+# (COVERAGE.md records the final scope).
 _V3_NOT_IMPLEMENTED = (
     "geometry / geography / unknown column types",
     "timestamp_ns / timestamptz_ns column types",
@@ -187,11 +186,11 @@ _V3_NOT_IMPLEMENTED = (
 
 
 def _check_format_version(meta: dict, path: str) -> int:
-    """Loud format-version gate (VERDICT r14 task 1): v1/v2 read in
+    """Loud format-version gate: v1/v2 read in
     full; v3 reads support ``initial-default`` column defaults,
     puffin deletion vectors, row lineage (parquet/ORC/Avro) and
     ``variant`` columns (the remainder gates at its point of use —
-    COVERAGE.md r16 records the final scope); anything newer refuses
+    COVERAGE.md records the final scope); anything newer refuses
     up front."""
     fv = int(meta.get("format-version", 1))
     if fv > 3:
@@ -265,8 +264,7 @@ def _ice_default_py(jv, ddl: str, name: str):
 
 
 def _ice_type_ddl(t) -> str:
-    """Iceberg schema-JSON type -> Spark DDL; struct/list/map recurse
-    (r13, VERDICT task 1)."""
+    """Iceberg schema-JSON type -> Spark DDL; struct/list/map recurse."""
     from .nested import ice_json_type_ddl
     return ice_json_type_ddl(t, _ice_leaf_ddl)
 
@@ -301,7 +299,7 @@ def _ice_value_renamer(pt, lt):
     """Python-VALUE converter renaming one file's physical inner
     names (``pt``, from :func:`.nested.match_tree_ice`) to the
     logical ones (``lt``) — the AVRO position-delete scan applies it
-    per decoded row (r14).  None when no rename/absence exists at
+    per decoded row.  None when no rename/absence exists at
     any depth; an absent inner field surfaces as None."""
     if pt is None or isinstance(lt, str) or isinstance(pt, str):
         return None
@@ -482,7 +480,7 @@ def prune_partition_files(files, part_specs, types, filters,
     metadata work — no Spark job — so at 100 TB a point lookup on a
     bucketed key touches O(files-in-one-bucket), not O(table).
 
-    Spec evolution (r10): when ``specs_by_id`` is given, each file
+    Spec evolution: when ``specs_by_id`` is given, each file
     prunes under ITS OWN spec (file tuples carry a spec id); a file
     whose spec does not partition the filtered column is kept —
     pruning stays conservative, the residual row predicate is exact.
@@ -537,7 +535,7 @@ def _resolve_snapshot(path: str, snapshot_id: int | None = None,
                       ref: str | None = None):
     """Load the latest table metadata and resolve one snapshot —
     by id, by ``ref`` (a named BRANCH or TAG from the metadata's
-    ``refs`` map, r12 — the spec's ``VERSION AS OF 'name'`` surface),
+    ``refs`` map — the spec's ``VERSION AS OF 'name'`` surface),
     by ``as_of_ms`` timestamp time travel (latest snapshot committed
     at or before the instant, per the spec's timestamp-ms), or the
     current one.  Returns ``(meta, snap)``."""
@@ -587,7 +585,7 @@ def live_data_files(path: str, snapshot_id: int | None = None,
     ``[(abs_path, content, sequence_number,
     equality_col_names_or_None)]`` for the snapshot's POSITION
     (content=1) and EQUALITY (content=2) delete parquet files.
-    ``row_lineage=True`` (v3, r15) appends each file's FIRST ROW ID
+    ``row_lineage=True`` (v3) appends each file's FIRST ROW ID
     as a sixth tuple element — explicit from the entry when stamped,
     else inherited per the spec: the manifest-list row's
     ``first_row_id`` plus the record counts of preceding null-id
@@ -597,15 +595,15 @@ def live_data_files(path: str, snapshot_id: int | None = None,
     meta, snap = _resolve_snapshot(path, snapshot_id, as_of_ms)
     # schema: v2 keeps a list + current-schema-id; v1 a single
     # schema.  Time travel resolves the SNAPSHOT's schema-id when
-    # the snapshot records one (ADVICE r9 — a pre-evolution snapshot
+    # the snapshot records one (a pre-evolution snapshot
     # reads back with its own column names, not the renamed ones),
     # falling back to the current schema for snapshots that predate
     # the field.
     if "schemas" in meta:
-        # current reads use the TABLE's current schema (r14) — a
+        # current reads use the TABLE's current schema — a
         # metadata-only rename surfaces immediately, as in real
         # engines; explicit time travel keeps the snapshot's own
-        # schema-id (the deliberate r9 choice: a pre-evolution
+        # schema-id (a deliberate choice: a pre-evolution
         # snapshot reads back with its own column names)
         sid = (meta.get("current-schema-id", 0) if use_current_schema
                else snap.get("schema-id",
@@ -631,7 +629,7 @@ def live_data_files(path: str, snapshot_id: int | None = None,
         if content not in (0, 1):
             raise NotImplementedError(
                 f"iceberg manifest content {content} unsupported")
-        # partition-spec evolution (r10): each manifest carries the
+        # partition-spec evolution: each manifest carries the
         # spec id its entries were written under; the id rides every
         # file tuple so pruning and identity re-attach resolve
         # against the FILE's spec, not the table default
@@ -676,7 +674,7 @@ def live_data_files(path: str, snapshot_id: int | None = None,
                         f"iceberg delete-file content {fcontent}")
                 ref = df_.get("referenced_data_file")
                 if ref is not None or fmt == "PUFFIN":
-                    # v3 DELETION VECTOR (r15): the entry addresses
+                    # v3 DELETION VECTOR: the entry addresses
                     # one blob inside a puffin file and names the
                     # single data file it applies to — internal
                     # content code 3 distinguishes it from parquet
@@ -736,7 +734,7 @@ def _schema_inventory(path: str, schema_id: int | None = None):
 
 def _schema_fields_json(path: str, schema_id: int | None = None):
     """Raw schema-JSON fields (``{name: field}`` with ids at every
-    nesting level) — what the nested footer-tree match needs (r13)."""
+    nesting level) — what the nested footer-tree match needs."""
     with open(_latest_metadata(path)) as fh:
         meta = json.load(fh)
     if "schemas" in meta:
@@ -751,7 +749,7 @@ def _schema_fields_json(path: str, schema_id: int | None = None):
 
 def added_data_files(path: str, snapshot_id: int):
     """Data files ADDED by exactly ``snapshot_id`` — the unit of the
-    incremental append scan (r13, ADVICE r12): decode ONLY the
+    incremental append scan: decode ONLY the
     manifests the snapshot itself added (manifest-list rows whose
     ``added_snapshot_id`` matches; rows carried forward from earlier
     snapshots are skipped without opening them), then keep entries
@@ -793,7 +791,7 @@ def added_data_files(path: str, snapshot_id: int):
             # manifest-list row's added_snapshot_id when null — real
             # writers emit null (the manifest is written before the
             # commit id is final), so skipping null entries would
-            # silently plan ZERO files for real tables (ADVICE r13)
+            # silently plan ZERO files for real tables
             eid = e.get("snapshot_id")
             if eid is None:
                 eid = asid if asid is not None else snapshot_id
@@ -820,9 +818,9 @@ def _eq_delete_union(spark, pfs, eq_names, eq_layouts, fld_ids,
     each file's columns resolve by parquet FIELD ID from
     ``eq_layouts`` (a delete file written before a rename carries the
     OLD physical name; reading by the current name would null-fill
-    and silently SKIP the delete — r14); the by-name fallback for
+    and silently SKIP the delete); the by-name fallback for
     id-less legacy files verifies the name exists in the file or
-    gates loudly (ADVICE r14)."""
+    gates loudly."""
     from pyspark.sql import functions as F
     dels = None
     for p, s in pfs:
@@ -875,20 +873,20 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
     STRICTLY below the delete file's.  Both delete sets stay
     distributed (never collected), AQE picks broadcast when they are
     small, and tables without delete files skip the joins entirely.
-    Schema evolution (r9): when the table carries more than one
+    Schema evolution: when the table carries more than one
     schema, columns resolve per the spec — by PARQUET FOOTER FIELD
     ID, not by name — so renamed columns read their old files
     correctly and columns added later come back null from pre-add
     files; files are grouped by physical layout and each group scans
     with its own DDL.  Unevolved tables skip the footer taps
     entirely.  ``ref`` time-travels to a named branch/tag from the
-    metadata's ``refs`` map (r12).  ``row_lineage=True`` (v3, r15)
+    metadata's ``refs`` map.  ``row_lineage=True`` (v3)
     appends the spec's ``_row_id`` and
     ``_last_updated_sequence_number`` metadata columns — each file's
     inherited FIRST ROW ID plus the row's physical position, and the
     file's data sequence number.  Parquet positions ride
-    ``_metadata.row_index``; ORC and AVRO files (r16, VERDICT r15
-    task 5) route through the same position-deriving scans the
+    ``_metadata.row_index``; ORC and AVRO files
+    route through the same position-deriving scans the
     position-delete paths use (Arrow stripe offsets / the python
     block decoder's file order).  Files without assigned ids
     (pre-upgrade manifests) gate loudly."""
@@ -912,14 +910,14 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
         files = [f[:5] for f in files]
     types = dict(fields)
     # field ids resolve against the CURRENT schema for current reads
-    # (r14 — a metadata-only rename surfaces immediately) and the
-    # SNAPSHOT's schema under explicit time travel (the r9 choice:
+    # (a metadata-only rename surfaces immediately) and the
+    # SNAPSHOT's schema under explicit time travel (a deliberate choice:
     # a pre-evolution snapshot reads back with its own column
     # names); values match by field id either way
     fld_ids, n_schemas = _schema_inventory(
         path, None if current else snap.get("schema-id"))
     evolved = n_schemas > 1
-    # spec evolution (r10): every spec the table ever carried, parsed
+    # spec evolution: every spec the table ever carried, parsed
     # — each file prunes and re-attaches under ITS OWN spec
     name_of_fid = {v: k for k, v in fld_ids.items()}
     specs_by_id = {s: _parse_part_spec(sp, name_of_fid)
@@ -951,7 +949,7 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
 
     pos_files = [p for p, c, _s, _e in delete_files if c == 1]
     eq_files = [(p, s, e) for p, c, s, e in delete_files if c == 2]
-    # v3 deletion vectors (r15): (puffin_path, seq, (referenced data
+    # v3 deletion vectors: (puffin_path, seq, (referenced data
     # file, blob offset, blob size)).  The spec allows at most ONE
     # live DV per data file — two entries referencing the same file
     # would double-apply an unknown union, so gate loudly.
@@ -971,7 +969,7 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
                   if fmt == "AVRO"]
     raw_fields = _schema_fields_json(
         path, None if current else snap.get("schema-id"))
-    # v3 initial-defaults (r15): a column added with a default reads
+    # v3 initial-defaults: a column added with a default reads
     # the DEFAULT (not null) from every file that predates it; the
     # default value rides the schema field's JSON.  Built eagerly so
     # an unsupported default type gates loudly up front.
@@ -991,9 +989,9 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
     nested_mode = evolved and bool(nested_cols & set(field_names))
     layouts: dict[str, tuple] = {}
     if nested_mode and (pq_paths or orc_paths or avro_paths):
-        # evolved table WITH nested columns (r13): the footer TREES
+        # evolved table WITH nested columns: the footer TREES
         # carry nested field ids (parquet PARQUET:field_id / ORC
-        # iceberg.id; r14: Avro data files too, via the writer
+        # iceberg.id; Avro data files too, via the writer
         # schema's field-id/element-id/key-id/value-id attributes),
         # so renamed struct fields inside a column resolve per file
         # — still ONE distributed footer/header job per format,
@@ -1028,8 +1026,8 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
         # evolved table: logical name -> each file's physical column,
         # matched by footer field id (name fallback for id-less
         # legacy files); absent = column added after this file.  ONE
-        # distributed footer job PER FORMAT resolves every file (r10;
-        # ORC r11 via the `iceberg.id` type attributes; AVRO r11 via
+        # distributed footer job PER FORMAT resolves every file (ORC
+        # via the `iceberg.id` type attributes; AVRO via
         # the embedded writer schema's `field-id` attributes) — never
         # a driver-side open per data file.
         from .layouts import (avro_field_layouts, orc_field_layouts,
@@ -1055,7 +1053,7 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
     # ONE parquet scan per distinct (PHYSICAL LAYOUT, partition spec)
     # — a handful at most, one per schema/spec epoch; NEVER per
     # partition tuple or sequence number: at 10k+ partitions a
-    # per-tuple union is a 10k-arm plan (r9 verdict #5).  Identity
+    # per-tuple union is a 10k-arm plan.  Identity
     # partition values and the file's sequence number re-attach via a
     # small broadcast file→values table joined on
     # _metadata.file_path.  AVRO data files (no _metadata support in
@@ -1094,7 +1092,7 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
         targeted_orc |= {p for p in orc_paths if p in dv_refs}
         targeted_avro |= {p for p in avro_paths if p in dv_refs}
     if row_lineage:
-        # v3 row lineage over ORC/AVRO (r16, VERDICT r15 task 5):
+        # v3 row lineage over ORC/AVRO:
         # _row_id needs each row's exact physical position, which
         # only the position-deriving scans produce for these formats
         # (Arrow stripe offsets for ORC, the python block decoder's
@@ -1139,14 +1137,14 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
                 return lmap.get(n, None if evolved else n)
 
             if fmt == "AVRO@pos":
-                # position-deleted AVRO files (r11): the python block
+                # position-deleted AVRO files: the python block
                 # decoder enumerates rows in file order — exact
                 # positions by construction; one task per file
                 out_ddl = (", ".join(f"`{n}` {types[n]}" for n in dn)
                            + ", __fp string, __pos bigint")
                 if nested_mode:
-                    # evolved NESTED avro under position deletes
-                    # (r14): per-file inner renames apply as a
+                    # evolved NESTED avro under position deletes:
+                    # per-file inner renames apply as a
                     # python value walk, bounded by the TARGETED
                     # files' rows (position deletes keep that set
                     # small by design)
@@ -1219,7 +1217,7 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
                 register_python_sources(spark)
                 nl = None
                 if nested_mode:
-                    # evolved NESTED avro (r14): the layout entries
+                    # evolved NESTED avro: the layout entries
                     # are (physical name, physical type tree json) —
                     # renamed inner fields rebuild logically via the
                     # same JVM remap the parquet/ORC paths use
@@ -1296,14 +1294,14 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
             lmap = None
             ddl_g = ", ".join(f"{n} {types[n]}" for n in dn)
         if fmt == "ORC@pos":
-            # position-deleted ORC files (r11): Arrow stripe scan,
+            # position-deleted ORC files: Arrow stripe scan,
             # one task per file, positions derived by a running
             # stripe offset — memory bounds at one stripe per batch,
             # physical columns resolved by field id via the same
             # layout map, logical names emitted directly
             renamers: dict = {}
             if nested_mode:
-                # evolved NESTED table (r14): layout entries are
+                # evolved NESTED table: layout entries are
                 # (physical name, physical type tree) — inner
                 # renames apply as a value walk in the stripe scan
                 pmapping = {}
@@ -1354,7 +1352,7 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
             continue
         # ORC rides Spark's native ORC source (same vectorized scan,
         # same _metadata.file_path for the attach map); schema
-        # evolution resolves by `iceberg.id` footer attributes (r11)
+        # evolution resolves by `iceberg.id` footer attributes
         df = (spark.read.schema(ddl_g).orc(list(paths))
               if fmt == "ORC"
               else spark.read.schema(ddl_g).parquet(*paths))
@@ -1426,7 +1424,7 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
                    for i, v in enumerate(r)) for r in pmap_rows],
             pmap_ddl))
         out = out.join(pmap, on="__fp", how="left")
-        # ADVICE r10: the path-keyed attach join must fail CLOSED — a
+        # the path-keyed attach join must fail CLOSED — a
         # normalization miss would otherwise silently null partition
         # values AND stop eq-delete sequence scoping.  Every pmap row
         # carries a non-null __mseq, and every parquet/ORC row a
@@ -1511,7 +1509,7 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
         by_eq.setdefault(e, []).append((p, s))
     eq_layouts: dict = {}
     if by_eq and evolved:
-        # evolved table (r14): a delete file written BEFORE a rename
+        # evolved table: a delete file written BEFORE a rename
         # carries the OLD physical column name — resolve per file by
         # parquet FIELD ID (one distributed footer job over the
         # delete files; reading by the current name would null-fill
@@ -1564,7 +1562,7 @@ def _spark_json_to_ice(t, counter):
     ids assigned at every nesting level (struct field ids,
     ``element-id``, ``key-id``/``value-id``) — the spec's
     requirement; the fixture writer stamps the same ids into the
-    parquet footers (r13)."""
+    parquet footers."""
     if isinstance(t, str):
         if t in _SPARK_JSON_TO_ICE:
             return _SPARK_JSON_TO_ICE[t]
@@ -1597,8 +1595,8 @@ def _spark_json_to_ice(t, counter):
 
 
 def _ice_to_avro(t, name_hint: str):
-    """Iceberg schema-JSON type -> Avro schema (fixture writer,
-    r13): struct -> record with nullable fields, list -> array,
+    """Iceberg schema-JSON type -> Avro schema (fixture writer):
+    struct -> record with nullable fields, list -> array,
     map -> map (string keys, per Avro)."""
     _i2a = {"long": "long", "int": "int", "string": "string",
             "double": "double", "float": "float",
@@ -1608,7 +1606,7 @@ def _ice_to_avro(t, name_hint: str):
             return _i2a[t]
         raise NotImplementedError(f"avro fixture leaf type {t!r}")
     k = t["type"]
-    # nested id attributes (r14): real Iceberg Avro writers stamp
+    # nested id attributes: real Iceberg Avro writers stamp
     # field-id / element-id / key-id / value-id at every depth — the
     # resolution key an evolved reader matches renamed inner fields by
     if k == "struct":
@@ -1690,11 +1688,11 @@ def _manifest_schema(part_items, types=None):
         {"name": "file_size_in_bytes", "type": "long"},
         {"name": "equality_ids",
          "type": ["null", {"type": "array", "items": "int"}]},
-        # v3 deletion-vector fields (r15): null for every other entry
+        # v3 deletion-vector fields: null for every other entry
         {"name": "referenced_data_file", "type": ["null", "string"]},
         {"name": "content_offset", "type": ["null", "long"]},
         {"name": "content_size_in_bytes", "type": ["null", "long"]},
-        # v3 row lineage (r15): explicit on carried EXISTING entries,
+        # v3 row lineage: explicit on carried EXISTING entries,
         # null (inherited from the manifest-list row) on fresh adds
         {"name": "first_row_id", "type": ["null", "long"]},
     ]}
@@ -1713,7 +1711,7 @@ _MLIST_SCHEMA = {"type": "record", "name": "manifest_file", "fields": [
     {"name": "content", "type": "int"},
     {"name": "sequence_number", "type": ["null", "long"]},
     {"name": "added_snapshot_id", "type": ["null", "long"]},
-    # v3 row lineage (r15): starting row id for the manifest's
+    # v3 row lineage: starting row id for the manifest's
     # null-id data files; null on delete manifests
     {"name": "first_row_id", "type": ["null", "long"]},
 ]}
@@ -1815,7 +1813,7 @@ def write_iceberg_fixture(spark, df, path: str, partition_by=(),
                     i, f.name,
                     tb.column(i).cast(pa.timestamp(
                         "us", f.type.tz or "UTC")))
-        # stamp PARQUET FIELD IDS (r9): the spec resolves columns by
+        # stamp PARQUET FIELD IDS: the spec resolves columns by
         # id, which is what lets renamed columns keep reading — the
         # closure binds name_to_id after the schema resolves below
         flds = [f.with_metadata(
@@ -1863,7 +1861,7 @@ def write_iceberg_fixture(spark, df, path: str, partition_by=(),
         _ctr = _it.count(len(df.columns) + 1)
 
         def _ice_of(c):
-            # nested columns (r13): full Iceberg JSON with fresh
+            # nested columns: full Iceberg JSON with fresh
             # field ids at every level; flat columns keep the
             # primitive-name table
             if isinstance(jtypes[c], str):
@@ -1902,7 +1900,7 @@ def write_iceberg_fixture(spark, df, path: str, partition_by=(),
              for f in schema["fields"]}
     name_to_id = {f["name"]: f["id"] for f in schema["fields"]}
     default_spec_id = meta.get("default-spec-id", 0)
-    # v3 row lineage (r15): live once the table is v3 and the
+    # v3 row lineage: live once the table is v3 and the
     # upgrade seeded next-row-id — new snapshots assign first-row-id,
     # manifests inherit, carried entries keep their explicit ids
     lineage = (meta.get("format-version") == 3
@@ -1920,7 +1918,7 @@ def write_iceberg_fixture(spark, df, path: str, partition_by=(),
                 and delete_positions is None
                 and delete_equality is None
                 and delete_vectors is None):
-            # FAST APPEND (r13) — the real-writer commit shape: the
+            # FAST APPEND — the real-writer commit shape: the
             # new manifest holds ONLY this snapshot's adds and the
             # base snapshot's manifest-list rows carry VERBATIM (so
             # an incremental reader skips them without opening);
@@ -1977,7 +1975,7 @@ def write_iceberg_fixture(spark, df, path: str, partition_by=(),
             elif pfmt == "ORC":
                 import pyarrow.orc as _po
                 rcount = _po.ORCFile(p).nrows
-            else:                                    # AVRO (r16)
+            else:                                    # AVRO
                 from .avro import decode_avro_py
                 with open(p, "rb") as fh:
                     _flds, _rows = decode_avro_py(fh.read())
@@ -2064,7 +2062,7 @@ def write_iceberg_fixture(spark, df, path: str, partition_by=(),
             rel = f"data/snap{snap_id}-{ki}.{ext}"
             full = os.path.join(path, rel)
             if variant_cols & set(data_cols):
-                # v3 VARIANT data files (r16): neither pandas nor
+                # v3 VARIANT data files: neither pandas nor
                 # this container's pyarrow can carry variant values,
                 # so the file writes through Spark's OWN parquet
                 # writer — the same binary layout a real Iceberg v3
@@ -2103,7 +2101,7 @@ def write_iceberg_fixture(spark, df, path: str, partition_by=(),
                                     "equality_ids": None}})
                 continue
             if has_nested and ext != "avro":
-                # nested columns (r13): Arrow path — pandas cannot
+                # nested columns: Arrow path — pandas cannot
                 # carry structs faithfully; nested field ids stamp
                 # from the schema's own id assignment so id-matching
                 # readers resolve renames at every depth (parquet
@@ -2152,7 +2150,7 @@ def write_iceberg_fixture(spark, df, path: str, partition_by=(),
                       for f in schema["fields"]}
 
                 def _avro_of(c):
-                    # nested columns (r13): iceberg JSON -> avro
+                    # nested columns: iceberg JSON -> avro
                     # schema; flat columns keep the primitive table
                     if isinstance(jt[c], str):
                         if types[c] not in a_map:
@@ -2179,7 +2177,7 @@ def write_iceberg_fixture(spark, df, path: str, partition_by=(),
                                for row in pdf.itertuples(index=False)]
                 with open(full, "wb") as fh:
                     # field-id attributes: the Iceberg Avro writers'
-                    # column-resolution key (r11)
+                    # column-resolution key
                     fh.write(encode_avro_py(aspec, rows_py,
                                             field_ids=name_to_id))
             elif ext == "orc":
@@ -2187,7 +2185,7 @@ def write_iceberg_fixture(spark, df, path: str, partition_by=(),
                 # stamp field ids as `iceberg.id` type attributes —
                 # the ORC equivalent of PARQUET:field_id (spec's ORC
                 # appendix), what lets an evolved reader resolve
-                # columns by id (r11)
+                # columns by id
                 tb = pa.Table.from_pandas(pdf, preserve_index=False)
                 flds = [f.with_metadata(
                     {b"iceberg.id":
@@ -2283,7 +2281,7 @@ def write_iceberg_fixture(spark, df, path: str, partition_by=(),
         efull = os.path.join(path, erel)
         tb_eq = pa.table({c: [r[i] for r in eq_rows]
                           for i, c in enumerate(eq_cols)})
-        # field ids ride the delete file's footer (r14) — what lets
+        # field ids ride the delete file's footer — what lets
         # a reader resolve the columns after a rename, exactly as
         # real Iceberg writers stamp them
         tb_eq = tb_eq.cast(pa.schema(
@@ -2488,7 +2486,7 @@ def evolve_iceberg_spec_fixture(path: str, partition_by=()) -> int:
         flds.append({"name": fname, "transform": tr,
                      "source-id": name_to_id[src],
                      "field-id": 1000 + 100 * new_id + i})
-    # ADVICE r10: a v1-style table declares only the inline
+    # a v1-style table declares only the inline
     # 'partition-spec' — once the LIST form exists, _raw_specs stops
     # normalizing the inline one, so pre-evolution manifests (spec id
     # 0) would fail with 'unknown partition spec 0'.  Seed the list
@@ -2546,7 +2544,7 @@ def evolve_iceberg_schema_fixture(path: str, renames=None,
     entries are ``(name, type)`` or ``(name, type, initial_default)``
     — the 3-form stamps the v3 ``initial-default`` (and matching
     ``write-default``) the spec's JSON single-value serialization
-    carries (r15).  Returns the new schema id."""
+    carries.  Returns the new schema id."""
     import copy
     with open(_latest_metadata(path)) as fh:
         meta = json.load(fh)
@@ -2562,7 +2560,7 @@ def evolve_iceberg_schema_fixture(path: str, renames=None,
     new["schema-id"] = max(s.get("schema-id", 0)
                            for s in meta["schemas"]) + 1
 
-    # renames accept dotted paths into nested structs (r13):
+    # renames accept dotted paths into nested structs:
     # {"st.a": "alpha"} renames field a INSIDE struct column st
     # (list elements as "element", map values as "value"); keys are
     # the OLD paths at every level
@@ -2592,7 +2590,7 @@ def evolve_iceberg_schema_fixture(path: str, renames=None,
         last += 1
         fld = {"id": last, "name": nm, "required": False, "type": t}
         if len(entry) > 2:
-            # v3 column defaults (r15): the value every PRE-EXISTING
+            # v3 column defaults: the value every PRE-EXISTING
             # file reads for this column (and, as write-default, what
             # writers omit-fill) — JSON single-value serialization
             fld["initial-default"] = entry[2]
@@ -2613,8 +2611,8 @@ def evolve_iceberg_schema_fixture(path: str, renames=None,
 def iceberg_metadata_table(spark, path: str, kind: str,
                            snapshot_id: int | None = None):
     """The spec's METADATA TABLES as DataFrames — the inspection
-    surface real engines expose as ``SELECT * FROM tbl.snapshots``
-    (r15).  Driver work is the same manifest walk planning already
+    surface real engines expose as ``SELECT * FROM tbl.snapshots``.
+    Driver work is the same manifest walk planning already
     does (O(manifest entries)); the result materializes via
     ``createDataFrame`` — ``files`` is O(live files), the same class
     as the planner's own file list.
@@ -2630,7 +2628,7 @@ def iceberg_metadata_table(spark, path: str, kind: str,
     map<string,string> — live data files of the resolved snapshot),
     ``partitions`` (partition map, spec_id, file_count,
     record_count — aggregated from ``files``), ``delete_files``
-    (r16: the snapshot's live position/equality delete files and v3
+    (the snapshot's live position/equality delete files and v3
     deletion vectors with their equality columns / blob
     addresses)."""
     from pyspark.sql import functions as F
@@ -2726,7 +2724,7 @@ def iceberg_metadata_table(spark, path: str, kind: str,
                      F.sum("record_count").cast("bigint")
                      .alias("record_count")))
     if kind == "delete_files":
-        # the snapshot's live DELETE artifacts (r16): v2 position
+        # the snapshot's live DELETE artifacts: v2 position
         # files (content 1), equality files (content 2, their
         # equality column names), v3 deletion vectors (content 1,
         # PUFFIN, referenced data file + blob offsets)
@@ -2810,7 +2808,7 @@ def _snapshot_changes(path, meta, by_id, sid, parent_sid,
     seq)}`` from status-1/status-2 data-file entries, plus its NEW
     delete artifacts: v3 deletion vectors (``new_dvs``), v2
     position-delete parquet files (``new_pos``) and v2 equality
-    deletes (``new_eq`` as ``[(abs, seq, eq_col_names)]``, r16).
+    deletes (``new_eq`` as ``[(abs, seq, eq_col_names)]``).
     The predecessor artifacts (``prev_pos``/``prev_eq``/
     ``prev_dvs``) come from the PARENT snapshot's delete manifests
     only (a handful) — what the newly-dead-row computations diff
@@ -2865,13 +2863,13 @@ def _snapshot_changes(path, meta, by_id, sid, parent_sid,
                     continue
                 ref = df_.get("referenced_data_file")
                 if ref is None and fmt != "PUFFIN":
-                    # v2 position-delete parquet FILE (r16)
+                    # v2 position-delete parquet FILE
                     new_pos.append(
                         _resolve(df_["file_path"], path))
                     continue
                 # v3 deletion vector — a malformed PUFFIN entry
                 # (null referenced_data_file/offset/size) gates
-                # loudly instead of crashing downstream (ADVICE r15)
+                # loudly instead of crashing downstream
                 off = df_.get("content_offset")
                 sz = df_.get("content_size_in_bytes")
                 if ref is None or off is None or sz is None:
@@ -2987,8 +2985,8 @@ def _live_files_of(path, meta, by_id, sid):
 def read_iceberg_changes(spark, path: str,
                          from_snapshot_id: int | None = None,
                          to_snapshot_id: int | None = None):
-    """Iceberg CHANGELOG read (r15, v2 deletes + flat schema
-    evolution r16) — the row-level change feed real engines expose as
+    """Iceberg CHANGELOG read (v2 deletes and flat schema
+    evolution included) — the row-level change feed real engines expose as
     the ``changes`` / changelog table: for every snapshot AFTER
     ``from_snapshot_id`` (exclusive; None = from table start) up TO
     ``to_snapshot_id`` (inclusive; None = current), emit the rows of
@@ -3001,15 +2999,15 @@ def read_iceberg_changes(spark, path: str,
     newly dead under v2 EQUALITY deletes it added (scoped to data
     files with sequence number STRICTLY below the delete's, matched
     null-safely, minus the parent's already-dead rows) — the
-    merge-on-read shapes real v2 tables deliver row-level deletes as
-    (VERDICT r15 task 1).  Snapshots whose summary operation is
+    merge-on-read shapes real v2 tables deliver row-level deletes as.
+    Snapshots whose summary operation is
     ``replace`` (compactions: file rewrites with no logical change)
     emit nothing, as in Iceberg's own changelog scan.  Output
     columns: the table's columns plus ``_change_type``
     (insert/delete), ``_change_ordinal`` (0-based position of the
     snapshot in the requested span) and ``_commit_snapshot_id``.
 
-    Schema evolution (r16): renamed/added columns resolve per-file
+    Schema evolution: renamed/added columns resolve per-file
     by parquet footer FIELD ID (one distributed footer job per scan
     — the same layout tap batch reads use), with v3
     ``initial-default`` values for files predating an added column;
@@ -3070,7 +3068,7 @@ def read_iceberg_changes(spark, path: str,
                    if not isinstance(f["type"], str)}
     nested_mode = evolved and bool(nested_cols & set(field_names))
     # v3 initial-defaults: a column added with a default reads the
-    # DEFAULT (not null) from files predating it (r15)
+    # DEFAULT (not null) from files predating it
     defaults = {n: F.lit(_ice_default_py(f["initial-default"],
                                          types[n], n)).cast(types[n])
                 for n, f in raw_fields.items()
@@ -3104,7 +3102,7 @@ def read_iceberg_changes(spark, path: str,
                         & set(types))
         lay_of: dict = {}
         if nested_mode:
-            # evolved table WITH nested columns (r16): footer TREES
+            # evolved table WITH nested columns: footer TREES
             # carry nested field ids, so renamed struct fields
             # inside a column resolve per file — the same one-job
             # tap + JVM remap batch reads use
@@ -3400,7 +3398,7 @@ def read_iceberg_changes(spark, path: str,
             else:
                 parts.append(_finish(_rows(removed, False),
                                      "delete", ordinal, sid))
-        # v2 delete files NEW in this snapshot (r16): rows newly
+        # v2 delete files NEW in this snapshot: rows newly
         # dead = rows matched by the new deletes, minus rows already
         # dead at the parent.  Deletes whose target file left with
         # the removes contribute nothing (those rows just emitted as
@@ -3488,7 +3486,7 @@ def iceberg_changelog_view(spark, path: str,
                            from_snapshot_id: int | None = None,
                            to_snapshot_id: int | None = None):
     """The PROCESSED changelog view real engines build over the raw
-    feed (Iceberg's ``create_changelog_view`` procedure, r16), on
+    feed (Iceberg's ``create_changelog_view`` procedure), on
     top of :func:`read_iceberg_changes`:
 
     - **carry-over removal** (always): a row emitted as both
@@ -3627,7 +3625,7 @@ def _reachable_files(path: str, meta: dict, snapshot_ids,
 
 
 def iceberg_orphan_files(spark, path: str):
-    """Table MAINTENANCE (r16): files under the table location that
+    """Table MAINTENANCE: files under the table location that
     NO snapshot references — what Iceberg's ``remove_orphan_files``
     procedure deletes; aborted writes and crashed compactions leave
     them behind and at 100 TB they silently double storage.
@@ -3666,7 +3664,7 @@ def iceberg_orphan_files(spark, path: str):
 def iceberg_expire_snapshots_plan(spark, path: str,
                                   keep_last: int = 1,
                                   older_than_ms: int | None = None):
-    """Table MAINTENANCE (r16): the deletion plan Iceberg's
+    """Table MAINTENANCE: the deletion plan Iceberg's
     ``expire_snapshots`` computes — snapshots older than
     ``older_than_ms`` (None = all but the keep set), always KEEPING
     the ``keep_last`` newest plus every branch/tag-referenced

@@ -5,12 +5,12 @@ Both formats resolve columns by PARQUET FIELD ID when a table has
 evolved (Iceberg spec: "columns are matched by field id"; Delta
 column-mapping ``id`` mode), which requires each data file's footer
 schema.  Reading those footers one by one from the driver is the
-million-sequential-opens anti-pattern (r9 verdict item #4) — this
+million-sequential-opens anti-pattern — this
 module runs ONE Spark job over the file list (same shape as
 ``padawan_spark.dataset.scan_parquet_footers``): each task taps only
 footer bytes via pyarrow and serializes the whole layout to ONE row
 per file.  Identical layouts then GROUP ON THE EXECUTORS before the
-collect (r15, VERDICT r14 task 2), so the driver holds each distinct
+collect, so the driver holds each distinct
 layout once — O(distinct layouts) layout payload plus the path list
 it needs anyway to group files by physical layout before planning
 the scans (most files of a 10⁶-file table share one layout; the old
@@ -27,8 +27,8 @@ _LOG = logging.getLogger("padawan_spark.layouts")
 
 def collect_layouts(fdf, xform=None) -> dict:
     """Collect a ``(path string, layout string)`` tap result with the
-    driver's layout footprint bounded at O(DISTINCT layouts) (VERDICT
-    r14 task 2): identical layout JSONs group on the EXECUTORS, each
+    driver's layout footprint bounded at O(DISTINCT layouts):
+    identical layout JSONs group on the EXECUTORS, each
     distinct string crosses to the driver ONCE, and every path of a
     group shares the SAME decoded object — at 10⁶-file table sizes
     the per-file copy was a multi-GB driver dict; most files share
@@ -84,8 +84,8 @@ def parquet_field_layouts(spark, paths) -> dict:
                     # pyarrow refuses footers carrying unknown
                     # logical types (VARIANT, surfaced as
                     # ArrowIOError/OSError) — fall back to the
-                    # in-repo thrift footer walk (r15).  Narrowed
-                    # error classes (ADVICE r15): an unrelated
+                    # in-repo thrift footer walk.  Narrowed
+                    # error classes: an unrelated
                     # failure (e.g. TypeError) surfaces as ITS OWN
                     # exception, and a truncated/unreadable file
                     # fails the walk too, which re-raises WITH the
@@ -108,7 +108,7 @@ def parquet_field_layouts(spark, paths) -> dict:
 
 
 def avro_field_layouts(spark, paths) -> dict:
-    """Avro twin of :func:`parquet_field_layouts` (r11): one
+    """Avro twin of :func:`parquet_field_layouts`: one
     distributed header job → ``{path: [(field_id | None, name)]}``.
     Iceberg's Avro writers stamp each field's id as the ``field-id``
     attribute in the embedded writer schema; reading it costs one
@@ -142,7 +142,7 @@ def avro_field_layouts(spark, paths) -> dict:
 
 
 def orc_field_layouts(spark, paths) -> dict:
-    """ORC twin of :func:`parquet_field_layouts` (r11): one
+    """ORC twin of :func:`parquet_field_layouts`: one
     distributed footer job → ``{path: [(field_id | None, name)]}``.
     Iceberg's ORC writers stamp each column's field id as the
     ``iceberg.id`` type attribute (the spec's ORC appendix), which

@@ -2909,7 +2909,7 @@ def lin16_to_alaw(v: int) -> int:
 
 def decode_wav_py(b: bytes):
     """Decode a RIFF/WAVE payload: uncompressed 16-bit PCM (format 1)
-    plus — r8 — the G.711 telephony codings, A-law (format 6) and
+    plus the G.711 telephony codings, A-law (format 6) and
     mu-law (format 7), expanded to 16-bit linear with the exact CCITT
     segment formulas.
 
@@ -3080,7 +3080,7 @@ MP3_META_SCHEMA = ("doc_id bigint, version string, layer int, "
 
 def scan_mp3_meta(df: DataFrame, payload_col: str = "payload",
                   id_col: str = "doc_id") -> DataFrame:
-    """MPEG-audio frame-walk metadata (r8): duration, bitrate mode,
+    """MPEG-audio frame-walk metadata: duration, bitrate mode,
     sample rate, channel layout from the 4-byte frame headers alone
     (:func:`padawan_spark.functions.mp3.scan_mp3_py`) — ID3v2/ID3v1
     tags skipped, the Xing/Info VBR tag frame recognized and excluded
@@ -3109,7 +3109,7 @@ ID3_TAGS_SCHEMA = ("doc_id bigint, title string, artist string, "
 
 def extract_id3_tags(df: DataFrame, payload_col: str = "payload",
                      id_col: str = "doc_id") -> DataFrame:
-    """ID3v2.3/2.4 attribution metadata (r8) — the audio twin of
+    """ID3v2.3/2.4 attribution metadata — the audio twin of
     :func:`extract_exif`: title/artist/album/year/track/genre text
     frames (all four spec text encodings), NULLs where a frame — or
     the whole tag — is absent.  O(tag bytes) per blob; the audio
@@ -3134,7 +3134,7 @@ OGG_META_SCHEMA = ("doc_id bigint, codec string, sample_rate int, "
 
 def scan_ogg_meta(df: DataFrame, payload_col: str = "payload",
                   id_col: str = "doc_id") -> DataFrame:
-    """Ogg (RFC 3533) container triage (r8): CRC-verified page walk,
+    """Ogg (RFC 3533) container triage: CRC-verified page walk,
     codec identification from the BOS packet (Vorbis / Opus), duration
     from the final granule position
     (:func:`padawan_spark.functions.mp3.scan_ogg_py`).  Full
@@ -3210,7 +3210,7 @@ VIDEO_FRAMES_SCHEMA = ("doc_id bigint, frame_idx int, width int, "
 
 def _mjpeg_frames(b: bytes):
     """Container walk + per-frame JPEG decode for Motion-JPEG in AVI or
-    MP4 (r8): returns ``(width, height, [luma planes])``.  Grayscale
+    MP4: returns ``(width, height, [luma planes])``.  Grayscale
     frames decode to the raw Y plane; color frames use the green
     channel's luma-dominant row as-is (fixtures are grayscale, where
     baseline JPEG is exact under flat quant)."""
@@ -3239,7 +3239,7 @@ def sample_video_frames(df: DataFrame, every_n: int = 30,
                         payload_col: str = "payload",
                         id_col: str = "doc_id") -> DataFrame:
     """Real frame sampling: PyAV when present (any codec), else the
-    pure-Python Y4M parser or — r8 — the AVI/MP4 container walk with
+    pure-Python Y4M parser or the AVI/MP4 container walk with
     in-repo MJPEG (baseline JPEG) frame decode.  Emits every
     ``every_n``-th frame's dimensions plus a position-weighted luma
     checksum ``sum((i + 1) * Y_i)`` — order-sensitive, so plane-size or
@@ -3293,7 +3293,7 @@ VIDEO_META_SCHEMA = ("doc_id bigint, container string, codec string, "
 
 def scan_video_containers(df: DataFrame, payload_col: str = "payload",
                           id_col: str = "doc_id") -> DataFrame:
-    """Header-only video-container metadata scan (r8): AVI reads the
+    """Header-only video-container metadata scan: AVI reads the
     ``hdrl`` list, MP4 the ``moov`` tree, Y4M the stream header plus
     O(1) frame arithmetic — never the sample payloads.  This is the
     100 TB corpus-triage primitive (codec/resolution/duration
@@ -3378,7 +3378,7 @@ def sample_webp_frames(df: DataFrame, every_n: int = 1,
 
 def sniff_media_py(b: bytes):
     """TOTAL media-type triage across every format family this engine
-    understands (r8): returns ``(media_type, format)`` with media_type
+    understands: returns ``(media_type, format)`` with media_type
     in ``image/audio/video/caption/unknown``.  Pure magic-byte
     dispatch — O(16 bytes) per blob, total by construction (garbage
     classifies as ``unknown``, never raises) — the very first pass

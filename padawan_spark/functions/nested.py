@@ -1,6 +1,5 @@
 """Nested-type (struct/array/map) schema translation shared by the
-Delta and Iceberg interop readers and fixture writers (r13, VERDICT
-task 1).
+Delta and Iceberg interop readers and fixture writers.
 
 Reference parity: the reference engine's dataset layer round-trips
 arbitrary (nested) arrow schemas through parquet
@@ -244,9 +243,9 @@ def _field_trees(spark, paths, fmt: str) -> dict:
                             pa.lib.ArrowInvalid, OSError) as exc:
                         # footer carries a logical type pyarrow does
                         # not know (VARIANT) — the in-repo thrift
-                        # footer walk recovers the id tree (r15,
-                        # VERDICT r14 task 4).  Narrowed error
-                        # classes + chained re-raise: ADVICE r15.
+                        # footer walk recovers the id tree.  Only the
+                        # errors pyarrow raises for it fall back, and
+                        # a fallback failure chains the first error.
                         from .parquetfooter import footer_field_trees
                         try:
                             trees = footer_field_trees(p)
@@ -274,7 +273,7 @@ def parquet_field_trees(spark, paths) -> dict:
 
 
 def orc_field_trees(spark, paths) -> dict:
-    """ORC twin of :func:`parquet_field_trees` (r13): field ids from
+    """ORC twin of :func:`parquet_field_trees`: field ids from
     the ``iceberg.id`` type attributes the spec's ORC appendix
     mandates, nested levels included."""
     return _field_trees(spark, paths, "orc")
@@ -284,7 +283,7 @@ def _avro_schema_tree(field: dict):
     """Avro record field -> ``[fid, name, children]`` from the
     writer schema's Iceberg id attributes (``field-id`` on record
     fields, ``element-id`` on arrays, ``key-id``/``value-id`` on
-    maps) — the Avro twin of :func:`_arrow_tree` (r14)."""
+    maps) — the Avro twin of :func:`_arrow_tree`."""
     from .avro import _norm_type
     t, _null = _norm_type(field["type"])
     return [field.get("field-id"), field["name"],
@@ -310,7 +309,7 @@ def _avro_type_kids(t):
 
 
 def avro_field_trees(spark, paths) -> dict:
-    """Avro sibling of :func:`parquet_field_trees` (r14): ONE
+    """Avro sibling of :func:`parquet_field_trees`: ONE
     distributed HEADER job -> ``{path: [tree, ...]}`` from each
     file's embedded writer schema — a header parse per file, never a
     row decode; the trees resolve renamed nested fields of evolved
@@ -382,7 +381,7 @@ def match_tree_delta(t, node):
         # remappable in place, so passing the logical keyType
         # through would build scan DDL with logical inner names and
         # read silent NULLs — gate loudly, mirroring
-        # :func:`remap_needed`'s name-mode gate (ADVICE r13)
+        # :func:`remap_needed`'s name-mode gate
         if _contains_struct(t["keyType"]):
             raise NotImplementedError(
                 "column-mapped struct inside a MAP KEY is "
@@ -442,7 +441,7 @@ def match_tree_ice(t, node, name_key="name"):
         return {"type": "list",
                 "element": match_tree_ice(t["element"], elem)}
     if k == "map":
-        # the Iceberg twin of the delta MAP-KEY gate (r14): a struct
+        # the Iceberg twin of the delta MAP-KEY gate: a struct
         # field RENAMED (or absent) inside a map key cannot resolve —
         # the scan DDL would carry logical inner names against the
         # file's physical ones and read silent NULLs, and keys are
@@ -585,7 +584,7 @@ def arrow_ice_logical_view(arr, ice_type_json,
     metadata (a renamed field keeps its position and its id; a
     reorder or an added inner field gates loudly).  What the appends
     STREAM uses so schema-evolved nested columns stream under their
-    current names (r13)."""
+    current names."""
     target = _arrow_ice_type(arr.type, ice_type_json, id_key)
     return arr if target.equals(arr.type) else arr.view(target)
 
@@ -596,7 +595,7 @@ def arrow_logical_view(arr, t_json):
     ``t_json`` (positional match — a mapped writer emits the schema's
     field order; a count mismatch gates loudly).  What the STREAMING
     readers use to emit logical record batches from physically-named
-    parquet data without touching the buffers (r13)."""
+    parquet data without touching the buffers."""
     target = _arrow_logical_type(arr.type, t_json)
     return arr if target.equals(arr.type) else arr.view(target)
 

@@ -1,7 +1,7 @@
 """Minimal parquet FOOTER schema reader, dependency-free (the PUBLIC
 parquet-format spec: Thrift compact protocol, ``FileMetaData`` struct).
 
-Why it exists (r15, VERDICT r14 task 4): pyarrow refuses to open
+Why it exists: pyarrow refuses to open
 footers whose schema carries a logical type it does not know — the
 VARIANT type Spark 4 writes being the live case — which breaks the
 distributed field-id taps (:mod:`.layouts` / :mod:`.nested`) exactly
@@ -172,7 +172,7 @@ def _footer_bytes(path: str) -> bytes:
 def footer_num_rows(path: str) -> int:
     """``FileMetaData.num_rows`` (field 3, i64) straight from the
     thrift bytes — the row count for footers pyarrow refuses to open
-    (VARIANT logical type, r16)."""
+    (VARIANT logical type)."""
     b = _footer_bytes(path)
     pos, fid = 0, 0
     while True:
@@ -247,8 +247,8 @@ def footer_field_trees(path: str) -> list:
         if conv == _CONV_LIST and kids:
             rep = kids[0]
             # parquet-format LogicalTypes.md backward-compat rules
-            # (ADVICE r15 — "any repeated group with kids" wrongly
-            # classified a legacy 2-level list of structs as a
+            # ("any repeated group with kids" would wrongly
+            # classify a legacy 2-level list of structs as a
             # 3-level wrapper): the REPEATED NODE ITSELF is the
             # element when it is not a group, has multiple fields,
             # or has one field but is named `array` / `<list>_tuple`;

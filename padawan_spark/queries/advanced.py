@@ -756,7 +756,7 @@ SELECT COUNT(*) AS n,
 FROM orders WHERE o_orderkey % 10 = 0 AND o_orderkey < 150000
 """)
 def src_avro_roundtrip(spark, sf_dir):
-    """Avro Object Container source (r8): Spark ships Avro only as an
+    """Avro Object Container source: Spark ships Avro only as an
     external package, so the engine reads it through the
     dependency-free spec decoder (`functions/avro.py` — zigzag
     varints, block/sync framing, null+deflate codecs, [null,T]
@@ -808,7 +808,7 @@ SELECT COUNT(*) AS n, CAST(SUM(n_nationkey) AS BIGINT) AS key_sum,
 FROM nation WHERE n_regionkey = 2
 """)
 def src_delta_partition_prune(spark, sf_dir):
-    """Delta partition pruning (r10) — ``read_delta(filters=...)``:
+    """Delta partition pruning — ``read_delta(filters=...)``:
     a point predicate on a partition column prunes the planned FILE
     LIST on the driver through the add actions' partitionValues
     (Delta's partition pruning), then re-applies as an exact row
@@ -848,7 +848,7 @@ SELECT 2, COUNT(*) FILTER (WHERE n_regionkey <> 0),
 FROM nation
 """)
 def src_delta_read(spark, sf_dir):
-    """Delta Lake interop (r8): scan a PARTITIONED Delta table through
+    """Delta Lake interop: scan a PARTITIONED Delta table through
     the dependency-free transaction-log reader
     (`functions/delta.py:read_delta`) — no delta-spark jar.  A
     spec-layout log is built by the fixture writer (three commits:
@@ -895,7 +895,7 @@ SELECT COUNT(*) AS n,
 FROM nation
 """)
 def src_delta_id_mapping(spark, sf_dir):
-    """Delta 'id'-mode column mapping (r9) — the layout conversions
+    """Delta 'id'-mode column mapping — the layout conversions
     from other engines produce: data files matched to the schema by
     PARQUET FOOTER FIELD IDS, with physical column names that need
     not agree across files.  The fixture writes two commits whose
@@ -939,8 +939,8 @@ SELECT COUNT(*) AS n,
 FROM orders WHERE o_orderkey % 10 = 0 AND o_orderkey < 150000
 """)
 def src_delta_nested_read(spark, sf_dir):
-    """Delta NESTED columns through column mapping (r13, VERDICT
-    task 1): a partitioned ``name``-mode mapped table whose columns
+    """Delta NESTED columns through column mapping: a
+    partitioned ``name``-mode mapped table whose columns
     are a two-level struct, an array of structs and a map with
     struct values.  The fixture writer renames every struct field to
     its ``physicalName`` at EVERY depth before writing (JVM
@@ -1001,7 +1001,7 @@ SELECT 'now', 2 * COUNT(*),
 FROM nation
 """)
 def src_delta_time_travel(spark, sf_dir):
-    """Delta TIMESTAMP time travel (r12): ``as_of_ms`` resolves the
+    """Delta TIMESTAMP time travel: ``as_of_ms`` resolves the
     latest commit at or before the instant the way delta readers do
     — ``inCommitTimestamp`` when a commitInfo records one, else the
     commit JSON's modification time.  The fixture pins both commits'
@@ -1045,14 +1045,15 @@ SELECT 'delete', 2 * COUNT(*),
 FROM nation WHERE n_regionkey = 0
 """)
 def src_delta_cdf_checkpoint(spark, sf_dir):
-    """Delta CDF over a RETENTION-CLEANED log (r12, VERDICT r11
-    task 2): the fixture commits a create, checkpoints AND DELETES
+    """Delta CDF over a RETENTION-CLEANED log: the
+    fixture commits a create, checkpoints AND DELETES
     the covered JSON (the shape every real table has after 30-day
     log retention), then appends and drops a partition.  Reading
     changes from the first post-checkpoint version initializes file
     state from the checkpoint — the delete rows of the cleaned-add
-    files still carry their partition values — where the r11 reader
-    hard-gated.  The oracle restates the post-checkpoint changes.
+    files still carry their partition values, where a reader
+    without that fallback would have to gate.  The oracle restates
+    the post-checkpoint changes.
     Scale shape: stream-start/read planning is O(commits since
     checkpoint), not O(all commits since version 0); change files
     scan distributed as before."""
@@ -1110,7 +1111,7 @@ FROM (SELECT n_nationkey FROM nation WHERE n_regionkey = 3
       ORDER BY n_nationkey LIMIT 2)
 """)
 def src_delta_cdf_read(spark, sf_dir):
-    """Delta CHANGE DATA FEED interop (r9) — the row-level change
+    """Delta CHANGE DATA FEED interop — the row-level change
     stream the native engine's ``read_changes`` provides, read from
     an EXISTING Delta table per the protocol: commits with ``cdc``
     actions (``_change_data/`` files carrying ``_change_type``, what
@@ -1119,7 +1120,7 @@ def src_delta_cdf_read(spark, sf_dir):
     (files read pre-vacuum, partition values recovered from the
     pre-remove state).  The fixture commits a create (derived
     inserts), a partition delete (derived deletes), a cdc-explicit
-    UPDATE (pre/postimage pairs), and (r11) a DELETION-VECTOR commit
+    UPDATE (pre/postimage pairs), and a DELETION-VECTOR commit
     whose delete rows are exactly the newly-dead positions (new DV
     minus old DV, decoded in distributed tasks, applied by
     ``_metadata.row_index``); the oracle restates every change row
@@ -1165,7 +1166,7 @@ FROM nation
 WHERE n_regionkey <> 2 OR n_nationkey % 2 = 0
 """)
 def src_delta_v2_checkpoint(spark, sf_dir):
-    """Delta V2 CHECKPOINTS (r9) — the layout modern writers emit
+    """Delta V2 CHECKPOINTS — the layout modern writers emit
     with the v2Checkpoint table feature: a UUID-named top-level
     checkpoint parquet holding protocol/metaData/checkpointMetadata
     plus ``sidecar`` actions, with the add/remove set split across
@@ -1221,7 +1222,7 @@ SELECT 'post', COUNT(*),
 FROM nation
 """)
 def src_hudi_clustering(spark, sf_dir):
-    """Hudi REPLACECOMMIT / clustering (r9): a replacecommit retires
+    """Hudi REPLACECOMMIT / clustering: a replacecommit retires
     whole file groups — accumulated log files included — in favor of
     new base files, changing LAYOUT but never VALUES.  The fixture
     upserts ``k % 3 == 0`` rows' names via a deltacommit, then
@@ -1283,7 +1284,7 @@ FROM orders
 WHERE o_orderkey % 10 = 0 AND o_orderkey < 150000 AND o_orderkey % 3 <> 0
 """)
 def src_delta_dv_read(spark, sf_dir):
-    """Delta Lake DELETION VECTORS + parquet CHECKPOINT replay (r9) —
+    """Delta Lake DELETION VECTORS + parquet CHECKPOINT replay —
     the two protocol features a user of modern Delta tables (DVs are
     default-on) hits first.  A partitioned fixture table gets a DV
     commit marking every ``o_orderkey % 3 == 0`` row deleted BY
@@ -1352,7 +1353,7 @@ SELECT 3, COUNT(*) FILTER (WHERE n_regionkey <> 2),
 FROM nation
 """)
 def src_iceberg_read(spark, sf_dir):
-    """Apache Iceberg interop (r8): scan a PARTITIONED Iceberg table
+    """Apache Iceberg interop: scan a PARTITIONED Iceberg table
     without the iceberg-spark runtime — metadata.json walk, the
     snapshot's Avro manifest list and manifest files decoded by the
     in-repo generic Avro datum reader (nested records/arrays are
@@ -1399,8 +1400,8 @@ SELECT COUNT(*) AS n,
 FROM orders WHERE o_orderkey % 10 = 1 AND o_orderkey < 150000
 """)
 def src_iceberg_nested_read(spark, sf_dir):
-    """Iceberg NESTED columns through SCHEMA EVOLUTION (r13, VERDICT
-    task 1): struct-in-struct, struct-in-array and struct-valued-map
+    """Iceberg NESTED columns through SCHEMA EVOLUTION:
+    struct-in-struct, struct-in-array and struct-valued-map
     columns written over TWO snapshots with an inner-field RENAME in
     between (``st.buyer``/``st.inner.depth``/``ar.element.m`` were
     born under different names) — so the reader must resolve nested
@@ -1472,7 +1473,7 @@ FROM orders
 WHERE o_orderkey % 10 = 0 AND o_orderkey < 150000 AND o_orderkey % 3 <> 0
 """)
 def src_iceberg_v2_deletes(spark, sf_dir):
-    """Iceberg format-v2 POSITION DELETES (r9) — the most-hit real
+    """Iceberg format-v2 POSITION DELETES — the most-hit real
     interop gap after the v1 reader: a merge-on-read DELETE writes a
     delete manifest (``content=1`` manifest-list row) pointing at
     position-delete parquet files (``file_path``/``pos`` columns),
@@ -1532,7 +1533,7 @@ SELECT 'main', 2 * COUNT(*), CAST(SUM(2 * n_nationkey + 500)
 FROM nation
 """)
 def src_iceberg_ref_read(spark, sf_dir):
-    """Iceberg BRANCH/TAG refs (r12): the metadata ``refs`` map names
+    """Iceberg BRANCH/TAG refs: the metadata ``refs`` map names
     snapshots (``ALTER TABLE ... CREATE TAG``), and readers
     time-travel by name — the spec's ``VERSION AS OF 'ref'``.  The
     fixture tags the first snapshot as ``v1``, appends a second
@@ -1577,7 +1578,7 @@ WHERE (n_nationkey % 5 <> 0 OR n_nationkey IN (5, 15))
   AND n_regionkey <> 3
 """)
 def src_iceberg_eq_deletes(spark, sf_dir):
-    """Iceberg format-v2 EQUALITY DELETES (r9) — the delete shape a
+    """Iceberg format-v2 EQUALITY DELETES — the delete shape a
     streaming CDC/upsert writer emits: a content=2 parquet file of
     equality-column values that deletes every matching data row whose
     file sequence number is STRICTLY below the delete file's.  The
@@ -1635,7 +1636,7 @@ SELECT 'point_ts', COUNT(*), CAST(SUM(o_custkey) AS BIGINT)
 FROM s WHERE o_orderdate = (SELECT MIN(o_orderdate) FROM s)
 """)
 def src_iceberg_transforms(spark, sf_dir):
-    """Iceberg NON-IDENTITY partition transforms (r9): a table
+    """Iceberg NON-IDENTITY partition transforms: a table
     partitioned by ``bucket(4, k)`` + ``year(ts)`` — the spec's
     Murmur3 bucket transform (pinned to the published test vectors in
     tests) and a date transform — written by the fixture and read
@@ -1698,7 +1699,7 @@ SELECT 2 * COUNT(*) AS n,
 FROM nation
 """)
 def src_iceberg_schema_evolution(spark, sf_dir):
-    """Iceberg SCHEMA EVOLUTION (r9): the spec resolves columns by
+    """Iceberg SCHEMA EVOLUTION: the spec resolves columns by
     PARQUET FOOTER FIELD ID, never by name — the rule that makes
     ALTER TABLE RENAME/ADD COLUMN metadata-only operations.  The
     fixture writes a snapshot, renames a column and adds a new one
@@ -1749,14 +1750,14 @@ SELECT COUNT(*) AS n, CAST(SUM(k) AS BIGINT) AS key_sum,
 FROM u, x WHERE k NOT IN (3, 103) AND k <> x.k0
 """)
 def src_iceberg_avro_data(spark, sf_dir):
-    """Iceberg AVRO data files (r9) — the non-parquet data format the
+    """Iceberg AVRO data files — the non-parquet data format the
     spec allows and old tables actually carry: a snapshot written as
     Avro Object Container files reads through the in-repo
     dependency-free Avro source (block-split tasks, writer schema
     from each file header) and UNIONS with a later parquet snapshot
     in one table — per-file-format scan groups, values cast to the
     table schema.  An equality delete applies ACROSS formats, and
-    (r11) a POSITION delete on an AVRO file applies too — the
+    a POSITION delete on an AVRO file applies too — the
     targeted file reads through the python block decoder, which
     enumerates rows in file order (exact positions by construction);
     untargeted Avro files keep the block-split source.  The oracle
@@ -1803,14 +1804,14 @@ SELECT COUNT(*) AS n, CAST(SUM(k) AS BIGINT) AS key_sum,
 FROM u, x WHERE k NOT IN (7, 207) AND k <> x.k0
 """)
 def src_iceberg_orc_data(spark, sf_dir):
-    """Iceberg ORC data files (r10) — the other non-parquet data
+    """Iceberg ORC data files — the other non-parquet data
     format the spec allows: a snapshot written as ORC reads through
     Spark's NATIVE vectorized ORC source and unions with a later
     parquet snapshot in one table (one scan group per file format);
     identity partition values re-attach through the shared broadcast
     file→values map (ORC exposes ``_metadata.file_path`` like any
     Spark file source), an equality delete applies ACROSS formats
-    via the same sequence-scoped anti-join, and (r11) a POSITION
+    via the same sequence-scoped anti-join, and a POSITION
     delete on an ORC file applies too — the targeted file reads
     through an Arrow stripe scan deriving exact row positions
     in-task, every untargeted ORC file staying on the native
@@ -1853,7 +1854,7 @@ SELECT 'w3', COUNT(*),
 FROM nation WHERE n_nationkey % 3 = 0
 """)
 def src_hudi_incremental(spark, sf_dir):
-    """Hudi INCREMENTAL query (r9) — the third query type next to
+    """Hudi INCREMENTAL query — the third query type next to
     snapshot and read-optimized, and the one CDC consumers poll: the
     latest state of every record key CHANGED in an instant window,
     unchanged rows never returned.  The fixture commits a base, a
@@ -1910,7 +1911,7 @@ SELECT 2,
 FROM nation
 """)
 def src_hudi_read(spark, sf_dir):
-    """Apache Hudi copy-on-write interop (r8) — the third table
+    """Apache Hudi copy-on-write interop — the third table
     format next to Delta and Iceberg: the ``.hoodie`` timeline's
     commit JSONs are replayed to resolve the latest file slice per
     file GROUP (`functions/hudi.py:live_hudi_files`), so a second
@@ -1959,7 +1960,7 @@ SELECT 'merged', COUNT(*), CAST(SUM(n_nationkey) AS BIGINT),
 FROM nation WHERE n_nationkey NOT IN (1, 7)
 """)
 def src_hudi_mor_read(spark, sf_dir):
-    """Apache Hudi MERGE-ON-READ interop (r9) — the write path real
+    """Apache Hudi MERGE-ON-READ interop — the write path real
     Hudi deployments default to for update-heavy tables: delta
     commits append typed blocks (Avro data, delete, rollback
     command) to per-file-group ``.log`` files instead of rewriting
@@ -2013,7 +2014,7 @@ SELECT COUNT(*) AS n, CAST(SUM(n_nationkey) AS BIGINT) AS key_sum,
 FROM nation WHERE n_nationkey <> 9
 """)
 def src_hudi_metadata_listing(spark, sf_dir):
-    """Hudi ``.hoodie/metadata`` table planning (r11): when the
+    """Hudi ``.hoodie/metadata`` table planning: when the
     internal metadata table exists, the file-slice view comes from
     its FILES partition — O(partitions) records decoded driver-side
     — instead of the O(timeline) commit-JSON replay (on a real
@@ -2060,8 +2061,8 @@ SELECT COUNT(*) AS n, CAST(SUM(n_nationkey) AS BIGINT) AS key_sum,
 FROM nation WHERE n_nationkey <> 9
 """)
 def src_hudi_metadata_hfile(spark, sf_dir):
-    """Hudi ``.hoodie/metadata`` planning over an HFILE base (r12,
-    VERDICT r11 task 4): real Hudi compacts its metadata table into
+    """Hudi ``.hoodie/metadata`` planning over an HFILE base:
+    real Hudi compacts its metadata table into
     HFile base files, so the listing path must decode HBase's HFile
     format — trailer, file-info (the record Avro schema rides there),
     DATA-block KeyValue cells — and fold the REAL-shaped
@@ -2092,7 +2093,7 @@ def src_hudi_metadata_hfile(spark, sf_dir):
         .withColumn("v", F.lit(-1).cast("bigint")),
         partition_field="g")
     write_hudi_metadata_fixture(spark, t)
-    # r13: FAST_DIFF-encoded + Snappy-compressed blocks — the
+    # FAST_DIFF-encoded + Snappy-compressed blocks — the
     # DATA_BLOCK_ENCODING/codec HBase-tuned deployments enable; the
     # listing must decode them (no timeline-replay fallback taken)
     compact_hudi_metadata_fixture(t, compression="snappy",
@@ -2117,7 +2118,7 @@ SELECT COUNT(*) AS n, CAST(SUM(n_nationkey) AS BIGINT) AS key_sum,
 FROM nation WHERE n_nationkey <> 9
 """)
 def src_hudi_log_block_formats(spark, sf_dir):
-    """Hudi HFILE + PARQUET log data blocks in ONE merge (r12):
+    """Hudi HFILE + PARQUET log data blocks in ONE merge:
     real writers choose among three data-block kinds —
     Avro (the default), HFile (what the metadata table writes), and
     Parquet (``hoodie.logfile.data.block.format``) — and a reader
@@ -2141,7 +2142,7 @@ def src_hudi_log_block_formats(spark, sf_dir):
     write_hudi_delta_fixture(
         spark, t, upserts=n.where(F.col("k") % 4 == 0)
         .withColumn("v", F.lit(-1).cast("bigint")),
-        block_format="hfile/lz4/diff")   # r13: encoded + compressed
+        block_format="hfile/lz4/diff")   # encoded + compressed
     write_hudi_delta_fixture(
         spark, t, upserts=n.where(F.col("k") % 5 == 0)
         .withColumn("v", F.lit(-2).cast("bigint")),
@@ -2160,7 +2161,7 @@ SELECT COUNT(*) AS n, CAST(SUM(n_nationkey) AS BIGINT) AS key_sum,
 FROM nation WHERE n_nationkey <> 3
 """)
 def src_hudi_log_only_table(spark, sf_dir):
-    """Hudi table consisting ONLY of log-only file groups (r11) —
+    """Hudi table consisting ONLY of log-only file groups —
     the shape of a freshly-bootstrapped streaming-ingest MOR table:
     every write so far is a deltacommit, no base parquet exists
     anywhere, so the merge schema recovers from the log's embedded
@@ -2214,8 +2215,8 @@ SELECT COUNT(*) AS n,
 FROM nation WHERE n_nationkey <> 3
 """)
 def src_hudi_nested_temporal(spark, sf_dir):
-    """Hudi MOR with TEMPORAL LEAVES INSIDE NESTED log payloads (r14,
-    VERDICT r13 task 1): the base carries ``arr:
+    """Hudi MOR with TEMPORAL LEAVES INSIDE NESTED log payloads:
+    the base carries ``arr:
     array<struct<ts:timestamp, d:date, v:bigint>>``, a deltacommit
     upserts every ``k % 5 == 0`` row's array (two elements, one with
     a NULL timestamp leaf) and deletes key 3 — timestamps and dates
@@ -2291,8 +2292,8 @@ SELECT COUNT(*) AS n,
 FROM nation
 """)
 def src_delta_type_widening(spark, sf_dir):
-    """Delta ``typeWidening`` reader feature (r14, VERDICT r13 task
-    2): the fixture commits INT data (top-level ``a`` AND inside
+    """Delta ``typeWidening`` reader feature: the
+    fixture commits INT data (top-level ``a`` AND inside
     struct ``s.x``), widens both to LONG via a metadata-only commit
     (minReaderVersion 3, ``delta.typeChanges`` history), then
     appends LONG rows beyond int range.  The read scans every file
@@ -2338,7 +2339,7 @@ SELECT COUNT(*) AS n,
 FROM nation
 """)
 def src_delta_variant_read(spark, sf_dir):
-    """Delta ``variantType`` reader feature (r14): semi-structured
+    """Delta ``variantType`` reader feature: semi-structured
     VARIANT columns — what Delta 4 writers publish for JSON-shaped
     data — read through Spark's native parquet VARIANT support: the
     schemaString's ``variant`` leaf scans straight through the
@@ -2381,7 +2382,7 @@ FROM nation
 """)
 def src_iceberg_avro_nested_evolution(spark, sf_dir):
     """Iceberg NESTED columns over AVRO data files through SCHEMA
-    EVOLUTION (r14) — the last format x evolution combination: the
+    EVOLUTION — the last format x evolution combination: the
     fixture writes nation rows as Avro data files with a struct and
     an array-of-struct column, renames the inner fields
     (``st.a -> alpha``, ``ar.element.a -> alpha``), then appends
@@ -2442,7 +2443,7 @@ SELECT COUNT(*) AS n,
 FROM nation WHERE n_nationkey <> 3
 """)
 def src_hudi_decimal_payloads(spark, sf_dir):
-    """Hudi MOR with DECIMAL log payloads (r14) — flat and inside
+    """Hudi MOR with DECIMAL log payloads — flat and inside
     ``array<struct<...>>`` alike: values ride the Avro logical
     decimal wire form (unscaled big-endian two's-complement bytes at
     the column's DECLARED scale) through the log blocks and revive
@@ -2503,12 +2504,12 @@ SELECT COUNT(*) AS n,
 FROM nation
 """)
 def src_iceberg_v3_defaults(spark, sf_dir):
-    """Iceberg FORMAT-VERSION 3 ``initial-default`` column defaults
-    (r15, VERDICT r14 task 1): columns added WITH DEFAULTS after the
+    """Iceberg FORMAT-VERSION 3 ``initial-default`` column defaults:
+    columns added WITH DEFAULTS after the
     first snapshot — bigint, string, decimal and date defaults — must
     read the DEFAULT (not null) from every pre-add data file, while
-    post-add files read their own values.  A by-null reader (the
-    pre-r15 behavior) breaks every aggregate here — the
+    post-add files read their own values.  A by-null reader
+    breaks every aggregate here — the
     silent-wrong-data class the v3 gate exists for.  Scale shape:
     identical to the evolved reader — the default is a literal column
     expression on the pre-add layout group's scan, zero per-row
@@ -2561,8 +2562,8 @@ SELECT (SELECT COUNT(*) FROM src) AS n_before,
 FROM r WHERE (g = 0 AND rn > 6) OR (g <> 0 AND rn > 3)
 """)
 def src_iceberg_v3_dv(spark, sf_dir):
-    """Iceberg FORMAT-VERSION 3 puffin DELETION VECTORS (r15, VERDICT
-    r14 task 1): a partitioned table upgraded to v3 takes one DV
+    """Iceberg FORMAT-VERSION 3 puffin DELETION VECTORS: a
+    partitioned table upgraded to v3 takes one DV
     snapshot deleting the first three row positions of every data
     file, then a REPLACEMENT DV for partition 0 widening its file's
     deletes to the first six (the spec allows at most one live DV per
@@ -2617,8 +2618,8 @@ SELECT COUNT(*) AS n,
 FROM nation
 """)
 def src_delta_variant_idmap(spark, sf_dir):
-    """Delta VARIANT under ``id``-mode column mapping (r15, VERDICT
-    r14 task 4): the data files carry the VARIANT logical type —
+    """Delta VARIANT under ``id``-mode column mapping: the data
+    files carry the VARIANT logical type —
     which pyarrow's footer reader refuses — AND commit-varying
     physical column names that only parquet FIELD IDS can resolve.
     The field-id tap falls back to the in-repo thrift
@@ -2671,7 +2672,7 @@ FROM (SELECT k, rid, 1 AS seq FROM a
       SELECT k, rid, 2 AS seq FROM b WHERE rn > 2)
 """)
 def src_iceberg_v3_row_lineage(spark, sf_dir):
-    """Iceberg v3 ROW LINEAGE (r15, VERDICT r14 task 8 follow-on):
+    """Iceberg v3 ROW LINEAGE:
     ``read_iceberg(row_lineage=True)`` materializes the spec's
     ``_row_id`` and ``_last_updated_sequence_number`` metadata
     columns — each file's first_row_id (explicit on carried entries,
@@ -2727,7 +2728,7 @@ SELECT 2 AS n_snapshots, 2 AS n_ancestors, 2 AS n_refs,
          AS BIGINT) AS max_part_records
 """)
 def src_iceberg_metadata_tables(spark, sf_dir):
-    """Iceberg METADATA TABLES (r15): the ``SELECT * FROM
+    """Iceberg METADATA TABLES: the ``SELECT * FROM
     tbl.snapshots|history|refs|manifests|files|partitions`` inspection
     surface, materialized from the same manifest walk planning does.
     A two-snapshot partitioned table (the second a FAST APPEND, so
@@ -2792,7 +2793,7 @@ SELECT CAST(3 AS BIGINT) AS n_commits,
        CAST(2 AS BIGINT) AS last_version
 """)
 def src_delta_history(spark, sf_dir):
-    """Delta DESCRIBE HISTORY (r15): per-commit version, monotonic
+    """Delta DESCRIBE HISTORY: per-commit version, monotonic
     effective timestamp, operation, and action counts from the same
     O(log-lines) walk replay does.  Three commits — partitioned
     create, append, and a remove of one partition's file — restated
@@ -2833,7 +2834,7 @@ SELECT CAST(1 AS BIGINT) AS n_commit,
 FROM nation WHERE n_nationkey <> 3
 """)
 def src_hudi_timeline(spark, sf_dir):
-    """Hudi TIMELINE inspection (r15): the completed-instant listing
+    """Hudi TIMELINE inspection: the completed-instant listing
     as a DataFrame — action-kind counts restated by construction
     (one CoW commit, two deltacommits), cross-checked against the
     table's CURRENT row count so the timeline provably matches the
@@ -2885,7 +2886,7 @@ SELECT CAST((SELECT COUNT(*) FROM src) AS BIGINT) AS n_inserts,
        CAST(4 AS BIGINT) AS n_ordinals
 """)
 def src_iceberg_changelog(spark, sf_dir):
-    """Iceberg CHANGELOG read (r15): the row-level change feed —
+    """Iceberg CHANGELOG read: the row-level change feed —
     completing the lakehouse CDF triad alongside Delta CDF and Hudi
     incremental.  Four snapshots: two partitioned appends, a
     partition delete (file removes), and — after a v3 upgrade — a
@@ -2942,7 +2943,7 @@ SELECT 'parquet' AS format,
 FROM nation
 """)
 def src_delta_detail(spark, sf_dir):
-    """Delta DESCRIBE DETAIL (r15): table-level facts — live file
+    """Delta DESCRIBE DETAIL: table-level facts — live file
     count (one per distinct partition value by construction),
     LOGICAL partition columns under name-mode column mapping, the
     mapping mode, and commit count — cross-checked against the
@@ -2996,8 +2997,8 @@ SELECT CAST(ordinal AS INT) AS ordinal, ctype,
 FROM b
 """)
 def src_iceberg_changelog_deletes(spark, sf_dir):
-    """Iceberg CHANGELOG over v2 DELETE FILES (r16, VERDICT r15 task
-    1): the merge-on-read shapes a production v2 table delivers
+    """Iceberg CHANGELOG over v2 DELETE FILES: the
+    merge-on-read shapes a production v2 table delivers
     row-level deletes as.  Five snapshots over one sorted data file:
     (1) insert; (2) a position-delete file for rows 0-9; (3) an
     OVERLAPPING position-delete file for rows 5-14 — newly dead must
@@ -3045,7 +3046,7 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n,
 FROM nation WHERE n_nationkey <> 0
 """)
 def src_iceberg_v3_variant(spark, sf_dir):
-    """Iceberg v3 ``variant`` columns (r16, VERDICT r15 task 4):
+    """Iceberg v3 ``variant`` columns:
     semi-structured VARIANT — what Spark 4 / Iceberg 1.8 writers emit
     for JSON-shaped data — read through Spark's native parquet
     VARIANT support: the schema's ``variant`` leaf scans straight
@@ -3099,8 +3100,8 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n,
 FROM r
 """)
 def src_iceberg_lineage_mixed(spark, sf_dir):
-    """Iceberg v3 ROW LINEAGE over a MIXED parquet+AVRO+ORC table
-    (r16, VERDICT r15 task 5): three snapshots write nation rows
+    """Iceberg v3 ROW LINEAGE over a MIXED parquet+AVRO+ORC table:
+    three snapshots write nation rows
     into one data file per format (parquet pre-upgrade, Avro and ORC
     after the v3 upgrade); the fold lazily assigns the pre-upgrade
     file's ids, fresh files inherit past them, so ``_row_id`` equals
@@ -3145,7 +3146,7 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n,
 FROM orders WHERE o_orderkey = 150
 """)
 def src_hudi_colstats_prune(spark, sf_dir):
-    """Hudi COLUMN_STATS data skipping (r16, VERDICT r15 task 7):
+    """Hudi COLUMN_STATS data skipping:
     the metadata table's column-stats index — per-base-file min/max
     folded from the parquet FOOTERS — prunes file slices before any
     job runs, the Hudi analog of the Iceberg manifest-level pruning.
@@ -3194,7 +3195,7 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n,
 FROM r
 """)
 def src_delta_row_tracking(spark, sf_dir):
-    """Delta ROW TRACKING (r16) — the Delta analog of Iceberg v3 row
+    """Delta ROW TRACKING — the Delta analog of Iceberg v3 row
     lineage: ``read_delta(row_tracking=True)`` appends ``_row_id``
     (the add action's ``baseRowId`` + the row's physical position,
     or the MATERIALIZED hidden column a rewrite leaves behind) and
@@ -3245,7 +3246,7 @@ SELECT CAST(ordinal AS INT) AS ordinal, ctype,
 FROM b
 """)
 def src_iceberg_changelog_view(spark, sf_dir):
-    """The PROCESSED Iceberg changelog view (r16) — what Iceberg's
+    """The PROCESSED Iceberg changelog view — what Iceberg's
     ``create_changelog_view`` procedure computes over the raw feed:
     (1) an UPSERT snapshot's same-ordinal delete+insert pairs
     sharing identifier values become ``update_before`` /
@@ -3291,7 +3292,7 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n,
 FROM orders WHERE o_orderkey = 151
 """)
 def src_hudi_bloom_prune(spark, sf_dir):
-    """Hudi BLOOM-FILTER data skipping (r16): the metadata table's
+    """Hudi BLOOM-FILTER data skipping: the metadata table's
     bloom_filters partition — per base file, a bloom over its
     ``_hoodie_record_key`` values, tied to the filter column through
     ``hoodie.table.recordkey.fields`` — prunes file slices on a
@@ -3334,7 +3335,7 @@ SELECT CAST(1 AS BIGINT) AS n_orphans,
 FROM nation WHERE n_nationkey % 2 = 0
 """)
 def src_iceberg_maintenance(spark, sf_dir):
-    """Iceberg table MAINTENANCE planning (r16): the two operations
+    """Iceberg table MAINTENANCE planning: the two operations
     a 100 TB estate runs daily — ``remove_orphan_files`` (a planted
     abandoned write is found; table bookkeeping never reported) and
     the ``expire_snapshots`` PLAN (keep_last retained; manifest
@@ -3391,7 +3392,7 @@ SELECT CAST(1 AS BIGINT) AS d_tombstoned,
 FROM nation WHERE n_nationkey % 2 = 0
 """)
 def src_lakehouse_vacuum_plans(spark, sf_dir):
-    """Delta VACUUM + Hudi CLEANER planning (r16) — with the
+    """Delta VACUUM + Hudi CLEANER planning — with the
     Iceberg expire/orphan pair this completes the maintenance triad
     a 100 TB estate runs daily.  Delta: one partition tombstoned
     (age past retention) and one planted aborted write are planned;

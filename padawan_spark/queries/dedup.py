@@ -55,7 +55,7 @@ def _shingles_spark_raw(d: DataFrame) -> DataFrame:
     """Word 3-shingles per doc WITH duplicates (1-based element_at) —
     no shuffle; feeds aggregations that are duplicate-insensitive.
 
-    r17 measured-then-reverted (guide §1.2): a compiled
+    Measured and not adopted: a compiled
     explode(sequence)+projection variant (no transform lambda — HOFs
     are CodegenFallback, interpreted per element) was set-identical and
     1.4x faster on an ISOLATED shingle+distinct microbench, but dead
@@ -465,7 +465,7 @@ def dedup_latest_version(spark, sf_dir):
     runs: among all versions of a (user, event_type) key, keep only the
     most recent row.  One window shuffle on the key, rank-1 filter; the
     (ts DESC, event_id DESC) tie-break makes the winner total and
-    engine-stable.  r16 (guide §2.3): the rank-1 window became
+    engine-stable.  The rank-1 winner is computed as
     max(struct(ts, event_id, value)) — the same winner exactly
     ((ts, event_id) is unique per key, so the payload field never
     participates in a comparison), but partial aggregation collapses
@@ -510,7 +510,7 @@ def dedup_contamination(spark, sf_dir):
     contaminated) is integer arithmetic, engine-exact."""
     # sh is referenced by the benchmark set and twice by the corpus side
     # (totals + overlap hits) but NOT checkpointed: all three references
-    # share the distinct Exchange, which AQE reuses at runtime (r16)
+    # share the distinct Exchange, which AQE reuses at runtime
     sh = _shingles_spark(load(spark, sf_dir, "documents", wide=True))
     bench = sh.where(F.col("doc_id") < 50).select("s").distinct()
     corpus = sh.where(F.col("doc_id") >= 50)
@@ -689,9 +689,9 @@ def dedup_segments(spark, sf_dir):
     freq = (segs.groupBy("seg")
             .agg(F.countDistinct("doc_id").alias("df")))
     kept = segs.join(freq.where(F.col("df") < _SEG_DF).select("seg"), "seg")
-    # n_segments straight from the scan (r16, guide §2.3): the explode
+    # n_segments straight from the scan: the explode
     # yields exactly ceil(n_tokens / W) rows per doc, so the per-doc
-    # total is a narrow projection — the old groupBy re-ran the whole
+    # total is a narrow projection — a groupBy would re-run the whole
     # tokenize+explode subtree and shuffled it back to one row per doc.
     tot = (d.select("doc_id", F.expr(_SPARK_TOKS).alias("t"))
            .where(F.size("t") > 0)

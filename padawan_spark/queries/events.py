@@ -242,8 +242,8 @@ GROUP BY 1, 2
 """)
 def ev_retention(spark, sf_dir):
     """Cohort retention matrix: users grouped by first-seen week, counted
-    distinct per week offset.  ONE aggregation over events (r16, guide
-    §2.3/§2.4): cohort = min(ts) week and the distinct active-week SET
+    distinct per week offset.  ONE aggregation over events:
+    cohort = min(ts) week and the distinct active-week SET
     ride the same user_id shuffle — the old two-pass form (cohort agg +
     distinct activity + join on user_id) scanned events twice and
     shuffled three times for the same rows (explode(collect_set(wk)) ==
@@ -437,7 +437,7 @@ def ev_journey_similarity(spark, sf_dir):
                      "ts", "event_id",
                      F.substring("event_type", 1, 1).alias("c")))),
                  lambda s: s["c"]), ""), 1, 20).alias("journey")))
-    # jb is self-joined but NOT checkpointed (r16): both join sides
+    # jb is self-joined but NOT checkpointed: both join sides
     # share jb's identical user_id Exchange, which AQE reuses at
     # runtime — the collect_list aggregation computes once either way
     # (measured 2.0 vs 2.2 task-sec, one serial barrier less)
@@ -558,7 +558,7 @@ def ev_rare_transitions(spark, sf_dir):
     # user_id Exchange, so the shuffle is computed once at runtime and
     # only the cheap post-shuffle window re-runs — an eager checkpoint
     # here writes an events-sized table to save less than it costs
-    # (measured r16: 1.4 vs 0.5 task-sec).  The out-weight
+    # (measured 1.4 vs 0.5 task-sec).  The out-weight
     # normalization is a window sum over the types²-sized count table
     # (guide §2.4: the old groupBy+join re-ran the count aggregation for
     # its second reference); cnt / cast(sum double) division unchanged.
@@ -725,8 +725,8 @@ def ev_downsample_lttb(spark, sf_dir):
                   * (F.col("value").cast("double") - F.col("ay"))
                   - (F.col("ax") - F.unix_micros("ts").cast("double"))
                   * (F.col("cy") - F.col("ay")))))
-    # argmax per bucket as a hash aggregate, not a window (r16, guide
-    # §2.3): min(struct(-area, ts, event_id)) picks exactly the
+    # argmax per bucket as a hash aggregate, not a window:
+    # min(struct(-area, ts, event_id)) picks exactly the
     # row_number-over-(area desc, ts asc, event_id asc) row — area is
     # abs() of finite-double arithmetic (never NaN, never -0.0), so
     # ascending -area IS descending area, and event_id makes the key

@@ -24,7 +24,7 @@ from .registry import load, query
 _D = 0.85     # damping
 _ITERS = 3    # fixed, unrolled in the oracle
 _DECG = "decimal(38,20)"
-# Iterative-loop lineage-truncation cadence (r17): checkpoint every
+# Iterative-loop lineage-truncation cadence: checkpoint every
 # N rounds, not every round — plan depth stays O(N) at real round
 # counts (the GraphX/MLlib checkpointInterval practice) while runs
 # shorter than the interval execute as ONE adaptive DAG with no
@@ -46,7 +46,7 @@ def _edges_spark(spark, sf_dir):
          .groupBy(F.col("event_type").alias("src"), "dst")
          .agg(F.count(F.lit(1)).alias("cnt")))
     # out-weight normalization as a window sum over the aggregated edge
-    # table (r16, guide §2.4): the old groupBy+join re-ran the whole
+    # table: a groupBy+join would re-run the whole
     # lead-window pair subtree for the second reference of e (Catalyst
     # does not dedupe); same bigint/bigint -> double division.
     wo = Window.partitionBy("src")
@@ -106,14 +106,14 @@ def _pagerank(edges, out_col: str):
     same policy as the CC convergence counts — folding it into the rank
     expression as a literal removes an aggregate+broadcast job per
     round, the standard GraphX/GraphFrames `numVertices` shape).
-    Lineage truncation is INTERVAL-based (r17, VERDICT r16 task 6):
+    Lineage truncation is INTERVAL-based:
     the rank table is single-referenced per round (one contrib join),
     so within a checkpoint interval the rounds compose into ONE plan
     that the final action executes as one adaptive DAG — no duplicated
     subtrees (nothing references r twice) and no per-round
-    job/persist barrier.  r16 checkpointed EVERY round; stage
-    profiling showed pagerank_users at 20 serial jobs for 3.5
-    executor-task-seconds — pure dispatch overhead at this SF.  A
+    job/persist barrier.  A checkpoint EVERY round ran pagerank_users
+    as 20 serial jobs for 3.5 executor-task-seconds — pure dispatch
+    overhead at this SF.  A
     checkpoint still fires every _CKPT_EVERY rounds so the plan depth
     stays bounded at real round counts (the GraphX/MLlib
     checkpointInterval practice; plan depth is O(interval), not
@@ -140,7 +140,7 @@ def _pagerank(edges, out_col: str):
     r = verts.select("v", (F.lit(1.0) / F.lit(n)).alias("r"))
     for i in range(_ITERS):
         if i == 0:
-            # round 1 needs no rank join (r17): r0 is the uniform
+            # round 1 needs no rank join: r0 is the uniform
             # constant 1/n for EVERY vertex, and every edge's src is in
             # verts by construction, so r0 ⋈ edges keeps every edge row
             # with r = 1/n — the same rows fall out of a direct edge
@@ -214,7 +214,7 @@ def _user_edges_spark(spark, sf_dir):
          .groupBy("src", "dst")
          .agg(F.count(F.lit(1)).alias("cnt")))
     # out-weight normalization as a window sum over the aggregated edge
-    # table (r16, guide §2.4): the old groupBy+join re-ran the whole
+    # table: a groupBy+join would re-run the whole
     # two-level pair-window subtree for the second reference of e
     # (Catalyst does not dedupe); same bigint/bigint -> double division.
     wo = Window.partitionBy("src")
@@ -475,8 +475,8 @@ def graph_community_lpa(spark, sf_dir):
           .distinct().localCheckpoint(eager=True))
     labels = ue.select(F.col("u").alias("vtx")).distinct() \
         .withColumn("lbl", F.col("vtx"))
-    # per-round argmax as a hash aggregate, not a window (r16, guide
-    # §2.3): min(struct(-cnt, lbl)) picks exactly the
+    # per-round argmax as a hash aggregate, not a window:
+    # min(struct(-cnt, lbl)) picks exactly the
     # row_number-over-(cnt desc, lbl asc) row (lbl unique per vtx
     # group, integer negation exact), with map-side partial
     # aggregation instead of a second full exchange + sort of the

@@ -536,7 +536,7 @@ _WEBP_SPECS = [(1,   13,   8,    {}),                       # literals only
                # color-indexing STACKED with subtract-green + a
                # predictor over the packed image + a color cache
                (7,   19,   11,   "palette_stacked"),
-               # r8: LOSSY (VP8 key frame) — MB-aligned flat tiles at
+               # LOSSY (VP8 key frame) — MB-aligned flat tiles at
                # qi=0 / filter 0 decode exactly (the flat-quant oracle
                # trick); uniform chroma so upsampling is a fixed point
                (8,   34,   22,   "vp8_flat"),
@@ -593,7 +593,7 @@ def mm_real_webp_decode(spark, sf_dir):
     checksum proves canonical prefix decoding (incl. the
     code-length-code with its 16/17/18 repeats), cache hashing,
     LZ77 distance mapping, and the inverse transforms all ran
-    correctly.  r8 adds LOSSY WebP: two real VP8 key frames
+    correctly.  LOSSY WebP rides too: two real VP8 key frames
     (:mod:`padawan_spark.functions.vp8` — bool decoder, token trees,
     WHT/iDCT, intra prediction; byte-identical to libwebp, pytest
     cross-validated) built as MB-aligned flat tiles at qi=0 where
@@ -643,7 +643,7 @@ def mm_real_webp_decode(spark, sf_dir):
 _TIFF_SPECS = [(1,   14,   9,    "grey", "MM",      2,    1,     1),
                (2,   10,   12,   "rgb",  "II",      5,    1,     1),
                (3,   8,    8,    "rgb",  "II",      None, 1,     1),
-               # r8: the compressed layouts scanned corpora ship —
+               # the compressed layouts scanned corpora ship —
                # LZW (early-change code widths), LZW with horizontal-
                # differencing predictor 2, and PackBits RLE
                (4,   21,   11,   "rgb",  "II",      4,    5,     1),
@@ -675,7 +675,7 @@ def mm_real_tiff_decode(spark, sf_dir):
     """REAL decoding of baseline TIFF — the scanned-document and
     scientific-imaging container: three fixtures (big-endian
     multi-strip greyscale, little-endian multi-strip RGB, single-strip
-    RGB — and, r8, LZW with the spec's early-change code widths, LZW
+    RGB — and LZW with the spec's early-change code widths, LZW
     with horizontal-differencing predictor 2, and PackBits RLE, the
     compressed layouts scanned corpora actually ship) flow through
     :func:`decode_image_pixels` — PIL when installed, else the
@@ -1146,7 +1146,7 @@ def _webp_anim_oracle() -> str:
 
 @query("mm_real_webp_anim", oracle=_webp_anim_oracle())
 def mm_real_webp_anim(spark, sf_dir):
-    """Animated WebP (VP8X + ANIM/ANMF, r8) — frame-accurate decode
+    """Animated WebP (VP8X + ANIM/ANMF) — frame-accurate decode
     with container-spec compositing, the web-corpus twin of the
     animated-GIF query: doc 1 exercises sub-frame offsets, overwrite
     rendering, and dispose-to-background (each presented canvas is
@@ -1185,7 +1185,7 @@ def mm_real_webp_anim(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# REAL video containers (r8): Motion-JPEG inside AVI (RIFF) and MP4
+# REAL video containers: Motion-JPEG inside AVI (RIFF) and MP4
 # (ISO BMFF) — the dominant container layouts of real video corpora —
 # plus a header-only metadata scan across all three containers.  The
 # MJPEG fixtures reuse the flat-quant constant-tile JPEG trick (exact
@@ -1225,8 +1225,8 @@ def _mjpeg_oracle(specs, every) -> str:
 
 @query("mm_real_video_avi", oracle=_mjpeg_oracle(_AVI_SPECS, _AVI_EVERY))
 def mm_real_video_avi(spark, sf_dir):
-    """REAL compressed-video frame sampling from the AVI container
-    (r8): Motion-JPEG streams built by the in-repo JPEG encoder flow
+    """REAL compressed-video frame sampling from the AVI container:
+    Motion-JPEG streams built by the in-repo JPEG encoder flow
     through :func:`sample_video_frames`, whose RIFF walk
     (`functions/video.py:decode_avi_py`) locates the ``vids`` stream's
     ``00dc`` chunks and decodes each with the baseline JPEG decoder.
@@ -1250,7 +1250,7 @@ def mm_real_video_avi(spark, sf_dir):
 
 @query("mm_real_video_mp4", oracle=_mjpeg_oracle(_MP4_SPECS, _MP4_EVERY))
 def mm_real_video_mp4(spark, sf_dir):
-    """REAL frame sampling from the MP4 / ISO-BMFF container (r8):
+    """REAL frame sampling from the MP4 / ISO-BMFF container:
     MJPEG samples addressed through the real sample tables — ``stsz``
     sizes, ``stsc`` chunk map, ``stco`` offsets into ``mdat``
     (`functions/video.py:extract_mp4_frames_py`) — then decoded with
@@ -1288,7 +1288,7 @@ def _video_meta_oracle() -> str:
 
 @query("mm_video_metadata", oracle=_video_meta_oracle())
 def mm_video_metadata(spark, sf_dir):
-    """Header-only video-container triage (r8): one AVI, one MP4, one
+    """Header-only video-container triage: one AVI, one MP4, one
     Y4M payload flow through :func:`scan_video_containers`, which reads
     ONLY the header structures (AVI ``hdrl``, MP4 ``moov``, the Y4M
     stream line) — never the frame payloads — and emits codec,
@@ -1317,7 +1317,7 @@ def mm_video_metadata(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# REAL telephony-audio decode (G.711) and MPEG-audio triage (r8).
+# REAL telephony-audio decode (G.711) and MPEG-audio triage.
 # G.711 mu-law/A-law expansion is formula-exact (the CCITT segment
 # arithmetic, cross-validated bit-identical to the classic CPython
 # audioop tables over all 256 codes in tests), so the DuckDB oracle
@@ -1359,7 +1359,7 @@ def _g711_oracle() -> str:
 
 @query("mm_real_g711_decode", oracle=_g711_oracle())
 def mm_real_g711_decode(spark, sf_dir):
-    """REAL G.711 telephony decode (r8): mu-law (WAV format 7) and
+    """REAL G.711 telephony decode: mu-law (WAV format 7) and
     A-law (format 6) payloads expand to 16-bit linear PCM through
     :func:`decode_audio` with the exact CCITT segment formulas
     (`functions/multimodal.py:ulaw_to_lin16`/`alaw_to_lin16`,
@@ -1411,7 +1411,7 @@ def _mp3_oracle() -> str:
 
 @query("mm_audio_mp3_scan", oracle=_mp3_oracle())
 def mm_audio_mp3_scan(spark, sf_dir):
-    """MPEG-audio corpus triage (r8): four fixture streams — CBR with
+    """MPEG-audio corpus triage: four fixture streams — CBR with
     an ID3v2 tag, VBR with a Xing tag frame (recognized and excluded
     from the audio frame count), an MPEG-2 low-sample-rate stream
     (576-sample frames), and a Layer II stream — flow through
@@ -1463,7 +1463,7 @@ def _ogg_oracle() -> str:
 
 @query("mm_audio_ogg_scan", oracle=_ogg_oracle())
 def mm_audio_ogg_scan(spark, sf_dir):
-    """Ogg/Vorbis + Ogg/Opus corpus triage (r8): fixture streams built
+    """Ogg/Vorbis + Ogg/Opus corpus triage: fixture streams built
     to the RFC 3533 page layout (real CRC-32s — the parser verifies
     every page and tests prove corruption is rejected) flow through
     :func:`scan_ogg_meta`: codec from the BOS identification header,
@@ -1492,7 +1492,7 @@ UNION ALL
 SELECT CAST(3 AS BIGINT), NULL, NULL, NULL, NULL, NULL, NULL
 """)
 def mm_audio_id3_tags(spark, sf_dir):
-    """ID3v2 attribution extraction (r8) — the audio twin of
+    """ID3v2 attribution extraction — the audio twin of
     mm_exif_meta: doc 1 carries a v2.3 tag (UTF-16 BOM text frames,
     TYER year), doc 2 a v2.4 tag (UTF-8, syncsafe frame sizes, TDRC),
     doc 3 a bare MPEG stream with no tag at all (all columns NULL —
@@ -1536,7 +1536,7 @@ def _sub_oracle() -> str:
 
 @query("mm_subtitle_parse", oracle=_sub_oracle())
 def mm_subtitle_parse(spark, sf_dir):
-    """Subtitle/caption cue extraction (r8): SRT and WebVTT payloads —
+    """Subtitle/caption cue extraction: SRT and WebVTT payloads —
     the aligned-text channel of a video corpus, the part a multimodal
     pipeline actually trains on — parse into (cue_idx, start_ms,
     end_ms, text) rows via `functions/video.py:parse_subtitles_py`.
@@ -1588,7 +1588,7 @@ UNION ALL SELECT 11, 'caption', 'srt'
 UNION ALL SELECT 12, 'unknown', 'unknown'
 """)
 def mm_media_triage(spark, sf_dir):
-    """TOTAL mixed-corpus triage (r8): twelve payloads spanning every
+    """TOTAL mixed-corpus triage: twelve payloads spanning every
     media family this engine understands — images, four audio
     families, three video containers, both caption formats, and pure
     garbage — classify by magic bytes alone via
@@ -1644,7 +1644,7 @@ SELECT CAST(2 AS BIGINT), 44100, 1, 32, CAST(300 AS BIGINT),
                AS BIGINT) FROM range(0, 300) t(i))
 """)
 def mm_real_wav_deep(spark, sf_dir):
-    """Deep-sample WAV decode (r8): 24-bit PCM (3-byte LE, reduced to
+    """Deep-sample WAV decode: 24-bit PCM (3-byte LE, reduced to
     int16 by arithmetic >>8 — the libsndfile dtype=int16 convention)
     and IEEE-float WAV (format code 3, x32768 full-scale, fixtures on
     exact 1/32768 multiples so the conversion closes in integers).
@@ -1709,7 +1709,7 @@ def _apng_oracle() -> str:
 
 @query("mm_real_apng_frames", oracle=_apng_oracle())
 def mm_real_apng_frames(spark, sf_dir):
-    """Animated PNG (r8) — the PNG member of the GIF/WebP/APNG
+    """Animated PNG — the PNG member of the GIF/WebP/APNG
     animated-web trio: acTL/fcTL/fdAT chunk walk, per-frame zlib
     datastreams decoded through the full PNG unfilter machinery, and
     spec compositing — doc 1 exercises sub-frame offsets, overwrite

@@ -677,7 +677,7 @@ SELECT COUNT(*) AS n, CAST(SUM(n_regionkey) AS BIGINT) AS rk_sum,
 FROM nation
 """)
 def op_schema_evolution(spark, sf_dir):
-    """Lakehouse schema evolution (r8, ``write_parquet(append=True,
+    """Lakehouse schema evolution (``write_parquet(append=True,
     merge_schema=True)`` — the Delta/Iceberg ADD COLUMN story): the
     table is written with two columns, then an append with an extra
     ``n_name`` column evolves the manifest schema.  Every scan reads
@@ -718,7 +718,7 @@ SELECT n_regionkey, COUNT(*) AS n, CAST(MAX(n_nationkey) AS BIGINT) AS max_key
 FROM nation WHERE n_nationkey < 10 GROUP BY n_regionkey
 """)
 def op_timetravel_timestamp(spark, sf_dir):
-    """Timestamp time travel (r8, ``scan_parquet(as_of=...)`` — Delta's
+    """Timestamp time travel (``scan_parquet(as_of=...)`` — Delta's
     ``timestampAsOf``): two commits get distinct archived-snapshot
     mtimes (pinned explicitly so the fixture never races the clock),
     and a read as-of an instant between them resolves to the FIRST
@@ -759,7 +759,7 @@ SELECT g, COUNT(*) AS cnt, CAST(SUM(k) AS BIGINT) AS sum_k
 FROM final GROUP BY g
 """)
 def op_incremental_agg(spark, sf_dir):
-    """refresh_aggregate (r8): an incrementally maintained
+    """refresh_aggregate: an incrementally maintained
     materialized aggregate — the flagship change-data-feed consumer.
     Build the source (nation as (k, g), indexed by k), full-refresh
     the MV (cnt + sum(k) per group g), then DELETE keys 5-9 and MERGE
@@ -802,7 +802,7 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n,
 FROM orders WHERE o_custkey = 371
 """)
 def op_bloom_point_lookup(spark, sf_dir):
-    """Per-file Bloom-filter index over a NON-index column (r8, the
+    """Per-file Bloom-filter index over a NON-index column (the
     Delta/Hudi bloom-index idea): the orders table is written indexed
     by o_orderdate (manifest range pruning serves date predicates),
     then ``build_bloom_index`` computes each file's bloom of
@@ -834,7 +834,7 @@ UNION ALL SELECT 2, 4, 0, 1, CAST(20 AS BIGINT)
 UNION ALL SELECT 3, 5, 2, 1, CAST(22 AS BIGINT)
 """)
 def op_describe_history(spark, sf_dir):
-    """describe_history (r8, the DESCRIBE HISTORY operational surface):
+    """describe_history (the DESCRIBE HISTORY operational surface):
     three commits on a 5-rows-per-file nation layout — write (5 files),
     a whole-file-aligned DELETE of keys 5-9 (drops exactly one file,
     rewrites none), and a MERGE updating keys 12/13 (rewrites their
@@ -889,8 +889,8 @@ SELECT rg, 'opt', COUNT(*),
 FROM g GROUP BY rg
 """)
 def op_footer_stats(spark, sf_dir):
-    """Parquet footer-statistics audit (r8,
-    ``scan_parquet_footers``): a deterministic file — nation sorted by
+    """Parquet footer-statistics audit
+    (``scan_parquet_footers``): a deterministic file — nation sorted by
     key, 10-row row groups, one nullable column — is footer-scanned
     (pyarrow, O(footer) bytes per file, distributed over the file
     list) and every (row group, column) statistic is checked against
@@ -936,7 +936,7 @@ WHERE o_orderkey % 7 = 0 AND o_orderkey < 150000 AND o_orderkey % 3 <> 0
   AND o_orderkey BETWEEN 700 AND 7000
 """)
 def op_import_iceberg(spark, sf_dir):
-    """Iceberg-to-native MIGRATION end-to-end (r9), completing the
+    """Iceberg-to-native MIGRATION end-to-end, completing the
     import pair next to op_import_delta: an existing Iceberg table —
     partitioned, carrying a v2 EQUALITY delete so the import must
     apply merge-on-read semantics rather than copy files — is read
@@ -985,7 +985,7 @@ SELECT COUNT(*) AS n_window,
 FROM nation WHERE n_nationkey BETWEEN 8 AND 16
 """)
 def op_import_delta(spark, sf_dir):
-    """The MIGRATION path end-to-end (r8): an existing Delta table is
+    """The MIGRATION path end-to-end: an existing Delta table is
     read through the dependency-free log reader, written INTO the
     padawan lakehouse as an indexed manifest table (reindex +
     range-partitioned write), and then served by an index-range SLICE

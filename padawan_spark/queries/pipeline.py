@@ -388,7 +388,7 @@ def pipe_importance_resampling(spark, sf_dir):
     d = load(spark, sf_dir, "documents", wide=True)
     tok = d.select("doc_id", "lang",
                    F.explode(F.expr(_SPARK_TOKS)).alias("w"))
-    # BOTH unigram LMs from ONE aggregation (r16, guide §2.3/§2.4):
+    # BOTH unigram LMs from ONE aggregation:
     # the target count is a conditional count over the same exploded
     # scan, so corpus-vs-target needs one explode + one shuffle, not
     # two of each plus a vocabulary join (tf == the old left-join +

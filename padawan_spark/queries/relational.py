@@ -360,7 +360,7 @@ def q17(spark, sf_dir):
     l = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#1")
     # per-part average restricted to Brand#1 partkeys via a broadcast
-    # SEMI-join before the aggregation (r16, guide §3.2): the final
+    # SEMI-join before the aggregation: the final
     # inner join with p drops every other partkey anyway, and the
     # per-key average is unchanged by dropping other keys — so the
     # aggregation shuffles (and the part_avg broadcast carries) ~1/25th
@@ -550,9 +550,9 @@ def q2(spark, sf_dir):
                         F.col("l_suppkey").alias("sk"))
               .agg(F.min(F.col("l_extendedprice") / F.col("l_quantity"))
                    .alias("cost")))
-    # per-part min as a window over the AGGREGATED supply rows (r16,
-    # guide §2.4): the old supply.groupBy(pk).agg(min) + join-back
-    # re-ran the lineitem scan + (pk, sk) aggregation for the m branch
+    # per-part min as a window over the AGGREGATED supply rows: a
+    # supply.groupBy(pk).agg(min) + join-back would re-run the
+    # lineitem scan + (pk, sk) aggregation for the m branch
     # (Catalyst does not dedupe the shared subtree).  The window's
     # exchange is keyed on the high-cardinality pk over (pk, sk)-
     # collapsed rows; the equality filter keeps exactly the rows the

@@ -403,7 +403,7 @@ def sim_kmeans_train(spark, sf_dir):
     # magnitudes.  Scale-9 element casts round identically to the
     # oracle's DECIMAL(38,9) casts, so dist values match bit-for-bit.
     dfold = "decimal(30,9)"
-    # r17 measured-then-reverted (guide §1.2): two attempts to replace
+    # Measured and not adopted: two attempts to replace
     # this interpreted higher-order-function fold with compiled
     # expression trees made it WORSE, not better —
     # (a) an unrolled sequential (acc + sq).cast chain (128 nested
@@ -429,7 +429,7 @@ def sim_kmeans_train(spark, sf_dir):
                                     F.lit(0).cast(dfold),
                                     lambda acc, v: (acc + v).cast(dfold))
                         .alias("dist")))
-        # argmin as a hash aggregate, not a window (r16, guide §2.3):
+        # argmin as a hash aggregate, not a window:
         # min(struct(dist, j)) picks exactly the row row_number-over-
         # (dist asc, j asc) picked (j is unique per vec, struct compare
         # is lexicographic), but partial aggregation collapses the K
@@ -441,7 +441,7 @@ def sim_kmeans_train(spark, sf_dir):
         # centroid update: explode ONLY the assigned vectors (K*dims
         # result groups, partial aggregation absorbs the fan-out), then
         # re-pack per-cluster component means into broadcastable arrays
-        # n_members rides the SAME aggregation (r16): every assigned
+        # n_members rides the SAME aggregation: every assigned
         # vector contributes exactly one posexploded row per dim, so the
         # per-(j, dim) row count IS the cluster size — the old separate
         # assign.groupBy(j) re-ran the whole final-round distance+argmin
@@ -533,8 +533,8 @@ def sim_pq_encode(spark, sf_dir):
              .agg(F.sum(((F.col("val") - F.col("cval"))
                          * (F.col("val") - F.col("cval"))).cast(d9))
                   .alias("d2")))
-    # argmin per (vec, sub) as a hash aggregate, not a window (r16,
-    # guide §2.3): min(struct(d2, code)) selects exactly the
+    # argmin per (vec, sub) as a hash aggregate, not a window:
+    # min(struct(d2, code)) selects exactly the
     # row_number-over-(d2 asc, code asc) row (code unique per group),
     # with map-side partial aggregation instead of a full sort of the
     # N*M*K distance table.
@@ -599,8 +599,8 @@ def sim_pq_adc_topk(spark, sf_dir):
              .agg(F.sum(((F.col("val") - F.col("cval"))
                          * (F.col("val") - F.col("cval"))).cast(d9))
                   .alias("d2")))
-    # argmin per (vec, sub) as a hash aggregate, not a window (r16,
-    # guide §2.3): same row as row_number-over-(d2 asc, code asc),
+    # argmin per (vec, sub) as a hash aggregate, not a window: same
+    # row as row_number-over-(d2 asc, code asc),
     # map-side partial aggregation, no sort of the N*M*K table.
     codes = (dists.groupBy("vec_id", "sub")
              .agg(F.min(F.struct("d2", "code")).alias("m"))
@@ -733,8 +733,8 @@ def sim_ann_ivfpq(spark, sf_dir):
              .agg(F.sum(((F.col("val") - F.col("cval"))
                          * (F.col("val") - F.col("cval"))).cast(d9))
                   .alias("d2")))
-    # argmin per (vec, sub) as a hash aggregate, not a window (r16,
-    # guide §2.3): same row as row_number-over-(d2 asc, code asc),
+    # argmin per (vec, sub) as a hash aggregate, not a window: same
+    # row as row_number-over-(d2 asc, code asc),
     # map-side partial aggregation, no sort of the N*M*K table.
     codes = (dists.groupBy("vec_id", "sub")
              .agg(F.min(F.struct("d2", "code")).alias("m"))

@@ -216,14 +216,14 @@ FROM (SELECT n_nationkey FROM nation WHERE n_regionkey = 3
       ORDER BY n_nationkey LIMIT 2)
 """)
 def streaming_delta_cdf(spark, sf_dir):
-    """STREAM the change feed of an EXISTING Delta table (r9) — the
+    """STREAM the change feed of an EXISTING Delta table — the
     interop twin of ``streaming_cdf_tail``: offsets are Delta commit
     versions, each micro-batch reads the change files of the versions
     in its span (``cdc`` actions win per the protocol; other commits
     derive inserts from data-changing adds and deletes from removes
     with partition values recovered from the pre-remove state).  The
     fixture commits a create, a partition delete, a cdc-explicit
-    UPDATE, and (r11) a DELETION-VECTOR commit — the remove+re-add of
+    UPDATE, and a DELETION-VECTOR commit — the remove+re-add of
     the same file a modern DELETE writes; the derived feed emits
     delete rows for exactly the newly-dead positions, decoded from
     the DV bitmap inside the read task (new DV minus old DV).  The
@@ -287,7 +287,7 @@ SELECT 'w3', COUNT(*),
 FROM nation WHERE n_nationkey % 3 = 0
 """)
 def streaming_hudi_incremental(spark, sf_dir):
-    """STREAM a Hudi table's INCREMENTAL query (r10) — the CDC
+    """STREAM a Hudi table's INCREMENTAL query — the CDC
     surface Hudi consumers poll, automated: offsets are commit
     instants, each micro-batch emits the latest state of every
     record key changed in its instant window, and the tasks read
@@ -356,7 +356,7 @@ SELECT 'a3', COUNT(*), CAST(SUM(n_nationkey + 600) AS BIGINT)
 FROM nation
 """)
 def streaming_iceberg_appends(spark, sf_dir):
-    """STREAM an Iceberg table's incremental APPEND scan (r10) — the
+    """STREAM an Iceberg table's incremental APPEND scan — the
     spec's incremental consumption model: offsets are snapshot ids,
     each micro-batch reads exactly the data files ADDED by the new
     snapshots (identity partition values re-attached per file, under
@@ -382,7 +382,7 @@ def streaming_iceberg_appends(spark, sf_dir):
     t = os.path.join(tempfile.mkdtemp(prefix="padawan_siapp_"),
                      "tbl")
     s1 = write_iceberg_fixture(spark, n, t, partition_by=("g",))
-    # r13: FAST-APPEND commits (the real-writer shape — the new
+    # FAST-APPEND commits (the real-writer shape — the new
     # manifest holds only the new adds, prior manifests carry
     # verbatim) so the driver check covers the carried-manifest
     # incremental planner
@@ -416,7 +416,7 @@ SELECT 2 * COUNT(*) AS n,
 FROM nation
 """)
 def streaming_iceberg_skip_deletes(spark, sf_dir):
-    """Iceberg's streaming-skip-delete-snapshots option (r12): a
+    """Iceberg's streaming-skip-delete-snapshots option: a
     DELETE snapshot (partition drop) sits between two appends in the
     stream span — with ``skipDeleteSnapshots`` the stream walks the
     span snapshot by snapshot, the delete contributes nothing, and
@@ -474,8 +474,8 @@ SELECT 'after_ff', 2 * COUNT(*),
 FROM nation WHERE n_nationkey % 2 = 1
 """)
 def streaming_iceberg_follow_branch(spark, sf_dir):
-    """Iceberg appends stream FOLLOWING a branch (r13, VERDICT r12
-    task 5): ``followRef=dev`` bounds latestOffset at the branch
+    """Iceberg appends stream FOLLOWING a branch:
+    ``followRef=dev`` bounds latestOffset at the branch
     HEAD, not the snapshot-log tail — snapshot 2 exists but does not
     stream while ``dev`` points at snapshot 1; retargeting ``dev``
     forward (snapshot 2's parent chain contains snapshot 1) streams
@@ -545,7 +545,7 @@ FROM nation WHERE n_nationkey IN (12, 13, 14)
 """)
 def streaming_cdf_tail(spark, sf_dir):
     """Stream ROW-LEVEL CHANGES of a lakehouse table — the streaming
-    twin of ``read_changes`` (``padawan_cdf`` custom source, r8): the
+    twin of ``read_changes`` (``padawan_cdf`` custom source): the
     table is written, a range DELETE and a MERGE upsert commit on top,
     and the change feed replays the full history as micro-batches —
     the initial load as per-file-parallel inserts (append fast path),
@@ -608,7 +608,7 @@ SELECT g, COUNT(*) AS cnt, CAST(SUM(k) AS BIGINT) AS sum_k
 FROM final GROUP BY g
 """)
 def streaming_mv_refresh(spark, sf_dir):
-    """STREAMING materialized-view maintenance (r8): the ``padawan_cdf``
+    """STREAMING materialized-view maintenance: the ``padawan_cdf``
     change feed drives ``foreachBatch``, and every micro-batch folds
     its row-level changes into a count+sum aggregate table with the
     same delta algebra as batch ``refresh_aggregate``
@@ -673,8 +673,8 @@ SELECT CAST(3 AS BIGINT) AS n_batches,
 FROM nation
 """)
 def streaming_rate_limited_tail(spark, sf_dir):
-    """Backpressure on the manifest stream (r8,
-    ``maxVersionsPerTrigger``): the stream starts against the first
+    """Backpressure on the manifest stream
+    (``maxVersionsPerTrigger``): the stream starts against the first
     commit (batch 1: 8 rows), then TWO more commits land while it is
     live and the cap of one version per micro-batch drains that
     2-version backlog as TWO bounded batches (9 rows max) instead of
@@ -752,8 +752,8 @@ SELECT 'delete', CAST((SELECT COUNT(*) FROM odds) + 2 AS BIGINT),
             + (SELECT SUM(k) FROM evens WHERE rn <= 2) AS BIGINT)
 """)
 def streaming_iceberg_changes(spark, sf_dir):
-    """Iceberg CHANGELOG as a STREAM (r15,
-    ``padawan_iceberg_changes``): the streaming twin of
+    """Iceberg CHANGELOG as a STREAM
+    (``padawan_iceberg_changes``): the streaming twin of
     ``read_iceberg_changes`` — per micro-batch, the new snapshots'
     row-level changes (added files' rows as inserts, removed files'
     rows as deletes, v3 deletion-vector deltas as deletes), tagged
@@ -829,7 +829,7 @@ SELECT CAST(ordinal AS INT) AS ordinal, ctype,
 FROM b
 """)
 def streaming_iceberg_changes_deletes(spark, sf_dir):
-    """The changelog STREAM over v2 DELETE FILES (r16): the
+    """The changelog STREAM over v2 DELETE FILES: the
     streaming twin of ``src_iceberg_changelog_deletes`` — the same
     five merge-on-read snapshots (insert, position deletes,
     overlapping position deletes, equality delete hitting an

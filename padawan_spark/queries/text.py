@@ -244,7 +244,7 @@ def text_tfidf(spark, sf_dir):
     # exchange reuse would not stop the corpus being tokenized twice
     tf = (toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
           .localCheckpoint(eager=True))
-    # df DERIVED from tf (r16, guide §2.3/§2.4): tf already holds one row
+    # df DERIVED from tf: tf already holds one row
     # per distinct (doc, term), so COUNT(DISTINCT doc_id) per term over
     # the raw tokens == COUNT(*) per term over tf — same integers, but
     # the corpus is exploded/scanned ONCE and the df aggregation shuffles
@@ -296,10 +296,10 @@ def _bm25_spark(spark, sf_dir):
     Spark twin of ``_BM25_DUCK_SCORES``."""
     d = load(spark, sf_dir, "documents", wide=True)
     toks = d.select("doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("term"))
-    # dl WITHOUT an explode (r16, guide §2.3): the per-doc token count is
+    # dl WITHOUT an explode: the per-doc token count is
     # just size() of the token array — a narrow projection inside
-    # whole-stage codegen, zero shuffle (the old path exploded the whole
-    # corpus a second time and aggregated it back to the same number).
+    # whole-stage codegen, zero shuffle (an explode would scan the whole
+    # corpus a second time and aggregate it back to the same number).
     # size > 0 keeps the row set identical to the explode+groupBy (docs
     # with no tokens never reached dl).  avg over integer-valued doubles
     # is exact (< 2^53), so corpus stats are bit-identical.
@@ -770,7 +770,7 @@ def text_char_entropy(spark, sf_dir):
     d = load(spark, sf_dir, "documents", wide=True)
     ch = d.select("doc_id", F.posexplode(F.split("text", "")).alias("i", "c"))
     # cnt feeds both the per-doc totals and the entropy fold but is
-    # NOT checkpointed (r16): both references share cnt's identical
+    # NOT checkpointed: both references share cnt's identical
     # (doc_id, c) Exchange, which AQE reuses at runtime — the explode
     # computes once either way, and skipping the eager pin removes a
     # serial barrier (measured 12.0 vs 10.9 task-sec, wall 1.4 vs 2.6).
@@ -795,7 +795,7 @@ def text_char_entropy(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# BPE tokenizer TRAINING (r8): learn merge rules from the corpus — the
+# BPE tokenizer TRAINING: learn merge rules from the corpus — the
 # step upstream of every token-counting operator.  Each round counts
 # adjacent symbol pairs over the word-frequency table and merges the
 # argmax (count desc, then lexicographic) everywhere.  Merge
@@ -917,7 +917,7 @@ SELECT doc_id,
 FROM aug
 """)
 def text_unicode_nfc(spark, sf_dir):
-    """Unicode hygiene for a crawled corpus (r8): NFC-normalization
+    """Unicode hygiene for a crawled corpus: NFC-normalization
     check and replacement-character (U+FFFD, the decoder's "something
     was already broken" marker) census.  A third of the docs get a
     combining-acute suffix (non-NFC composed form), a third a U+FFFD —
@@ -986,7 +986,7 @@ SELECT doc_id, COUNT(*) AS n_words,
 FROM tok GROUP BY doc_id
 """)
 def text_bpe_apply(spark, sf_dir):
-    """BPE tokenizer APPLICATION (r8) — the other half of
+    """BPE tokenizer APPLICATION — the other half of
     text_bpe_train: a 10-rule ordered merge list tokenizes the corpus
     and emits per-document token counts.  Scale shape is the one real
     tokenizers use on a corpus: tokenize each DISTINCT word once (the
@@ -1049,7 +1049,7 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
 FROM scored
 """)
 def text_bigram_lm_score(spark, sf_dir):
-    """Bigram language-model QUALITY scoring (r16) — the
+    """Bigram language-model QUALITY scoring — the
     perplexity-filter pass a training pipeline runs to drop
     incoherent documents: an add-k-smoothed bigram LM is fit on the
     corpus itself (``P(w2|w1) = (c(w1,w2)+0.5) / (c(w1)+0.5·V)``),

@@ -49,14 +49,14 @@ _DEFAULT_CONF = {
     # under the UTC session timezone pinned above
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     "spark.sql.autoBroadcastJoinThreshold": "64MB",
-    # r16 (guide §5): long-lived sessions accumulate DEAD broadcast/RDD
+    # Long-lived sessions accumulate DEAD broadcast/RDD
     # state — ContextCleaner frees blocks only after a JVM GC clears its
     # weak references, and G1 on a large heap can run an entire
     # multi-query session without one (measured: 20 queries in, the
     # driver heap held 4.1 GB of which 270 MB was live, and the next
     # allocation-heavy query ran 2-4x slower; a forced full GC restored
     # it).  The default 30 min interval is longer than many whole
-    # sessions.  r17 (ADVICE r16): the LIBRARY default is 5 min — a
+    # sessions.  the LIBRARY default is 5 min — a
     # forced full GC every minute is too aggressive for production
     # drivers with big heaps (10 s pauses) — and the benchmark driver
     # pins 1 min via extra_conf (bench.py), where the heap is 8 GB and

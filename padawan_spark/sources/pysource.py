@@ -14,8 +14,8 @@ partitioned integer sequence (id, square, bucket) — the Python analog of
 oracle query.
 
 Every file-backed reader here yields **pyarrow RecordBatches** from
-``read()`` (r12, VERDICT r11 task 1 — supported by the Python Data
-Source API on this PySpark): change files decode via pyarrow, DV
+``read()`` (supported by the Python Data Source API on this
+PySpark): change files decode via pyarrow, DV
 position sets apply as Arrow compute masks, partition values and
 change metadata attach as typed constant columns, and the batch
 crosses to the JVM over Arrow — no per-row Python anywhere on the
@@ -42,7 +42,7 @@ _SCHEMA = StructType([
 
 def _sequence_batch(lo: int, hi: int):
     """One Arrow record batch of the deterministic sequence — the
-    source generates vectorized (r12), never row-at-a-time python."""
+    source generates vectorized, never row-at-a-time python."""
     import numpy as np
     import pyarrow as pa
     ids = np.arange(lo, hi, dtype=np.int64)
@@ -125,7 +125,7 @@ class SequenceSource(DataSource):
 def _aligned_batches(tb, spark_schema, const=None, col_of=None):
     """Yield ``pyarrow.RecordBatch``es of table ``tb`` aligned to the
     declared Spark schema — the batch fast path of every custom
-    reader (r12, VERDICT r11 task 1: a Python data source ``read()``
+    reader (a Python data source ``read()``
     may yield Arrow record batches directly, so file-backed change
     sets never surface as per-row Python objects).  Columns are
     picked by NAME (through ``col_of`` logical→physical renames),
@@ -268,7 +268,7 @@ class _ManifestTailReader(DataSourceStreamReader):
         self.path = options["path"]
         self.spark_schema = schema
         self._seen_id = None   # first non-null table id observed this run
-        # backpressure (r8): cap how many snapshot versions one
+        # backpressure: cap how many snapshot versions one
         # micro-batch may admit (0 = unlimited).  A capped stream
         # replays a backlog as bounded batches instead of one giant
         # catch-up batch — the Delta maxFilesPerTrigger idea at version
@@ -289,8 +289,7 @@ class _ManifestTailReader(DataSourceStreamReader):
         table existed carry ``id=null`` forever (initialOffset on an
         empty path), so the offset-level identity check alone never
         activates for such streams — this run-level stamp closes that
-        window from the first batch where ``table_id()`` materializes
-        (ADVICE r5)."""
+        window from the first batch where ``table_id()`` materializes."""
         if tid is None:
             return tid
         if self._seen_id is None:
@@ -404,7 +403,7 @@ class _ManifestTailReader(DataSourceStreamReader):
         if partition.value is None:
             return
         import pyarrow.parquet as pq
-        # Arrow-batch path (r12): whole added files stream as record
+        # Arrow-batch path: whole added files stream as record
         # batches — a backfill commit of 10^8 rows never crosses the
         # Python row boundary
         yield from _aligned_batches(pq.read_table(partition.value),
@@ -540,7 +539,7 @@ class _ManifestCDFReader(_ManifestTailReader):
         if kind == "rows":
             # whole-file insert/delete commits — the UNBOUNDED change
             # shape (a backfill append emits entire files) — stream as
-            # Arrow record batches (r12)
+            # Arrow record batches
             _k, path, ver, ctype = partition.value
             yield from _aligned_batches(
                 pq.read_table(path), self.spark_schema,
@@ -565,7 +564,7 @@ class _ManifestCDFReader(_ManifestTailReader):
                 "__sign", pa.array([sign] * tb.num_rows,
                                    type=pa.int64()))
 
-        # vectorized MULTISET DIFFERENCE (r12): one Arrow hash
+        # vectorized MULTISET DIFFERENCE: one Arrow hash
         # aggregation over added(+1) ∪ removed(−1); verbatim
         # copy-on-write survivors land on net == 0 and vanish INSIDE
         # Arrow — python touches only the rows that actually changed,
@@ -628,7 +627,7 @@ class ManifestCDFSource(DataSource):
 
 
 # ---------------------------------------------------------------------------
-# Avro container source (r8): Spark ships Avro only as an external
+# Avro container source: Spark ships Avro only as an external
 # package, so the engine reads Object Container Files through the
 # dependency-free decoder in functions/avro.py plugged into the Python
 # Data Source API — real schema from the file header, one task per
@@ -641,7 +640,7 @@ class ManifestCDFSource(DataSource):
 class _AvroReader(DataSourceReader):
     def __init__(self, options, schema=None):
         self.files = _avro_files(options)
-        # intra-file parallelism (r9): files above split_bytes are
+        # intra-file parallelism: files above split_bytes are
         # divided at BLOCK boundaries by a driver-side frame walk
         # (~20 bytes I/O per block), so one multi-GB file reads as
         # many tasks instead of one
@@ -693,7 +692,7 @@ class _AvroReader(DataSourceReader):
                 yield (tuple(row[i] for i in order) if order
                        else row)
             return
-        # Arrow-batch emission (r12): the decoded primitive columns
+        # Arrow-batch emission: the decoded primitive columns
         # build typed arrays directly, so the per-value Spark tuple
         # converters never run — the python Avro decode is the only
         # row-wise work left, and it is the format's nature
@@ -749,7 +748,7 @@ class AvroSource(DataSource):
 
 
 # ---------------------------------------------------------------------------
-# Delta CDF stream source (r9): the streaming twin of
+# Delta CDF stream source: the streaming twin of
 # functions.delta.read_delta_changes — offsets are Delta commit
 # versions, each micro-batch reads the change files of the versions in
 # (start, end]: commits carrying ``cdc`` actions use only those
@@ -774,7 +773,7 @@ class _DeltaCDFStreamReader(DataSourceStreamReader):
         self.names = list(schema.names)
         self.types = {f.name: f.dataType.simpleString()
                       for f in schema.fields}
-        # column mapping (r10): logical -> physical parquet column
+        # column mapping: logical -> physical parquet column
         # for 'name' mode; partitionValues are physically keyed in
         # BOTH modes (they use the metadata physicalName).  'id' mode
         # additionally matches each file's columns by parquet footer
@@ -795,7 +794,7 @@ class _DeltaCDFStreamReader(DataSourceStreamReader):
                 if fid is not None:
                     self.fid_of[int(fid)] = f["name"]
                 if not isinstance(f["type"], str):
-                    # nested column in a MAPPED table (r13): the read
+                    # nested column in a MAPPED table: the read
                     # task renames inner struct fields back to their
                     # logical names via a zero-copy arrow view
                     self.nested_json[f["name"]] = f["type"]
@@ -837,7 +836,7 @@ class _DeltaCDFStreamReader(DataSourceStreamReader):
                 "is unrecoverable")
         # rel -> (partitionValues, deletionVector descriptor | None),
         # entering the span: initialized from the NEWEST CHECKPOINT
-        # <= lo and only the JSON after it (r12, VERDICT r11 task 2)
+        # <= lo and only the JSON after it
         # — a log-retention-cleaned table streams as long as a
         # checkpoint covers the cleaned prefix, and stream-start
         # planning costs O(commits since checkpoint), not O(all
@@ -869,7 +868,7 @@ class _DeltaCDFStreamReader(DataSourceStreamReader):
             # it attaches a deletion vector (remove old add + re-add
             # the SAME file with the DV descriptor).  Its change rows
             # are the NEWLY-dead positions (new DV minus old DV), not
-            # a remove-all/insert-all pair (r11, VERDICT r10 #3).
+            # a remove-all/insert-all pair.
             repl = ({ad["path"] for ad in adds_all}
                     & {rm["path"] for rm in removes_all})
             events = []  # (kind, rel, pv, include_dv, exclude_dv)
@@ -931,8 +930,8 @@ class _DeltaCDFStreamReader(DataSourceStreamReader):
         pv = dict(pv_items)
         tb = pq.read_table(full)
         # DV position filters decode IN THIS TASK (never the driver)
-        # and apply as ARROW MASKS over the physical row positions
-        # (r12): include = emit only these positions (the newly-dead
+        # and apply as ARROW MASKS over the physical row positions:
+        # include = emit only these positions (the newly-dead
         # rows of an in-place DV rewrite); exclude = skip these
         # (already-dead rows of a tombstoned/pre-DV'd file).  No
         # per-row python set probe anywhere.
@@ -984,7 +983,7 @@ class _DeltaCDFStreamReader(DataSourceStreamReader):
         if self.nested_json:
             # mapped NESTED columns: inner struct fields carry
             # physical names in the file — view them back to the
-            # logical names (zero-copy, r13)
+            # logical names (zero-copy)
             from ..functions.nested import arrow_logical_view
             for c, tj in self.nested_json.items():
                 fc = col_of.get(c, c)
@@ -1017,11 +1016,11 @@ class DeltaCDFSource(DataSource):
     """``spark.readStream.format("padawan_delta_cdf")`` — stream the
     change feed of an existing Delta table; schema = table columns +
     ``_change_type`` + ``_commit_version``.  Column-mapped tables
-    stream under their LOGICAL names (r10): ``name`` mode resolves
+    stream under their LOGICAL names: ``name`` mode resolves
     through the schema's physicalName metadata, ``id`` mode by each
     file's parquet footer field ids inside the read task.  Live-file
     state entering a span initializes from the newest CHECKPOINT
-    ``<= start`` (r12): a log-retention-cleaned table streams as long
+    ``<= start``: a log-retention-cleaned table streams as long
     as a checkpoint covers the cleaned prefix, and stream-start
     planning is O(commits since checkpoint); only the commits INSIDE
     the span need their own JSON (a checkpoint cannot reconstruct a
@@ -1048,7 +1047,7 @@ class DeltaCDFSource(DataSource):
 
 
 # ---------------------------------------------------------------------------
-# Hudi INCREMENTAL streaming source (r10): the CDC surface Hudi
+# Hudi INCREMENTAL streaming source: the CDC surface Hudi
 # consumers poll — each micro-batch emits the LATEST state of every
 # record key changed in the new instant window, reading ONLY the file
 # slices the window's commits touched (partitionToWriteStats pruning,
@@ -1137,7 +1136,7 @@ class _HudiIncrementalStreamReader(DataSourceStreamReader):
                     raise NotImplementedError(
                         f"hudi log block type {blk['type']}")
         # 2. the base file splits on the touched-key set with ARROW
-        #    compute (r12, VERDICT r11 task 1): rows no log touches
+        #    compute: rows no log touches
         #    either pass through as record batches (when their own
         #    commit time is in the window) or drop WITHOUT ever
         #    materializing as python objects; ONLY rows whose key the
@@ -1173,7 +1172,7 @@ class _HudiIncrementalStreamReader(DataSourceStreamReader):
                 pass_tb, self.spark_schema,
                 col_of={"_commit_instant": "_hoodie_commit_time"})
 
-        # temporal conversion shared with the batch MOR decode (r14):
+        # temporal conversion shared with the batch MOR decode:
         # log payloads ride Avro logical types (micros / epoch-day
         # ints), parquet base values come back tz-aware — the reviver
         # normalizes both to naive-UTC, through nested types too
@@ -1230,9 +1229,9 @@ class HudiIncrementalSource(DataSource):
 
 
 # ---------------------------------------------------------------------------
-# Iceberg incremental-APPEND streaming source (r10): the spec's
+# Iceberg incremental-APPEND streaming source: the spec's
 # incremental scan — offsets are COMMIT-ORDER POSITIONS in the
-# snapshot log (ADVICE r10: snapshot ids are random longs, so id
+# snapshot log (snapshot ids are random longs, so id
 # comparison would drop a newer-but-smaller id), each micro-batch
 # reads exactly the data files ADDED by the snapshots in its span.  Per the spec, only append snapshots may be consumed
 # incrementally: a span whose file set shrank (delete/replace/
@@ -1248,7 +1247,7 @@ class _IcebergAppendsStreamReader(DataSourceStreamReader):
             raise ValueError(
                 "padawan_iceberg_appends: startingRef is exclusive "
                 "with startingSnapshotId")
-        # r13 (VERDICT r12 task 5): FOLLOW a branch across
+        # FOLLOW a branch across
         # retargets — latestOffset tracks the named branch's HEAD
         # instead of the snapshot-log tail, so fast-forwards stream
         # their new snapshots; a retarget that rewrites history (the
@@ -1280,7 +1279,7 @@ class _IcebergAppendsStreamReader(DataSourceStreamReader):
                                     s.get("sequence-number", 0),
                                     s["snapshot-id"]))]
 
-    # ADVICE r10: real Iceberg snapshot ids are RANDOM longs — a
+    # real Iceberg snapshot ids are RANDOM longs — a
     # newer snapshot may carry a smaller id, so id comparison as the
     # offset would silently skip it (dropped data).  Offsets are the
     # POSITION in the commit-ordered snapshot list instead ("how many
@@ -1290,7 +1289,7 @@ class _IcebergAppendsStreamReader(DataSourceStreamReader):
     def _initial_index(self):
         start = self.start_snapshot
         if self.start_ref:
-            # r12: start AT a named tag/branch — the ref resolves
+            # start AT a named tag/branch — the ref resolves
             # once, to the snapshot it points at when the stream
             # starts (consumption begins AFTER that snapshot)
             import json as _json
@@ -1391,9 +1390,9 @@ class _IcebergAppendsStreamReader(DataSourceStreamReader):
         snaps = self._snapshot_ids()
         # walk the span SNAPSHOT BY SNAPSHOT: each snapshot's added
         # files come from ONLY the manifests that snapshot itself
-        # added (functions.iceberg.added_data_files — r13, ADVICE
-        # r12: the previous live-set diff decoded the FULL manifest
-        # list once per snapshot, making first-trigger planning
+        # added (functions.iceberg.added_data_files — a live-set diff
+        # would decode the FULL manifest list once per snapshot,
+        # making first-trigger planning
         # O(backlog_snapshots x manifests); this is O(added files)
         # over the whole span).  Non-append snapshots raise per the
         # spec — unless the caller opted into Iceberg's streaming
@@ -1431,7 +1430,7 @@ class _IcebergAppendsStreamReader(DataSourceStreamReader):
             for p, pv, f, sp in new_files:
                 added_files.append((p, tuple(sorted(pv.items())),
                                     f, sp))
-        # r12: every spec data format streams — parquet and ORC read
+        # every spec data format streams — parquet and ORC read
         # as Arrow tables in the task, Avro through the in-repo
         # decoder (row path: that decoder is row-wise by nature);
         # unknown formats still gate loudly
@@ -1445,24 +1444,24 @@ class _IcebergAppendsStreamReader(DataSourceStreamReader):
         # resolved under each file's OWN spec
         from ..functions.iceberg import _schema_fields_json
         fld_ids, _n_schemas = _schema_inventory(self.path)
-        # nested columns (r13): the task views their inner struct
+        # nested columns: the task views their inner struct
         # fields to the schema's CURRENT names, verified against the
         # file's nested field ids
         nested_items = tuple(sorted(
             (nm, _json.dumps(f["type"]))
             for nm, f in _schema_fields_json(self.path).items()
             if not isinstance(f["type"], str)))
-        # r12 (VERDICT r11 task 5): the field-id map rides each
+        # the field-id map rides each
         # partition so the read TASK resolves columns by the file's
         # parquet footer PARQUET:field_id — a schema-evolved table
         # (renamed columns, multiple schema versions) streams
         # correctly; the multi-schema gate is gone
         fid_items = tuple(sorted(
             (fid, name) for name, fid in fld_ids.items()))
-        # v3 initial-defaults (r15): a defaulted column added AFTER a
+        # v3 initial-defaults: a defaulted column added AFTER a
         # file's snapshot must stream as the DEFAULT, not null — the
-        # same silent-NULL class the r14 probe caught in this stream
-        # for renamed nested leaves.  Values resolve once at plan
+        # same silent-NULL class as renamed nested leaves in this
+        # stream.  Values resolve once at plan
         # time (an unsupported default type gates loudly here).
         from ..functions.iceberg import _ice_default_py, _ice_type_ddl
         dflt_items = tuple(sorted(
@@ -1511,7 +1510,7 @@ class _IcebergAppendsStreamReader(DataSourceStreamReader):
                 node_of[logical] = f
             conv = {}
             if nested_items:
-                # nested-EVOLVED avro (r14): renamed INNER fields
+                # nested-EVOLVED avro: renamed INNER fields
                 # resolve per the writer schema's nested id
                 # attributes — without this a pre-rename file's
                 # renamed leaves would stream as silent NULLs
@@ -1537,7 +1536,7 @@ class _IcebergAppendsStreamReader(DataSourceStreamReader):
                           if c in src_idx else dflt.get(c))
                     for c in self.names)
             return
-        # columns match by FIELD ID from the file's own footer (r12):
+        # columns match by FIELD ID from the file's own footer:
         # a file written before a rename carries the old physical
         # name but the same id, so the current logical name resolves
         # to it here instead of silently nulling.  Parquet stamps
@@ -1557,7 +1556,7 @@ class _IcebergAppendsStreamReader(DataSourceStreamReader):
             if fid is not None and int(fid) in name_of_fid:
                 col_of[name_of_fid[int(fid)]] = fld.name
         if nested_items:
-            # nested columns (r13): view inner struct fields to the
+            # nested columns: view inner struct fields to the
             # schema's current names (zero-copy; verified against
             # the file's nested field ids — a rename streams, a
             # reorder/add gates)
@@ -1613,7 +1612,7 @@ class IcebergAppendsSource(DataSource):
         return _IcebergAppendsStreamReader(self.options, schema)
 
 
-# Iceberg CHANGELOG stream (r15): the streaming twin of
+# Iceberg CHANGELOG stream: the streaming twin of
 # functions.iceberg.read_iceberg_changes — per micro-batch, the
 # row-level insert/delete changes of the new snapshots (added files'
 # rows, removed files' rows, v3 deletion-vector deltas), tagged
@@ -1690,7 +1689,7 @@ class _IcebergChangesStreamReader(DataSourceStreamReader):
         by_id = {s["snapshot-id"]: s
                  for s in meta.get("snapshots", [])}
         # identity partition values attach by SOURCE COLUMN, resolved
-        # under each file's own spec (ADVICE r15: an identity field
+        # under each file's own spec (an identity field
         # whose NAME differs from its source column must still fill
         # that column — keying the const by field name silently
         # null-fills it; the batch changelog and the appends stream
@@ -1703,7 +1702,7 @@ class _IcebergChangesStreamReader(DataSourceStreamReader):
             for s, sp in _raw_specs(meta).items()}
         # field-id map + v3 initial-defaults ride every partition so
         # the task resolves a renamed column to its old physical name
-        # and fills columns absent from pre-add files (r16 — the
+        # and fills columns absent from pre-add files (the
         # appends stream's shape; threaded through the partition
         # tuple because read() runs on a worker-side copy of this
         # reader, not the driver instance)
@@ -1714,7 +1713,7 @@ class _IcebergChangesStreamReader(DataSourceStreamReader):
                                  _ice_type_ddl(f["type"]), nm))
             for nm, f in _schema_fields_json(self.path).items()
             if f.get("initial-default") is not None))
-        # nested columns (r16): the task views inner struct fields
+        # nested columns: the task views inner struct fields
         # to the schema's CURRENT names, verified against the file's
         # nested field ids — the appends stream's shape; with this
         # the changes stream reads EVERY schema-evolution class the
@@ -1733,7 +1732,7 @@ class _IcebergChangesStreamReader(DataSourceStreamReader):
         # status-based per-snapshot planning (shared with the batch
         # changelog): only the manifests each snapshot itself added
         # decode — O(changed entries), never a live-set walk.  v2
-        # delete files (r16): position-delete targets resolve by a
+        # delete files: position-delete targets resolve by a
         # column-pruned driver read of the NEW delete files'
         # ``file_path`` column (planning metadata, O(delete file));
         # an equality delete's affected set is the parent's live
@@ -1842,7 +1841,7 @@ class _IcebergChangesStreamReader(DataSourceStreamReader):
         filter to this file's path, equality files match null-safely
         under the strict ``seq < dseq`` scope, a DV decodes its
         bitmap.  Equality columns resolve by footer FIELD ID on
-        evolved tables (r16 — a delete file or data file written
+        evolved tables (a delete file or data file written
         before a rename carries the old physical name; reading by
         the current name would null-fill and silently skip the
         delete) and gate loudly when unresolvable."""
@@ -1932,7 +1931,7 @@ class _IcebergChangesStreamReader(DataSourceStreamReader):
                 base = set(_read_puffin_dv(*old))
                 pos = [x for x in pos if x not in base]
             tb = tb.take(sorted(pos))
-        # schema evolution (r16): the file's footer field ids
+        # schema evolution: the file's footer field ids
         # resolve renamed columns to their old physical names,
         # defaulted columns absent from pre-add files attach as
         # typed constants, and NESTED columns re-view their inner
@@ -1959,7 +1958,7 @@ class _IcebergChangesStreamReader(DataSourceStreamReader):
                             tb.column(idx).combine_chunks(),
                             _json3.loads(tj),
                             id_key=b"PARQUET:field_id"))
-        # partition FIELD name -> SOURCE column (ADVICE r15): the
+        # partition FIELD name -> SOURCE column: the
         # manifest's partition tuple keys by field name; the row's
         # column is the spec's source — identical for the common
         # same-named identity field, different after a field rename
@@ -1987,14 +1986,14 @@ class IcebergChangesSource(DataSource):
     removed files' rows minus their already-dead rows, v3
     deletion-vector deltas — a replacement vector contributes only
     its NEW positions — and rows newly dead under v2
-    position-delete / equality-delete files the snapshot added,
-    r16), each row tagged ``_change_type`` /
+    position-delete / equality-delete files the snapshot added),
+    each row tagged ``_change_type`` /
     ``_commit_snapshot_id``.  Snapshots whose operation is
     ``replace`` (compactions) emit nothing.  Options:
     ``startingSnapshotId`` (consume AFTER it),
     ``maxSnapshotsPerTrigger``.  Parquet data files only; EVERY
-    schema-evolution class the batch changelog reads streams too
-    (r16): columns resolve by the file's footer field ids in the
+    schema-evolution class the batch changelog reads streams too:
+    columns resolve by the file's footer field ids in the
     task, initial-defaults fill pre-add files, and nested columns
     re-view their inner fields to the current names by nested field
     id."""

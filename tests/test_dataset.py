@@ -1470,6 +1470,69 @@ def test_merge_rows_rewrite_set_is_key_membership(spark, tmp_path):
     out2.assert_disjoint()
 
 
+def _int_keyed_table(spark, path):
+    """20 rows with an INT key ``k`` in 4 files of 5 keys each."""
+    Dataset(spark, spark.range(20).selectExpr("CAST(id AS INT) AS k",
+                                              "CAST(id * 10 AS INT) AS v"),
+            index_columns=("k",)).repartition(5).write_parquet(path)
+
+
+def test_merge_rows_casts_batch_to_table_types(spark, tmp_path):
+    """A pandas batch carries int64 keys; merge_rows writes them with the
+    table's recorded INT type so the change feed reads every file with
+    one schema, and a key that does not fit an INT fails the merge
+    without publishing a version or leaving a file behind."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from padawan_spark import list_versions, merge_rows, read_changes
+
+    p = str(tmp_path / "mrgcast")
+    _int_keyed_table(spark, p)
+    before = set(scan_parquet(spark, p)._files)
+    merge_rows(spark, p, from_pandas(
+        spark, pd.DataFrame({"k": [3, 12, 100], "v": [-1, -2, -3]}),
+        index_columns=("k",)))
+    got = {(r._change_type, r.k, r.v) for r in read_changes(spark, p, 1).collect()}
+    assert got == {("update_preimage", 3, 30), ("update_postimage", 3, -1),
+                   ("update_preimage", 12, 120), ("update_postimage", 12, -2),
+                   ("insert", 100, -3)}
+    added = set(scan_parquet(spark, p)._files) - before
+    assert added
+    assert {pq.read_schema(f).field("k").type for f in added} == {pa.int32()}
+
+    versions = list_versions(p)
+    files = set(os.listdir(p))
+    # key 7 rewrites a file, 2**40 inserts past the spared files after it
+    with pytest.raises(Exception, match="CAST_OVERFLOW"):
+        merge_rows(spark, p, from_pandas(
+            spark, pd.DataFrame({"k": [7, 2 ** 40], "v": [0, 0]}),
+            index_columns=("k",)))
+    assert list_versions(p) == versions
+    assert {f for f in os.listdir(p) if f.endswith(".parquet")} \
+        == {f for f in files if f.endswith(".parquet")}
+
+
+def test_dataset_writers_leave_no_persistent_rdd(spark, tmp_path):
+    """Writing, a merge over two regions, a delete and a compaction pin
+    nothing: the session's persistent RDD count is unchanged."""
+    from padawan_spark import compact_parquet, delete_rows, merge_rows
+
+    jsc = spark.sparkContext._jsc
+    pinned = jsc.getPersistentRDDs().size()
+    p = str(tmp_path / "nopin")
+    _int_keyed_table(spark, p)
+    # key 1 rewrites the first file; 100 inserts past the three spared ones
+    merge_rows(spark, p, Dataset(
+        spark, spark.createDataFrame([(1, 0), (100, 0)], "k int, v int"),
+        index_columns=("k",)))
+    delete_rows(spark, p, (8,), (11,))
+    out = compact_parquet(spark, p, 10)
+    assert sorted(r.k for r in out.df.collect()) \
+        == [k for k in range(20) if not 8 <= k <= 11] + [100]
+    assert jsc.getPersistentRDDs().size() == pinned
+
+
 def test_read_changes_append_fast_path_and_plan(spark, tmp_path):
     """r8: a pure-append commit takes the fast path — added rows are
     tagged insert directly, with NO ExceptAll (a needless full shuffle of

@@ -79,6 +79,7 @@ def main() -> None:
         with redirect_stdout(buf):
             df.explain("formatted")
         plan_path = os.path.join(HERE, "plans", "r17", f"{name}_{tag}.txt")
+        os.makedirs(os.path.dirname(plan_path), exist_ok=True)
         with open(plan_path, "w") as fh:
             fh.write(buf.getvalue())
         best = None
