@@ -976,7 +976,8 @@ def _commit(spark: SparkSession, path: str, frames: list[DataFrame] | None,
     """The commit every table writer ends with.
 
     Each of ``frames`` is appended to ``path`` in turn as new data files
-    (``frames=None`` adopts the parquet files already there); a failed
+    (``frames=None`` adopts the parquet files there that neither ``old``
+    nor any retained snapshot lists); a failed
     write removes what earlier frames added, which no manifest lists and
     ``vacuum`` would never reclaim.  Only added files are statted, and
     empty ones are dropped (``dataset.py:340-347``).  The new manifest
@@ -987,7 +988,11 @@ def _commit(spark: SparkSession, path: str, frames: list[DataFrame] | None,
     rewritten when asked for or already present, so ``scan_parquet`` and
     ``scan_parquet_pruned`` always see the same files.  Writers that
     read-modify-write the manifest call this inside the commit lock."""
-    before = set() if frames is None else set(_list_parquet(path))
+    old = old or _meta.Manifest()
+    before = (set(_list_parquet(path)) if frames is not None else
+              set(old.files).union(*(
+                  _meta.load_manifest(path, version=v).files
+                  for v in _meta.list_versions(path))))
     try:
         for df in frames or ():
             df.write.mode("append").parquet(path)
@@ -1001,7 +1006,6 @@ def _commit(spark: SparkSession, path: str, frames: list[DataFrame] | None,
                         StructType.fromJson(json.loads(schema_json))
                         if schema_json else None)
     added = [f for f in paths if paths[f] in stats]
-    old = old or _meta.Manifest()
 
     def _extend(old_vals, j):
         if keep and old_vals is None:
@@ -1220,9 +1224,19 @@ def write_metadata(spark: SparkSession, path: str,
     """Retro-fit a manifest onto a directory of foreign parquet files
     (``write_metadata.py:22-79``): distributed stats job, empty files
     dropped.  It commits like every writer: under the commit lock, as a
-    new version snapshot, refreshing the manifest table if there is one."""
+    new version snapshot, refreshing the manifest table if there is one.
+    On a table with a manifest it keeps the listed files and their stats
+    and adopts only files no retained snapshot lists, so the files a
+    rewrite superseded (kept for time travel until ``vacuum``) stay out;
+    the index columns must match the table's, as for an append."""
+    ix = tuple(index_columns)
     with _meta.commit_lock(path, "write_metadata"):
-        _commit(spark, path, None, index_columns, None)
+        old = (_meta.load_manifest(path) if _meta.has_manifest(path)
+               else _meta.Manifest(index_columns=ix))
+        _require(old.index_columns == ix, AppendError,
+                 f"index columns differ: {old.index_columns} vs {ix}")
+        _commit(spark, path, None, ix, old.schema_json, old=old,
+                keep=range(len(old.files)))
 
 
 def compact_parquet(spark: SparkSession, path: str,
@@ -1502,24 +1516,23 @@ def read_changes(spark: SparkSession, path: str, from_version: int,
     key present on both sides of one commit is an update, keys on one
     side only are pure inserts/deletes).
 
-    Scale shape: each commit is diffed by reading ONLY the files that
-    commit added or removed (manifest set difference — file-count work
-    on the driver, no table scan); rows copy-on-write carried over
-    unchanged (survivors of a rewritten file) cancel out via a
-    multiset ``EXCEPT ALL`` on the full row, so a one-day delete on a
-    100 TB corpus yields a one-day read; an append commit takes a fast
-    path that tags the added rows ``insert`` directly (no removed
-    files → no EXCEPT ALL, no shuffle of the appended data), and a
-    whole-file drop the symmetric ``delete`` path.  The update
-    classification joins the change set against itself on the index
-    key with NULL-SAFE equality (``<=>``) — delete_rows can remove
-    rows whose index keys are NULL under null-first range semantics,
-    and plain equality would silently split their updates into
-    insert+delete — O(changes), never O(table).  Replaying a long
-    history stays plan-bounded: every 8 change-bearing commits the
-    accumulated union is ``localCheckpoint``-ed (eagerly — a
-    months-long replay materializes intermediate change sets instead
-    of building an unbounded lazy plan)."""
+    Only the files each commit added or removed are read, all in one
+    scan.  From the manifests, every such file gets a ``(version, +1)``
+    tag per commit that added it and a ``(version, -1)`` tag per commit
+    that removed it, and a broadcast join on the file path gives each
+    row one copy per tag.  A commit that only adds or only removes files has
+    nothing to cancel, so its rows are tagged ``insert`` or ``delete``
+    directly.  The rows of a commit that does both (a copy-on-write
+    delete, merge or compaction) are summed by sign per full row: rows
+    rewritten verbatim sum to 0 and drop out, and every other row repeats
+    ``|sum|`` times, the multiset difference EXCEPT ALL gives.  A key
+    whose ``(version, *index)`` window holds both a positive and a
+    negative sum is an update; window partitions group NULL keys
+    together, so NULL keys (which ``delete_rows`` removes under
+    null-first range semantics) classify like any other.  This is the
+    rule of the ``padawan_cdf`` stream.  The plan has the same size for
+    any number of commits, and building it pins nothing and runs no job
+    (beyond the listing job Spark runs for more than 32 files)."""
     versions = _meta.list_versions(path)
     if versions and from_version < versions[0]:
         raise ValueError(
@@ -1547,86 +1560,52 @@ def read_changes(spark: SparkSession, path: str, from_version: int,
              "records a schema (every snapshot in the span is an empty "
              "table); cannot build a change feed")
     cols = schema.names
-    empty = spark.createDataFrame([], schema)
-
-    def _ver(df: DataFrame, v: int) -> DataFrame:
-        return (df.withColumn("_commit_version", F.lit(v).cast("bigint"))
-                .select(*cols, "_commit_version", "_change_type"))
-
-    def _rows(files):
-        return (_read_files(spark, [os.path.join(path, f) for f in files],
-                            schema).select(*cols) if files else None)
-
-    chunks: list[DataFrame] = []
+    one_sided: list[tuple] = []         # (file, version, sign) tags
+    two_sided: list[tuple] = []
     for v_prev, v in zip(span, span[1:]):
-        prev, cur = mans[v_prev], mans[v]
-        cur_set, prev_set = set(cur.files), set(prev.files)
-        removed = [f for f in prev.files if f not in cur_set]
-        added = [f for f in cur.files if f not in prev_set]
-        if not removed and not added:
-            continue
-        after, before = _rows(added), _rows(removed)
-        if before is None:
-            # pure append: every added row is an insert — no carried-over
-            # rows can exist, so skip the EXCEPT ALL shuffle entirely
-            chunks.append(_ver(after.withColumn(
-                "_change_type", F.lit("insert")), v))
-            continue
-        if after is None:
-            # whole files dropped without rewrite: pure deletes
-            chunks.append(_ver(before.withColumn(
-                "_change_type", F.lit("delete")), v))
-            continue
-        # rows rewritten verbatim into new files are not changes
-        inserts = after.exceptAll(before)
-        deletes = before.exceptAll(after)
-        ix = list(cur.index_columns)
-        if ix:
-            # the changed-key set is O(changes), small by contract —
-            # broadcast both the build join and the classification
-            # probes so the plan is deterministic (broadcast hash join)
-            # regardless of autoBroadcastJoinThreshold / runtime stats
-            upd_keys = F.broadcast(
-                inserts.select(*ix).distinct().alias("ik")
-                .join(F.broadcast(deletes.select(*ix).distinct()
-                                  ).alias("dk"),
-                      on=_ord.keys_eq(ix, "ik", "dk"), how="inner")
-                .select(*[F.col(f"ik.{c}").alias(c) for c in ix])
-                .withColumn("__upd", F.lit(1)))
+        prev, cur = set(mans[v_prev].files), set(mans[v].files)
+        added, removed = cur - prev, prev - cur
+        tags = two_sided if added and removed else one_sided
+        tags += [(os.path.abspath(os.path.join(path, f)), v, sign)
+                 for files, sign in ((added, 1), (removed, -1))
+                 for f in files]
 
-            def _classify(side: DataFrame, hit: str, miss: str) -> DataFrame:
-                return (side.alias("s")
-                        .join(upd_keys.alias("uk"),
-                              on=_ord.keys_eq(ix, "s", "uk"), how="left")
-                        .select(*[F.col(f"s.{c}") for c in cols],
-                                F.when(F.col("uk.__upd").isNotNull(), hit)
-                                 .otherwise(miss).alias("_change_type")))
-            inserts = _classify(inserts, "update_postimage", "insert")
-            deletes = _classify(deletes, "update_preimage", "delete")
-        else:
-            inserts = inserts.withColumn("_change_type", F.lit("insert"))
-            deletes = deletes.withColumn("_change_type", F.lit("delete"))
-        chunks.append(_ver(inserts, v).unionByName(_ver(deletes, v)))
-    base = (empty.withColumn("_commit_version", F.lit(0).cast("bigint"))
-            .withColumn("_change_type", F.lit("")))
-    if not chunks:
-        return base
-    # bound plan depth on long histories: fold the per-commit unions and
-    # materialize every 8 change-bearing commits so the lazy plan never
-    # grows unbounded in commit count
-    out, pending = None, []
-    for ch in chunks:
-        pending.append(ch)
-        if len(pending) == 8:
-            merged = functools.reduce(lambda a, b: a.unionByName(b), pending)
-            if out is not None:
-                merged = out.unionByName(merged)
-            out = merged.localCheckpoint(eager=True)
-            pending = []
-    if pending:
-        merged = functools.reduce(lambda a, b: a.unionByName(b), pending)
-        out = merged if out is None else out.unionByName(merged)
-    return out
+    def _tagged(tags: list[tuple]) -> DataFrame:
+        tag_df = spark.createDataFrame(
+            tags, "__path string, _commit_version bigint, __sign int")
+        return (_read_files(spark, sorted({t[0] for t in tags}), schema)
+                .withColumn("__path", _file_path())
+                .join(F.broadcast(tag_df), "__path"))
+
+    sign = F.col("__sign")
+    parts = []
+    if one_sided:
+        parts.append(_tagged(one_sided).withColumn(
+            "_change_type", F.when(sign > 0, "insert").otherwise("delete")))
+    if two_sided:
+        net = (_tagged(two_sided).groupBy("_commit_version", *cols)
+               .agg(F.sum(sign).alias("__sign")).where(sign != 0))
+        upd = F.lit(False)
+        # one index per table history: append and write_metadata reject
+        # a different one, and an overwrite restarts the versions
+        ix = list(mans[span[-1]].index_columns)
+        if ix:
+            from pyspark.sql.window import Window
+            w = Window.partitionBy("_commit_version", *ix)
+            upd = (F.max(sign).over(w) > 0) & (F.min(sign).over(w) < 0)
+        parts.append(net.withColumn(
+            "_change_type",
+            F.when(sign > 0, F.when(upd, "update_postimage")
+                   .otherwise("insert"))
+            .when(upd, "update_preimage").otherwise("delete"))
+            .withColumn("__sign", F.explode(
+                F.array_repeat(sign, F.abs(sign).cast("int")))))
+    if not parts:
+        return (spark.createDataFrame([], schema)
+                .withColumn("_commit_version", F.lit(0).cast("bigint"))
+                .withColumn("_change_type", F.lit("")))
+    return functools.reduce(DataFrame.unionByName, [
+        p.select(*cols, "_commit_version", "_change_type") for p in parts])
 
 
 _REFRESH_STATE_FILE = "_refresh_state.json"

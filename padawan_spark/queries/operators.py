@@ -643,11 +643,12 @@ def op_read_changes(spark, sf_dir):
     consumable deltas).  Build three commits — v1 write nation as
     (k, name), v2 DELETE keys 5-9, v3 MERGE updating keys 10-14 and
     inserting 100-104 — then read the CDF over (v1, v3].  Survivor
-    rows copied verbatim into rewritten files must cancel (EXCEPT ALL
-    on the full row), the delete shows as pure deletes, and the merge
-    splits into update pre/post images plus pure inserts.  The oracle
-    states the expected change rows directly from the source table.
-    Scale shape: per-commit diff reads only added+removed files."""
+    rows copied verbatim into rewritten files must cancel (their +1/-1
+    signs sum to 0 per full row), the delete shows as pure deletes, and
+    the merge splits into update pre/post images plus pure inserts.  The
+    oracle states the expected change rows directly from the source
+    table.  Scale shape: one scan of the files the span's commits added
+    or removed."""
     from ..dataset import delete_rows, merge_rows, read_changes
     src = (load(spark, sf_dir, "nation")
            .select(F.col("n_nationkey").cast("bigint").alias("k"),

@@ -504,8 +504,6 @@ class _ManifestCDFReader(_ManifestTailReader):
             prev_set = set(prev_files)
             removed = [f for f in prev_files if f not in cur_set]
             added = [f for f in cur.files if f not in prev_set]
-            cols = None
-            ix = list(cur.index_columns)
             if not removed:
                 parts += [InputPartition(
                     ("rows", _os.path.join(self.path, f), v, "insert"))
@@ -515,19 +513,11 @@ class _ManifestCDFReader(_ManifestTailReader):
                     ("rows", _os.path.join(self.path, f), v, "delete"))
                     for f in removed]
             else:
-                import json as _json
-                sj = cur.schema_json or (
-                    prev.schema_json if prev != () else None)
-                if not sj:
-                    raise RuntimeError(
-                        f"padawan_cdf: snapshot v{v} records no schema")
-                cols = [f["name"]
-                        for f in _json.loads(sj)["fields"]]
                 parts.append(InputPartition(
                     ("diff",
                      [_os.path.join(self.path, f) for f in added],
                      [_os.path.join(self.path, f) for f in removed],
-                     v, ix, cols)))
+                     v, list(cur.index_columns))))
             prev = cur
         return parts or [InputPartition(None)]
 
@@ -545,21 +535,25 @@ class _ManifestCDFReader(_ManifestTailReader):
                 pq.read_table(path), self.spark_schema,
                 const={"_commit_version": ver, "_change_type": ctype})
             return
-        _k, added, removed, ver, ix, cols = partition.value
+        _k, added, removed, ver, ix = partition.value
         import pyarrow as pa
         import pyarrow.compute as _pc
 
         from pyspark.sql.pandas.types import to_arrow_schema
         pa_schema = to_arrow_schema(self.spark_schema)
-        # physical types may vary per file (a writer's int32 vs
-        # int64): cast everything to the DECLARED schema first so the
-        # hash aggregation groups value-identical rows together
-        data_schema = pa.schema([pa_schema.field(c) for c in cols])
+        # align every file to the DECLARED data columns (the schema ends
+        # with _commit_version, _change_type): a column the file predates
+        # reads as nulls, and physical types that vary per file (a
+        # writer's int32 vs int64) are cast, so the hash aggregation
+        # groups value-identical rows together
+        data = StructType(self.spark_schema.fields[:-2])
+        cols = data.names
 
         def _signed(paths, sign):
-            tb = pa.concat_tables(
-                [pq.read_table(p).select(cols).cast(data_schema)
-                 for p in paths])
+            tb = pa.Table.from_batches(
+                [b for p in paths
+                 for b in _aligned_batches(pq.read_table(p), data)],
+                schema=to_arrow_schema(data))
             return tb.append_column(
                 "__sign", pa.array([sign] * tb.num_rows,
                                    type=pa.int64()))

@@ -1217,6 +1217,32 @@ def test_write_metadata_takes_lock_and_refreshes_manifest_table(
     os.unlink(lock)
 
 
+def test_write_metadata_keeps_manifest_and_skips_superseded_files(
+        spark, tmp_path):
+    """On a table with a manifest, write_metadata keeps the listed files
+    and their stats and adopts only a file no snapshot lists: the file a
+    delete superseded (on disk until vacuum) does not bring its deleted
+    rows back.  A different index is rejected, as for an append."""
+    from padawan_spark import delete_rows
+    from padawan_spark.metadata import load_manifest
+
+    p = str(tmp_path / "retro_keep")
+    _kv(spark, range(20)).repartition(5).write_parquet(p)
+    delete_rows(spark, p, (3,), (4,))
+    kept = load_manifest(p)
+    _drop_foreign_file(p, range(100, 103))
+    write_metadata(spark, p, ("k",))
+    man = load_manifest(p)
+    n = len(kept.files)
+    assert (man.files[:n], man.sizes[:n], man.lower_bounds[:n]) \
+        == (kept.files, kept.sizes, kept.lower_bounds)
+    assert man.files[n:] == ["foreign.parquet"]
+    assert sorted(r.k for r in scan_parquet(spark, p).df.collect()) \
+        == [k for k in range(20) if k not in (3, 4)] + [100, 101, 102]
+    with pytest.raises(AppendError, match="index columns differ"):
+        write_metadata(spark, p, ("v",))
+
+
 def _commit_by(writer, spark, p):
     from padawan_spark import compact_parquet, delete_rows, merge_rows
     if writer == "overwrite":
@@ -1534,9 +1560,9 @@ def test_dataset_writers_leave_no_persistent_rdd(spark, tmp_path):
 
 
 def test_read_changes_append_fast_path_and_plan(spark, tmp_path):
-    """r8: a pure-append commit takes the fast path — added rows are
-    tagged insert directly, with NO ExceptAll (a needless full shuffle of
-    the appended data) anywhere in the plan for an append-only span."""
+    """A pure-append commit takes the fast path: added rows are tagged
+    insert directly, so an append-only span plans no Aggregate (the
+    signed multiset sum, a needless shuffle of the appended data)."""
     from padawan_spark import from_pandas, read_changes
 
     p = str(tmp_path / "cdfapp")
@@ -1546,8 +1572,8 @@ def test_read_changes_append_fast_path_and_plan(spark, tmp_path):
                 index_columns=("k",)).write_parquet(p, append=True)
     chg = read_changes(spark, p, 1)
     plan = chg._jdf.queryExecution().optimizedPlan().toString()
-    assert "Except" not in plan, \
-        "append-only CDF span must not plan an ExceptAll shuffle"
+    assert "Aggregate" not in plan, \
+        "append-only CDF span must not plan an aggregate shuffle"
     got = {(r._commit_version, r._change_type, r.k, r.v)
            for r in chg.collect()}
     assert got == {(2, "insert", k, 7) for k in range(10, 16)}
@@ -1712,13 +1738,15 @@ def test_streaming_mv_restart_exactly_once(spark, tmp_path):
 
 @pytest.mark.slow
 def test_read_changes_long_history_fold_and_plan_depth(spark, tmp_path):
-    """r9 (VERDICT r8 task 7): a 20-commit mixed history (appends /
-    deletes / merges) replays correctly through the every-8-commits
-    localCheckpoint fold — the full-span feed equals the concatenation
-    of the per-commit feeds AND reconstructs the final state from the
-    initial snapshot — and the final lazy plan stays bounded in commit
-    count (the fold caps pending unions at 8)."""
+    """A 20-commit mixed history (appends / deletes / merges) replays
+    correctly: the full-span feed equals the concatenation of the
+    per-commit feeds AND reconstructs the final state from the initial
+    snapshot.  The plan does not grow with the span (an 8-commit span
+    and the 20-commit span have the same operators), and reading the
+    feed pins no RDD."""
+    import collections
     import random
+    import re
 
     from padawan_spark import (delete_rows, from_pandas, list_versions,
                                merge_rows, read_changes, scan_parquet)
@@ -1756,14 +1784,18 @@ def test_read_changes_long_history_fold_and_plan_depth(spark, tmp_path):
             state.update(batch)
     versions = list_versions(p)
     assert len(versions) == 21
+    jsc = spark.sparkContext._jsc
+    pinned = jsc.getPersistentRDDs().size()
     full = read_changes(spark, p, versions[0])
-    # plan bounded: the fold checkpoints every 8 change-bearing commits,
-    # so the final lazy plan unions at most ~8 pending commit diffs on
-    # top of a materialized leaf — NOT all 20
-    plan = full._jdf.queryExecution().analyzed().toString()
-    assert plan.count("Union") <= 10, \
-        f"plan unions grew with history length:\n{plan[:2000]}"
+
+    def _operators(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return collections.Counter(
+            re.findall(r"^[\s:+\-]*(\w+)", plan, re.MULTILINE))
+    assert _operators(read_changes(spark, p, versions[0], versions[8])) \
+        == _operators(full)
     rows = full.collect()
+    assert jsc.getPersistentRDDs().size() == pinned
     # (a) full span == concatenation of per-commit spans
     per_commit = []
     for v0, v1 in zip(versions, versions[1:]):
@@ -1840,6 +1872,58 @@ def test_cdf_stream_source_startingversion_and_vacuum_guard(spark, tmp_path):
     import pytest as _pytest
     with _pytest.raises(Exception, match="vacuum|no longer exists"):
         run(0)
+
+
+def test_cdf_stream_matches_read_changes_on_evolved_table(spark, tmp_path):
+    """The padawan_cdf stream and read_changes give the same change rows
+    on a table whose schema evolved: files written before a merge_schema
+    append read the added column as nulls in both feeds, through a
+    delete, a merge that updates the NULL key and a compaction."""
+    import collections
+    import uuid
+
+    from padawan_spark import (compact_parquet, delete_rows, merge_rows,
+                               read_changes)
+    from padawan_spark.sources import register_python_sources
+
+    register_python_sources(spark)
+    p = str(tmp_path / "cdfevolve")
+    kvw = "k bigint, v bigint, w string"
+    Dataset(spark, spark.createDataFrame(
+        [(None, -1)] + [(k, k) for k in range(12)], "k bigint, v bigint"),
+        index_columns=("k",)).reindex(("k",)).repartition(3).write_parquet(p)
+    Dataset(spark, spark.createDataFrame([(20, 20, "x")], kvw),
+            index_columns=("k",)).write_parquet(p, append=True,
+                                                merge_schema=True)
+    delete_rows(spark, p, (3,), (4,))                            # v3
+    merge_rows(spark, p, Dataset(spark, spark.createDataFrame(   # v4
+        [(None, 99, "n"), (6, 66, None), (30, 30, "y")], kvw),
+        index_columns=("k",)))
+    compact_parquet(spark, p, 100)                               # v5
+
+    name = "cdf_" + uuid.uuid4().hex[:8]
+    q = (spark.readStream.format("padawan_cdf").option("path", p)
+         .option("startingVersion", "1").load()
+         .writeStream.format("memory").queryName(name).start())
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    key = ("_commit_version", "_change_type", "k", "v", "w")
+
+    def _ms(rows):
+        return collections.Counter(tuple(r[c] for c in key) for r in rows)
+    streamed = _ms(spark.table(name).collect())
+    assert streamed == _ms(read_changes(spark, p, 1).collect())
+    assert streamed == _ms([
+        dict(zip(key, t)) for t in [
+            (2, "insert", 20, 20, "x"),
+            (3, "delete", 3, 3, None), (3, "delete", 4, 4, None),
+            (4, "update_preimage", None, -1, None),
+            (4, "update_postimage", None, 99, "n"),
+            (4, "update_preimage", 6, 6, None),
+            (4, "update_postimage", 6, 66, None),
+            (4, "insert", 30, 30, "y")]])
 
 
 @pytest.mark.slow

@@ -332,69 +332,48 @@ def test_cms_probe_broadcasts_counters(spark):
 
 
 @pytest.mark.slow
-def test_no_cartesian_product_anywhere(spark):
-    """Engine-wide guarantee: NO registered query's physical plan may
-    contain a CartesianProduct — the one operator that cannot survive a
-    100 TB input.  (Broadcast nested-loop joins against 1-row/constant
-    sides are acceptable and excluded by the audit's cartesian check.)
-    Queries whose terminal DataFrame is checkpoint-backed audit their
-    materialized plan, which is trivially cartesian-free; their per-round
-    shapes are pinned by the dedicated tests above."""
-    bad = []
+def test_engine_wide_plan_guarantees_anywhere(spark):
+    """Engine-wide guarantees, checked in one pass that builds each
+    registered query once:
+
+    - no CartesianProduct in the physical plan, the one operator that
+      cannot survive a 100 TB input (broadcast nested-loop joins against
+      1-row/constant sides are fine; queries whose terminal DataFrame is
+      checkpoint-backed audit their materialized plan, and their
+      per-round shapes are pinned by the tests above);
+    - a scalar-typed output schema: external correctness harnesses
+      canonicalize results with pandas sort_values/hash, which rejects
+      array/map/struct cells, so a query that computes collections
+      serializes them (to_json / fixed-point concat_ws);
+    - Python runs Arrow-batched (ArrowEvalPython / MapInPandas /
+      FlatMapGroupsInPandas), never row-at-a-time BatchEvalPython, the
+      10-100x slow path at scale.  Sole exception: udf_table_function
+      demonstrates the SQL-registered @udtf API, whose eval is
+      row-generating by definition.
+
+    A query that fails to build is its own offender in every list."""
+    from pyspark.sql.types import ArrayType, MapType, StructType
+    cartesian, unhashable, row_udf = [], [], []
     for name, fn in QUERIES.items():
         try:
-            a = plan_of(spark, name)
-        except Exception as e:   # build/run failure is its own red flag
-            bad.append((name, f"build failed: {type(e).__name__}: {e}"))
+            df = fn(spark, SF)
+            a = audit(df)
+        except Exception as e:
+            failed = (name, f"build failed: {type(e).__name__}: {e}")
+            for offenders in (cartesian, unhashable, row_udf):
+                offenders.append(failed)
             continue
         if a.has_cartesian:
-            bad.append((name, "CartesianProduct in plan"))
-    assert not bad, bad
-
-
-@pytest.mark.slow
-def test_no_unhashable_output_columns_anywhere(spark):
-    """Engine-wide contract pin (the ana_array_funcs lesson): every
-    registered query's OUTPUT schema must be scalar-typed — external
-    correctness harnesses canonicalize results with pandas
-    sort_values/hash, which rejects array/map/struct cells
-    (unhashable).  Queries that compute collections must serialize them
-    (to_json / fixed-point concat_ws) before returning."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-    offenders = []
-    for name, fn in QUERIES.items():
-        try:
-            schema = fn(spark, SF).schema
-        except Exception as e:
-            offenders.append((name, f"build failed: {type(e).__name__}"))
-            continue
-        for f in schema.fields:
-            if isinstance(f.dataType, (ArrayType, MapType, StructType)):
-                offenders.append((name, f"{f.name}: {f.dataType.simpleString()}"))
-    assert not offenders, offenders
-
-
-@pytest.mark.slow
-def test_no_row_at_a_time_python_udf_anywhere(spark):
-    """Engine-wide policy pin: Python in query plans must be
-    Arrow-batched (ArrowEvalPython / MapInPandas /
-    FlatMapGroupsInPandas), never row-at-a-time BatchEvalPython — the
-    10-100x slow path at scale.  Sole exception: udf_table_function
-    exists to demonstrate the SQL-registered @udtf API, whose eval is
-    row-generating by definition."""
-    from padawan_spark.plans.audit import physical_plan
-    offenders = []
-    for name, fn in QUERIES.items():
-        if name == "udf_table_function":
-            continue
-        try:
-            p = physical_plan(fn(spark, SF))
-        except Exception as e:
-            offenders.append((name, f"build failed: {type(e).__name__}"))
-            continue
-        if "BatchEvalPython" in p:
-            offenders.append((name, "BatchEvalPython"))
-    assert not offenders, offenders
+            cartesian.append((name, "CartesianProduct in plan"))
+        unhashable += [(name, f"{f.name}: {f.dataType.simpleString()}")
+                       for f in df.schema.fields
+                       if isinstance(f.dataType,
+                                     (ArrayType, MapType, StructType))]
+        if name != "udf_table_function" and "BatchEvalPython" in a.plan:
+            row_udf.append((name, "BatchEvalPython"))
+    assert not (cartesian or unhashable or row_udf), \
+        {"cartesian": cartesian, "unhashable": unhashable,
+         "row_udf": row_udf}
 
 
 @pytest.mark.slow
