@@ -33,7 +33,7 @@ from typing import Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (BooleanType, LongType, StructField,
+from pyspark.sql.types import (BooleanType, IntegerType, StructField,
                                StructType)
 
 from . import metadata as _meta
@@ -624,16 +624,10 @@ class Dataset:
                     groups = [acc]
             k = len(groups)
             labels = _perfect_hash_labels(k)
-            pairs = [(os.path.abspath(self._files[i]), labels[gi])
-                     for gi, g in enumerate(groups) for i in g]
-            map_df = self.spark.createDataFrame(
-                pairs, "__path string, __label int")
-            base = _read_files(self.spark,
-                               [self._files[i] for g in groups for i in g],
-                               self.df.schema, self._residual)
-            tagged = (base.withColumn("__path", _file_path())
-                      .join(F.broadcast(map_df), "__path")
-                      .drop("__path"))
+            tagged = _read_tagged(
+                self.spark, [(os.path.abspath(self._files[i]), labels[gi])
+                             for gi, g in enumerate(groups) for i in g],
+                "__label int", self.df.schema, self._residual)
             out = tagged.repartition(k, "__label").drop("__label")
             if self.index_columns:
                 out = out.sortWithinPartitions(
@@ -724,7 +718,7 @@ class Dataset:
                              AppendError,
                              f"index columns differ: {old.index_columns} vs "
                              f"{self.index_columns}")
-                    _commit(self.spark, path, [self.df], self.index_columns,
+                    _commit(self.spark, path, self.df, self.index_columns,
                             self._check_evolution(old, merge_schema),
                             old=old, keep=range(len(old.files)),
                             manifest_table=manifest_table)
@@ -733,7 +727,7 @@ class Dataset:
         else:
             if os.path.exists(path):
                 shutil.rmtree(path)
-            _commit(self.spark, path, [self.df], self.index_columns,
+            _commit(self.spark, path, self.df, self.index_columns,
                     self.df.schema.json(), manifest_table=manifest_table)
         return scan_parquet(self.spark, path)
 
@@ -935,6 +929,19 @@ def _file_path():
     return F.url_decode(F.regexp_replace(uri, r"\+", "%2B"))
 
 
+def _read_tagged(spark: SparkSession, tags: list[tuple], ddl: str,
+                 schema: StructType | None, residual=None) -> DataFrame:
+    """The rows of the files in ``tags`` (``(abspath, *values)``, the
+    values typed by ``ddl``), each joined to its file's tags on
+    :func:`_file_path` by broadcast: a file tagged twice yields its rows
+    twice.  Tag before any other join: ``input_file_name`` above a join
+    with a second file scan cannot say which scan it means."""
+    tag_df = spark.createDataFrame(tags, "__path string, " + ddl)
+    return (_read_files(spark, sorted({t[0] for t in tags}), schema, residual)
+            .withColumn("__path", _file_path())
+            .join(F.broadcast(tag_df), "__path").drop("__path"))
+
+
 def _index_stats_aggs(ix: Sequence[str]) -> list:
     """Aggregates ``__n`` (row count) and, with index columns, ``__lb`` /
     ``__ub``: the null-first lexicographic min/max of the index struct
@@ -970,32 +977,32 @@ def _file_stats(spark: SparkSession, files: list[str], ix: Sequence[str],
                         _file_path(), ix)
 
 
-def _commit(spark: SparkSession, path: str, frames: list[DataFrame] | None,
+def _commit(spark: SparkSession, path: str, frame: DataFrame | None,
             index_columns, schema_json: str | None, old=None, keep=(),
             manifest_table: bool = False) -> None:
     """The commit every table writer ends with.
 
-    Each of ``frames`` is appended to ``path`` in turn as new data files
-    (``frames=None`` adopts the parquet files there that neither ``old``
-    nor any retained snapshot lists); a failed
-    write removes what earlier frames added, which no manifest lists and
-    ``vacuum`` would never reclaim.  Only added files are statted, and
-    empty ones are dropped (``dataset.py:340-347``).  The new manifest
-    lists ``old``'s files at the positions in ``keep``, then the added
-    files; ``schema_json=None`` records the added files' schema (still
-    ``None`` when no added file has rows).  The JSON manifest is
-    published with its version snapshot, and the manifest table is
-    rewritten when asked for or already present, so ``scan_parquet`` and
-    ``scan_parquet_pruned`` always see the same files.  Writers that
-    read-modify-write the manifest call this inside the commit lock."""
+    ``frame`` is appended to ``path`` as new data files (``frame=None``
+    adopts the parquet files there that neither ``old`` nor any retained
+    snapshot lists); a failed write removes the files it added, which no
+    manifest lists and ``vacuum`` would never reclaim.  Only added files
+    are statted, and empty ones are dropped (``dataset.py:340-347``).
+    The new manifest lists ``old``'s files at the positions in ``keep``,
+    then the added files; ``schema_json=None`` records the added files'
+    schema (still ``None`` when no added file has rows).  The JSON
+    manifest is published with its version snapshot, and the manifest
+    table is rewritten when asked for or already present, so
+    ``scan_parquet`` and ``scan_parquet_pruned`` always see the same
+    files.  Writers that read-modify-write the manifest call this inside
+    the commit lock."""
     old = old or _meta.Manifest()
-    before = (set(_list_parquet(path)) if frames is not None else
+    before = (set(_list_parquet(path)) if frame is not None else
               set(old.files).union(*(
                   _meta.load_manifest(path, version=v).files
                   for v in _meta.list_versions(path))))
     try:
-        for df in frames or ():
-            df.write.mode("append").parquet(path)
+        if frame is not None:
+            frame.write.mode("append").parquet(path)
     except BaseException:
         for f in set(_list_parquet(path)) - before:
             os.remove(os.path.join(path, f))
@@ -1262,7 +1269,7 @@ def compact_parquet(spark: SparkSession, path: str,
         old = _meta.load_manifest(path)
         ds = _manifest_dataset(spark, path, old)
         comp = ds.collate(rows_per_partition)
-        _commit(spark, path, [comp.df], old.index_columns,
+        _commit(spark, path, comp.df, old.index_columns,
                 ds.df.schema.json(), old=old)
     return scan_parquet(spark, path)
 
@@ -1312,9 +1319,38 @@ def delete_rows(spark: SparkSession, path: str, lb=None, ub=None,
         rewritten = _read_files(spark, [os.path.join(path, f)
                                         for f in affected],
                                 old.schema, survives)
-        _commit(spark, path, [rewritten], ix, old.schema_json, old=old,
+        _commit(spark, path, rewritten, ix, old.schema_json, old=old,
                 keep=untouched)
     return scan_parquet(spark, path)
+
+
+def _within(df: DataFrame, ix: Sequence[str], intervals: list[tuple]
+            ) -> DataFrame:
+    """``df`` with column ``__bid``, a row per ``(id, lo, lo_incl, hi,
+    hi_incl)`` interval holding the row's index key, by one broadcast
+    nested-loop join.  A ``None`` end is unbounded, flagged apart
+    (``__has_lo``/``__has_hi``) since a NULL bound VALUE is legal."""
+    none_b = (None,) * len(ix)
+    schema = StructType(
+        [StructField("__bid", IntegerType(), False)]
+        + [StructField(f, BooleanType(), False)
+           for f in ("__has_lo", "__lo_incl", "__has_hi", "__hi_incl")]
+        + [StructField(f"__{e}_{j}", df.schema[c].dataType, True)
+           for e in ("lo", "hi") for j, c in enumerate(ix)])
+    bdf = df.sparkSession.createDataFrame(
+        [(i, lo is not None, lo_incl, hi is not None, hi_incl,
+          *(lo or none_b), *(hi or none_b))
+         for i, lo, lo_incl, hi, hi_incl in intervals], schema)
+    lo, hi = ([F.col(f"__{e}_{j}") for j in range(len(ix))]
+              for e in ("lo", "hi"))
+    cond = ((~F.col("__has_lo") | F.when(
+                F.col("__lo_incl"), _ord.columns_geq(ix, lo))
+             .otherwise(_ord.columns_gt(ix, lo)))
+            & (~F.col("__has_hi") | F.when(
+                F.col("__hi_incl"), _ord.columns_leq(ix, hi))
+               .otherwise(_ord.columns_lt(ix, hi))))
+    return (df.join(F.broadcast(bdf), on=cond)
+            .drop(*[c for c in bdf.columns if c != "__bid"]))
 
 
 def merge_rows(spark: SparkSession, path: str, batch: "Dataset") -> Dataset:
@@ -1322,26 +1358,35 @@ def merge_rows(spark: SparkSession, path: str, batch: "Dataset") -> Dataset:
     DELETE+INSERT in one commit: every ``batch`` row replaces the
     table row with the same index key (if any); the rest insert.
 
-    Copy-on-write like :func:`delete_rows`: envelope overlap against the
-    manifest picks candidate files (no table scan), then ONE broadcast join
-    of the small-by-contract batch keys against a (file, bounds) table keeps
-    the files that CONTAIN a batch key, so a 2-key batch at opposite table
-    ends rewrites 2 files, not every file the min/max envelope spans.
-    Surviving rows — a left-anti join against the batch's keys over ONLY the
-    affected files — union with the batch and are written per REGION (the
-    gaps between kept files) as fresh range-disjoint files that never
-    straddle a kept file's range.  Untouched files stay byte-identical, and
-    older pins (``scan_parquet(version=k)``) keep reading their exact
-    snapshot until :func:`padawan_spark.metadata.vacuum`.
+    Copy-on-write like :func:`delete_rows`: the batch envelope picks
+    candidate files from the manifest (no table scan), and ONE probe job
+    of the small-by-contract batch keys against the candidates' ranges
+    and the gaps around them finds the files that CONTAIN a key (a 2-key
+    batch at opposite table ends rewrites 2 files) and the gaps that
+    receive one.  The rewrite is one frame, laid out by the manifest's
+    bounds on the driver and written by one labelled shuffle, a file
+    per tile:
 
-    Batch columns are cast to the table's recorded types, as an INSERT
-    casts to its target; a value that does not fit raises and publishes
-    no version.  An append rejects a type change instead: it may evolve
-    the schema, so there a type change is a schema change.
+    - each affected file is rewritten as one file: its surviving rows
+      (a null-safe left-anti join) plus the batch rows in its tile;
+    - inserts join the tile they fall in; a tile with no affected file
+      that receives keys becomes one new file;
+    - no tile spans a spared file, so the rewrite stays range-disjoint
+      from every kept file;
+    - rows keep their file's tile, so overlapping affected files are not
+      re-sorted; :func:`compact_parquet` is what changes file sizes.
 
-    Scale shape: O(files touched + batch), never O(table), with two
-    fixed-size metadata probe jobs however many candidates.  The whole
-    read-manifest → rewrite → publish sequence holds the commit lock."""
+    Untouched files stay byte-identical, and older pins keep reading
+    their snapshot until :func:`padawan_spark.metadata.vacuum`.  Batch
+    columns are cast to the table's recorded types, as an INSERT casts
+    to its target; a value that does not fit raises and publishes no
+    version (an append may evolve the schema, so it rejects a type
+    change instead).
+
+    Scale shape: O(files touched + batch), never O(table), in a job
+    count that does not depend on how many files or tiles the batch
+    touches.  The whole read-manifest → rewrite → publish sequence
+    holds the commit lock."""
     _require(_meta.has_manifest(path), ValueError,
              f"merge_rows requires a manifest at {path}")
     with _meta.commit_lock(path, "merge"):
@@ -1357,11 +1402,9 @@ def merge_rows(spark: SparkSession, path: str, batch: "Dataset") -> Dataset:
         _require(set(batch.df.columns) == set(table_cols), ValueError,
                  f"batch columns {sorted(batch.df.columns)} != table "
                  f"columns {sorted(table_cols)}")
-        # one job: batch key range + uniqueness check.  The distinct
-        # count runs over a STRUCT of the key columns: countDistinct on
-        # bare columns drops null-keyed rows (legal under null-first
-        # semantics), which would misreport a single null-key row as a
-        # duplicate.
+        # batch key range + uniqueness check.  The distinct count runs
+        # over a STRUCT of the keys: countDistinct on bare columns drops
+        # null-keyed rows (legal under null-first semantics).
         agg = batch.df.agg(
             F.countDistinct(F.struct(*[F.col(c) for c in ix])).alias("nd"),
             *_index_stats_aggs(ix)).collect()[0]
@@ -1371,133 +1414,74 @@ def merge_rows(spark: SparkSession, path: str, batch: "Dataset") -> Dataset:
                  f"batch has duplicate index keys "
                  f"({agg['__n']} rows, {agg['nd']} distinct)")
         blb, bub = tuple(agg["__lb"]), tuple(agg["__ub"])
-        untouched, candidates = [], []
-        for i, f in enumerate(old.files):
-            if _overlaps(old.lower_bounds[i], old.upper_bounds[i],
-                         blb, bub, True, True):
-                candidates.append(i)
-            else:
+        lbs, ubs = old.lower_bounds, old.upper_bounds
+        untouched, cands = [], []
+        for i in range(len(old.files)):
+            (cands if _overlaps(lbs[i], ubs[i], blb, bub, True, True)
+             else untouched).append(i)
+        cands.sort(key=lambda i: _ord.lex_key(lbs[i]))
+        # the probe: interval 2j+1 is candidate j (closed), 2j the open
+        # gap before it, 2m the gap after the last.  A fixed-size plan
+        # however many candidates; it collects O(candidates) ids.
+        m = len(cands)
+        hits = {r["__bid"] for r in _within(
+            batch.df.select(*ix), ix,
+            [(2 * j + 1, lbs[i], True, ubs[i], True)
+             for j, i in enumerate(cands)]
+            + [(2 * j, ubs[cands[j - 1]] if j else None, False,
+                lbs[cands[j]] if j < m else None, False)
+               for j in range(m + 1)]).select("__bid").distinct().collect()}
+        # tiles, walking the candidates up by lower bound: a spared file
+        # closes the tile at its lb and opens the next at its ub; a second
+        # affected file cuts the tile at its own lb.  No batch key equals
+        # a spared bound (that file would be affected), so every tile is
+        # [lo, hi).  A tile with no affected file is live when its gap
+        # was hit: a scattered batch over a wide envelope schedules no
+        # empty tasks.
+        tiles = []                  # (lo, hi, affected file or None, live)
+        lo, cur, live = None, None, False
+        for j, i in enumerate(cands):
+            live = live or 2 * j in hits
+            if 2 * j + 1 not in hits:
+                tiles.append((lo, lbs[i], cur, live))
+                lo, cur, live = ubs[i], None, False
                 untouched.append(i)
-        # refine the envelope-overlap candidates to per-file KEY
-        # membership: a scattered batch (keys at both table extremes)
-        # envelope-overlaps every file but only TOUCHES the files that
-        # actually contain one of its keys.  The per-file containment
-        # test runs as ONE broadcast nested-loop join — batch keys vs a
-        # tiny (file_id, lb, ub) bounds table built from the manifest —
-        # a single Spark job regardless of candidate count (the prior
-        # chunked-aggregate form launched one sequential job per 128
-        # candidates: ~800 jobs inside the commit lock on a 100k-file
-        # table).  No data files read, no key collection: the join
-        # output is the distinct matched file ids, O(candidates) rows.
-        candidates.sort(key=functools.cmp_to_key(
-            lambda a, b: _ord.lex_cmp(old.lower_bounds[a],
-                                      old.lower_bounds[b])))
-        ix_fields = [batch.df.schema[c] for c in ix]
-        key_df = batch.df.select(*[F.col(c) for c in ix])
-        probe_schema = StructType(
-            [StructField("__bid", LongType(), False),
-             StructField("__has_lo", BooleanType(), False),
-             StructField("__has_hi", BooleanType(), False)]
-            + [StructField(f"__{e}_{j}", f.dataType, True)
-               for e in ("lo", "hi") for j, f in enumerate(ix_fields)])
-        lo_cols = [F.col(f"__lo_{j}") for j in range(len(ix))]
-        hi_cols = [F.col(f"__hi_{j}") for j in range(len(ix))]
-        none_b = (None,) * len(ix)
-
-        def _probe(intervals, inclusive: str) -> set:
-            """Ids of the ``(id, lo, hi)`` intervals holding at least one
-            batch key, in ONE broadcast nested-loop join job.  A ``None``
-            end is open: it carries an explicit has_lo/has_hi flag because
-            a NULL bound VALUE is legal (null-first ranges)."""
-            if not intervals:
-                return set()
-            bdf = spark.createDataFrame(
-                [(i, lo is not None, hi is not None,
-                  *(none_b if lo is None else lo),
-                  *(none_b if hi is None else hi))
-                 for i, lo, hi in intervals], probe_schema)
-            cond = ((~F.col("__has_lo") | _ord.range_predicate(
-                        ix, lo_cols, None, inclusive))
-                    & (~F.col("__has_hi") | _ord.range_predicate(
-                        ix, None, hi_cols, inclusive)))
-            hit = (key_df.join(F.broadcast(bdf), on=cond, how="inner")
-                   .select("__bid").distinct().collect())
-            return {r["__bid"] for r in hit}
-
-        inside_set = _probe([(i, old.lower_bounds[i], old.upper_bounds[i])
-                             for i in candidates], "both")
-        affected = [i for i in candidates if i in inside_set]
-        spared = [i for i in candidates if i not in inside_set]
-        untouched = sorted(untouched + spared)
-        # The rewritten rows must stay range-disjoint from every KEPT
-        # file, so the merge collates per REGION: the open gaps between
-        # consecutive SPARED candidates (inside-envelope files holding no
-        # batch key).  Fully-outside untouched files cannot interleave —
-        # batch keys and affected-file bounds all lie inside the
-        # envelope, which the spared/affected candidates tile.  Region r
-        # in 0..len(spared) spans (spared[r-1].ub, spared[r].lb), open
-        # ends at the extremes; every batch key and every affected file
-        # falls strictly inside one region (a key on a spared bound
-        # would have made that file affected).
-        def _region(r):
-            """Region r's open (lo, hi) ends; None where unbounded."""
-            return (old.upper_bounds[spared[r - 1]] if r > 0 else None,
-                    old.lower_bounds[spared[r]] if r < len(spared) else None)
-
-        def _region_pred(r):
-            p = _ord.range_predicate(ix, *_region(r), "none")
-            return F.lit(True) if p is None else F.coalesce(p, F.lit(False))
-        region_files: dict[int, list[int]] = {}
-        r = 0
-        for i in affected:           # both lists ascend by lower bound
-            while r < len(spared) and _ord.lex_cmp(
-                    old.lower_bounds[i], old.lower_bounds[spared[r]]) > 0:
-                r += 1
-            region_files.setdefault(r, []).append(i)
-        work = sorted(region_files)
-        # pure-insert regions (keys landing in a gap with no affected
-        # file): the same probe over the open region gaps
-        work += _probe([(r, *_region(r)) for r in range(len(spared) + 1)
-                        if r not in region_files], "none")
-        work.sort()
-        # re-collate each region to the table's prevailing file size so
-        # merge does not degrade layout over time
-        if old.known_sizes and old.sizes:
-            rpp = max(1, sum(old.sizes) // max(1, len(old.sizes)))
-        else:
-            rpp = 1 << 20
-        # batch keys are small by contract (one merge batch, not the
-        # table) — broadcast-hint the anti-join so the survivor scan is
-        # a broadcast hash join under ANY session conf instead of riding
-        # autoBroadcastJoinThreshold into a SortMergeJoin of the regions
-        batch_keys = F.broadcast(
-            batch.df.select(*[F.col(c) for c in ix]).distinct())
-        # null-safe survivor anti-join: a table row with a NULL index key
-        # must still be replaced by a null-keyed batch row — plain-equality
-        # anti-join would keep it and duplicate the key
-        _anti = _ord.keys_eq(ix, "t", "b")
+            else:
+                if cur is not None:
+                    tiles.append((lo, lbs[i], cur, True))
+                    lo = lbs[i]
+                cur, live = i, True
+        tiles.append((lo, None, cur, live or 2 * m in hits))
+        tiles = [t for t in tiles if t[3]]
+        labels = _perfect_hash_labels(len(tiles))
         # the batch takes the table's recorded column types, as Spark's
         # INSERT casts to its target; a value that does not fit raises
         conform = ([F.col(c).cast(old.schema[c].dataType) for c in table_cols]
                    if old.schema_json else table_cols)
-        # each region is written as its own frame: a Union of the regions'
-        # range exchanges could be coalesced by AQE into a partition that
-        # straddles the spared files between two regions
-        frames = []
-        for rr in work:
-            part = batch.df.where(_region_pred(rr)).select(*conform)
-            files_r = region_files.get(rr, [])
-            if files_r:
-                surv = (_read_files(spark, [os.path.join(path, old.files[i])
-                                            for i in files_r], old.schema)
-                        .alias("t")
-                        .join(batch_keys.alias("b"), on=_anti,
-                              how="left_anti"))
-                part = surv.select(*table_cols).unionByName(part)
-            frames.append(Dataset(spark, part, index_columns=ix)
-                          .repartition(rpp).df)
-        _commit(spark, path, frames, ix, old.schema_json, old=old,
-                keep=untouched)
+        frame = _within(batch.df, ix, [
+            (labels[t], tlo, True, thi, False)
+            for t, (tlo, thi, _, _) in enumerate(tiles)]).select(
+                *conform, F.col("__bid").alias("__t"))
+        rewrite = [(os.path.abspath(os.path.join(path, old.files[f])),
+                    labels[t]) for t, (_, _, f, _) in enumerate(tiles)
+                   if f is not None]
+        if rewrite:
+            # batch keys are small by contract: broadcast-hint the
+            # anti-join so the survivor scan never rides
+            # autoBroadcastJoinThreshold into a SortMergeJoin.  It is
+            # null-safe: a table row with a NULL index key must still be
+            # replaced by a null-keyed batch row
+            keys = F.broadcast(batch.df.select(*ix).distinct()).alias("b")
+            surv = (_read_tagged(spark, rewrite, "__t int", old.schema)
+                    .alias("t").join(keys, _ord.keys_eq(ix, "t", "b"),
+                                     "left_anti"))
+            frame = surv.select(*table_cols, "__t").unionByName(frame)
+        frame = (frame.repartition(len(tiles), "__t")
+                 .sortWithinPartitions(*[F.col(c).asc_nulls_first()
+                                         for c in ix])
+                 .drop("__t"))
+        _commit(spark, path, frame, ix, old.schema_json, old=old,
+                keep=sorted(untouched))
     return scan_parquet(spark, path)
 
 
@@ -1571,11 +1555,8 @@ def read_changes(spark: SparkSession, path: str, from_version: int,
                  for f in files]
 
     def _tagged(tags: list[tuple]) -> DataFrame:
-        tag_df = spark.createDataFrame(
-            tags, "__path string, _commit_version bigint, __sign int")
-        return (_read_files(spark, sorted({t[0] for t in tags}), schema)
-                .withColumn("__path", _file_path())
-                .join(F.broadcast(tag_df), "__path"))
+        return _read_tagged(spark, tags, "_commit_version bigint, __sign int",
+                            schema)
 
     sign = F.col("__sign")
     parts = []
@@ -1660,12 +1641,13 @@ def fold_changes_into_aggregate(spark: SparkSession, target_path: str,
         *[(F.coalesce(F.col(f"m.sum_{c}"), F.lit(0))
            + F.col(f"d.d_sum_{c}")).alias(f"sum_{c}")
           for c in sum_cols])
-    # materialize the fold ONCE: the emptiness probe and the merge's
-    # rewrite otherwise each recompute the whole CDF+join pipeline
+    # materialize the fold ONCE: the merge reads its batch in three jobs
+    # (key stats, probe, write), each of which would otherwise recompute
+    # the whole CDF+join pipeline.  A no-op change feed folds to an empty
+    # batch, which merge_rows commits no version for.
     upd = upd.localCheckpoint(eager=True)
-    if upd.limit(1).count():              # no-op change feeds skip commit
-        merge_rows(spark, target_path,
-                   Dataset(spark, upd, index_columns=tuple(keys)))
+    merge_rows(spark, target_path,
+               Dataset(spark, upd, index_columns=tuple(keys)))
 
 
 def refresh_aggregate(spark: SparkSession, source_path: str,
@@ -1856,7 +1838,7 @@ def scan_point_lookup(spark: SparkSession, path: str, column: str,
 
 def describe_history(spark: SparkSession, path: str) -> DataFrame:
     """Table history (the DESCRIBE HISTORY operational surface):
-    one row per snapshot with its file count, total bytes (when the
+    one row per snapshot with its file count, total rows (when the
     manifest records sizes), and the file delta against the previous
     snapshot — derived purely from the archived manifests, O(files)
     driver work, no data reads.  Lets an operator answer "what did
@@ -1869,13 +1851,12 @@ def describe_history(spark: SparkSession, path: str) -> DataFrame:
     for v in versions:
         man = _meta.load_manifest(path, version=v)
         cur = set(man.files)
-        size = sum(man.sizes) if man.known_sizes else None
-        rows.append((v, len(man.files), len(cur - prev),
-                     len(prev - cur), size))
+        rows.append((v, len(man.files), len(cur - prev), len(prev - cur),
+                     sum(man.sizes) if man.known_sizes else None))
         prev = cur
     return spark.createDataFrame(
         rows, "version bigint, n_files int, n_added_files int, "
-              "n_removed_files int, total_bytes bigint")
+              "n_removed_files int, total_rows bigint")
 
 
 FOOTER_STATS_SCHEMA = ("file string, row_group int, column string, "

@@ -593,8 +593,9 @@ def op_merge_upsert(spark, sf_dir):
     keys 5-14 and INSERTs keys 100-104; the rewrite set comes from
     manifest bound overlap (file-count work, no table scan), surviving
     rows anti-join the batch keys over ONLY the affected files, and
-    the merged region re-collates into range-disjoint files while
-    untouched files stay byte-identical (asserted).  The oracle states
+    each affected file, and each gap that receives inserts, is written
+    as one range-disjoint file while untouched files stay
+    byte-identical (asserted).  The oracle states
     MERGE semantics directly: base rows outside the updated keys,
     union the batch.  Scale shape: O(files touched + batch) — a daily
     upsert on a date-collated corpus rewrites one day of files."""
@@ -841,9 +842,9 @@ def op_describe_history(spark, sf_dir):
     rewrites none), and a MERGE updating keys 12/13 (rewrites their
     file) plus inserting 100/101 (one gap file) — then the history
     report, derived purely from archived manifests with O(files)
-    driver work, joined with time-travel row counts.  The oracle
-    states the expected file deltas and per-version rows; any change
-    to copy-on-write surgical-rewrite behavior shows up here."""
+    driver work, row counts included.  The oracle states the expected
+    file deltas and per-version rows; any change to copy-on-write
+    surgical-rewrite behavior shows up here."""
     from ..dataset import delete_rows, describe_history, merge_rows
     src = (load(spark, sf_dir, "nation")
            .select(F.col("n_nationkey").cast("bigint").alias("k"),
@@ -858,13 +859,9 @@ def op_describe_history(spark, sf_dir):
             [(12, 999), (13, 999), (100, 1), (101, 2)],
             "k bigint, v bigint"),
         index_columns=("k",)))
-    hist = describe_history(spark, target)
-    rows = [(v, scan_parquet(spark, target, version=v).df.count())
-            for v in (1, 2, 3)]
-    rc = spark.createDataFrame(rows, "version bigint, rows bigint")
-    return (hist.join(rc, on="version")
-            .select("version", "n_files", "n_added_files",
-                    "n_removed_files", "rows"))
+    return describe_history(spark, target).select(
+        "version", "n_files", "n_added_files", "n_removed_files",
+        F.col("total_rows").alias("rows"))
 
 
 @query("op_footer_stats", oracle="""

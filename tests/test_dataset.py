@@ -1540,8 +1540,9 @@ def test_merge_rows_casts_batch_to_table_types(spark, tmp_path):
 
 
 def test_dataset_writers_leave_no_persistent_rdd(spark, tmp_path):
-    """Writing, a merge over two regions, a delete and a compaction pin
-    nothing: the session's persistent RDD count is unchanged."""
+    """Writing, a merge that rewrites a file and inserts past the spared
+    ones, a delete and a compaction pin nothing: the session's
+    persistent RDD count is unchanged."""
     from padawan_spark import compact_parquet, delete_rows, merge_rows
 
     jsc = spark.sparkContext._jsc
@@ -1557,6 +1558,56 @@ def test_dataset_writers_leave_no_persistent_rdd(spark, tmp_path):
     assert sorted(r.k for r in out.df.collect()) \
         == [k for k in range(20) if not 8 <= k <= 11] + [100]
     assert jsc.getPersistentRDDs().size() == pinned
+
+
+def test_merge_rows_jobs_do_not_grow_with_regions(spark, tmp_path,
+                                                  count_jobs):
+    """merge_rows lays out its rewrite from the manifest's bounds in one
+    frame, so a batch touching 1, 3 or 5 regions (gaps between spared
+    files) runs the same jobs.  Each affected file is rewritten as one
+    file, each region with no affected file that receives keys becomes
+    one new file, and the table stays range-disjoint."""
+    from padawan_spark import merge_rows
+
+    cases = {  # batch keys, files rewritten, new region files
+        1: ([12, 13], 1, 0),
+        3: ([4, 45, 101], 2, 1),
+        5: ([-1, 19, 44, 79, 101], 1, 4),
+    }
+    jobs = {}
+    for regions, (keys, rewritten, inserted) in cases.items():
+        # 5 files of even keys: [0, 18], [20, 38], ..., [80, 98]
+        p = str(tmp_path / f"regions{regions}")
+        Dataset(spark, spark.range(50).selectExpr(
+                    "CAST(id * 2 AS INT) AS k", "CAST(id AS INT) AS v"),
+                index_columns=("k",)).repartition(10).write_parquet(p)
+        before = set(scan_parquet(spark, p)._files)
+        out, jobs[regions] = count_jobs(merge_rows, spark, p,
+                                        _kv(spark, keys, v=-1))
+        after = set(out._files)
+        assert (len(before - after), len(after - before)) \
+            == (rewritten, rewritten + inserted), regions
+        out.assert_disjoint()
+        want = {2 * i: i for i in range(50)} | {k: -1 for k in keys}
+        assert {r.k: r.v for r in out.df.collect()} == want
+    assert jobs[1] == jobs[3] == jobs[5] <= 16, jobs
+
+
+def test_describe_history_total_rows_per_version(spark, tmp_path):
+    """describe_history reports each snapshot's row count (the manifest
+    sizes) as ``total_rows``, after a write, a delete and a merge."""
+    from padawan_spark import delete_rows, list_versions, merge_rows
+    from padawan_spark.dataset import describe_history
+
+    p = str(tmp_path / "hist")
+    _kv(spark, range(20)).repartition(5).write_parquet(p)
+    delete_rows(spark, p, (3,), (6,), inclusive="both")
+    merge_rows(spark, p, _kv(spark, [8, 100, 101], v=-1))
+    got = {r.version: r.total_rows
+           for r in describe_history(spark, p).collect()}
+    assert got == {v: scan_parquet(spark, p, version=v).df.count()
+                   for v in list_versions(p)}
+    assert sorted(got.values()) == [16, 18, 20]
 
 
 def test_read_changes_append_fast_path_and_plan(spark, tmp_path):
@@ -2106,6 +2157,29 @@ def test_refresh_aggregate_detects_divergence_and_recomputes(
                              sum_cols=("k",)).df
     assert {(r["g"], r["cnt"], r["sum_k"])
             for r in out2.where("cnt > 0").collect()} == got
+
+
+def test_refresh_aggregate_after_compaction_publishes_no_version(
+        spark, tmp_path):
+    """A compaction's change feed nets to zero, so the refresh folds an
+    empty batch: it publishes no MV version and still records that the
+    MV has caught up with the compacted source version."""
+    import json
+
+    from padawan_spark import compact_parquet, list_versions
+    from padawan_spark.dataset import refresh_aggregate
+
+    src = _iva_source(spark, tmp_path, [(k, k % 3) for k in range(12)])
+    mv = str(tmp_path / "iva_mvc")
+    refresh_aggregate(spark, src, mv, keys=("g",), sum_cols=("k",))
+    mv_versions = list_versions(mv)
+    compact_parquet(spark, src, 100)
+    out = refresh_aggregate(spark, src, mv, keys=("g",), sum_cols=("k",))
+    assert list_versions(mv) == mv_versions
+    with open(os.path.join(mv, "_refresh_state.json")) as fh:
+        assert json.load(fh)["source_version"] == list_versions(src)[-1]
+    assert {(r["g"], r["cnt"], r["sum_k"]) for r in out.df.collect()} \
+        == {(0, 4, 18), (1, 4, 22), (2, 4, 26)}
 
 
 # ---------------------------------------------------------------------------

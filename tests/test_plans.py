@@ -738,7 +738,7 @@ def test_query_leaves_no_cache_manager_entry(spark, name):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), name
 
 
-def test_load_infers_schema_once_per_file(spark, tmp_path):
+def test_load_infers_schema_once_per_file(spark, tmp_path, count_jobs):
     """``load`` runs Spark's footer-inference job on the first read of a
     file only, and infers again once the file is rewritten."""
     import shutil
@@ -748,21 +748,11 @@ def test_load_infers_schema_once_per_file(spark, tmp_path):
 
     from padawan_spark.queries.registry import load
 
-    sc = spark.sparkContext
     path = tmp_path / "nation.parquet"
     shutil.copy(f"{SF}/nation.parquet", path)
 
-    def load_and_count_jobs(group):
-        sc.setJobGroup(group, group)
-        try:
-            df = load(spark, str(tmp_path), "nation")
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return df, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    first, first_jobs = load_and_count_jobs(f"{tmp_path}-1")
-    second, second_jobs = load_and_count_jobs(f"{tmp_path}-2")
+    first, first_jobs = count_jobs(load, spark, str(tmp_path), "nation")
+    second, second_jobs = count_jobs(load, spark, str(tmp_path), "nation")
     assert (first_jobs, second_jobs) == (1, 0)
     assert second.schema == first.schema
     assert sorted(second.collect()) == sorted(first.collect())
@@ -770,7 +760,7 @@ def test_load_infers_schema_once_per_file(spark, tmp_path):
     t = pq.read_table(path)
     pq.write_table(t.append_column("n_extra", pa.array(range(t.num_rows))),
                    path)
-    third, third_jobs = load_and_count_jobs(f"{tmp_path}-3")
+    third, third_jobs = count_jobs(load, spark, str(tmp_path), "nation")
     assert third_jobs == 1
     assert third.columns == first.columns + ["n_extra"]
     assert third.count() == t.num_rows
@@ -832,12 +822,10 @@ def test_incremental_mv_fold_never_shuffles_the_mv(spark, tmp_path):
     delete_rows(spark, src, (10,), (30,), inclusive="both")
     changes = read_changes(spark, src, 1)
     # the fold localCheckpoints its result before merging (so the
-    # emptiness probe and the merge share one materialization), which
-    # erases the join plan downstream — intercept the checkpoint call
-    # itself and pin the plan of the frame being materialized.  The
-    # fold's checkpoint is the FIRST one fired; merge_rows checkpoints
-    # its own repartitioned regions afterwards, so only setdefault the
-    # first capture or the assertion runs against a merge-internal plan
+    # merge's jobs share one materialization), which erases the join
+    # plan downstream — intercept the checkpoint call itself and pin
+    # the plan of the frame being materialized: the fold's checkpoint
+    # is the first one fired
     from pyspark.sql.classic.dataframe import DataFrame as _DF
     import padawan_spark.dataset as dsmod
     captured = {}
