@@ -23,6 +23,7 @@ predicates are Catalyst boolean trees that push into parquet scans.
 
 from __future__ import annotations
 
+import datetime as _dt
 import functools
 import glob as _glob
 import json
@@ -34,7 +35,8 @@ from typing import Callable, Iterator, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (BooleanType, IntegerType, StructField,
-                               StructType)
+                               StructType, TimestampType,
+                               _parse_datatype_string)
 
 from . import metadata as _meta
 from . import ordering as _ord
@@ -135,7 +137,7 @@ class Dataset:
             else:
                 _require(schema is not None, ValueError,
                          "zero-partition dataset requires an explicit schema")
-                df = spark.createDataFrame([], schema)
+                df = _local_df(spark, [], schema)
         self.df = df
         self.index_columns = tuple(index_columns)
         self._sizes = list(sizes) if sizes is not None else None
@@ -929,6 +931,32 @@ def _file_path():
     return F.url_decode(F.regexp_replace(uri, r"\+", "%2B"))
 
 
+def _local_df(spark: SparkSession, rows: Sequence[tuple], schema
+              ) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples in field order of
+    ``schema``, a StructType or DDL string), built from an Arrow table so
+    it plans as a local relation (``LocalTableScan``): no parallelized
+    RDD, no Python worker.  A ``datetime`` in a TIMESTAMP column is
+    converted to UTC first: ``createDataFrame`` of a list reads a naive
+    one as local time and an aware one as its instant, while pyarrow
+    takes the wall clock as UTC and ignores the offset."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    arrays = []
+    for c, f, a in zip(cols, schema.fields, arrow):
+        if isinstance(f.dataType, TimestampType):
+            c = [v.astimezone(_dt.timezone.utc)
+                 if isinstance(v, _dt.datetime) else v for v in c]
+        arrays.append(pa.array(list(c), type=a.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow),
+                                 schema)
+
+
 def _read_tagged(spark: SparkSession, tags: list[tuple], ddl: str,
                  schema: StructType | None, residual=None) -> DataFrame:
     """The rows of the files in ``tags`` (``(abspath, *values)``, the
@@ -936,7 +964,7 @@ def _read_tagged(spark: SparkSession, tags: list[tuple], ddl: str,
     :func:`_file_path` by broadcast: a file tagged twice yields its rows
     twice.  Tag before any other join: ``input_file_name`` above a join
     with a second file scan cannot say which scan it means."""
-    tag_df = spark.createDataFrame(tags, "__path string, " + ddl)
+    tag_df = _local_df(spark, tags, "__path string, " + ddl)
     return (_read_files(spark, sorted({t[0] for t in tags}), schema, residual)
             .withColumn("__path", _file_path())
             .join(F.broadcast(tag_df), "__path").drop("__path"))
@@ -1102,8 +1130,6 @@ def scan_parquet_pruned(spark: SparkSession, path: str,
     modes, full-prefix lex bounds, parquet min/max pushdown) on that
     subset — so results are identical to the driver-side path by
     construction, only cheaper to plan."""
-    import datetime as _dt
-
     _require(os.path.isdir(_meta.manifest_table_path(path)), ValueError,
              f"scan_parquet_pruned requires a manifest table at {path} "
              f"(write with manifest_table=True)")
@@ -1337,7 +1363,8 @@ def _within(df: DataFrame, ix: Sequence[str], intervals: list[tuple]
            for f in ("__has_lo", "__lo_incl", "__has_hi", "__hi_incl")]
         + [StructField(f"__{e}_{j}", df.schema[c].dataType, True)
            for e in ("lo", "hi") for j, c in enumerate(ix)])
-    bdf = df.sparkSession.createDataFrame(
+    bdf = _local_df(
+        df.sparkSession,
         [(i, lo is not None, lo_incl, hi is not None, hi_incl,
           *(lo or none_b), *(hi or none_b))
          for i, lo, lo_incl, hi, hi_incl in intervals], schema)
@@ -1582,7 +1609,7 @@ def read_changes(spark: SparkSession, path: str, from_version: int,
             .withColumn("__sign", F.explode(
                 F.array_repeat(sign, F.abs(sign).cast("int")))))
     if not parts:
-        return (spark.createDataFrame([], schema)
+        return (_local_df(spark, [], schema)
                 .withColumn("_commit_version", F.lit(0).cast("bigint"))
                 .withColumn("_change_type", F.lit("")))
     return functools.reduce(DataFrame.unionByName, [
@@ -1854,9 +1881,9 @@ def describe_history(spark: SparkSession, path: str) -> DataFrame:
         rows.append((v, len(man.files), len(cur - prev), len(prev - cur),
                      sum(man.sizes) if man.known_sizes else None))
         prev = cur
-    return spark.createDataFrame(
-        rows, "version bigint, n_files int, n_added_files int, "
-              "n_removed_files int, total_rows bigint")
+    return _local_df(spark, rows,
+                     "version bigint, n_files int, n_added_files int, "
+                     "n_removed_files int, total_rows bigint")
 
 
 FOOTER_STATS_SCHEMA = ("file string, row_group int, column string, "
@@ -1876,7 +1903,7 @@ def scan_parquet_footers(spark: SparkSession, files) -> DataFrame:
     engine UIs display them."""
     if isinstance(files, str):
         files = [files]
-    fdf = spark.createDataFrame([(f,) for f in files], "file string")
+    fdf = _local_df(spark, [(f,) for f in files], "file string")
 
     def batches(it):
         import pandas as pd

@@ -8,7 +8,8 @@ recording ``index_columns``, the ordered parquet ``files``, per-file
 monotone ``max_partition_index`` so appends never reuse a slot.  Bound
 values that JSON can't represent use the same tagged codec as the
 reference (``json_io.py:13-41``): ``{"$datetime": iso}``,
-``{"$date": iso}``, ``{"$timedelta": "NdNsNu"}``.
+``{"$date": iso}``, ``{"$timedelta": "NdNsNu"}``, plus
+``{"$decimal": str}`` so a DECIMAL index keeps its exact values.
 
 Differences from the reference, by design:
 
@@ -17,18 +18,22 @@ Differences from the reference, by design:
   informational in Spark.
 - At 100 TB / millions of files a single JSON manifest is the wrong shape;
   the scale form is the manifest TABLE (:func:`write_manifest_table`,
-  one row per file), and per-file bounds come from a distributed stats
-  job in :mod:`padawan_spark.dataset` that returns one row per file,
-  never the data.
+  one row per file, read by a distributed prune), and per-file bounds
+  come from a distributed stats job in :mod:`padawan_spark.dataset`
+  that returns one row per file, never the data.  The table is written
+  on the driver with pyarrow from the in-memory manifest (no Spark
+  job) and, like the JSON manifest, published by rename.
 """
 
 from __future__ import annotations
 
 import contextlib
 import datetime as dt
+import decimal
 import json
 import os
 import re
+import shutil
 from dataclasses import dataclass, field
 
 METADATA_FILE = "_padawan_metadata.json"
@@ -99,6 +104,8 @@ def _encode_value(v):
         return {"$date": v.isoformat()}
     if isinstance(v, dt.timedelta):
         return {"$timedelta": f"{v.days}d{v.seconds}s{v.microseconds}u"}
+    if isinstance(v, decimal.Decimal):
+        return {"$decimal": str(v)}
     return v
 
 
@@ -114,6 +121,8 @@ def _decode_value(v):
                 raise ValueError(f"bad timedelta encoding: {v}")
             d, s, u = (int(g) for g in m.groups())
             return dt.timedelta(days=d, seconds=s, microseconds=u)
+        if "$decimal" in v:
+            return decimal.Decimal(v["$decimal"])
     return v
 
 
@@ -346,6 +355,7 @@ def has_manifest(path: str) -> bool:
 # ---------------------------------------------------------------------------
 
 MANIFEST_TABLE_DIR = "_padawan_manifest"
+MANIFEST_TABLE_FILE = "manifest.parquet"
 
 
 def manifest_table_path(path: str) -> str:
@@ -363,27 +373,52 @@ def write_manifest_table(spark, path: str, manifest: Manifest) -> None:
     sidecar so arbitrary index types round-trip.  The JSON sidecar is
     still written by the facade for API parity; this is the scale form
     (Iceberg/Delta keep their manifests as tables for the same
-    reason)."""
+    reason).
+
+    The table is written on the driver with pyarrow, from the
+    :class:`Manifest` the JSON sidecar is written from: no Spark job
+    (``spark`` is unused, kept for the signature).  It is published
+    like the sidecar: its one data file and the meta file are each
+    written to a temp name and renamed into place, so a reader sees
+    the old table or the new one, never a partial or empty one; any
+    other file in the table directory is removed after."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def _enc(b):
+        return (json.dumps([_encode_value(v) for v in b])
+                if b is not None else None)
+
     n = len(manifest.files)
-    lbs = manifest.lower_bounds or [None] * n
-    ubs = manifest.upper_bounds or [None] * n
-    sizes = manifest.sizes or [None] * n
-    rows = [
-        (i, manifest.files[i],
-         int(sizes[i]) if sizes[i] is not None else None,
-         json.dumps([_encode_value(v) for v in lbs[i]])
-         if lbs[i] is not None else None,
-         json.dumps([_encode_value(v) for v in ubs[i]])
-         if ubs[i] is not None else None)
-        for i in range(n)
-    ]
-    df = spark.createDataFrame(
-        rows, "pos int, file string, size bigint, lb string, ub string")
-    df.write.mode("overwrite").parquet(manifest_table_path(path))
-    meta = {"index_columns": list(manifest.index_columns),
-            "max_partition_index": manifest.max_partition_index}
-    with open(os.path.join(path, MANIFEST_TABLE_DIR + "_meta.json"), "w") as f:
-        json.dump(meta, f)
+    table = pa.table({
+        "pos": pa.array(range(n), pa.int32()),
+        "file": pa.array(manifest.files, pa.string()),
+        "size": pa.array(manifest.sizes or [None] * n, pa.int64()),
+        "lb": pa.array([_enc(b) for b in manifest.lower_bounds
+                        or [None] * n], pa.string()),
+        "ub": pa.array([_enc(b) for b in manifest.upper_bounds
+                        or [None] * n], pa.string()),
+    })
+    tdir = manifest_table_path(path)
+    os.makedirs(tdir, exist_ok=True)
+    # a name starting with "." is hidden from Spark's file listing
+    tmp = os.path.join(tdir, "." + MANIFEST_TABLE_FILE + ".tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(tdir, MANIFEST_TABLE_FILE))
+    meta = os.path.join(path, MANIFEST_TABLE_DIR + "_meta.json")
+    with open(meta + ".tmp", "w") as f:
+        json.dump({"index_columns": list(manifest.index_columns),
+                   "max_partition_index": manifest.max_partition_index}, f)
+    os.replace(meta + ".tmp", meta)
+    # what a table Spark wrote (part files, _SUCCESS, .crc) or a failed
+    # write left behind
+    for f in os.listdir(tdir):
+        if f != MANIFEST_TABLE_FILE:
+            fp = os.path.join(tdir, f)
+            if os.path.isdir(fp):
+                shutil.rmtree(fp)
+            else:
+                os.remove(fp)
 
 
 def load_manifest_table(spark, path: str):

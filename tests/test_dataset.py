@@ -2306,3 +2306,180 @@ def test_tail_stream_max_versions_per_trigger(spark, tmp_path):
     # trigger (the backlog may land as one 20-row batch or two) — only
     # the capped run has deterministic boundaries
     assert sum(run(False)) == 30
+
+
+@pytest.fixture
+def la_time(spark):
+    """Python's local time zone and the session time zone both set to
+    America/Los_Angeles, so a naive ``datetime`` read as UTC shows."""
+    import time
+    old_tz = os.environ.get("TZ")
+    old_session = spark.conf.get("spark.sql.session.timeZone")
+    os.environ["TZ"] = "America/Los_Angeles"
+    time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        yield
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+        spark.conf.set("spark.sql.session.timeZone", old_session)
+
+
+def test_driver_built_tables_plan_as_local_relations(spark, tmp_path):
+    """The tables the Dataset layer builds on the driver (file tags,
+    probe intervals, empty frames) are Arrow local relations: each plans
+    as ``LocalTableScan``, never as a parallelized RDD of pickled rows
+    (``Scan ExistingRDD``), which runs a Python worker."""
+    from padawan_spark import read_changes
+    from padawan_spark.dataset import _read_tagged, _within
+
+    p = str(tmp_path / "local")
+    _kv(spark, range(10)).repartition(2).write_parquet(p)
+    ds = scan_parquet(spark, p)
+    frames = {
+        "_read_tagged": _read_tagged(
+            spark, [(os.path.abspath(f), i) for i, f in enumerate(ds._files)],
+            "__t int", ds.df.schema),
+        "_within": _within(spark.range(10).selectExpr("id AS k"), ("k",),
+                           [(0, None, False, (3,), False),
+                            (1, (3,), True, None, False)]),
+        "empty Dataset": Dataset(spark, files=[], schema=ds.df.schema).df,
+        "empty read_changes": read_changes(spark, p, 1, 1),
+    }
+    for name, df in frames.items():
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, \
+            (name, plan)
+
+
+def test_local_df_matches_create_dataframe_list(spark, la_time):
+    """``_local_df`` gives the values ``createDataFrame`` of a list gives,
+    for every index type the manifest codec round-trips, NULLs included;
+    values pass through the codec first, as merge_rows' probe bounds do.
+    A naive timestamp is local time in both (Python's zone differs from
+    UTC here), and the JVM renders both frames alike in the session
+    zone."""
+    import decimal
+    import json
+
+    from padawan_spark import metadata as meta
+    from padawan_spark.dataset import _local_df
+
+    values = {
+        "int": 7, "bigint": 2 ** 40, "string": "a b",
+        "date": dt.date(2022, 3, 13),
+        "timestamp": dt.datetime(2022, 3, 13, 1, 30, 0, 5),
+        "timestamp_ntz": dt.datetime(2022, 3, 13, 2, 30),
+        "decimal(18,2)": decimal.Decimal("-12.34"),
+        "double": 1.5, "boolean": True,
+    }
+    for ddl, v in values.items():
+        rows = [(json.loads(json.dumps(meta._encode_value(v))), 0),
+                (None, 1)]
+        rows = [(meta._decode_value(x), i) for x, i in rows]
+        assert rows[0][0] == v, ddl
+        schema = f"c {ddl}, i int"
+        got, want = (_local_df(spark, rows, schema),
+                     spark.createDataFrame(rows, schema))
+        assert got.schema == want.schema, ddl
+        assert got.orderBy("i").collect() == want.orderBy("i").collect(), ddl
+        as_text = "CAST(c AS STRING) AS c", "i"
+        assert (got.selectExpr(*as_text).orderBy("i").collect()
+                == want.selectExpr(*as_text).orderBy("i").collect()), ddl
+    aware = [(dt.datetime(2022, 1, 1, 12, tzinfo=dt.timezone.utc),)]
+    assert (_local_df(spark, aware, "c timestamp").collect()
+            == spark.createDataFrame(aware, "c timestamp").collect())
+
+
+def test_merge_rows_at_a_timestamp_file_bound(spark, tmp_path, la_time):
+    """A timestamp-indexed table: merge_rows probes the manifest's bounds
+    (naive local datetimes) as the same instants the table holds, so a
+    batch key equal to a file's lower bound updates that row in place."""
+    from padawan_spark import merge_rows
+
+    p = str(tmp_path / "tsmerge")
+    hours = "timestamp_seconds(1641024000 + id * 3600)"   # 2022-01-01 UTC
+    Dataset(spark, spark.range(20).selectExpr(f"{hours} AS t",
+                                              "CAST(id AS INT) AS v"),
+            index_columns=("t",)).repartition(4).write_parquet(p)
+    before = scan_parquet(spark, p)
+    key = before.lower_bounds[2][0]
+    want = {r.t: r.v for r in before.df.collect()} | {key: -1}
+    out = merge_rows(spark, p, Dataset(spark, spark.createDataFrame(
+        [(key, -1)], "t timestamp, v int"), index_columns=("t",)))
+    out.assert_disjoint()
+    assert out.df.count() == 20
+    assert {r.t: r.v for r in out.df.collect()} == want
+    assert len(set(before._files) - set(out._files)) == 1
+
+
+def test_dataset_call_job_budgets(spark, tmp_path, count_jobs):
+    """Upper bounds on the Spark jobs each Dataset call runs on a tiny
+    table (a lazy call is counted with the action that reads it), so a
+    job regression fails like a wrong result.  The manifest table is
+    written on the driver and adds none."""
+    from padawan_spark import (compact_parquet, delete_rows, merge_rows,
+                               read_changes)
+
+    p = str(tmp_path / "budget")
+    src = Dataset(spark, spark.range(40).selectExpr(
+        "CAST(id AS INT) AS k", "CAST(id AS INT) AS v"), index_columns=("k",))
+    calls = {
+        "write_parquet": lambda: src.repartition(10).write_parquet(
+            p, manifest_table=True),
+        "merge_rows": lambda: merge_rows(spark, p, _kv(spark, [3, 100])),
+        "delete_rows": lambda: delete_rows(spark, p, (8,), (12,)),
+        "compact_parquet": lambda: compact_parquet(spark, p, 20),
+        "collate": lambda: scan_parquet(spark, p).collate(20).df.collect(),
+        "read_changes": lambda: read_changes(spark, p, 1).collect(),
+    }
+    budget = {"write_parquet": 7, "merge_rows": 11, "delete_rows": 3,
+              "compact_parquet": 5, "collate": 3, "read_changes": 4}
+    jobs = {name: count_jobs(fn)[1] for name, fn in calls.items()}
+    assert all(jobs[name] <= budget[name] for name in calls), jobs
+
+
+def test_manifest_table_is_one_file_published_by_rename(spark, tmp_path,
+                                                        monkeypatch):
+    """After two commits the manifest table directory holds one parquet
+    file of (pos int, file string, size bigint, lb string, ub string)
+    rows, and the part files, ``_SUCCESS`` and ``.crc`` files of a table
+    Spark wrote are gone.  A write that fails midway leaves the
+    published table readable."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from padawan_spark import delete_rows
+    from padawan_spark import metadata as meta
+
+    p = str(tmp_path / "mtab1")
+    tdir = meta.manifest_table_path(p)
+    _kv(spark, range(20)).repartition(4).write_parquet(p)
+    # the layout a Spark-written table left behind
+    spark.range(3).selectExpr("CAST(id AS INT) AS pos").write.parquet(tdir)
+    assert any(f.startswith("part-") for f in os.listdir(tdir))
+    _kv(spark, range(20, 25)).write_parquet(p, append=True)
+    delete_rows(spark, p, (3,), (6,))
+    assert os.listdir(tdir) == [meta.MANIFEST_TABLE_FILE]
+    assert pq.read_schema(os.path.join(tdir, meta.MANIFEST_TABLE_FILE)) \
+        == pa.schema([("pos", pa.int32()), ("file", pa.string()),
+                      ("size", pa.int64()), ("lb", pa.string()),
+                      ("ub", pa.string())])
+    published = meta.load_manifest(p)
+    assert meta.manifest_from_table(spark, p) == published
+
+    def torn(table, where, **kw):
+        with open(where, "wb") as f:
+            f.write(b"PAR1 torn")
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pq, "write_table", torn)
+    with pytest.raises(OSError, match="disk full"):
+        meta.write_manifest_table(spark, p, meta.Manifest(
+            index_columns=("k",), files=["x.parquet"]))
+    assert meta.manifest_from_table(spark, p) == published
