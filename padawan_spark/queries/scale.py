@@ -5,7 +5,12 @@ a plan survives 100 TB.
   the sort-merge join runs with ZERO exchange (verified by plan test).
   This is the production answer to padawan's co-partitioned index join
   (``/root/reference/src/padawan/joined_dataset.py``): pre-shuffle once
-  at write time, join shuffle-free forever after.
+  at write time, join shuffle-free forever after.  The bucket count is
+  the session's core count (``defaultParallelism``): each bucket is one
+  write task, one file and one join task, so that is the fewest buckets
+  that keep every core busy, and more buckets only add tiny files and
+  per-task overhead (padawan sizes partitions from the data and ships
+  ``collate`` for the same reason).
 - ``scale_dedup_clusters``: connected components over the MinHash-LSH
   candidate graph (iterative min-label propagation — each round is a
   join + groupBy, the standard large-scale CC shape), producing a
@@ -31,11 +36,6 @@ from .registry import DEC, dsum, load, query, sql_dsum
 # ---------------------------------------------------------------------------
 
 _BUCKETED_DONE: dict[str, tuple] = {}
-
-# Bucket count = this box's core count so write and join use full width;
-# at cluster scale size it so each bucket's share of the fact table fits
-# an executor's shuffle-free read (hundreds-to-thousands of buckets).
-_N_BUCKETS = 32
 
 
 def _source_fingerprint(sf_dir) -> tuple:
@@ -72,6 +72,14 @@ def _drop_orphan_locations(spark, tables) -> None:
                 shutil.rmtree(loc, ignore_errors=True)
 
 
+def _bucketed_names(sf_dir) -> tuple[str, str]:
+    """The bucketed lineitem/orders table names for ``sf_dir``, from
+    its basename (so different scale factors coexist)."""
+    import re
+    suffix = re.sub(r"\W+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    return f"b_lineitem_{suffix}", f"b_orders_{suffix}"
+
+
 def _ensure_bucketed(spark, sf_dir) -> tuple[str, str]:
     """Materialize the bucketed lineitem/orders tables for ``sf_dir`` once
     (suffix-keyed so different scale factors coexist).  This is the
@@ -89,14 +97,25 @@ def _ensure_bucketed(spark, sf_dir) -> tuple[str, str]:
     disk with no catalog entry, and ``saveAsTable`` then fails with
     LOCATION_ALREADY_EXISTS rather than overwriting.  When the catalog
     doesn't know the table, drop any leftover location first."""
-    import re
-    suffix = re.sub(r"\W+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    tl, to = f"b_lineitem_{suffix}", f"b_orders_{suffix}"
+    tl, to = _bucketed_names(sf_dir)
     fp = _source_fingerprint(sf_dir)
     if (_BUCKETED_DONE.get(sf_dir) != fp
             or not spark.catalog.tableExists(tl)
             or not spark.catalog.tableExists(to)):
+        # the names come from the basename alone, so another data
+        # directory with the same basename may have built these tables:
+        # forget it, or its next call would join this directory's rows
+        for d in [d for d in _BUCKETED_DONE
+                  if d != sf_dir and _bucketed_names(d) == (tl, to)]:
+            del _BUCKETED_DONE[d]
         _drop_orphan_locations(spark, (tl, to))
+        # One bucket per core: bucketing is the join's exchange done at
+        # write time, so each bucket is one write task and one join task
+        # and this width keeps every core busy with the fewest files.
+        # At cluster scale size it instead so each bucket's share of the
+        # fact table fits an executor's shuffle-free read
+        # (hundreds-to-thousands of buckets).
+        nb = spark.sparkContext.defaultParallelism
         # repartition on the bucket key to the bucket count BEFORE the
         # bucketed write: repartition's hash (Murmur3 pmod n) matches the
         # bucketing hash, so each task holds exactly one bucket → one
@@ -106,13 +125,13 @@ def _ensure_bucketed(spark, sf_dir) -> tuple[str, str]:
         # source scatters tasks×buckets small files.
         l = (load(spark, sf_dir, "lineitem")
              .select("l_orderkey", "l_extendedprice")
-             .repartition(_N_BUCKETS, "l_orderkey"))
+             .repartition(nb, "l_orderkey"))
         o = (load(spark, sf_dir, "orders")
              .select("o_orderkey", "o_orderpriority")
-             .repartition(_N_BUCKETS, "o_orderkey"))
-        (l.write.bucketBy(_N_BUCKETS, "l_orderkey").sortBy("l_orderkey")
+             .repartition(nb, "o_orderkey"))
+        (l.write.bucketBy(nb, "l_orderkey").sortBy("l_orderkey")
          .mode("overwrite").saveAsTable(tl))
-        (o.write.bucketBy(_N_BUCKETS, "o_orderkey").sortBy("o_orderkey")
+        (o.write.bucketBy(nb, "o_orderkey").sortBy("o_orderkey")
          .mode("overwrite").saveAsTable(to))
         _BUCKETED_DONE[sf_dir] = fp
     return tl, to

@@ -110,6 +110,49 @@ def test_ensure_bucketed_survives_orphan_location(spark, sf_dir):
     assert spark.table(tl2).count() > 0
 
 
+def test_bucketed_join_same_basename_dirs_keep_own_results(
+        spark, sf_dir, tmp_path):
+    # The bucketed tables are named after the data directory's basename,
+    # so <tmp>/a/sf and <tmp>/b/sf share one pair of tables: calling the
+    # query for a, then b, then a must give each directory its own join.
+    import shutil
+
+    import duckdb
+    import pyarrow.parquet as pq
+    from padawan_spark.queries import QUERIES
+    from padawan_spark.queries.registry import ORACLE
+    from padawan_spark.queries.scale import _BUCKETED_DONE, _bucketed_names
+    from tests.oracle_harness import canon_frame
+
+    dirs = {}
+    for name in ("a", "b"):
+        d = tmp_path / name / "sf"
+        d.mkdir(parents=True)
+        shutil.copy(os.path.join(sf_dir, "lineitem.parquet"), d)
+        orders = pq.read_table(os.path.join(sf_dir, "orders.parquet"))
+        if name == "b":
+            orders = orders.slice(0, orders.num_rows // 2)
+        pq.write_table(orders, str(d / "orders.parquet"))
+        dirs[name] = str(d)
+
+    def oracle(d):
+        con = duckdb.connect()
+        for t in ("lineitem", "orders"):
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet'")
+        return canon_frame(con.sql(ORACLE["scale_bucketed_join"]).df())
+
+    try:
+        for call, name in enumerate(("a", "b", "a")):
+            got = QUERIES["scale_bucketed_join"](spark, dirs[name])
+            assert canon_frame(got.toPandas()) == oracle(dirs[name]), (
+                call, name)
+    finally:
+        for d in dirs.values():
+            _BUCKETED_DONE.pop(d, None)
+        for t in _bucketed_names(dirs["a"]):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 @pytest.mark.slow
 def test_bucketed_join_no_exchange(spark, sf_dir):
     # run the query once to (re)create the bucketed tables, then force a

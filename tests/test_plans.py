@@ -125,6 +125,29 @@ def test_bucketed_join_no_exchange(spark):
     assert a.exchanges <= 1, a.plan  # ≤1: only the final groupBy moves data
 
 
+def test_bucketed_layout_one_file_per_bucket_per_core(spark):
+    """Both bucketed tables have one bucket per core, and the
+    repartition before the bucketed write leaves at most one data file
+    per bucket."""
+    import os
+    import re
+    from urllib.parse import urlparse
+
+    from padawan_spark.queries.scale import _ensure_bucketed
+    nb = spark.sparkContext.defaultParallelism
+    for t in _ensure_bucketed(spark, SF):
+        info = {r.col_name: r.data_type for r in
+                spark.sql(f"DESCRIBE TABLE EXTENDED {t}").collect()}
+        assert info["Num Buckets"] == str(nb), (t, info)
+        loc = urlparse(info["Location"]).path
+        files = [f for f in os.listdir(loc) if not f.startswith(("_", "."))]
+        # a bucket file is part-<task>-<uuid>_<bucket id>.c<n>...
+        buckets = [int(re.search(r"_(\d+)\.c\d+", f).group(1))
+                   for f in files]
+        assert len(buckets) == len(set(buckets)), (t, files)
+        assert all(0 <= b < nb for b in buckets), (t, files)
+
+
 def test_profile_summary_single_scan(spark):
     a = plan_of(spark, "adv_profile_summary")
     assert len(a.scans) == 1, a.scans      # all metrics from ONE pass
@@ -304,7 +327,7 @@ def test_pagerank_users_round_shuffles_on_vertex_key(spark):
 
 @pytest.mark.slow
 def test_iterative_loops_truncate_lineage(spark):
-    # lineage hygiene (r17: INTERVAL-based): iterative loops truncate
+    # lineage hygiene (interval-based): iterative loops truncate
     # through localCheckpoint at least every _CKPT_EVERY rounds, so the
     # RETURNED plan is bounded by O(interval) rounds over materialized
     # RDD leaves — it cannot grow with the TOTAL iteration count (the
@@ -509,8 +532,8 @@ def test_cooccurrence_vocab_broadcast_bounds_fanout(spark):
 
 
 def test_bfs_rounds_are_equi_joins(spark):
-    # r16: the edge table is checkpoint-truncated in the returned plan
-    # (it used to surface the edge-builder's joins), so audit ONE
+    # the edge table is checkpoint-truncated in the returned plan (so
+    # it does not surface the edge-builder's joins): audit ONE
     # unrolled expansion round: frontier-edge equi-join + anti-join
     # against visited, never cartesian
     from pyspark.sql import functions as F
@@ -553,7 +576,7 @@ def test_lpa_rounds_vertex_keyed_no_cartesian(spark):
     hist = (ue.join(labels, ue.u == labels.vtx)
             .groupBy(F.col("v").alias("vtx"), "lbl")
             .agg(F.count(F.lit(1)).alias("cnt")))
-    # r16 round shape: argmax as min(struct(-cnt, lbl)), not a window
+    # the round's shape: argmax as min(struct(-cnt, lbl)), not a window
     rnd = (hist.groupBy("vtx")
            .agg(F.min(F.struct((-F.col("cnt")).alias("nc"),
                                F.col("lbl"))).alias("m"))
@@ -617,7 +640,7 @@ def test_constraint_audit_fk_check_is_anti_join(spark):
 
 
 def test_semantic_dedup_cell_cap_bounds_fanout(spark):
-    """VERDICT r3 #2: within-cell pair generation must be CELL-CAPPED —
+    """Within-cell pair generation must be CELL-CAPPED —
     a degenerate hot cluster may cost at most _CELL_CAP × |cell|
     comparisons, never |cell|² (the _DF_CAP discipline applied to the
     SemDeDup / embedding-cosine pair joins)."""
@@ -636,7 +659,7 @@ def test_semantic_dedup_cell_cap_bounds_fanout(spark):
 
 @pytest.mark.slow
 def test_dedup_clusters_one_job_per_round(spark, sf_dir, monkeypatch):
-    """VERDICT r3 #3: the iterative CC loop folds convergence detection
+    """The iterative CC loop folds convergence detection
     into each round's checkpoint job via an Observation — no separate
     per-round DataFrame.count() probe may run while the query builds."""
     from pyspark.sql import DataFrame
@@ -809,7 +832,7 @@ def test_registry_head_is_fixed_and_import_reads_no_outside_file():
 
 @pytest.mark.slow
 def test_incremental_mv_fold_never_shuffles_the_mv(spark, tmp_path):
-    """r8: fold_changes_into_aggregate must join the delta against the
+    """fold_changes_into_aggregate must join the delta against the
     MV via broadcast (semi filter + broadcast outer join) — a
     SortMergeJoin here means the whole MV shuffles on group keys for a
     one-window change set."""
@@ -848,7 +871,7 @@ def test_incremental_mv_fold_never_shuffles_the_mv(spark, tmp_path):
 
 
 def test_hudi_mor_merge_plan_shape(spark, tmp_path):
-    """r10 (tightened per r9 verdict): when logs touch few keys the
+    """When logs touch few keys the
     base table must NOT shuffle — untouched base rows pass through a
     broadcast left-anti join with ZERO exchanges on their branch, and
     the ONLY shuffle in the whole merge is the latest-wins window
@@ -884,7 +907,7 @@ def test_hudi_mor_merge_plan_shape(spark, tmp_path):
 
 @pytest.mark.slow
 def test_hudi_mor_per_slice_scan_restriction(spark, tmp_path):
-    """r11 (VERDICT r10 #6): the merge is PER FILE SLICE — base files
+    """The merge is PER FILE SLICE — base files
     of groups with no logs union straight into the output with no
     join, and the anti/semi key-split branches scan ONLY the touched
     groups' base files.  Pinned by the scan locations: touching 1 of
@@ -942,8 +965,8 @@ def test_hudi_mor_duplicate_base_keys_pass_through_both_paths(
     """Duplicate-key base rows (a bulk insert without dedup) pass
     through VERBATIM when no log touches their key, and collapse to
     one latest-wins row when a log does — IDENTICALLY in the
-    broadcast and shuffle-join size regimes (the r10 scale smoke
-    caught the old fallback deduping everything)."""
+    broadcast and shuffle-join size regimes (the shuffle-join fallback
+    must not dedup every base row)."""
     import pyspark.sql.functions as SF_
     from padawan_spark.functions.hudi import (read_hudi,
                                               write_hudi_delta_fixture,
@@ -992,7 +1015,7 @@ def test_hudi_mor_full_shuffle_fallback_still_correct(spark,
 
 def test_iceberg_position_delete_arrow_path_only_targeted_files(
         spark, tmp_path):
-    """r11: ORC/AVRO position deletes route ONLY the targeted files
+    """ORC/AVRO position deletes route ONLY the targeted files
     through the position-deriving task scan — the untargeted files of
     the same format stay on their normal source.  Pinned by the plan:
     with two ORC files and one targeted, the native ORC scan covers
@@ -1023,7 +1046,7 @@ def test_iceberg_position_delete_arrow_path_only_targeted_files(
 
 def test_delta_scan_count_independent_of_partition_values(spark,
                                                           tmp_path):
-    """r10 (verdict #5): the Delta read plans ONE parquet scan per
+    """The Delta read plans ONE parquet scan per
     physical layout, never per partition tuple — partition values
     re-attach via a broadcast file→values join, so plan width stays
     flat as partitions grow."""
@@ -1047,7 +1070,7 @@ def test_delta_scan_count_independent_of_partition_values(spark,
 
 @pytest.mark.slow
 def test_delta_partition_filters_prune_file_list(spark, tmp_path):
-    """r10: read_delta(filters=...) prunes the planned FILE LIST on
+    """read_delta(filters=...) prunes the planned FILE LIST on
     the driver through the add actions' partitionValues — a point
     lookup plans only that partition's files — and non-partition
     filters fall through to exact row predicates."""
@@ -1084,7 +1107,7 @@ def test_delta_partition_filters_prune_file_list(spark, tmp_path):
 
 
 def test_hudi_partition_pruning(spark, tmp_path):
-    """r10: read_hudi(partitions=[...]) restricts the read to those
+    """read_hudi(partitions=[...]) restricts the read to those
     partitions' file slices — untouched partitions' base files never
     enter the plan."""
     import pyspark.sql.functions as SF_
@@ -1116,7 +1139,7 @@ def test_hudi_partition_pruning(spark, tmp_path):
 
 def test_iceberg_scan_count_independent_of_partition_values(
         spark, tmp_path):
-    """r10 (verdict #5): same pin for Iceberg — one scan per layout,
+    """Same pin as the Delta test — one scan per layout,
     identity partition values via the broadcast attach map."""
     import pyspark.sql.functions as SF_
     from padawan_spark.functions.iceberg import (read_iceberg,
@@ -1137,7 +1160,7 @@ def test_iceberg_scan_count_independent_of_partition_values(
 
 
 def test_delta_dv_anti_join_broadcasts(spark, tmp_path):
-    """r10 (verdict #3): the distributed DV anti-join finalizes as a
+    """The distributed DV anti-join finalizes as a
     broadcast hash join under AQE (position sets are small relative
     to data) — never a cartesian/nested-loop pair explosion."""
     import pyspark.sql.functions as SF_
@@ -1159,7 +1182,7 @@ def test_delta_dv_anti_join_broadcasts(spark, tmp_path):
 
 
 def test_iceberg_eq_delete_anti_join_broadcasts(spark, tmp_path):
-    """r9: the equality-delete anti-join must run as a broadcast hash
+    """The equality-delete anti-join must run as a broadcast hash
     join under AQE (delete sets are small relative to data), never a
     cartesian/nested-loop pair explosion."""
     import pyspark.sql.functions as SF_
@@ -1180,7 +1203,7 @@ def test_iceberg_eq_delete_anti_join_broadcasts(spark, tmp_path):
 
 def test_iceberg_transform_pruning_is_driver_metadata_work(spark,
                                                            tmp_path):
-    """r9: a point filter through bucket/date transforms prunes the
+    """A point filter through bucket/date transforms prunes the
     FILE LIST before any Spark job — the scan the filtered read plans
     must touch strictly fewer files than the table holds."""
     import pyspark.sql.functions as SF_
