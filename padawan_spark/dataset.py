@@ -692,10 +692,11 @@ class Dataset:
         per-file aggregation job, never by collecting data.
 
         ``manifest_table=True`` additionally persists the manifest in its
-        scale form — a parquet table of (file, size, bounds) rows that
-        planning can filter/join distributed instead of parsing one JSON
-        document on the driver (SURVEY §7.4 trap 7; the Iceberg/Delta
-        manifest shape for million-file tables).
+        scale form — a parquet table of (file, size, bounds) rows sorted
+        by lower bound, from which ``scan_parquet_pruned`` reads only the
+        rows that may overlap a slice instead of parsing one JSON
+        document (SURVEY §7.4 trap 7; the Iceberg/Delta manifest shape
+        for million-file tables).
         """
         if progress is not None:
             from .progress import track_progress
@@ -1111,68 +1112,17 @@ def scan_parquet_pruned(spark: SparkSession, path: str,
                         lb: Sequence | None = None,
                         ub: Sequence | None = None,
                         inclusive: str = "lower") -> Dataset:
-    """Scale-path sliced scan for very large file counts: prune files
-    with a DISTRIBUTED filter over the parquet manifest TABLE (written
-    by ``write_parquet(manifest_table=True)``) BEFORE materializing the
-    Dataset, then apply the exact slice residual.
-
-    ``scan_parquet(path).slice(...)`` parses the whole JSON manifest on
-    the driver — O(total files) driver memory and parse time, the wrong
-    shape at millions of files (SURVEY §7.4 trap 7).  This path filters
-    the (file, size, bounds) TABLE as a DataFrame job and collects ONLY
-    the surviving rows, so driver cost scales with the files that
-    overlap the slice, not the table size.
-
-    Pruning is a CONSERVATIVE first-index-column overlap test (files
-    with unknown or non-comparable bounds are kept), which is always a
-    superset of the exact file set; the returned Dataset then applies
-    the ordinary exact :meth:`Dataset.slice` (all four inclusivity
-    modes, full-prefix lex bounds, parquet min/max pushdown) on that
-    subset — so results are identical to the driver-side path by
-    construction, only cheaper to plan."""
+    """``scan_parquet(path).slice(lb, ub, inclusive)`` for tables with
+    millions of files (SURVEY §7.4 trap 7): instead of parsing the whole
+    JSON manifest, plan from the manifest TABLE rows (written by
+    ``write_parquet(manifest_table=True)``) that may overlap the slice,
+    read on the driver by :func:`metadata.read_manifest_table`.
+    :meth:`Dataset.slice` then decides which files survive, as for any
+    Dataset.  Planning runs no Spark job."""
     _require(os.path.isdir(_meta.manifest_table_path(path)), ValueError,
              f"scan_parquet_pruned requires a manifest table at {path} "
              f"(write with manifest_table=True)")
-    t = _meta.load_manifest_table(spark, path)
-
-    def _first_key(col: str, probe):
-        """Sortable SQL expression for a bound tuple's first element, or
-        None when the probe's type can't be compared lexicographically
-        (caller then keeps everything — conservative)."""
-        if isinstance(probe, _dt.datetime):
-            return F.get_json_object(F.col(col), "$[0].$datetime")
-        if isinstance(probe, _dt.date):
-            return F.get_json_object(F.col(col), "$[0].$date")
-        if isinstance(probe, bool) or isinstance(probe, _dt.timedelta):
-            return None                       # not lexicographic — keep all
-        if isinstance(probe, (int, float)):
-            return F.get_json_object(F.col(col), "$[0]").cast("double")
-        if isinstance(probe, str):
-            return F.get_json_object(F.col(col), "$[0]")
-        return None
-
-    def _probe_lit(probe):
-        if isinstance(probe, (_dt.datetime, _dt.date)):
-            return F.lit(probe.isoformat())
-        if isinstance(probe, (int, float)):
-            return F.lit(float(probe))
-        return F.lit(probe)
-
-    keep = F.lit(True)
-    # overlap test on the FIRST index column (inclusive on both ends —
-    # a superset of every inclusivity mode; nulls kept):
-    #   file may overlap  iff  file.lb[0] <= ub[0]  AND  file.ub[0] >= lb[0]
-    if ub is not None and len(ub) > 0 and ub[0] is not None:
-        k = _first_key("lb", ub[0])
-        if k is not None:
-            keep = keep & (k.isNull() | (k <= _probe_lit(ub[0])))
-    if lb is not None and len(lb) > 0 and lb[0] is not None:
-        k = _first_key("ub", lb[0])
-        if k is not None:
-            keep = keep & (k.isNull() | (k >= _probe_lit(lb[0])))
-    rows = (t.where(keep | F.col("lb").isNull() | F.col("ub").isNull())
-            .orderBy("pos").collect())
-    ds = _manifest_dataset(spark, path, _meta._manifest_from_rows(path, rows))
+    ds = _manifest_dataset(spark, path, _meta.read_manifest_table(path, lb, ub))
     if lb is None and ub is None:
         return ds
     return ds.slice(lb, ub, inclusive=inclusive)

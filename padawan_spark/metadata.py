@@ -18,11 +18,11 @@ Differences from the reference, by design:
   informational in Spark.
 - At 100 TB / millions of files a single JSON manifest is the wrong shape;
   the scale form is the manifest TABLE (:func:`write_manifest_table`,
-  one row per file, read by a distributed prune), and per-file bounds
-  come from a distributed stats job in :mod:`padawan_spark.dataset`
-  that returns one row per file, never the data.  The table is written
-  on the driver with pyarrow from the in-memory manifest (no Spark
-  job) and, like the JSON manifest, published by rename.
+  one row per file, typed bound columns), which
+  :func:`read_manifest_table` prunes on the driver with pyarrow; only
+  this module knows its layout.  Per-file bounds come from a distributed
+  stats job in :mod:`padawan_spark.dataset` that returns one row per
+  file, never the data.
 """
 
 from __future__ import annotations
@@ -30,7 +30,9 @@ from __future__ import annotations
 import contextlib
 import datetime as dt
 import decimal
+import functools
 import json
+import operator
 import os
 import re
 import shutil
@@ -362,54 +364,53 @@ def manifest_table_path(path: str) -> str:
     return os.path.join(path, MANIFEST_TABLE_DIR)
 
 
-def write_manifest_table(spark, path: str, manifest: Manifest) -> None:
-    """Persist the manifest as a parquet TABLE (one row per data file)
-    instead of one JSON document.  At 100 TB a table has millions of
-    files; a single JSON manifest must be parsed wholesale on the
-    driver, while the table form lets planning run as a DataFrame job:
-    pruning becomes a filter/join over (file, size, bounds) rows —
-    executed distributed, with only the surviving file names collected.
-    Bound tuples are stored with the same tagged JSON codec as the
-    sidecar so arbitrary index types round-trip.  The JSON sidecar is
-    still written by the facade for API parity; this is the scale form
-    (Iceberg/Delta keep their manifests as tables for the same
-    reason).
+# key of the table file's key-value metadata: a JSON object with the
+# index columns, max_partition_index and whether bounds are known
+_TABLE_META = b"padawan.manifest"
 
-    The table is written on the driver with pyarrow, from the
-    :class:`Manifest` the JSON sidecar is written from: no Spark job
-    (``spark`` is unused, kept for the signature).  It is published
-    like the sidecar: its one data file and the meta file are each
-    written to a temp name and renamed into place, so a reader sees
-    the old table or the new one, never a partial or empty one; any
-    other file in the table directory is removed after."""
+
+def write_manifest_table(spark, path: str, manifest: Manifest) -> None:
+    """Persist the manifest as a parquet TABLE for tables with millions
+    of files (the Iceberg/Delta manifest shape), written on the driver
+    with pyarrow (``spark`` is unused, kept for the signature).
+
+    One row per data file: ``pos`` (its place in the manifest), ``file``,
+    ``size`` and, when bounds are known, ``lb_i`` / ``ub_i`` for index
+    column ``i``, typed as pyarrow infers from the values.  Rows are
+    sorted null-first by ``lb_0`` in row groups of 64k rows, so
+    :func:`read_manifest_table` skips a group by its min/max.  The index
+    columns and ``max_partition_index`` are the file's key-value
+    metadata, so one rename publishes the table: a reader sees the old
+    one or the new one.  Any other file in the table directory, and the
+    meta file older versions kept beside it, is removed after."""
     import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    def _enc(b):
-        return (json.dumps([_encode_value(v) for v in b])
-                if b is not None else None)
-
     n = len(manifest.files)
-    table = pa.table({
-        "pos": pa.array(range(n), pa.int32()),
-        "file": pa.array(manifest.files, pa.string()),
-        "size": pa.array(manifest.sizes or [None] * n, pa.int64()),
-        "lb": pa.array([_enc(b) for b in manifest.lower_bounds
-                        or [None] * n], pa.string()),
-        "ub": pa.array([_enc(b) for b in manifest.upper_bounds
-                        or [None] * n], pa.string()),
-    })
+    cols = {"pos": pa.array(range(n), pa.int32()),
+            "file": pa.array(manifest.files, pa.string()),
+            "size": pa.array(manifest.sizes or [None] * n, pa.int64())}
+    bounds = manifest.known_bounds
+    if bounds:
+        for side, bs in (("lb", manifest.lower_bounds),
+                         ("ub", manifest.upper_bounds)):
+            for i in range(len(manifest.index_columns)):
+                cols[f"{side}_{i}"] = pa.array([b[i] for b in bs])
+    table = pa.table(cols).replace_schema_metadata({_TABLE_META: json.dumps({
+        "index_columns": list(manifest.index_columns),
+        "max_partition_index": manifest.max_partition_index,
+        "bounds": bounds})})
+    if "lb_0" in cols:
+        table = table.take(pc.sort_indices(
+            table, sort_keys=[("lb_0", "ascending")],
+            null_placement="at_start"))
     tdir = manifest_table_path(path)
     os.makedirs(tdir, exist_ok=True)
     # a name starting with "." is hidden from Spark's file listing
     tmp = os.path.join(tdir, "." + MANIFEST_TABLE_FILE + ".tmp")
-    pq.write_table(table, tmp)
+    pq.write_table(table, tmp, row_group_size=1 << 16)
     os.replace(tmp, os.path.join(tdir, MANIFEST_TABLE_FILE))
-    meta = os.path.join(path, MANIFEST_TABLE_DIR + "_meta.json")
-    with open(meta + ".tmp", "w") as f:
-        json.dump({"index_columns": list(manifest.index_columns),
-                   "max_partition_index": manifest.max_partition_index}, f)
-    os.replace(meta + ".tmp", meta)
     # what a table Spark wrote (part files, _SUCCESS, .crc) or a failed
     # write left behind
     for f in os.listdir(tdir):
@@ -419,39 +420,72 @@ def write_manifest_table(spark, path: str, manifest: Manifest) -> None:
                 shutil.rmtree(fp)
             else:
                 os.remove(fp)
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(os.path.join(path, MANIFEST_TABLE_DIR + "_meta.json"))
 
 
-def load_manifest_table(spark, path: str):
-    """The distributed form: a DataFrame of (pos, file, size, lb, ub)
-    rows — join/filter it to prune, never collect it wholesale."""
-    return spark.read.parquet(manifest_table_path(path))
+def _first_column_test(schema, column: str, probe, keep):
+    """``keep(field, probe as the column's type)``, or ``None`` (prune
+    nothing) when ``column`` is absent or the probe is NULL or does not
+    convert to that type exactly."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if probe is None or column not in schema.names:
+        return None
+    try:
+        value = pa.scalar(probe, schema.field(column).type)
+    except (pa.ArrowException, TypeError, ValueError, OverflowError):
+        return None
+    return keep(pc.field(column), value) if value.as_py() == probe else None
 
 
-def manifest_from_table(spark, path: str) -> Manifest:
-    """Small-count convenience: collapse the table form back into an
-    in-memory :class:`Manifest` (ordered by pos)."""
-    return _manifest_from_rows(
-        path, load_manifest_table(spark, path).orderBy("pos").collect())
+def read_manifest_table(path: str, lb=None, ub=None) -> Manifest:
+    """The :class:`Manifest` of the table's files that may overlap the
+    slice from ``lb`` to ``ub`` (``None`` ends are open), in manifest
+    order.  A file is dropped when its ``ub_0`` is below ``lb[0]`` or
+    its ``lb_0`` above ``ub[0]`` under null-first order (a NULL
+    ``lb_0`` is below every probe); the caller applies the exact rule,
+    :meth:`Dataset.slice`.  A table in an older layout (JSON-string
+    bounds, Spark part files) is answered from the JSON manifest: every
+    commit keeps the two in step and rewrites the table typed."""
+    import pyarrow.parquet as pq
 
+    f = os.path.join(manifest_table_path(path), MANIFEST_TABLE_FILE)
+    schema = pq.read_schema(f) if os.path.exists(f) else None
+    if schema is None or _TABLE_META not in (schema.metadata or {}):
+        return load_manifest(path)
+    meta = json.loads(schema.metadata[_TABLE_META])
+    tests = [
+        _first_column_test(schema, "lb_0", ub[0] if ub else None,
+                           lambda c, v: c.is_null() | (c <= v)),
+        _first_column_test(schema, "ub_0", lb[0] if lb else None,
+                           lambda c, v: c >= v)]
+    tests = [t for t in tests if t is not None]
+    table = pq.read_table(
+        f, filters=functools.reduce(operator.and_, tests) if tests else None
+    ).sort_by("pos")
+    n, k = table.num_rows, len(meta["index_columns"])
 
-def _manifest_from_rows(path: str, rows) -> Manifest:
-    """Decode manifest-table rows (ordered by pos), with the table's
-    index columns and the schema sidecar, into a :class:`Manifest`.  A
-    stat unknown for any row is unknown for the whole manifest."""
-    with open(os.path.join(path, MANIFEST_TABLE_DIR + "_meta.json")) as f:
-        meta = json.load(f)
-    files = [r["file"] for r in rows]
-    sizes = [r["size"] for r in rows]
-    lbs = [tuple(_decode_value(v) for v in json.loads(r["lb"]))
-           if r["lb"] is not None else None for r in rows]
-    ubs = [tuple(_decode_value(v) for v in json.loads(r["ub"]))
-           if r["ub"] is not None else None for r in rows]
+    def _bounds(side):
+        if not meta["bounds"]:
+            return None
+        cols = [table.column(f"{side}_{i}").to_pylist() for i in range(k)]
+        return [tuple(c[j] for c in cols) for j in range(n)]
+
+    sizes = table.column("size").to_pylist()
     return Manifest(
         index_columns=tuple(meta["index_columns"]),
-        files=files,
-        sizes=None if any(s is None for s in sizes) else sizes,
-        lower_bounds=None if any(b is None for b in lbs) else lbs,
-        upper_bounds=None if any(b is None for b in ubs) else ubs,
+        files=table.column("file").to_pylist(),
+        sizes=None if None in sizes else sizes,
+        lower_bounds=_bounds("lb"),
+        upper_bounds=_bounds("ub"),
         max_partition_index=meta["max_partition_index"],
         schema_json=_read_schema(path),
     )
+
+
+def manifest_from_table(spark, path: str) -> Manifest:
+    """The whole manifest table as a :class:`Manifest` (``spark`` is
+    unused, kept for the signature)."""
+    return read_manifest_table(path)

@@ -455,7 +455,7 @@ def op_incremental_read(spark, sf_dir):
                  F.min("n_nationkey").cast("bigint").alias("min_key")))
 
 
-# -- distributed manifest-table pruning (the million-file slice path) ----------
+# -- manifest-table pruning (the million-file slice path) ---------------------
 
 _PRUNED_SCAN_ORACLE = """
 SELECT o_orderstatus, COUNT(*) AS n, CAST(SUM(o_custkey) AS BIGINT) AS ck
@@ -478,7 +478,7 @@ def _ensure_pruned_table(spark, sf_dir) -> str:
     ``sf_dir`` once per process (fingerprint-keyed, so testdata
     regenerated in place invalidates) — the write is the one-time
     investment; every pruned scan after it exercises only the
-    distributed planning path."""
+    manifest-table planning path."""
     p = os.path.join(sf_dir, "orders.parquet")
     try:
         st = os.stat(p)
@@ -506,7 +506,7 @@ def _pruned_scan(spark, target):
         spark, target,
         (dt.datetime(1997, 1, 1),), (dt.datetime(1997, 6, 30),),
         inclusive="both")
-    # the distributed prune must have dropped non-overlapping files:
+    # the manifest-table prune must have dropped non-overlapping files:
     # non-empty (rows survive) AND strictly fewer than the table's real
     # file count, so a prune regression that keeps everything fails here
     total = len(_meta.load_manifest(target).files)
@@ -519,24 +519,23 @@ def _pruned_scan(spark, target):
 
 @query("op_pruned_scan", oracle=_PRUNED_SCAN_ORACLE)
 def op_pruned_scan(spark, sf_dir):
-    """scan_parquet_pruned: the sliced scan that prunes files with a
-    DataFrame filter over the parquet manifest TABLE instead of parsing
-    the whole JSON manifest on the driver — the planning shape for
-    million-file tables (driver cost scales with surviving files).  The
-    conservative first-column prune composes with the exact slice
-    residual, so the result is value-identical to scan+slice; verified
-    here against the plain SQL range predicate.  Includes the one-time
-    ~512-file write when the table is not yet materialized."""
+    """scan_parquet_pruned: the sliced scan that reads only the
+    manifest TABLE rows whose typed bounds may overlap the slice
+    (pyarrow row-group filters on the driver, no Spark job) instead of
+    parsing the whole JSON manifest — the planning shape for
+    million-file tables.  ``Dataset.slice`` then decides the files, so
+    the result is value-identical to scan+slice; verified here against
+    the plain SQL range predicate.  Includes the one-time ~512-file
+    write when the table is not yet materialized."""
     return _pruned_scan(spark, _ensure_pruned_table(spark, sf_dir))
 
 
 @query("op_pruned_scan_read", oracle=_PRUNED_SCAN_ORACLE)
 def op_pruned_scan_read(spark, sf_dir):
     """Pruned scan only (table materialized if absent, amortized across
-    the session): the steady-state distributed-manifest PLANNING cost —
-    manifest-table filter, surviving-file list, residual slice, agg —
-    which is what grows with file count at 100 TB and what the bench
-    tracks round-over-round."""
+    the session): the steady-state manifest-table PLANNING cost —
+    filtered manifest-table read, slice over the surviving files, agg —
+    which is what grows with file count at 100 TB."""
     return _pruned_scan(spark, _ensure_pruned_table(spark, sf_dir))
 
 

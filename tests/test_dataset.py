@@ -221,45 +221,39 @@ def test_partition_access(spark, sample_dir):
         ds[4]
 
 
-def test_manifest_table_roundtrip_and_distributed_prune(spark, tmp_path):
-    """SURVEY §7.4 trap 7: the manifest's scale form is a parquet TABLE.
-    Round-trips the JSON manifest exactly, and pruning runs as a
-    DataFrame filter over bounds rows — only surviving file names are
-    collected."""
-    import datetime as dtm
+def test_manifest_table_roundtrip_typed_bounds(spark, tmp_path):
+    """SURVEY §7.4 trap 7: the manifest's scale form is a parquet TABLE
+    with one typed column per index column and side.  It round-trips
+    the manifest exactly: date, int, timestamp, decimal and timedelta
+    bounds, NULL bounds among them, in manifest order although the rows
+    are stored sorted by lower bound."""
+    import decimal
 
-    from pyspark.sql import functions as F
-
-    from padawan_spark.metadata import (
-        Manifest, load_manifest_table, manifest_from_table,
-        write_manifest_table,
-    )
+    from padawan_spark.metadata import (Manifest, manifest_from_table,
+                                        write_manifest_table)
 
     target = str(tmp_path / "mtab")
-    import os
     os.makedirs(target, exist_ok=True)
+    day, ts = dt.date(2022, 1, 1), dt.datetime(2022, 1, 1, 8, 30, 0, 250)
+
+    def bound(i, j):
+        return (day + dt.timedelta(days=i + j), i * 10 + 9 * j,
+                ts + dt.timedelta(hours=i, minutes=j),
+                decimal.Decimal(f"{i}.{j}5"),
+                dt.timedelta(days=i, microseconds=j))
+
     m = Manifest(
-        index_columns=("d", "k"),
-        files=[f"part{i:010d}.parquet" for i in range(4)],
-        sizes=[10, 20, 30, 40],
-        lower_bounds=[(dtm.date(2022, 1, 1 + i), i * 10) for i in range(4)],
-        upper_bounds=[(dtm.date(2022, 1, 2 + i), i * 10 + 9) for i in range(4)],
-        max_partition_index=3,
+        index_columns=("d", "k", "ts", "dec", "td"),
+        files=[f"part{i:010d}.parquet" for i in range(5)],
+        sizes=[10, 20, 30, 40, 50],
+        lower_bounds=[bound(3 - i, 0) for i in range(4)]
+        + [(None, None, None, None, None)],
+        upper_bounds=[bound(3 - i, 1) for i in range(4)]
+        + [(day, None, None, decimal.Decimal("0.05"), None)],
+        max_partition_index=7,
     )
     write_manifest_table(spark, target, m)
-    back = manifest_from_table(spark, target)
-    assert back == m
-
-    # distributed prune: files whose [lb, ub) date range may contain
-    # 2022-01-03 — a filter on the manifest TABLE, not a driver loop
-    t = load_manifest_table(spark, target)
-    probe = "2022-01-03"
-    surviving = (t.where(
-        (F.get_json_object("lb", "$[0].$date") <= probe)
-        & (F.get_json_object("ub", "$[0].$date") >= probe))
-        .select("file").orderBy("pos"))
-    files = [r["file"] for r in surviving.collect()]
-    assert files == ["part0000000001.parquet", "part0000000002.parquet"]
+    assert manifest_from_table(spark, target) == m
 
 
 @pytest.mark.slow
@@ -1126,10 +1120,9 @@ def test_write_parquet_empty_and_append_to_empty(spark, tmp_path):
 
 @pytest.mark.slow
 def test_scan_parquet_pruned_matches_driver_slice(spark, sf_dir, tmp_path):
-    """SURVEY §7.4 trap 7 (engine path): scan_parquet_pruned prunes
-    files with a DataFrame filter over the manifest TABLE and must
-    return exactly what the driver-side scan+slice returns, while
-    materializing only the overlapping files' manifest rows."""
+    """SURVEY §7.4 trap 7 (engine path): scan_parquet_pruned reads only
+    the manifest TABLE rows that may overlap the slice and must return
+    exactly what scan+slice returns."""
     from padawan_spark import Dataset, scan_parquet, scan_parquet_pruned
     from padawan_spark.queries.registry import load
 
@@ -1155,8 +1148,7 @@ def test_scan_parquet_pruned_matches_driver_slice(spark, sf_dir, tmp_path):
 
 
 def test_scan_parquet_pruned_date_index(spark, tmp_path):
-    """The tagged-JSON bound codec prunes correctly for date indexes
-    (ISO strings compare lexicographically)."""
+    """Typed date bounds in the manifest table prune a date index."""
     import pandas as pd
 
     from padawan_spark import from_pandas, scan_parquet, scan_parquet_pruned
@@ -2422,9 +2414,9 @@ def test_dataset_call_job_budgets(spark, tmp_path, count_jobs):
     """Upper bounds on the Spark jobs each Dataset call runs on a tiny
     table (a lazy call is counted with the action that reads it), so a
     job regression fails like a wrong result.  The manifest table is
-    written on the driver and adds none."""
+    written and pruned on the driver and adds none."""
     from padawan_spark import (compact_parquet, delete_rows, merge_rows,
-                               read_changes)
+                               read_changes, scan_parquet_pruned)
 
     p = str(tmp_path / "budget")
     src = Dataset(spark, spark.range(40).selectExpr(
@@ -2437,9 +2429,12 @@ def test_dataset_call_job_budgets(spark, tmp_path, count_jobs):
         "compact_parquet": lambda: compact_parquet(spark, p, 20),
         "collate": lambda: scan_parquet(spark, p).collate(20).df.collect(),
         "read_changes": lambda: read_changes(spark, p, 1).collect(),
+        "scan_parquet_pruned": lambda: scan_parquet_pruned(
+            spark, p, (5,), (20,)),
     }
     budget = {"write_parquet": 7, "merge_rows": 11, "delete_rows": 3,
-              "compact_parquet": 5, "collate": 3, "read_changes": 4}
+              "compact_parquet": 5, "collate": 3, "read_changes": 4,
+              "scan_parquet_pruned": 0}
     jobs = {name: count_jobs(fn)[1] for name, fn in calls.items()}
     assert all(jobs[name] <= budget[name] for name in calls), jobs
 
@@ -2447,10 +2442,13 @@ def test_dataset_call_job_budgets(spark, tmp_path, count_jobs):
 def test_manifest_table_is_one_file_published_by_rename(spark, tmp_path,
                                                         monkeypatch):
     """After two commits the manifest table directory holds one parquet
-    file of (pos int, file string, size bigint, lb string, ub string)
-    rows, and the part files, ``_SUCCESS`` and ``.crc`` files of a table
-    Spark wrote are gone.  A write that fails midway leaves the
-    published table readable."""
+    file of (pos int, file string, size bigint, lb_0, ub_0) rows, the
+    bounds typed like the index column, with the index columns in the
+    file's key-value metadata; the part files, ``_SUCCESS`` and ``.crc``
+    files of a table Spark wrote are gone.  A write that fails midway
+    leaves the published table readable."""
+    import json
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -2466,10 +2464,13 @@ def test_manifest_table_is_one_file_published_by_rename(spark, tmp_path,
     _kv(spark, range(20, 25)).write_parquet(p, append=True)
     delete_rows(spark, p, (3,), (6,))
     assert os.listdir(tdir) == [meta.MANIFEST_TABLE_FILE]
-    assert pq.read_schema(os.path.join(tdir, meta.MANIFEST_TABLE_FILE)) \
-        == pa.schema([("pos", pa.int32()), ("file", pa.string()),
-                      ("size", pa.int64()), ("lb", pa.string()),
-                      ("ub", pa.string())])
+    schema = pq.read_schema(os.path.join(tdir, meta.MANIFEST_TABLE_FILE))
+    assert schema.remove_metadata() == pa.schema([
+        ("pos", pa.int32()), ("file", pa.string()), ("size", pa.int64()),
+        ("lb_0", pa.int64()), ("ub_0", pa.int64())])
+    assert json.loads(schema.metadata[b"padawan.manifest"])[
+        "index_columns"] == ["k"]
+    assert not [f for f in os.listdir(p) if f.endswith("_meta.json")]
     published = meta.load_manifest(p)
     assert meta.manifest_from_table(spark, p) == published
 
@@ -2483,3 +2484,55 @@ def test_manifest_table_is_one_file_published_by_rename(spark, tmp_path,
         meta.write_manifest_table(spark, p, meta.Manifest(
             index_columns=("k",), files=["x.parquet"]))
     assert meta.manifest_from_table(spark, p) == published
+
+
+def test_pruned_scan_reads_and_rewrites_a_string_bound_manifest_table(
+        spark, tmp_path):
+    """A manifest table in the layout older versions wrote — bounds as
+    tagged-JSON strings, the index columns in a JSON meta file beside
+    the table — is pruned as ``scan_parquet(p).slice(...)``, and the
+    next commit rewrites it typed and removes the meta file."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from padawan_spark import metadata as meta
+    from padawan_spark import scan_parquet_pruned
+
+    p = str(tmp_path / "oldmt")
+    _kv(spark, range(30)).repartition(6).write_parquet(p)
+    man = meta.load_manifest(p)
+    n = len(man.files)
+    os.makedirs(meta.manifest_table_path(p))
+    pq.write_table(pa.table({
+        "pos": pa.array(range(n), pa.int32()),
+        "file": man.files,
+        "size": pa.array(man.sizes, pa.int64()),
+        "lb": [json.dumps(b) for b in meta.encode_bounds(man.lower_bounds)],
+        "ub": [json.dumps(b) for b in meta.encode_bounds(man.upper_bounds)],
+    }), os.path.join(meta.manifest_table_path(p), meta.MANIFEST_TABLE_FILE))
+    meta_file = meta.manifest_table_path(p) + "_meta.json"
+    with open(meta_file, "w") as f:
+        json.dump({"index_columns": ["k"],
+                   "max_partition_index": man.max_partition_index}, f)
+
+    def same_as_slice(lb, ub, inc):
+        want = scan_parquet(spark, p).slice(lb, ub, inclusive=inc)
+        got = scan_parquet_pruned(spark, p, lb, ub, inclusive=inc)
+        assert (got._files, got._sizes, got._lower_bounds,
+                got._upper_bounds) == (want._files, want._sizes,
+                                       want._lower_bounds,
+                                       want._upper_bounds)
+        assert sorted(got.df.collect()) == sorted(want.df.collect())
+        return got
+
+    assert len(same_as_slice((7,), (16,), "both")._files) < n
+    same_as_slice(None, (3,), "none")
+    _kv(spark, range(30, 35)).write_parquet(p, append=True)
+    schema = pq.read_schema(os.path.join(meta.manifest_table_path(p),
+                                         meta.MANIFEST_TABLE_FILE))
+    assert schema.field("lb_0").type == pa.int64()
+    assert not os.path.exists(meta_file)
+    assert meta.manifest_from_table(spark, p) == meta.load_manifest(p)
+    assert len(same_as_slice((7,), (32,), "lower")._files) < n + 1

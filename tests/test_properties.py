@@ -1,6 +1,8 @@
 """Property-based tests: random lexicographic slice bounds against a
 pure-Python ground truth over a fixed null-bearing dataset."""
 
+import datetime as dt
+import decimal
 import os
 
 import pytest
@@ -218,6 +220,81 @@ def test_pruned_scan_equivalence_random_slices(spark, tmp_path):
                      scan_parquet_pruned(spark, p, lb, ub, inclusive=inc)
                      .df.collect())
         assert got == want, (lb, ub, inc)
+
+
+# index types of the random manifests below: (Spark type, bound values)
+# over small domains, so files share bounds and slices hit them
+_INDEX_TYPES = {
+    "int": ("bigint", st.integers(-4, 4)),
+    "string": ("string", st.text(alphabet="ab", max_size=2)),
+    "date": ("date", st.integers(0, 6).map(
+        lambda d: dt.date(2022, 1, 1) + dt.timedelta(days=d))),
+    "timestamp": ("timestamp", st.integers(0, 6).map(
+        lambda s: dt.datetime(2022, 1, 1, 12) + dt.timedelta(seconds=s))),
+    "decimal": ("decimal(6,2)", st.integers(-8, 8).map(
+        lambda q: decimal.Decimal(q).scaleb(-2) * 25)),
+}
+
+
+@st.composite
+def _manifest_and_slices(draw):
+    """A manifest over 1 or 2 random index types with NULLs in the
+    bounds (each file's lower bound ≤ its upper bound, null-first), and
+    slices over it: ``None`` ends, prefixes and NULL elements."""
+    from padawan_spark.metadata import Manifest
+
+    kinds = draw(st.lists(st.sampled_from(sorted(_INDEX_TYPES)),
+                          min_size=1, max_size=2))
+    values = [st.one_of(st.none(), _INDEX_TYPES[t][1]) for t in kinds]
+    n = draw(st.integers(0, 8))
+    pairs = [sorted([draw(st.tuples(*values)), draw(st.tuples(*values))],
+                    key=lex_key) for _ in range(n)]
+    cols = [f"c{i}" for i in range(len(kinds))]
+    schema = ", ".join(f"{c} {_INDEX_TYPES[t][0]}" for c, t in zip(cols, kinds))
+    man = Manifest(
+        index_columns=tuple(cols),
+        files=[f"part{i}.parquet" for i in range(n)],
+        sizes=draw(st.lists(st.integers(1, 99), min_size=n, max_size=n)),
+        lower_bounds=[a for a, _ in pairs], upper_bounds=[b for _, b in pairs],
+        max_partition_index=n - 1)
+    end = st.one_of(st.none(), st.integers(1, len(kinds)).flatmap(
+        lambda k: st.tuples(*values[:k])))
+    slices = draw(st.lists(st.tuples(end, end, inclusive),
+                           min_size=1, max_size=3))
+    return schema, man, slices
+
+
+@settings(derandomize=True, max_examples=40, deadline=None,
+          suppress_health_check=list(HealthCheck))
+@given(case=_manifest_and_slices())
+def test_pruned_manifest_keeps_the_slice_files(spark, tmp_path_factory, case):
+    """scan_parquet_pruned reads the typed manifest table with a
+    first-column filter and then slices, so it must keep exactly the
+    files, sizes and bounds ``scan_parquet(p).slice(...)`` keeps, for
+    int, string, date, timestamp and decimal indexes with NULL bounds,
+    prefix and NULL slice bounds and all four ``inclusive`` modes.  A
+    file whose first lower bound is NULL sorts below every probe: the
+    filter that drops it loses files the slice keeps."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from padawan_spark import scan_parquet, scan_parquet_pruned
+    from padawan_spark import metadata as meta
+
+    schema, man, slices = case
+    p = str(tmp_path_factory.mktemp("pruned"))
+    for f in man.files:            # listed by each read, never opened
+        open(os.path.join(p, f), "wb").close()
+    man.schema_json = _parse_datatype_string(schema).json()
+    meta.write_manifest(p, man)
+    meta.write_manifest_table(spark, p, man)
+    full = scan_parquet(spark, p)
+    for lb, ub, inc in slices:
+        want = full.slice(lb, ub, inclusive=inc)
+        got = scan_parquet_pruned(spark, p, lb, ub, inclusive=inc)
+        assert (got._files, got._sizes, got._lower_bounds,
+                got._upper_bounds) == (want._files, want._sizes,
+                                       want._lower_bounds,
+                                       want._upper_bounds), (lb, ub, inc)
 
 
 @settings(max_examples=60, deadline=None)
