@@ -348,7 +348,7 @@ def test_map_extra_args_memory_backed(spark):
 
 
 def test_slice_residual_partition_access(spark, sample_dir):
-    """ADVICE r1: per-partition access on a sliced file-backed dataset
+    """Per-partition access on a sliced file-backed dataset
     must apply the residual predicate — ds[i] and ds.df agree."""
     r = scan_parquet(spark, sample_dir).reindex(("date", "hour", "t"))
     s = r.slice((dt.date(2022, 1, 2),), (dt.date(2022, 1, 4),))
@@ -361,7 +361,7 @@ def test_slice_residual_partition_access(spark, sample_dir):
 
 
 def test_reslice_prefix_bounds_no_row_loss(spark, sample_dir):
-    """ADVICE r1 (high): clamping partition bounds with a PREFIX slice
+    """Clamping partition bounds with a PREFIX slice
     bound must not fabricate full-length bounds that a later slice
     prunes incorrectly.  Slice to (2022-01-02,) prefix, then re-slice
     with a tighter upper bound — rows must survive."""
@@ -379,7 +379,7 @@ def test_reslice_prefix_bounds_no_row_loss(spark, sample_dir):
 
 
 def test_getitem_partition_id_mapping_with_empties(spark):
-    """ADVICE r1 (medium): after reindex drops empty partitions from the
+    """After reindex drops empty partitions from the
     stats, ds[i] must still address the partition sizes[i] describes."""
     pdf = pd.DataFrame({"k": list(range(10)), "v": list(range(10))})
     df = (spark.createDataFrame(pdf)
@@ -392,7 +392,7 @@ def test_getitem_partition_id_mapping_with_empties(spark):
 
 @pytest.mark.slow
 def test_collate_single_scan_plan(spark, tmp_path):
-    """VERDICT r1 #5: collate's file-backed path must be ONE scan + one
+    """collate's file-backed path must be ONE scan + one
     shuffle for any group count — not a per-group read-union."""
     pdf = pd.DataFrame({"k": range(100), "v": range(100)})
     ds = from_pandas(spark, pdf, index_columns=("k",))
@@ -424,7 +424,7 @@ def test_repartition_sample_fraction(spark, sample_dir):
 
 
 def test_map_called_once_per_partition(spark, sample_dir):
-    """ADVICE r2: with extra_args, ``func`` must run EXACTLY once per
+    """With extra_args, ``func`` must run EXACTLY once per
     logical partition with all its rows — even when a partition arrives
     as several Arrow batches.  Forced here with a tiny
     maxRecordsPerBatch; func emits ONE summary row per invocation, so
@@ -453,7 +453,7 @@ def test_map_called_once_per_partition(spark, sample_dir):
 
 @pytest.mark.slow
 def test_concat_file_backed_partition_access(spark, sample_dir):
-    """ADVICE r2: a file-backed child forced onto the DataFrame-union
+    """A file-backed child forced onto the DataFrame-union
     path has no known slot→physical-partition mapping (file packing is
     largest-first), so partition ACCESS on the concat result must fail
     loudly — and reindex() must recompute a correct mapping."""
@@ -504,7 +504,7 @@ def test_map_polars_engine_missing(spark, sample_dir):
 
 
 def test_map_polars_dispatch_protocol_with_stub():
-    """VERDICT r4 ask #7: pin the polars shim's dispatch protocol even
+    """Pin the polars shim's dispatch protocol even
     where polars cannot be installed, by injecting a minimal stub module
     — _wrap_polars_body must (1) hand the body ``from_pandas(...).lazy()``
     of each batch, (2) ``collect()`` a returned LazyFrame but not an
@@ -722,7 +722,7 @@ def test_append_lock_guards_concurrent_writers(spark, sf_dir, tmp_path):
 
 
 def test_compact_and_vacuum_hold_the_commit_lock(spark, sf_dir, tmp_path):
-    """ADVICE r3: compact_parquet and vacuum perform the same manifest
+    """compact_parquet and vacuum perform the same manifest
     read-modify-write as append, so they must serialize through the
     same commit lock — a held lock makes them fail loudly, never
     publish a manifest built from a stale snapshot."""
@@ -751,7 +751,7 @@ def test_compact_and_vacuum_hold_the_commit_lock(spark, sf_dir, tmp_path):
 
 @pytest.mark.slow
 def test_compact_refreshes_manifest_table(spark, sf_dir, tmp_path):
-    """ADVICE r3: for datasets written with manifest_table=True the
+    """For datasets written with manifest_table=True the
     parquet manifest-table form must be refreshed by compaction —
     otherwise it keeps listing superseded small files that dangle once
     vacuum reclaims them."""
@@ -764,7 +764,7 @@ def test_compact_refreshes_manifest_table(spark, sf_dir, tmp_path):
     (Dataset(spark, n.where(F.col("n_nationkey") < 10),
              index_columns=("n_nationkey",)).reindex(("n_nationkey",))
      .write_parquet(p, manifest_table=True))
-    # ADVICE r4: appending WITHOUT re-passing manifest_table=True must
+    # appending WITHOUT re-passing manifest_table=True must
     # still refresh the table form — once a dataset carries one, every
     # commit keeps it in lockstep, or pruned scans silently drop the
     # appended files
@@ -852,7 +852,7 @@ def test_commit_lock_injection_two_writer_race(spark, sf_dir, tmp_path):
 @pytest.mark.slow
 def test_commit_lock_serializes_interleaved_maintenance(spark, tmp_path,
                                                         seed):
-    """VERDICT r4 ask #8: N threads interleaving append / compact /
+    """N threads interleaving append / compact /
     vacuum through an injected BLOCKING commit lock (the semantics a
     commit service provides) must preserve the manifest invariants no
     matter the interleaving: the lock is never held twice concurrently,
@@ -962,7 +962,7 @@ def test_commit_lock_serializes_interleaved_maintenance(spark, tmp_path,
 
 @pytest.mark.slow
 def test_manifest_tail_handles_vacuum_and_overwrite(spark, sf_dir, tmp_path):
-    """ADVICE r3: the padawan_tail stream source must handle snapshot
+    """The padawan_tail stream source must handle snapshot
     history that did not only grow — a vacuumed base snapshot or an
     overwrite-reset history fails loudly with guidance; vacuumed
     INTERMEDIATE snapshots are skipped safely (file lists are
@@ -1007,7 +1007,7 @@ def test_manifest_tail_handles_vacuum_and_overwrite(spark, sf_dir, tmp_path):
     assert rd.latestOffset() == {"v": 1, "id": new_id}
     with pytest.raises(RuntimeError, match="overwritten under"):
         rd.partitions({"v": 4, "id": old_id}, {"v": 1, "id": new_id})
-    # ADVICE r4: even when the NEW history grows back to the checkpointed
+    # even when the NEW history grows back to the checkpointed
     # version count (hi == lo, the case the version guard alone misses),
     # the identity mismatch still fails loudly instead of silently
     # diffing two unrelated histories
@@ -1022,7 +1022,7 @@ def test_manifest_tail_handles_vacuum_and_overwrite(spark, sf_dir, tmp_path):
 
 def test_manifest_tail_restamps_identity_for_pretable_streams(
         spark, sf_dir, tmp_path):
-    """ADVICE r5: a stream started BEFORE the table exists checkpoints
+    """A stream started BEFORE the table exists checkpoints
     offsets with id=null forever, so the offset-level identity guard
     never activates for it.  The reader now stamps the first non-null
     table_id it observes at run level, and any later change — i.e. an
@@ -1051,7 +1051,7 @@ def test_manifest_tail_restamps_identity_for_pretable_streams(
 
 
 def test_map_reference_body_pandas_path(spark, sample_dir):
-    """VERDICT r3 ask #8: the reference map-semantics matrix
+    """The reference map-semantics matrix
     (/root/reference/tests/test_map.py:12-80) asserted on the PANDAS
     path, so the shim's contract is pinned even where polars cannot be
     installed: preserves=None drops sizes AND bounds; 'bounds'/'sizes'/
@@ -1448,7 +1448,7 @@ def test_read_changes_cdf(spark, tmp_path):
 
 @pytest.mark.slow
 def test_merge_rows_rewrite_set_is_key_membership(spark, tmp_path):
-    """VERDICT r6 task 5: a 2-key batch at opposite table ends must
+    """A 2-key batch at opposite table ends must
     rewrite only the 2 files actually containing those keys — the
     rewrite set is per-file key membership, not the batch's min/max
     envelope (which overlaps every file here)."""
@@ -1623,7 +1623,7 @@ def test_read_changes_append_fast_path_and_plan(spark, tmp_path):
 
 
 def test_read_changes_vacuumed_version_guard(spark, tmp_path):
-    """r8 (VERDICT task 7): asking for a change feed from a snapshot that
+    """Asking for a change feed from a snapshot that
     vacuum expired fails upfront with a clear 'vacuumed' error, not a
     parquet read error mid-job."""
     from padawan_spark import from_pandas, read_changes
@@ -1645,7 +1645,7 @@ def test_read_changes_vacuumed_version_guard(spark, tmp_path):
 
 @pytest.mark.slow
 def test_read_changes_null_key_update_classification(spark, tmp_path):
-    """r8 (ADVICE): a null-keyed row updated by a merge must classify as
+    """A null-keyed row updated by a merge must classify as
     update_preimage/update_postimage — the CDF self-join and the merge
     survivor anti-join both use null-safe key equality, honouring the
     framework's null-first key semantics."""
@@ -1674,7 +1674,7 @@ def test_read_changes_null_key_update_classification(spark, tmp_path):
 
 @pytest.mark.slow
 def test_read_changes_verbatim_survivor_property(spark, tmp_path):
-    """r8 (VERDICT task 4c): the EXCEPT ALL cancellation as a property —
+    """The EXCEPT ALL cancellation as a property —
     across randomized merge batches, a rewritten file's byte-identical
     survivor rows must emit NO change rows; the feed is exactly the
     update images plus true inserts, at every commit."""
@@ -1712,7 +1712,7 @@ def test_read_changes_verbatim_survivor_property(spark, tmp_path):
 
 @pytest.mark.slow
 def test_streaming_mv_restart_exactly_once(spark, tmp_path):
-    """r9 (VERDICT r8 task 8): kill the streaming-MV query and restart
+    """Kill the streaming-MV query and restart
     from its checkpoint — the CDF source's version offsets must make
     the fold exactly-once across the restart: deltas applied before the
     stop are not re-applied, deltas committed while the stream was down
@@ -1870,7 +1870,7 @@ def test_read_changes_long_history_fold_and_plan_depth(spark, tmp_path):
 
 @pytest.mark.slow
 def test_cdf_stream_source_startingversion_and_vacuum_guard(spark, tmp_path):
-    """r8: the padawan_cdf stream source honors startingVersion (skips
+    """The padawan_cdf stream source honors startingVersion (skips
     the initial-load inserts), classifies a merge's updates, and fails
     loudly when vacuum expired a snapshot inside the un-streamed span."""
     import uuid
@@ -1971,7 +1971,7 @@ def test_cdf_stream_matches_read_changes_on_evolved_table(spark, tmp_path):
 
 @pytest.mark.slow
 def test_schema_evolution_lifecycle(spark, tmp_path):
-    """r8: merge_schema appends ADD columns — pre-evolution files
+    """merge_schema appends ADD columns — pre-evolution files
     surface them as nulls, appends with MISSING columns backfill nulls,
     snapshots pin their era's schema, strict mode rejects drift, and
     type conflicts always fail."""
@@ -2029,7 +2029,7 @@ def test_schema_evolution_lifecycle(spark, tmp_path):
 
 
 def test_scan_parquet_as_of_timestamp(spark, tmp_path):
-    """r8: as_of= resolves to the newest snapshot committed at or
+    """as_of= resolves to the newest snapshot committed at or
     before the instant; earlier than every commit fails loudly."""
     import os as _os
 
@@ -2056,7 +2056,7 @@ def test_scan_parquet_as_of_timestamp(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# r8: refresh_aggregate — incremental materialized-view maintenance
+# refresh_aggregate — incremental materialized-view maintenance
 # ---------------------------------------------------------------------------
 
 
@@ -2175,7 +2175,7 @@ def test_refresh_aggregate_after_compaction_publishes_no_version(
 
 
 # ---------------------------------------------------------------------------
-# r8: per-file bloom index / point lookup
+# per-file bloom index / point lookup
 # ---------------------------------------------------------------------------
 
 
@@ -2256,7 +2256,7 @@ def test_bloom_index_rejects_index_columns(spark, tmp_path):
 
 @pytest.mark.slow
 def test_tail_stream_max_versions_per_trigger(spark, tmp_path):
-    """r8: maxVersionsPerTrigger bounds every batch after the first —
+    """maxVersionsPerTrigger bounds every batch after the first —
     a live 2-commit backlog drains as two batches, and without the
     option the same backlog is one batch."""
     import os

@@ -108,7 +108,7 @@ def test_perfect_hash_labels_are_permutations():
 @pytest.mark.parametrize("seed", [7, 23])
 @pytest.mark.slow
 def test_time_travel_snapshot_property(spark, tmp_path, seed):
-    """VERDICT r3 ask #7 — property test over random maintenance
+    """Property test over random maintenance
     sequences: after any mix of overwrite/append/compact/vacuum,
     (a) every still-retained version pin reads EXACTLY the row set that
     existed when it was archived, (b) no retained manifest references a
@@ -386,8 +386,8 @@ def test_png_depth_interlace_roundtrip_property(w, h, mode, depth,
 
 @pytest.mark.slow
 def test_delete_rows_random_windows_property(spark, tmp_path):
-    """delete_rows over RANDOM index windows on a date-indexed table
-    (VERDICT r5 task 5): after every delete the table equals the eager
+    """delete_rows over RANDOM index windows on a date-indexed table:
+    after every delete the table equals the eager
     slice complement, files outside the window survive byte-identical,
     the version history is monotone (+1 exactly when files overlap),
     every pre-delete pin replays its exact snapshot — until vacuum
@@ -1155,8 +1155,8 @@ def test_vp8_tile_encoder_exact_and_conformant():
 def test_vp8l_encoder_conformance_sweep():
     """Every VP8L fixture-encoder feature combination must parse under
     the STRICT reference decoder (libwebp rejects under-subscribed
-    prefix codes our lenient decoder tolerates — the r8 bug this sweep
-    now pins): random content, random transforms, exact round trip."""
+    prefix codes our lenient decoder tolerates — the bug this sweep
+    pins): random content, random transforms, exact round trip."""
     import random
 
     wl = _libwebp()
@@ -1310,7 +1310,7 @@ def test_webp_animation_compositing_property(cw, ch, data):
 @given(st.binary(min_size=0, max_size=64))
 @settings(max_examples=300, deadline=None)
 def test_sniff_media_total_on_arbitrary_bytes(b):
-    """r8: the mixed-corpus triage pass must classify ANY byte string
+    """The mixed-corpus triage pass must classify ANY byte string
     (crawled corpora contain garbage) — never raise."""
     from padawan_spark.functions.multimodal import sniff_media_py
     mt, fmt = sniff_media_py(b)
@@ -1324,7 +1324,7 @@ def test_sniff_media_total_on_arbitrary_bytes(b):
        st.integers(min_value=4, max_value=64))
 @settings(max_examples=60, deadline=None)
 def test_video_container_roundtrip_property(frames, w, h):
-    """r8: arbitrary frame payloads of arbitrary sizes survive both
+    """Arbitrary frame payloads of arbitrary sizes survive both
     container round trips byte-identically, and the header-only AVI
     metadata agrees without touching movi."""
     from padawan_spark.functions.video import (decode_avi_py,
@@ -1348,7 +1348,7 @@ def test_video_container_roundtrip_property(frames, w, h):
        st.sampled_from([1, 2, 3]))
 @settings(max_examples=80, deadline=None)
 def test_mp3_frame_walk_roundtrip_property(n, kbps, rate, ch, layer):
-    """r8: every (bitrate, rate, channels, layer) combination the
+    """Every (bitrate, rate, channels, layer) combination the
     encoder can emit walks back to the exact frame count, duration,
     and nominal bitrate."""
     from padawan_spark.functions.mp3 import (_BITRATES,
@@ -1375,7 +1375,7 @@ def test_mp3_frame_walk_roundtrip_property(n, kbps, rate, ch, layer):
     min_size=1, max_size=12))
 @settings(max_examples=60, deadline=None)
 def test_subtitle_roundtrip_property(raw):
-    """r8: arbitrary cue timings and (newline-free) unicode text
+    """Arbitrary cue timings and (newline-free) unicode text
     round-trip through both caption formats."""
     from padawan_spark.functions.video import (encode_srt_py,
                                                encode_vtt_py,
@@ -1394,7 +1394,7 @@ def test_subtitle_roundtrip_property(raw):
 @given(st.binary(min_size=0, max_size=3000))
 @settings(max_examples=120, deadline=None)
 def test_tiff_lzw_and_packbits_roundtrip_property(data):
-    """r8: TIFF LZW (early-change widths, clears) and PackBits
+    """TIFF LZW (early-change widths, clears) and PackBits
     round-trip arbitrary bytes exactly."""
     from padawan_spark.functions.multimodal import (_lzw_decode_tiff,
                                                     _lzw_encode_tiff,
@@ -1414,7 +1414,7 @@ def test_tiff_lzw_and_packbits_roundtrip_property(data):
     st.sampled_from(["null", "deflate"]))
 @settings(max_examples=60, deadline=None)
 def test_avro_container_roundtrip_property(rows, codec):
-    """r8: arbitrary typed rows (incl. nulls in both nullable
+    """Arbitrary typed rows (incl. nulls in both nullable
     columns, empty files, multi-block files) round-trip the Avro
     container exactly."""
     from padawan_spark.functions.avro import (decode_avro_py,
@@ -1454,7 +1454,7 @@ def test_avro_container_roundtrip_property(rows, codec):
                                b"\xff trailing-garbage"]),
 )
 def test_hudilog_block_walk_property(ops, torn_tail):
-    """r10: arbitrary data/delete/rollback block sequences round-trip
+    """Arbitrary data/delete/rollback block sequences round-trip
     the HoodieLogFormat codec — rollbacks void exactly their target
     instant's EARLIER blocks, later blocks survive, and a torn tail
     (truncated magic / length / body) ends the walk cleanly with the
@@ -1508,7 +1508,7 @@ def test_hudilog_block_walk_property(ops, torn_tail):
                     max_value=4_294_967_400)),
     unique=True, max_size=300))
 def test_delta_dv_codec_roundtrip_property(positions):
-    """r10: arbitrary deleted-position sets (incl. empty, dense runs
+    """Arbitrary deleted-position sets (incl. empty, dense runs
     near container boundaries, and >2^32 bucket spills) round-trip
     the deletion-vector codec — the RoaringBitmap array framing, the
     DV blob magic, AND the Z85 inline armor."""
@@ -1528,7 +1528,7 @@ def test_delta_dv_codec_roundtrip_property(positions):
 @pytest.mark.parametrize("seed", [11, 42])
 @pytest.mark.slow
 def test_delta_cdf_dv_diff_property(spark, tmp_path, seed):
-    """r11: random deletion-vector GROWTH sequences — for EVERY
+    """Random deletion-vector GROWTH sequences — for EVERY
     version window, the derived change feed's delete rows are exactly
     the positions newly dead inside that window (cumulative-DV diff),
     never a re-emit of an already-dead row; the full feed carries each
@@ -1582,7 +1582,7 @@ def test_delta_cdf_dv_diff_property(spark, tmp_path, seed):
 @pytest.mark.slow
 def test_hudi_metadata_listing_matches_replay_property(spark,
                                                        tmp_path, seed):
-    """r11: over random maintenance sequences (CoW commits, delta
+    """Over random maintenance sequences (CoW commits, delta
     upserts/deletes into random partitions, replacecommit clustering),
     the slice view reconstructed from the auto-synced
     ``.hoodie/metadata`` FILES listing equals the commit-replay view
@@ -1667,7 +1667,7 @@ def test_hudi_metadata_listing_matches_replay_property(spark,
 def test_orc_stripe_positions_match_row_number_oracle(tmp_path, n_rows,
                                                       stripe_bytes,
                                                       data):
-    """r12 (VERDICT r11 task 7): the ORC position-delete scan derives
+    """The ORC position-delete scan derives
     each row's position from a RUNNING STRIPE OFFSET — across random
     stripe-size splits and delete-position sets, the derived ``__pos``
     must equal a whole-file row_number, and anti-joining a delete set
@@ -1711,7 +1711,7 @@ def test_orc_stripe_positions_match_row_number_oracle(tmp_path, n_rows,
 @settings(max_examples=200, deadline=None)
 @given(v=st.integers(min_value=-(2**63), max_value=2**63 - 1))
 def test_hadoop_vlong_decode_property(v):
-    """r12: the HFile cell walk's Hadoop-vlong decoder (MVCC sequence
+    """The HFile cell walk's Hadoop-vlong decoder (MVCC sequence
     ids) — property-checked against an independent encoder written
     from the public WritableUtils.writeVLong spec."""
     import struct
@@ -1739,7 +1739,7 @@ def test_hadoop_vlong_decode_property(v):
 
 @pytest.mark.parametrize("seed", [5, 23])
 def test_delta_cdf_checkpoint_init_property(spark, tmp_path, seed):
-    """r12 (VERDICT r11 task 2): random append/partition-drop
+    """Random append/partition-drop
     sequences with CHECKPOINT+CLEAN injected mid-history — a change
     feed starting anywhere past the newest clean must equal the feed
     of an UNCLEANED TWIN table over the same window (the checkpoint-
