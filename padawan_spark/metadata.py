@@ -437,7 +437,14 @@ def _first_column_test(schema, column: str, probe, keep):
         value = pa.scalar(probe, schema.field(column).type)
     except (pa.ArrowException, TypeError, ValueError, OverflowError):
         return None
-    return keep(pc.field(column), value) if value.as_py() == probe else None
+    if value.as_py() != probe:
+        return None
+    test = keep(pc.field(column), value)
+    # Spark orders NaN above every number, but NaN compares false both
+    # ways here and parquet's min/max statistics leave it out
+    if pa.types.is_floating(value.type):
+        test = test | pc.field(column).is_nan()
+    return test
 
 
 def read_manifest_table(path: str, lb=None, ub=None) -> Manifest:
@@ -445,10 +452,11 @@ def read_manifest_table(path: str, lb=None, ub=None) -> Manifest:
     slice from ``lb`` to ``ub`` (``None`` ends are open), in manifest
     order.  A file is dropped when its ``ub_0`` is below ``lb[0]`` or
     its ``lb_0`` above ``ub[0]`` under null-first order (a NULL
-    ``lb_0`` is below every probe); the caller applies the exact rule,
-    :meth:`Dataset.slice`.  A table in an older layout (JSON-string
-    bounds, Spark part files) is answered from the JSON manifest: every
-    commit keeps the two in step and rewrites the table typed."""
+    ``lb_0`` is below every probe, a NaN above); the caller applies the
+    exact rule, :meth:`Dataset.slice`.  A table in an older layout
+    (JSON-string bounds, Spark part files) is answered from the JSON
+    manifest: every commit keeps the two in step and rewrites the table
+    typed."""
     import pyarrow.parquet as pq
 
     f = os.path.join(manifest_table_path(path), MANIFEST_TABLE_FILE)

@@ -1168,6 +1168,28 @@ def test_scan_parquet_pruned_date_index(spark, tmp_path):
     assert len(got_ds._files) < len(full._files)
 
 
+def test_scan_parquet_pruned_keeps_nan_bounds(spark, tmp_path):
+    """Spark orders NaN above every number, so a file whose upper bound
+    is NaN holds rows of any lower-bounded slice; the manifest-table
+    filter must keep it, although NaN compares false both ways."""
+    from padawan_spark import scan_parquet_pruned
+
+    p = str(tmp_path / "pruned_nan")
+    (Dataset(spark, spark.range(6).selectExpr(
+        "IF(id >= 4, double('NaN'), double(id)) AS x", "id AS v"),
+        index_columns=("x",)).repartition(2)
+     .write_parquet(p, manifest_table=True))
+    for lb, ub in [((5.0,), None), (None, (1.0,))]:
+        want = scan_parquet(spark, p).slice(lb, ub)
+        got = scan_parquet_pruned(spark, p, lb, ub)
+        assert got._files == want._files
+        assert sorted(r.v for r in got.df.collect()) \
+            == sorted(r.v for r in want.df.collect())
+    assert sorted(r.v for r in got.df.collect()) == [0]
+    assert sorted(r.v for r in scan_parquet_pruned(
+        spark, p, (5.0,)).df.collect()) == [4, 5]
+
+
 def _kv(spark, keys, v=None):
     from padawan_spark import from_pandas
     keys = list(keys)
