@@ -23,9 +23,13 @@ predicates are Catalyst boolean trees that push into parquet scans.
 
 from __future__ import annotations
 
+import bisect
+import contextlib
 import datetime as _dt
+import decimal
 import functools
 import glob as _glob
+import itertools
 import json
 import math
 import os
@@ -34,9 +38,11 @@ from typing import Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (BooleanType, IntegerType, StructField,
-                               StructType, TimestampType,
-                               _parse_datatype_string)
+from pyspark.sql.types import (BooleanType, ByteType, DateType,
+                               DecimalType, DoubleType, FloatType,
+                               IntegerType, LongType, ShortType, StringType,
+                               StructField, StructType, TimestampNTZType,
+                               TimestampType, _parse_datatype_string)
 
 from . import metadata as _meta
 from . import ordering as _ord
@@ -82,6 +88,22 @@ def _wrap_polars_body(inner):
 def _require(cond: bool, exc: type[Exception], msg: str):
     if not cond:
         raise exc(msg)
+
+
+@contextlib.contextmanager
+def _session_conf(spark: SparkSession, key: str, value: str):
+    """``key`` set to ``value`` on the session for the block, then
+    restored.  The conf is session-global: a query running concurrently
+    on the same session sees it too."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 class Dataset:
@@ -143,6 +165,11 @@ class Dataset:
         self._sizes = list(sizes) if sizes is not None else None
         self._lower_bounds = list(lower_bounds) if lower_bounds is not None else None
         self._upper_bounds = list(upper_bounds) if upper_bounds is not None else None
+        # Every partition of ``df`` is sorted null-first by the index
+        # columns, so each parquet file a write makes from one is too
+        # and its bounds are its first and last rows (_file_stats).
+        # Only repartition sets it.
+        self._index_sorted = False
 
     # ------------------------------------------------------------------
     # Metadata properties (parity: dataset.py:126-226)
@@ -244,7 +271,8 @@ class Dataset:
             # spark_partition_id order is NOT file order (Spark packs splits
             # largest-first) — partition identity must come from the manifest
             # (survey §7.4 trap 6).  Empty files are dropped
-            # (reindexed_dataset.py:59-67).
+            # (reindexed_dataset.py:59-67).  Without a residual the stats
+            # come from the files' footers where they are exact.
             stats = _file_stats(self.spark, self._files, ix,
                                 self.df.schema, self._residual)
             kept = [f for f in self._files if os.path.abspath(f) in stats]
@@ -547,43 +575,40 @@ class Dataset:
         if sample_fraction is not None and not exact:
             _require(0 < sample_fraction <= 1, ValueError,
                      f"sample_fraction must be in (0, 1]: {sample_fraction}")
-            key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
-            prev = self.spark.conf.get(key, None)
-            self.spark.conf.set(
-                key, str(max(20, int(sample_fraction * rows_per_partition))))
-            try:
-                # materialize the sampled partitioning under the scoped
-                # conf: localCheckpoint truncates to the physical RDD
-                # (partitioning + ordering preserved in the LogicalRDD),
-                # so downstream plans — reindex, joins, writes — reuse
-                # this exact partitioning rather than re-sampling under
-                # whatever the conf is by then
+            # materialize the sampled partitioning under the scoped conf:
+            # localCheckpoint truncates to the physical RDD (partitioning
+            # + ordering preserved in the LogicalRDD), so downstream plans
+            # — reindex, joins, writes — reuse this exact partitioning
+            # rather than re-sampling under whatever the conf is by then
+            with _session_conf(
+                    self.spark,
+                    "spark.sql.execution.rangeExchange.sampleSizePerPartition",
+                    str(max(20, int(sample_fraction * rows_per_partition)))):
                 new_df = (self.df
                           .repartitionByRange(
                               n, *[F.col(c).asc_nulls_first() for c in ix])
                           .sortWithinPartitions(
                               *[F.col(c).asc_nulls_first() for c in ix])
                           .localCheckpoint(eager=True))
-            finally:
-                if prev is None:
-                    self.spark.conf.unset(key)
-                else:
-                    self.spark.conf.set(key, prev)
-            return Dataset(self.spark, new_df, index_columns=ix)
-        if exact:
+        elif exact:
             from pyspark.sql.window import Window
             w = Window.orderBy(*[F.col(c).asc_nulls_first() for c in ix])
             tagged = self.df.withColumn("__rn", F.row_number().over(w))
             tagged = tagged.withColumn(
                 "__part", F.floor((F.col("__rn") - 1) / F.lit(rows_per_partition)))
+            # __part rises with the index, so (__part, *ix) is index order
             new_df = (tagged.repartitionByRange(n, "__part")
                       .sortWithinPartitions("__part", *ix)
                       .drop("__rn", "__part"))
-            return Dataset(self.spark, new_df, index_columns=ix)
-        new_df = (self.df
-                  .repartitionByRange(n, *[F.col(c).asc_nulls_first() for c in ix])
-                  .sortWithinPartitions(*[F.col(c).asc_nulls_first() for c in ix]))
-        return Dataset(self.spark, new_df, index_columns=ix)
+        else:
+            new_df = (self.df
+                      .repartitionByRange(
+                          n, *[F.col(c).asc_nulls_first() for c in ix])
+                      .sortWithinPartitions(
+                          *[F.col(c).asc_nulls_first() for c in ix]))
+        out = Dataset(self.spark, new_df, index_columns=ix)
+        out._index_sorted = True
+        return out
 
     # ------------------------------------------------------------------
     # collate (parity: collated_dataset.py:7-92)
@@ -688,8 +713,10 @@ class Dataset:
         ``append=False`` wipes the target (``dataset.py:349-363``);
         ``append=True`` validates index-column equality against the
         existing manifest (``AppendError``, ``dataset.py:364-381``) and
-        extends it.  Stats for the manifest are computed by a distributed
-        per-file aggregation job, never by collecting data.
+        extends it.  The manifest's per-file sizes and bounds come from
+        the written files' parquet footers, read on the driver; files
+        whose footers cannot give exact bounds are statted by one
+        distributed per-file aggregation job.  Data is never collected.
 
         ``manifest_table=True`` additionally persists the manifest in its
         scale form — a parquet table of (file, size, bounds) rows sorted
@@ -724,14 +751,16 @@ class Dataset:
                     _commit(self.spark, path, self.df, self.index_columns,
                             self._check_evolution(old, merge_schema),
                             old=old, keep=range(len(old.files)),
-                            manifest_table=manifest_table)
+                            manifest_table=manifest_table,
+                            sorted_by_index=self._index_sorted)
             except _meta.CommitConflictError as e:
                 raise AppendError(str(e)) from None
         else:
             if os.path.exists(path):
                 shutil.rmtree(path)
             _commit(self.spark, path, self.df, self.index_columns,
-                    self.df.schema.json(), manifest_table=manifest_table)
+                    self.df.schema.json(), manifest_table=manifest_table,
+                    sorted_by_index=self._index_sorted)
         return scan_parquet(self.spark, path)
 
     def _check_evolution(self, old, merge_schema: bool) -> str | None:
@@ -785,15 +814,19 @@ class Dataset:
     # ------------------------------------------------------------------
 
     def _with_meta(self, **kw) -> "Dataset":
-        return Dataset(
-            self.spark, self.df, files=self._files,
-            index_columns=kw.get("index_columns", self.index_columns),
+        ix = kw.get("index_columns", self.index_columns)
+        out = Dataset(
+            self.spark, self.df, files=self._files, index_columns=ix,
             sizes=kw.get("sizes", self._sizes),
             lower_bounds=kw.get("lower_bounds", self._lower_bounds),
             upper_bounds=kw.get("upper_bounds", self._upper_bounds),
             residual=kw.get("residual", self._residual),
             partition_ids=kw.get("partition_ids", self._partition_ids),
         )
+        # rows sorted by the index are sorted by any prefix of it
+        out._index_sorted = (self._index_sorted
+                             and ix == self.index_columns[:len(ix)])
+        return out
 
 
 # ---------------------------------------------------------------------------
@@ -932,6 +965,13 @@ def _file_path():
     return F.url_decode(F.regexp_replace(uri, r"\+", "%2B"))
 
 
+def _instant(v):
+    """A TIMESTAMP value as the UTC instant Spark holds: a naive
+    ``datetime`` is local time, its ``fold`` telling apart the two
+    instants of a wall time that a DST fall-back repeats."""
+    return v.astimezone(_dt.timezone.utc) if isinstance(v, _dt.datetime) else v
+
+
 def _local_df(spark: SparkSession, rows: Sequence[tuple], schema
               ) -> DataFrame:
     """A DataFrame of driver-side ``rows`` (tuples in field order of
@@ -951,8 +991,7 @@ def _local_df(spark: SparkSession, rows: Sequence[tuple], schema
     arrays = []
     for c, f, a in zip(cols, schema.fields, arrow):
         if isinstance(f.dataType, TimestampType):
-            c = [v.astimezone(_dt.timezone.utc)
-                 if isinstance(v, _dt.datetime) else v for v in c]
+            c = [_instant(v) for v in c]
         arrays.append(pa.array(list(c), type=a.type))
     return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow),
                                  schema)
@@ -971,51 +1010,191 @@ def _read_tagged(spark: SparkSession, tags: list[tuple], ddl: str,
             .join(F.broadcast(tag_df), "__path").drop("__path"))
 
 
-def _index_stats_aggs(ix: Sequence[str]) -> list:
-    """Aggregates ``__n`` (row count) and, with index columns, ``__lb`` /
-    ``__ub``: the null-first lexicographic min/max of the index struct
-    (ordered by :func:`ordering.sort_key_cols`, since plain
-    ``min``/``max`` skip nulls)."""
+def _index_stats(df: DataFrame, group, ix: Sequence[str]) -> dict:
+    """One distributed pass: ``{group value: (rows, lb, ub)}`` for every
+    value of the ``group`` column that has rows, ``lb``/``ub`` the
+    null-first lexicographic min/max of the index struct (ordered by
+    :func:`ordering.sort_key_cols`, since plain ``min``/``max`` skip
+    nulls).  Collects one row per group (bounded by partition or file
+    count, not data size)."""
     aggs = [F.count(F.lit(1)).alias("__n")]
     if ix:
         key = F.struct(*_ord.sort_key_cols(ix))
         val = F.struct(*[F.col(c) for c in ix])
         aggs += [F.min_by(val, key).alias("__lb"),
                  F.max_by(val, key).alias("__ub")]
-    return aggs
-
-
-def _index_stats(df: DataFrame, group, ix: Sequence[str]) -> dict:
-    """One distributed pass: ``{group value: (rows, lb, ub)}`` for every
-    value of the ``group`` column that has rows.  Collects one row per
-    group (bounded by partition or file count, not data size)."""
-    rows = df.groupBy(group.alias("__g")).agg(*_index_stats_aggs(ix)).collect()
+    rows = df.groupBy(group.alias("__g")).agg(*aggs).collect()
     return {r["__g"]: (r["__n"], tuple(r["__lb"]) if ix else (),
                        tuple(r["__ub"]) if ix else ()) for r in rows}
 
 
+#: Footer keys of a file whose dates or timestamps Spark rebased to the
+#: legacy hybrid calendar: their raw values are not the ones Spark reads.
+_LEGACY_CALENDAR = (b"org.apache.spark.legacyDateTime",
+                    b"org.apache.spark.legacyINT96")
+
+
+def _stat_decoder(col, t) -> Callable | None:
+    """How column ``col``'s raw footer min/max becomes the value Spark
+    collects for Spark type ``t``, or None when the statistics are not
+    exact under Spark's order: floating point (they leave NaN out),
+    INT96 timestamps, fixed-length decimals and unsigned integers."""
+    phys = col.physical_type
+    logical = json.loads(col.logical_type.to_json())
+    kind = logical["Type"]
+    if isinstance(t, (ByteType, ShortType, IntegerType, LongType)):
+        signed = kind == "None" or (kind == "Int" and logical["isSigned"])
+        return int if phys in ("INT32", "INT64") and signed else None
+    if isinstance(t, BooleanType):
+        return bool if phys == "BOOLEAN" else None
+    if t == StringType():
+        return (bytes.decode if phys == "BYTE_ARRAY" and kind == "String"
+                else None)
+    if isinstance(t, DateType):
+        return t.fromInternal if phys == "INT32" and kind == "Date" else None
+    if isinstance(t, DecimalType):
+        if (phys in ("INT32", "INT64") and kind == "Decimal"
+                and logical["scale"] == t.scale):
+            return lambda v: decimal.Decimal(v).scaleb(-t.scale)
+        return None
+    if isinstance(t, (TimestampType, TimestampNTZType)):
+        scale = {"milliseconds": 1000, "microseconds": 1}.get(
+            logical.get("timeUnit"))
+        utc = isinstance(t, TimestampType)
+        if (phys == "INT64" and kind == "Timestamp" and scale
+                and logical["isAdjustedToUTC"] == utc):
+            return lambda v: t.fromInternal(v * scale)
+    return None
+
+
+def _arrow_decoder(at, t) -> Callable | None:
+    """How a pyarrow scalar of type ``at`` becomes the value Spark
+    collects for Spark type ``t``, or None when ``at`` is not the type
+    Spark writes for ``t``."""
+    import pyarrow as pa
+
+    if isinstance(t, (TimestampType, TimestampNTZType)):
+        scale = {"ms": 1000, "us": 1}.get(getattr(at, "unit", None))
+        if (pa.types.is_timestamp(at) and scale
+                and (at.tz is not None) == isinstance(t, TimestampType)):
+            return lambda v: (t.fromInternal(v.value * scale)
+                              if v.is_valid else None)
+        return None
+    plain = {ByteType(): pa.int8(), ShortType(): pa.int16(),
+             IntegerType(): pa.int32(), LongType(): pa.int64(),
+             FloatType(): pa.float32(), DoubleType(): pa.float64(),
+             BooleanType(): pa.bool_(), StringType(): pa.string(),
+             DateType(): pa.date32()}
+    want = (pa.decimal128(t.precision, t.scale)
+            if isinstance(t, DecimalType) else plain.get(t))
+    return (lambda v: v.as_py()) if want is not None and at == want else None
+
+
+def _footer_stats(path: str, ix: Sequence[str], schema: StructType | None,
+                  sorted_by_index: bool) -> tuple | None:
+    """``(rows, lb, ub)`` of one parquet file from its footer, read on
+    the driver, or None when the footer cannot give them exactly.
+
+    Rows are the footer's row count.  One index column's bounds are its
+    column-chunk min/max statistics over all row groups, a NULL lower
+    bound when any value is NULL (:func:`_stat_decoder` says which types
+    qualify).  Otherwise, in a file sorted by the index, the bounds are
+    the first row of the first non-empty row group and the last row of
+    the last one: only the index columns of those two row groups are
+    decoded."""
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(path)
+    md = pf.metadata
+    if not ix or md.num_rows == 0:
+        return md.num_rows, (), ()
+    if schema is None or any(k in (md.metadata or {})
+                             for k in _LEGACY_CALENDAR):
+        return None
+    types = {f.name: f.dataType for f in schema.fields}
+    leaves = {md.schema.column(i).path: i for i in range(md.num_columns)}
+    top = set(pf.schema_arrow.names)
+    if not all(c in types and c in leaves and c in top for c in ix):
+        return None            # e.g. a column the file predates
+    nonempty = [g for g in range(md.num_row_groups)
+                if md.row_group(g).num_rows]
+    if len(ix) == 1:
+        i = leaves[ix[0]]
+        dec = _stat_decoder(md.schema.column(i), types[ix[0]])
+        chunks = [(md.row_group(g).num_rows,
+                   md.row_group(g).column(i).statistics) for g in nonempty]
+        if dec and all(st is not None and st.has_null_count
+                       and (st.has_min_max or st.null_count == n)
+                       for n, st in chunks):
+            vals = [st for _, st in chunks if st.has_min_max]
+            lo = dec(min(st.min_raw for st in vals)) if vals else None
+            hi = dec(max(st.max_raw for st in vals)) if vals else None
+            nulls = any(st.null_count for _, st in chunks)
+            return md.num_rows, (None if nulls else lo,), (hi,)
+    if not sorted_by_index:
+        return None
+    decs = [_arrow_decoder(pf.schema_arrow.field(c).type, types[c])
+            for c in ix]
+    if not all(decs):
+        return None
+    first, last = (pf.read_row_group(g, columns=list(ix))
+                   for g in (nonempty[0], nonempty[-1]))
+
+    def row(table, r):
+        return tuple(d(table.column(c)[r]) for d, c in zip(decs, ix))
+
+    return md.num_rows, row(first, 0), row(last, last.num_rows - 1)
+
+
 def _file_stats(spark: SparkSession, files: list[str], ix: Sequence[str],
-                schema: StructType | None = None, residual=None) -> dict:
-    """Per-file stats ``{abspath: (rows, lb, ub)}``, grouped by file so a
-    file split across tasks is still aggregated once.  ``residual``
-    restricts the stats to rows surviving a slice predicate (files with no
-    surviving rows drop out, like empty files)."""
-    if not files:
-        return {}
-    return _index_stats(_read_files(spark, files, schema, residual),
-                        _file_path(), ix)
+                schema: StructType | None = None, residual=None,
+                sorted_by_index: bool = False) -> dict:
+    """Per-file stats ``{abspath: (rows, lb, ub)}`` of the files with
+    rows, and the one place that decides how they are found.
+
+    Without a ``residual`` each file's footer answers on the driver
+    (:func:`_footer_stats`; ``sorted_by_index`` says every file is
+    sorted null-first by ``ix``).  The files it cannot answer or
+    pyarrow cannot read, and
+    every file under a ``residual`` slice predicate (stats of the
+    surviving rows), go to one distributed job grouped by file, so a
+    file split across tasks is still aggregated once."""
+    import pyarrow as pa
+
+    stats, rest = {}, list(files)
+    if residual is None:
+        rest = []
+        for f in files:
+            try:
+                got = _footer_stats(f, ix, schema, sorted_by_index)
+            except (pa.ArrowException, OSError, ValueError):
+                # a footer pyarrow cannot read (a VARIANT column), or a
+                # string bound that is not UTF-8
+                got = None
+            if got is None:
+                rest.append(f)
+            elif got[0]:
+                stats[os.path.abspath(f)] = got
+    if rest:
+        stats.update(_index_stats(_read_files(spark, rest, schema, residual),
+                                  _file_path(), ix))
+    return stats
 
 
 def _commit(spark: SparkSession, path: str, frame: DataFrame | None,
             index_columns, schema_json: str | None, old=None, keep=(),
-            manifest_table: bool = False) -> None:
+            manifest_table: bool = False,
+            sorted_by_index: bool = False) -> None:
     """The commit every table writer ends with.
 
     ``frame`` is appended to ``path`` as new data files (``frame=None``
     adopts the parquet files there that neither ``old`` nor any retained
     snapshot lists); a failed write removes the files it added, which no
     manifest lists and ``vacuum`` would never reclaim.  Only added files
-    are statted, and empty ones are dropped (``dataset.py:340-347``).
+    are statted, and empty ones are dropped (``dataset.py:340-347``);
+    ``sorted_by_index`` says each partition of ``frame`` is sorted
+    null-first by the index, which lets :func:`_file_stats` read any
+    file's bounds from its first and last rows.
     The new manifest lists ``old``'s files at the positions in ``keep``,
     then the added files; ``schema_json=None`` records the added files'
     schema (still ``None`` when no added file has rows).  The JSON
@@ -1031,7 +1210,12 @@ def _commit(spark: SparkSession, path: str, frame: DataFrame | None,
                   for v in _meta.list_versions(path))))
     try:
         if frame is not None:
-            frame.write.mode("append").parquet(path)
+            # timestamps as INT64, whose footer statistics are exact:
+            # INT96, Spark's default, has none, for _file_stats or for
+            # row-group skipping
+            with _session_conf(spark, "spark.sql.parquet.outputTimestampType",
+                               "TIMESTAMP_MICROS"):
+                frame.write.mode("append").parquet(path)
     except BaseException:
         for f in set(_list_parquet(path)) - before:
             os.remove(os.path.join(path, f))
@@ -1040,7 +1224,8 @@ def _commit(spark: SparkSession, path: str, frame: DataFrame | None,
              for f in _list_parquet(path) if f not in before}
     stats = _file_stats(spark, list(paths.values()), index_columns,
                         StructType.fromJson(json.loads(schema_json))
-                        if schema_json else None)
+                        if schema_json else None,
+                        sorted_by_index=sorted_by_index)
     added = [f for f in paths if paths[f] in stats]
 
     def _extend(old_vals, j):
@@ -1205,9 +1390,10 @@ def concat(spark_or_datasets, datasets: list[Dataset] | None = None) -> Dataset:
 def write_metadata(spark: SparkSession, path: str,
                    index_columns: Sequence[str]) -> None:
     """Retro-fit a manifest onto a directory of foreign parquet files
-    (``write_metadata.py:22-79``): distributed stats job, empty files
-    dropped.  It commits like every writer: under the commit lock, as a
-    new version snapshot, refreshing the manifest table if there is one.
+    (``write_metadata.py:22-79``): per-file stats from the footers or
+    a distributed job (:func:`_file_stats`), empty files dropped.  It
+    commits like every writer: under the commit lock, as a new version
+    snapshot, refreshing the manifest table if there is one.
     On a table with a manifest it keeps the listed files and their stats
     and adopts only files no retained snapshot lists, so the files a
     rewrite superseded (kept for time travel until ``vacuum``) stay out;
@@ -1245,8 +1431,10 @@ def compact_parquet(spark: SparkSession, path: str,
         old = _meta.load_manifest(path)
         ds = _manifest_dataset(spark, path, old)
         comp = ds.collate(rows_per_partition)
+        # collate sorts each batch by the index when bounds are known
         _commit(spark, path, comp.df, old.index_columns,
-                ds.df.schema.json(), old=old)
+                ds.df.schema.json(), old=old,
+                sorted_by_index=ds.known_bounds)
     return scan_parquet(spark, path)
 
 
@@ -1292,11 +1480,15 @@ def delete_rows(spark: SparkSession, path: str, lb=None, ub=None,
             return scan_parquet(spark, path)
         cond = _ord.range_predicate(ix, lb, ub, inclusive)
         survives = ~F.coalesce(cond, F.lit(False))   # null-safe complement
-        rewritten = _read_files(spark, [os.path.join(path, f)
-                                        for f in affected],
-                                old.schema, survives)
+        # a task may pack several affected files into one output file:
+        # sort it, so its bounds are its first and last rows
+        rewritten = (_read_files(spark, [os.path.join(path, f)
+                                         for f in affected],
+                                 old.schema, survives)
+                     .sortWithinPartitions(
+                         *[F.col(c).asc_nulls_first() for c in ix]))
         _commit(spark, path, rewritten, ix, old.schema_json, old=old,
-                keep=untouched)
+                keep=untouched, sorted_by_index=True)
     return scan_parquet(spark, path)
 
 
@@ -1330,19 +1522,46 @@ def _within(df: DataFrame, ix: Sequence[str], intervals: list[tuple]
             .drop(*[c for c in bdf.columns if c != "__bid"]))
 
 
+def _probe(keys: list[tuple], lbs: list[tuple], ubs: list[tuple]) -> set:
+    """Which of merge_rows' probe intervals hold a batch key: ``2j+1``
+    is candidate ``j``, ``[lbs[j], ubs[j]]`` closed; ``2j`` the open gap
+    between candidate ``j-1``'s upper and candidate ``j``'s lower bound,
+    unbounded at either end.  ``lbs`` are sorted.  For each key a
+    bisect finds the candidates whose lower bound is at most the key,
+    only the last of which can precede the one gap that may hold it, and
+    a walk back over them stops where no earlier upper bound reaches
+    the key."""
+    lo = [_ord.lex_key(b) for b in lbs]
+    reach = list(itertools.accumulate(
+        ubs, lambda a, b: max(a, b, key=_ord.lex_key)))
+    hits = set()
+    for k in keys:
+        p = bisect.bisect_right(lo, _ord.lex_key(k))
+        if p == 0 or _ord.lex_cmp(ubs[p - 1], k) < 0:
+            hits.add(2 * p)
+        j = p - 1
+        while j >= 0 and _ord.lex_cmp(reach[j], k) >= 0:
+            if _ord.lex_cmp(ubs[j], k) >= 0:
+                hits.add(2 * j + 1)
+            j -= 1
+    return hits
+
+
 def merge_rows(spark: SparkSession, path: str, batch: "Dataset") -> Dataset:
     """In-place MERGE (upsert by index key) — the lakehouse
     DELETE+INSERT in one commit: every ``batch`` row replaces the
     table row with the same index key (if any); the rest insert.
 
-    Copy-on-write like :func:`delete_rows`: the batch envelope picks
-    candidate files from the manifest (no table scan), and ONE probe job
-    of the small-by-contract batch keys against the candidates' ranges
-    and the gaps around them finds the files that CONTAIN a key (a 2-key
-    batch at opposite table ends rewrites 2 files) and the gaps that
-    receive one.  The rewrite is one frame, laid out by the manifest's
-    bounds on the driver and written by one labelled shuffle, a file
-    per tile:
+    Copy-on-write like :func:`delete_rows`: the small-by-contract
+    batch's index keys are collected once, and everything up to the
+    rewrite is planned on the driver from them and the manifest (no
+    table scan): the uniqueness check, the batch envelope that picks
+    candidate files, and a probe of the keys against the candidates'
+    ranges and the gaps around them that finds the files that CONTAIN a
+    key (a 2-key batch at opposite table ends rewrites 2 files) and the
+    gaps that receive one.  The rewrite is one frame, laid out by the
+    manifest's bounds on the driver and written by one labelled
+    shuffle, a file per tile:
 
     - each affected file is rewritten as one file: its surviving rows
       (a null-safe left-anti join) plus the batch rows in its tile;
@@ -1379,35 +1598,33 @@ def merge_rows(spark: SparkSession, path: str, batch: "Dataset") -> Dataset:
         _require(set(batch.df.columns) == set(table_cols), ValueError,
                  f"batch columns {sorted(batch.df.columns)} != table "
                  f"columns {sorted(table_cols)}")
-        # batch key range + uniqueness check.  The distinct count runs
-        # over a STRUCT of the keys: countDistinct on bare columns drops
-        # null-keyed rows (legal under null-first semantics).
-        agg = batch.df.agg(
-            F.countDistinct(F.struct(*[F.col(c) for c in ix])).alias("nd"),
-            *_index_stats_aggs(ix)).collect()[0]
-        if agg["__n"] == 0:                  # empty batch: no-op
+        # the batch's keys, small by contract, in one job; the rest of
+        # the plan is driver-side bound math under Spark's order (NULL
+        # equals NULL, NaN equals NaN), TIMESTAMPs compared as instants
+        stamp = [isinstance(batch.df.schema[c].dataType, TimestampType)
+                 for c in ix]
+
+        def spark_order(key):
+            return tuple(_instant(v) if t else v for v, t in zip(key, stamp))
+
+        keys = sorted((spark_order(r) for r in batch.df.select(*ix).collect()),
+                      key=_ord.lex_key)
+        if not keys:                         # empty batch: no-op
             return scan_parquet(spark, path)
-        _require(agg["__n"] == agg["nd"], ValueError,
+        distinct = 1 + sum(_ord.lex_cmp(a, b) != 0
+                           for a, b in zip(keys, keys[1:]))
+        _require(distinct == len(keys), ValueError,
                  f"batch has duplicate index keys "
-                 f"({agg['__n']} rows, {agg['nd']} distinct)")
-        blb, bub = tuple(agg["__lb"]), tuple(agg["__ub"])
-        lbs, ubs = old.lower_bounds, old.upper_bounds
+                 f"({len(keys)} rows, {distinct} distinct)")
+        lbs = [spark_order(b) for b in old.lower_bounds]
+        ubs = [spark_order(b) for b in old.upper_bounds]
         untouched, cands = [], []
         for i in range(len(old.files)):
-            (cands if _overlaps(lbs[i], ubs[i], blb, bub, True, True)
+            (cands if _overlaps(lbs[i], ubs[i], keys[0], keys[-1], True, True)
              else untouched).append(i)
         cands.sort(key=lambda i: _ord.lex_key(lbs[i]))
-        # the probe: interval 2j+1 is candidate j (closed), 2j the open
-        # gap before it, 2m the gap after the last.  A fixed-size plan
-        # however many candidates; it collects O(candidates) ids.
         m = len(cands)
-        hits = {r["__bid"] for r in _within(
-            batch.df.select(*ix), ix,
-            [(2 * j + 1, lbs[i], True, ubs[i], True)
-             for j, i in enumerate(cands)]
-            + [(2 * j, ubs[cands[j - 1]] if j else None, False,
-                lbs[cands[j]] if j < m else None, False)
-               for j in range(m + 1)]).select("__bid").distinct().collect()}
+        hits = _probe(keys, [lbs[i] for i in cands], [ubs[i] for i in cands])
         # tiles, walking the candidates up by lower bound: a spared file
         # closes the tile at its lb and opens the next at its ub; a second
         # affected file cuts the tile at its own lb.  No batch key equals
@@ -1458,7 +1675,7 @@ def merge_rows(spark: SparkSession, path: str, batch: "Dataset") -> Dataset:
                                          for c in ix])
                  .drop("__t"))
         _commit(spark, path, frame, ix, old.schema_json, old=old,
-                keep=sorted(untouched))
+                keep=sorted(untouched), sorted_by_index=True)
     return scan_parquet(spark, path)
 
 
@@ -1618,8 +1835,8 @@ def fold_changes_into_aggregate(spark: SparkSession, target_path: str,
         *[(F.coalesce(F.col(f"m.sum_{c}"), F.lit(0))
            + F.col(f"d.d_sum_{c}")).alias(f"sum_{c}")
           for c in sum_cols])
-    # materialize the fold ONCE: the merge reads its batch in three jobs
-    # (key stats, probe, write), each of which would otherwise recompute
+    # materialize the fold ONCE: the merge reads its batch in two jobs
+    # (its keys, then the write), each of which would otherwise recompute
     # the whole CDF+join pipeline.  A no-op change feed folds to an empty
     # batch, which merge_rows commits no version for.
     upd = upd.localCheckpoint(eager=True)

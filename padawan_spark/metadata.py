@@ -20,8 +20,9 @@ Differences from the reference, by design:
   the scale form is the manifest TABLE (:func:`write_manifest_table`,
   one row per file, typed bound columns), which
   :func:`read_manifest_table` prunes on the driver with pyarrow; only
-  this module knows its layout.  Per-file bounds come from a distributed
-  stats job in :mod:`padawan_spark.dataset` that returns one row per
+  this module knows its layout.  Per-file sizes and bounds come from
+  :mod:`padawan_spark.dataset`: from the data files' parquet footers on
+  the driver, or from a distributed stats job that returns one row per
   file, never the data.
 """
 

@@ -26,7 +26,8 @@ null-aware min/max must be built explicitly:
   ``lex_min`` / ``lex_max`` (nulls smallest), which plain ``F.min`` /
   ``F.max`` would get wrong (they skip nulls).
 - :func:`lex_key` / :func:`lex_cmp` are driver-side comparators for the
-  small bound tuples kept in the manifest.
+  small bound tuples kept in the manifest, ordering NaN as Spark does
+  (above every number, equal to NaN).
 
 Bounds may be *prefixes* of the index tuple (slice on the first k
 columns only), mirroring ``sliced_dataset.py:43-48``.
@@ -153,9 +154,14 @@ def sort_key_cols(columns: Sequence) -> list[Column]:
 # Driver-side comparators for manifest bound tuples
 # ---------------------------------------------------------------------------
 
+def _is_nan(v) -> bool:
+    return isinstance(v, float) and v != v
+
+
 @total_ordering
 class _NullFirst:
-    """Wrapper making None compare smaller than everything."""
+    """Wrapper ordering values as Spark does: None below everything, NaN
+    above every number and equal to NaN."""
 
     __slots__ = ("v",)
 
@@ -163,14 +169,14 @@ class _NullFirst:
         self.v = v
 
     def __eq__(self, other):
-        return self.v == other.v
+        return self.v == other.v or (_is_nan(self.v) and _is_nan(other.v))
 
     def __lt__(self, other):
         if self.v is None:
             return other.v is not None
-        if other.v is None:
+        if other.v is None or _is_nan(self.v):
             return False
-        return self.v < other.v
+        return _is_nan(other.v) or self.v < other.v
 
 
 def lex_key(bound: Sequence) -> tuple:
@@ -179,9 +185,9 @@ def lex_key(bound: Sequence) -> tuple:
 
 
 def nullable_cmp(a, b) -> int:
-    if a == b:
-        return 0
     ka, kb = _NullFirst(a), _NullFirst(b)
+    if ka == kb:
+        return 0
     return -1 if ka < kb else 1
 
 

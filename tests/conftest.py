@@ -37,3 +37,24 @@ def count_jobs(spark):
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
     return run
+
+
+@pytest.fixture
+def la_time(spark):
+    """Python's local time zone and the session time zone both set to
+    America/Los_Angeles, so a naive ``datetime`` read as UTC shows."""
+    import time
+    old_tz = os.environ.get("TZ")
+    old_session = spark.conf.get("spark.sql.session.timeZone")
+    os.environ["TZ"] = "America/Los_Angeles"
+    time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        yield
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+        spark.conf.set("spark.sql.session.timeZone", old_session)

@@ -1604,7 +1604,72 @@ def test_merge_rows_jobs_do_not_grow_with_regions(spark, tmp_path,
         out.assert_disjoint()
         want = {2 * i: i for i in range(50)} | {k: -1 for k in keys}
         assert {r.k: r.v for r in out.df.collect()} == want
-    assert jobs[1] == jobs[3] == jobs[5] <= 16, jobs
+    assert jobs[1] == jobs[3] == jobs[5] <= 6, jobs
+
+
+def _nan_table(spark, path):
+    """Keys 0-3 and two NaN keys of a DOUBLE index in 3 files; the last
+    file's bounds are (NaN,) and (NaN,)."""
+    rows = [(float(k), k) for k in range(4)] + [(float("nan"), 4),
+                                                (float("nan"), 5)]
+    Dataset(spark, spark.createDataFrame(rows, "x double, v int"),
+            index_columns=("x",)).repartition(2).write_parquet(path)
+
+
+def test_slice_to_a_nan_bound_keeps_the_nan_rows(spark, tmp_path):
+    """Spark orders NaN above every number and equal to NaN, so a slice
+    up to NaN inclusive keeps every row, as ``x <= NaN`` does; file
+    pruning must not drop the files whose bounds are numbers."""
+    p = str(tmp_path / "nanslice")
+    _nan_table(spark, p)
+    ds = scan_parquet(spark, p)
+    assert len(ds._files) == 3
+    nan = float("nan")
+    for lb, ub, inc, where in [
+            (None, (nan,), "both", "x <= double('NaN')"),
+            (None, (nan,), "lower", "x < double('NaN')"),
+            ((nan,), None, "both", "x >= double('NaN')"),
+            ((2.0,), (nan,), "lower", "x >= 2 AND x < double('NaN')")]:
+        got = ds.slice(lb, ub, inclusive=inc).df.collect()
+        want = ds.df.where(where).collect()
+        assert sorted(r.v for r in got) == sorted(r.v for r in want), where
+
+
+def test_merge_rows_rejects_two_nan_keys(spark, tmp_path):
+    """Two NaN keys are one key, as Spark's distinct counts them: a
+    batch holding both is rejected before anything is written."""
+    from padawan_spark import list_versions, merge_rows
+
+    p = str(tmp_path / "nanmerge")
+    _nan_table(spark, p)
+    versions = list_versions(p)
+    batch = Dataset(spark, spark.createDataFrame(
+        [(float("nan"), -1), (float("nan"), -2)], "x double, v int"),
+        index_columns=("x",))
+    with pytest.raises(ValueError, match=r"duplicate index keys \(2 rows, 1"):
+        merge_rows(spark, p, batch)
+    assert list_versions(p) == versions
+    # one NaN key replaces both NaN rows, in the file bounded by NaN
+    out = merge_rows(spark, p, Dataset(spark, spark.createDataFrame(
+        [(float("nan"), -1), (1.0, -1)], "x double, v int"),
+        index_columns=("x",)))
+    assert sorted(r.v for r in out.df.collect()) == [-1, -1, 0, 2, 3]
+    out.assert_disjoint()
+
+
+def test_write_parquet_of_a_footer_pyarrow_cannot_read(spark, tmp_path):
+    """pyarrow cannot read the footer of a file with a VARIANT column;
+    its stats then come from the job, and the write commits."""
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "variant")
+    out = Dataset(spark, spark.range(10).selectExpr(
+        "CAST(id AS INT) AS k", "parse_json('{\"a\": 1}') AS v"),
+        index_columns=("k",)).repartition(5).write_parquet(p)
+    with pytest.raises(OSError):
+        pq.ParquetFile(out._files[0])
+    assert (out.sizes, out.lower_bounds, out.upper_bounds) \
+        == ([5, 5], [(0,), (5,)], [(4,), (9,)])
 
 
 def test_describe_history_total_rows_per_version(spark, tmp_path):
@@ -2322,27 +2387,6 @@ def test_tail_stream_max_versions_per_trigger(spark, tmp_path):
     assert sum(run(False)) == 30
 
 
-@pytest.fixture
-def la_time(spark):
-    """Python's local time zone and the session time zone both set to
-    America/Los_Angeles, so a naive ``datetime`` read as UTC shows."""
-    import time
-    old_tz = os.environ.get("TZ")
-    old_session = spark.conf.get("spark.sql.session.timeZone")
-    os.environ["TZ"] = "America/Los_Angeles"
-    time.tzset()
-    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
-    try:
-        yield
-    finally:
-        if old_tz is None:
-            os.environ.pop("TZ", None)
-        else:
-            os.environ["TZ"] = old_tz
-        time.tzset()
-        spark.conf.set("spark.sql.session.timeZone", old_session)
-
-
 def test_driver_built_tables_plan_as_local_relations(spark, tmp_path):
     """The tables the Dataset layer builds on the driver (file tags,
     probe intervals, empty frames) are Arrow local relations: each plans
@@ -2432,11 +2476,36 @@ def test_merge_rows_at_a_timestamp_file_bound(spark, tmp_path, la_time):
     assert len(set(before._files) - set(out._files)) == 1
 
 
+def test_merge_rows_keys_in_a_repeated_dst_hour(spark, tmp_path, la_time):
+    """Los Angeles repeats 01:00-02:00 on 2022-11-06.  Two batch keys at
+    01:30 PDT and 01:30 PST are two instants (Python tells them apart by
+    ``fold``): merge_rows accepts them as distinct keys and replaces the
+    two rows they name."""
+    from padawan_spark import merge_rows
+
+    p = str(tmp_path / "dst")
+    quarters = "timestamp_seconds(1667721600 + id * 900)"  # 01:00 PDT on
+    Dataset(spark, spark.range(12).selectExpr(f"{quarters} AS t",
+                                              "CAST(id AS INT) AS v"),
+            index_columns=("t",)).repartition(3).write_parquet(p)
+    batch = spark.range(2).selectExpr(
+        "timestamp_seconds(1667723400 + id * 3600) AS t", "-1 AS v")
+    assert [r.t.fold for r in batch.collect()] == [0, 1]
+    out = merge_rows(spark, p, Dataset(spark, batch, index_columns=("t",)))
+    got = {(r.t.isoformat(), r.t.fold): r.v for r in out.df.collect()}
+    assert len(got) == 12
+    assert got[("2022-11-06T01:30:00", 0)] == got[("2022-11-06T01:30:00", 1)] \
+        == -1
+    assert sorted(got.values()) == [-1, -1] + [0, 1, 3, 4, 5, 7, 8, 9, 10, 11]
+
+
 def test_dataset_call_job_budgets(spark, tmp_path, count_jobs):
     """Upper bounds on the Spark jobs each Dataset call runs on a tiny
     table (a lazy call is counted with the action that reads it), so a
     job regression fails like a wrong result.  The manifest table is
-    written and pruned on the driver and adds none."""
+    written and pruned on the driver and adds none; every commit here
+    reads its new files' stats from their footers, and so does the
+    reindex of the table by its other column, which runs no job."""
     from padawan_spark import (compact_parquet, delete_rows, merge_rows,
                                read_changes, scan_parquet_pruned)
 
@@ -2453,10 +2522,11 @@ def test_dataset_call_job_budgets(spark, tmp_path, count_jobs):
         "read_changes": lambda: read_changes(spark, p, 1).collect(),
         "scan_parquet_pruned": lambda: scan_parquet_pruned(
             spark, p, (5,), (20,)),
+        "reindex": lambda: scan_parquet(spark, p).reindex(("v",)),
     }
-    budget = {"write_parquet": 7, "merge_rows": 11, "delete_rows": 3,
-              "compact_parquet": 5, "collate": 3, "read_changes": 4,
-              "scan_parquet_pruned": 0}
+    budget = {"write_parquet": 5, "merge_rows": 7, "delete_rows": 1,
+              "compact_parquet": 3, "collate": 3, "read_changes": 4,
+              "scan_parquet_pruned": 0, "reindex": 0}
     jobs = {name: count_jobs(fn)[1] for name, fn in calls.items()}
     assert all(jobs[name] <= budget[name] for name in calls), jobs
 

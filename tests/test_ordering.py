@@ -108,6 +108,21 @@ def test_lex_key_sorting():
     assert sorted(bounds, key=lex_key) == [(None, "z"), (1, None), (1, "a"), (2, "a")]
 
 
+def test_nan_orders_above_every_number_as_in_spark():
+    """Spark orders NaN above every number (infinity included) and equal
+    to NaN; the driver-side comparators must agree, since file pruning
+    and merge probes compare bounds with them."""
+    nan, inf = float("nan"), float("inf")
+    assert nullable_cmp(5.0, nan) == -1
+    assert nullable_cmp(nan, 5.0) == 1
+    assert nullable_cmp(inf, nan) == -1
+    assert nullable_cmp(nan, nan) == 0
+    assert nullable_cmp(None, nan) == -1
+    assert lex_cmp((nan, 1), (nan, 2)) == -1
+    got = sorted([(nan,), (1.0,), (None,), (-inf,), (nan,)], key=lex_key)
+    assert [repr(b[0]) for b in got] == ["None", "-inf", "1.0", "nan", "nan"]
+
+
 def test_sort_partitions():
     lbs = [(3,), (None,), (1,)]
     ubs = [(4,), (0,), (2,)]

@@ -1800,3 +1800,104 @@ def test_delta_cdf_checkpoint_init_property(spark, tmp_path, seed):
         with pytest.raises(NotImplementedError,
                            match="log retention cleaned"):
             feed(a, last_clean)
+
+
+# index types of the random tables below: (Spark type, key values),
+# small domains so files share keys; the strings are not all ASCII
+_STAT_TYPES = {
+    "int": ("int", st.integers(-3, 3)),
+    "bigint": ("bigint", st.integers(-2 ** 40, 2 ** 40)),
+    "string": ("string", st.text(alphabet="aé€b", max_size=2)),
+    "date": ("date", st.integers(-400, 400).map(
+        lambda d: dt.date(1970, 1, 1) + dt.timedelta(days=d))),
+    "decimal": ("decimal(18,2)", st.integers(-500, 500).map(
+        lambda q: decimal.Decimal(q).scaleb(-2))),
+    "timestamp": ("timestamp", st.integers(-10 ** 9, 10 ** 9).map(
+        lambda s: dt.datetime(2022, 3, 13, 1, 30)
+        + dt.timedelta(microseconds=s * 7))),
+    "double": ("double", st.sampled_from(
+        [-1.5, 0.0, 2.5, float("inf"), float("nan")])),
+}
+
+
+@st.composite
+def _stat_tables(draw, first):
+    """Files of a ``first`` column and a second of random type: NULL
+    keys, sometimes an all-NULL file and an empty one, sorted by both
+    columns or not, and timestamps written as INT64 or INT96."""
+    kinds = [first, draw(st.sampled_from(sorted(_STAT_TYPES)))]
+    key = st.tuples(*[st.one_of(st.none(), _STAT_TYPES[t][1],
+                                _STAT_TYPES[t][1]) for t in kinds])
+    files = draw(st.lists(st.lists(key, min_size=1, max_size=6),
+                          min_size=1, max_size=3))
+    if draw(st.booleans()):
+        files.append([(None, None)] * 2)
+    return (kinds, files, draw(st.booleans()), draw(st.booleans()),
+            draw(st.sampled_from(["TIMESTAMP_MICROS", "INT96"])))
+
+
+@pytest.mark.parametrize("first", sorted(_STAT_TYPES))
+@settings(derandomize=True, max_examples=3, deadline=None,
+          suppress_health_check=list(HealthCheck))
+@given(data=st.data())
+def test_footer_stats_equal_the_stats_job(spark, tmp_path_factory, la_time,
+                                          first, data):
+    """Per-file ``(rows, lb, ub)`` read from parquet footers equal the
+    distributed stats job's, for int, bigint, string, date,
+    decimal(18,2), timestamp and double indexes of one and two columns,
+    with NULL keys, all-NULL and empty files.  One column's bounds come
+    from the column statistics unless they are inexact (double, INT96
+    timestamps), and then, as for two columns, from the first and last
+    rows when the files are sorted; otherwise the job answers."""
+    import pyarrow.parquet as pq
+
+    from padawan_spark.dataset import (_file_path, _file_stats, _footer_stats,
+                                       _index_stats, _local_df,
+                                       _perfect_hash_labels, _read_files)
+    from padawan_spark.ordering import lex_cmp
+
+    kinds, files, is_sorted, with_empty, ts_type = data.draw(
+        _stat_tables(first))
+    ddl = ", ".join(f"c{i} {_STAT_TYPES[t][0]}" for i, t in enumerate(kinds))
+    labels = _perfect_hash_labels(len(files))
+    df = _local_df(spark, [(*k, labels[i]) for i, keys in enumerate(files)
+                           for k in keys], ddl + ", __f int")
+    df = df.repartition(len(files), "__f").drop("__f")
+    if is_sorted:
+        df = df.sortWithinPartitions(df.c0.asc_nulls_first(),
+                                     df.c1.asc_nulls_first())
+    p = str(tmp_path_factory.mktemp("stats"))
+    conf = "spark.sql.parquet.outputTimestampType"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, ts_type)
+    try:
+        df.write.mode("append").parquet(p)
+    finally:
+        spark.conf.set(conf, old)
+    paths = sorted(os.path.join(p, f) for f in os.listdir(p)
+                   if f.endswith(".parquet"))
+    assert len(paths) == len(files)
+    if with_empty:
+        empty = os.path.join(p, "empty.parquet")
+        pq.write_table(pq.read_table(paths[0]).slice(0, 0), empty)
+        paths.append(empty)
+
+    int96 = {t for t in kinds if t == "timestamp" and ts_type == "INT96"}
+    # files sorted by (c0, c1) are sorted by c0
+    for ix in (["c0"], ["c0", "c1"]):
+        got = _file_stats(spark, paths, ix, df.schema,
+                          sorted_by_index=is_sorted)
+        want = _index_stats(_read_files(spark, paths, df.schema),
+                            _file_path(), ix)
+        assert got.keys() == want.keys()
+        for f, (n, lb, ub) in want.items():
+            assert got[f][0] == n and lex_cmp(got[f][1], lb) == 0 \
+                and lex_cmp(got[f][2], ub) == 0, (ix, got[f], want[f])
+        # the footers answer every file a rule applies to
+        exact = ix == ["c0"] and first != "double" and first not in int96
+        sorted_rule = is_sorted and not int96.intersection(
+            kinds[:len(ix)])
+        for f in paths:
+            rows = pq.ParquetFile(f).metadata.num_rows
+            answered = _footer_stats(f, ix, df.schema, is_sorted) is not None
+            assert answered == (not rows or exact or sorted_rule), (ix, f)
