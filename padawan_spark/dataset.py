@@ -15,17 +15,26 @@ thin metadata companion around a ``pyspark.sql.DataFrame``:
   *advisory*: correctness never depends on it (parquet footer stats and
   AQE runtime stats are the real drivers at scale).
 
-Scale stance (100 TB): nothing here collects data to the driver except
-(a) per-partition stat rows (one row per partition — bounded by partition
-count, not data size) and (b) explicit ``collect()``.  All pruning
-predicates are Catalyst boolean trees that push into parquet scans.
+Scale stance (100 TB): what reaches the driver is bounded by file or
+partition count, or by a batch that is small by contract, never by table
+size:
+
+- per-file stats, read from parquet footers on the driver
+  (:func:`_footer_stats`), or one stat row per file or partition from a
+  distributed job when a footer cannot give them;
+- the index keys of a :func:`merge_rows` batch;
+- the bloom words :func:`build_bloom_index` collects, at most files x
+  words;
+- whatever an explicit ``collect()`` asks for.
+
+All pruning predicates are Catalyst boolean trees that push into parquet
+scans.
 """
 
 from __future__ import annotations
 
 import bisect
 import contextlib
-import datetime as _dt
 import decimal
 import functools
 import glob as _glob
@@ -458,7 +467,12 @@ class Dataset:
         _require(self.index_columns != (), ValueError,
                  "slice requires index columns")
         ix = self.index_columns
-        cond = _ord.range_predicate(ix, lb, ub, inclusive)
+        # bounds compared, here and in the predicate, as Spark orders
+        # them: a naive TIMESTAMP literal would be converted by mktime,
+        # which resolves a repeated DST hour either way
+        order = _ord.spark_order(self.df.schema, ix)
+        olb, oub = order(lb), order(ub)
+        cond = _ord.range_predicate(ix, olb, oub, inclusive)
         # Compose with any prior residual: a file-backed re-slice rebuilds
         # the scan from raw files, so ALL predicates applied so far must be
         # carried, not just this call's.
@@ -479,13 +493,14 @@ class Dataset:
                 pids = list(range(n))
             for i in range(n):
                 plb, pub = self._lower_bounds[i], self._upper_bounds[i]
-                if not _overlaps(plb, pub, lb, ub, lo_incl, hi_incl):
+                oplb, opub = order(plb), order(pub)
+                if not _overlaps(oplb, opub, olb, oub, lo_incl, hi_incl):
                     continue
                 keep.append(i)
-                inside = _contained(plb, pub, lb, ub, lo_incl, hi_incl)
+                inside = _contained(oplb, opub, olb, oub, lo_incl, hi_incl)
                 new_sizes.append(self._sizes[i] if (self.known_sizes and inside) else None)
-                new_lbs.append(_clamp_lb(plb, lb, len(ix), lo_incl))
-                new_ubs.append(_clamp_ub(pub, ub, len(ix), hi_incl))
+                new_lbs.append(_clamp_lb(plb, lb, len(ix), lo_incl, order))
+                new_ubs.append(_clamp_ub(pub, ub, len(ix), hi_incl, order))
             sizes = new_sizes if all(s is not None for s in new_sizes) else None
             lbs, ubs = new_lbs, new_ubs
             if pids is not None:
@@ -707,8 +722,9 @@ class Dataset:
         The default rejects any appended-schema drift loudly.
 
         ``progress`` — optional ``(completed_tasks, total_tasks)``
-        callback polled while the write and stats jobs run (reference
-        parity: ``progress.py:7-51``).
+        callback polled while the write's jobs run: the write itself,
+        plus a stats job only for files whose footers cannot give exact
+        bounds (reference parity: ``progress.py:7-51``).
 
         ``append=False`` wipes the target (``dataset.py:349-363``);
         ``append=True`` validates index-column equality against the
@@ -872,8 +888,9 @@ def _contained(plb, pub, lb, ub, lo_incl, hi_incl) -> bool:
     return True
 
 
-def _clamp_lb(plb, lb, k, lo_incl=True):
-    """Tighten a partition lower bound against the slice lower bound.
+def _clamp_lb(plb, lb, k, lo_incl, order):
+    """Tighten a partition lower bound against the slice lower bound,
+    comparing both as ``order`` maps them (:func:`ordering.spark_order`).
 
     Only valid when the slice bound is FULL-LENGTH and inclusive (matching
     the reference, ``sliced_dataset.py:116-120``): a prefix bound ``(2,)``
@@ -882,13 +899,13 @@ def _clamp_lb(plb, lb, k, lo_incl=True):
     the original partition bound (conservative but correct)."""
     if lb is None or len(lb) != k or not lo_incl:
         return plb
-    return plb if _cmp_prefix(plb, lb) >= 0 else tuple(lb)
+    return plb if _cmp_prefix(order(plb), order(lb)) >= 0 else tuple(lb)
 
 
-def _clamp_ub(pub, ub, k, hi_incl=True):
+def _clamp_ub(pub, ub, k, hi_incl, order):
     if ub is None or len(ub) != k or not hi_incl:
         return pub
-    return pub if _cmp_prefix(pub, ub) <= 0 else tuple(ub)
+    return pub if _cmp_prefix(order(pub), order(ub)) <= 0 else tuple(ub)
 
 
 def _murmur3_int32(x: int, seed: int = 42) -> int:
@@ -965,13 +982,6 @@ def _file_path():
     return F.url_decode(F.regexp_replace(uri, r"\+", "%2B"))
 
 
-def _instant(v):
-    """A TIMESTAMP value as the UTC instant Spark holds: a naive
-    ``datetime`` is local time, its ``fold`` telling apart the two
-    instants of a wall time that a DST fall-back repeats."""
-    return v.astimezone(_dt.timezone.utc) if isinstance(v, _dt.datetime) else v
-
-
 def _local_df(spark: SparkSession, rows: Sequence[tuple], schema
               ) -> DataFrame:
     """A DataFrame of driver-side ``rows`` (tuples in field order of
@@ -991,7 +1001,7 @@ def _local_df(spark: SparkSession, rows: Sequence[tuple], schema
     arrays = []
     for c, f, a in zip(cols, schema.fields, arrow):
         if isinstance(f.dataType, TimestampType):
-            c = [_instant(v) for v in c]
+            c = [_ord.instant(v) for v in c]
         arrays.append(pa.array(list(c), type=a.type))
     return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow),
                                  schema)
@@ -1248,7 +1258,7 @@ def _commit(spark: SparkSession, path: str, frame: DataFrame | None,
     )
     _meta.write_manifest(path, man)
     if manifest_table or os.path.isdir(_meta.manifest_table_path(path)):
-        _meta.write_manifest_table(spark, path, man)
+        _meta.write_manifest_table(path, man)
 
 
 def _manifest_dataset(spark: SparkSession, path: str, man) -> Dataset:
@@ -1469,16 +1479,17 @@ def delete_rows(spark: SparkSession, path: str, lb=None, ub=None,
         _require(ix != (), ValueError, "delete_rows requires index columns")
         _require(old.known_bounds, ValueError,
                  "delete_rows requires manifest bounds")
+        order = _ord.spark_order(old.schema, ix)
         untouched, affected = [], []
         for i, f in enumerate(old.files):
-            if _overlaps(old.lower_bounds[i], old.upper_bounds[i],
-                         lb, ub, lo_incl, hi_incl):
+            if _overlaps(order(old.lower_bounds[i]), order(old.upper_bounds[i]),
+                         order(lb), order(ub), lo_incl, hi_incl):
                 affected.append(f)
             else:
                 untouched.append(i)
         if not affected:            # nothing overlaps: no-op, no version
             return scan_parquet(spark, path)
-        cond = _ord.range_predicate(ix, lb, ub, inclusive)
+        cond = _ord.range_predicate(ix, order(lb), order(ub), inclusive)
         survives = ~F.coalesce(cond, F.lit(False))   # null-safe complement
         # a task may pack several affected files into one output file:
         # sort it, so its bounds are its first and last rows
@@ -1601,12 +1612,7 @@ def merge_rows(spark: SparkSession, path: str, batch: "Dataset") -> Dataset:
         # the batch's keys, small by contract, in one job; the rest of
         # the plan is driver-side bound math under Spark's order (NULL
         # equals NULL, NaN equals NaN), TIMESTAMPs compared as instants
-        stamp = [isinstance(batch.df.schema[c].dataType, TimestampType)
-                 for c in ix]
-
-        def spark_order(key):
-            return tuple(_instant(v) if t else v for v, t in zip(key, stamp))
-
+        spark_order = _ord.spark_order(batch.df.schema, ix)
         keys = sorted((spark_order(r) for r in batch.df.select(*ix).collect()),
                       key=_ord.lex_key)
         if not keys:                         # empty batch: no-op

@@ -127,6 +127,12 @@ def _latest_metadata(path: str) -> str:
     return os.path.join(mdir, best)
 
 
+def list_iceberg_snapshots(path: str) -> list[int]:
+    """Snapshot ids of the current table metadata (oldest first)."""
+    with open(_latest_metadata(path)) as fh:
+        return [s["snapshot-id"] for s in json.load(fh)["snapshots"]]
+
+
 def _resolve(path: str, table: str) -> str:
     p = path
     if p.startswith("file:"):

@@ -9,7 +9,9 @@ monotone ``max_partition_index`` so appends never reuse a slot.  Bound
 values that JSON can't represent use the same tagged codec as the
 reference (``json_io.py:13-41``): ``{"$datetime": iso}``,
 ``{"$date": iso}``, ``{"$timedelta": "NdNsNu"}``, plus
-``{"$decimal": str}`` so a DECIMAL index keeps its exact values.
+``{"$decimal": str}`` so a DECIMAL index keeps its exact values and a
+``"$fold": 1`` beside ``$datetime`` so a local time that a DST fall-back
+repeats keeps its instant.
 
 Differences from the reference, by design:
 
@@ -38,6 +40,10 @@ import os
 import re
 import shutil
 from dataclasses import dataclass, field
+
+from pyspark.sql.types import TimestampType
+
+from .ordering import instant, spark_order
 
 METADATA_FILE = "_padawan_metadata.json"
 SCHEMA_FILE = "_padawan_schema.json"
@@ -102,7 +108,7 @@ _TIMEDELTA_RE = re.compile(r"^(-?\d+)d(-?\d+)s(-?\d+)u$")
 
 def _encode_value(v):
     if isinstance(v, dt.datetime):
-        return {"$datetime": v.isoformat()}
+        return {"$datetime": v.isoformat(), **({"$fold": 1} if v.fold else {})}
     if isinstance(v, dt.date):
         return {"$date": v.isoformat()}
     if isinstance(v, dt.timedelta):
@@ -115,7 +121,8 @@ def _encode_value(v):
 def _decode_value(v):
     if isinstance(v, dict):
         if "$datetime" in v:
-            return dt.datetime.fromisoformat(v["$datetime"])
+            return dt.datetime.fromisoformat(v["$datetime"]).replace(
+                fold=v.get("$fold", 0))
         if "$date" in v:
             return dt.date.fromisoformat(v["$date"])
         if "$timedelta" in v:
@@ -370,14 +377,15 @@ def manifest_table_path(path: str) -> str:
 _TABLE_META = b"padawan.manifest"
 
 
-def write_manifest_table(spark, path: str, manifest: Manifest) -> None:
+def write_manifest_table(path: str, manifest: Manifest) -> None:
     """Persist the manifest as a parquet TABLE for tables with millions
     of files (the Iceberg/Delta manifest shape), written on the driver
-    with pyarrow (``spark`` is unused, kept for the signature).
+    with pyarrow.
 
     One row per data file: ``pos`` (its place in the manifest), ``file``,
     ``size`` and, when bounds are known, ``lb_i`` / ``ub_i`` for index
-    column ``i``, typed as pyarrow infers from the values.  Rows are
+    column ``i``, typed as pyarrow infers from the values, except that a
+    TIMESTAMP column of the recorded schema holds UTC instants.  Rows are
     sorted null-first by ``lb_0`` in row groups of 64k rows, so
     :func:`read_manifest_table` skips a group by its min/max.  The index
     columns and ``max_partition_index`` are the file's key-value
@@ -394,10 +402,11 @@ def write_manifest_table(spark, path: str, manifest: Manifest) -> None:
             "size": pa.array(manifest.sizes or [None] * n, pa.int64())}
     bounds = manifest.known_bounds
     if bounds:
+        order = spark_order(manifest.schema, manifest.index_columns)
         for side, bs in (("lb", manifest.lower_bounds),
                          ("ub", manifest.upper_bounds)):
             for i in range(len(manifest.index_columns)):
-                cols[f"{side}_{i}"] = pa.array([b[i] for b in bs])
+                cols[f"{side}_{i}"] = pa.array([order(b)[i] for b in bs])
     table = pa.table(cols).replace_schema_metadata({_TABLE_META: json.dumps({
         "index_columns": list(manifest.index_columns),
         "max_partition_index": manifest.max_partition_index,
@@ -434,6 +443,8 @@ def _first_column_test(schema, column: str, probe, keep):
 
     if probe is None or column not in schema.names:
         return None
+    if getattr(schema.field(column).type, "tz", None):
+        probe = instant(probe)         # a TIMESTAMP column of instants
     try:
         value = pa.scalar(probe, schema.field(column).type)
     except (pa.ArrowException, TypeError, ValueError, OverflowError):
@@ -476,10 +487,17 @@ def read_manifest_table(path: str, lb=None, ub=None) -> Manifest:
     ).sort_by("pos")
     n, k = table.num_rows, len(meta["index_columns"])
 
+    def _values(name):
+        c = table.column(name)
+        if getattr(c.type, "tz", None):   # instants: back to local time
+            return [TimestampType().fromInternal(v)
+                    for v in c.cast("int64").to_pylist()]
+        return c.to_pylist()
+
     def _bounds(side):
         if not meta["bounds"]:
             return None
-        cols = [table.column(f"{side}_{i}").to_pylist() for i in range(k)]
+        cols = [_values(f"{side}_{i}") for i in range(k)]
         return [tuple(c[j] for c in cols) for j in range(n)]
 
     sizes = table.column("size").to_pylist()
@@ -492,9 +510,3 @@ def read_manifest_table(path: str, lb=None, ub=None) -> Manifest:
         max_partition_index=meta["max_partition_index"],
         schema_json=_read_schema(path),
     )
-
-
-def manifest_from_table(spark, path: str) -> Manifest:
-    """The whole manifest table as a :class:`Manifest` (``spark`` is
-    unused, kept for the signature)."""
-    return read_manifest_table(path)

@@ -27,7 +27,8 @@ null-aware min/max must be built explicitly:
   ``F.max`` would get wrong (they skip nulls).
 - :func:`lex_key` / :func:`lex_cmp` are driver-side comparators for the
   small bound tuples kept in the manifest, ordering NaN as Spark does
-  (above every number, equal to NaN).
+  (above every number, equal to NaN); :func:`spark_order` maps a bound's
+  TIMESTAMP values to the instants Spark compares.
 
 Bounds may be *prefixes* of the index tuple (slice on the first k
 columns only), mirroring ``sliced_dataset.py:43-48``.
@@ -35,12 +36,14 @@ columns only), mirroring ``sliced_dataset.py:43-48``.
 
 from __future__ import annotations
 
+import datetime as _dt
 import operator
 from functools import reduce, total_ordering
 from typing import Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, TimestampType
 
 
 # ---------------------------------------------------------------------------
@@ -199,6 +202,30 @@ def lex_cmp(a: Sequence, b: Sequence) -> int:
         if c != 0:
             return c
     return (len(a) > len(b)) - (len(a) < len(b))
+
+
+def instant(v):
+    """A TIMESTAMP value as the UTC instant Spark holds: a naive
+    ``datetime`` is local time, its ``fold`` telling apart the two
+    instants of a wall time that a DST fall-back repeats."""
+    return v.astimezone(_dt.timezone.utc) if isinstance(v, _dt.datetime) else v
+
+
+def spark_order(schema: StructType | None, columns: Sequence[str]):
+    """A function mapping a bound over ``columns`` (or a prefix of them)
+    to values that compare as Spark compares them: a TIMESTAMP value
+    becomes its :func:`instant`, since naive datetimes compare by wall
+    clock and ignore ``fold``; TIMESTAMP_NTZ and other values, and every
+    value when there is no ``schema``, stay as they are."""
+    stamp = [schema is not None and c in schema.names
+             and isinstance(schema[c].dataType, TimestampType)
+             for c in columns]
+
+    def order(bound):
+        if bound is None:
+            return None
+        return tuple(instant(v) if t else v for v, t in zip(bound, stamp))
+    return order
 
 
 def sort_partitions(lower_bounds: Sequence[Sequence], upper_bounds: Sequence[Sequence]) -> list[int]:

@@ -4,13 +4,12 @@ percentiles, and non-parquet source round trips."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 from ..operators import asof_join, salted_aggregate
 from ..sources import scan_csv, scan_json, write_csv, write_json
-from .registry import DEC, dsum, load, query, sql_dsum
+from .registry import DEC, dsum, fixture, load, query, scratch, sql_dsum
 
 
 # ---------------------------------------------------------------------------
@@ -114,7 +113,7 @@ GROUP BY o_orderstatus
 def adv_csv_roundtrip(spark, sf_dir):
     o = load(spark, sf_dir, "orders").where(
         F.col("o_orderdate") >= F.lit("1999-01-01").cast("timestamp"))
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_csv_"), "orders")
+    target = os.path.join(scratch("padawan_csv_"), "orders")
     write_csv(o, target)
     back = scan_csv(spark, target, schema=_ORDERS_SCHEMA)
     return (back.df.groupBy("o_orderstatus")
@@ -130,7 +129,7 @@ GROUP BY o_orderpriority
 def adv_json_roundtrip(spark, sf_dir):
     o = load(spark, sf_dir, "orders").where(
         F.col("o_orderdate") >= F.lit("1999-01-01").cast("timestamp"))
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_json_"), "orders")
+    target = os.path.join(scratch("padawan_json_"), "orders")
     write_json(o, target)
     back = scan_json(spark, target, schema=_ORDERS_SCHEMA)
     return (back.df.groupBy("o_orderpriority")
@@ -148,7 +147,7 @@ def adv_orc_roundtrip(spark, sf_dir):
     no re-read schema is needed; types survive exactly)."""
     o = load(spark, sf_dir, "orders").where(
         F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp"))
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_orc_"), "orders")
+    target = os.path.join(scratch("padawan_orc_"), "orders")
     o.write.mode("overwrite").orc(target)
     back = spark.read.orc(target)
     return (back.groupBy("o_orderstatus")
@@ -173,7 +172,7 @@ def adv_jsonl_gz_roundtrip(spark, sf_dir):
     property under test; the oracle runs on the original table."""
     o = load(spark, sf_dir, "orders").where(
         F.col("o_orderdate") >= F.lit("2000-06-01").cast("timestamp"))
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_jgz_"), "orders")
+    target = os.path.join(scratch("padawan_jgz_"), "orders")
     (o.repartition(8).write.mode("overwrite")
      .option("compression", "gzip").json(target))
     import glob as _glob
@@ -201,7 +200,7 @@ def adv_zstd_parquet_roundtrip(spark, sf_dir):
     the oracle runs on the original table."""
     o = load(spark, sf_dir, "orders").where(
         F.col("o_orderdate") >= F.lit("2000-06-01").cast("timestamp"))
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_zst_"), "orders")
+    target = os.path.join(scratch("padawan_zst_"), "orders")
     (o.write.mode("overwrite")
      .option("compression", "zstd").parquet(target))
     import pyarrow.parquet as _pq
@@ -449,18 +448,19 @@ def adv_merge_schema_read(spark, sf_dir):
     the sibling adv_union_evolved does the same union in-plan.  Old
     files never pay for the new column (parquet is columnar: absent
     means null, no storage)."""
-    import tempfile
     o = load(spark, sf_dir, "orders")
-    target = tempfile.mkdtemp(prefix="padawan_msr_")
-    (o.where(F.col("o_orderkey") % 2 == 0)
-     .select("o_orderkey", "o_totalprice")
-     .write.mode("overwrite").parquet(target + "/gen1"))
-    (o.where(F.col("o_orderkey") % 2 == 1)
-     .select("o_orderkey", "o_totalprice",
-             F.concat(F.lit("clerk_"),
-                      (F.col("o_custkey") % 10).cast("string"))
-             .alias("o_clerk"))
-     .write.mode("overwrite").parquet(target + "/gen2"))
+
+    def build(target):
+        (o.where(F.col("o_orderkey") % 2 == 0)
+         .select("o_orderkey", "o_totalprice")
+         .write.mode("overwrite").parquet(target + "/gen1"))
+        (o.where(F.col("o_orderkey") % 2 == 1)
+         .select("o_orderkey", "o_totalprice",
+                 F.concat(F.lit("clerk_"),
+                          (F.col("o_custkey") % 10).cast("string"))
+                 .alias("o_clerk"))
+         .write.mode("overwrite").parquet(target + "/gen2"))
+    target = fixture(sf_dir, "adv_merge_schema_read", build)
     back = (spark.read.option("mergeSchema", "true")
             .parquet(target + "/gen1", target + "/gen2"))
     return back.select("o_orderkey", "o_totalprice", "o_clerk")
@@ -579,7 +579,7 @@ def adv_xml_source_roundtrip(spark, sf_dir):
     oracle runs on the original table."""
     n = load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey")
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_xml_"), "nation")
+    target = os.path.join(scratch("padawan_xml_"), "nation")
     (n.write.format("xml").option("rootTag", "nations")
      .option("rowTag", "nation").mode("overwrite").save(target))
     back = (spark.read.format("xml").option("rowTag", "nation")
@@ -608,7 +608,7 @@ def adv_text_roundtrip(spark, sf_dir):
     lines = d.select(F.concat_ws(
         "\t", F.col("doc_id").cast("string"),
         F.hex(F.encode(F.col("text"), "UTF-8"))).alias("value"))
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_text_"), "docs")
+    target = os.path.join(scratch("padawan_text_"), "docs")
     lines.write.mode("overwrite").text(target)
     back = spark.read.text(target)
     parts = F.split(F.col("value"), "\t", 2)
@@ -685,7 +685,7 @@ def adv_custom_sink(spark, sf_dir):
     agg = (o.groupBy("o_orderpriority")
            .agg(F.count(F.lit(1)).alias("n"),
                 dsum(F.col("o_totalprice"), "total")))
-    target = tempfile.mkdtemp(prefix="padawan_jsonlsink_")
+    target = scratch("padawan_jsonlsink_")
     agg.write.format("jsonlsink").option("path", target).mode("append").save()
     back = read_jsonl_sink(
         spark, target, "o_orderpriority string, n bigint, total double")
@@ -768,9 +768,6 @@ def src_avro_roundtrip(spark, sf_dir):
     one task per file), and aggregated; the oracle recomputes the
     aggregate straight from the source table — count, key sum, null
     census, and price sum all survive the round trip."""
-    import os
-    import tempfile
-
     from ..functions.avro import encode_avro_py
     from ..sources import register_python_sources
     register_python_sources(spark)
@@ -784,7 +781,7 @@ def src_avro_roundtrip(spark, sf_dir):
               ("o_orderstatus", "string", True),
               ("o_totalprice", "double", False)]
     recs = [(r[0], None if r[0] % 7 == 0 else r[1], r[2]) for r in rows]
-    d = tempfile.mkdtemp(prefix="padawan_avro_")
+    d = scratch("padawan_avro_")
     third = (len(recs) + 2) // 3
     for fi in range(3):
         chunk = recs[fi * third:(fi + 1) * third]
@@ -816,16 +813,15 @@ def src_delta_partition_prune(spark, sf_dir):
     the filtered partition's files may enter the plan.  Scale shape:
     a point lookup on a partitioned key plans O(files-in-partition),
     not O(table)."""
-    import os
-    import tempfile
-
     from ..functions.delta import read_delta, write_delta_fixture
     from ..plans import physical_plan
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_dpp_"), "tbl")
-    write_delta_fixture(spark, n, t, partition_by=("g",))
+
+    def build(t):
+        write_delta_fixture(spark, n, t, partition_by=("g",))
+    t = fixture(sf_dir, "src_delta_partition_prune", build)
     out = read_delta(spark, t, filters={"g": 2})
     plan = physical_plan(out)
     assert "g=2/" in plan and "g=0/" not in plan \
@@ -861,9 +857,6 @@ def src_delta_read(spark, sf_dir):
     each version's aggregate from the source table.  Scale shape: log
     replay is O(actions) driver work; the scan is one parquet job per
     distinct partition tuple, unioned."""
-    import os
-    import tempfile
-
     from ..functions.delta import (read_delta,
                                    remove_delta_files_fixture,
                                    write_delta_fixture)
@@ -871,12 +864,14 @@ def src_delta_read(spark, sf_dir):
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"),
         F.col("n_name").alias("name"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_delta_"), "tbl")
-    write_delta_fixture(spark, n.where(F.col("k") < 15), t,
-                        partition_by=("g",))
-    write_delta_fixture(spark, n.where(F.col("k") >= 15), t,
-                        partition_by=("g",), mode="append")
-    remove_delta_files_fixture(t, lambda rel: rel.startswith("g=0/"))
+
+    def build(t):
+        write_delta_fixture(spark, n.where(F.col("k") < 15), t,
+                            partition_by=("g",))
+        write_delta_fixture(spark, n.where(F.col("k") >= 15), t,
+                            partition_by=("g",), mode="append")
+        remove_delta_files_fixture(t, lambda rel: rel.startswith("g=0/"))
+    t = fixture(sf_dir, "src_delta_read", build)
     out = []
     for v in (0, 1, 2):
         agg = read_delta(spark, t, version=v).agg(
@@ -907,19 +902,18 @@ def src_delta_id_mapping(spark, sf_dir):
     O(footer) driver tap per file — the same order as the log replay
     already does — then one parquet scan per (partition, layout)
     group."""
-    import os
-    import tempfile
-
     from ..functions.delta import read_delta, write_delta_fixture
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_cmid_"), "tbl")
-    write_delta_fixture(spark, n.where(F.col("k") % 2 == 0), t,
-                        partition_by=("g",), column_mapping="id")
-    write_delta_fixture(spark, n.where(F.col("k") % 2 == 1), t,
-                        partition_by=("g",), mode="append",
-                        column_mapping="id")
+
+    def build(t):
+        write_delta_fixture(spark, n.where(F.col("k") % 2 == 0), t,
+                            partition_by=("g",), column_mapping="id")
+        write_delta_fixture(spark, n.where(F.col("k") % 2 == 1), t,
+                            partition_by=("g",), mode="append",
+                            column_mapping="id")
+    t = fixture(sf_dir, "src_delta_id_mapping", build)
     return read_delta(spark, t).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("k").cast("bigint").alias("key_sum"),
@@ -953,9 +947,6 @@ def src_delta_nested_read(spark, sf_dir):
     mapped inner field (reading nulls) breaks a sum.  Scale shape:
     identical to the flat reader — one scan per schema epoch, remap
     is per-row expression work."""
-    import os
-    import tempfile
-
     from ..functions.delta import read_delta, write_delta_fixture
     o = load(spark, sf_dir, "orders").where(
         (F.col("o_orderkey") % 10 == 0)
@@ -976,9 +967,11 @@ def src_delta_nested_read(spark, sf_dir):
             F.struct(F.col("o_custkey").cast("bigint")
                      .alias("q"))).alias("mp"),
         (F.col("o_orderkey") % 3).cast("bigint").alias("g"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_dnest_"), "tbl")
-    write_delta_fixture(spark, o, t, partition_by=("g",),
-                        column_mapping="name")
+
+    def build(t):
+        write_delta_fixture(spark, o, t, partition_by=("g",),
+                            column_mapping="name")
+    t = fixture(sf_dir, "src_delta_nested_read", build)
     out = read_delta(spark, t)
     return out.agg(
         F.count(F.lit(1)).alias("n"),
@@ -1009,19 +1002,18 @@ def src_delta_time_travel(spark, sf_dir):
     after (both).  Scale shape: resolution walks O(commits) commit
     HEADS on the driver (first commitInfo line or one stat call),
     never data."""
-    import os
-    import tempfile
-
     from ..functions.delta import read_delta, write_delta_fixture
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_dtt_"), "tbl")
-    write_delta_fixture(spark, n, t)
-    write_delta_fixture(spark, n.select(
-        (F.col("k") + 700).alias("k")), t, mode="append")
-    log = os.path.join(t, "_delta_log")
-    os.utime(os.path.join(log, f"{0:020d}.json"), (1000, 1000))
-    os.utime(os.path.join(log, f"{1:020d}.json"), (2000, 2000))
+
+    def build(t):
+        write_delta_fixture(spark, n, t)
+        write_delta_fixture(spark, n.select(
+            (F.col("k") + 700).alias("k")), t, mode="append")
+        log = os.path.join(t, "_delta_log")
+        os.utime(os.path.join(log, f"{0:020d}.json"), (1000, 1000))
+        os.utime(os.path.join(log, f"{1:020d}.json"), (2000, 2000))
+    t = fixture(sf_dir, "src_delta_time_travel", build)
     then = read_delta(spark, t, as_of_ms=1500_000).agg(
         F.lit("then").alias("scope"),
         F.count(F.lit(1)).alias("n"),
@@ -1057,9 +1049,6 @@ def src_delta_cdf_checkpoint(spark, sf_dir):
     Scale shape: stream-start/read planning is O(commits since
     checkpoint), not O(all commits since version 0); change files
     scan distributed as before."""
-    import os
-    import tempfile
-
     from ..functions.delta import (read_delta_changes,
                                    remove_delta_files_fixture,
                                    write_delta_checkpoint_fixture,
@@ -1067,15 +1056,16 @@ def src_delta_cdf_checkpoint(spark, sf_dir):
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_cdfck_"),
-                     "tbl")
-    write_delta_fixture(spark, n, t, partition_by=("g",))     # v0
-    write_delta_checkpoint_fixture(t, clean_before=True)      # 0 gone
-    write_delta_fixture(
-        spark, n.select((F.col("k") + 100).alias("k"),
-                        F.col("g")), t, mode="append")        # v1
-    remove_delta_files_fixture(
-        t, lambda rel: rel.startswith("g=0/"))                # v2
+
+    def build(t):
+        write_delta_fixture(spark, n, t, partition_by=("g",))     # v0
+        write_delta_checkpoint_fixture(t, clean_before=True)      # 0 gone
+        write_delta_fixture(
+            spark, n.select((F.col("k") + 100).alias("k"),
+                            F.col("g")), t, mode="append")        # v1
+        remove_delta_files_fixture(
+            t, lambda rel: rel.startswith("g=0/"))                # v2
+    t = fixture(sf_dir, "src_delta_cdf_checkpoint", build)
     ch = read_delta_changes(spark, t, starting_version=1)
     return (ch.where(F.col("_change_type") == "insert")
             .agg(F.lit("insert").alias("change"),
@@ -1127,9 +1117,6 @@ def src_delta_cdf_read(spark, sf_dir):
     from the source table.  Scale shape: one distributed scan per
     change file, O(log actions) driver replay, no row work on the
     driver."""
-    import os
-    import tempfile
-
     from ..functions.delta import (add_dv_fixture, read_delta_changes,
                                    remove_delta_files_fixture,
                                    replay_delta_log,
@@ -1139,15 +1126,17 @@ def src_delta_cdf_read(spark, sf_dir):
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"),
         (F.col("n_nationkey") * 10).cast("bigint").alias("v"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_cdf_"), "tbl")
-    # order_by pins physical row order — DV positions address by it
-    write_delta_fixture(spark, n, t, partition_by=("g",),
-                        order_by=("k",))
-    remove_delta_files_fixture(t, lambda rel: rel.startswith("g=2/"))
-    update_delta_cdc_fixture(spark, t, "g", 1, "v", 1000)
-    _sch, _pc, files, _mm = replay_delta_log(t)
-    g3 = next(rel for rel, _pv, _dv in files if rel.startswith("g=3/"))
-    add_dv_fixture(t, {g3: [0, 1]})
+
+    def build(t):
+        # order_by pins physical row order — DV positions address by it
+        write_delta_fixture(spark, n, t, partition_by=("g",),
+                            order_by=("k",))
+        remove_delta_files_fixture(t, lambda rel: rel.startswith("g=2/"))
+        update_delta_cdc_fixture(spark, t, "g", 1, "v", 1000)
+        _sch, _pc, files, _mm = replay_delta_log(t)
+        g3 = next(rel for rel, _pv, _dv in files if rel.startswith("g=3/"))
+        add_dv_fixture(t, {g3: [0, 1]})
+    t = fixture(sf_dir, "src_delta_cdf_read", build)
     return (read_delta_changes(spark, t)
             .groupBy(F.col("_change_type").alias("change"),
                      F.col("_commit_version").cast("int")
@@ -1179,27 +1168,27 @@ def src_delta_v2_checkpoint(spark, sf_dir):
     both from the source table.  Scale shape: checkpoint replay is
     O(actions) driver-side pyarrow over top-level + sidecars; the
     data scan is unchanged."""
-    import os
-    import tempfile
-
-    from ..functions.delta import (read_delta,
+    from ..functions.delta import (list_delta_versions, read_delta,
                                    remove_delta_files_fixture,
                                    write_delta_checkpoint_fixture,
                                    write_delta_fixture)
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_ckv2_"), "tbl")
-    write_delta_fixture(spark, n.where(F.col("k") < 15), t,
-                        partition_by=("g",))
-    write_delta_fixture(spark, n.where(F.col("k") >= 15), t,
-                        partition_by=("g",), mode="append")
-    remove_delta_files_fixture(t, lambda rel: rel.startswith("g=2/"))
-    v = write_delta_checkpoint_fixture(t, clean_before=True, v2=True,
+
+    def build(t):
+        write_delta_fixture(spark, n.where(F.col("k") < 15), t,
+                            partition_by=("g",))
+        write_delta_fixture(spark, n.where(F.col("k") >= 15), t,
+                            partition_by=("g",), mode="append")
+        remove_delta_files_fixture(t, lambda rel: rel.startswith("g=2/"))
+        write_delta_checkpoint_fixture(t, clean_before=True, v2=True,
                                        n_sidecars=2)
-    write_delta_fixture(
-        spark, n.where((F.col("g") == 2) & (F.col("k") % 2 == 0)),
-        t, partition_by=("g",), mode="append")
+        write_delta_fixture(
+            spark, n.where((F.col("g") == 2) & (F.col("k") % 2 == 0)),
+            t, partition_by=("g",), mode="append")
+    t = fixture(sf_dir, "src_delta_v2_checkpoint", build)
+    v = list_delta_versions(t)[-1] - 1      # the checkpoint's version
     out = []
     for scope, ver in (("ckpt", v), ("final", None)):
         agg = read_delta(spark, t, version=ver).agg(
@@ -1236,30 +1225,31 @@ def src_hudi_clustering(spark, sf_dir):
     pure scans — the read cost of the window merge disappears for
     clustered groups."""
     import json as _json
-    import os
-    import tempfile
 
-    from ..functions.hudi import (live_hudi_slices, read_hudi,
-                                  write_hudi_delta_fixture,
+    from ..functions.hudi import (list_hudi_commits, live_hudi_slices,
+                                  read_hudi, write_hudi_delta_fixture,
                                   write_hudi_fixture,
                                   write_hudi_replace_fixture)
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"),
         F.col("n_name").alias("name"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_clus_"), "tbl")
-    i1 = write_hudi_fixture(spark, n, t, partition_field="g")
-    d1 = write_hudi_delta_fixture(
-        spark, t, upserts=n.where(F.col("k") % 3 == 0)
-        .withColumn("name", F.lit("UPD")), partition_field="g")
-    with open(os.path.join(t, ".hoodie", f"{i1}.commit")) as fh:
-        fid1 = _json.load(fh)["partitionToWriteStats"]["1"][0]["fileId"]
-    merged_g1 = (n.where(F.col("g") == 1)
-                 .withColumn("name",
-                             F.when(F.col("k") % 3 == 0, F.lit("UPD"))
-                             .otherwise(F.col("name"))))
-    r1 = write_hudi_replace_fixture(spark, merged_g1, t, {"1": [fid1]},
-                                    partition_field="g")
+
+    def build(t):
+        i1 = write_hudi_fixture(spark, n, t, partition_field="g")
+        write_hudi_delta_fixture(
+            spark, t, upserts=n.where(F.col("k") % 3 == 0)
+            .withColumn("name", F.lit("UPD")), partition_field="g")
+        with open(os.path.join(t, ".hoodie", f"{i1}.commit")) as fh:
+            fid1 = _json.load(fh)["partitionToWriteStats"]["1"][0]["fileId"]
+        merged_g1 = (n.where(F.col("g") == 1)
+                     .withColumn("name",
+                                 F.when(F.col("k") % 3 == 0, F.lit("UPD"))
+                                 .otherwise(F.col("name"))))
+        write_hudi_replace_fixture(spark, merged_g1, t, {"1": [fid1]},
+                                   partition_field="g")
+    t = fixture(sf_dir, "src_hudi_clustering", build)
+    _i1, d1, r1 = list_hudi_commits(t)
     # layout really changed: the clustered partition has no live logs
     assert all(not s["logs"] for s in live_hudi_slices(t, r1).values()
                if s["part"] == "1")
@@ -1299,9 +1289,6 @@ def src_delta_dv_read(spark, sf_dir):
     Scale shape: DV decode is O(deleted rows) driver work (inherent to
     the format — every Delta reader does it); the data files read in
     ONE distributed scan with the position set broadcast, no rewrite."""
-    import os
-    import tempfile
-
     from ..functions.delta import (add_dv_fixture, read_delta,
                                    replay_delta_log,
                                    write_delta_checkpoint_fixture,
@@ -1312,28 +1299,30 @@ def src_delta_dv_read(spark, sf_dir):
            .select(F.col("o_orderkey").cast("bigint").alias("k"),
                    (F.col("o_orderkey") % 4).cast("bigint").alias("g"),
                    F.col("o_totalprice").cast("double").alias("price")))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_dv_"), "tbl")
-    write_delta_fixture(spark, src, t, partition_by=("g",),
-                        order_by=("k",))
-    # positions are row indexes within each (k-sorted) partition file
-    keys = [(int(r["g"]), int(r["k"]))
-            for r in src.select("g", "k").collect()]
-    by_g: dict[int, list[int]] = {}
-    for g, k in sorted(keys):
-        by_g.setdefault(g, []).append(k)
-    _sch, _pc, files, _mm = replay_delta_log(t)
-    rel_by_g = {int(pv["g"]): rel for rel, pv, _dv in files}
-    dv_by_rel = {}
-    for g, ks in by_g.items():
-        positions = [i for i, k in enumerate(ks) if k % 3 == 0]
-        if positions:
-            dv_by_rel[rel_by_g[g]] = positions
-    inline_rel = min(dv_by_rel)
-    add_dv_fixture(t, {inline_rel: dv_by_rel[inline_rel]}, inline=True)
-    rest = {r: p for r, p in dv_by_rel.items() if r != inline_rel}
-    if rest:
-        add_dv_fixture(t, rest)
-    write_delta_checkpoint_fixture(t, clean_before=True)
+
+    def build(t):
+        write_delta_fixture(spark, src, t, partition_by=("g",),
+                            order_by=("k",))
+        # positions are row indexes within each (k-sorted) partition file
+        keys = [(int(r["g"]), int(r["k"]))
+                for r in src.select("g", "k").collect()]
+        by_g: dict[int, list[int]] = {}
+        for g, k in sorted(keys):
+            by_g.setdefault(g, []).append(k)
+        _sch, _pc, files, _mm = replay_delta_log(t)
+        rel_by_g = {int(pv["g"]): rel for rel, pv, _dv in files}
+        dv_by_rel = {}
+        for g, ks in by_g.items():
+            positions = [i for i, k in enumerate(ks) if k % 3 == 0]
+            if positions:
+                dv_by_rel[rel_by_g[g]] = positions
+        inline_rel = min(dv_by_rel)
+        add_dv_fixture(t, {inline_rel: dv_by_rel[inline_rel]}, inline=True)
+        rest = {r: p for r, p in dv_by_rel.items() if r != inline_rel}
+        if rest:
+            add_dv_fixture(t, rest)
+        write_delta_checkpoint_fixture(t, clean_before=True)
+    t = fixture(sf_dir, "src_delta_dv_read", build)
     return read_delta(spark, t).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("k").cast("bigint").alias("key_sum"),
@@ -1364,23 +1353,23 @@ def src_iceberg_read(spark, sf_dir):
     time travel; the oracle restates every snapshot's aggregate from
     the source table.  Scale shape: O(manifest entries) driver work,
     one parquet job per distinct partition tuple."""
-    import os
-    import tempfile
-
-    from ..functions.iceberg import read_iceberg, write_iceberg_fixture
+    from ..functions.iceberg import (list_iceberg_snapshots, read_iceberg,
+                                     write_iceberg_fixture)
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"),
         F.col("n_name").alias("name"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_ice_"), "tbl")
-    s1 = write_iceberg_fixture(spark, n.where(F.col("k") < 15), t,
-                               partition_by=("g",))
-    s2 = write_iceberg_fixture(spark, n.where(F.col("k") >= 15), t,
-                               partition_by=("g",))
-    s3 = write_iceberg_fixture(spark, None, t, partition_by=("g",),
-                               delete_partition={"g": 2})
+
+    def build(t):
+        write_iceberg_fixture(spark, n.where(F.col("k") < 15), t,
+                              partition_by=("g",))
+        write_iceberg_fixture(spark, n.where(F.col("k") >= 15), t,
+                              partition_by=("g",))
+        write_iceberg_fixture(spark, None, t, partition_by=("g",),
+                              delete_partition={"g": 2})
+    t = fixture(sf_dir, "src_iceberg_read", build)
     out = []
-    for s in (s1, s2, s3):
+    for s in list_iceberg_snapshots(t):
         agg = read_iceberg(spark, t, snapshot_id=s).agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("k").cast("bigint").alias("s")).collect()[0]
@@ -1414,9 +1403,6 @@ def src_iceberg_nested_read(spark, sf_dir):
     the sums.  The oracle restates each nested accessor's aggregate
     from the flat source columns.  Scale shape: same as the flat
     evolved reader — one footer job, one scan per layout epoch."""
-    import os
-    import tempfile
-
     from ..functions.iceberg import (evolve_iceberg_schema_fixture,
                                      read_iceberg,
                                      write_iceberg_fixture)
@@ -1441,18 +1427,20 @@ def src_iceberg_nested_read(spark, sf_dir):
 
     o = load(spark, sf_dir, "orders").where(
         F.col("o_orderkey") % 10 == 1)
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_inest_"), "tbl")
-    write_iceberg_fixture(
-        spark, nested(o.where((F.col("o_orderkey") % 20 == 1)
-           & (F.col("o_orderkey") < 150000)),
-                      "cust", "sp", "m0"), t)
-    evolve_iceberg_schema_fixture(
-        t, renames={"st.cust": "buyer", "st.inner.sp": "depth",
-                    "ar.element.m0": "m"})
-    write_iceberg_fixture(
-        spark, nested(o.where((F.col("o_orderkey") % 20 == 11)
-           & (F.col("o_orderkey") < 150000)),
-                      "buyer", "depth", "m"), t)
+
+    def build(t):
+        write_iceberg_fixture(
+            spark, nested(o.where((F.col("o_orderkey") % 20 == 1)
+               & (F.col("o_orderkey") < 150000)),
+                          "cust", "sp", "m0"), t)
+        evolve_iceberg_schema_fixture(
+            t, renames={"st.cust": "buyer", "st.inner.sp": "depth",
+                        "ar.element.m0": "m"})
+        write_iceberg_fixture(
+            spark, nested(o.where((F.col("o_orderkey") % 20 == 11)
+               & (F.col("o_orderkey") < 150000)),
+                          "buyer", "depth", "m"), t)
+    t = fixture(sf_dir, "src_iceberg_nested_read", build)
     out = read_iceberg(spark, t)
     return out.agg(
         F.count(F.lit(1)).alias("n"),
@@ -1487,36 +1475,35 @@ def src_iceberg_v2_deletes(spark, sf_dir):
     distributed parquet scan and anti-join on
     ``(_metadata.file_path, _metadata.row_index)`` — never collected,
     AQE broadcasts when small; data files are never rewritten."""
-    import os
-    import tempfile
-
     from ..functions.iceberg import read_iceberg, write_iceberg_fixture
     src = (load(spark, sf_dir, "orders")
            .where((F.col("o_orderkey") % 10 == 0)
            & (F.col("o_orderkey") < 150000))
            .select(F.col("o_orderkey").cast("bigint").alias("k"),
                    (F.col("o_orderkey") % 4).cast("bigint").alias("g")))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_icev2_"), "tbl")
-    write_iceberg_fixture(spark, src, t, partition_by=("g",),
-                          order_by=("k",))
-    by_g: dict[int, list[int]] = {}
-    for g, k in sorted((int(r["g"]), int(r["k"]))
-                       for r in src.select("g", "k").collect()):
-        by_g.setdefault(g, []).append(k)
-    # data files are data/snap1-<ki>.parquet in sorted-group order
-    rel_by_g = {g: f"data/snap1-{ki}.parquet"
-                for ki, g in enumerate(sorted(by_g))}
-    dels = {g: [i for i, k in enumerate(ks) if k % 3 == 0]
-            for g, ks in by_g.items()}
-    first = min(g for g, p in dels.items() if p)
-    write_iceberg_fixture(
-        spark, None, t, partition_by=("g",),
-        delete_positions={rel_by_g[first]: dels[first]})
-    rest = {rel_by_g[g]: p for g, p in dels.items()
-            if g != first and p}
-    if rest:
-        write_iceberg_fixture(spark, None, t, partition_by=("g",),
-                              delete_positions=rest)
+
+    def build(t):
+        write_iceberg_fixture(spark, src, t, partition_by=("g",),
+                              order_by=("k",))
+        by_g: dict[int, list[int]] = {}
+        for g, k in sorted((int(r["g"]), int(r["k"]))
+                           for r in src.select("g", "k").collect()):
+            by_g.setdefault(g, []).append(k)
+        # data files are data/snap1-<ki>.parquet in sorted-group order
+        rel_by_g = {g: f"data/snap1-{ki}.parquet"
+                    for ki, g in enumerate(sorted(by_g))}
+        dels = {g: [i for i, k in enumerate(ks) if k % 3 == 0]
+                for g, ks in by_g.items()}
+        first = min(g for g, p in dels.items() if p)
+        write_iceberg_fixture(
+            spark, None, t, partition_by=("g",),
+            delete_positions={rel_by_g[first]: dels[first]})
+        rest = {rel_by_g[g]: p for g, p in dels.items()
+                if g != first and p}
+        if rest:
+            write_iceberg_fixture(spark, None, t, partition_by=("g",),
+                                  delete_positions=rest)
+    t = fixture(sf_dir, "src_iceberg_v2_deletes", build)
     return read_iceberg(spark, t).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("k").cast("bigint").alias("key_sum"),
@@ -1541,20 +1528,19 @@ def src_iceberg_ref_read(spark, sf_dir):
     the maintained ``main`` branch (current rows).  Scale shape: ref
     resolution is one metadata-map lookup; the scan is the same
     snapshot read."""
-    import os
-    import tempfile
-
     from ..functions.iceberg import (read_iceberg,
                                      tag_iceberg_snapshot_fixture,
                                      write_iceberg_fixture)
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_iref_"), "tbl")
-    s1 = write_iceberg_fixture(spark, n, t)
-    tag_iceberg_snapshot_fixture(t, "v1", snapshot_id=s1)
-    write_iceberg_fixture(spark, n.select(
-        (F.col("k") + 500).alias("k")), t)
-    tag_iceberg_snapshot_fixture(t, "head", ref_type="branch")
+
+    def build(t):
+        s1 = write_iceberg_fixture(spark, n, t)
+        tag_iceberg_snapshot_fixture(t, "v1", snapshot_id=s1)
+        write_iceberg_fixture(spark, n.select(
+            (F.col("k") + 500).alias("k")), t)
+        tag_iceberg_snapshot_fixture(t, "head", ref_type="branch")
+    t = fixture(sf_dir, "src_iceberg_ref_read", build)
     tagged = read_iceberg(spark, t, ref="v1").agg(
         F.lit("tag").alias("scope"),
         F.count(F.lit(1)).alias("n"),
@@ -1596,25 +1582,25 @@ def src_iceberg_eq_deletes(spark, sf_dir):
     shape: one null-safe anti-join per equality-column set, delete
     sets distributed (never collected), AQE broadcasts when small;
     data files never rewritten."""
-    import os
-    import tempfile
-
-    from ..functions.iceberg import read_iceberg, write_iceberg_fixture
+    from ..functions.iceberg import (list_iceberg_snapshots, read_iceberg,
+                                     write_iceberg_fixture)
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"),
         F.col("n_name").alias("name"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_iceeq_"), "tbl")
-    write_iceberg_fixture(spark, n, t, partition_by=("g",))
-    s2 = write_iceberg_fixture(
-        spark, n.where(F.col("k").isin(5, 15)), t,
-        partition_by=("g",),
-        delete_equality=(["k"], [(0,), (5,), (10,), (15,), (20,)]))
-    s3 = write_iceberg_fixture(
-        spark, None, t, partition_by=("g",),
-        delete_equality=(["g"], [(3,)]))
+
+    def build(t):
+        write_iceberg_fixture(spark, n, t, partition_by=("g",))
+        write_iceberg_fixture(
+            spark, n.where(F.col("k").isin(5, 15)), t,
+            partition_by=("g",),
+            delete_equality=(["k"], [(0,), (5,), (10,), (15,), (20,)]))
+        write_iceberg_fixture(
+            spark, None, t, partition_by=("g",),
+            delete_equality=(["g"], [(3,)]))
+    t = fixture(sf_dir, "src_iceberg_eq_deletes", build)
     out = []
-    for s in (s2, s3):
+    for s in list_iceberg_snapshots(t)[1:]:
         agg = read_iceberg(spark, t, snapshot_id=s).agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("k").cast("bigint").alias("s")).collect()[0]
@@ -1650,9 +1636,6 @@ def src_iceberg_transforms(spark, sf_dir):
     100 TB the bucketed point lookup scans O(files in one bucket ×
     years), not O(table) — partition pruning is pure driver metadata
     work."""
-    import os
-    import tempfile
-
     from ..functions.iceberg import (live_data_files,
                                      prune_partition_files,
                                      read_iceberg,
@@ -1663,9 +1646,11 @@ def src_iceberg_transforms(spark, sf_dir):
            .select(F.col("o_orderkey").cast("bigint").alias("k"),
                    F.col("o_custkey").cast("bigint").alias("cust"),
                    F.col("o_orderdate").alias("ts")))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_icetr_"), "tbl")
-    write_iceberg_fixture(spark, src, t,
-                          partition_by=("bucket(4, k)", "year(ts)"))
+
+    def build(t):
+        write_iceberg_fixture(spark, src, t,
+                              partition_by=("bucket(4, k)", "year(ts)"))
+    t = fixture(sf_dir, "src_iceberg_transforms", build)
     lo = src.agg(F.min("k").alias("k"),
                  F.min("ts").alias("ts")).collect()[0]
     fields, specs, files, _dels = live_data_files(t)
@@ -1711,9 +1696,6 @@ def src_iceberg_schema_evolution(spark, sf_dir):
     O(files) driver work activated ONLY when the table carries more
     than one schema; files group by physical layout, one scan per
     (partition, layout) group."""
-    import os
-    import tempfile
-
     from ..functions.iceberg import (evolve_iceberg_schema_fixture,
                                      read_iceberg,
                                      write_iceberg_fixture)
@@ -1721,14 +1703,16 @@ def src_iceberg_schema_evolution(spark, sf_dir):
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"),
         F.col("n_name").alias("name"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_icesv_"), "tbl")
-    write_iceberg_fixture(spark, n, t, partition_by=("g",))
-    evolve_iceberg_schema_fixture(t, renames={"name": "nation_name"},
-                                  add_columns=[("flag", "long")])
-    n2 = n.select((F.col("k") + 100).alias("k"), F.col("g"),
-                  F.col("name").alias("nation_name"),
-                  F.col("g").alias("flag"))
-    write_iceberg_fixture(spark, n2, t, partition_by=("g",))
+
+    def build(t):
+        write_iceberg_fixture(spark, n, t, partition_by=("g",))
+        evolve_iceberg_schema_fixture(t, renames={"name": "nation_name"},
+                                      add_columns=[("flag", "long")])
+        n2 = n.select((F.col("k") + 100).alias("k"), F.col("g"),
+                      F.col("name").alias("nation_name"),
+                      F.col("g").alias("flag"))
+        write_iceberg_fixture(spark, n2, t, partition_by=("g",))
+    t = fixture(sf_dir, "src_iceberg_schema_evolution", build)
     return read_iceberg(spark, t).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("k").cast("bigint").alias("key_sum"),
@@ -1765,25 +1749,24 @@ def src_iceberg_avro_data(spark, sf_dir):
     position-deriving path is paid ONLY by targeted files; schema
     evolution over Avro resolves by the embedded writer schema's
     field-id attributes through the shared one-job layout tap."""
-    import os
-    import tempfile
-
     from ..functions.iceberg import read_iceberg, write_iceberg_fixture
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_iceav_"), "tbl")
-    # order_by pins physical row order — position deletes address by it
-    write_iceberg_fixture(spark, n, t, partition_by=("g",),
-                          file_format="avro", order_by=("k",))
-    write_iceberg_fixture(spark, n.select((F.col("k") + 100).alias("k"),
-                                          F.col("g")),
-                          t, partition_by=("g",))
-    write_iceberg_fixture(spark, None, t, partition_by=("g",),
-                          delete_equality=(["k"], [(3,), (103,)]))
-    # v2 position delete on region 0's AVRO data file, row 0
-    write_iceberg_fixture(spark, None, t, partition_by=("g",),
-                          delete_positions={"data/snap1-0.avro": [0]})
+
+    def build(t):
+        # order_by pins physical row order — position deletes address by it
+        write_iceberg_fixture(spark, n, t, partition_by=("g",),
+                              file_format="avro", order_by=("k",))
+        write_iceberg_fixture(spark, n.select((F.col("k") + 100).alias("k"),
+                                              F.col("g")),
+                              t, partition_by=("g",))
+        write_iceberg_fixture(spark, None, t, partition_by=("g",),
+                              delete_equality=(["k"], [(3,), (103,)]))
+        # v2 position delete on region 0's AVRO data file, row 0
+        write_iceberg_fixture(spark, None, t, partition_by=("g",),
+                              delete_positions={"data/snap1-0.avro": [0]})
+    t = fixture(sf_dir, "src_iceberg_avro_data", build)
     return read_iceberg(spark, t).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("k").cast("bigint").alias("key_sum"),
@@ -1819,25 +1802,24 @@ def src_iceberg_orc_data(spark, sf_dir):
     Scale shape: the Arrow path is paid ONLY by position-deleted
     files; schema evolution over ORC resolves by ``iceberg.id``
     footer attributes through the shared one-job layout tap."""
-    import os
-    import tempfile
-
     from ..functions.iceberg import read_iceberg, write_iceberg_fixture
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_iceorc_"), "tbl")
-    # order_by pins physical row order — position deletes address by it
-    write_iceberg_fixture(spark, n, t, partition_by=("g",),
-                          file_format="orc", order_by=("k",))
-    write_iceberg_fixture(spark, n.select((F.col("k") + 200).alias("k"),
-                                          F.col("g")),
-                          t, partition_by=("g",))
-    write_iceberg_fixture(spark, None, t, partition_by=("g",),
-                          delete_equality=(["k"], [(7,), (207,)]))
-    # v2 position delete on region 0's ORC data file, row 0
-    write_iceberg_fixture(spark, None, t, partition_by=("g",),
-                          delete_positions={"data/snap1-0.orc": [0]})
+
+    def build(t):
+        # order_by pins physical row order — position deletes address by it
+        write_iceberg_fixture(spark, n, t, partition_by=("g",),
+                              file_format="orc", order_by=("k",))
+        write_iceberg_fixture(spark, n.select((F.col("k") + 200).alias("k"),
+                                              F.col("g")),
+                              t, partition_by=("g",))
+        write_iceberg_fixture(spark, None, t, partition_by=("g",),
+                              delete_equality=(["k"], [(7,), (207,)]))
+        # v2 position delete on region 0's ORC data file, row 0
+        write_iceberg_fixture(spark, None, t, partition_by=("g",),
+                              delete_positions={"data/snap1-0.orc": [0]})
+    t = fixture(sf_dir, "src_iceberg_orc_data", build)
     return read_iceberg(spark, t).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("k").cast("bigint").alias("key_sum"),
@@ -1866,29 +1848,29 @@ def src_hudi_incremental(spark, sf_dir):
     both windows from the source table.  Scale shape: the snapshot
     merge plan plus one filter on the winning event's instant — no
     extra shuffle."""
-    import os
-    import tempfile
-
-    from ..functions.hudi import (read_hudi_incremental,
+    from ..functions.hudi import (list_hudi_commits, read_hudi_incremental,
                                   write_hudi_delta_fixture,
                                   write_hudi_fixture)
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"),
         (F.col("n_nationkey") * 10).cast("bigint").alias("v"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_hinc_"), "tbl")
-    i1 = write_hudi_fixture(spark, n, t, partition_field="g")
-    d2 = write_hudi_delta_fixture(
-        spark, t, upserts=n.where(F.col("k") % 4 == 0)
-        .withColumn("v", F.col("k") * 10 + 1000),
-        partition_field="g")
-    dels: dict[str, list[str]] = {}
-    for r in n.where(F.col("k") == 2).collect():
-        dels.setdefault(str(r["g"]), []).append(str(r["k"]))
-    d3 = write_hudi_delta_fixture(
-        spark, t, upserts=n.where(F.col("k") % 3 == 0)
-        .withColumn("v", F.col("k") * 10 + 2000),
-        deletes=dels, partition_field="g")
+
+    def build(t):
+        write_hudi_fixture(spark, n, t, partition_field="g")
+        write_hudi_delta_fixture(
+            spark, t, upserts=n.where(F.col("k") % 4 == 0)
+            .withColumn("v", F.col("k") * 10 + 1000),
+            partition_field="g")
+        dels: dict[str, list[str]] = {}
+        for r in n.where(F.col("k") == 2).collect():
+            dels.setdefault(str(r["g"]), []).append(str(r["k"]))
+        write_hudi_delta_fixture(
+            spark, t, upserts=n.where(F.col("k") % 3 == 0)
+            .withColumn("v", F.col("k") * 10 + 2000),
+            deletes=dels, partition_field="g")
+    t = fixture(sf_dir, "src_hudi_incremental", build)
+    i1, d2, d3 = list_hudi_commits(t)
     out = []
     for scope, lo, hi in (("w2", i1, d2), ("w3", d2, d3)):
         agg = read_hudi_incremental(spark, t, lo, hi).agg(
@@ -1924,23 +1906,24 @@ def src_hudi_read(spark, sf_dir):
     shape: O(commits x write-stats) driver replay, one parquet scan
     of the live slices."""
     import json as _json
-    import os
-    import tempfile
 
-    from ..functions.hudi import read_hudi, write_hudi_fixture
+    from ..functions.hudi import (list_hudi_commits, read_hudi,
+                                  write_hudi_fixture)
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_hudi_"), "tbl")
-    i1 = write_hudi_fixture(spark, n, t, partition_field="g")
-    with open(os.path.join(t, ".hoodie", f"{i1}.commit")) as fh:
-        c1 = _json.load(fh)
-    fid_g3 = c1["partitionToWriteStats"]["3"][0]["fileId"]
-    upd = n.where((F.col("g") == 3) & (F.col("k") % 2 == 0))
-    i2 = write_hudi_fixture(spark, upd, t, partition_field="g",
-                            replace_file_ids=(fid_g3,))
+
+    def build(t):
+        i1 = write_hudi_fixture(spark, n, t, partition_field="g")
+        with open(os.path.join(t, ".hoodie", f"{i1}.commit")) as fh:
+            c1 = _json.load(fh)
+        fid_g3 = c1["partitionToWriteStats"]["3"][0]["fileId"]
+        upd = n.where((F.col("g") == 3) & (F.col("k") % 2 == 0))
+        write_hudi_fixture(spark, upd, t, partition_field="g",
+                           replace_file_ids=(fid_g3,))
+    t = fixture(sf_dir, "src_hudi_read", build)
     out = []
-    for label, inst in ((1, i1), (2, i2)):
+    for label, inst in enumerate(list_hudi_commits(t), 1):
         agg = read_hudi(spark, t, as_of=inst).agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("k").cast("bigint").alias("s")).collect()[0]
@@ -1974,27 +1957,28 @@ def src_hudi_mor_read(spark, sf_dir):
     ``mapInPandas`` with one task per log file (never collected);
     the merge is one window per record key — the same shuffle real
     MOR readers pay."""
-    import os
-    import tempfile
-
-    from ..functions.hudi import (read_hudi, write_hudi_delta_fixture,
+    from ..functions.hudi import (list_hudi_commits, read_hudi,
+                                  write_hudi_delta_fixture,
                                   write_hudi_fixture)
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"),
         F.col("n_name").alias("name"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_mor_"), "tbl")
-    i1 = write_hudi_fixture(spark, n, t, partition_field="g")
-    dels: dict[str, list[str]] = {}
-    for r in n.where(F.col("k").isin(1, 7)).collect():
-        dels.setdefault(str(r["g"]), []).append(str(r["k"]))
-    write_hudi_delta_fixture(
-        spark, t,
-        upserts=n.where(F.col("k") % 4 == 0)
-        .withColumn("name", F.lit("UPD")),
-        deletes=dels, partition_field="g")
+
+    def build(t):
+        write_hudi_fixture(spark, n, t, partition_field="g")
+        dels: dict[str, list[str]] = {}
+        for r in n.where(F.col("k").isin(1, 7)).collect():
+            dels.setdefault(str(r["g"]), []).append(str(r["k"]))
+        write_hudi_delta_fixture(
+            spark, t,
+            upserts=n.where(F.col("k") % 4 == 0)
+            .withColumn("name", F.lit("UPD")),
+            deletes=dels, partition_field="g")
+    t = fixture(sf_dir, "src_hudi_mor_read", build)
     out = []
-    for scope, inst in (("base", i1), ("merged", None)):
+    for scope, inst in (("base", list_hudi_commits(t)[0]),
+                        ("merged", None)):
         agg = read_hudi(spark, t, as_of=inst).agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("k").cast("bigint").alias("s"),
@@ -2025,9 +2009,6 @@ def src_hudi_metadata_listing(spark, sf_dir):
     entirely from the listing and must merge identically.  Scale
     shape: planning cost scales with partition count, not commit
     count; the merge plan is unchanged (per-slice broadcast split)."""
-    import os
-    import tempfile
-
     from ..functions.hudi import (read_hudi, write_hudi_delta_fixture,
                                   write_hudi_fixture,
                                   write_hudi_metadata_fixture)
@@ -2035,18 +2016,20 @@ def src_hudi_metadata_listing(spark, sf_dir):
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"),
         (F.col("n_nationkey") * 10).cast("bigint").alias("v"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_hmd_"), "tbl")
-    write_hudi_fixture(spark, n, t, partition_field="g")
-    write_hudi_delta_fixture(
-        spark, t, upserts=n.where(F.col("k") % 6 == 0)
-        .withColumn("v", F.lit(-1).cast("bigint")),
-        partition_field="g")
-    write_hudi_metadata_fixture(spark, t)
-    dels: dict[str, list[str]] = {}
-    for r in n.where(F.col("k") == 9).collect():
-        dels.setdefault(str(r["g"]), []).append(str(r["k"]))
-    write_hudi_delta_fixture(spark, t, deletes=dels,
-                             partition_field="g")   # auto-syncs
+
+    def build(t):
+        write_hudi_fixture(spark, n, t, partition_field="g")
+        write_hudi_delta_fixture(
+            spark, t, upserts=n.where(F.col("k") % 6 == 0)
+            .withColumn("v", F.lit(-1).cast("bigint")),
+            partition_field="g")
+        write_hudi_metadata_fixture(spark, t)
+        dels: dict[str, list[str]] = {}
+        for r in n.where(F.col("k") == 9).collect():
+            dels.setdefault(str(r["g"]), []).append(str(r["k"]))
+        write_hudi_delta_fixture(spark, t, deletes=dels,
+                                 partition_field="g")   # auto-syncs
+    t = fixture(sf_dir, "src_hudi_metadata_listing", build)
     return read_hudi(spark, t).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("k").cast("bigint").alias("key_sum"),
@@ -2075,9 +2058,6 @@ def src_hudi_metadata_hfile(spark, sf_dir):
     the log-only listing — O(partitions) driver records — but now for
     the base format real tables actually have, so the O(timeline)
     replay fallback is no longer the common case."""
-    import os
-    import tempfile
-
     from ..functions.hudi import (compact_hudi_metadata_fixture,
                                   read_hudi, write_hudi_delta_fixture,
                                   write_hudi_fixture,
@@ -2086,23 +2066,25 @@ def src_hudi_metadata_hfile(spark, sf_dir):
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"),
         (F.col("n_nationkey") * 10).cast("bigint").alias("v"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_hmh_"), "tbl")
-    write_hudi_fixture(spark, n, t, partition_field="g")
-    write_hudi_delta_fixture(
-        spark, t, upserts=n.where(F.col("k") % 6 == 0)
-        .withColumn("v", F.lit(-1).cast("bigint")),
-        partition_field="g")
-    write_hudi_metadata_fixture(spark, t)
-    # FAST_DIFF-encoded + Snappy-compressed blocks — the
-    # DATA_BLOCK_ENCODING/codec HBase-tuned deployments enable; the
-    # listing must decode them (no timeline-replay fallback taken)
-    compact_hudi_metadata_fixture(t, compression="snappy",
-                                  encoding="fast_diff")
-    dels: dict[str, list[str]] = {}
-    for r in n.where(F.col("k") == 9).collect():
-        dels.setdefault(str(r["g"]), []).append(str(r["k"]))
-    write_hudi_delta_fixture(spark, t, deletes=dels,
-                             partition_field="g")   # syncs onto HFile
+
+    def build(t):
+        write_hudi_fixture(spark, n, t, partition_field="g")
+        write_hudi_delta_fixture(
+            spark, t, upserts=n.where(F.col("k") % 6 == 0)
+            .withColumn("v", F.lit(-1).cast("bigint")),
+            partition_field="g")
+        write_hudi_metadata_fixture(spark, t)
+        # FAST_DIFF-encoded + Snappy-compressed blocks — the
+        # DATA_BLOCK_ENCODING/codec HBase-tuned deployments enable; the
+        # listing must decode them (no timeline-replay fallback taken)
+        compact_hudi_metadata_fixture(t, compression="snappy",
+                                      encoding="fast_diff")
+        dels: dict[str, list[str]] = {}
+        for r in n.where(F.col("k") == 9).collect():
+            dels.setdefault(str(r["g"]), []).append(str(r["k"]))
+        write_hudi_delta_fixture(spark, t, deletes=dels,
+                                 partition_field="g")   # syncs onto HFile
+    t = fixture(sf_dir, "src_hudi_metadata_hfile", build)
     return read_hudi(spark, t).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("k").cast("bigint").alias("key_sum"),
@@ -2129,24 +2111,23 @@ def src_hudi_log_block_formats(spark, sf_dir):
     9; latest-wins must resolve across all three block kinds in the
     same file slice.  Scale shape: identical to the Avro merge — the
     block kind only changes the in-task decode."""
-    import os
-    import tempfile
-
     from ..functions.hudi import read_hudi, write_hudi_delta_fixture, \
         write_hudi_fixture
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         (F.col("n_nationkey") * 10).cast("bigint").alias("v"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_hblk_"), "tbl")
-    write_hudi_fixture(spark, n, t)
-    write_hudi_delta_fixture(
-        spark, t, upserts=n.where(F.col("k") % 4 == 0)
-        .withColumn("v", F.lit(-1).cast("bigint")),
-        block_format="hfile/lz4/diff")   # encoded + compressed
-    write_hudi_delta_fixture(
-        spark, t, upserts=n.where(F.col("k") % 5 == 0)
-        .withColumn("v", F.lit(-2).cast("bigint")),
-        deletes=["9"], block_format="parquet")
+
+    def build(t):
+        write_hudi_fixture(spark, n, t)
+        write_hudi_delta_fixture(
+            spark, t, upserts=n.where(F.col("k") % 4 == 0)
+            .withColumn("v", F.lit(-1).cast("bigint")),
+            block_format="hfile/lz4/diff")   # encoded + compressed
+        write_hudi_delta_fixture(
+            spark, t, upserts=n.where(F.col("k") % 5 == 0)
+            .withColumn("v", F.lit(-2).cast("bigint")),
+            deletes=["9"], block_format="parquet")
+    t = fixture(sf_dir, "src_hudi_log_block_formats", build)
     return read_hudi(spark, t).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("k").cast("bigint").alias("key_sum"),
@@ -2172,25 +2153,24 @@ def src_hudi_log_only_table(spark, sf_dir):
     identical to the MOR merge — Arrow-batched log decode, one task
     per log file, one window per record key — with an EMPTY base
     branch (zero parquet scan)."""
-    import os
-    import tempfile
-
     from ..functions.hudi import read_hudi, write_hudi_delta_fixture
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"),
         (F.col("n_nationkey") * 10).cast("bigint").alias("v"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_lo_"), "tbl")
-    write_hudi_delta_fixture(spark, t, upserts=n,
-                             partition_field="g")   # bootstrap
-    dels: dict[str, list[str]] = {}
-    for r in n.where(F.col("k") == 3).collect():
-        dels.setdefault(str(r["g"]), []).append(str(r["k"]))
-    write_hudi_delta_fixture(
-        spark, t,
-        upserts=n.where(F.col("k") % 5 == 0)
-        .withColumn("v", (F.col("k") * 100).cast("bigint")),
-        deletes=dels, partition_field="g")
+
+    def build(t):
+        write_hudi_delta_fixture(spark, t, upserts=n,
+                                 partition_field="g")   # bootstrap
+        dels: dict[str, list[str]] = {}
+        for r in n.where(F.col("k") == 3).collect():
+            dels.setdefault(str(r["g"]), []).append(str(r["k"]))
+        write_hudi_delta_fixture(
+            spark, t,
+            upserts=n.where(F.col("k") % 5 == 0)
+            .withColumn("v", (F.col("k") * 100).cast("bigint")),
+            deletes=dels, partition_field="g")
+    t = fixture(sf_dir, "src_hudi_log_only_table", build)
     return read_hudi(spark, t).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("k").cast("bigint").alias("key_sum"),
@@ -2228,9 +2208,6 @@ def src_hudi_nested_temporal(spark, sf_dir):
     identical to the MOR merge — Arrow-batched log decode, one task
     per log file; the reviver walks only LOG rows (O(log), never the
     base scan)."""
-    import os
-    import tempfile
-
     from ..functions.hudi import (read_hudi, write_hudi_delta_fixture,
                                   write_hudi_fixture)
     n = load(spark, sf_dir, "nation").select(
@@ -2244,26 +2221,28 @@ def src_hudi_nested_temporal(spark, sf_dir):
             F.date_add(F.lit("2020-01-01").cast("date"),
                        (F.col("k") * 3).cast("int")).alias("d"),
             (F.col("k") * 2).cast("bigint").alias("v"))).alias("arr"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_hnt_"), "tbl")
-    write_hudi_fixture(spark, base, t, partition_field="g")
-    ups = n.where(F.col("k") % 5 == 0).select(
-        "k", "g",
-        F.array(
-            F.struct(
-                F.timestamp_seconds(F.lit(1700000000).cast("bigint")
-                                    + F.col("k") * 97).alias("ts"),
-                F.date_add(F.lit("2021-06-01").cast("date"),
-                           F.col("k").cast("int")).alias("d"),
-                (F.col("k") * 100).cast("bigint").alias("v")),
-            F.struct(
-                F.lit(None).cast("timestamp").alias("ts"),
-                F.lit(None).cast("date").alias("d"),
-                F.lit(7).cast("bigint").alias("v"))).alias("arr"))
-    dels: dict[str, list[str]] = {}
-    for r in n.where(F.col("k") == 3).collect():
-        dels.setdefault(str(r["g"]), []).append(str(r["k"]))
-    write_hudi_delta_fixture(spark, t, upserts=ups,
-                             deletes=dels, partition_field="g")
+
+    def build(t):
+        write_hudi_fixture(spark, base, t, partition_field="g")
+        ups = n.where(F.col("k") % 5 == 0).select(
+            "k", "g",
+            F.array(
+                F.struct(
+                    F.timestamp_seconds(F.lit(1700000000).cast("bigint")
+                                        + F.col("k") * 97).alias("ts"),
+                    F.date_add(F.lit("2021-06-01").cast("date"),
+                               F.col("k").cast("int")).alias("d"),
+                    (F.col("k") * 100).cast("bigint").alias("v")),
+                F.struct(
+                    F.lit(None).cast("timestamp").alias("ts"),
+                    F.lit(None).cast("date").alias("d"),
+                    F.lit(7).cast("bigint").alias("v"))).alias("arr"))
+        dels: dict[str, list[str]] = {}
+        for r in n.where(F.col("k") == 3).collect():
+            dels.setdefault(str(r["g"]), []).append(str(r["k"]))
+        write_hudi_delta_fixture(spark, t, upserts=ups,
+                                 deletes=dels, partition_field="g")
+    t = fixture(sf_dir, "src_hudi_nested_temporal", build)
     merged = read_hudi(spark, t)
     return merged.select(
         F.col("k"),
@@ -2302,27 +2281,26 @@ def src_delta_type_widening(spark, sf_dir):
     on a non-widenable mismatch), so no footer job, no per-file
     plan arms, no Python in the row path.  Scale shape: identical
     to a plain delta scan; widening costs nothing at 100 TB."""
-    import os
-    import tempfile
-
     from ..functions.delta import (read_delta, widen_delta_fixture,
                                    write_delta_fixture)
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("int").alias("k"),
         F.col("n_name").alias("nm"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_dtw_"), "tbl")
-    narrow = n.where(F.col("k") < 20).select(
-        F.col("k").alias("a"),
-        F.struct((F.col("k") * 2).cast("int").alias("x"),
-                 F.col("nm").alias("y")).alias("s"))
-    write_delta_fixture(spark, narrow, t)
-    widen_delta_fixture(t, {"a": "long", "s.x": "long"})
     big = F.lit(8589934592).cast("long")        # 2^33: beyond int
-    wide = n.where(F.col("k") >= 20).select(
-        (F.col("k") + big).alias("a"),
-        F.struct((F.col("k") * 2 + big).alias("x"),
-                 F.col("nm").alias("y")).alias("s"))
-    write_delta_fixture(spark, wide, t, mode="append")
+
+    def build(t):
+        narrow = n.where(F.col("k") < 20).select(
+            F.col("k").alias("a"),
+            F.struct((F.col("k") * 2).cast("int").alias("x"),
+                     F.col("nm").alias("y")).alias("s"))
+        write_delta_fixture(spark, narrow, t)
+        widen_delta_fixture(t, {"a": "long", "s.x": "long"})
+        wide = n.where(F.col("k") >= 20).select(
+            (F.col("k") + big).alias("a"),
+            F.struct((F.col("k") * 2 + big).alias("x"),
+                     F.col("nm").alias("y")).alias("s"))
+        write_delta_fixture(spark, wide, t, mode="append")
+    t = fixture(sf_dir, "src_delta_type_widening", build)
     return read_delta(spark, t).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("a").cast("bigint").alias("a_sum"),
@@ -2350,9 +2328,6 @@ def src_delta_variant_read(spark, sf_dir):
     oracle recomputes from the source columns.  Scale shape:
     identical to a plain delta scan — variant is a binary column
     pair under the hood, and extraction is whole-stage-codegen."""
-    import os
-    import tempfile
-
     from ..functions.delta import read_delta, write_delta_fixture
     n = load(spark, sf_dir, "nation")
     df = n.selectExpr(
@@ -2360,8 +2335,10 @@ def src_delta_variant_read(spark, sf_dir):
         "parse_json(concat('{\"k\":', n_nationkey, "
         "',\"r\":', n_regionkey, "
         "',\"name\":\"', n_name, '\"}')) as v")
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_dvr_"), "tbl")
-    write_delta_fixture(spark, df, t)
+
+    def build(t):
+        write_delta_fixture(spark, df, t)
+    t = fixture(sf_dir, "src_delta_variant_read", build)
     return read_delta(spark, t).selectExpr(
         "variant_get(v, '$.k', 'long') as vk",
         "variant_get(v, '$.r', 'long') as vr",
@@ -2394,9 +2371,6 @@ def src_iceberg_avro_nested_evolution(spark, sf_dir):
     Scale shape: planning is O(files) header parses; the remap is
     whole-stage-codegen expression work, no Python in the row
     path beyond the Avro block decode itself."""
-    import os
-    import tempfile
-
     from ..functions.iceberg import (evolve_iceberg_schema_fixture,
                                      read_iceberg,
                                      write_iceberg_fixture)
@@ -2412,14 +2386,15 @@ def src_iceberg_avro_nested_evolution(spark, sf_dir):
             F.array(F.struct((F.col("k") + 5).alias(a)))
             .alias("ar"))
 
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_ian_"), "tbl")
-    write_iceberg_fixture(spark, mk(n.where(F.col("k") < 12), "a"),
-                          t, file_format="avro")
-    evolve_iceberg_schema_fixture(
-        t, renames={"st.a": "alpha", "ar.element.a": "alpha"})
-    write_iceberg_fixture(spark,
-                          mk(n.where(F.col("k") >= 12), "alpha"),
-                          t, file_format="avro")
+    def build(t):
+        write_iceberg_fixture(spark, mk(n.where(F.col("k") < 12), "a"),
+                              t, file_format="avro")
+        evolve_iceberg_schema_fixture(
+            t, renames={"st.a": "alpha", "ar.element.a": "alpha"})
+        write_iceberg_fixture(spark,
+                              mk(n.where(F.col("k") >= 12), "alpha"),
+                              t, file_format="avro")
+    t = fixture(sf_dir, "src_iceberg_avro_nested_evolution", build)
     return read_iceberg(spark, t).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("st")["alpha"]).cast("bigint").alias("alpha_sum"),
@@ -2452,9 +2427,6 @@ def src_hudi_decimal_payloads(spark, sf_dir):
     upserts every ``k % 6 == 0`` row's prices and deletes key 3.
     Scale shape: identical to the MOR merge — the decimal codec is
     O(log rows), base rows never leave the parquet scan."""
-    import os
-    import tempfile
-
     from ..functions.hudi import (read_hudi, write_hudi_delta_fixture,
                                   write_hudi_fixture)
     n = load(spark, sf_dir, "nation").select(
@@ -2469,19 +2441,21 @@ def src_hudi_decimal_payloads(spark, sf_dir):
             (F.col("k").cast("decimal(12,4)")
              + F.lit("0.0001").cast("decimal(12,4)"))
             .cast("decimal(12,4)").alias("amt"))).alias("nest"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_hdp_"), "tbl")
-    write_hudi_fixture(spark, base, t, partition_field="g")
-    ups = base.where(F.col("k") % 6 == 0).select(
-        "k", "g",
-        F.lit("99.50").cast("decimal(10,2)").alias("price"),
-        F.array(F.struct(
-            F.lit("7.5").cast("decimal(12,4)").alias("amt")))
-        .alias("nest"))
-    dels: dict[str, list[str]] = {}
-    for r in n.where(F.col("k") == 3).collect():
-        dels.setdefault(str(r["g"]), []).append(str(r["k"]))
-    write_hudi_delta_fixture(spark, t, upserts=ups, deletes=dels,
-                             partition_field="g")
+
+    def build(t):
+        write_hudi_fixture(spark, base, t, partition_field="g")
+        ups = base.where(F.col("k") % 6 == 0).select(
+            "k", "g",
+            F.lit("99.50").cast("decimal(10,2)").alias("price"),
+            F.array(F.struct(
+                F.lit("7.5").cast("decimal(12,4)").alias("amt")))
+            .alias("nest"))
+        dels: dict[str, list[str]] = {}
+        for r in n.where(F.col("k") == 3).collect():
+            dels.setdefault(str(r["g"]), []).append(str(r["k"]))
+        write_hudi_delta_fixture(spark, t, upserts=ups, deletes=dels,
+                                 partition_field="g")
+    t = fixture(sf_dir, "src_hudi_decimal_payloads", build)
     return read_hudi(spark, t).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("price").cast("decimal(20,2)").alias("price_sum"),
@@ -2514,9 +2488,6 @@ def src_iceberg_v3_defaults(spark, sf_dir):
     identical to the evolved reader — the default is a literal column
     expression on the pre-add layout group's scan, zero per-row
     Python, zero extra jobs."""
-    import os
-    import tempfile
-
     from ..functions.iceberg import (evolve_iceberg_schema_fixture,
                                      read_iceberg,
                                      set_iceberg_format_version_fixture,
@@ -2524,24 +2495,26 @@ def src_iceberg_v3_defaults(spark, sf_dir):
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_name").alias("name"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_iv3d_"), "tbl")
-    write_iceberg_fixture(spark, n.where(F.col("k") < 15), t,
-                          order_by=("k",))
-    set_iceberg_format_version_fixture(t, 3)
-    evolve_iceberg_schema_fixture(t, add_columns=[
-        ("bonus", "long", 7),
-        ("tag", "string", "x"),
-        ("score", "decimal(10, 2)", "1.50"),
-        ("since", "date", "2024-01-01")])
-    write_iceberg_fixture(
-        spark,
-        n.where(F.col("k") >= 15).select(
-            "k", "name",
-            (F.col("k") * 2).alias("bonus"),
-            F.lit("y").alias("tag"),
-            F.col("k").cast("decimal(10,2)").alias("score"),
-            F.lit("1995-01-01").cast("date").alias("since")),
-        t, order_by=("k",))
+
+    def build(t):
+        write_iceberg_fixture(spark, n.where(F.col("k") < 15), t,
+                              order_by=("k",))
+        set_iceberg_format_version_fixture(t, 3)
+        evolve_iceberg_schema_fixture(t, add_columns=[
+            ("bonus", "long", 7),
+            ("tag", "string", "x"),
+            ("score", "decimal(10, 2)", "1.50"),
+            ("since", "date", "2024-01-01")])
+        write_iceberg_fixture(
+            spark,
+            n.where(F.col("k") >= 15).select(
+                "k", "name",
+                (F.col("k") * 2).alias("bonus"),
+                F.lit("y").alias("tag"),
+                F.col("k").cast("decimal(10,2)").alias("score"),
+                F.lit("1995-01-01").cast("date").alias("since")),
+            t, order_by=("k",))
+    t = fixture(sf_dir, "src_iceberg_v3_defaults", build)
     return read_iceberg(spark, t).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("bonus").cast("bigint").alias("bonus_sum"),
@@ -2576,35 +2549,35 @@ def src_iceberg_v3_dv(spark, sf_dir):
     ``n_before`` time-travels to the pre-DV snapshot.  Scale shape:
     at 100 TB a DV-heavy table reads with the same single-scan plan
     as v2 position deletes; only blob decode fans out."""
-    import os
-    import tempfile
-
     from ..functions.iceberg import (
-        read_iceberg, set_iceberg_format_version_fixture,
-        write_iceberg_fixture)
+        list_iceberg_snapshots, read_iceberg,
+        set_iceberg_format_version_fixture, write_iceberg_fixture)
     o = load(spark, sf_dir, "orders").where(
         F.col("o_orderkey") < 2000).select(
         F.col("o_orderkey").cast("bigint").alias("k"),
         (F.col("o_orderkey") % 3).cast("bigint").alias("g"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_iv3v_"), "tbl")
-    s1 = write_iceberg_fixture(spark, o, t, partition_by=("g",),
-                               order_by=("k",))
-    set_iceberg_format_version_fixture(t, 3)
-    # one data file per g in str-sorted key order: snap{s1}-0 = g 0,
-    # snap{s1}-1 = g 1, snap{s1}-2 = g 2
-    write_iceberg_fixture(spark, None, t, partition_by=("g",),
-                          delete_vectors={
-                              f"data/snap{s1}-0.parquet": [0, 1, 2],
-                              f"data/snap{s1}-1.parquet": [0, 1, 2],
-                              f"data/snap{s1}-2.parquet": [0, 1, 2]})
-    write_iceberg_fixture(spark, None, t, partition_by=("g",),
-                          delete_vectors={
-                              f"data/snap{s1}-0.parquet":
-                                  [0, 1, 2, 3, 4, 5]})
+
+    def build(t):
+        s1 = write_iceberg_fixture(spark, o, t, partition_by=("g",),
+                                   order_by=("k",))
+        set_iceberg_format_version_fixture(t, 3)
+        # one data file per g in str-sorted key order: snap{s1}-0 = g 0,
+        # snap{s1}-1 = g 1, snap{s1}-2 = g 2
+        write_iceberg_fixture(spark, None, t, partition_by=("g",),
+                              delete_vectors={
+                                  f"data/snap{s1}-0.parquet": [0, 1, 2],
+                                  f"data/snap{s1}-1.parquet": [0, 1, 2],
+                                  f"data/snap{s1}-2.parquet": [0, 1, 2]})
+        write_iceberg_fixture(spark, None, t, partition_by=("g",),
+                              delete_vectors={
+                                  f"data/snap{s1}-0.parquet":
+                                      [0, 1, 2, 3, 4, 5]})
+    t = fixture(sf_dir, "src_iceberg_v3_dv", build)
     cur = read_iceberg(spark, t).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("k").cast("bigint").alias("key_sum"))
-    before = read_iceberg(spark, t, snapshot_id=s1).agg(
+    before = read_iceberg(spark, t,
+                          snapshot_id=list_iceberg_snapshots(t)[0]).agg(
         F.count(F.lit(1)).alias("n_before"))
     return before.crossJoin(cur).select("n_before", "n", "key_sum")
 
@@ -2629,9 +2602,6 @@ def src_delta_variant_idmap(spark, sf_dir):
     commits exercise two distinct physical layouts.  Scale shape:
     the fallback is the same ONE distributed footer job — a
     O(footer-bytes) task-side walk per file, never a driver open."""
-    import os
-    import tempfile
-
     from ..functions.delta import read_delta, write_delta_fixture
     n = load(spark, sf_dir, "nation")
     df = n.selectExpr(
@@ -2639,11 +2609,13 @@ def src_delta_variant_idmap(spark, sf_dir):
         "parse_json(concat('{\"k\":', n_nationkey, "
         "',\"r\":', n_regionkey, "
         "',\"name\":\"', n_name, '\"}')) as v")
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_dvi_"), "tbl")
-    write_delta_fixture(spark, df.where("k < 15"), t,
-                        column_mapping="id")
-    write_delta_fixture(spark, df.where("k >= 15"), t,
-                        mode="append", column_mapping="id")
+
+    def build(t):
+        write_delta_fixture(spark, df.where("k < 15"), t,
+                            column_mapping="id")
+        write_delta_fixture(spark, df.where("k >= 15"), t,
+                            mode="append", column_mapping="id")
+    t = fixture(sf_dir, "src_delta_variant_idmap", build)
     return read_delta(spark, t).selectExpr(
         "variant_get(v, '$.k', 'long') as vk",
         "variant_get(v, '$.r', 'long') as vr",
@@ -2687,23 +2659,22 @@ def src_iceberg_v3_row_lineage(spark, sf_dir):
     the id attach rides the existing broadcast file->metadata map;
     _row_id is codegen arithmetic on _metadata.row_index, zero extra
     jobs."""
-    import os
-    import tempfile
-
     from ..functions.iceberg import (
         read_iceberg, set_iceberg_format_version_fixture,
         write_iceberg_fixture)
     o = load(spark, sf_dir, "orders").where(
         F.col("o_orderkey") < 1000).select(
         F.col("o_orderkey").cast("bigint").alias("k"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_iv3l_"), "tbl")
-    write_iceberg_fixture(spark, o.where(F.col("k") % 2 == 0), t,
-                          order_by=("k",))
-    set_iceberg_format_version_fixture(t, 3)
-    s2 = write_iceberg_fixture(spark, o.where(F.col("k") % 2 == 1),
-                               t, order_by=("k",))
-    write_iceberg_fixture(spark, None, t, delete_vectors={
-        f"data/snap{s2}-0.parquet": [0, 1]})
+
+    def build(t):
+        write_iceberg_fixture(spark, o.where(F.col("k") % 2 == 0), t,
+                              order_by=("k",))
+        set_iceberg_format_version_fixture(t, 3)
+        s2 = write_iceberg_fixture(spark, o.where(F.col("k") % 2 == 1),
+                                   t, order_by=("k",))
+        write_iceberg_fixture(spark, None, t, delete_vectors={
+            f"data/snap{s2}-0.parquet": [0, 1]})
+    t = fixture(sf_dir, "src_iceberg_v3_row_lineage", build)
     return read_iceberg(spark, t, row_lineage=True).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("_row_id").cast("bigint").alias("rid_sum"),
@@ -2739,21 +2710,20 @@ def src_iceberg_metadata_tables(spark, sf_dir):
     the per-partition maximum.  Scale shape: driver O(manifest
     entries) — identical to planning — with ``files`` materialized
     distributed."""
-    import os
-    import tempfile
-
     from ..functions.iceberg import (iceberg_metadata_table,
                                      tag_iceberg_snapshot_fixture,
                                      write_iceberg_fixture)
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_imt_"), "tbl")
-    write_iceberg_fixture(spark, n.where(F.col("k") < 15), t,
-                          partition_by=("g",))
-    write_iceberg_fixture(spark, n.where(F.col("k") >= 15), t,
-                          partition_by=("g",), fast_append=True)
-    tag_iceberg_snapshot_fixture(t, "audit")
+
+    def build(t):
+        write_iceberg_fixture(spark, n.where(F.col("k") < 15), t,
+                              partition_by=("g",))
+        write_iceberg_fixture(spark, n.where(F.col("k") >= 15), t,
+                              partition_by=("g",), fast_append=True)
+        tag_iceberg_snapshot_fixture(t, "audit")
+    t = fixture(sf_dir, "src_iceberg_metadata_tables", build)
 
     def one(kind, agg):
         return iceberg_metadata_table(spark, t, kind).agg(agg)
@@ -2800,22 +2770,21 @@ def src_delta_history(spark, sf_dir):
     by the oracle from the source rows (one file per distinct region
     per write, one remove by construction).  Timestamps are asserted
     monotonic in pytest (wall-clock, not oracle-stable)."""
-    import os
-    import tempfile
-
     from ..functions.delta import (delta_history, replay_delta_log,
                                    remove_delta_files_fixture,
                                    write_delta_fixture)
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_dh_"), "tbl")
-    write_delta_fixture(spark, n.where(F.col("k") < 15), t,
-                        partition_by=("g",))
-    write_delta_fixture(spark, n.where(F.col("k") >= 15), t,
-                        mode="append", partition_by=("g",))
-    first = sorted(r[0] for r in replay_delta_log(t)[2])[0]
-    remove_delta_files_fixture(t, lambda rel: rel == first)
+
+    def build(t):
+        write_delta_fixture(spark, n.where(F.col("k") < 15), t,
+                            partition_by=("g",))
+        write_delta_fixture(spark, n.where(F.col("k") >= 15), t,
+                            mode="append", partition_by=("g",))
+        first = sorted(r[0] for r in replay_delta_log(t)[2])[0]
+        remove_delta_files_fixture(t, lambda rel: rel == first)
+    t = fixture(sf_dir, "src_delta_history", build)
     h = delta_history(spark, t)
     return h.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_commits"),
@@ -2839,26 +2808,25 @@ def src_hudi_timeline(spark, sf_dir):
     (one CoW commit, two deltacommits), cross-checked against the
     table's CURRENT row count so the timeline provably matches the
     data it produced."""
-    import os
-    import tempfile
-
     from ..functions.hudi import (hudi_timeline_table, read_hudi,
                                   write_hudi_delta_fixture,
                                   write_hudi_fixture)
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_ht_"), "tbl")
-    write_hudi_fixture(spark, n, t, partition_field="g")
-    ups = n.where(F.col("k") % 7 == 0).select(
-        "k", "g")
-    write_hudi_delta_fixture(spark, t, upserts=ups,
-                             partition_field="g")
-    dels: dict[str, list[str]] = {}
-    for r in n.where(F.col("k") == 3).collect():
-        dels.setdefault(str(r["g"]), []).append(str(r["k"]))
-    write_hudi_delta_fixture(spark, t, deletes=dels,
-                             partition_field="g")
+
+    def build(t):
+        write_hudi_fixture(spark, n, t, partition_field="g")
+        ups = n.where(F.col("k") % 7 == 0).select(
+            "k", "g")
+        write_hudi_delta_fixture(spark, t, upserts=ups,
+                                 partition_field="g")
+        dels: dict[str, list[str]] = {}
+        for r in n.where(F.col("k") == 3).collect():
+            dels.setdefault(str(r["g"]), []).append(str(r["k"]))
+        write_hudi_delta_fixture(spark, t, deletes=dels,
+                                 partition_field="g")
+    t = fixture(sf_dir, "src_hudi_timeline", build)
     tl = hudi_timeline_table(spark, t)
     agg = tl.agg(
         F.count(F.when(F.col("action") == "commit", 1))
@@ -2898,9 +2866,6 @@ def src_iceberg_changelog(spark, sf_dir):
     snapshot scans only its CHANGED files — O(changed files), never
     a table scan; DV deltas (new minus predecessor) expand
     executor-side."""
-    import os
-    import tempfile
-
     from ..functions.iceberg import (
         read_iceberg_changes, set_iceberg_format_version_fixture,
         write_iceberg_fixture)
@@ -2908,17 +2873,19 @@ def src_iceberg_changelog(spark, sf_dir):
         F.col("o_orderkey") < 1000).select(
         F.col("o_orderkey").cast("bigint").alias("k"),
         (F.col("o_orderkey") % 2).cast("bigint").alias("g"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_icl_"), "tbl")
-    s1 = write_iceberg_fixture(spark, o.where(F.col("g") == 0), t,
-                               partition_by=("g",), order_by=("k",))
-    write_iceberg_fixture(spark, o.where(F.col("g") == 1), t,
-                          partition_by=("g",), order_by=("k",))
-    write_iceberg_fixture(spark, None, t, partition_by=("g",),
-                          delete_partition={"g": 1})
-    set_iceberg_format_version_fixture(t, 3)
-    write_iceberg_fixture(spark, None, t, partition_by=("g",),
-                          delete_vectors={
-                              f"data/snap{s1}-0.parquet": [0, 1]})
+
+    def build(t):
+        s1 = write_iceberg_fixture(spark, o.where(F.col("g") == 0), t,
+                                   partition_by=("g",), order_by=("k",))
+        write_iceberg_fixture(spark, o.where(F.col("g") == 1), t,
+                              partition_by=("g",), order_by=("k",))
+        write_iceberg_fixture(spark, None, t, partition_by=("g",),
+                              delete_partition={"g": 1})
+        set_iceberg_format_version_fixture(t, 3)
+        write_iceberg_fixture(spark, None, t, partition_by=("g",),
+                              delete_vectors={
+                                  f"data/snap{s1}-0.parquet": [0, 1]})
+    t = fixture(sf_dir, "src_iceberg_changelog", build)
     ch = read_iceberg_changes(spark, t)
     return ch.agg(
         F.count(F.when(F.col("_change_type") == "insert", 1))
@@ -2948,17 +2915,16 @@ def src_delta_detail(spark, sf_dir):
     LOGICAL partition columns under name-mode column mapping, the
     mapping mode, and commit count — cross-checked against the
     table's current row count."""
-    import os
-    import tempfile
-
     from ..functions.delta import (delta_detail, read_delta,
                                    write_delta_fixture)
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_dd_"), "tbl")
-    write_delta_fixture(spark, n, t, partition_by=("g",),
-                        column_mapping="name")
+
+    def build(t):
+        write_delta_fixture(spark, n, t, partition_by=("g",),
+                            column_mapping="name")
+    t = fixture(sf_dir, "src_delta_detail", build)
     det = delta_detail(spark, t).select(
         "format",
         F.col("num_files"),
@@ -3017,19 +2983,21 @@ def src_iceberg_changelog_deletes(spark, sf_dir):
     o = load(spark, sf_dir, "orders").where(
         F.col("o_orderkey") < 400).select(
         F.col("o_orderkey").cast("bigint").alias("k"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_icd_"), "tbl")
-    s1 = write_iceberg_fixture(spark, o, t, order_by=("k",))
-    fp = f"data/snap{s1}-0.parquet"
-    write_iceberg_fixture(spark, None, t,
-                          delete_positions={fp: list(range(10))})
-    write_iceberg_fixture(spark, None, t,
-                          delete_positions={fp: list(range(5, 15))})
-    kmin, kmax = o.agg(F.min("k"), F.max("k")).first()
-    write_iceberg_fixture(spark, None, t,
-                          delete_equality=(("k",),
-                                           [(int(kmin),),
-                                            (int(kmax),)]))
-    write_iceberg_fixture(spark, None, t, delete_partition={})
+
+    def build(t):
+        s1 = write_iceberg_fixture(spark, o, t, order_by=("k",))
+        fp = f"data/snap{s1}-0.parquet"
+        write_iceberg_fixture(spark, None, t,
+                              delete_positions={fp: list(range(10))})
+        write_iceberg_fixture(spark, None, t,
+                              delete_positions={fp: list(range(5, 15))})
+        kmin, kmax = o.agg(F.min("k"), F.max("k")).first()
+        write_iceberg_fixture(spark, None, t,
+                              delete_equality=(("k",),
+                                               [(int(kmin),),
+                                                (int(kmax),)]))
+        write_iceberg_fixture(spark, None, t, delete_partition={})
+    t = fixture(sf_dir, "src_iceberg_changelog_deletes", build)
     ch = read_iceberg_changes(spark, t)
     return (ch.groupBy(F.col("_change_ordinal").alias("ordinal"),
                        F.col("_change_type").alias("ctype"))
@@ -3070,12 +3038,13 @@ def src_iceberg_v3_variant(spark, sf_dir):
         "parse_json(concat('{\"k\":', n_nationkey, "
         "',\"r\":', n_regionkey, "
         "',\"name\":\"', n_name, '\"}')) as v")
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_ivar_"),
-                     "tbl")
-    s1 = write_iceberg_fixture(spark, df, t, order_by=("k",))
-    set_iceberg_format_version_fixture(t, 3)
-    write_iceberg_fixture(spark, None, t, delete_positions={
-        f"data/snap{s1}-0.parquet": [0]})
+
+    def build(t):
+        s1 = write_iceberg_fixture(spark, df, t, order_by=("k",))
+        set_iceberg_format_version_fixture(t, 3)
+        write_iceberg_fixture(spark, None, t, delete_positions={
+            f"data/snap{s1}-0.parquet": [0]})
+    t = fixture(sf_dir, "src_iceberg_v3_variant", build)
     return read_iceberg(spark, t).selectExpr(
         "variant_get(v, '$.k', 'long') as vk",
         "variant_get(v, '$.r', 'long') as vr",
@@ -3119,16 +3088,18 @@ def src_iceberg_lineage_mixed(spark, sf_dir):
         write_iceberg_fixture)
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_lin_"), "tbl")
-    write_iceberg_fixture(spark, n.where(F.col("k") < 10), t,
-                          order_by=("k",))
-    set_iceberg_format_version_fixture(t, 3)
-    write_iceberg_fixture(spark,
-                          n.where((F.col("k") >= 10)
-                                  & (F.col("k") < 17)),
-                          t, order_by=("k",), file_format="avro")
-    write_iceberg_fixture(spark, n.where(F.col("k") >= 17), t,
-                          order_by=("k",), file_format="orc")
+
+    def build(t):
+        write_iceberg_fixture(spark, n.where(F.col("k") < 10), t,
+                              order_by=("k",))
+        set_iceberg_format_version_fixture(t, 3)
+        write_iceberg_fixture(spark,
+                              n.where((F.col("k") >= 10)
+                                      & (F.col("k") < 17)),
+                              t, order_by=("k",), file_format="avro")
+        write_iceberg_fixture(spark, n.where(F.col("k") >= 17), t,
+                              order_by=("k",), file_format="orc")
+    t = fixture(sf_dir, "src_iceberg_lineage_mixed", build)
     out = read_iceberg(spark, t, row_lineage=True)
     return out.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -3166,10 +3137,12 @@ def src_hudi_colstats_prune(spark, sf_dir):
         F.col("o_orderpriority"),
         F.floor(F.col("o_orderkey") / 200).cast("string")
         .alias("g"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_hcs_"), "tbl")
-    write_hudi_fixture(spark, o.orderBy("o_orderkey"), t,
-                       partition_field="g")
-    write_hudi_colstats_fixture(spark, t, ["o_orderkey"])
+
+    def build(t):
+        write_hudi_fixture(spark, o.orderBy("o_orderkey"), t,
+                           partition_field="g")
+        write_hudi_colstats_fixture(spark, t, ["o_orderkey"])
+    t = fixture(sf_dir, "src_hudi_colstats_prune", build)
     out = read_hudi(spark, t, filters={"o_orderkey": 150})
     n_files = len(out.inputFiles())
     if n_files != 1:
@@ -3212,12 +3185,14 @@ def src_delta_row_tracking(spark, sf_dir):
                                    read_delta, write_delta_fixture)
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_drt_"), "tbl")
-    write_delta_fixture(spark, n.where(F.col("k") < 10), t,
-                        order_by=("k",), row_tracking=True)
-    write_delta_fixture(spark, n.where(F.col("k") >= 10), t,
-                        mode="append", order_by=("k",))
-    materialize_delta_rowids_fixture(t)
+
+    def build(t):
+        write_delta_fixture(spark, n.where(F.col("k") < 10), t,
+                            order_by=("k",), row_tracking=True)
+        write_delta_fixture(spark, n.where(F.col("k") >= 10), t,
+                            mode="append", order_by=("k",))
+        materialize_delta_rowids_fixture(t)
+    t = fixture(sf_dir, "src_delta_row_tracking", build)
     out = read_delta(spark, t, row_tracking=True)
     return out.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -3265,19 +3240,21 @@ def src_iceberg_changelog_view(spark, sf_dir):
         F.col("o_orderkey") < 300).select(
         F.col("o_orderkey").cast("bigint").alias("k"),
         F.col("o_orderpriority").alias("p"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_icv_"), "tbl")
-    write_iceberg_fixture(spark, o, t, order_by=("k",))
-    low = o.where(F.col("k") < 50)
-    upd = low.select("k", F.concat(F.lit("X"), F.col("k"))
-                     .alias("p"))
-    keys = [(int(r["k"]),) for r in low.select("k").collect()]
-    write_iceberg_fixture(spark, upd, t, order_by=("k",),
-                          delete_equality=(("k",), keys))
-    live = (o.where(F.col("k") >= 50).unionByName(upd)
-            .unionByName(spark.createDataFrame(
-                [(9999, "NEW")], "k bigint, p string")))
-    write_iceberg_fixture(spark, live, t, order_by=("k",),
-                          delete_partition={})
+
+    def build(t):
+        write_iceberg_fixture(spark, o, t, order_by=("k",))
+        low = o.where(F.col("k") < 50)
+        upd = low.select("k", F.concat(F.lit("X"), F.col("k"))
+                         .alias("p"))
+        keys = [(int(r["k"]),) for r in low.select("k").collect()]
+        write_iceberg_fixture(spark, upd, t, order_by=("k",),
+                              delete_equality=(("k",), keys))
+        live = (o.where(F.col("k") >= 50).unionByName(upd)
+                .unionByName(spark.createDataFrame(
+                    [(9999, "NEW")], "k bigint, p string")))
+        write_iceberg_fixture(spark, live, t, order_by=("k",),
+                              delete_partition={})
+    t = fixture(sf_dir, "src_iceberg_changelog_view", build)
     v = iceberg_changelog_view(spark, t, identifier_columns=["k"])
     return (v.groupBy(F.col("_change_ordinal").alias("ordinal"),
                       F.col("_change_type").alias("ctype"))
@@ -3311,10 +3288,12 @@ def src_hudi_bloom_prune(spark, sf_dir):
         F.col("o_orderkey").cast("bigint").alias("o_orderkey"),
         F.col("o_orderpriority"),
         (F.col("o_orderkey") % 8).cast("string").alias("g"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_hbl_"), "tbl")
-    write_hudi_fixture(spark, o.orderBy("o_orderkey"), t,
-                       partition_field="g")
-    write_hudi_bloom_fixture(spark, t, "o_orderkey")
+
+    def build(t):
+        write_hudi_fixture(spark, o.orderBy("o_orderkey"), t,
+                           partition_field="g")
+        write_hudi_bloom_fixture(spark, t, "o_orderkey")
+    t = fixture(sf_dir, "src_hudi_bloom_prune", build)
     out = read_hudi(spark, t, filters={"o_orderkey": 151})
     n_files = len(out.inputFiles())
     if n_files != 1:
@@ -3358,16 +3337,18 @@ def src_iceberg_maintenance(spark, sf_dir):
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         (F.col("n_nationkey") % 2).cast("bigint").alias("g"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_mnt_"), "tbl")
-    write_iceberg_fixture(spark, n, t, partition_by=("g",),
-                          order_by=("k",))
-    write_iceberg_fixture(spark, n.selectExpr("k+100 as k", "g"),
-                          t, partition_by=("g",), order_by=("k",))
-    write_iceberg_fixture(spark, None, t, partition_by=("g",),
-                          delete_partition={"g": 1})
-    with open(os.path.join(t, "data", "orphan-x.parquet"),
-              "wb") as fh:
-        fh.write(b"x" * 10)
+
+    def build(t):
+        write_iceberg_fixture(spark, n, t, partition_by=("g",),
+                              order_by=("k",))
+        write_iceberg_fixture(spark, n.selectExpr("k+100 as k", "g"),
+                              t, partition_by=("g",), order_by=("k",))
+        write_iceberg_fixture(spark, None, t, partition_by=("g",),
+                              delete_partition={"g": 1})
+        with open(os.path.join(t, "data", "orphan-x.parquet"),
+                  "wb") as fh:
+            fh.write(b"x" * 10)
+    t = fixture(sf_dir, "src_iceberg_maintenance", build)
     orph = iceberg_orphan_files(spark, t).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orphans"),
         F.sum("size_in_bytes").cast("bigint").alias("orphan_bytes"))
@@ -3408,14 +3389,15 @@ def src_lakehouse_vacuum_plans(spark, sf_dir):
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         (F.col("n_nationkey") % 2).cast("bigint").alias("g"))
-    td = os.path.join(tempfile.mkdtemp(prefix="padawan_vac_"),
-                      "tbl")
-    D.write_delta_fixture(spark, n, td, partition_by=("g",))
-    D.remove_delta_files_fixture(
-        td, lambda rel: rel.startswith("g=1"))
-    with open(os.path.join(td, "junk-aborted.parquet"),
-              "wb") as fh:
-        fh.write(b"j" * 7)
+
+    def build_delta(td):
+        D.write_delta_fixture(spark, n, td, partition_by=("g",))
+        D.remove_delta_files_fixture(
+            td, lambda rel: rel.startswith("g=1"))
+        with open(os.path.join(td, "junk-aborted.parquet"),
+                  "wb") as fh:
+            fh.write(b"j" * 7)
+    td = fixture(sf_dir, "src_lakehouse_vacuum_plans_delta", build_delta)
     dplan = D.delta_vacuum_plan(spark, td).agg(
         F.count(F.when(F.col("reason") == "tombstoned", 1))
         .cast("bigint").alias("d_tombstoned"),
@@ -3424,16 +3406,17 @@ def src_lakehouse_vacuum_plans(spark, sf_dir):
     dyoung = D.delta_vacuum_plan(spark, td, retention_ms=10**18) \
         .agg(F.count(F.lit(1)).cast("bigint")
              .alias("d_retained_young"))
-    th = os.path.join(tempfile.mkdtemp(prefix="padawan_hcl_"),
-                      "tbl")
-    H.write_hudi_fixture(spark, n.where(F.col("g") == 0)
-                         .orderBy("k"), th)
-    fid = list(H.live_hudi_slices(th, use_metadata=False))[0]
-    H.write_hudi_delta_fixture(
-        spark, th, upserts=spark.createDataFrame(
-            [(0, 0)], "k bigint, g bigint"))
-    H.write_hudi_fixture(spark, n.where(F.col("g") == 0)
-                         .orderBy("k"), th, replace_file_ids=[fid])
+
+    def build_hudi(th):
+        H.write_hudi_fixture(spark, n.where(F.col("g") == 0)
+                             .orderBy("k"), th)
+        fid = list(H.live_hudi_slices(th, use_metadata=False))[0]
+        H.write_hudi_delta_fixture(
+            spark, th, upserts=spark.createDataFrame(
+                [(0, 0)], "k bigint, g bigint"))
+        H.write_hudi_fixture(spark, n.where(F.col("g") == 0)
+                             .orderBy("k"), th, replace_file_ids=[fid])
+    th = fixture(sf_dir, "src_lakehouse_vacuum_plans_hudi", build_hudi)
     hplan = H.hudi_clean_plan(spark, th).agg(
         F.count(F.when(F.col("kind") == "base", 1))
         .cast("bigint").alias("h_base"),

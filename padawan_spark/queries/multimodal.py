@@ -11,6 +11,8 @@ SQL oracle.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from ..functions.multimodal import (decode_image_pixels, encode_bmp_py,
@@ -18,7 +20,7 @@ from ..functions.multimodal import (decode_image_pixels, encode_bmp_py,
                                     encode_png_py, encode_wav_py,
                                     encode_y4m_py, extract_image_features,
                                     fake_decode_image, sniff_image_headers)
-from .registry import load, query
+from .registry import fixture, load, query
 
 
 @query("mm_binary_stats", oracle="""
@@ -140,18 +142,13 @@ _BF_PAYLOADS = {
     "stripes.bin": bytes(([0] * 16 + [255] * 16) * 8),
     "ramp.bin": bytes((i * 7) % 256 for i in range(512)),
 }
-_BF_DIR: list[str] = []   # memoized fixture dir (one per process)
 
 
-def _bf_fixture_dir() -> str:
-    if not _BF_DIR:
-        import tempfile
-        d = tempfile.mkdtemp(prefix="padawan_binaryfile_")
-        for name, payload in _BF_PAYLOADS.items():
-            with open(f"{d}/{name}", "wb") as fh:
-                fh.write(payload)
-        _BF_DIR.append(d)
-    return _BF_DIR[0]
+def _write_bf_payloads(d: str) -> None:
+    os.makedirs(d)
+    for name, payload in _BF_PAYLOADS.items():
+        with open(f"{d}/{name}", "wb") as fh:
+            fh.write(payload)
 
 
 def _bf_oracle() -> str:
@@ -173,7 +170,7 @@ def mm_binaryfile_ingest(spark, sf_dir):
     column in Arrow batches.  Fidelity check: md5 over the hex-encoded
     bytes, recomputed by the oracle from the same literals — the
     digest matches only if every byte survived the trip."""
-    d = _bf_fixture_dir()
+    d = fixture(sf_dir, "mm_binaryfile_ingest", _write_bf_payloads)
     df = spark.read.format("binaryFile").load(d)
     return df.select(
         F.element_at(F.split(F.col("path"), "/"), -1).alias("file_name"),

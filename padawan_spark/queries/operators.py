@@ -26,13 +26,12 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 from ..dataset import Dataset, concat, from_pandas, scan_parquet
 from ..ordering import lex_cmp
-from .registry import dsum, load, query, sql_dsum
+from .registry import dsum, fixture, load, query, scratch, sql_dsum
 
 _TS96 = dt.datetime(1996, 1, 1)
 _TS97 = dt.datetime(1997, 1, 1)
@@ -285,7 +284,7 @@ def op_write_roundtrip(spark, sf_dir):
                  load(spark, sf_dir, "orders")
                  .where(F.col("o_orderdate") >= F.lit("1998-01-01").cast("timestamp")),
                  index_columns=("o_orderdate",))
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_rt_"), "orders_98")
+    target = os.path.join(scratch("padawan_rt_"), "orders_98")
     back = ds.repartition(4000).write_parquet(target)
     assert back.known_sizes and back.known_bounds
     back.assert_disjoint()
@@ -390,6 +389,25 @@ def op_observe_metrics(spark, sf_dir):
         "n_rows bigint, n_large bigint, total double")
 
 
+def _nation_two_commits(spark, sf_dir) -> str:
+    """Nation keys < 10 as version 1 and the rest appended as version 2,
+    the two snapshots stamped 100 s apart: the input of the time-travel
+    and incremental-read queries."""
+    from .. import metadata as _meta
+
+    def build(target):
+        n = load(spark, sf_dir, "nation").select(
+            "n_nationkey", "n_regionkey", "n_name")
+        for part, append in ((n.where(F.col("n_nationkey") < 10), False),
+                             (n.where(F.col("n_nationkey") >= 10), True)):
+            (Dataset(spark, part, index_columns=("n_nationkey",))
+             .reindex(("n_nationkey",)).write_parquet(target, append=append))
+        vdir = _meta._versions_dir(target)
+        os.utime(os.path.join(vdir, "v1.json"), (1_700_000_000,) * 2)
+        os.utime(os.path.join(vdir, "v2.json"), (1_700_000_100,) * 2)
+    return fixture(sf_dir, "nation_two_commits", build)
+
+
 @query("op_time_travel", oracle="""
 SELECT n_regionkey, COUNT(*) AS n, CAST(MAX(n_nationkey) AS BIGINT) AS max_key
 FROM nation WHERE n_nationkey < 10 GROUP BY n_regionkey
@@ -403,17 +421,8 @@ def op_time_travel(spark, sf_dir):
     the source table.  At scale this is the reproducibility pin a
     training run stores: manifest snapshots are O(files) JSON, data is
     never copied."""
-    from ..dataset import Dataset, scan_parquet
-    n = load(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_regionkey", "n_name")
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_tt_"), "nation_tt")
-    (Dataset(spark, n.where(F.col("n_nationkey") < 10),
-             index_columns=("n_nationkey",)).reindex(("n_nationkey",))
-     .write_parquet(target))
-    (Dataset(spark, n.where(F.col("n_nationkey") >= 10),
-             index_columns=("n_nationkey",)).reindex(("n_nationkey",))
-     .write_parquet(target, append=True))
-    pinned = scan_parquet(spark, target, version=1)
+    pinned = scan_parquet(spark, _nation_two_commits(spark, sf_dir),
+                          version=1)
     return (pinned.df.groupBy("n_regionkey")
             .agg(F.count(F.lit(1)).alias("n"),
                  F.max("n_nationkey").cast("bigint").alias("max_key")))
@@ -433,18 +442,8 @@ def op_incremental_read(spark, sf_dir):
     slice.  At scale this is how snapshot-pinned pipelines chain:
     each stage records the version it consumed and reads the file
     delta next run — O(new data) cost per increment."""
-    from ..dataset import Dataset
     from .. import metadata as _meta
-    n = load(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_regionkey", "n_name")
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_cdf_"),
-                          "nation_cdf")
-    (Dataset(spark, n.where(F.col("n_nationkey") < 10),
-             index_columns=("n_nationkey",)).reindex(("n_nationkey",))
-     .write_parquet(target))
-    (Dataset(spark, n.where(F.col("n_nationkey") >= 10),
-             index_columns=("n_nationkey",)).reindex(("n_nationkey",))
-     .write_parquet(target, append=True))
+    target = _nation_two_commits(spark, sf_dir)
     v1 = _meta.load_manifest(target, version=1)
     v2 = _meta.load_manifest(target, version=2)
     new_files = [os.path.join(target, f)
@@ -465,8 +464,6 @@ WHERE o_orderdate >= TIMESTAMP '1997-01-01'
 GROUP BY o_orderstatus
 """
 
-_PRUNED_TABLE_DONE: dict[tuple, str] = {}
-
 # target file count for the fixture: padawan repartition() takes ROWS
 # PER PARTITION (reference semantics), so derive it from the row count
 # to get a scale-stable many-file table (~512 files at every SF)
@@ -474,29 +471,18 @@ _PRUNED_FILES_TARGET = 512
 
 
 def _ensure_pruned_table(spark, sf_dir) -> str:
-    """Materialize a ~512-file date-indexed manifest-table dataset for
-    ``sf_dir`` once per process (fingerprint-keyed, so testdata
-    regenerated in place invalidates) — the write is the one-time
-    investment; every pruned scan after it exercises only the
+    """A ~512-file date-indexed manifest-table dataset for ``sf_dir``,
+    written once per process as a :func:`fixture` — the write is the
+    one-time investment; every pruned scan after it exercises only the
     manifest-table planning path."""
-    p = os.path.join(sf_dir, "orders.parquet")
-    try:
-        st = os.stat(p)
-        key = (sf_dir, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = (sf_dir, None, None)
-    target = _PRUNED_TABLE_DONE.get(key)
-    if target is not None and os.path.isdir(target):
-        return target
-    src = (load(spark, sf_dir, "orders")
-           .select("o_orderkey", "o_custkey", "o_orderstatus",
-                   "o_orderdate"))
-    rpp = max(1, src.count() // _PRUNED_FILES_TARGET)
-    ds = Dataset(spark, src, index_columns=("o_orderdate",))
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_ps_"), "orders_mt")
-    ds.repartition(rpp).write_parquet(target, manifest_table=True)
-    _PRUNED_TABLE_DONE[key] = target
-    return target
+    def build(target):
+        src = (load(spark, sf_dir, "orders")
+               .select("o_orderkey", "o_custkey", "o_orderstatus",
+                       "o_orderdate"))
+        rpp = max(1, src.count() // _PRUNED_FILES_TARGET)
+        (Dataset(spark, src, index_columns=("o_orderdate",))
+         .repartition(rpp).write_parquet(target, manifest_table=True))
+    return fixture(sf_dir, "orders_pruned", build)
 
 
 def _pruned_scan(spark, target):
@@ -560,7 +546,7 @@ def op_delete_rows(spark, sf_dir):
            .select("o_orderkey", "o_custkey", "o_orderstatus",
                    "o_orderdate"))
     ds = Dataset(spark, src, index_columns=("o_orderdate",))
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_del_"), "orders_d")
+    target = os.path.join(scratch("padawan_del_"), "orders_d")
     ds.repartition(1000).write_parquet(target)
     n_before = len(scan_parquet(spark, target)._files)
     out = delete_rows(spark, target,
@@ -603,8 +589,7 @@ def op_merge_upsert(spark, sf_dir):
            .select(F.col("n_nationkey").cast("bigint").alias("k"),
                    F.col("n_name").alias("name")))
     ds = Dataset(spark, src, index_columns=("k",))
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_mrg_"),
-                          "nation_m")
+    target = os.path.join(scratch("padawan_mrg_"), "nation_m")
     ds.repartition(5).write_parquet(target)
     n_before = len(scan_parquet(spark, target)._files)
     batch_rows = ([(k, f"UPDATED_{k}") for k in range(5, 15)]
@@ -650,21 +635,20 @@ def op_read_changes(spark, sf_dir):
     table.  Scale shape: one scan of the files the span's commits added
     or removed."""
     from ..dataset import delete_rows, merge_rows, read_changes
-    src = (load(spark, sf_dir, "nation")
-           .select(F.col("n_nationkey").cast("bigint").alias("k"),
-                   F.col("n_name").alias("name")))
-    ds = Dataset(spark, src, index_columns=("k",))
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_cdf2_"),
-                          "nation_chg")
-    ds.repartition(5).write_parquet(target)                      # v1
-    delete_rows(spark, target, (5,), (9,), inclusive="both")     # v2
-    batch_rows = ([(k, f"UPDATED_{k}") for k in range(10, 15)]
-                  + [(k, f"NEW_{k}") for k in range(100, 105)])
-    batch = Dataset(spark,
-                    spark.createDataFrame(batch_rows, "k bigint, name string"),
-                    index_columns=("k",))
-    merge_rows(spark, target, batch)                             # v3
-    chg = read_changes(spark, target, 1)
+
+    def build(target):
+        src = (load(spark, sf_dir, "nation")
+               .select(F.col("n_nationkey").cast("bigint").alias("k"),
+                       F.col("n_name").alias("name")))
+        ds = Dataset(spark, src, index_columns=("k",))
+        ds.repartition(5).write_parquet(target)                  # v1
+        delete_rows(spark, target, (5,), (9,), inclusive="both")  # v2
+        batch_rows = ([(k, f"UPDATED_{k}") for k in range(10, 15)]
+                      + [(k, f"NEW_{k}") for k in range(100, 105)])
+        batch = Dataset(spark, spark.createDataFrame(
+            batch_rows, "k bigint, name string"), index_columns=("k",))
+        merge_rows(spark, target, batch)                         # v3
+    chg = read_changes(spark, fixture(sf_dir, "op_read_changes", build), 1)
     return chg.select(F.col("_commit_version").alias("commit_version"),
                       F.col("_change_type").alias("change_type"),
                       "k", "name")
@@ -687,10 +671,8 @@ def op_schema_evolution(spark, sf_dir):
     reproduces the ORIGINAL two-column schema (``v1_cols``/``v1_rows``)
     — snapshots pin their own schema, not just their file list.  Scale
     shape: metadata-only; no data rewritten to add a column."""
-    from ..dataset import Dataset, scan_parquet
     n = load(spark, sf_dir, "nation")
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_se_"),
-                          "nation_se")
+    target = os.path.join(scratch("padawan_se_"), "nation_se")
     (Dataset(spark,
              n.where(F.col("n_nationkey") < 12)
              .select("n_nationkey", "n_regionkey"),
@@ -725,23 +707,8 @@ def op_timetravel_timestamp(spark, sf_dir):
     and a read as-of an instant between them resolves to the FIRST
     snapshot — same result as the version-pinned op_time_travel read.
     Resolution is O(versions) driver metadata; data is never copied."""
-    import os as _os
-    from .. import metadata as _meta
-    from ..dataset import Dataset, scan_parquet
-    n = load(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_regionkey", "n_name")
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_ttts_"),
-                          "nation_ttts")
-    (Dataset(spark, n.where(F.col("n_nationkey") < 10),
-             index_columns=("n_nationkey",)).reindex(("n_nationkey",))
-     .write_parquet(target))
-    (Dataset(spark, n.where(F.col("n_nationkey") >= 10),
-             index_columns=("n_nationkey",)).reindex(("n_nationkey",))
-     .write_parquet(target, append=True))
-    vdir = _meta._versions_dir(target)
-    _os.utime(_os.path.join(vdir, "v1.json"), (1_700_000_000,) * 2)
-    _os.utime(_os.path.join(vdir, "v2.json"), (1_700_000_100,) * 2)
-    pinned = scan_parquet(spark, target, as_of=1_700_000_050)
+    pinned = scan_parquet(spark, _nation_two_commits(spark, sf_dir),
+                          as_of=1_700_000_050)
     return (pinned.df.groupBy("n_regionkey")
             .agg(F.count(F.lit(1)).alias("n"),
                  F.max("n_nationkey").cast("bigint").alias("max_key")))
@@ -776,7 +743,7 @@ def op_incremental_agg(spark, sf_dir):
     src_df = (load(spark, sf_dir, "nation")
               .select(F.col("n_nationkey").cast("bigint").alias("k"),
                       F.col("n_regionkey").cast("bigint").alias("g")))
-    base = tempfile.mkdtemp(prefix="padawan_iva_")
+    base = scratch("padawan_iva_")
     source = os.path.join(base, "src")
     mv = os.path.join(base, "mv")
     Dataset(spark, src_df, index_columns=("k",)) \
@@ -814,14 +781,15 @@ def op_bloom_point_lookup(spark, sf_dir):
     falls back to a full scan).  The oracle recomputes the customer's
     aggregate straight from the source table."""
     from ..dataset import build_bloom_index, scan_point_lookup
-    src = (load(spark, sf_dir, "orders")
-           .select(F.col("o_orderkey").cast("bigint"),
-                   F.col("o_custkey").cast("bigint"), "o_orderdate"))
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_bloom_"),
-                          "orders_bl")
-    (Dataset(spark, src, index_columns=("o_orderdate",))
-     .reindex(("o_orderdate",)).repartition(1200).write_parquet(target))
-    build_bloom_index(spark, target, "o_custkey")
+
+    def build(target):
+        src = (load(spark, sf_dir, "orders")
+               .select(F.col("o_orderkey").cast("bigint"),
+                       F.col("o_custkey").cast("bigint"), "o_orderdate"))
+        (Dataset(spark, src, index_columns=("o_orderdate",))
+         .reindex(("o_orderdate",)).repartition(1200).write_parquet(target))
+        build_bloom_index(spark, target, "o_custkey")
+    target = fixture(sf_dir, "op_bloom_point_lookup", build)
     hit = scan_point_lookup(spark, target, "o_custkey", 371)
     return hit.agg(F.count(F.lit(1)).cast("bigint").alias("n"),
                    F.sum("o_orderkey").cast("bigint").alias("key_sum"),
@@ -845,19 +813,20 @@ def op_describe_history(spark, sf_dir):
     file deltas and per-version rows; any change to copy-on-write
     surgical-rewrite behavior shows up here."""
     from ..dataset import delete_rows, describe_history, merge_rows
-    src = (load(spark, sf_dir, "nation")
-           .select(F.col("n_nationkey").cast("bigint").alias("k"),
-                   F.col("n_regionkey").cast("bigint").alias("v")))
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_hist_"),
-                          "nation_h")
-    (Dataset(spark, src, index_columns=("k",)).reindex(("k",))
-     .repartition(5).write_parquet(target))
-    delete_rows(spark, target, (5,), (9,), inclusive="both")
-    merge_rows(spark, target, Dataset(
-        spark, spark.createDataFrame(
-            [(12, 999), (13, 999), (100, 1), (101, 2)],
-            "k bigint, v bigint"),
-        index_columns=("k",)))
+
+    def build(target):
+        src = (load(spark, sf_dir, "nation")
+               .select(F.col("n_nationkey").cast("bigint").alias("k"),
+                       F.col("n_regionkey").cast("bigint").alias("v")))
+        (Dataset(spark, src, index_columns=("k",)).reindex(("k",))
+         .repartition(5).write_parquet(target))
+        delete_rows(spark, target, (5,), (9,), inclusive="both")
+        merge_rows(spark, target, Dataset(
+            spark, spark.createDataFrame(
+                [(12, 999), (13, 999), (100, 1), (101, 2)],
+                "k bigint, v bigint"),
+            index_columns=("k",)))
+    target = fixture(sf_dir, "op_describe_history", build)
     return describe_history(spark, target).select(
         "version", "n_files", "n_added_files", "n_removed_files",
         F.col("total_rows").alias("rows"))
@@ -901,22 +870,25 @@ def op_footer_stats(spark, sf_dir):
     import pyarrow.parquet as pq
 
     from ..dataset import scan_parquet_footers
-    n = (load(spark, sf_dir, "nation")
-         .select(F.col("n_nationkey").cast("bigint").alias("k"),
-                 F.col("n_name").alias("name"),
-                 F.when(F.col("n_nationkey") % 4 == 0, None)
-                 .otherwise(F.col("n_regionkey")).cast("bigint")
-                 .alias("opt"))
-         .orderBy("k"))
-    path = os.path.join(tempfile.mkdtemp(prefix="padawan_foot_"),
+
+    def build(path):
+        rows = (load(spark, sf_dir, "nation")
+                .select(F.col("n_nationkey").cast("bigint").alias("k"),
+                        F.col("n_name").alias("name"),
+                        F.when(F.col("n_nationkey") % 4 == 0, None)
+                        .otherwise(F.col("n_regionkey")).cast("bigint")
+                        .alias("opt"))
+                .orderBy("k").collect())
+        tbl = pa.table({
+            "k": pa.array([r["k"] for r in rows], pa.int64()),
+            "name": pa.array([r["name"] for r in rows], pa.string()),
+            "opt": pa.array([r["opt"] for r in rows], pa.int64()),
+        })
+        os.makedirs(path)
+        pq.write_table(tbl, os.path.join(path, "nation_rg.parquet"),
+                       row_group_size=10)
+    path = os.path.join(fixture(sf_dir, "op_footer_stats", build),
                         "nation_rg.parquet")
-    rows = n.collect()
-    tbl = pa.table({
-        "k": pa.array([r["k"] for r in rows], pa.int64()),
-        "name": pa.array([r["name"] for r in rows], pa.string()),
-        "opt": pa.array([r["opt"] for r in rows], pa.int64()),
-    })
-    pq.write_table(tbl, path, row_group_size=10)
     return (scan_parquet_footers(spark, path)
             .select("row_group", "column", "num_values",
                     "null_count", "min_val", "max_val"))
@@ -944,16 +916,13 @@ def op_import_iceberg(spark, sf_dir):
     Scale shape: the import is one distributed read (delete
     anti-join included) + one range-partitioned write; the serve
     path is manifest pruning."""
-    import os
-    import tempfile
-
     from ..functions.iceberg import read_iceberg, write_iceberg_fixture
     src = (load(spark, sf_dir, "orders")
            .where((F.col("o_orderkey") % 7 == 0)
            & (F.col("o_orderkey") < 150000))
            .select(F.col("o_orderkey").cast("bigint").alias("k"),
                    (F.col("o_orderkey") % 4).cast("bigint").alias("g")))
-    base = tempfile.mkdtemp(prefix="padawan_impice_")
+    base = scratch("padawan_impice_")
     ice_t = os.path.join(base, "ice")
     write_iceberg_fixture(spark, src, ice_t, partition_by=("g",),
                           order_by=("k",))
@@ -990,14 +959,11 @@ def op_import_delta(spark, sf_dir):
     estates get the full native feature set (stats, pruning, time
     travel, CDF) rather than a one-off scan.  The oracle restates the
     sliced window and the imported total from the source table."""
-    import os
-    import tempfile
-
     from ..functions.delta import read_delta, write_delta_fixture
     n = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"))
-    base = tempfile.mkdtemp(prefix="padawan_imp_")
+    base = scratch("padawan_imp_")
     delta_t = os.path.join(base, "delta")
     write_delta_fixture(spark, n, delta_t, partition_by=("g",))
     imported = read_delta(spark, delta_t)

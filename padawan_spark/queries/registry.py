@@ -20,11 +20,27 @@ is deterministic across engines; **aggregation order is not**.  Policy:
 - MIN/MAX/COUNT: natively order-independent, use as-is;
 - never put transcendentals (exp/log/pow) into hashed outputs without
   coarse rounding — their libm implementations differ.
+
+Temporary inputs
+----------------
+Queries that need files of their own (a Delta/Iceberg/Hudi table, a CSV
+copy, a sink's output) get a directory under one per-process root in
+``tempfile.gettempdir()``, created on first use and removed when the
+process that created it exits:
+
+- :func:`fixture` for an input the query only reads: built once per
+  process and per testdata identity, then reused by later calls;
+- :func:`scratch` for a query whose subject is the write (round trips,
+  Dataset writers, sinks, streaming writers): a fresh directory per call.
 """
 
 from __future__ import annotations
 
+import atexit
+import glob
 import os
+import shutil
+import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -65,6 +81,11 @@ def ensure_session_conf(spark: SparkSession) -> None:
             pass  # immutable in this deployment; keep going
 
 
+def _identity(path: str) -> tuple[str, int, int]:
+    st = os.stat(path)
+    return (path, st.st_size, st.st_mtime_ns)
+
+
 # footer-inferred schema per file identity (path, size, mtime): only the
 # first load of a file runs Spark's schema-inference job, and a rewritten
 # file is inferred again
@@ -79,9 +100,8 @@ def load(spark: SparkSession, sf_dir: str, name: str,
     directly onto the scan, so a single-row-group file doesn't serialize
     the whole pipeline onto one task."""
     ensure_session_conf(spark)
-    path = os.path.abspath(f"{sf_dir}/{name}.parquet")
-    st = os.stat(path)
-    key = (path, st.st_size, st.st_mtime_ns)
+    key = _identity(os.path.abspath(f"{sf_dir}/{name}.parquet"))
+    path = key[0]
     if key in _SCHEMAS:
         df = spark.read.schema(_SCHEMAS[key]).parquet(path)
     else:
@@ -99,6 +119,55 @@ def load(spark: SparkSession, sf_dir: str, name: str,
         elif isinstance(df.schema["ts"].dataType, TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return spread(df) if wide else df
+
+
+_ROOT: tuple[int, str] | None = None      # (owning pid, directory)
+# fixture directory per (name, identities of sf_dir's parquet files)
+_FIXTURES: dict[tuple, str] = {}
+
+
+def _remove_root(pid: int, path: str) -> None:
+    if os.getpid() == pid:        # a forked child leaves its parent's root
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def _root() -> str:
+    global _ROOT
+    if _ROOT is None or _ROOT[0] != os.getpid():
+        _ROOT = (os.getpid(), tempfile.mkdtemp(prefix="padawan_"))
+        atexit.register(_remove_root, *_ROOT)
+    return _ROOT[1]
+
+
+def scratch(prefix: str) -> str:
+    """A fresh empty directory under the process's temp root."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_root())
+
+
+def fixture(sf_dir: str, name: str, build: Callable[[str], object]) -> str:
+    """The directory of a read-only input named ``name`` derived from
+    ``sf_dir``.  ``build(path)`` writes it at a path that does not exist
+    yet; it runs once per process for each ``name`` and set of
+    ``sf_dir`` parquet files (path, size, mtime), so testdata rewritten
+    in place builds again.  The build goes to a sibling renamed into
+    place when it returns, so a failed build is removed and never
+    reused; a fixture directory removed since is built again.  Nothing
+    may write into the returned directory."""
+    files = sorted(glob.glob(os.path.join(os.path.abspath(sf_dir),
+                                          "*.parquet")))
+    key = (name, tuple(_identity(f) for f in files))
+    path = _FIXTURES.get(key)
+    if path is None or not os.path.isdir(path):
+        home = scratch(f"{name}_")
+        path = os.path.join(home, name)
+        try:
+            build(path + ".part")
+        except BaseException:
+            shutil.rmtree(home, ignore_errors=True)
+            raise
+        os.rename(path + ".part", path)
+        _FIXTURES[key] = path
+    return path
 
 
 def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:

@@ -25,12 +25,11 @@ a plan survives 100 TB.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 from .dedup import _DUCK_MINHASH, _minhash_spark
-from .registry import DEC, dsum, load, query, sql_dsum
+from .registry import DEC, dsum, load, query, scratch, sql_dsum
 
 
 # ---------------------------------------------------------------------------
@@ -277,7 +276,7 @@ def scale_rollup_compose(spark, sf_dir):
               .agg(F.count(F.lit(1)).alias("n"),
                    # stored as DECIMAL so re-aggregation stays exact
                    F.sum(F.col("value").cast(DEC)).alias("total_dec")))
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_rollup_"), "hourly")
+    target = os.path.join(scratch("padawan_rollup_"), "hourly")
     hourly.write.mode("overwrite").parquet(target)
     mat = spark.read.parquet(target)
     return (mat.groupBy(F.date_trunc("day", "hour").alias("day"), "event_type")
@@ -299,7 +298,7 @@ def scale_partitioned_write(spark, sf_dir):
     asserted by tests/test_plans.py). At 100 TB this layout is what
     turns a full-table scan into a two-partition read."""
     o = load(spark, sf_dir, "orders").withColumn("o_year", F.year("o_orderdate"))
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_part_"), "orders")
+    target = os.path.join(scratch("padawan_part_"), "orders")
     o.write.partitionBy("o_year").mode("overwrite").parquet(target)
     back = spark.read.parquet(target)
     return (back.where(F.col("o_year").isin(1997, 1998))
@@ -700,8 +699,7 @@ def scale_sorted_files(spark, sf_dir):
     oracle checks the rewrite lost or duplicated nothing."""
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_shipdate", "l_extendedprice")
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_sort_"),
-                          "lineitem_sorted")
+    target = os.path.join(scratch("padawan_sort_"), "lineitem_sorted")
     (li.repartitionByRange(8, "l_shipdate")
      .sortWithinPartitions("l_shipdate")
      .write.mode("overwrite").parquet(target))

@@ -9,12 +9,14 @@ SQL oracles apply.  ``streaming_running_count`` uses a custom
 
 from __future__ import annotations
 
+import os
+
 from ..streaming import (
     run_streaming_sessionize,
     run_streaming_tumbling,
     running_count_per_user,
 )
-from .registry import query, sql_dsum
+from .registry import fixture, query, scratch, sql_dsum
 
 
 @query("streaming_tumbling_window", oracle=f"""
@@ -158,8 +160,6 @@ def streaming_manifest_tail(spark, sf_dir):
     two pinned versions and tailed from zero; the complete-mode fold
     over both deltas must equal the batch oracle over the whole
     table — the streaming twin of op_incremental_read."""
-    import os
-    import tempfile
     import uuid
     from pyspark.sql import functions as F
     from ..dataset import Dataset
@@ -168,13 +168,15 @@ def streaming_manifest_tail(spark, sf_dir):
     register_python_sources(spark)
     n = _load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_regionkey", "n_name")
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_tail_"), "nation")
-    (Dataset(spark, n.where(F.col("n_nationkey") < 12),
-             index_columns=("n_nationkey",)).reindex(("n_nationkey",))
-     .write_parquet(target))
-    (Dataset(spark, n.where(F.col("n_nationkey") >= 12),
-             index_columns=("n_nationkey",)).reindex(("n_nationkey",))
-     .write_parquet(target, append=True))
+
+    def build(target):
+        (Dataset(spark, n.where(F.col("n_nationkey") < 12),
+                 index_columns=("n_nationkey",)).reindex(("n_nationkey",))
+         .write_parquet(target))
+        (Dataset(spark, n.where(F.col("n_nationkey") >= 12),
+                 index_columns=("n_nationkey",)).reindex(("n_nationkey",))
+         .write_parquet(target, append=True))
+    target = fixture(sf_dir, "streaming_manifest_tail", build)
     src = (spark.readStream.format("padawan_tail")
            .schema("n_nationkey bigint, n_regionkey bigint, n_name string")
            .option("path", target).load())
@@ -231,8 +233,6 @@ def streaming_delta_cdf(spark, sf_dir):
     the batch oracle.  Scale shape: one InputPartition per change
     file (task-parallel like a file scan), ``maxVersionsPerTrigger``
     backpressure available, O(log actions) planning per batch."""
-    import os
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
@@ -249,16 +249,18 @@ def streaming_delta_cdf(spark, sf_dir):
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"),
         (F.col("n_nationkey") * 10).cast("bigint").alias("v"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_sdcdf_"), "tbl")
-    # order_by pins physical row order: DV positions address rows BY
-    # POSITION, so the oracle needs position i == i-th smallest key
-    write_delta_fixture(spark, n, t, partition_by=("g",),
-                        order_by=("k",))
-    remove_delta_files_fixture(t, lambda rel: rel.startswith("g=2/"))
-    update_delta_cdc_fixture(spark, t, "g", 1, "v", 1000)
-    _sch, _pc, files, _mm = replay_delta_log(t)
-    g3 = next(rel for rel, _pv, _dv in files if rel.startswith("g=3/"))
-    add_dv_fixture(t, {g3: [0, 1]})
+
+    def build(t):
+        # order_by pins physical row order: DV positions address rows BY
+        # POSITION, so the oracle needs position i == i-th smallest key
+        write_delta_fixture(spark, n, t, partition_by=("g",),
+                            order_by=("k",))
+        remove_delta_files_fixture(t, lambda rel: rel.startswith("g=2/"))
+        update_delta_cdc_fixture(spark, t, "g", 1, "v", 1000)
+        _sch, _pc, files, _mm = replay_delta_log(t)
+        g3 = next(rel for rel, _pv, _dv in files if rel.startswith("g=3/"))
+        add_dv_fixture(t, {g3: [0, 1]})
+    t = fixture(sf_dir, "streaming_delta_cdf", build)
     src = (spark.readStream.format("padawan_delta_cdf")
            .option("path", t).load())
     agg = (src.groupBy(F.col("_change_type").alias("change"),
@@ -302,13 +304,12 @@ def streaming_hudi_incremental(spark, sf_dir):
     the deleted key is never emitted.  Scale shape: one
     InputPartition per touched slice, O(timeline) planning per
     batch, untouched file groups never load."""
-    import os
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
 
-    from ..functions.hudi import (write_hudi_delta_fixture,
+    from ..functions.hudi import (list_hudi_commits,
+                                  write_hudi_delta_fixture,
                                   write_hudi_fixture)
     from ..sources import register_python_sources
     from .registry import load as _load
@@ -317,19 +318,21 @@ def streaming_hudi_incremental(spark, sf_dir):
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"),
         (F.col("n_nationkey") * 10).cast("bigint").alias("v"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_shinc_"),
-                     "tbl")
-    i1 = write_hudi_fixture(spark, n, t, partition_field="g")
-    d2 = write_hudi_delta_fixture(
-        spark, t, upserts=n.where(F.col("k") % 4 == 0)
-        .withColumn("v", F.col("k") * 10 + 1000),
-        partition_field="g")
-    # key "2" (region 1) deleted in the second window; never emitted
-    two_part = str(n.where(F.col("k") == 2).collect()[0]["g"])
-    write_hudi_delta_fixture(
-        spark, t, upserts=n.where(F.col("k") % 3 == 0)
-        .withColumn("v", F.col("k") * 10 + 2000),
-        deletes={two_part: ["2"]}, partition_field="g")
+
+    def build(t):
+        write_hudi_fixture(spark, n, t, partition_field="g")
+        write_hudi_delta_fixture(
+            spark, t, upserts=n.where(F.col("k") % 4 == 0)
+            .withColumn("v", F.col("k") * 10 + 1000),
+            partition_field="g")
+        # key "2" (region 1) deleted in the second window; never emitted
+        two_part = str(n.where(F.col("k") == 2).collect()[0]["g"])
+        write_hudi_delta_fixture(
+            spark, t, upserts=n.where(F.col("k") % 3 == 0)
+            .withColumn("v", F.col("k") * 10 + 2000),
+            deletes={two_part: ["2"]}, partition_field="g")
+    t = fixture(sf_dir, "streaming_hudi_incremental", build)
+    i1, d2, _d3 = list_hudi_commits(t)
     src = (spark.readStream.format("padawan_hudi_incremental")
            .option("path", t).option("startingInstant", i1)
            .option("maxInstantsPerTrigger", 1).load())
@@ -366,34 +369,35 @@ def streaming_iceberg_appends(spark, sf_dir):
     from the base snapshot id emits only the two appended row sets.
     Scale shape: one InputPartition per added file, O(metadata)
     planning per batch, pre-existing files never load."""
-    import os
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
 
-    from ..functions.iceberg import write_iceberg_fixture
+    from ..functions.iceberg import (list_iceberg_snapshots,
+                                     write_iceberg_fixture)
     from ..sources import register_python_sources
     from .registry import load as _load
     register_python_sources(spark)
     n = _load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_siapp_"),
-                     "tbl")
-    s1 = write_iceberg_fixture(spark, n, t, partition_by=("g",))
-    # FAST-APPEND commits (the real-writer shape — the new
-    # manifest holds only the new adds, prior manifests carry
-    # verbatim) so the driver check covers the carried-manifest
-    # incremental planner
-    write_iceberg_fixture(spark, n.select(
-        (F.col("k") + 300).alias("k"), F.col("g")), t,
-        partition_by=("g",), fast_append=True)
-    write_iceberg_fixture(spark, n.select(
-        (F.col("k") + 600).alias("k"), F.col("g")), t,
-        partition_by=("g",), fast_append=True)
+
+    def build(t):
+        write_iceberg_fixture(spark, n, t, partition_by=("g",))
+        # FAST-APPEND commits (the real-writer shape — the new
+        # manifest holds only the new adds, prior manifests carry
+        # verbatim) so the driver check covers the carried-manifest
+        # incremental planner
+        write_iceberg_fixture(spark, n.select(
+            (F.col("k") + 300).alias("k"), F.col("g")), t,
+            partition_by=("g",), fast_append=True)
+        write_iceberg_fixture(spark, n.select(
+            (F.col("k") + 600).alias("k"), F.col("g")), t,
+            partition_by=("g",), fast_append=True)
+    t = fixture(sf_dir, "streaming_iceberg_appends", build)
     src = (spark.readStream.format("padawan_iceberg_appends")
-           .option("path", t).option("startingSnapshotId", s1)
+           .option("path", t)
+           .option("startingSnapshotId", list_iceberg_snapshots(t)[0])
            .option("maxSnapshotsPerTrigger", 1).load())
     name = "mem_" + uuid.uuid4().hex[:8]
     q = (src.writeStream.format("memory").queryName(name)
@@ -425,32 +429,33 @@ def streaming_iceberg_skip_deletes(spark, sf_dir):
     row sets.  Scale shape: per-snapshot planning stays O(metadata)
     — one live-files walk per span snapshot, bounded by
     maxSnapshotsPerTrigger."""
-    import os
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
 
-    from ..functions.iceberg import write_iceberg_fixture
+    from ..functions.iceberg import (list_iceberg_snapshots,
+                                     write_iceberg_fixture)
     from ..sources import register_python_sources
     from .registry import load as _load
     register_python_sources(spark)
     n = _load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_iskip_"),
-                     "tbl")
-    s1 = write_iceberg_fixture(spark, n, t, partition_by=("g",))
-    write_iceberg_fixture(spark, n.select(
-        (F.col("k") + 300).alias("k"), F.col("g")), t,
-        partition_by=("g",))
-    write_iceberg_fixture(spark, None, t, partition_by=("g",),
-                          delete_partition={"g": 0})   # op: delete
-    write_iceberg_fixture(spark, n.select(
-        (F.col("k") + 600).alias("k"), F.col("g")), t,
-        partition_by=("g",))
+
+    def build(t):
+        write_iceberg_fixture(spark, n, t, partition_by=("g",))
+        write_iceberg_fixture(spark, n.select(
+            (F.col("k") + 300).alias("k"), F.col("g")), t,
+            partition_by=("g",))
+        write_iceberg_fixture(spark, None, t, partition_by=("g",),
+                              delete_partition={"g": 0})   # op: delete
+        write_iceberg_fixture(spark, n.select(
+            (F.col("k") + 600).alias("k"), F.col("g")), t,
+            partition_by=("g",))
+    t = fixture(sf_dir, "streaming_iceberg_skip_deletes", build)
     src = (spark.readStream.format("padawan_iceberg_appends")
-           .option("path", t).option("startingSnapshotId", s1)
+           .option("path", t)
+           .option("startingSnapshotId", list_iceberg_snapshots(t)[0])
            .option("skipDeleteSnapshots", "true").load())
     name = "mem_" + uuid.uuid4().hex[:8]
     q = (src.writeStream.format("memory").queryName(name)
@@ -485,8 +490,6 @@ def streaming_iceberg_follow_branch(spark, sf_dir):
     fast-forward.  Scale shape: head resolution is one metadata read
     per trigger; per-snapshot planning stays O(manifests the snapshot
     added) via added_data_files."""
-    import os
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
@@ -500,7 +503,7 @@ def streaming_iceberg_follow_branch(spark, sf_dir):
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"))
     odd = n.where(F.col("k") % 2 == 1)
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_ifb_"), "tbl")
+    t = os.path.join(scratch("padawan_ifb_"), "tbl")
     s1 = write_iceberg_fixture(spark, odd, t, partition_by=("g",))
     s2 = write_iceberg_fixture(spark, odd.select(
         (F.col("k") + 500).alias("k"), F.col("g")), t,
@@ -556,8 +559,6 @@ def streaming_cdf_tail(spark, sf_dir):
     reconstructed from the source table.  Offsets are snapshot
     versions with the same identity/vacuum guards as padawan_tail,
     plus Delta's ``startingVersion`` option."""
-    import os
-    import tempfile
     import uuid
 
     import pandas as pd
@@ -569,17 +570,18 @@ def streaming_cdf_tail(spark, sf_dir):
     register_python_sources(spark)
     n = _load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_regionkey", "n_name")
-    target = os.path.join(tempfile.mkdtemp(prefix="padawan_cdfq_"),
-                          "nation")
-    (Dataset(spark, n, index_columns=("n_nationkey",))
-     .reindex(("n_nationkey",)).repartition(5).write_parquet(target))
-    delete_rows(spark, target, (5,), (9,), inclusive="both")
-    merge_rows(spark, target, from_pandas(
-        spark,
-        pd.DataFrame({"n_nationkey": [12, 13, 14, 100, 101],
-                      "n_regionkey": [99] * 3 + [77] * 2,
-                      "n_name": ["UPD"] * 3 + ["NEW"] * 2}),
-        index_columns=("n_nationkey",)))
+
+    def build(target):
+        (Dataset(spark, n, index_columns=("n_nationkey",))
+         .reindex(("n_nationkey",)).repartition(5).write_parquet(target))
+        delete_rows(spark, target, (5,), (9,), inclusive="both")
+        merge_rows(spark, target, from_pandas(
+            spark,
+            pd.DataFrame({"n_nationkey": [12, 13, 14, 100, 101],
+                          "n_regionkey": [99] * 3 + [77] * 2,
+                          "n_name": ["UPD"] * 3 + ["NEW"] * 2}),
+            index_columns=("n_nationkey",)))
+    target = fixture(sf_dir, "streaming_cdf_tail", build)
     src = (spark.readStream.format("padawan_cdf")
            .option("path", target).load())
     agg = (src.groupBy(F.col("_change_type").alias("change_type"))
@@ -621,8 +623,6 @@ def streaming_mv_refresh(spark, sf_dir):
     lakehouse "stream a table into a maintained rollup" loop:
     exactly-once per micro-batch via the CDF source's version offsets,
     O(changes) per batch, never a source rescan."""
-    import os
-    import tempfile
     import pandas as pd
     from pyspark.sql import functions as F
     from ..dataset import (Dataset, delete_rows,
@@ -634,18 +634,20 @@ def streaming_mv_refresh(spark, sf_dir):
     n = _load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_regionkey").cast("bigint").alias("g"))
-    base = tempfile.mkdtemp(prefix="padawan_smv_")
-    source = os.path.join(base, "src")
+
+    def build(source):
+        (Dataset(spark, n, index_columns=("k",))
+         .reindex(("k",)).repartition(4).write_parquet(source))
+        delete_rows(spark, source, (0,), (3,), inclusive="both")
+        upd = [(int(r["k"]), int(r["g"]) + 50)
+               for r in n.where(F.col("k") >= 20).collect()]
+        ins = [(200 + i, (200 + i) % 4) for i in range(6)]
+        merge_rows(spark, source, from_pandas(
+            spark, pd.DataFrame(upd + ins, columns=["k", "g"]),
+            index_columns=("k",)))
+    source = fixture(sf_dir, "streaming_mv_refresh", build)
+    base = scratch("padawan_smv_")
     mv = os.path.join(base, "mv")
-    (Dataset(spark, n, index_columns=("k",))
-     .reindex(("k",)).repartition(4).write_parquet(source))
-    delete_rows(spark, source, (0,), (3,), inclusive="both")
-    upd = [(int(r["k"]), int(r["g"]) + 50)
-           for r in n.where(F.col("k") >= 20).collect()]
-    ins = [(200 + i, (200 + i) % 4) for i in range(6)]
-    merge_rows(spark, source, from_pandas(
-        spark, pd.DataFrame(upd + ins, columns=["k", "g"]),
-        index_columns=("k",)))
 
     def fold(batch_df, batch_id):
         fold_changes_into_aggregate(batch_df.sparkSession, mv,
@@ -687,9 +689,6 @@ def streaming_rate_limited_tail(spark, sf_dir):
     deliberately uncapped: latestOffset cannot see the checkpointed
     start, and a low guess would trip the history-regression guard —
     see the reader comment.)"""
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ..dataset import Dataset
@@ -699,7 +698,7 @@ def streaming_rate_limited_tail(spark, sf_dir):
     n = _load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("k"),
         F.col("n_name").alias("name"))
-    base = tempfile.mkdtemp(prefix="padawan_rate_")
+    base = scratch("padawan_rate_")
     target = os.path.join(base, "nation_r")
 
     def commit(lo, hi):
@@ -762,8 +761,6 @@ def streaming_iceberg_changes(spark, sf_dir):
     aggregates must equal the batch oracle.  Scale shape: one
     InputPartition per CHANGED file per snapshot — O(changed files),
     DV predecessor vectors decode in the task."""
-    import os
-    import tempfile
     import uuid as _uuid
 
     from pyspark.sql import functions as F
@@ -777,17 +774,19 @@ def streaming_iceberg_changes(spark, sf_dir):
         F.col("o_orderkey") < 1000).select(
         F.col("o_orderkey").cast("bigint").alias("k"),
         (F.col("o_orderkey") % 2).cast("bigint").alias("g"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_scl_"), "tbl")
-    s1 = write_iceberg_fixture(spark, o.where(F.col("g") == 0), t,
-                               partition_by=("g",), order_by=("k",))
-    write_iceberg_fixture(spark, o.where(F.col("g") == 1), t,
-                          partition_by=("g",), order_by=("k",))
-    write_iceberg_fixture(spark, None, t, partition_by=("g",),
-                          delete_partition={"g": 1})
-    set_iceberg_format_version_fixture(t, 3)
-    write_iceberg_fixture(spark, None, t, partition_by=("g",),
-                          delete_vectors={
-                              f"data/snap{s1}-0.parquet": [0, 1]})
+
+    def build(t):
+        s1 = write_iceberg_fixture(spark, o.where(F.col("g") == 0), t,
+                                   partition_by=("g",), order_by=("k",))
+        write_iceberg_fixture(spark, o.where(F.col("g") == 1), t,
+                              partition_by=("g",), order_by=("k",))
+        write_iceberg_fixture(spark, None, t, partition_by=("g",),
+                              delete_partition={"g": 1})
+        set_iceberg_format_version_fixture(t, 3)
+        write_iceberg_fixture(spark, None, t, partition_by=("g",),
+                              delete_vectors={
+                                  f"data/snap{s1}-0.parquet": [0, 1]})
+    t = fixture(sf_dir, "streaming_iceberg_changes", build)
     name = "scl_" + _uuid.uuid4().hex[:8]
     q = (spark.readStream.format("padawan_iceberg_changes")
          .option("path", t).load()
@@ -840,8 +839,6 @@ def streaming_iceberg_changes_deletes(spark, sf_dir):
     one InputPartition per changed/affected file per snapshot;
     position/equality artifacts resolve IN THE TASK against that
     file only."""
-    import os
-    import tempfile
     import uuid as _uuid
 
     from pyspark.sql import Window
@@ -854,20 +851,21 @@ def streaming_iceberg_changes_deletes(spark, sf_dir):
     o = load(spark, sf_dir, "orders").where(
         F.col("o_orderkey") < 400).select(
         F.col("o_orderkey").cast("bigint").alias("k"))
-    t = os.path.join(tempfile.mkdtemp(prefix="padawan_sicd_"),
-                     "tbl")
-    s1 = write_iceberg_fixture(spark, o, t, order_by=("k",))
-    fp = f"data/snap{s1}-0.parquet"
-    write_iceberg_fixture(spark, None, t,
-                          delete_positions={fp: list(range(10))})
-    write_iceberg_fixture(spark, None, t,
-                          delete_positions={fp: list(range(5, 15))})
-    kmin, kmax = o.agg(F.min("k"), F.max("k")).first()
-    write_iceberg_fixture(spark, None, t,
-                          delete_equality=(("k",),
-                                           [(int(kmin),),
-                                            (int(kmax),)]))
-    write_iceberg_fixture(spark, None, t, delete_partition={})
+
+    def build(t):
+        s1 = write_iceberg_fixture(spark, o, t, order_by=("k",))
+        fp = f"data/snap{s1}-0.parquet"
+        write_iceberg_fixture(spark, None, t,
+                              delete_positions={fp: list(range(10))})
+        write_iceberg_fixture(spark, None, t,
+                              delete_positions={fp: list(range(5, 15))})
+        kmin, kmax = o.agg(F.min("k"), F.max("k")).first()
+        write_iceberg_fixture(spark, None, t,
+                              delete_equality=(("k",),
+                                               [(int(kmin),),
+                                                (int(kmax),)]))
+        write_iceberg_fixture(spark, None, t, delete_partition={})
+    t = fixture(sf_dir, "streaming_iceberg_changes_deletes", build)
     name = "sicd_" + _uuid.uuid4().hex[:8]
     q = (spark.readStream.format("padawan_iceberg_changes")
          .option("path", t).load()

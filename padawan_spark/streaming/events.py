@@ -274,15 +274,13 @@ def run_streaming_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-reading the directory and keeping the last emission per key
     (update mode may re-emit a group as late rows arrive) reproduces
     the batch aggregate exactly."""
-    import tempfile
-
-    from ..queries.registry import DEC
+    from ..queries.registry import DEC, scratch
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "30 minutes")
     agg = (ev.groupBy(F.date_trunc("day", "ts").alias("day"), "event_type")
            .agg(F.count(F.lit(1)).alias("n"),
                 F.sum(F.col("value").cast(DEC)).cast("double")
                 .alias("total_value")))
-    target = tempfile.mkdtemp(prefix="padawan_febatch_")
+    target = scratch("padawan_febatch_")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         (batch_df.withColumn("batch_id", F.lit(batch_id))
@@ -323,36 +321,37 @@ def run_streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime as _dt
     import os as _os
     import shutil as _shutil
-    import tempfile as _tempfile
     import time as _time
 
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from ..queries.registry import ensure_session_conf
+    from ..queries.registry import ensure_session_conf, fixture
     ensure_session_conf(spark)
 
-    src = _os.path.join(sf_dir, "events.parquet")
-    tmp = _tempfile.mkdtemp(prefix="padawan_soj_")
-    _shutil.copy(src, _os.path.join(tmp, "a.parquet"))
-    t = pq.read_table(src, columns=None)
-    far = pc.max(t["ts"]).as_py()
-    if isinstance(far, int):          # TIMESTAMP(NANOS) read as int64
-        far = far + 10 * 86400 * 10**9
-    else:
-        far = far + _dt.timedelta(days=10)
-    fields = {
-        "event_id": [-1, -2], "ts": [far, far], "user_id": [0, 0],
-        "event_type": ["view", "purchase"], "value": [0.0, 0.0],
-        "props": ["", ""],
-    }
-    sent = pa.table({n: pa.array(v, t.schema.field(n).type)
-                     for n, v in fields.items()}).cast(t.schema)
-    pq.write_table(sent, _os.path.join(tmp, "b.parquet"))
-    now = _time.time()
-    _os.utime(_os.path.join(tmp, "a.parquet"), (now - 100, now - 100))
-    _os.utime(_os.path.join(tmp, "b.parquet"), (now, now))
+    def stage(tmp):
+        src = _os.path.join(sf_dir, "events.parquet")
+        _os.makedirs(tmp)
+        _shutil.copy(src, _os.path.join(tmp, "a.parquet"))
+        t = pq.read_table(src, columns=None)
+        far = pc.max(t["ts"]).as_py()
+        if isinstance(far, int):          # TIMESTAMP(NANOS) read as int64
+            far = far + 10 * 86400 * 10**9
+        else:
+            far = far + _dt.timedelta(days=10)
+        fields = {
+            "event_id": [-1, -2], "ts": [far, far], "user_id": [0, 0],
+            "event_type": ["view", "purchase"], "value": [0.0, 0.0],
+            "props": ["", ""],
+        }
+        sent = pa.table({n: pa.array(v, t.schema.field(n).type)
+                         for n, v in fields.items()}).cast(t.schema)
+        pq.write_table(sent, _os.path.join(tmp, "b.parquet"))
+        now = _time.time()
+        _os.utime(_os.path.join(tmp, "a.parquet"), (now - 100, now - 100))
+        _os.utime(_os.path.join(tmp, "b.parquet"), (now, now))
+    tmp = fixture(sf_dir, "streaming_outer_join", stage)
 
     nanos = _events_ts_is_nanos(sf_dir)
     ev = (spark.readStream.schema(_event_schema(ts_as_long=nanos))

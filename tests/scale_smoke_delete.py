@@ -1,6 +1,5 @@
 """Scale smoke: copy-on-write DELETE against the many-file pruned-scan
-fixture (VERDICT r5 task 7 — the GDPR-delete-at-scale story, made
-measurable).
+fixture (the GDPR-delete-at-scale story, made measurable).
 
 Builds the ~512-file date-indexed orders manifest table from
 ``$SMOKE_DIR`` (default ``/tmp/padawan_sfbig``, the 10x dataset), then
@@ -38,6 +37,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     t0 = time.perf_counter()
+    # a registry fixture is read-only to queries; the commits below
+    # rewrite it, which is safe as this process is its only reader
     target = _ensure_pruned_table(spark, SMOKE_DIR)
     build_s = round(time.perf_counter() - t0, 3)
 
@@ -130,7 +131,7 @@ def main() -> None:
     assert merged2.df.count() == rows_final - n_key + 1
     merged2.assert_disjoint()
 
-    # --- CDF chain (r8): read_changes over the delete → merge → merge2
+    # --- CDF chain: read_changes over the delete → merge → merge2
     # history must read ONLY the files those commits added or removed
     # (the docstring's O(changed files) claim, asserted via inputFiles),
     # and the per-commit change counts must match the operations above.
@@ -164,7 +165,7 @@ def main() -> None:
     assert by.get((v_mrg2, "update_postimage")) == 1, by
     assert sum(by.values()) == n_del + n_ins + n_key + 1, by
 
-    # --- incremental MV chain (r8): a full refresh pays one table
+    # --- incremental MV chain: a full refresh pays one table
     # aggregate; after ONE more surgical commit, the incremental
     # refresh must (a) produce exactly the direct aggregate of the
     # live table and (b) commit via merge (MV version advances — a
@@ -199,7 +200,7 @@ def main() -> None:
            mv_ds.df.where("cnt > 0").collect()}
     assert got == truth, (len(got), len(truth))
 
-    # --- bloom point-lookup chain (r8): build the per-file bloom of a
+    # --- bloom point-lookup chain: build the per-file bloom of a
     # NON-index column over the ~513-file table, then a point lookup
     # must read only bloom-admitted files while a plain scan reads all.
     from padawan_spark import build_bloom_index, scan_point_lookup

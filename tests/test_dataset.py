@@ -229,7 +229,7 @@ def test_manifest_table_roundtrip_typed_bounds(spark, tmp_path):
     are stored sorted by lower bound."""
     import decimal
 
-    from padawan_spark.metadata import (Manifest, manifest_from_table,
+    from padawan_spark.metadata import (Manifest, read_manifest_table,
                                         write_manifest_table)
 
     target = str(tmp_path / "mtab")
@@ -252,8 +252,8 @@ def test_manifest_table_roundtrip_typed_bounds(spark, tmp_path):
         + [(day, None, None, decimal.Decimal("0.05"), None)],
         max_partition_index=7,
     )
-    write_manifest_table(spark, target, m)
-    assert manifest_from_table(spark, target) == m
+    write_manifest_table(target, m)
+    assert read_manifest_table(target) == m
 
 
 @pytest.mark.slow
@@ -261,7 +261,7 @@ def test_write_parquet_manifest_table_form(spark, tmp_path, sf_dir):
     """write_parquet(manifest_table=True) persists the table-form
     manifest alongside the JSON sidecar, and both agree exactly."""
     from padawan_spark import Dataset
-    from padawan_spark.metadata import load_manifest, manifest_from_table
+    from padawan_spark.metadata import load_manifest, read_manifest_table
     from padawan_spark.queries.registry import load
 
     target = str(tmp_path / "mt_orders")
@@ -270,7 +270,7 @@ def test_write_parquet_manifest_table_form(spark, tmp_path, sf_dir):
     ds = Dataset(spark, o, index_columns=("o_orderkey",))
     ds.repartition(4).write_parquet(target, manifest_table=True)
     j = load_manifest(target)
-    t = manifest_from_table(spark, target)
+    t = read_manifest_table(target)
     assert t.files == j.files and t.sizes == j.sizes
     assert t.lower_bounds == j.lower_bounds
     assert t.upper_bounds == j.upper_bounds
@@ -756,7 +756,7 @@ def test_compact_refreshes_manifest_table(spark, sf_dir, tmp_path):
     otherwise it keeps listing superseded small files that dangle once
     vacuum reclaims them."""
     from padawan_spark import Dataset, compact_parquet
-    from padawan_spark.metadata import load_manifest, manifest_from_table, vacuum
+    from padawan_spark.metadata import load_manifest, read_manifest_table, vacuum
     from padawan_spark.queries.registry import load
 
     p = str(tmp_path / "mt")
@@ -771,10 +771,10 @@ def test_compact_refreshes_manifest_table(spark, sf_dir, tmp_path):
     (Dataset(spark, n.where(F.col("n_nationkey") >= 10),
              index_columns=("n_nationkey",)).reindex(("n_nationkey",))
      .write_parquet(p, append=True))
-    assert manifest_from_table(spark, p).files == load_manifest(p).files
+    assert read_manifest_table(p).files == load_manifest(p).files
     compact_parquet(spark, p, rows_per_partition=1000)
     cur = load_manifest(p)
-    tbl = manifest_from_table(spark, p)
+    tbl = read_manifest_table(p)
     assert tbl.files == cur.files          # table form tracks the swap
     vacuum(p, keep_last=1)
     # every file the table form lists still exists after vacuum
@@ -1283,14 +1283,14 @@ def test_commit_keeps_manifest_forms_in_lockstep(spark, tmp_path, writer):
     table describing the same files, adds exactly one snapshot, and the
     pruned scan reads the same rows as the JSON-manifest scan."""
     from padawan_spark import list_versions, scan_parquet_pruned
-    from padawan_spark.metadata import load_manifest, manifest_from_table
+    from padawan_spark.metadata import load_manifest, read_manifest_table
 
     p = str(tmp_path / writer)
     if writer != "overwrite":
         _commit_by("overwrite", spark, p)
     versions = len(list_versions(p))
     _commit_by(writer, spark, p)
-    man, tab = load_manifest(p), manifest_from_table(spark, p)
+    man, tab = load_manifest(p), read_manifest_table(p)
     assert (tab.files, tab.sizes, tab.lower_bounds, tab.upper_bounds) \
         == (man.files, man.sizes, man.lower_bounds, man.upper_bounds)
     assert len(list_versions(p)) == versions + 1
@@ -2499,6 +2499,41 @@ def test_merge_rows_keys_in_a_repeated_dst_hour(spark, tmp_path, la_time):
     assert sorted(got.values()) == [-1, -1] + [0, 1, 3, 4, 5, 7, 8, 9, 10, 11]
 
 
+def test_slice_delete_and_pruned_scan_in_a_repeated_dst_hour(
+        spark, tmp_path, la_time):
+    """One file holds 01:00-01:45 PDT and one 01:00-01:45 PST (Los
+    Angeles repeats 01:00-02:00 on 2022-11-06), so both files span the
+    same wall times and differ only by ``fold``.  A slice from 01:50 PDT
+    keeps the PST file and its 4 rows, delete_rows over that range
+    removes them, and the pruned scan plans the files and bounds (fold
+    included) the plain scan's slice does."""
+    from padawan_spark import delete_rows, scan_parquet_pruned
+
+    p = str(tmp_path / "dst_slice")
+    quarters = "timestamp_seconds(1667721600 + id * 900)"  # 01:00 PDT on
+    Dataset(spark, spark.range(8).selectExpr(f"{quarters} AS t",
+                                             "CAST(id AS INT) AS v"),
+            index_columns=("t",)).repartition(4).write_parquet(
+                p, manifest_table=True)
+    lb = (dt.datetime(2022, 11, 6, 1, 50),)
+    full = scan_parquet(spark, p)
+    assert len(full._files) == 2
+    got = full.slice(lb, None, "both")
+    assert sorted(r.v for r in got.df.collect()) == [4, 5, 6, 7]
+
+    def folded(bounds):
+        return [tuple((v.isoformat(), v.fold) for v in b) for b in bounds]
+
+    assert folded(full.upper_bounds) == [(("2022-11-06T01:45:00", 0),),
+                                         (("2022-11-06T01:45:00", 1),)]
+    pruned = scan_parquet_pruned(spark, p, lb, None, "both")
+    assert pruned._files == got._files
+    assert folded(pruned.lower_bounds) == folded(got.lower_bounds)
+    assert folded(pruned.upper_bounds) == folded(got.upper_bounds)
+    out = delete_rows(spark, p, lb, None, "both")
+    assert sorted(r.v for r in out.df.collect()) == [0, 1, 2, 3]
+
+
 def test_dataset_call_job_budgets(spark, tmp_path, count_jobs):
     """Upper bounds on the Spark jobs each Dataset call runs on a tiny
     table (a lazy call is counted with the action that reads it), so a
@@ -2564,7 +2599,7 @@ def test_manifest_table_is_one_file_published_by_rename(spark, tmp_path,
         "index_columns"] == ["k"]
     assert not [f for f in os.listdir(p) if f.endswith("_meta.json")]
     published = meta.load_manifest(p)
-    assert meta.manifest_from_table(spark, p) == published
+    assert meta.read_manifest_table(p) == published
 
     def torn(table, where, **kw):
         with open(where, "wb") as f:
@@ -2573,9 +2608,9 @@ def test_manifest_table_is_one_file_published_by_rename(spark, tmp_path,
 
     monkeypatch.setattr(pq, "write_table", torn)
     with pytest.raises(OSError, match="disk full"):
-        meta.write_manifest_table(spark, p, meta.Manifest(
+        meta.write_manifest_table(p, meta.Manifest(
             index_columns=("k",), files=["x.parquet"]))
-    assert meta.manifest_from_table(spark, p) == published
+    assert meta.read_manifest_table(p) == published
 
 
 def test_pruned_scan_reads_and_rewrites_a_string_bound_manifest_table(
@@ -2626,5 +2661,5 @@ def test_pruned_scan_reads_and_rewrites_a_string_bound_manifest_table(
                                          meta.MANIFEST_TABLE_FILE))
     assert schema.field("lb_0").type == pa.int64()
     assert not os.path.exists(meta_file)
-    assert meta.manifest_from_table(spark, p) == meta.load_manifest(p)
+    assert meta.read_manifest_table(p) == meta.load_manifest(p)
     assert len(same_as_slice((7,), (32,), "lower")._files) < n + 1

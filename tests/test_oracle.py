@@ -1,10 +1,11 @@
 """Runs every registered query against its DuckDB oracle at sf0.001 —
-the local mirror of the driver's correctness gate (CORRECTNESS_r{N}.json).
-Full-scale (sf0.01) runs: ``python3 tests/oracle_harness.py``.
+the local mirror of the correctness gate the ``CORRECTNESS_*.json``
+records come from.  Full-scale (sf0.01) runs:
+``python3 tests/oracle_harness.py``.
 
-Opt-in since r17 (VERDICT r16 task 1): the full oracle pass takes
-~15 min, which blew the driver's pytest time cap — an unfinishable gate
-protects nothing.  Run with ``pytest -m oracle`` (see pyproject)."""
+Opt-in: the full oracle pass takes ~15 min, longer than the default
+gate's time cap allows — an unfinishable gate protects nothing.  Run
+with ``pytest -m oracle`` (see pyproject)."""
 
 import pytest
 

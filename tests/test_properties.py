@@ -286,7 +286,7 @@ def test_pruned_manifest_keeps_the_slice_files(spark, tmp_path_factory, case):
         open(os.path.join(p, f), "wb").close()
     man.schema_json = _parse_datatype_string(schema).json()
     meta.write_manifest(p, man)
-    meta.write_manifest_table(spark, p, man)
+    meta.write_manifest_table(p, man)
     full = scan_parquet(spark, p)
     for lb, ub, inc in slices:
         want = full.slice(lb, ub, inclusive=inc)
