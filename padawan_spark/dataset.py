@@ -1693,18 +1693,21 @@ def read_changes(spark: SparkSession, path: str, from_version: int,
     row granularity).
 
     Emits one row per changed row per commit in ``(from_version,
-    to_version]`` (``to_version=None`` = current), with two metadata
-    columns: ``_commit_version`` (the snapshot that introduced the
-    change) and ``_change_type`` (``insert`` / ``delete`` /
-    ``update_preimage`` / ``update_postimage`` — Delta-CDF naming; a
-    key present on both sides of one commit is an update, keys on one
-    side only are pure inserts/deletes).
+    to_version]`` (``to_version=None`` = current; version 0 is the
+    empty table, so ``from_version=0`` includes the first write), with
+    two metadata columns: ``_commit_version`` (the snapshot that
+    introduced the change) and ``_change_type`` (``insert`` /
+    ``delete`` / ``update_preimage`` / ``update_postimage`` — Delta-CDF
+    naming; a key present on both sides of one commit is an update,
+    keys on one side only are pure inserts/deletes).
 
-    Only the files each commit added or removed are read, all in one
-    scan.  From the manifests, every such file gets a ``(version, +1)``
-    tag per commit that added it and a ``(version, -1)`` tag per commit
-    that removed it, and a broadcast join on the file path gives each
-    row one copy per tag.  A commit that only adds or only removes files has
+    Each commit's added and removed files come from
+    :func:`metadata.plan_changes`, the planner the ``padawan_cdf``
+    stream also maps to its partitions, and only those files are read,
+    all in one scan.  Every such file gets a ``(version, +1)`` tag per
+    commit that added it and a ``(version, -1)`` tag per commit that
+    removed it, and a broadcast join on the file path gives each row
+    one copy per tag.  A commit that only adds or only removes files has
     nothing to cancel, so its rows are tagged ``insert`` or ``delete``
     directly.  The rows of a commit that does both (a copy-on-write
     delete, merge or compaction) are summed by sign per full row: rows
@@ -1712,33 +1715,12 @@ def read_changes(spark: SparkSession, path: str, from_version: int,
     ``|sum|`` times, the multiset difference EXCEPT ALL gives.  A key
     whose ``(version, *index)`` window holds both a positive and a
     negative sum is an update; window partitions group NULL keys
-    together, so NULL keys (which ``delete_rows`` removes under
-    null-first range semantics) classify like any other.  This is the
-    rule of the ``padawan_cdf`` stream.  The plan has the same size for
-    any number of commits, and building it pins nothing and runs no job
-    (beyond the listing job Spark runs for more than 32 files)."""
-    versions = _meta.list_versions(path)
-    if versions and from_version < versions[0]:
-        raise ValueError(
-            f"snapshot v{from_version} at {path} has been vacuumed "
-            f"(retained versions: {versions}); the change history "
-            f"before v{versions[0]} is gone")
-    _require(from_version in versions, ValueError,
-             f"no snapshot v{from_version} at {path}; have {versions}")
-    if to_version is None:
-        to_version = versions[-1]
-    _require(to_version in versions and to_version >= from_version,
-             ValueError,
-             f"bad version range ({from_version}, {to_version}]; "
-             f"have {versions}")
-    span = [v for v in versions if from_version <= v <= to_version]
-    mans = {v: _meta.load_manifest(path, version=v) for v in span}
-    # a snapshot records no schema when write_metadata adopted a
-    # directory without a non-empty parquet file (every other commit
-    # records one) — fall back to the newest snapshot in the span that
-    # has a schema, else fail descriptively
-    schema = next((mans[v].schema for v in reversed(span)
-                   if mans[v].schema_json), None)
+    together, and NaN keys likewise, so they classify like any other
+    key.  The plan has the same size for any number of commits, and
+    building it pins nothing and runs no job (beyond the listing job
+    Spark runs for more than 32 files)."""
+    span = _meta.plan_changes(path, from_version, to_version)
+    schema = span.schema
     _require(schema is not None, ValueError,
              f"no snapshot in [{from_version}, {to_version}] at {path} "
              "records a schema (every snapshot in the span is an empty "
@@ -1746,12 +1728,9 @@ def read_changes(spark: SparkSession, path: str, from_version: int,
     cols = schema.names
     one_sided: list[tuple] = []         # (file, version, sign) tags
     two_sided: list[tuple] = []
-    for v_prev, v in zip(span, span[1:]):
-        prev, cur = set(mans[v_prev].files), set(mans[v].files)
-        added, removed = cur - prev, prev - cur
+    for v, added, removed in span.commits:
         tags = two_sided if added and removed else one_sided
-        tags += [(os.path.abspath(os.path.join(path, f)), v, sign)
-                 for files, sign in ((added, 1), (removed, -1))
+        tags += [(f, v, sign) for files, sign in ((added, 1), (removed, -1))
                  for f in files]
 
     def _tagged(tags: list[tuple]) -> DataFrame:
@@ -1769,7 +1748,7 @@ def read_changes(spark: SparkSession, path: str, from_version: int,
         upd = F.lit(False)
         # one index per table history: append and write_metadata reject
         # a different one, and an overwrite restarts the versions
-        ix = list(mans[span[-1]].index_columns)
+        ix = list(span.index_columns)
         if ix:
             from pyspark.sql.window import Window
             w = Window.partitionBy("_commit_version", *ix)

@@ -34,6 +34,7 @@ from __future__ import annotations
 import json
 import os
 import re
+from dataclasses import dataclass
 
 
 def list_delta_versions(path: str) -> list[int]:
@@ -1431,93 +1432,189 @@ def remove_delta_files_fixture(path: str, match) -> int:
     return v
 
 
-def read_delta_changes(spark, path: str, starting_version: int = 0,
-                       ending_version: int | None = None):
-    """Change Data Feed interop: row-level changes between two
-    commit versions of an EXISTING Delta table, the way the protocol
-    defines them — commits carrying ``cdc`` actions (files under
-    ``_change_data/`` with a ``_change_type`` column: CDF-enabled
-    UPDATE/MERGE writers) use ONLY those; commits without cdc actions
-    derive changes from their data-changing actions (``add`` rows as
-    inserts, ``remove`` rows as deletes — the removed file is read
-    pre-vacuum, partition values recovered from the pre-remove
-    state).  Output: data columns + ``_change_type`` +
-    ``_commit_version``, one distributed scan per change file, no
-    driver row work.  Column-mapped tables are fully supported:
-    ``name`` mode aliases physical columns back to logical;
-    ``id`` mode resolves each change file's physical layout by
-    PARQUET FIELD ID through one distributed footer job
-    (:mod:`.layouts`).  Deletion-vector commits are SUPPORTED:
-    a same-commit remove+re-add of one path carrying a DV — the shape
-    a modern DELETE writes — emits delete rows for exactly the
-    newly-dead positions (new DV minus old DV), decoded in
-    distributed tasks and applied via ``_metadata.row_index``
-    semi/anti joins; a tombstoned DV'd file emits deletes only for
-    its still-live rows.  File state entering the range initializes
-    from the newest CHECKPOINT below ``starting_version`` when one
-    exists (same contract as the stream source): a
-    log-retention-cleaned table reads as long as the checkpoint
-    covers the cleaned prefix.  Commits INSIDE the range still need
-    their own JSON — a checkpoint compacts state and has no
-    per-commit changes — and a cleaned in-range commit raises rather
-    than return a silently-partial feed."""
-    from pyspark.sql import functions as F
+def _partition_value(raw: str | None, dtype: str):
+    """A partition value as the protocol serializes it (a string; null
+    or empty for NULL) decoded to a Python value of type ``dtype``, a
+    schemaString primitive under its Delta or its Spark name (``long``
+    or ``bigint``).  A timestamp without a zone is UTC, the session
+    zone ``get_spark`` sets; a ``timestamp_ntz`` stays naive."""
+    import datetime
+    import decimal
+    if raw is None or raw == "":
+        return None
+    if dtype in ("byte", "tinyint", "short", "smallint", "integer", "int",
+                 "long", "bigint"):
+        return int(raw)
+    if dtype in ("float", "double"):
+        return float(raw)
+    if dtype == "boolean":
+        return raw.lower() == "true"
+    if dtype == "date":
+        return datetime.date.fromisoformat(raw)
+    if dtype.startswith("decimal"):
+        return decimal.Decimal(raw)
+    if dtype in ("timestamp", "timestamp_ntz"):
+        ts = datetime.datetime.fromisoformat(raw)
+        if dtype == "timestamp" and ts.tzinfo is None:
+            ts = ts.replace(tzinfo=datetime.timezone.utc)
+        return ts
+    if dtype == "binary":
+        return raw.encode()
+    return raw
+
+
+@dataclass
+class DeltaChanges:
+    """A Delta change feed's span as :func:`plan_delta_changes` plans
+    it, with the table's column-mapping facts at its last version."""
+    fields: list[dict]          # the schema's fields (Delta JSON)
+    mapping: str | None         # column-mapping mode
+    phys: dict[str, str]        # logical -> physical column name
+    field_ids: dict[str, int]   # logical -> parquet field id (id mode)
+    partitions: list[str]       # logical partition columns
+    # (version, kind, rel, {partition column: value}, include DV,
+    # exclude DV): the DV descriptors are position filters — include =
+    # emit only these physical row positions (newly-dead rows of an
+    # in-place DV rewrite), exclude = skip these (already-dead rows)
+    events: list[tuple]
+
+
+def plan_delta_changes(path: str, after: int | None,
+                       upto: int | None = None) -> DeltaChanges:
+    """The change events of the commits ``(after, upto]`` of the Delta
+    table at ``path`` (``upto=None`` = latest; ``after=None`` plans no
+    commit, for the table facts alone), the way the protocol defines
+    them: a commit carrying ``cdc`` actions describes its changes ONLY
+    through those files; any other commit derives inserts from its
+    data-changing adds and deletes from its removes, partition values
+    recovered from the pre-remove state.  A path removed and re-added
+    in one commit is an in-place rewrite (the shape a deletion-vector
+    DELETE writes): its deletes are the newly-dead positions, new DV
+    minus old DV.  File state entering the span comes from the newest
+    checkpoint ``<= after`` plus the JSON after it, so a
+    retention-cleaned log reads as long as a checkpoint covers the
+    cleaned prefix; the commits inside the span need their own JSON.
+    Partition values come typed by :func:`_partition_value`.  The one
+    change planner of ``read_delta_changes`` and the
+    ``padawan_delta_cdf`` stream."""
     versions = list_delta_versions(path)
     if not versions:
         raise FileNotFoundError(f"{path}: empty _delta_log")
-    if ending_version is None:
-        ending_version = versions[-1]
-    have = set(versions)
-    gap = [v for v in range(starting_version, ending_version + 1)
-           if v not in have]
+    upto = versions[-1] if upto is None else upto
+    after = upto if after is None else after
+    gap = [v for v in range(after + 1, upto + 1) if v not in versions]
     if gap:
         raise NotImplementedError(
             f"delta CDF needs the contiguous JSON commit history "
-            f"[{starting_version}..{ending_version}]; missing "
-            f"{gap[:10]} (log retention cleaned them; a checkpoint "
-            "cannot substitute — it has no per-commit changes)")
-    schema_json, part_cols, _files, mapping = replay_delta_log(
-        path, ending_version)
-    sch = json.loads(schema_json)
-
-    def _phys(f) -> str:
+            f"({after}..{upto}]; commits {gap[:10]} have no JSON log "
+            "entry (log retention cleaned them; a checkpoint cannot "
+            "substitute — it has no per-commit changes)")
+    schema_json, part_cols, _files, mapping = replay_delta_log(path, upto)
+    fields = json.loads(schema_json)["fields"]
+    phys, field_ids = {}, {}
+    for f in fields:
+        md = f.get("metadata") or {}
+        phys[f["name"]] = f["name"]
         if mapping in ("name", "id"):
-            pn = (f.get("metadata") or {}).get(
-                "delta.columnMapping.physicalName")
-            if not pn:
+            phys[f["name"]] = md.get("delta.columnMapping.physicalName")
+            if not phys[f["name"]]:
                 raise NotImplementedError(
                     f"column-mapped table field {f['name']!r} lacks "
                     "delta.columnMapping.physicalName metadata")
-            return pn
-        return f["name"]
-
-    fid_of: dict[int, str] = {}
-    if mapping == "id":
-        for f in sch["fields"]:
-            fid = (f.get("metadata") or {}).get(
-                "delta.columnMapping.id")
-            if fid is None:
+        if mapping == "id":
+            if md.get("delta.columnMapping.id") is None:
                 raise NotImplementedError(
                     f"id-mapped table field {f['name']!r} lacks "
                     "delta.columnMapping.id metadata")
-            fid_of[int(fid)] = f["name"]
-
-    phys = {f["name"]: _phys(f) for f in sch["fields"]}
+            field_ids[f["name"]] = int(md["delta.columnMapping.id"])
     # partitionColumns/partitionValues are physically keyed in a
     # mapped table
-    logical_parts = [next((ln for ln, pn in phys.items()
-                           if pn == c), c) for c in part_cols]
-    types = {f["name"]: _delta_type_ddl(f["type"])
-             for f in sch["fields"]}
-    fld_json = {f["name"]: f for f in sch["fields"]}
+    parts = [next((ln for ln, pn in phys.items() if pn == c), c)
+             for c in part_cols]
+    types = {f["name"]: f["type"] for f in fields}
+
+    def _typed(pv):
+        return {c: _partition_value((pv or {}).get(phys[c]), types[c])
+                for c in parts}
+
+    live: dict[str, tuple] = {}   # rel -> (partitionValues, dv desc)
+    if 0 <= after < upto:
+        _sj, _pc, files0, _m = replay_delta_log(path, version=after)
+        live = {rel: (pv, dv) for rel, pv, dv in files0}
+    events: list[tuple] = []
+    for v in range(after + 1, upto + 1):
+        with open(os.path.join(path, "_delta_log", f"{v:020d}.json")) as fh:
+            actions = [json.loads(line) for line in fh if line.strip()]
+        cdc, adds, removes = ([a[k] for a in actions if a.get(k)]
+                              for k in ("cdc", "add", "remove"))
+        # Reconcile the commit as a whole: a path removed AND re-added
+        # in the same commit is an in-place rewrite, whose change rows
+        # are the NEWLY-dead positions, not a remove-all/insert-all pair
+        repl = {ad["path"] for ad in adds} & {rm["path"] for rm in removes}
+        derived: list[tuple] = []
+        stash: dict[str, tuple] = {}
+        for rm in removes:
+            p = rm["path"]
+            old = live.pop(p, (rm.get("partitionValues") or {},
+                               rm.get("deletionVector")))
+            if p in repl:
+                stash[p] = old
+            elif rm.get("dataChange", True):
+                # a tombstoned file whose rows were partly DV-deleted
+                # must not re-emit the already-dead rows
+                derived.append((v, "delete", p, old[0], None, old[1]))
+        for ad in adds:
+            p, dv = ad["path"], ad.get("deletionVector")
+            pv = ad.get("partitionValues") or {}
+            if p in repl:
+                old_pv, old_dv = stash[p]
+                live[p] = (pv or old_pv, dv)
+                if ad.get("dataChange"):
+                    derived.append((v, "delete", p, pv or old_pv, dv, old_dv))
+                continue
+            live[p] = (pv, dv)
+            if ad.get("dataChange"):
+                # a fresh file pre-carrying a DV: its dead positions
+                # were never visible, so the insert skips them
+                derived.append((v, "insert", p, pv, None, dv))
+        events += ([(v, "cdc", c["path"], c.get("partitionValues"), None,
+                     None) for c in cdc] if cdc else derived)
+    return DeltaChanges(fields, mapping, phys, field_ids, parts,
+                        [(v, kind, rel, _typed(pv), inc, exc)
+                         for v, kind, rel, pv, inc, exc in events])
+
+
+def read_delta_changes(spark, path: str, starting_version: int = 0,
+                       ending_version: int | None = None):
+    """Change Data Feed interop: row-level changes between two
+    commit versions of an EXISTING Delta table, the commits
+    ``[starting_version, ending_version]`` that
+    :func:`plan_delta_changes` plans (the planner of the
+    ``padawan_delta_cdf`` stream too).  Output: data columns +
+    ``_change_type`` + ``_commit_version``, one distributed scan per
+    change file, no driver row work.  Column-mapped tables are fully
+    supported: ``name`` mode aliases physical columns back to logical;
+    ``id`` mode resolves each change file's physical layout by
+    PARQUET FIELD ID through one distributed footer job
+    (:mod:`.layouts`).  Deletion-vector position filters are decoded
+    in distributed tasks and applied via ``_metadata.row_index``
+    semi/anti joins.  A commit inside the range whose JSON log
+    retention cleaned raises rather than return a silently-partial
+    feed."""
+    from pyspark.sql import functions as F
+
     from .nested import delta_physical_type, remap_expr, remap_needed
+    plan = plan_delta_changes(path, starting_version - 1, ending_version)
+    events, phys = plan.events, plan.phys
+    types = {f["name"]: _delta_type_ddl(f["type"]) for f in plan.fields}
+    fld_json = {f["name"]: f for f in plan.fields}
     ptypes = {f["name"]: (delta_physical_type(f["type"])
-                          if mapping in ("name", "id")
+                          if plan.mapping in ("name", "id")
                           and not isinstance(f["type"], str)
                           else f["type"])
-              for f in sch["fields"]}
-    data_fields = [f["name"] for f in sch["fields"]
-                   if f["name"] not in logical_parts]
+              for f in plan.fields}
+    data_fields = [f["name"] for f in plan.fields
+                   if f["name"] not in plan.partitions]
     ddl = ", ".join(f"`{phys[n]}` {_phys_ddl(ptypes[n])}"
                     for n in data_fields)
     cdc_ddl = ddl + ", _change_type string"
@@ -1534,91 +1631,11 @@ def read_delta_changes(spark, path: str, starting_version: int = 0,
                                   fld_json[n]["type"]))
         return df
 
-    def _with_parts(df, pvals):
-        for c in logical_parts:
-            pv = (pvals or {}).get(phys[c])
-            df = df.withColumn(c, (F.lit(None) if pv is None
-                                   else F.lit(pv)).cast(types[c]))
-        return df
-
-    live: dict[str, tuple] = {}   # rel -> (partitionValues, dv desc)
-    if 0 < starting_version <= ending_version:
-        # state entering the range from the checkpoint-aware replay —
-        # O(commits since checkpoint), works on cleaned logs.
-        # (an empty range needs no state: zero events below)
-        _sj2, _pc2, files0, _m2 = replay_delta_log(
-            path, version=starting_version - 1)
-        live = {rel: (pv, dv) for rel, pv, dv in files0}
-    # (version, kind, rel, pvals, include_dv, exclude_dv) — the DV
-    # descriptors carry position filters: include = emit only these
-    # physical row positions (newly-dead rows of an in-place DV
-    # rewrite), exclude = skip these (already-dead rows)
-    events: list[tuple] = []
-    for v in sorted(v for v in have
-                    if starting_version <= v <= ending_version):
-        fp = os.path.join(path, "_delta_log", f"{v:020d}.json")
-        cdc, adds_all, removes_all = [], [], []
-        with open(fp) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                if a.get("cdc"):
-                    cdc.append(a["cdc"])
-                elif a.get("add"):
-                    adds_all.append(a["add"])
-                elif a.get("remove"):
-                    removes_all.append(a["remove"])
-        # Reconcile the commit as a whole: a path removed AND re-added
-        # in the same commit is an in-place rewrite — the shape a
-        # modern DELETE leaves when it attaches a deletion vector
-        # (remove old add + re-add the SAME file with the DV).  Its
-        # change rows are the NEWLY-dead positions (new DV minus old
-        # DV), not a remove-all/insert-all pair.
-        repl = ({ad["path"] for ad in adds_all}
-                & {rm["path"] for rm in removes_all})
-        derived: list[tuple] = []
-        stash: dict[str, tuple] = {}
-        for rm in removes_all:
-            p = rm["path"]
-            old_pv, old_dv = live.pop(
-                p, (rm.get("partitionValues") or {},
-                    rm.get("deletionVector")))
-            if p in repl:
-                stash[p] = (old_pv, old_dv)
-                continue
-            if rm.get("dataChange", True):
-                # a tombstoned file whose rows were partly
-                # DV-deleted must not re-emit the already-dead rows
-                derived.append(("delete", p, old_pv, None, old_dv))
-        for ad in adds_all:
-            p = ad["path"]
-            new_dv = ad.get("deletionVector")
-            pv = ad.get("partitionValues") or {}
-            if p in repl:
-                old_pv, old_dv = stash[p]
-                live[p] = (pv or old_pv, new_dv)
-                if ad.get("dataChange"):
-                    derived.append(("delete", p, pv or old_pv,
-                                    new_dv, old_dv))
-                continue
-            live[p] = (pv, new_dv)
-            if ad.get("dataChange"):
-                derived.append(("insert", p, pv, None, new_dv))
-        if cdc:
-            # spec rule: a commit with cdc actions describes its
-            # changes ONLY through them
-            events += [(v, "cdc", c["path"],
-                        c.get("partitionValues"), None, None)
-                       for c in cdc]
-        else:
-            events += [(v, kind, rel, pv, inc, exc)
-                       for kind, rel, pv, inc, exc in derived]
     # id mode: each change file's physical layout resolves by parquet
     # field id — ONE distributed footer job over every file in range;
     # footer TREES carry nested ids too
     lmaps: dict[str, dict[str, tuple]] = {}
-    if mapping == "id" and events:
+    if plan.mapping == "id" and events:
         # VARIANT columns resolve through the thrift footer-walk
         # fallback — no gate needed
         from .nested import match_tree_delta, parquet_field_trees
@@ -1630,14 +1647,7 @@ def read_delta_changes(spark, path: str, starting_version: int = 0,
             m = {}
             for n in data_fields:
                 f = fld_json[n]
-                fid = (f.get("metadata") or {}).get(
-                    "delta.columnMapping.id")
-                if fid is None:
-                    # the deliberate gate, not a bare KeyError
-                    raise NotImplementedError(
-                        f"id-mapped table field {n!r} lacks "
-                        "delta.columnMapping.id metadata")
-                node = by_fid.get(int(fid))
+                node = by_fid.get(plan.field_ids[n])
                 if node is None:
                     continue
                 pt = (match_tree_delta(f["type"], node)
@@ -1691,7 +1701,7 @@ def read_delta_changes(spark, path: str, starting_version: int = 0,
     out = None
     for i, (v, kind, rel, pvals, inc, exc) in enumerate(events):
         full = os.path.join(path, rel)
-        if mapping == "id":
+        if plan.mapping == "id":
             lm = lmaps[os.path.abspath(full)]
             ddl_f = ", ".join(f"`{lm[n][0]}` {_phys_ddl(lm[n][1])}"
                               for n in data_fields)
@@ -1728,10 +1738,11 @@ def read_delta_changes(spark, path: str, starting_version: int = 0,
             df = df.drop("__pos")
         if kind != "cdc":
             df = df.withColumn("_change_type", F.lit(kind))
-        df = (_with_parts(df, pvals)
-              .withColumn("_commit_version", F.lit(v).cast("bigint")))
+        for c, val in pvals.items():
+            df = df.withColumn(c, F.lit(val).cast(types[c]))
+        df = df.withColumn("_commit_version", F.lit(v).cast("bigint"))
         out = df if out is None else out.unionByName(df)
-    cols = [f["name"] for f in sch["fields"]]
+    cols = [f["name"] for f in plan.fields]
     if out is None:
         return spark.createDataFrame(
             [], ", ".join(f"`{n}` {types[n]}" for n in cols)

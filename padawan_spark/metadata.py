@@ -356,6 +356,61 @@ def vacuum(path: str, keep_last: int = 1) -> dict:
             "snapshots_kept": keep}
 
 
+@dataclass
+class ChangeSpan:
+    """A change feed's span as :func:`plan_changes` plans it."""
+    # (version, added files, removed files) per commit, absolute paths
+    commits: list[tuple[int, list[str], list[str]]]
+    index_columns: tuple[str, ...]
+    schema: object      # newest StructType recorded in the span, or None
+
+
+def plan_changes(path: str, after: int,
+                 upto: int | None = None) -> ChangeSpan:
+    """The commits ``(after, upto]`` of the dataset at ``path``
+    (``upto=None`` = current), each as the files its snapshot added to
+    and removed from the one before, in manifest order.  Version 0 is
+    the empty table, so ``after=0`` reads the first write as added
+    files.  A commit's change set is that diff of two snapshots, so
+    every snapshot in ``[after, upto]`` must still exist: one that
+    vacuum expired fails here instead of dropping its commit.  The one
+    change planner of padawan's change feeds, ``dataset.read_changes``
+    and the ``padawan_cdf`` stream."""
+    versions = list_versions(path)
+    latest = versions[-1] if versions else 0
+    upto = latest if upto is None else upto
+    if not 0 <= after <= latest:
+        raise ValueError(f"no snapshot v{after} at {path}; have {versions}")
+    if not after <= upto <= latest:
+        raise ValueError(f"bad version range ({after}, {upto}] at {path}; "
+                         f"have {versions}")
+    span = range(max(after, 1), upto + 1)
+    gone = [v for v in span if v not in versions]
+    if gone:
+        raise ValueError(
+            f"snapshot v{gone[0]} at {path} no longer exists: it has been "
+            f"vacuumed (retained versions: {versions}), so the change "
+            f"history of ({after}, {upto}] is gone; keep every snapshot a "
+            "change feed may start from (vacuum keep_last)")
+    mans = {v: load_manifest(path, version=v) for v in span}
+    commits = []
+    prev = mans[after].files if after else []
+    for v in range(after + 1, upto + 1):
+        cur = mans[v].files
+        kept = set(prev) & set(cur)
+        commits.append((v, *([os.path.abspath(os.path.join(path, f))
+                              for f in files if f not in kept]
+                             for files in (cur, prev))))
+        prev = cur
+    # a snapshot records no schema when write_metadata adopted a
+    # directory without a non-empty parquet file (every other commit
+    # records one), so the span's schema is its newest recorded one
+    return ChangeSpan(
+        commits, mans[upto].index_columns if upto else (),
+        next((mans[v].schema for v in reversed(span)
+              if mans[v].schema_json), None))
+
+
 def has_manifest(path: str) -> bool:
     return os.path.exists(manifest_path(path))
 

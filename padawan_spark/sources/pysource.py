@@ -438,15 +438,17 @@ class ManifestTailSource(DataSource):
 
 # ---------------------------------------------------------------------------
 # Row-level CDF STREAM source: the streaming twin of dataset.read_changes.
-# Offsets are version numbers (same identity/regression/vacuum guards as
-# padawan_tail); each micro-batch emits the CHANGE ROWS of the commits in
-# (start, end] with Delta-CDF classification (insert / delete /
-# update_preimage / update_postimage).  Append commits fan out one
-# InputPartition per added file (fully task-parallel, no diff work);
-# whole-file drops likewise per removed file; only genuine rewrite
-# commits (copy-on-write delete/merge) read that commit's added+removed
-# files in one task to cancel verbatim-carried survivor rows — bounded
-# by the commit's size, never the table's.
+# Offsets are version numbers (same identity/regression guards as
+# padawan_tail; version 0 = the empty table); each micro-batch emits the
+# CHANGE ROWS of the commits in (start, end] with Delta-CDF
+# classification (insert / delete / update_preimage / update_postimage).
+# metadata.plan_changes, the planner read_changes also uses, gives each
+# commit's added and removed files and holds the vacuum guard; this
+# reader only maps them to partitions.  A commit that only adds (or only
+# removes) files fans out one InputPartition per file, with no diff
+# work; a rewrite commit (copy-on-write delete/merge/compaction) reads
+# its added+removed files in one task to cancel verbatim-carried
+# survivor rows — bounded by the commit's size, never the table's.
 # ---------------------------------------------------------------------------
 
 
@@ -463,62 +465,22 @@ class _ManifestCDFReader(_ManifestTailReader):
         return {"v": self.start_version,
                 "id": self._stamp(_meta.table_id(self.path))}
 
-    def _manifest_of(self, version: int):
-        from .. import metadata as _meta
-        if version <= 0:
-            return ()
-        try:
-            return _meta.load_manifest(self.path, version=version)
-        except FileNotFoundError:
-            return None
-
     def partitions(self, start, end):
-        import os as _os
+        from .. import metadata as _meta
         lo, hi = self._guard_span(start, end)
         if hi <= lo:
             return [InputPartition(None)]
+        span = _meta.plan_changes(self.path, lo, hi)
         parts = []
-        prev = self._manifest_of(lo)
-        if prev is None:
-            raise RuntimeError(
-                f"padawan_cdf: checkpointed snapshot v{lo} at {self.path} "
-                "no longer exists (expired by metadata.vacuum).  Keep at "
-                "least the snapshots an active stream may restart from "
-                "(vacuum keep_last), or restart the stream with a fresh "
-                "checkpointLocation.")
-        for v in range(lo + 1, hi + 1):
-            cur = self._manifest_of(v)
-            if cur is None:
-                # unlike the file-level tail, a change feed cannot skip
-                # an expired intermediate snapshot: its per-commit diff
-                # (and the version attribution of every row in it) is
-                # gone for good
-                raise RuntimeError(
-                    f"padawan_cdf: snapshot v{v} at {self.path} was "
-                    "expired by metadata.vacuum mid-history; the change "
-                    "feed for commit v{v} is unrecoverable.  Vacuum only "
-                    "past the stream's checkpoint, or restart with a "
-                    "fresh checkpointLocation.")
-            prev_files = list(prev.files) if prev != () else []
-            cur_set = set(cur.files)
-            prev_set = set(prev_files)
-            removed = [f for f in prev_files if f not in cur_set]
-            added = [f for f in cur.files if f not in prev_set]
-            if not removed:
-                parts += [InputPartition(
-                    ("rows", _os.path.join(self.path, f), v, "insert"))
-                    for f in added]
-            elif not added:
-                parts += [InputPartition(
-                    ("rows", _os.path.join(self.path, f), v, "delete"))
-                    for f in removed]
-            else:
+        for v, added, removed in span.commits:
+            if added and removed:
                 parts.append(InputPartition(
-                    ("diff",
-                     [_os.path.join(self.path, f) for f in added],
-                     [_os.path.join(self.path, f) for f in removed],
-                     v, list(cur.index_columns))))
-            prev = cur
+                    ("diff", added, removed, v, list(span.index_columns))))
+            else:
+                parts += [InputPartition(("rows", f, v, kind))
+                          for kind, files in (("insert", added),
+                                              ("delete", removed))
+                          for f in files]
         return parts or [InputPartition(None)]
 
     def read(self, partition):
@@ -536,18 +498,17 @@ class _ManifestCDFReader(_ManifestTailReader):
                 const={"_commit_version": ver, "_change_type": ctype})
             return
         _k, added, removed, ver, ix = partition.value
+        import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as _pc
+        import pyarrow.compute as pc
 
         from pyspark.sql.pandas.types import to_arrow_schema
-        pa_schema = to_arrow_schema(self.spark_schema)
         # align every file to the DECLARED data columns (the schema ends
         # with _commit_version, _change_type): a column the file predates
         # reads as nulls, and physical types that vary per file (a
         # writer's int32 vs int64) are cast, so the hash aggregation
         # groups value-identical rows together
         data = StructType(self.spark_schema.fields[:-2])
-        cols = data.names
 
         def _signed(paths, sign):
             tb = pa.Table.from_batches(
@@ -555,47 +516,51 @@ class _ManifestCDFReader(_ManifestTailReader):
                  for b in _aligned_batches(pq.read_table(p), data)],
                 schema=to_arrow_schema(data))
             return tb.append_column(
-                "__sign", pa.array([sign] * tb.num_rows,
-                                   type=pa.int64()))
+                "__sign", pa.repeat(pa.scalar(sign, pa.int64()),
+                                    tb.num_rows))
 
-        # vectorized MULTISET DIFFERENCE: one Arrow hash
-        # aggregation over added(+1) ∪ removed(−1); verbatim
-        # copy-on-write survivors land on net == 0 and vanish INSIDE
-        # Arrow — python touches only the rows that actually changed,
-        # with |net| as the multiplicity
-        both = pa.concat_tables([_signed(added, 1),
-                                 _signed(removed, -1)],
-                                promote_options="default")
-        net = (both.group_by(cols)
-               .aggregate([("__sign", "sum")]))
-        net = net.filter(_pc.not_equal(net.column("__sign_sum"), 0))
-        rows = net.to_pylist()
-        ikeys = {tuple(r[c] for c in ix) for r in rows
-                 if r["__sign_sum"] > 0}
-        dkeys = {tuple(r[c] for c in ix) for r in rows
-                 if r["__sign_sum"] < 0}
-        # index keys on BOTH sides classify as an update pair
-        upd = (ikeys & dkeys) if ix else set()
-        out_rows = []
-        for r in rows:
-            n_ = r["__sign_sum"]
-            hit = ix and tuple(r[c] for c in ix) in upd
-            ct = (("update_postimage" if hit else "insert") if n_ > 0
-                  else ("update_preimage" if hit else "delete"))
-            row = tuple(r[c] for c in cols) + (ver, ct)
-            out_rows.extend([row] * abs(n_))
-        if out_rows:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([r[i] for r in out_rows], type=f.type)
-                 for i, f in enumerate(pa_schema)],
-                schema=pa_schema)
+        # vectorized MULTISET DIFFERENCE: one Arrow hash aggregation
+        # over added(+1) ∪ removed(−1); verbatim copy-on-write survivors
+        # land on net == 0 and vanish, and every other row repeats |net|
+        # times
+        net = (pa.concat_tables([_signed(added, 1), _signed(removed, -1)])
+               .group_by(data.names).aggregate([("__sign", "sum")]))
+        net = net.filter(pc.not_equal(net["__sign_sum"], 0))
+        sign = net["__sign_sum"]
+        upd = pa.repeat(pa.scalar(False), net.num_rows)
+        if ix and net.num_rows:
+            # an index key with both a positive and a negative net row
+            # is an update; Arrow groups NULL with NULL and NaN with NaN,
+            # as the window of read_changes does
+            keyed = net.append_column(
+                "__row", pa.array(np.arange(net.num_rows)))
+            g = keyed.group_by(ix).aggregate([
+                ("__sign_sum", "max"), ("__sign_sum", "min"),
+                ("__row", "list")])
+            both = pc.and_(pc.greater(g["__sign_sum_max"], 0),
+                           pc.less(g["__sign_sum_min"], 0))
+            rows = pc.list_flatten(g["__row_list"])
+            upd = pc.take(pc.take(both, pc.list_parent_indices(
+                g["__row_list"])), pc.sort_indices(rows))
+        pos = pc.greater(sign, 0)
+        net = net.append_column("_change_type", pc.if_else(
+            pos, pc.if_else(upd, "update_postimage", "insert"),
+            pc.if_else(upd, "update_preimage", "delete")))
+        yield from _aligned_batches(
+            net.take(np.repeat(np.arange(net.num_rows),
+                               pc.abs(sign).to_numpy())),
+            self.spark_schema, const={"_commit_version": ver})
 
 
 class ManifestCDFSource(DataSource):
     """``spark.readStream.format("padawan_cdf").option("path", dir)`` —
     stream row-level changes of a manifest dataset (the streaming twin
-    of :func:`padawan_spark.dataset.read_changes`).  The schema is
-    derived from the table's manifest (table columns plus
+    of :func:`padawan_spark.dataset.read_changes`: both plan each span
+    with :func:`padawan_spark.metadata.plan_changes`, so they give the
+    same rows).  Offsets are snapshot versions, starting after
+    ``startingVersion`` (default 0; version 0 is the empty table, so
+    the first write streams as inserts).  The schema is derived from
+    the table's manifest (table columns plus
     ``_commit_version``/``_change_type``), so consumers need not repeat
     it.  Same maintenance contract as ``padawan_tail``, stricter on
     vacuum: every snapshot in the un-streamed span must still exist."""
@@ -744,20 +709,21 @@ class AvroSource(DataSource):
 # ---------------------------------------------------------------------------
 # Delta CDF stream source: the streaming twin of
 # functions.delta.read_delta_changes — offsets are Delta commit
-# versions, each micro-batch reads the change files of the versions in
-# (start, end]: commits carrying ``cdc`` actions use only those
-# (protocol rule), others derive inserts from data-changing adds and
-# deletes from removes (partition values recovered from the
-# pre-remove state, files read pre-vacuum).  One InputPartition per
-# change file; rows decoded worker-side through pyarrow.
+# versions (the initial offset is startingVersion - 1; offset -1 is the
+# empty table before commit 0), and each micro-batch reads the change
+# files of the versions in (start, end].
+# functions.delta.plan_delta_changes, the planner read_delta_changes
+# also uses, decides the change events (the cdc-only rule, the
+# deletion-vector rewrite rule, the checkpoint-initialized file state,
+# the contiguous-JSON guard) and types their partition values; this
+# reader maps one event to one InputPartition and decodes rows
+# worker-side through pyarrow.
 # ---------------------------------------------------------------------------
 
 
 class _DeltaCDFStreamReader(DataSourceStreamReader):
     def __init__(self, options, schema):
-        import json as _json
-
-        from ..functions.delta import replay_delta_log
+        from ..functions.delta import plan_delta_changes
         self.path = options["path"]
         self.start_version = int(options.get("startingVersion", 0))
         self._max_versions = int(options.get("maxVersionsPerTrigger",
@@ -765,33 +731,19 @@ class _DeltaCDFStreamReader(DataSourceStreamReader):
         self._last_end = None
         self.spark_schema = schema
         self.names = list(schema.names)
-        self.types = {f.name: f.dataType.simpleString()
-                      for f in schema.fields}
-        # column mapping: logical -> physical parquet column
-        # for 'name' mode; partitionValues are physically keyed in
-        # BOTH modes (they use the metadata physicalName).  'id' mode
+        # column mapping: partitionValues are physically keyed and
+        # 'name' mode reads the physical parquet column; 'id' mode
         # additionally matches each file's columns by parquet footer
-        # field id inside read() — the file is open there anyway.
-        schema_json, _pc, _files, mapping = replay_delta_log(
-            self.path)
-        self.mapping = mapping
-        self.phys = {}
-        self.fid_of = {}
-        self.nested_json = {}
-        if mapping in ("name", "id"):
-            for f in _json.loads(schema_json)["fields"]:
-                md = f.get("metadata") or {}
-                pn = md.get("delta.columnMapping.physicalName")
-                if pn:
-                    self.phys[f["name"]] = pn
-                fid = md.get("delta.columnMapping.id")
-                if fid is not None:
-                    self.fid_of[int(fid)] = f["name"]
-                if not isinstance(f["type"], str):
-                    # nested column in a MAPPED table: the read
-                    # task renames inner struct fields back to their
-                    # logical names via a zero-copy arrow view
-                    self.nested_json[f["name"]] = f["type"]
+        # field id inside read() — the file is open there anyway
+        plan = plan_delta_changes(self.path, None)
+        self.mapping = plan.mapping
+        self.phys = plan.phys
+        self.fid_of = {fid: n for n, fid in plan.field_ids.items()}
+        # nested columns in a MAPPED table: the read task renames inner
+        # struct fields back to their logical names via an arrow view
+        self.nested_json = {f["name"]: f["type"] for f in plan.fields
+                            if plan.mapping in ("name", "id")
+                            and not isinstance(f["type"], str)}
 
     def initialOffset(self):
         self._last_end = self.start_version - 1
@@ -810,118 +762,27 @@ class _DeltaCDFStreamReader(DataSourceStreamReader):
         import json as _json
         import os as _os
 
-        from ..functions.delta import (list_delta_versions,
-                                       replay_delta_log)
+        from ..functions.delta import plan_delta_changes
         lo, hi = start["v"], end["v"]
         self._last_end = hi
         if hi <= lo:
             return [InputPartition(None)]
-        versions = list_delta_versions(self.path)
-        have = set(versions)
-        gap = [v for v in range(lo + 1, hi + 1) if v not in have]
-        if gap:
-            # the commits INSIDE the span need their own JSON — a
-            # checkpoint compacts state and cannot reconstruct a
-            # commit's row-level diff
-            raise NotImplementedError(
-                f"padawan_delta_cdf: commits {gap[:10]} in the "
-                f"stream span ({lo}, {hi}] have no JSON log entry "
-                "(log retention cleaned them) — their change feed "
-                "is unrecoverable")
-        # rel -> (partitionValues, deletionVector descriptor | None),
-        # entering the span: initialized from the NEWEST CHECKPOINT
-        # <= lo and only the JSON after it
-        # — a log-retention-cleaned table streams as long as a
-        # checkpoint covers the cleaned prefix, and stream-start
-        # planning costs O(commits since checkpoint), not O(all
-        # commits since version 0)
-        live: dict[str, tuple] = {}
-        if lo >= 0:
-            _sj, _pc, files, _m = replay_delta_log(self.path,
-                                                   version=lo)
-            live = {rel: (pv, dv) for rel, pv, dv in files}
-        parts = []
-        for v in sorted(v for v in have if lo < v <= hi):
-            fp = _os.path.join(self.path, "_delta_log",
-                               f"{v:020d}.json")
-            cdc, adds_all, removes_all = [], [], []
-            with open(fp) as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    a = _json.loads(line)
-                    if a.get("cdc"):
-                        cdc.append(a["cdc"])
-                    elif a.get("add"):
-                        adds_all.append(a["add"])
-                    elif a.get("remove"):
-                        removes_all.append(a["remove"])
-            # Reconcile the commit as a whole BEFORE emitting events:
-            # a path removed AND re-added in the same commit is an
-            # in-place rewrite — the shape a modern DELETE leaves when
-            # it attaches a deletion vector (remove old add + re-add
-            # the SAME file with the DV descriptor).  Its change rows
-            # are the NEWLY-dead positions (new DV minus old DV), not
-            # a remove-all/insert-all pair.
-            repl = ({ad["path"] for ad in adds_all}
-                    & {rm["path"] for rm in removes_all})
-            events = []  # (kind, rel, pv, include_dv, exclude_dv)
-            stash: dict[str, tuple] = {}
-            for rm in removes_all:
-                p = rm["path"]
-                old_pv, old_dv = live.pop(
-                    p, (rm.get("partitionValues") or {},
-                        rm.get("deletionVector")))
-                if p in repl:
-                    stash[p] = (old_pv, old_dv)
-                    continue
-                if rm.get("dataChange", True):
-                    # tombstone of a DV'd file: the already-dead
-                    # positions must not re-emit as deletes
-                    events.append(("delete", p, old_pv, None, old_dv))
-            for ad in adds_all:
-                p = ad["path"]
-                new_dv = ad.get("deletionVector")
-                pv = ad.get("partitionValues") or {}
-                if p in repl:
-                    old_pv, old_dv = stash[p]
-                    live[p] = (pv or old_pv, new_dv)
-                    if ad.get("dataChange"):
-                        # rewrite in place: deletes = new DV − old DV
-                        events.append(("delete", p, pv or old_pv,
-                                       new_dv, old_dv))
-                    continue
-                live[p] = (pv, new_dv)
-                if ad.get("dataChange"):
-                    # fresh file pre-carrying a DV: its dead positions
-                    # were never visible, skip them in the insert
-                    events.append(("insert", p, pv, None, new_dv))
-            if cdc:
-                # spec rule: a commit with cdc actions describes its
-                # changes ONLY through them
-                parts += [InputPartition(
-                    ("cdc", _os.path.join(self.path, c["path"]), v,
-                     tuple(sorted((c.get("partitionValues")
-                                   or {}).items())), None, None))
-                    for c in cdc]
-            else:
-                parts += [InputPartition(
-                    (kind, _os.path.join(self.path, rel), v,
-                     tuple(sorted(pv.items())),
-                     _json.dumps(inc) if inc else None,
-                     _json.dumps(exc) if exc else None))
-                    for kind, rel, pv, inc, exc in events]
-        return parts or [InputPartition(None)]
+        return [InputPartition(
+            (kind, _os.path.join(self.path, rel), v, pv,
+             _json.dumps(inc) if inc else None,
+             _json.dumps(exc) if exc else None))
+            for v, kind, rel, pv, inc, exc
+            in plan_delta_changes(self.path, lo, hi).events
+        ] or [InputPartition(None)]
 
     def read(self, partition):
         if partition.value is None:
             return
-        kind, full, v, pv_items, inc_json, exc_json = partition.value
+        kind, full, v, pv, inc_json, exc_json = partition.value
         import os as _os
 
         import pyarrow as pa
         import pyarrow.parquet as pq
-        pv = dict(pv_items)
         tb = pq.read_table(full)
         # DV position filters decode IN THIS TASK (never the driver)
         # and apply as ARROW MASKS over the physical row positions:
@@ -954,18 +815,6 @@ class _DeltaCDFStreamReader(DataSourceStreamReader):
                     sorted(exc), type=pa.int64())))
             tb = tb.filter(keep)
 
-        def conv(c, raw):
-            if raw is None:
-                return None
-            t = self.types.get(c, "string")
-            if t in ("bigint", "int", "smallint", "tinyint"):
-                return int(raw)
-            if t in ("double", "float"):
-                return float(raw)
-            if t == "boolean":
-                return raw in (True, "true", "True")
-            return raw
-
         col_of = {c: self.phys.get(c, c) for c in self.names}
         if self.mapping == "id":
             # id mode: the FILE's column names are matched by footer
@@ -987,18 +836,12 @@ class _DeltaCDFStreamReader(DataSourceStreamReader):
                         idx, fc,
                         arrow_logical_view(
                             tb.column(idx).combine_chunks(), tj))
-        const = {"_commit_version": v}
+        # partition values attach as typed constants; cdc files carry
+        # their own _change_type column, and derived events stamp the
+        # whole file's rows with one kind
+        const = {**pv, "_commit_version": v}
         if kind != "cdc":
-            # cdc files carry their own _change_type column; derived
-            # events stamp the whole file's rows with one kind
             const["_change_type"] = kind
-        for c in self.names:
-            if c in ("_change_type", "_commit_version"):
-                continue
-            p_key = self.phys.get(c, c)
-            if p_key in pv:
-                # partition values attach as typed constants
-                const[c] = conv(c, pv[p_key])
         yield from _aligned_batches(tb, self.spark_schema,
                                     const=const, col_of=col_of)
 
@@ -1009,16 +852,20 @@ class _DeltaCDFStreamReader(DataSourceStreamReader):
 class DeltaCDFSource(DataSource):
     """``spark.readStream.format("padawan_delta_cdf")`` — stream the
     change feed of an existing Delta table; schema = table columns +
-    ``_change_type`` + ``_commit_version``.  Column-mapped tables
-    stream under their LOGICAL names: ``name`` mode resolves
-    through the schema's physicalName metadata, ``id`` mode by each
-    file's parquet footer field ids inside the read task.  Live-file
-    state entering a span initializes from the newest CHECKPOINT
-    ``<= start``: a log-retention-cleaned table streams as long
-    as a checkpoint covers the cleaned prefix, and stream-start
-    planning is O(commits since checkpoint); only the commits INSIDE
-    the span need their own JSON (a checkpoint cannot reconstruct a
-    commit's row-level diff)."""
+    ``_change_type`` + ``_commit_version``.  Offsets are commit
+    versions; the stream starts after ``startingVersion - 1`` (default
+    0: offset -1 is the empty table, so the first micro-batch holds
+    commit 0).  Each span ``(start, end]`` is planned by
+    :func:`padawan_spark.functions.delta.plan_delta_changes`, the
+    planner of the batch ``read_delta_changes``, so both give the same
+    rows: live-file state entering a span initializes from the newest
+    CHECKPOINT ``<= start`` (a log-retention-cleaned table streams as
+    long as a checkpoint covers the cleaned prefix), the commits
+    INSIDE the span need their own JSON, and partition values come
+    typed.  Column-mapped tables stream under their LOGICAL names:
+    ``name`` mode resolves through the schema's physicalName metadata,
+    ``id`` mode by each file's parquet footer field ids inside the
+    read task."""
 
     @classmethod
     def name(cls):

@@ -2004,58 +2004,6 @@ def test_cdf_stream_source_startingversion_and_vacuum_guard(spark, tmp_path):
         run(0)
 
 
-def test_cdf_stream_matches_read_changes_on_evolved_table(spark, tmp_path):
-    """The padawan_cdf stream and read_changes give the same change rows
-    on a table whose schema evolved: files written before a merge_schema
-    append read the added column as nulls in both feeds, through a
-    delete, a merge that updates the NULL key and a compaction."""
-    import collections
-    import uuid
-
-    from padawan_spark import (compact_parquet, delete_rows, merge_rows,
-                               read_changes)
-    from padawan_spark.sources import register_python_sources
-
-    register_python_sources(spark)
-    p = str(tmp_path / "cdfevolve")
-    kvw = "k bigint, v bigint, w string"
-    Dataset(spark, spark.createDataFrame(
-        [(None, -1)] + [(k, k) for k in range(12)], "k bigint, v bigint"),
-        index_columns=("k",)).reindex(("k",)).repartition(3).write_parquet(p)
-    Dataset(spark, spark.createDataFrame([(20, 20, "x")], kvw),
-            index_columns=("k",)).write_parquet(p, append=True,
-                                                merge_schema=True)
-    delete_rows(spark, p, (3,), (4,))                            # v3
-    merge_rows(spark, p, Dataset(spark, spark.createDataFrame(   # v4
-        [(None, 99, "n"), (6, 66, None), (30, 30, "y")], kvw),
-        index_columns=("k",)))
-    compact_parquet(spark, p, 100)                               # v5
-
-    name = "cdf_" + uuid.uuid4().hex[:8]
-    q = (spark.readStream.format("padawan_cdf").option("path", p)
-         .option("startingVersion", "1").load()
-         .writeStream.format("memory").queryName(name).start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    key = ("_commit_version", "_change_type", "k", "v", "w")
-
-    def _ms(rows):
-        return collections.Counter(tuple(r[c] for c in key) for r in rows)
-    streamed = _ms(spark.table(name).collect())
-    assert streamed == _ms(read_changes(spark, p, 1).collect())
-    assert streamed == _ms([
-        dict(zip(key, t)) for t in [
-            (2, "insert", 20, 20, "x"),
-            (3, "delete", 3, 3, None), (3, "delete", 4, 4, None),
-            (4, "update_preimage", None, -1, None),
-            (4, "update_postimage", None, 99, "n"),
-            (4, "update_preimage", 6, 6, None),
-            (4, "update_postimage", 6, 66, None),
-            (4, "insert", 30, 30, "y")]])
-
-
 @pytest.mark.slow
 def test_schema_evolution_lifecycle(spark, tmp_path):
     """merge_schema appends ADD columns — pre-evolution files
