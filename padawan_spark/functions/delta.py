@@ -750,12 +750,10 @@ def write_delta_fixture(spark, df, path: str, partition_by=(),
     phys = {c: (f"col-{uuid.uuid5(uuid.NAMESPACE_URL, c).hex[:12]}"
                 if cm_mode else c) for c in df.columns}
     fids = {c: i + 1 for i, c in enumerate(df.columns)}
-    # nested columns: the schemaString needs the JSON type tree
-    # (Delta's schemaString is Spark's schema JSON); flat columns keep
-    # the DDL string form for continuity
+    # Delta's schemaString is Spark's schema JSON: primitive types
+    # under their JSON names (`long`, `integer`), nested ones as trees
     json_types = {f["name"]: f["type"]
                   for f in df.schema.jsonValue()["fields"]}
-    ddl_types = dict(df.dtypes)
 
     def _cm_nested(t, counter):
         # inject per-field id + physicalName metadata into NESTED
@@ -790,8 +788,6 @@ def write_delta_fixture(spark, df, path: str, partition_by=(),
         raise NotImplementedError(f"delta fixture type {t!r}")
 
     def _sch_type(c, counter):
-        if isinstance(json_types[c], str):
-            return ddl_types[c]
         return (_cm_nested(json_types[c], counter) if cm_mode
                 else json_types[c])
 
@@ -1435,15 +1431,14 @@ def remove_delta_files_fixture(path: str, match) -> int:
 def _partition_value(raw: str | None, dtype: str):
     """A partition value as the protocol serializes it (a string; null
     or empty for NULL) decoded to a Python value of type ``dtype``, a
-    schemaString primitive under its Delta or its Spark name (``long``
-    or ``bigint``).  A timestamp without a zone is UTC, the session
-    zone ``get_spark`` sets; a ``timestamp_ntz`` stays naive."""
+    schemaString primitive type name (``long``, ``integer``).  A
+    timestamp without a zone is UTC, the session zone ``get_spark``
+    sets; a ``timestamp_ntz`` stays naive."""
     import datetime
     import decimal
     if raw is None or raw == "":
         return None
-    if dtype in ("byte", "tinyint", "short", "smallint", "integer", "int",
-                 "long", "bigint"):
+    if dtype in ("byte", "short", "integer", "long"):
         return int(raw)
     if dtype in ("float", "double"):
         return float(raw)

@@ -68,6 +68,7 @@ from __future__ import annotations
 import json
 import os
 import re
+from dataclasses import dataclass
 
 
 def orc_stripe_position_frames(path: str, pmapping: dict,
@@ -719,30 +720,37 @@ def live_data_files(path: str, snapshot_id: int | None = None,
             sorted(delete_files))
 
 
-def _schema_inventory(path: str, schema_id: int | None = None):
-    """Schema fields WITH ids (``schema_id`` — a time-traveled
-    snapshot's own schema — or current), and how many schemas the
-    table has carried (``> 1`` means evolution happened and column
-    resolution must go through parquet field ids, per the spec's
-    "columns are matched by field id" rule)."""
-    with open(_latest_metadata(path)) as fh:
-        meta = json.load(fh)
-    if "schemas" in meta:
-        sid = (schema_id if schema_id is not None
-               else meta.get("current-schema-id", 0))
-        schema = next(s for s in meta["schemas"]
-                      if s.get("schema-id", 0) == sid)
-        n = len(meta["schemas"])
-    else:
-        schema, n = meta["schema"], 1
-    return {f["name"]: f["id"] for f in schema["fields"]}, n
+@dataclass(frozen=True)
+class IcebergColumns:
+    """The column facts of one Iceberg schema that every reader of
+    its data files needs."""
+    fields: tuple        # ((name, Spark DDL type), ...) in schema order
+    raw: dict            # name -> schema-JSON field, ids at every level
+    field_ids: dict      # name -> field id
+    evolved: bool        # the table has carried more than one schema
+    defaults: dict       # name -> v3 initial-default as a Python value
+    identity: dict       # spec id -> {partition field: source column}
+
+    @property
+    def nested(self) -> list:
+        """The struct, list and map columns."""
+        return [n for n, f in self.raw.items()
+                if not isinstance(f["type"], str)]
+
+    def constants(self, pvals: dict, spec: int) -> dict:
+        """``{source column: value}`` of the identity partition fields
+        in ``pvals`` (a data file's partition record under ``spec``)."""
+        src_of = self.identity.get(spec, {})
+        return {src_of[f]: v for f, v in pvals.items() if f in src_of}
 
 
-def _schema_fields_json(path: str, schema_id: int | None = None):
-    """Raw schema-JSON fields (``{name: field}`` with ids at every
-    nesting level) — what the nested footer-tree match needs."""
-    with open(_latest_metadata(path)) as fh:
-        meta = json.load(fh)
+def iceberg_columns(meta: dict,
+                    schema_id: int | None = None) -> IcebergColumns:
+    """The column facts of schema ``schema_id`` (None: the current
+    schema) in table metadata ``meta``.  A table that carried more than
+    one schema is ``evolved``: its columns resolve by footer field id,
+    per the spec's "columns are matched by field id" rule.  An
+    initial-default of an unsupported type raises here."""
     if "schemas" in meta:
         sid = (schema_id if schema_id is not None
                else meta.get("current-schema-id", 0))
@@ -750,7 +758,20 @@ def _schema_fields_json(path: str, schema_id: int | None = None):
                       if s.get("schema-id", 0) == sid)
     else:
         schema = meta["schema"]
-    return {f["name"]: f for f in schema["fields"]}
+    raw = {f["name"]: f for f in schema["fields"]}
+    types = {n: _ice_type_ddl(f["type"]) for n, f in raw.items()}
+    field_ids = {n: f["id"] for n, f in raw.items()}
+    name_of = {v: k for k, v in field_ids.items()}
+    return IcebergColumns(
+        fields=tuple(types.items()), raw=raw, field_ids=field_ids,
+        evolved=len(meta.get("schemas", ())) > 1,
+        defaults={n: _ice_default_py(f["initial-default"], types[n], n)
+                  for n, f in raw.items()
+                  if f.get("initial-default") is not None},
+        identity={s: {fname: src for t, _p, src, fname
+                      in _parse_part_spec(sp, name_of)
+                      if t == "identity"}
+                  for s, sp in _raw_specs(meta).items()})
 
 
 def added_data_files(path: str, snapshot_id: int):
@@ -858,6 +879,171 @@ def _eq_delete_union(spark, pfs, eq_names, eq_layouts, fld_ids,
     return dels
 
 
+def _abs_path(table: str, v: str) -> str:
+    """A ``file_path`` as a delete file records it (a ``file:`` URI or
+    a path relative to ``table``) as a plain absolute path."""
+    if v.startswith("file:"):
+        v = "/" + v[5:].lstrip("/")
+    return v if v.startswith("/") else os.path.join(
+        os.path.abspath(table), v)
+
+
+def _abs_path_col(table: str, col):
+    """:func:`_abs_path` as a Spark expression over column ``col``."""
+    from pyspark.sql import functions as F
+    c = F.regexp_replace(col, "^file:/+", "/")
+    return F.when(c.startswith("/"), c).otherwise(
+        F.concat(F.lit(os.path.abspath(table) + "/"), c))
+
+
+def _pos_delete_targets(table: str, pos_files) -> set:
+    """The data files the position-delete files ``pos_files`` address,
+    as absolute paths.  Read on the driver from the ``file_path``
+    column alone: planning metadata, no Spark job."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    out = set()
+    for dp in pos_files:
+        col = pq.read_table(dp, columns=["file_path"]).column("file_path")
+        out.update(_abs_path(table, v)
+                   for v in pc.unique(col).to_pylist())
+    return out
+
+
+def _pos_delete_keys(spark, table: str, pos_files):
+    """The ``(__fp, __pos)`` rows of the position-delete files
+    ``pos_files``: one distributed parquet scan."""
+    from pyspark.sql import functions as F
+    return (spark.read.schema("file_path string, pos bigint")
+            .parquet(*sorted(pos_files))
+            .select(_abs_path_col(table, F.col("file_path")).alias("__fp"),
+                    F.col("pos").alias("__pos")))
+
+
+def _dv_keys(spark, entries):
+    """The ``(__fp, __pos)`` rows of v3 deletion vectors ``[(data file,
+    (puffin, offset, size), predecessor or None)]``: each vector's
+    positions minus its predecessor's.  The blobs decode in the tasks,
+    one vector per row, so the driver never holds a bitmap."""
+    rows = [(ref, *new, *(old or (None, 0, 0)))
+            for ref, new, old in entries]
+
+    def _expand(batches):
+        import pandas as pd
+        for pdf in batches:
+            for ref, p, off, sz, op, ooff, osz in pdf.itertuples(
+                    index=False):
+                pos = _read_puffin_dv(p, int(off), int(sz))
+                if op is not None:
+                    old = set(_read_puffin_dv(op, int(ooff), int(osz)))
+                    pos = [x for x in pos if x not in old]
+                yield pd.DataFrame({"__fp": [ref] * len(pos),
+                                    "__pos": pos})
+
+    n = min(len(rows), max(32, spark.sparkContext.defaultParallelism))
+    return (spark.createDataFrame(
+        rows, "ref string, path string, off bigint, sz bigint, "
+              "old_path string, old_off bigint, old_sz bigint")
+        .repartition(n, "path", "off")
+        .mapInPandas(_expand, "__fp string, __pos bigint"))
+
+
+def _file_layouts(spark, by_fmt: dict, names, cols: IcebergColumns,
+                  nested_mode: bool) -> dict:
+    """Each data file's physical layout on an evolved table:
+    ``{path: ((name, physical column), ...)}`` for the columns
+    ``names`` it holds, matched by footer field id with a by-name
+    fallback for id-less files (a missing name: the column postdates
+    the file).  ``by_fmt`` maps ``PARQUET``/``ORC``/``AVRO`` to paths;
+    one distributed footer job per format reads them.  Under
+    ``nested_mode`` the entries are ``(physical column, physical type
+    tree as JSON)`` from the footer field-id trees (``""`` for a
+    primitive column), so renamed struct fields resolve per file."""
+    if nested_mode:
+        from .nested import (avro_field_trees, match_tree_ice,
+                             orc_field_trees, parquet_field_trees)
+        taps = {"PARQUET": parquet_field_trees, "ORC": orc_field_trees,
+                "AVRO": avro_field_trees}
+    else:
+        from .layouts import (avro_field_layouts, orc_field_layouts,
+                              parquet_field_layouts)
+        taps = {"PARQUET": parquet_field_layouts,
+                "ORC": orc_field_layouts, "AVRO": avro_field_layouts}
+    nested = set(cols.nested)
+    out = {}
+    for fmt, paths in by_fmt.items():
+        if not paths:
+            continue
+        for p, nodes in taps[fmt](spark, paths).items():
+            byfid = {t[0]: t for t in nodes if t[0] is not None}
+            byname = {t[1]: t for t in nodes}
+            m = {}
+            for n in names:
+                node = byfid.get(cols.field_ids.get(n)) or byname.get(n)
+                if node is None:
+                    continue
+                if not nested_mode:
+                    m[n] = node[1]
+                elif n in nested:
+                    m[n] = (node[1], json.dumps(match_tree_ice(
+                        cols.raw[n]["type"], node)))
+                else:
+                    m[n] = (node[1], "")
+            out[p] = tuple(sorted(m.items()))
+    return out
+
+
+def _layout_map(lay, evolved: bool, nested_mode: bool):
+    """A :func:`_file_layouts` value as ``{name: physical column}``
+    (``{name: (physical column, type tree or None)}`` under
+    ``nested_mode``); None on an unevolved table, whose names match."""
+    if not evolved:
+        return None
+    if nested_mode:
+        return {n: (pn, json.loads(ptj) if ptj else None)
+                for n, (pn, ptj) in dict(lay).items()}
+    return dict(lay)
+
+
+def _scan_layout(spark, fmt, paths, lmap, nested_mode, names, types,
+                 raw_fields, absent):
+    """One Spark scan of the data files ``paths`` that share the
+    layout ``lmap`` (:func:`_layout_map`), as the columns ``names``
+    under their current names: renamed columns are renamed, renamed
+    struct fields remapped, and a column the files predate reads
+    ``absent(name)``."""
+    from pyspark.sql import functions as F
+    if lmap is None:
+        ddl = ", ".join(f"{n} {types[n]}" for n in names)
+    elif nested_mode:
+        ddl = ", ".join(f"`{lmap[n][0]}` "
+                        + (_ice_phys_ddl(lmap[n][1]) if lmap[n][1]
+                           else types[n])
+                        for n in names if n in lmap)
+    else:
+        ddl = ", ".join(f"`{lmap[n]}` {types[n]}"
+                        for n in names if n in lmap)
+    df = (spark.read.schema(ddl).orc(list(paths)) if fmt == "ORC"
+          else spark.read.schema(ddl).parquet(*paths))
+    if lmap is None:
+        return df
+    from .nested import remap_expr, remap_needed
+    for n in names:
+        if n not in lmap:
+            df = df.withColumn(n, absent(n))
+            continue
+        pn, pt = lmap[n] if nested_mode else (lmap[n], None)
+        if pn != n:
+            df = df.withColumnRenamed(pn, n)
+        if pt is not None:
+            src = _ice_to_spark_json(pt)
+            dst = _ice_to_spark_json(raw_fields[n]["type"])
+            if remap_needed(src, dst):
+                df = df.withColumn(n, remap_expr(F.col(f"`{n}`"), src,
+                                                 dst))
+    return df
+
+
 def read_iceberg(spark, path: str, snapshot_id: int | None = None,
                  filters: dict | None = None,
                  as_of_ms: int | None = None,
@@ -920,9 +1106,9 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
     # SNAPSHOT's schema under explicit time travel (a deliberate choice:
     # a pre-evolution snapshot reads back with its own column
     # names); values match by field id either way
-    fld_ids, n_schemas = _schema_inventory(
-        path, None if current else snap.get("schema-id"))
-    evolved = n_schemas > 1
+    cols = iceberg_columns(_meta,
+                           None if current else snap.get("schema-id"))
+    fld_ids, evolved, raw_fields = cols.field_ids, cols.evolved, cols.raw
     # spec evolution: every spec the table ever carried, parsed
     # — each file prunes and re-attaches under ITS OWN spec
     name_of_fid = {v: k for k, v in fld_ids.items()}
@@ -973,89 +1159,25 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
     orc_paths = [p for p, _pv, _s, fmt, _sp in files if fmt == "ORC"]
     avro_paths = [p for p, _pv, _s, fmt, _sp in files
                   if fmt == "AVRO"]
-    raw_fields = _schema_fields_json(
-        path, None if current else snap.get("schema-id"))
     # v3 initial-defaults: a column added with a default reads
-    # the DEFAULT (not null) from every file that predates it; the
-    # default value rides the schema field's JSON.  Built eagerly so
-    # an unsupported default type gates loudly up front.
-    defaults = {n: F.lit(_ice_default_py(f["initial-default"],
-                                         types[n], n)).cast(types[n])
-                for n, f in raw_fields.items()
-                if f.get("initial-default") is not None
-                and n in types}
+    # the DEFAULT (not null) from every file that predates it
+    defaults = {n: F.lit(v).cast(types[n])
+                for n, v in cols.defaults.items() if n in types}
 
     def _absent_lit(n):
         # the column value for a data file written BEFORE the column
         # existed: its initial-default when declared, else null
         return defaults.get(n, F.lit(None).cast(types[n]))
 
-    nested_cols = {n for n, f in raw_fields.items()
-                   if not isinstance(f["type"], str)}
-    nested_mode = evolved and bool(nested_cols & set(field_names))
-    layouts: dict[str, tuple] = {}
-    if nested_mode and (pq_paths or orc_paths or avro_paths):
-        # evolved table WITH nested columns: the footer TREES
-        # carry nested field ids (parquet PARQUET:field_id / ORC
-        # iceberg.id; Avro data files too, via the writer
-        # schema's field-id/element-id/key-id/value-id attributes),
-        # so renamed struct fields inside a column resolve per file
-        # — still ONE distributed footer/header job per format,
-        # never a driver-side open per data file
-        from .nested import (avro_field_trees, match_tree_ice,
-                             orc_field_trees, parquet_field_trees)
-        traw = {}
-        if pq_paths:
-            traw.update(parquet_field_trees(spark, pq_paths))
-        if orc_paths:
-            traw.update(orc_field_trees(spark, orc_paths))
-        if avro_paths:
-            traw.update(avro_field_trees(spark, avro_paths))
-        for p, trees in traw.items():
-            byfid = {t0[0]: t0 for t0 in trees if t0[0] is not None}
-            byname = {t0[1]: t0 for t0 in trees}
-            m = {}
-            for n2 in field_names:
-                fid = fld_ids.get(n2)
-                node = byfid.get(fid) if fid is not None else None
-                if node is None:
-                    node = byname.get(n2)
-                if node is None:
-                    continue          # column postdates this file
-                if n2 in nested_cols:
-                    pt = match_tree_ice(raw_fields[n2]["type"], node)
-                    m[n2] = (node[1], json.dumps(pt))
-                else:
-                    m[n2] = (node[1], "")
-            layouts[p] = tuple(sorted(m.items()))
-    elif evolved and (pq_paths or orc_paths or avro_paths):
-        # evolved table: logical name -> each file's physical column,
-        # matched by footer field id (name fallback for id-less
-        # legacy files); absent = column added after this file.  ONE
-        # distributed footer job PER FORMAT resolves every file (ORC
-        # via the `iceberg.id` type attributes; AVRO via
-        # the embedded writer schema's `field-id` attributes) — never
-        # a driver-side open per data file.
-        from .layouts import (avro_field_layouts, orc_field_layouts,
-                              parquet_field_layouts)
-        raw = {}
-        if pq_paths:
-            raw.update(parquet_field_layouts(spark, pq_paths))
-        if orc_paths:
-            raw.update(orc_field_layouts(spark, orc_paths))
-        if avro_paths:
-            raw.update(avro_field_layouts(spark, avro_paths))
-        for p, flds in raw.items():
-            byfid = {fid: nm for fid, nm in flds if fid is not None}
-            names = {nm for _fid, nm in flds}
-            m = {}
-            for n2 in field_names:
-                fid = fld_ids.get(n2)
-                if fid is not None and fid in byfid:
-                    m[n2] = byfid[fid]
-                elif n2 in names:
-                    m[n2] = n2
-            layouts[p] = tuple(sorted(m.items()))
+    nested_mode = evolved and bool(set(cols.nested) & set(field_names))
+    # evolved table: logical name -> each file's physical column (and
+    # nested type tree), resolved by footer field id in ONE distributed
+    # footer job per format -- never a driver-side open per data file
+    layouts = (_file_layouts(spark, {"PARQUET": pq_paths,
+                                     "ORC": orc_paths,
+                                     "AVRO": avro_paths},
+                             field_names, cols, nested_mode)
+               if evolved else {})
     # ONE parquet scan per distinct (PHYSICAL LAYOUT, partition spec)
     # — a handful at most, one per schema/spec epoch; NEVER per
     # partition tuple or sequence number: at 10k+ partitions a
@@ -1065,31 +1187,17 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
     # _metadata.file_path.  AVRO data files (no _metadata support in
     # the python source) keep the literal-attach path, grouped per
     # (partition tuple, sequence).
-    # file_path values inside position-delete files are URIs/relative
-    # paths as the writer recorded them — normalize both sides to a
-    # plain absolute path with Spark expressions (stays distributed)
-    def _norm(col):
-        c = F.regexp_replace(col, "^file:/+", "/")
-        return F.when(c.startswith("/"), c).otherwise(
-            F.concat(F.lit(os.path.abspath(path) + "/"), c))
-
     # ORC/AVRO files TARGETED by a position delete read through a
     # position-deriving task scan (Arrow stripes for ORC, the python
     # block decoder for AVRO — neither source exposes
     # _metadata.row_index); untargeted files keep their normal scan
     # (a null __pos can never match a delete).  The targeted set
-    # comes from ONE small job over the delete files — O(distinct
-    # deleted files) driver rows, the same class as the manifest
-    # planning collects.
+    # comes from the delete files' file_path column, read on the
+    # driver.
     targeted_orc: set = set()
     targeted_avro: set = set()
     if pos_files and (orc_paths or avro_paths):
-        targeted = {
-            r["__fp"] for r in
-            spark.read.schema("file_path string, pos bigint")
-            .parquet(*pos_files)
-            .select(_norm(F.col("file_path")).alias("__fp"))
-            .distinct().collect()}
+        targeted = _pos_delete_targets(path, pos_files)
         targeted_orc = {p for p in orc_paths if p in targeted}
         targeted_avro = {p for p in avro_paths if p in targeted}
     if dv_files and (orc_paths or avro_paths):
@@ -1228,19 +1336,18 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
                     # renamed inner fields rebuild logically via the
                     # same JVM remap the parquet/ORC paths use
                     from .nested import remap_expr, remap_needed
-                    nl = {n: (pn, json.loads(ptj) if ptj else None)
-                          for n, (pn, ptj) in lmap.items()}
+                    nl = _layout_map(lay, evolved, nested_mode)
                 df = None
                 for p in paths:
                     src = (spark.read.format("padawan_avro")
                            .option("path", p).load())
-                    cols = []
+                    sel = []
                     for n in dn:
                         if nl is not None:
                             ent = nl.get(n)
                             if ent is None or ent[0] not in \
                                     src.columns:
-                                cols.append(_absent_lit(n).alias(n))
+                                sel.append(_absent_lit(n).alias(n))
                                 continue
                             pn, pt = ent
                             col = F.col(f"`{pn}`")
@@ -1251,15 +1358,15 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
                                 if remap_needed(src_j, dst_j):
                                     col = remap_expr(col, src_j,
                                                      dst_j)
-                            cols.append(col.cast(types[n]).alias(n))
+                            sel.append(col.cast(types[n]).alias(n))
                             continue
                         pn = _phys_of(n)
-                        cols.append(
+                        sel.append(
                             (F.col(pn).cast(types[n])
                              if pn is not None
                              and pn in src.columns else
                              _absent_lit(n)).alias(n))
-                    one = src.select(*cols)
+                    one = src.select(*sel)
                     df = one if df is None else df.unionByName(one)
                 if need_fp:
                     # no _metadata on the python Avro source: null
@@ -1284,21 +1391,7 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
                                        F.lit(None).cast(types[c]))
             parts.append(df)
             continue
-        if nested_mode:
-            lmap = {n: (pn, json.loads(ptj) if ptj else None)
-                    for n, (pn, ptj) in dict(pkey).items()}
-            ddl_g = ", ".join(
-                f"`{lmap[n][0]}` "
-                + (_ice_phys_ddl(lmap[n][1]) if lmap[n][1]
-                   else types[n])
-                for n in dn if n in lmap)
-        elif evolved:
-            lmap = dict(pkey)
-            ddl_g = ", ".join(f"`{lmap[n]}` {types[n]}"
-                              for n in dn if n in lmap)
-        else:
-            lmap = None
-            ddl_g = ", ".join(f"{n} {types[n]}" for n in dn)
+        lmap = _layout_map(pkey, evolved, nested_mode)
         if fmt == "ORC@pos":
             # position-deleted ORC files: Arrow stripe scan,
             # one task per file, positions derived by a running
@@ -1359,33 +1452,11 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
         # ORC rides Spark's native ORC source (same vectorized scan,
         # same _metadata.file_path for the attach map); schema
         # evolution resolves by `iceberg.id` footer attributes
-        df = (spark.read.schema(ddl_g).orc(list(paths))
-              if fmt == "ORC"
-              else spark.read.schema(ddl_g).parquet(*paths))
-        if nested_mode:
-            from .nested import remap_expr, remap_needed
-            for n in dn:
-                if n not in lmap:        # column postdates this file
-                    df = df.withColumn(n, _absent_lit(n))
-                    continue
-                pn, pt = lmap[n]
-                if pn != n:
-                    df = df.withColumnRenamed(pn, n)
-                if pt is not None:
-                    src = _ice_to_spark_json(pt)
-                    dst = _ice_to_spark_json(raw_fields[n]["type"])
-                    if remap_needed(src, dst):
-                        df = df.withColumn(
-                            n, remap_expr(F.col(f"`{n}`"), src, dst))
-        elif evolved:
-            for n in dn:
-                if n in lmap and lmap[n] != n:
-                    df = df.withColumnRenamed(lmap[n], n)
-                elif n not in lmap:      # column postdates this file
-                    df = df.withColumn(n, _absent_lit(n))
+        df = _scan_layout(spark, fmt, paths, lmap, nested_mode, dn,
+                          types, raw_fields, _absent_lit)
         if need_fp:
-            df = df.withColumn("__fp",
-                               _norm(F.col("_metadata.file_path")))
+            df = df.withColumn("__fp", _abs_path_col(
+                path, F.col("_metadata.file_path")))
         if pos_del:
             # ORC here means UNTARGETED by any position delete (the
             # targeted files took the ORC@pos branch): a null __pos
@@ -1470,41 +1541,16 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
     if pos_files or dv_files:
         dels = None
         if pos_files:
-            dels = (spark.read
-                    .schema("file_path string, pos bigint")
-                    .parquet(*pos_files)
-                    .select(_norm(F.col("file_path")).alias("__fp"),
-                            F.col("pos").alias("__pos")))
+            dels = _pos_delete_keys(spark, path, pos_files)
         if dv_files:
             # v3 deletion vectors expand to (file, position) rows on
-            # the EXECUTORS — one task per DV blob, O(deleted rows)
-            # output, the driver never holds a bitmap — and ride the
-            # same anti-join as v2 position-delete files.  (A valid
-            # v3 table's DV supersedes any older position deletes for
-            # its file, so applying both is exact.)
-            dv_rows = [(p, ref, int(off), int(sz))
-                       for p, _s, (ref, off, sz) in dv_files]
-
-            def _dv_expand(batches):
-                import pandas as pd
-                for pdf in batches:
-                    for p2, ref2, off2, sz2 in zip(
-                            pdf["path"], pdf["ref"], pdf["off"],
-                            pdf["sz"]):
-                        pos2 = _read_puffin_dv(p2, int(off2),
-                                               int(sz2))
-                        yield pd.DataFrame(
-                            {"__fp": [ref2] * len(pos2),
-                             "__pos": pos2})
-
-            n_dv = min(len(dv_rows),
-                       max(32,
-                           spark.sparkContext.defaultParallelism))
-            dvdels = (spark.createDataFrame(
-                dv_rows,
-                "path string, ref string, off bigint, sz bigint")
-                .repartition(n_dv, "path", "off")
-                .mapInPandas(_dv_expand, "__fp string, __pos bigint"))
+            # the EXECUTORS and ride the same anti-join as v2
+            # position-delete files.  (A valid v3 table's DV
+            # supersedes any older position deletes for its file, so
+            # applying both is exact.)
+            dvdels = _dv_keys(spark, [(ref, (p, off, sz), None)
+                                      for p, _s, (ref, off, sz)
+                                      in dv_files])
             dels = dvdels if dels is None else dels.unionByName(dvdels)
         out = out.join(dels, on=["__fp", "__pos"], how="left_anti")
     # equality deletes: one anti-join per distinct equality-column
@@ -2805,8 +2851,7 @@ def _delete_artifacts(path, meta, by_id, sid, name_of_fid):
     return pos_files, eq_files, dvs
 
 
-def _snapshot_changes(path, meta, by_id, sid, parent_sid,
-                      name_of_fid=None):
+def _snapshot_changes(path, meta, by_id, sid, parent_sid, name_of_fid):
     """One snapshot's own change set, status-based: walk ONLY the
     manifests the snapshot itself added (same O(changed-entries)
     planning shape as the appends stream, never a live-set
@@ -2818,15 +2863,9 @@ def _snapshot_changes(path, meta, by_id, sid, parent_sid,
     The predecessor artifacts (``prev_pos``/``prev_eq``/
     ``prev_dvs``) come from the PARENT snapshot's delete manifests
     only (a handful) — what the newly-dead-row computations diff
-    against."""
+    against.  ``name_of_fid`` maps field ids to the names equality
+    deletes resolve to."""
     from .avro import decode_avro_datums
-    if name_of_fid is None:
-        # field id -> CURRENT name, for equality-delete resolution
-        sch = (next(s for s in meta["schemas"]
-                    if s.get("schema-id", 0)
-                    == meta.get("current-schema-id", 0))
-               if "schemas" in meta else meta["schema"])
-        name_of_fid = {f["id"]: f["name"] for f in sch["fields"]}
     snap2 = by_id[sid]
     with open(_resolve(snap2["manifest-list"], path),
               "rb") as fh:
@@ -2856,7 +2895,7 @@ def _snapshot_changes(path, meta, by_id, sid, parent_sid,
                     continue      # carried delete rides forward
                 if fcontent == 2:
                     eq_ids = df_.get("equality_ids") or []
-                    eq_names = tuple((name_of_fid or {}).get(i)
+                    eq_names = tuple(name_of_fid.get(i)
                                      for i in eq_ids)
                     if not eq_names or None in eq_names:
                         raise NotImplementedError(
@@ -2904,582 +2943,371 @@ def _snapshot_changes(path, meta, by_id, sid, parent_sid,
     if parent_sid is not None and (new_dvs or new_pos or new_eq
                                    or removed):
         prev_pos, prev_eq, prev_dvs = _delete_artifacts(
-            path, meta, by_id, parent_sid, name_of_fid or {})
+            path, meta, by_id, parent_sid, name_of_fid)
     return (added, removed, new_dvs, prev_dvs,
             new_pos, new_eq, prev_pos, prev_eq)
 
 
-def _lookup_partitions(path, meta, by_id, sid, need):
-    """(pvals, spec, seq) of the RETAINED files a delete targets:
-    decode the snapshot's data manifests with EARLY EXIT once every
-    needed path resolved — worst case the live set, typically one
-    manifest."""
+def _live_files_of(path, meta, by_id, sid, need=None):
+    """Live data files of snapshot ``sid`` as ``{abs: (pvals, spec,
+    seq)}``: every one (an equality delete's scope is the whole table;
+    O(live manifest entries), the cost of ``live_data_files``), or
+    only the files in ``need``, decoding data manifests until all are
+    found.  A needed file that is not live raises ``ValueError``; a
+    returned file that is not parquet raises ``NotImplementedError``."""
     from .avro import decode_avro_datums
-    snap2 = by_id[sid]
-    with open(_resolve(snap2["manifest-list"], path),
-              "rb") as fh:
+    if need is not None and not need:
+        return {}
+    with open(_resolve(by_id[sid]["manifest-list"], path), "rb") as fh:
         _s0, manifests = decode_avro_datums(fh.read())
-    default_spec_id = meta.get("default-spec-id", 0)
-    out, todo = {}, set(need)
+    out = {}
     for m in manifests:
-        if not todo:
+        if need is not None and len(out) == len(need):
             break
         if (m.get("content", 0) or 0) != 0:
             continue
         mspec = m.get("partition_spec_id")
         if mspec is None:
-            mspec = default_spec_id
-        with open(_resolve(m["manifest_path"], path),
-                  "rb") as fh:
+            mspec = meta.get("default-spec-id", 0)
+        with open(_resolve(m["manifest_path"], path), "rb") as fh:
             _s1, entries = decode_avro_datums(fh.read())
         for e in entries:
-            if e.get("status") == 2:
-                continue
             df_ = e["data_file"]
             p = _resolve(df_["file_path"], path)
-            if p in todo:
-                seq = e.get("sequence_number")
-                if seq is None:
-                    seq = m.get("sequence_number") or 0
-                out[p] = (dict(df_.get("partition") or {}),
-                          mspec, int(seq))
-                todo.discard(p)
-    if todo:
-        raise ValueError(
-            f"iceberg changelog: delete artifact references "
-            f"data file(s) not live in snapshot {sid}: "
-            f"{sorted(todo)[:3]}")
-    return out
-
-
-def _live_files_of(path, meta, by_id, sid):
-    """EVERY live data file of snapshot ``sid`` as ``{abs:
-    (pvals, spec, seq)}`` — the equality-delete side of the
-    changelog needs the parent's full live set with sequence
-    numbers below the delete's (an equality delete's honest scope
-    is the whole table); planning is O(live manifest entries), the
-    same class as ``live_data_files``."""
-    from .avro import decode_avro_datums
-    snap2 = by_id[sid]
-    with open(_resolve(snap2["manifest-list"], path),
-              "rb") as fh:
-        _s0, manifests = decode_avro_datums(fh.read())
-    default_spec_id = meta.get("default-spec-id", 0)
-    out = {}
-    for m in manifests:
-        if (m.get("content", 0) or 0) != 0:
-            continue
-        mspec = m.get("partition_spec_id")
-        if mspec is None:
-            mspec = default_spec_id
-        with open(_resolve(m["manifest_path"], path),
-                  "rb") as fh:
-            _s1, entries = decode_avro_datums(fh.read())
-        for e in entries:
-            if e.get("status") == 2:
+            if (e.get("status") == 2 or (df_.get("content", 0) or 0)
+                    or (need is not None and p not in need)):
                 continue
-            df_ = e["data_file"]
-            if (df_.get("content", 0) or 0) != 0:
-                continue
+            fmt = (df_.get("file_format") or "PARQUET").upper()
+            if fmt != "PARQUET":
+                raise NotImplementedError(
+                    f"iceberg changelog over {fmt} data files")
             seq = e.get("sequence_number")
             if seq is None:
                 seq = m.get("sequence_number") or 0
-            out[_resolve(df_["file_path"], path)] = (
-                dict(df_.get("partition") or {}), mspec, int(seq))
+            out[p] = (dict(df_.get("partition") or {}), mspec, int(seq))
+    missing = set(need or ()) - set(out)
+    if missing:
+        raise ValueError(
+            f"iceberg changelog: delete artifact references "
+            f"data file(s) not live in snapshot {sid}: "
+            f"{sorted(missing)[:3]}")
     return out
+
+
+@dataclass
+class SnapshotChange:
+    """One snapshot's planned change.  Data files map to ``(partition
+    record, spec id, sequence number)``; a delete bundle is
+    ``(position-delete files, equality-delete files, deletion vector
+    or None)``."""
+    ordinal: int        # position of the snapshot in the planned list
+    sid: int
+    added: dict         # files the snapshot added
+    removed: dict       # files it removed
+    hit: dict           # retained files its new v2 deletes address
+    new_deletes: tuple  # the bundle of v2 deletes it added
+    dvs: list           # [(data file, new DV, predecessor DV or None,
+    #                      file)]: the deletion vectors that changed
+    prev: tuple | None  # the parent's (position files, equality files,
+    #                      {data file: DV}), None when it has none
+
+    def prev_bundle(self, p):
+        """The parent's delete bundle that can apply to data file
+        ``p``: the rows already dead before this snapshot."""
+        if self.prev is None:
+            return None
+        pos, eq, dvs = self.prev
+        return pos, eq, dvs.get(p)
+
+
+@dataclass
+class IcebergChanges:
+    """A list of snapshots as :func:`plan_iceberg_changes` plans it."""
+    columns: IcebergColumns
+    snapshots: list     # SnapshotChange, in the given order
+
+
+def plan_iceberg_changes(path: str, meta: dict, snapshot_ids,
+                         schema_id: int | None = None) -> IcebergChanges:
+    """Plan the row-level change of each snapshot in ``snapshot_ids``
+    (each against its own parent) from table metadata ``meta``, on the
+    driver and with no Spark job.  The batch changelog and the
+    ``padawan_iceberg_changes`` stream both read this plan; each keeps
+    its own row step.
+
+    Per snapshot: the data files it added and removed (a removed
+    file's rows already dead at the parent do not emit again), the
+    retained files its new v2 deletes hit (position-delete targets come
+    from the delete files' ``file_path`` column; an equality delete
+    hits the parent's live files with a smaller sequence number), and
+    the deletion vectors it added or replaced on retained files.
+    ``replace`` snapshots (compactions: no logical change) are left
+    out, as in Iceberg's own changelog scan.  The column facts are
+    those of ``schema_id`` (None: the current schema)."""
+    by_id = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
+    cols = iceberg_columns(meta, schema_id)
+    name_of_fid = {v: k for k, v in cols.field_ids.items()}
+    out = []
+    for ordinal, sid in enumerate(snapshot_ids):
+        if (by_id[sid].get("summary") or {}).get("operation") == "replace":
+            continue
+        psid = by_id[sid].get("parent-snapshot-id")
+        (added, removed, new_dvs, prev_dvs,
+         new_pos, new_eq, prev_pos, prev_eq) = _snapshot_changes(
+            path, meta, by_id, sid, psid, name_of_fid)
+
+        def _files(need):
+            # added in this snapshot, or else live in it
+            got = {p: added[p] for p in need if p in added}
+            got.update(_live_files_of(path, meta, by_id, sid,
+                                      set(need) - set(got)))
+            return got
+
+        # deletes whose target left with the removes add nothing: those
+        # rows emit as whole-file deletes
+        hit = (_files(_pos_delete_targets(path, new_pos) - set(removed))
+               if new_pos else {})
+        if new_eq and psid in by_id:
+            max_dseq = max(s for _p, s, _e in new_eq)
+            for p, f in _live_files_of(path, meta, by_id, psid).items():
+                if f[2] < max_dseq and p not in removed:
+                    hit.setdefault(p, f)
+        changed = [(ref, new, prev_dvs.get(ref))
+                   for ref, new in sorted(new_dvs.items())
+                   if ref not in removed and prev_dvs.get(ref) != new]
+        dv_files = _files([ref for ref, _n, _o in changed])
+        out.append(SnapshotChange(
+            ordinal, sid, added, removed, hit,
+            (tuple(new_pos), tuple(new_eq), None),
+            [(ref, new, old, dv_files[ref]) for ref, new, old in changed],
+            (tuple(prev_pos), tuple(prev_eq), prev_dvs)
+            if prev_pos or prev_eq or prev_dvs else None))
+    return IcebergChanges(cols, out)
+
 
 def read_iceberg_changes(spark, path: str,
                          from_snapshot_id: int | None = None,
                          to_snapshot_id: int | None = None):
-    """Iceberg CHANGELOG read (v2 deletes and flat schema
-    evolution included) — the row-level change feed real engines expose as
-    the ``changes`` / changelog table: for every snapshot AFTER
-    ``from_snapshot_id`` (exclusive; None = from table start) up TO
-    ``to_snapshot_id`` (inclusive; None = current), emit the rows of
-    files the snapshot ADDED as ``insert`` and the rows it deleted as
-    ``delete``: whole files it REMOVED (minus rows that were already
-    dead at the parent — a dropped file's previously-deleted rows
-    must not re-emit), rows newly dead under v3 DELETION VECTORS it
-    wrote (a replacement DV contributes only its NEW positions), rows
-    newly dead under v2 POSITION-DELETE files it added, and rows
-    newly dead under v2 EQUALITY deletes it added (scoped to data
-    files with sequence number STRICTLY below the delete's, matched
-    null-safely, minus the parent's already-dead rows) — the
-    merge-on-read shapes real v2 tables deliver row-level deletes as.
-    Snapshots whose summary operation is
-    ``replace`` (compactions: file rewrites with no logical change)
-    emit nothing, as in Iceberg's own changelog scan.  Output
-    columns: the table's columns plus ``_change_type``
-    (insert/delete), ``_change_ordinal`` (0-based position of the
-    snapshot in the requested span) and ``_commit_snapshot_id``.
+    """Iceberg CHANGELOG read: the row-level change feed real engines
+    expose as the ``changes`` / changelog table.  For every snapshot
+    AFTER ``from_snapshot_id`` (exclusive; None = from table start) up
+    TO ``to_snapshot_id`` (inclusive; None = current) on the ancestry
+    chain, emit the rows of files the snapshot ADDED as ``insert`` and
+    the rows it deleted as ``delete``: whole files it REMOVED (minus
+    rows already dead at the parent), rows newly dead under v3
+    DELETION VECTORS it wrote (a replacement DV contributes only its
+    NEW positions), and rows newly dead under v2 POSITION-DELETE and
+    EQUALITY-DELETE files it added (equality deletes scoped to data
+    files with a sequence number STRICTLY below the delete's and
+    matched null-safely).  ``replace`` snapshots (compactions) emit
+    nothing, as in Iceberg's own changelog scan.  Output columns: the
+    table's columns plus ``_change_type`` (insert/delete),
+    ``_change_ordinal`` (0-based position of the snapshot in the
+    requested span) and ``_commit_snapshot_id``.
 
-    Schema evolution: renamed/added columns resolve per-file
-    by parquet footer FIELD ID (one distributed footer job per scan
-    — the same layout tap batch reads use), with v3
-    ``initial-default`` values for files predating an added column;
-    NESTED columns resolve through the footer field-id TREES with
-    the same JVM remap batch reads use, so renamed struct fields
-    inside a column re-emit under their current names too.
+    :func:`plan_iceberg_changes` plans the span on the driver, as it
+    does for the ``padawan_iceberg_changes`` stream; this function
+    turns the plan into one Spark plan.  Each snapshot scans only the
+    files it changed or hit; delete sets stay distributed as ``(file,
+    position)`` key frames (semi/anti joins, AQE broadcasts small
+    sides), so the driver never holds positions or bitmaps.  On an
+    unevolved table building the query runs no Spark job.
 
-    Scope gates (loud): parquet data files only.  Scale shape: each
-    snapshot's insert/remove side scans only its ADDED/REMOVED files
-    (O(changed files)); position-delete targets resolve through one
-    small distinct-paths job + an early-exit manifest lookup; an
-    EQUALITY delete's affected set is the parent's live files below
-    its sequence number — the honest cost of an equality delete (it
-    can target the whole table); all delete sets stay distributed as
-    ``(file, position)`` key frames (semi/anti joins, AQE broadcasts
-    small sides), the driver never holds positions or bitmaps."""
+    Schema evolution: renamed/added columns resolve per file by
+    parquet footer FIELD ID (one distributed footer job per scan, the
+    layout tap batch reads use), with v3 ``initial-default`` values
+    for files predating an added column; NESTED columns resolve
+    through the footer field-id TREES with the same JVM remap.
+    Parquet data files only (others raise)."""
     from pyspark.sql import functions as F
-
-    from .layouts import parquet_field_layouts
     with open(_latest_metadata(path)) as fh:
         meta = json.load(fh)
     _check_format_version(meta, path)
-    snaps = meta.get("snapshots", [])
-    by_id = {s["snapshot-id"]: s for s in snaps}
+    by_id = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
     current = to_snapshot_id is None
-    if to_snapshot_id is None:
+    if current:
         to_snapshot_id = meta.get("current-snapshot-id")
     if to_snapshot_id not in by_id:
         raise ValueError(f"no snapshot {to_snapshot_id} at {path}")
-    # the commit chain (to .. from], oldest first
-    chain = []
+    chain = []                # (from .. to], newest first
     cur = to_snapshot_id
-    while cur is not None and cur != from_snapshot_id:
-        if cur not in by_id:
-            break
-        chain.append(by_id[cur])
+    while cur in by_id and cur != from_snapshot_id:
+        chain.append(cur)
         cur = by_id[cur].get("parent-snapshot-id")
     if from_snapshot_id is not None and cur != from_snapshot_id:
         raise ValueError(
             f"snapshot {from_snapshot_id} is not an ancestor of "
             f"{to_snapshot_id} at {path}")
-    chain.reverse()
-    fields, _ps, _files, _d = live_data_files(
-        path, to_snapshot_id, use_current_schema=current)
-    bad_fmt = sorted({f[3] for f in _files if f[3] != "PARQUET"})
-    if bad_fmt:
-        raise NotImplementedError(
-            f"iceberg changelog over {bad_fmt} data files")
-    types = dict(fields)
-    field_names = [n for n, _t in fields]
-    ddl = ", ".join(f"{n} {t}" for n, t in fields)
-    sch_id = (None if current
-              else by_id[to_snapshot_id].get("schema-id"))
-    fld_ids, n_schemas = _schema_inventory(path, sch_id)
-    evolved = n_schemas > 1
-    raw_fields = _schema_fields_json(path, sch_id)
-    nested_cols = {n for n, f in raw_fields.items()
-                   if not isinstance(f["type"], str)}
-    nested_mode = evolved and bool(nested_cols & set(field_names))
-    # v3 initial-defaults: a column added with a default reads the
-    # DEFAULT (not null) from files predating it
-    defaults = {n: F.lit(_ice_default_py(f["initial-default"],
-                                         types[n], n)).cast(types[n])
-                for n, f in raw_fields.items()
-                if f.get("initial-default") is not None
-                and n in types}
-    name_of_fid = {v: k for k, v in fld_ids.items()}
-    specs_by_id = {s: _parse_part_spec(sp, name_of_fid)
-                   for s, sp in _raw_specs(meta).items()}
-    ident_of = {s: {src: fname for t, _p, src, fname in sp
-                    if t == "identity"}
-                for s, sp in specs_by_id.items()}
+    plan = plan_iceberg_changes(
+        path, meta, chain[::-1],
+        None if current else by_id[to_snapshot_id].get("schema-id"))
+    cols = plan.columns
+    types = dict(cols.fields)
+    names = list(types)
+    nested_mode = cols.evolved and bool(cols.nested)
+    keys = ["__fp", "__pos"]
 
-    def _norm(col):
-        # delete files record paths as the writer did (URI/relative)
-        # — normalize to plain absolute, Spark-side
-        c = F.regexp_replace(col, "^file:/+", "/")
-        return F.when(c.startswith("/"), c).otherwise(
-            F.concat(F.lit(os.path.abspath(path) + "/"), c))
-
-    def _rows(file_map, with_keys):
-        """One logical scan over ``file_map`` (``{abs: (pvals, spec,
-        seq)}``): the table's columns, resolved per-file by footer
-        field id when the schema evolved (grouped so each distinct
-        layout is ONE parquet scan), identity partition values and
-        the file's sequence number re-attached from a broadcast
-        file map; ``with_keys`` keeps ``__fp``/``__pos``/``__seq``
-        for the caller's row diffs."""
-        paths = sorted(file_map)
-        attach = sorted({src for p in paths
-                         for src in ident_of.get(file_map[p][1], {})}
+    def _rows(files, with_keys):
+        """One logical scan over ``files`` (``{abs: (pvals, spec,
+        seq)}``): the table's columns, one parquet scan per distinct
+        layout, identity partition values and the file's sequence
+        number attached from a broadcast file map; ``with_keys`` keeps
+        ``__fp``/``__pos``/``__seq`` for the caller's row diffs."""
+        paths = sorted(files)
+        attach = sorted({src for p in paths for src
+                         in cols.identity.get(files[p][1], {}).values()}
                         & set(types))
-        lay_of: dict = {}
-        if nested_mode:
-            # evolved table WITH nested columns: footer TREES
-            # carry nested field ids, so renamed struct fields
-            # inside a column resolve per file — the same one-job
-            # tap + JVM remap batch reads use
-            from .nested import match_tree_ice, parquet_field_trees
-            for p, trees in parquet_field_trees(
-                    spark, paths).items():
-                byfid = {t0[0]: t0 for t0 in trees
-                         if t0[0] is not None}
-                byname = {t0[1]: t0 for t0 in trees}
-                m = {}
-                for n2 in field_names:
-                    fid = fld_ids.get(n2)
-                    node = (byfid.get(fid) if fid is not None
-                            else None)
-                    if node is None:
-                        node = byname.get(n2)
-                    if node is None:
-                        continue      # column postdates this file
-                    if n2 in nested_cols:
-                        pt = match_tree_ice(
-                            raw_fields[n2]["type"], node)
-                        m[n2] = (node[1], json.dumps(pt))
-                    else:
-                        m[n2] = (node[1], "")
-                lay_of[p] = tuple(sorted(m.items()))
-        elif evolved:
-            for p, flds in parquet_field_layouts(
-                    spark, paths).items():
-                byfid = {fid: nm for fid, nm in flds
-                         if fid is not None}
-                names = {nm for _f, nm in flds}
-                m = {}
-                for n2 in field_names:
-                    fid = fld_ids.get(n2)
-                    if fid is not None and fid in byfid:
-                        m[n2] = byfid[fid]
-                    elif n2 in names:
-                        m[n2] = n2
-                lay_of[p] = tuple(sorted(m.items()))
+        lay_of = (_file_layouts(spark, {"PARQUET": paths}, names, cols,
+                                nested_mode) if cols.evolved else {})
         groups: dict = {}
         for p in paths:
             groups.setdefault(lay_of.get(p, ()), []).append(p)
-        need_fp = with_keys or bool(attach)
 
         def _absent(n):
-            # a column absent from the file: identity sources fill
-            # from the partition-metadata attach (a non-null default
-            # here would SHADOW the coalesce), others read their
+            # an identity source fills from the attach map (a default
+            # here would shadow the coalesce); others read their
             # initial-default, else null
-            if n in attach:
+            if n in attach or n not in cols.defaults:
                 return F.lit(None).cast(types[n])
-            return defaults.get(n, F.lit(None).cast(types[n]))
+            return F.lit(cols.defaults[n]).cast(types[n])
 
-        parts2 = []
+        out = None
         for lay, ps in sorted(groups.items()):
-            if nested_mode:
-                lmap = {n: (pn, json.loads(ptj) if ptj else None)
-                        for n, (pn, ptj) in dict(lay).items()}
-                ddl_g = ", ".join(
-                    f"`{lmap[n][0]}` "
-                    + (_ice_phys_ddl(lmap[n][1]) if lmap[n][1]
-                       else types[n])
-                    for n in field_names if n in lmap)
-            elif evolved:
-                lmap = dict(lay)
-                ddl_g = ", ".join(f"`{lmap[n]}` {types[n]}"
-                                  for n in field_names if n in lmap)
-            else:
-                lmap = None
-                ddl_g = ddl
-            df = spark.read.schema(ddl_g).parquet(*ps)
-            if nested_mode:
-                from .nested import remap_expr, remap_needed
-                for n in field_names:
-                    if n not in lmap:    # column postdates the file
-                        df = df.withColumn(n, _absent(n))
-                        continue
-                    pn, pt2 = lmap[n]
-                    if pn != n:
-                        df = df.withColumnRenamed(pn, n)
-                    if pt2 is not None:
-                        src = _ice_to_spark_json(pt2)
-                        dst = _ice_to_spark_json(
-                            raw_fields[n]["type"])
-                        if remap_needed(src, dst):
-                            df = df.withColumn(
-                                n, remap_expr(F.col(f"`{n}`"),
-                                              src, dst))
-            elif evolved:
-                for n in field_names:
-                    if n in lmap and lmap[n] != n:
-                        df = df.withColumnRenamed(lmap[n], n)
-                    elif n not in lmap:  # column postdates the file
-                        df = df.withColumn(n, _absent(n))
-            if need_fp:
-                df = df.withColumn(
-                    "__fp", _norm(F.col("_metadata.file_path")))
+            df = _scan_layout(
+                spark, "PARQUET", ps,
+                _layout_map(lay, cols.evolved, nested_mode), nested_mode,
+                names, types, cols.raw, _absent)
+            if with_keys or attach:
+                df = df.withColumn("__fp", _abs_path_col(
+                    path, F.col("_metadata.file_path")))
             if with_keys:
-                df = df.withColumn("__pos",
-                                   F.col("_metadata.row_index"))
-            parts2.append(df.select(
-                *(field_names
-                  + (["__fp"] if need_fp else [])
-                  + (["__pos"] if with_keys else []))))
-        out2 = parts2[0]
-        for q in parts2[1:]:
-            out2 = out2.unionByName(q)
-        if attach or with_keys:
-            pm_rows = []
-            for p in paths:
-                pvals, sp, seq = file_map[p]
-                fname_of = ident_of.get(sp, {})
-                vals = []
-                for c in attach:
-                    fname = fname_of.get(c)
-                    v = (pvals.get(fname)
-                         if fname is not None and fname in pvals
-                         else None)
-                    vals.append(None if v is None else str(v))
-                pm_rows.append((p, int(seq), *vals))
-            pm_ddl = ", ".join(
-                ["__fp string", "__mseq bigint"]
-                + [f"`{c}__m` string" for c in attach])
-            pm = F.broadcast(spark.createDataFrame(pm_rows, pm_ddl))
-            out2 = out2.join(pm, on="__fp", how="left")
-            # fail CLOSED on a path-normalization miss (every row
-            # here is parquet with a non-null __fp)
-            miss = F.col("__mseq").isNull()
+                df = df.withColumn("__pos", F.col("_metadata.row_index"))
+            df = df.select(*names, *(["__fp"] if with_keys or attach
+                                     else []),
+                           *(["__pos"] if with_keys else []))
+            out = df if out is None else out.unionByName(df)
+        if not (attach or with_keys):
+            return out
+        pm_rows = []
+        for p in paths:
+            pvals, spec, seq = files[p]
+            vals = {src: pvals.get(f)
+                    for f, src in cols.identity.get(spec, {}).items()}
+            pm_rows.append((p, int(seq), *(
+                None if vals.get(c) is None else str(vals[c])
+                for c in attach)))
+        pm = F.broadcast(spark.createDataFrame(pm_rows, ", ".join(
+            ["__fp string", "__mseq bigint"]
+            + [f"`{c}__m` string" for c in attach])))
+        out = out.join(pm, on="__fp", how="left")
+        # fail CLOSED on a path-normalization miss (every row here is
+        # parquet with a non-null __fp)
+        miss = F.col("__mseq").isNull()
 
-            def _checked(val):
-                return F.when(miss, F.raise_error(F.lit(
-                    "iceberg changelog attach map missed a scanned "
-                    "file path — refusing to degrade to NULL "
-                    "partition values / unscoped equality deletes"
-                ))).otherwise(val)
+        def _checked(val):
+            return F.when(miss, F.raise_error(F.lit(
+                "iceberg changelog attach map missed a scanned "
+                "file path — refusing to degrade to NULL "
+                "partition values / unscoped equality deletes"
+            ))).otherwise(val)
 
-            for c in attach:
-                out2 = out2.withColumn(
-                    c, F.coalesce(F.col(c),
-                                  _checked(F.col(f"{c}__m")
-                                           .cast(types[c]))))
-            if with_keys:
-                out2 = out2.withColumn("__seq",
-                                       _checked(F.col("__mseq")))
-            out2 = out2.drop("__mseq",
-                             *[f"{c}__m" for c in attach])
-        return out2
+        for c in attach:
+            out = out.withColumn(c, F.coalesce(
+                F.col(c), _checked(F.col(f"{c}__m").cast(types[c]))))
+        if with_keys:
+            out = out.withColumn("__seq", _checked(F.col("__mseq")))
+        return out.drop("__mseq", *[f"{c}__m" for c in attach])
 
-    def _finish(df, kind, ordinal, sid):
-        return (df.select(*field_names)
-                .withColumn("_change_type", F.lit(kind))
-                .withColumn("_change_ordinal",
-                            F.lit(ordinal).cast("int"))
-                .withColumn("_commit_snapshot_id",
-                            F.lit(int(sid)).cast("bigint")))
-
-    def _pos_keys(pos_paths):
-        """(fp,pos) keys of v2 position-delete parquet files — a
-        distributed scan, normalized Spark-side."""
-        return (spark.read.schema("file_path string, pos bigint")
-                .parquet(*sorted(pos_paths))
-                .select(_norm(F.col("file_path")).alias("__fp"),
-                        F.col("pos").alias("__pos")))
-
-    def _dv_keys(dv_map):
-        """Full (fp,pos) expansion of ``{ref: (puffin, off, sz)}`` —
-        blobs decode on the EXECUTORS, the driver never holds a
-        bitmap."""
-        rows3 = [(pp, int(off), int(sz), ref)
-                 for ref, (pp, off, sz) in sorted(dv_map.items())]
-
-        def _expand(batches):
-            import pandas as pd
-            for pdf in batches:
-                for p2, off2, sz2, ref2 in zip(
-                        pdf["path"], pdf["off"], pdf["sz"],
-                        pdf["ref"]):
-                    pos2 = _read_puffin_dv(p2, int(off2), int(sz2))
-                    yield pd.DataFrame({"__fp": [ref2] * len(pos2),
-                                        "__pos": pos2})
-
-        n3 = min(len(rows3),
-                 max(32, spark.sparkContext.defaultParallelism))
-        return (spark.createDataFrame(
-            rows3, "path string, off bigint, sz bigint, ref string")
-            .repartition(n3, "path", "off")
-            .mapInPandas(_expand, "__fp string, __pos bigint"))
-
-    def _eq_key_frames(rows_frame, eq_items):
-        """(fp,pos) keys of ``rows_frame`` rows matched by the
-        equality-delete files ``[(abs, seq, names)]`` — null-safe
-        equality, strict ``file seq < delete seq`` scope, resolved
-        by field id on evolved tables."""
+    def _eq_keys(rows, eq_items):
+        """``(__fp, __pos)`` keys of ``rows`` matched by the equality
+        delete files ``[(abs, seq, names)]``: null-safe equality under
+        the strict ``file seq < delete seq`` scope, resolved by field
+        id on evolved tables."""
         by_eq: dict = {}
         for p, s2, e in eq_items:
             by_eq.setdefault(tuple(e), []).append((p, s2))
         eq_layouts: dict = {}
-        if evolved:
+        if cols.evolved:
+            from .layouts import parquet_field_layouts
             eq_layouts = parquet_field_layouts(
                 spark, [p for p, _s, _e in eq_items])
         frames = []
         for eq_names, pfs in sorted(by_eq.items()):
-            dels = _eq_delete_union(spark, pfs, eq_names,
-                                    eq_layouts, fld_ids, types,
-                                    evolved)
-            t = rows_frame.alias("t")
-            d = dels.alias("d")
+            d = _eq_delete_union(spark, pfs, eq_names, eq_layouts,
+                                 cols.field_ids, types,
+                                 cols.evolved).alias("d")
             cond = F.col("t.__seq") < F.col("d.__dseq")
             for n in eq_names:
                 cond = cond & F.col(f"t.`{n}`").eqNullSafe(
                     F.col(f"d.`{n}`"))
-            frames.append(t.join(d, on=cond, how="left_semi")
-                          .select("__fp", "__pos"))
+            frames.append(rows.alias("t").join(d, on=cond,
+                                               how="left_semi")
+                          .select(*keys))
         return frames
 
-    def _dead_keys(rows_frame, pos_paths, dv_map, eq_items):
-        """Distinct (fp,pos) keys dead under the given delete
-        artifacts (None when there are none).  Superset keys
-        (targets outside ``rows_frame``'s files) are harmless —
-        they match nothing."""
-        frames = []
-        if pos_paths:
-            frames.append(_pos_keys(pos_paths))
-        if dv_map:
-            frames.append(_dv_keys(dv_map))
-        if eq_items:
-            frames.extend(_eq_key_frames(rows_frame, eq_items))
+    def _dead(rows, pos, eq, dvs):
+        """Distinct keys dead under the given delete artifacts (None
+        when there are none).  Keys of files outside ``rows`` match
+        nothing."""
+        frames = ([_pos_delete_keys(spark, path, pos)] if pos else [])
+        if dvs:
+            frames.append(_dv_keys(spark, [(r, dv, None)
+                                           for r, dv in sorted(dvs.items())]))
+        if eq:
+            frames.extend(_eq_keys(rows, eq))
         if not frames:
             return None
-        out3 = frames[0]
-        for f3 in frames[1:]:
-            out3 = out3.unionByName(f3)
-        return out3.distinct()
+        out = frames[0]
+        for f in frames[1:]:
+            out = out.unionByName(f)
+        return out.distinct()
 
-    def _dv_frame(entries):
-        """[(puffin, off, sz, ref, old_puffin|None, old_off,
-        old_sz)] -> (fp, pos) frame of each DV's positions MINUS its
-        predecessor's — BOTH vectors decode in the task, the driver
-        never holds a bitmap."""
-        def _expand(batches):
-            import pandas as pd
-            for pdf in batches:
-                for (p2, off2, sz2, ref2, op2, ooff2, osz2) in zip(
-                        pdf["path"], pdf["off"], pdf["sz"],
-                        pdf["ref"], pdf["old_path"], pdf["old_off"],
-                        pdf["old_sz"]):
-                    pos2 = _read_puffin_dv(p2, int(off2), int(sz2))
-                    base = (set(_read_puffin_dv(op2, int(ooff2),
-                                                int(osz2)))
-                            if op2 is not None else set())
-                    new = [x for x in pos2 if x not in base]
-                    yield pd.DataFrame({"__fp": [ref2] * len(new),
-                                        "__pos": new})
-        n = min(len(entries),
-                max(32, spark.sparkContext.defaultParallelism))
-        return (spark.createDataFrame(
-            entries, "path string, off bigint, sz bigint, "
-                     "ref string, old_path string, old_off bigint, "
-                     "old_sz bigint")
-            .repartition(n, "path", "off")
-            .mapInPandas(_expand, "__fp string, __pos bigint"))
+    def _alive(df, rows, ch, files):
+        """``df`` minus the rows of ``files`` already dead at the
+        parent: deleted by an earlier snapshot, they must not emit
+        again."""
+        if ch.prev is None:
+            return df
+        pos, eq, dvs = ch.prev
+        dead = _dead(rows, pos, eq,
+                     {r: v for r, v in dvs.items() if r in files})
+        return df if dead is None else df.join(dead, on=keys,
+                                               how="left_anti")
 
     parts = []
-    for ordinal, s in enumerate(chain):
-        sid = s["snapshot-id"]
-        if (s.get("summary") or {}).get("operation") == "replace":
-            # compaction: rewrites files, no logical row change —
-            # Iceberg's own changelog scan skips these too
-            continue
-        (added, removed, new_dvs, prev_dvs,
-         new_pos, new_eq, prev_pos, prev_eq) = _snapshot_changes(
-            path, meta, by_id, sid, s.get("parent-snapshot-id"),
-            name_of_fid=name_of_fid)
-        prev_any = bool(prev_pos or prev_eq or prev_dvs)
-        if added:
-            parts.append(_finish(_rows(added, False), "insert",
-                                 ordinal, sid))
-        if removed:
-            if prev_any:
-                # a removed file's rows already dead at the parent
-                # (its position/equality deletes, its DV) were
-                # deleted in EARLIER snapshots — emitting them again
-                # would double-count the delete
-                rr = _rows(removed, True)
-                dead_prev = _dead_keys(
-                    rr, prev_pos,
-                    {r: v for r, v in prev_dvs.items()
-                     if r in removed}, prev_eq)
-                if dead_prev is not None:
-                    rr = rr.join(dead_prev, on=["__fp", "__pos"],
-                                 how="left_anti")
-                parts.append(_finish(rr, "delete", ordinal, sid))
-            else:
-                parts.append(_finish(_rows(removed, False),
-                                     "delete", ordinal, sid))
-        # v2 delete files NEW in this snapshot: rows newly
-        # dead = rows matched by the new deletes, minus rows already
-        # dead at the parent.  Deletes whose target file left with
-        # the removes contribute nothing (those rows just emitted as
-        # whole-file deletes); deletes targeting files ADDED in this
-        # same snapshot emit same-ordinal delete rows (MOR-upsert
-        # shape — consumers fold by ordinal, as with DVs).
-        if new_pos or new_eq:
-            affected: dict = {}
-            if new_pos:
-                refs = {r["__fp"] for r in
-                        _pos_keys(new_pos).select("__fp")
-                        .distinct().collect()}
-                refs -= set(removed)
-                take = {r: added[r] for r in refs if r in added}
-                missing = refs - set(take)
-                if missing:
-                    take.update(_lookup_partitions(
-                        path, meta, by_id, sid, missing))
-                affected.update(take)
-            if new_eq:
-                max_dseq = max(s2 for _p, s2, _e in new_eq)
-                psid = s.get("parent-snapshot-id")
-                if psid is not None and psid in by_id:
-                    for p2, v in _live_files_of(
-                            path, meta, by_id, psid).items():
-                        if v[2] < max_dseq and p2 not in removed:
-                            affected.setdefault(p2, v)
-            if affected:
-                ra = _rows(affected, True)
-                newdead = _dead_keys(ra, new_pos, {}, new_eq)
-                emit = ra.join(newdead, on=["__fp", "__pos"],
-                               how="left_semi")
-                if prev_any:
-                    dead_prev = _dead_keys(
-                        ra, prev_pos,
-                        {r: v for r, v in prev_dvs.items()
-                         if r in affected}, prev_eq)
-                    if dead_prev is not None:
-                        emit = emit.join(dead_prev,
-                                         on=["__fp", "__pos"],
-                                         how="left_anti")
-                parts.append(_finish(emit, "delete", ordinal, sid))
-        # DV deltas on RETAINED files: new or replaced vectors
-        dv_entries = []
-        for ref, (pp, off, sz) in sorted(new_dvs.items()):
-            if ref in removed or ref in added:
-                # its file left with the removes, or the DV rode the
-                # same snapshot as its file's add (MOR-upsert shape:
-                # the insert scan emits ALL rows, the DV rows pair
-                # with same-ordinal deletes — consumers fold by
-                # ordinal)
-                if ref in removed:
-                    continue
-            old = prev_dvs.get(ref)
-            if old == (pp, off, sz):
-                continue                  # unchanged, carried forward
-            dv_entries.append((pp, int(off), int(sz), ref,
-                               old[0] if old else None,
-                               int(old[1]) if old else 0,
-                               int(old[2]) if old else 0))
-        if dv_entries:
-            dead = _dv_frame(dv_entries)
-            need = {e[3] for e in dv_entries}
-            targets = {r: added[r] for r in need if r in added}
-            targets.update(_lookup_partitions(
-                path, meta, by_id, sid, need - set(targets)))
-            rt = _rows(targets, True)
-            parts.append(_finish(
-                rt.join(dead, on=["__fp", "__pos"],
-                        how="left_semi"),
-                "delete", ordinal, sid))
+
+    def _emit(ch, df, kind):
+        parts.append(df.select(*names)
+                     .withColumn("_change_type", F.lit(kind))
+                     .withColumn("_change_ordinal",
+                                 F.lit(ch.ordinal).cast("int"))
+                     .withColumn("_commit_snapshot_id",
+                                 F.lit(int(ch.sid)).cast("bigint")))
+
+    for ch in plan.snapshots:
+        if ch.added:
+            _emit(ch, _rows(ch.added, False), "insert")
+        if ch.removed:
+            rr = _rows(ch.removed, ch.prev is not None)
+            _emit(ch, _alive(rr, rr, ch, ch.removed), "delete")
+        if ch.hit:
+            # rows newly dead: hit by the new deletes, not dead before.
+            # A delete hitting a file added in this same snapshot
+            # emits a same-ordinal delete (MOR-upsert shape; consumers
+            # fold by ordinal, as with DVs)
+            ra = _rows(ch.hit, True)
+            emit = ra.join(_dead(ra, *ch.new_deletes), on=keys,
+                           how="left_semi")
+            _emit(ch, _alive(emit, ra, ch, ch.hit), "delete")
+        if ch.dvs:
+            rt = _rows({r: f for r, _n, _o, f in ch.dvs}, True)
+            dead = _dv_keys(spark, [(r, n, o) for r, n, o, _f in ch.dvs])
+            _emit(ch, rt.join(dead, on=keys, how="left_semi"), "delete")
     if not parts:
         return spark.createDataFrame(
-            [], ddl + ", _change_type string, _change_ordinal int, "
-                      "_commit_snapshot_id bigint")
+            [], ", ".join(f"{n} {t}" for n, t in cols.fields)
+            + ", _change_type string, _change_ordinal int, "
+              "_commit_snapshot_id bigint")
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

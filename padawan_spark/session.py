@@ -17,13 +17,18 @@ executor/task model.  Every knob here is chosen for the 100 TB stance:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 
 from pyspark.sql import SparkSession
 
+# per-process warehouse so bucketed saveAsTable runs never collide:
+# (owning pid, directory), removed when the owning process exits
+_WAREHOUSE = (os.getpid(), f"/tmp/padawan_warehouse_{os.getpid()}")
+
 _DEFAULT_CONF = {
-    # per-process warehouse so bucketed saveAsTable runs never collide
-    "spark.sql.warehouse.dir": f"/tmp/padawan_warehouse_{os.getpid()}",
+    "spark.sql.warehouse.dir": _WAREHOUSE[1],
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -72,6 +77,11 @@ _DEFAULT_CONF = {
 }
 
 
+def _remove_warehouse(pid: int, path: str) -> None:
+    if os.getpid() == pid:        # a forked child leaves it alone
+        shutil.rmtree(path, ignore_errors=True)
+
+
 def get_spark(app_name: str = "padawan-spark", master: str | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     """Create (or reuse) a SparkSession.
@@ -106,4 +116,7 @@ def get_spark(app_name: str = "padawan-spark", master: str | None = None,
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
+    if conf["spark.sql.warehouse.dir"] == _WAREHOUSE[1]:
+        # a session given its own warehouse keeps it
+        atexit.register(_remove_warehouse, *_WAREHOUSE)
     return builder.getOrCreate()

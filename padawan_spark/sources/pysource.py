@@ -1070,87 +1070,57 @@ class HudiIncrementalSource(DataSource):
 
 
 # ---------------------------------------------------------------------------
-# Iceberg incremental-APPEND streaming source: the spec's
-# incremental scan — offsets are COMMIT-ORDER POSITIONS in the
-# snapshot log (snapshot ids are random longs, so id
-# comparison would drop a newer-but-smaller id), each micro-batch
-# reads exactly the data files ADDED by the snapshots in its span.  Per the spec, only append snapshots may be consumed
-# incrementally: a span whose file set shrank (delete/replace/
-# overwrite) raises instead of emitting wrong rows.  One
-# InputPartition per added file — task-parallel like a file scan.
-class _IcebergAppendsStreamReader(DataSourceStreamReader):
+# Iceberg streams.  Offsets are positions in the commit-ordered snapshot
+# list ("how many snapshots consumed"): snapshot ids are random longs, so a
+# newer snapshot may carry a smaller id and id comparison would skip it.
+# Each micro-batch reads one span of that list, one InputPartition per
+# data file; the task resolves the file's columns by footer field id.
+# ---------------------------------------------------------------------------
+class _IcebergStreamReader(DataSourceStreamReader):
+    """What both Iceberg streams share: the snapshot list, the
+    ``startingSnapshotId`` / ``maxSnapshotsPerTrigger`` offsets, and
+    the Arrow step that puts a data file under the current schema."""
+    source = ""          # the format name, for error messages
+
     def __init__(self, options, schema):
         self.path = options["path"]
-        self.start_snapshot = int(options.get("startingSnapshotId",
-                                              0))
-        self.start_ref = options.get("startingRef")
-        if self.start_ref and self.start_snapshot:
-            raise ValueError(
-                "padawan_iceberg_appends: startingRef is exclusive "
-                "with startingSnapshotId")
-        # FOLLOW a branch across
-        # retargets — latestOffset tracks the named branch's HEAD
-        # instead of the snapshot-log tail, so fast-forwards stream
-        # their new snapshots; a retarget that rewrites history (the
-        # previous head is no longer an ancestor of the new one)
-        # gates loudly instead of silently re-reading or skipping
-        self.follow_ref = options.get("followRef")
-        self._follow_head = None         # last head streamed up to
-        self._max_snaps = int(options.get("maxSnapshotsPerTrigger",
-                                          0))
-        # Iceberg's streaming-skip-* options: opt-in to silently
-        # skipping delete / overwrite snapshots instead of raising
-        self._skip_deletes = str(options.get(
-            "skipDeleteSnapshots", "false")).lower() == "true"
-        self._skip_overwrites = str(options.get(
-            "skipOverwriteSnapshots", "false")).lower() == "true"
+        self.start_snapshot = int(options.get("startingSnapshotId", 0))
+        self._max_snaps = int(options.get("maxSnapshotsPerTrigger", 0))
         self._last_end = None
         self.spark_schema = schema
         self.names = list(schema.names)
 
-    def _snapshot_ids(self):
-        import json as _os_json
+    def _meta(self):
+        import json
 
         from ..functions.iceberg import _latest_metadata
         with open(_latest_metadata(self.path)) as fh:
-            meta = _os_json.load(fh)
-        return [s["snapshot-id"]
-                for s in sorted(meta.get("snapshots", []),
-                                key=lambda s: (
-                                    s.get("sequence-number", 0),
-                                    s["snapshot-id"]))]
+            return json.load(fh)
 
-    # real Iceberg snapshot ids are RANDOM longs — a
-    # newer snapshot may carry a smaller id, so id comparison as the
-    # offset would silently skip it (dropped data).  Offsets are the
-    # POSITION in the commit-ordered snapshot list instead ("how many
-    # snapshots consumed"); ids resolve from the ordered list only
-    # when a span's endpoints are needed.
+    @staticmethod
+    def _snapshot_ids(meta):
+        return [s["snapshot-id"] for s in sorted(
+            meta.get("snapshots", []),
+            key=lambda s: (s.get("sequence-number", 0), s["snapshot-id"]))]
+
+    def _start(self, meta):
+        """The snapshot the stream consumes after (0: from the start)."""
+        return self.start_snapshot
+
+    def _head(self, meta, snaps):
+        """The offset of the newest snapshot the stream may read."""
+        return len(snaps)
 
     def _initial_index(self):
-        start = self.start_snapshot
-        if self.start_ref:
-            # start AT a named tag/branch — the ref resolves
-            # once, to the snapshot it points at when the stream
-            # starts (consumption begins AFTER that snapshot)
-            import json as _json
-
-            from ..functions.iceberg import _latest_metadata
-            with open(_latest_metadata(self.path)) as fh:
-                refs = _json.load(fh).get("refs") or {}
-            if self.start_ref not in refs:
-                raise ValueError(
-                    f"padawan_iceberg_appends: startingRef "
-                    f"{self.start_ref!r} not in the table's refs; "
-                    f"have {sorted(refs)}")
-            start = refs[self.start_ref]["snapshot-id"]
+        meta = self._meta()
+        start = self._start(meta)
         if not start:
             return 0
-        snaps = self._snapshot_ids()
+        snaps = self._snapshot_ids(meta)
         if start not in snaps:
             raise ValueError(
-                f"padawan_iceberg_appends: starting snapshot "
-                f"{start} not in the table's snapshot log")
+                f"{self.source}: starting snapshot {start} not in the "
+                "table's snapshot log")
         return snaps.index(start) + 1
 
     def initialOffset(self):
@@ -1158,40 +1128,122 @@ class _IcebergAppendsStreamReader(DataSourceStreamReader):
         self._last_end = max(self._last_end or 0, idx)
         return {"i": idx}
 
-    def _branch_head_index(self, snaps):
-        """Resolve the followed branch's head to a snapshot-log
-        index bound, enforcing ancestry continuity: once the stream
-        has consumed up to head H, a later head must have H in its
-        parent-snapshot-id chain — a retarget onto rewritten history
-        raises instead of re-reading or skipping silently."""
-        import json as _json
+    def latestOffset(self):
+        meta = self._meta()
+        n = self._head(meta, self._snapshot_ids(meta))
+        # Spark may poll latestOffset BEFORE initialOffset: falling back
+        # to 0 would throttle the first batch into pre-start snapshots
+        last = (self._last_end if self._last_end is not None
+                else self._initial_index())
+        if self._max_snaps:
+            n = min(n, last + self._max_snaps)
+        return {"i": max(n, last)}
 
-        from ..functions.iceberg import _latest_metadata
-        with open(_latest_metadata(self.path)) as fh:
-            meta = _json.load(fh)
-        refs = meta.get("refs") or {}
-        if self.follow_ref not in refs:
+    def _span(self, start, end):
+        """``(meta, snapshot ids)`` of the span (start, end], or None
+        when it is empty."""
+        lo, hi = start["i"], end["i"]
+        self._last_end = max(self._last_end or 0, hi, lo)
+        if hi <= lo:
+            return None
+        meta = self._meta()
+        return meta, self._snapshot_ids(meta)[lo:hi]
+
+    def _batches(self, tb, cols, const, id_key=b"PARQUET:field_id"):
+        """Arrow batches of data file table ``tb`` under the stream's
+        schema: columns match the current names by the footer field
+        ids (``id_key``), so a file written before a rename resolves;
+        nested columns view their inner fields under the current names;
+        a defaulted column the file predates reads its initial-default;
+        ``const`` (identity partition values, change tags) attaches as
+        typed constants."""
+        from ..functions.nested import arrow_ice_logical_view
+        name_of_fid = {fid: n for n, fid in cols.field_ids.items()}
+        col_of = {}
+        for fld in tb.schema:
+            fid = (fld.metadata or {}).get(id_key)
+            if fid is not None and int(fid) in name_of_fid:
+                col_of[name_of_fid[int(fid)]] = fld.name
+        for nm in cols.nested:
+            idx = tb.schema.get_field_index(col_of.get(nm, nm))
+            if idx >= 0:
+                tb = tb.set_column(idx, tb.schema.field(idx).name,
+                                   arrow_ice_logical_view(
+                                       tb.column(idx).combine_chunks(),
+                                       cols.raw[nm]["type"],
+                                       id_key=id_key))
+        const = dict(const)
+        have = set(tb.schema.names)
+        for c, v in cols.defaults.items():
+            if c not in const and col_of.get(c, c) not in have:
+                const[c] = v
+        yield from _aligned_batches(tb, self.spark_schema, const=const,
+                                    col_of=col_of)
+
+    def commit(self, end):
+        pass
+
+
+# Iceberg incremental-APPEND stream: the spec's incremental scan, one
+# micro-batch reads exactly the data files its snapshots ADDED.  Only
+# append snapshots may be consumed incrementally: a delete or overwrite
+# snapshot raises unless the caller opted into skipping it.
+class _IcebergAppendsStreamReader(_IcebergStreamReader):
+    source = "padawan_iceberg_appends"
+
+    def __init__(self, options, schema):
+        super().__init__(options, schema)
+        self.start_ref = options.get("startingRef")
+        if self.start_ref and self.start_snapshot:
             raise ValueError(
-                f"padawan_iceberg_appends: followRef "
-                f"{self.follow_ref!r} not in the table's refs; "
-                f"have {sorted(refs)}")
-        head = refs[self.follow_ref]["snapshot-id"]
+                "padawan_iceberg_appends: startingRef is exclusive "
+                "with startingSnapshotId")
+        # follow a branch across retargets: the head of the named
+        # branch bounds each span instead of the snapshot-log tail
+        self.follow_ref = options.get("followRef")
+        self._follow_head = None         # last head streamed up to
+        # Iceberg's streaming-skip-* options: opt-in to silently
+        # skipping delete / overwrite snapshots instead of raising
+        self._skip_deletes = str(options.get(
+            "skipDeleteSnapshots", "false")).lower() == "true"
+        self._skip_overwrites = str(options.get(
+            "skipOverwriteSnapshots", "false")).lower() == "true"
+
+    def _ref(self, meta, name, option):
+        refs = meta.get("refs") or {}
+        if name not in refs:
+            raise ValueError(
+                f"padawan_iceberg_appends: {option} {name!r} not in the "
+                f"table's refs; have {sorted(refs)}")
+        return refs[name]["snapshot-id"]
+
+    def _start(self, meta):
+        # a startingRef resolves once, to the snapshot it points at
+        # when the stream starts
+        if self.start_ref:
+            return self._ref(meta, self.start_ref, "startingRef")
+        return self.start_snapshot
+
+    def _head(self, meta, snaps):
+        """The followed branch's head, with ancestry continuity: once
+        the stream has read up to head H, a later head must have H
+        among its ancestors; a retarget onto rewritten history raises
+        instead of re-reading or skipping rows."""
+        if not self.follow_ref:
+            return len(snaps)
+        head = self._ref(meta, self.follow_ref, "followRef")
         if head not in snaps:
             raise ValueError(
                 f"padawan_iceberg_appends: followRef head {head} "
                 "not in the table's snapshot log")
-        if self._follow_head is not None \
-                and self._follow_head != head:
+        if self._follow_head not in (None, head):
             parent_of = {s["snapshot-id"]: s.get("parent-snapshot-id")
                          for s in meta.get("snapshots", [])}
             anc, seen = head, set()
-            while anc is not None and anc not in seen:
-                if anc == self._follow_head:
-                    break
+            while anc is not None and anc != self._follow_head \
+                    and anc not in seen:
                 seen.add(anc)
                 anc = parent_of.get(anc)
-            else:
-                anc = None
             if anc != self._follow_head:
                 raise NotImplementedError(
                     f"padawan_iceberg_appends: branch "
@@ -1201,244 +1253,115 @@ class _IcebergAppendsStreamReader(DataSourceStreamReader):
                     "— history was rewritten; restart the stream "
                     "from an explicit snapshot instead")
         self._follow_head = head
-        return snaps.index(head) + 1
-
-    def latestOffset(self):
-        snaps = self._snapshot_ids()
-        n = len(snaps)
-        if self.follow_ref:
-            n = min(n, self._branch_head_index(snaps))
-        # Spark may poll latestOffset BEFORE initialOffset — falling
-        # back to 0 here would throttle the first batch into a span
-        # that re-reads pre-start snapshots
-        last = (self._last_end if self._last_end is not None
-                else self._initial_index())
-        if self._max_snaps:
-            n = min(n, last + self._max_snaps)
-        return {"i": max(n, last)}
+        return min(len(snaps), snaps.index(head) + 1)
 
     def partitions(self, start, end):
-        import json as _json
-
-        from ..functions.iceberg import (_latest_metadata,
-                                         _parse_part_spec,
-                                         _raw_specs,
-                                         _schema_inventory)
-        lo_i, hi_i = start["i"], end["i"]
-        self._last_end = max(self._last_end or 0, hi_i, lo_i)
-        if hi_i <= lo_i:
+        from ..functions.iceberg import added_data_files, iceberg_columns
+        span = self._span(start, end)
+        if span is None:
             return [InputPartition(None)]
-        snaps = self._snapshot_ids()
-        # walk the span SNAPSHOT BY SNAPSHOT: each snapshot's added
-        # files come from ONLY the manifests that snapshot itself
-        # added (functions.iceberg.added_data_files — a live-set diff
-        # would decode the FULL manifest list once per snapshot,
-        # making first-trigger planning
-        # O(backlog_snapshots x manifests); this is O(added files)
-        # over the whole span).  Non-append snapshots raise per the
-        # spec — unless the caller opted into Iceberg's streaming
-        # skip options (streaming-skip-delete-snapshots /
-        # streaming-skip-overwrite-snapshots): those snapshots then
-        # contribute NOTHING and the walk continues past them.
-        from ..functions.iceberg import added_data_files
-        with open(_latest_metadata(self.path)) as fh:
-            meta = _json.load(fh)
+        meta, sids = span
         op_of = {s["snapshot-id"]:
                  (s.get("summary") or {}).get("operation", "append")
                  for s in meta.get("snapshots", [])}
-        added_files: list[tuple] = []   # (path, pv_items, fmt, spec)
-        for sid_ in snaps[lo_i:hi_i]:
-            op = op_of.get(sid_, "append")
+        added = []            # (path, partition record, format, spec)
+        for sid in sids:
+            # each snapshot's added files come from only the manifests
+            # it added: O(added files) over the span
+            op = op_of.get(sid, "append")
             if op != "append":
-                skip = ((op == "delete" and self._skip_deletes)
-                        or (op == "overwrite"
-                            and self._skip_overwrites))
-                if not skip:
+                if not ((op == "delete" and self._skip_deletes)
+                        or (op == "overwrite" and self._skip_overwrites)):
                     raise NotImplementedError(
-                        f"padawan_iceberg_appends: snapshot {sid_} "
+                        f"padawan_iceberg_appends: snapshot {sid} "
                         f"is a {op!r} snapshot — only append "
                         "snapshots stream incrementally, per the "
                         "spec; set skipDeleteSnapshots / "
                         "skipOverwriteSnapshots to skip them "
                         "(Iceberg's streaming-skip-* options)")
-                continue                 # skipped: contributes nothing
-            new_files, removed = added_data_files(self.path, sid_)
+                continue
+            files, removed = added_data_files(self.path, sid)
             if removed:
                 raise NotImplementedError(
                     f"padawan_iceberg_appends: append snapshot "
-                    f"{sid_} also removed files — malformed "
+                    f"{sid} also removed files — malformed "
                     "snapshot summary")
-            for p, pv, f, sp in new_files:
-                added_files.append((p, tuple(sorted(pv.items())),
-                                    f, sp))
-        # every spec data format streams — parquet and ORC read
-        # as Arrow tables in the task, Avro through the in-repo
-        # decoder (row path: that decoder is row-wise by nature);
-        # unknown formats still gate loudly
-        bad_fmt = sorted({f for _p, _pv, f, _sp in added_files
+            added.extend(files)
+        bad_fmt = sorted({f for _p, _pv, f, _sp in added
                           if f not in ("PARQUET", "ORC", "AVRO")})
         if bad_fmt:
             raise NotImplementedError(
                 "padawan_iceberg_appends: unsupported data file "
                 f"format(s) {bad_fmt[:3]} in the stream span")
-        # identity partition values re-attach per file in the task,
-        # resolved under each file's OWN spec
-        from ..functions.iceberg import _schema_fields_json
-        fld_ids, _n_schemas = _schema_inventory(self.path)
-        # nested columns: the task views their inner struct
-        # fields to the schema's CURRENT names, verified against the
-        # file's nested field ids
-        nested_items = tuple(sorted(
-            (nm, _json.dumps(f["type"]))
-            for nm, f in _schema_fields_json(self.path).items()
-            if not isinstance(f["type"], str)))
-        # the field-id map rides each
-        # partition so the read TASK resolves columns by the file's
-        # parquet footer PARQUET:field_id — a schema-evolved table
-        # (renamed columns, multiple schema versions) streams
-        # correctly; the multi-schema gate is gone
-        fid_items = tuple(sorted(
-            (fid, name) for name, fid in fld_ids.items()))
-        # v3 initial-defaults: a defaulted column added AFTER a
-        # file's snapshot must stream as the DEFAULT, not null — the
-        # same silent-NULL class as renamed nested leaves in this
-        # stream.  Values resolve once at plan
-        # time (an unsupported default type gates loudly here).
-        from ..functions.iceberg import _ice_default_py, _ice_type_ddl
-        dflt_items = tuple(sorted(
-            (nm, _ice_default_py(f["initial-default"],
-                                 _ice_type_ddl(f["type"]), nm))
-            for nm, f in _schema_fields_json(self.path).items()
-            if f.get("initial-default") is not None))
-        name_of = {v: k for k, v in fld_ids.items()}
-        ident_by_spec = {
-            s: {fname: src for t, _p, src, fname
-                in _parse_part_spec(sp, name_of) if t == "identity"}
-            for s, sp in _raw_specs(meta).items()}
-        return ([InputPartition(
-            (p, f, pv_items,
-             tuple(ident_by_spec.get(sp, {}).items()),
-             fid_items, nested_items, dflt_items))
-            for p, pv_items, f, sp in added_files]
-            or [InputPartition(None)])
+        cols = iceberg_columns(meta)
+        return ([InputPartition((p, f, cols.constants(pv, sp), cols))
+                 for p, pv, f, sp in added]
+                or [InputPartition(None)])
 
     def read(self, partition):
         if partition.value is None:
             return
-        (p, fmt, pv_items, ident_items, fid_items,
-         nested_items, dflt_items) = partition.value
-        dflt = dict(dflt_items)
-        pv = dict(pv_items)
-        src_of = dict(ident_items)       # partition field -> column
-        const = {src_of[f]: v for f, v in pv.items() if f in src_of}
-        name_of_fid = dict(fid_items)    # field id -> current name
-        if fmt == "AVRO":
-            # the in-repo Avro decoder is row-wise by nature; field
-            # ids ride the embedded writer schema's `field-id` attrs
-            from ..functions.avro import (decode_avro_py,
-                                          read_avro_header_file)
-            schema, _c, _s, _pos = read_avro_header_file(p)
-            with open(p, "rb") as fh:
-                fields, rows = decode_avro_py(fh.read())
-            fnames = [n for n, _t, _nl in fields]
-            src_idx = {}
-            node_of = {}
-            for f, n in zip(schema["fields"], fnames):
-                fid = f.get("field-id")
-                logical = (name_of_fid.get(int(fid))
-                           if fid is not None else None) or n
-                src_idx[logical] = fnames.index(n)
-                node_of[logical] = f
-            conv = {}
-            if nested_items:
-                # nested-EVOLVED avro: renamed INNER fields
-                # resolve per the writer schema's nested id
-                # attributes — without this a pre-rename file's
-                # renamed leaves would stream as silent NULLs
-                import json as _json4
-
-                from ..functions.iceberg import _ice_value_renamer
-                from ..functions.nested import (_avro_schema_tree,
-                                                match_tree_ice)
-                for nm, tj in nested_items:
-                    f = node_of.get(nm)
-                    if f is None:
-                        continue
-                    lt = _json4.loads(tj)
-                    pt = match_tree_ice(lt, _avro_schema_tree(f))
-                    rn = _ice_value_renamer(pt, lt)
-                    if rn is not None:
-                        conv[nm] = rn
-            for r in rows:
-                yield tuple(
-                    const[c] if c in const
-                    else ((conv[c](r[src_idx[c]]) if c in conv
-                           else r[src_idx[c]])
-                          if c in src_idx else dflt.get(c))
-                    for c in self.names)
-            return
-        # columns match by FIELD ID from the file's own footer:
-        # a file written before a rename carries the old physical
-        # name but the same id, so the current logical name resolves
-        # to it here instead of silently nulling.  Parquet stamps
-        # PARQUET:field_id; ORC stamps the spec's iceberg.id type
-        # attribute — pyarrow surfaces both as field metadata.
+        p, fmt, const, cols = partition.value
         if fmt == "ORC":
             import pyarrow.orc as po
-            tb = po.ORCFile(p).read()
-            id_key = b"iceberg.id"
-        else:
+            yield from self._batches(po.ORCFile(p).read(), cols, const,
+                                     id_key=b"iceberg.id")
+        elif fmt == "PARQUET":
             import pyarrow.parquet as pq
-            tb = pq.read_table(p)
-            id_key = b"PARQUET:field_id"
-        col_of = {}
-        for fld in tb.schema:
-            fid = (fld.metadata or {}).get(id_key)
-            if fid is not None and int(fid) in name_of_fid:
-                col_of[name_of_fid[int(fid)]] = fld.name
-        if nested_items:
-            # nested columns: view inner struct fields to the
-            # schema's current names (zero-copy; verified against
-            # the file's nested field ids — a rename streams, a
-            # reorder/add gates)
-            import json as _json3
+            yield from self._batches(pq.read_table(p), cols, const)
+        else:
+            yield from self._avro_rows(p, cols, const)
 
-            from ..functions.nested import arrow_ice_logical_view
-            for nm, tj in nested_items:
-                fc = col_of.get(nm, nm)
-                idx = tb.schema.get_field_index(fc)
-                if idx >= 0:
-                    tb = tb.set_column(
-                        idx, fc,
-                        arrow_ice_logical_view(
-                            tb.column(idx).combine_chunks(),
-                            _json3.loads(tj), id_key=id_key))
-        if dflt:
-            # defaulted columns ABSENT from this file attach as typed
-            # constants; present columns keep their stored values
-            have = set(tb.schema.names)
-            for c, v in dflt.items():
-                if c not in const and col_of.get(c, c) not in have:
-                    const[c] = v
-        yield from _aligned_batches(tb, self.spark_schema,
-                                    const=const, col_of=col_of)
-
-    def commit(self, end):
-        pass
+    def _avro_rows(self, p, cols, const):
+        """Rows of an Avro data file: the in-repo decoder is row-wise,
+        and field ids ride the writer schema's ``field-id`` attributes
+        (nested ones too, so renamed inner fields resolve)."""
+        from ..functions.avro import decode_avro_py, read_avro_header_file
+        from ..functions.iceberg import _ice_value_renamer
+        from ..functions.nested import _avro_schema_tree, match_tree_ice
+        schema, _c, _s, _pos = read_avro_header_file(p)
+        with open(p, "rb") as fh:
+            fields, rows = decode_avro_py(fh.read())
+        name_of_fid = {fid: n for n, fid in cols.field_ids.items()}
+        src_idx, node_of = {}, {}
+        for i, (f, (n, _t, _nl)) in enumerate(zip(schema["fields"],
+                                                   fields)):
+            fid = f.get("field-id")
+            logical = (name_of_fid.get(int(fid))
+                       if fid is not None else None) or n
+            src_idx[logical] = i
+            node_of[logical] = f
+        conv = {}
+        for nm in cols.nested:
+            if nm in node_of:
+                lt = cols.raw[nm]["type"]
+                rn = _ice_value_renamer(
+                    match_tree_ice(lt, _avro_schema_tree(node_of[nm])), lt)
+                if rn is not None:
+                    conv[nm] = rn
+        for r in rows:
+            yield tuple(
+                const[c] if c in const
+                else cols.defaults.get(c) if c not in src_idx
+                else conv[c](r[src_idx[c]]) if c in conv
+                else r[src_idx[c]]
+                for c in self.names)
 
 
 class IcebergAppendsSource(DataSource):
     """``spark.readStream.format("padawan_iceberg_appends")`` —
     stream an Iceberg table's incremental append scan: per
     micro-batch, the rows of exactly the data files added by the new
-    snapshots, walked snapshot-by-snapshot with each file's partition
-    values/spec taken from its own snapshot's view.  Parquet and ORC
-    files read as Arrow record batches in the task (columns resolved
-    by field id — schema-evolved tables stream); Avro files decode
-    through the in-repo reader.  Non-append snapshots raise per the
+    snapshots, each file's identity partition values taken under its
+    own spec.  Parquet and ORC files read as Arrow tables in the task
+    (columns resolved by field id, so schema-evolved tables stream);
+    Avro files decode through the in-repo reader.  Options:
+    ``startingSnapshotId`` or ``startingRef`` (consume AFTER it),
+    ``followRef`` (bound each span by a branch head),
+    ``maxSnapshotsPerTrigger``.  Non-append snapshots raise per the
     spec unless ``skipDeleteSnapshots`` / ``skipOverwriteSnapshots``
     opt into Iceberg's streaming-skip-* behavior (those snapshots
-    then contribute nothing and the walk continues)."""
+    then contribute nothing)."""
 
     @classmethod
     def name(cls):
@@ -1453,252 +1376,62 @@ class IcebergAppendsSource(DataSource):
         return _IcebergAppendsStreamReader(self.options, schema)
 
 
-# Iceberg CHANGELOG stream: the streaming twin of
-# functions.iceberg.read_iceberg_changes — per micro-batch, the
-# row-level insert/delete changes of the new snapshots (added files'
-# rows, removed files' rows, v3 deletion-vector deltas), tagged
-# _change_type + _commit_snapshot_id.  Offsets are positions in the
-# commit-ordered snapshot list (random snapshot ids can't reorder);
-# each snapshot diffs against its OWN parent, so the emitted change
-# set is chain-exact.  One InputPartition per changed file / DV —
-# task-parallel; DV predecessor vectors decode in the task.
-class _IcebergChangesStreamReader(DataSourceStreamReader):
-    def __init__(self, options, schema):
-        self.path = options["path"]
-        self.start_snapshot = int(options.get("startingSnapshotId",
-                                              0))
-        self._max_snaps = int(options.get("maxSnapshotsPerTrigger",
-                                          0))
-        self._last_end = None
-        self.spark_schema = schema
-        self.names = list(schema.names)
-
-    def _snapshot_ids(self):
-        import json as _json
-
-        from ..functions.iceberg import _latest_metadata
-        with open(_latest_metadata(self.path)) as fh:
-            meta = _json.load(fh)
-        return [s["snapshot-id"]
-                for s in sorted(meta.get("snapshots", []),
-                                key=lambda s: (
-                                    s.get("sequence-number", 0),
-                                    s["snapshot-id"]))]
-
-    def _initial_index(self):
-        if not self.start_snapshot:
-            return 0
-        snaps = self._snapshot_ids()
-        if self.start_snapshot not in snaps:
-            raise ValueError(
-                f"padawan_iceberg_changes: starting snapshot "
-                f"{self.start_snapshot} not in the snapshot log")
-        return snaps.index(self.start_snapshot) + 1
-
-    def initialOffset(self):
-        idx = self._initial_index()
-        self._last_end = max(self._last_end or 0, idx)
-        return {"i": idx}
-
-    def latestOffset(self):
-        n = len(self._snapshot_ids())
-        last = (self._last_end if self._last_end is not None
-                else self._initial_index())
-        if self._max_snaps:
-            n = min(n, last + self._max_snaps)
-        return {"i": max(n, last)}
+# Iceberg CHANGELOG stream: per micro-batch, the row-level changes of the
+# new snapshots as functions.iceberg.plan_iceberg_changes plans them (the
+# plan read_iceberg_changes reads), tagged _change_type and
+# _commit_snapshot_id.  One InputPartition per changed file; the task
+# works out from the delete artifacts which of the file's rows emit.
+class _IcebergChangesStreamReader(_IcebergStreamReader):
+    source = "padawan_iceberg_changes"
 
     def partitions(self, start, end):
-        import json as _json
-
-        from ..functions.iceberg import (_latest_metadata,
-                                         _live_files_of,
-                                         _lookup_partitions,
-                                         _parse_part_spec,
-                                         _raw_specs,
-                                         _schema_inventory,
-                                         _snapshot_changes)
-        lo_i, hi_i = start["i"], end["i"]
-        self._last_end = max(self._last_end or 0, hi_i, lo_i)
-        if hi_i <= lo_i:
+        from ..functions.iceberg import plan_iceberg_changes
+        span = self._span(start, end)
+        if span is None:
             return [InputPartition(None)]
-        with open(_latest_metadata(self.path)) as fh:
-            meta = _json.load(fh)
-        from ..functions.iceberg import (_ice_default_py,
-                                         _ice_type_ddl,
-                                         _schema_fields_json)
-        by_id = {s["snapshot-id"]: s
-                 for s in meta.get("snapshots", [])}
-        # identity partition values attach by SOURCE COLUMN, resolved
-        # under each file's own spec (an identity field
-        # whose NAME differs from its source column must still fill
-        # that column — keying the const by field name silently
-        # null-fills it; the batch changelog and the appends stream
-        # both resolve field name -> source column the same way)
-        fld_ids, _ns = _schema_inventory(self.path)
-        name_of = {v: k for k, v in fld_ids.items()}
-        ident_by_spec = {
-            s: {fname: src for t, _p, src, fname
-                in _parse_part_spec(sp, name_of) if t == "identity"}
-            for s, sp in _raw_specs(meta).items()}
-        # field-id map + v3 initial-defaults ride every partition so
-        # the task resolves a renamed column to its old physical name
-        # and fills columns absent from pre-add files (the
-        # appends stream's shape; threaded through the partition
-        # tuple because read() runs on a worker-side copy of this
-        # reader, not the driver instance)
-        fid_items = tuple(sorted(
-            (fid, nm) for nm, fid in fld_ids.items()))
-        dflt_items = tuple(sorted(
-            (nm, _ice_default_py(f["initial-default"],
-                                 _ice_type_ddl(f["type"]), nm))
-            for nm, f in _schema_fields_json(self.path).items()
-            if f.get("initial-default") is not None))
-        # nested columns: the task views inner struct fields
-        # to the schema's CURRENT names, verified against the file's
-        # nested field ids — the appends stream's shape; with this
-        # the changes stream reads EVERY schema-evolution class the
-        # batch changelog reads
-        nested_items = tuple(sorted(
-            (nm, _json.dumps(f["type"]))
-            for nm, f in _schema_fields_json(self.path).items()
-            if not isinstance(f["type"], str)))
-        resolve = (fid_items, dflt_items, nested_items)
-
-        def _iid(sp):
-            return tuple(sorted(ident_by_spec.get(sp, {}).items()))
-
+        plan = plan_iceberg_changes(self.path, *span)
+        cols = plan.columns
         parts = []
-        snaps = self._snapshot_ids()
-        # status-based per-snapshot planning (shared with the batch
-        # changelog): only the manifests each snapshot itself added
-        # decode — O(changed entries), never a live-set walk.  v2
-        # delete files: position-delete targets resolve by a
-        # column-pruned driver read of the NEW delete files'
-        # ``file_path`` column (planning metadata, O(delete file));
-        # an equality delete's affected set is the parent's live
-        # files below its sequence number — its honest scope.
-        for sid in snaps[lo_i:hi_i]:
-            if ((by_id[sid].get("summary") or {})
-                    .get("operation") == "replace"):
-                continue    # compaction: no logical row change
-            (added, removed, new_dvs, prev_dvs,
-             new_pos, new_eq, prev_pos, prev_eq) = _snapshot_changes(
-                self.path, meta, by_id, sid,
-                by_id[sid].get("parent-snapshot-id"))
-            prev_any = bool(prev_pos or prev_eq or prev_dvs)
-
-            def _prev_bundle(p):
-                # the parent's delete artifacts that can apply to
-                # data file p — what "already dead" diffs against
-                if not prev_any:
-                    return None
-                return (tuple(prev_pos), tuple(prev_eq),
-                        prev_dvs.get(p))
-
-            for p, (pvals, sp, seq) in sorted(added.items()):
+        for ch in plan.snapshots:
+            # (data file, file facts, change type, within, before): the
+            # task emits the file's rows (those dead under the delete
+            # bundle `within` when given) minus those dead under `before`
+            tasks = ([(p, f, "insert", None, None)
+                      for p, f in sorted(ch.added.items())]
+                     + [(p, f, "delete", None, ch.prev_bundle(p))
+                        for p, f in sorted(ch.removed.items())]
+                     + [(p, f, "delete", ch.new_deletes, ch.prev_bundle(p))
+                        for p, f in sorted(ch.hit.items())]
+                     + [(ref, f, "delete", ((), (), new),
+                         old and ((), (), old))
+                        for ref, new, old, f in ch.dvs])
+            for p, (pvals, spec, seq), ctype, within, before in tasks:
+                const = dict(cols.constants(pvals, spec),
+                             _change_type=ctype,
+                             _commit_snapshot_id=int(ch.sid))
                 parts.append(InputPartition(
-                    ("file", sid, "insert", p,
-                     tuple(sorted(pvals.items())), _iid(sp),
-                     int(seq), None, resolve)))
-            for p, (pvals, sp, seq) in sorted(removed.items()):
-                parts.append(InputPartition(
-                    ("file", sid, "delete", p,
-                     tuple(sorted(pvals.items())), _iid(sp),
-                     int(seq), _prev_bundle(p), resolve)))
-            if new_pos or new_eq:
-                affected = {}
-                if new_pos:
-                    import pyarrow.parquet as _pq
-                    refs = set()
-                    for dp in new_pos:
-                        col = _pq.read_table(
-                            dp, columns=["file_path"]
-                        ).column("file_path").to_pylist()
-                        refs.update(self._norm_path(v)
-                                    for v in col)
-                    refs -= set(removed)
-                    take = {r: added[r] for r in refs
-                            if r in added}
-                    missing = refs - set(take)
-                    if missing:
-                        take.update(_lookup_partitions(
-                            self.path, meta, by_id, sid, missing))
-                    affected.update(take)
-                if new_eq:
-                    max_dseq = max(s2 for _p, s2, _e in new_eq)
-                    psid = by_id[sid].get("parent-snapshot-id")
-                    if psid is not None and psid in by_id:
-                        for p2, v in _live_files_of(
-                                self.path, meta, by_id,
-                                psid).items():
-                            if v[2] < max_dseq \
-                                    and p2 not in removed:
-                                affected.setdefault(p2, v)
-                new_bundle = (tuple(new_pos), tuple(new_eq), None)
-                for p, (pvals, sp, seq) in sorted(
-                        affected.items()):
-                    parts.append(InputPartition(
-                        ("v2del", sid, "delete", p,
-                         tuple(sorted(pvals.items())), _iid(sp),
-                         int(seq), _prev_bundle(p), new_bundle,
-                         resolve)))
-            dv_items = []
-            for ref, new in sorted(new_dvs.items()):
-                if ref in removed:
-                    continue
-                old = prev_dvs.get(ref)
-                if old == new:
-                    continue
-                dv_items.append((ref, new, old))
-            if dv_items:
-                need = {ref for ref, _n, _o in dv_items}
-                pv_of = {r: added[r] for r in need if r in added}
-                pv_of.update(_lookup_partitions(
-                    self.path, meta, by_id, sid,
-                    need - set(pv_of)))
-                for ref, new, old in dv_items:
-                    pvals, sp, _sq = pv_of[ref]
-                    parts.append(InputPartition(
-                        ("dv", sid, "delete", ref,
-                         tuple(sorted(pvals.items())), _iid(sp),
-                         new, old, resolve)))
+                    (p, int(seq), const, within, before, cols)))
         return parts or [InputPartition(None)]
 
-    def _norm_path(self, v):
-        """A delete file's recorded file_path (URI / table-relative)
-        -> plain absolute path."""
-        import os as _os
-        if v.startswith("file:"):
-            v = "/" + v[5:].lstrip("/")
-        if not v.startswith("/"):
-            v = _os.path.join(_os.path.abspath(self.path), v)
-        return v
-
-    def _dead_positions(self, p, seq, bundle, fid_items=()):
+    def _dead_positions(self, p, seq, bundle, cols):
         """Row positions of data file ``p`` (sequence ``seq``) dead
-        under ``(pos_paths, eq_items, dv_entry)`` — computed IN THE
-        TASK from the delete artifacts themselves: position files
-        filter to this file's path, equality files match null-safely
-        under the strict ``seq < dseq`` scope, a DV decodes its
-        bitmap.  Equality columns resolve by footer FIELD ID on
-        evolved tables (a delete file or data file written
-        before a rename carries the old physical name; reading by
-        the current name would null-fill and silently skip the
-        delete) and gate loudly when unresolvable."""
+        under the delete bundle ``(position files, equality files,
+        deletion vector or None)``, computed in the task: position
+        files filter to this file's path, equality files match
+        null-safely under the strict ``seq < delete seq`` scope, a
+        deletion vector decodes its bitmap.  Equality columns resolve
+        by footer field id (a file written before a rename carries the
+        old name) and raise when unresolvable."""
         import pyarrow.parquet as pq
 
-        from ..functions.iceberg import _read_puffin_dv
-        fid_of = {nm: fid for fid, nm in fid_items}
+        from ..functions.iceberg import _abs_path, _read_puffin_dv
 
         def _col(t2, name, src):
-            fid = fid_of.get(name)
-            if fid is not None:
-                for fld in t2.schema:
-                    m = (fld.metadata or {}).get(
-                        b"PARQUET:field_id")
-                    if m is not None and int(m) == fid:
-                        return t2.column(fld.name).to_pylist()
+            fid = cols.field_ids.get(name)
+            for fld in t2.schema:
+                m = (fld.metadata or {}).get(b"PARQUET:field_id")
+                if fid is not None and m is not None and int(m) == fid:
+                    return t2.column(fld.name).to_pylist()
             if name in t2.schema.names:
                 return t2.column(name).to_pylist()
             raise NotImplementedError(
@@ -1712,20 +1445,16 @@ class _IcebergChangesStreamReader(DataSourceStreamReader):
             t2 = pq.read_table(dp, columns=["file_path", "pos"])
             for fp, pos in zip(t2.column("file_path").to_pylist(),
                                t2.column("pos").to_pylist()):
-                if self._norm_path(fp) == p:
+                if _abs_path(self.path, fp) == p:
                     dead.add(int(pos))
-        if eq_items:
-            tb = None
-            for ep, dseq, enames in eq_items:
-                if not (seq < dseq):
-                    continue
-                t2 = pq.read_table(ep)
-                vals = set(zip(*[_col(t2, c, ep)
+        tb = None
+        for ep, dseq, enames in eq_items:
+            if seq < dseq:
+                vals = set(zip(*[_col(pq.read_table(ep), c, ep)
                                  for c in enames]))
-                if tb is None:
-                    tb = pq.read_table(p)
-                cols = [_col(tb, c, p) for c in enames]
-                for i, tup in enumerate(zip(*cols)):
+                tb = tb if tb is not None else pq.read_table(p)
+                for i, tup in enumerate(zip(*[_col(tb, c, p)
+                                              for c in enames])):
                     if tup in vals:
                         dead.add(i)
         if dv is not None:
@@ -1735,109 +1464,37 @@ class _IcebergChangesStreamReader(DataSourceStreamReader):
     def read(self, partition):
         if partition.value is None:
             return
+        import pyarrow as pa
         import pyarrow.parquet as pq
-
-        from ..functions.iceberg import _read_puffin_dv
-        kind = partition.value[0]
-        if kind == "file":
-            (_k, sid, ctype, p, pv, iid, seq,
-             prev_bundle, resolve) = partition.value
-            tb = pq.read_table(p)
-            if ctype == "delete" and prev_bundle is not None:
-                # rows already dead at the parent were deleted in
-                # EARLIER snapshots — a removed file emits only its
-                # live rows
-                dead_prev = self._dead_positions(p, seq,
-                                                 prev_bundle,
-                                                 resolve[0])
-                if dead_prev:
-                    tb = tb.take(sorted(
-                        set(range(tb.num_rows)) - dead_prev))
-        elif kind == "v2del":
-            (_k, sid, ctype, p, pv, iid, seq, prev_bundle,
-             new_bundle, resolve) = partition.value
-            dead_new = self._dead_positions(p, seq, new_bundle,
-                                            resolve[0])
-            if prev_bundle is not None:
-                dead_new -= self._dead_positions(p, seq,
-                                                 prev_bundle,
-                                                 resolve[0])
-            tb = pq.read_table(p).take(sorted(dead_new))
-        else:
-            (_k, sid, ctype, p, pv, iid, new, old,
-             resolve) = partition.value
-            tb = pq.read_table(p)
-            pos = _read_puffin_dv(*new)
-            if old is not None:
-                base = set(_read_puffin_dv(*old))
-                pos = [x for x in pos if x not in base]
-            tb = tb.take(sorted(pos))
-        # schema evolution: the file's footer field ids
-        # resolve renamed columns to their old physical names,
-        # defaulted columns absent from pre-add files attach as
-        # typed constants, and NESTED columns re-view their inner
-        # fields to the current names by nested field id — the
-        # appends stream's shape
-        fid_items, dflt_items, nested_items = resolve
-        name_of_fid = dict(fid_items)
-        col_of = {}
-        for fld in tb.schema:
-            fid = (fld.metadata or {}).get(b"PARQUET:field_id")
-            if fid is not None and int(fid) in name_of_fid:
-                col_of[name_of_fid[int(fid)]] = fld.name
-        if nested_items:
-            import json as _json3
-
-            from ..functions.nested import arrow_ice_logical_view
-            for nm, tj in nested_items:
-                fc = col_of.get(nm, nm)
-                idx = tb.schema.get_field_index(fc)
-                if idx >= 0:
-                    tb = tb.set_column(
-                        idx, fc,
-                        arrow_ice_logical_view(
-                            tb.column(idx).combine_chunks(),
-                            _json3.loads(tj),
-                            id_key=b"PARQUET:field_id"))
-        # partition FIELD name -> SOURCE column: the
-        # manifest's partition tuple keys by field name; the row's
-        # column is the spec's source — identical for the common
-        # same-named identity field, different after a field rename
-        src_of = dict(iid)
-        const = {src_of[f]: v for f, v in dict(pv).items()
-                 if f in src_of}
-        if dflt_items:
-            have = set(tb.schema.names)
-            for c, v in dflt_items:
-                if c not in const and col_of.get(c, c) not in have:
-                    const[c] = v
-        const["_change_type"] = ctype
-        const["_commit_snapshot_id"] = int(sid)
-        yield from _aligned_batches(tb, self.spark_schema,
-                                    const=const, col_of=col_of)
-
-    def commit(self, end):
-        pass
+        p, seq, const, within, before, cols = partition.value
+        tb = pq.read_table(p)
+        if within is not None or before is not None:
+            rows = (set(range(tb.num_rows)) if within is None
+                    else self._dead_positions(p, seq, within, cols))
+            if before is not None:
+                rows -= self._dead_positions(p, seq, before, cols)
+            # typed: an empty selection is a valid one
+            tb = tb.take(pa.array(sorted(rows), type=pa.int64()))
+        yield from self._batches(tb, cols, const)
 
 
 class IcebergChangesSource(DataSource):
     """``spark.readStream.format("padawan_iceberg_changes")`` — the
     Iceberg CHANGELOG as a stream: per micro-batch, the row-level
-    insert/delete changes of the new snapshots (added files' rows,
-    removed files' rows minus their already-dead rows, v3
-    deletion-vector deltas — a replacement vector contributes only
-    its NEW positions — and rows newly dead under v2
-    position-delete / equality-delete files the snapshot added),
-    each row tagged ``_change_type`` /
-    ``_commit_snapshot_id``.  Snapshots whose operation is
-    ``replace`` (compactions) emit nothing.  Options:
+    insert/delete changes of the new snapshots, each row tagged
+    ``_change_type`` / ``_commit_snapshot_id``.  The span is planned by
+    :func:`..functions.iceberg.plan_iceberg_changes`, the planner of
+    ``read_iceberg_changes``, so the stream emits the batch
+    changelog's rows: added files' rows, removed files' rows minus
+    their already-dead rows, rows newly dead under the v2 position and
+    equality deletes a snapshot added, and deletion-vector deltas (a
+    replacement vector contributes only its NEW positions).
+    ``replace`` snapshots (compactions) emit nothing.  Options:
     ``startingSnapshotId`` (consume AFTER it),
-    ``maxSnapshotsPerTrigger``.  Parquet data files only; EVERY
-    schema-evolution class the batch changelog reads streams too:
-    columns resolve by the file's footer field ids in the
-    task, initial-defaults fill pre-add files, and nested columns
-    re-view their inner fields to the current names by nested field
-    id."""
+    ``maxSnapshotsPerTrigger``.  Parquet data files only; columns
+    resolve by the files' footer field ids in the task,
+    initial-defaults fill pre-add files, and nested columns view their
+    inner fields under the current names."""
 
     @classmethod
     def name(cls):

@@ -3,9 +3,11 @@ span read both ways must give the same rows, as multisets.
 
 padawan's ``read_changes`` and ``padawan_cdf`` stream share
 ``metadata.plan_changes``; Delta's ``read_delta_changes`` and
-``padawan_delta_cdf`` stream share ``functions.delta.plan_delta_changes``.
-Each pair keeps its own row step (a Spark plan, Arrow in Python
-workers), and this is the check that the two steps agree."""
+``padawan_delta_cdf`` stream share ``functions.delta.plan_delta_changes``;
+Iceberg's ``read_iceberg_changes`` and ``padawan_iceberg_changes`` stream
+share ``functions.iceberg.plan_iceberg_changes``.  Each pair keeps its own
+row step (a Spark plan, Arrow in Python workers), and this is the check
+that the two steps agree."""
 
 import collections
 import datetime
@@ -29,14 +31,14 @@ def _multiset(rows):
         for r in rows)
 
 
-def _drain(spark, fmt, path, start):
-    """Every row the ``fmt`` stream emits from ``startingVersion``
-    ``start`` to the current version, drained with ``AvailableNow``."""
+def _drain(spark, fmt, path, start, option="startingVersion"):
+    """Every row the ``fmt`` stream emits from ``option`` ``start`` to
+    the current version, drained with ``AvailableNow``."""
     from padawan_spark.sources import register_python_sources
     register_python_sources(spark)
     name = "cdf_" + uuid.uuid4().hex[:8]
     q = (spark.readStream.format(fmt).option("path", path)
-         .option("startingVersion", str(start)).load()
+         .option(option, str(start)).load()
          .writeStream.format("memory").queryName(name)
          .trigger(availableNow=True).start())
     try:
@@ -68,6 +70,55 @@ def _delta_feeds(spark, path):
         yield (a, _drain(spark, "padawan_delta_cdf", path, a),
                read_delta_changes(spark, path, starting_version=a)
                .collect())
+
+
+def _iceberg_feeds(spark, path):
+    """(stream rows, batch rows) of an Iceberg table for each start: the
+    table's start and a mid-history snapshot.  The stream has no
+    ``_change_ordinal``."""
+    from padawan_spark.functions.iceberg import (list_iceberg_snapshots,
+                                                 read_iceberg_changes)
+    sids = list_iceberg_snapshots(path)
+    for a in (None, sids[(len(sids) - 1) // 2]):
+        yield (a, _drain(spark, "padawan_iceberg_changes", path, a or 0,
+                         option="startingSnapshotId"),
+               read_iceberg_changes(spark, path, from_snapshot_id=a)
+               .drop("_change_ordinal").collect())
+
+
+def _iceberg(spark, sf_dir, path):
+    """An Iceberg table partitioned by ``g`` through each change shape
+    the changelog plans: appends, overlapping position deletes, an
+    equality delete on a key already dead, a renamed column, an
+    equality delete on the renamed column that matches a NULL, a
+    whole-partition remove, and (after an upgrade to v3) a deletion
+    vector and its replacement on a file no position delete touches."""
+    from padawan_spark.functions.iceberg import (
+        evolve_iceberg_schema_fixture, set_iceberg_format_version_fixture,
+        write_iceberg_fixture)
+
+    def rows(ks):
+        return spark.createDataFrame(
+            [(k, None if k == 8 else float(k), k % 2) for k in ks],
+            "k bigint, x double, g bigint")
+
+    def write(df=None, **kw):
+        return write_iceberg_fixture(spark, df, path, partition_by=("g",),
+                                     order_by=("k",), **kw)
+
+    s1 = write(rows(range(10)))
+    s2 = write(rows(range(10, 14)))
+    write(delete_positions={f"data/snap{s1}-0.parquet": [0, 1]})
+    write(delete_positions={f"data/snap{s1}-0.parquet": [1, 2],
+                            f"data/snap{s2}-1.parquet": [0]})
+    write(delete_equality=(("k",), [(0,), (6,)]))
+    evolve_iceberg_schema_fixture(path, renames={"x": "y"})
+    write(delete_equality=(("y",), [(None,), (9.0,)]))
+    write(delete_partition={"g": 1})
+    set_iceberg_format_version_fixture(path, 3)
+    write(delete_vectors={f"data/snap{s2}-0.parquet": [0]})
+    write(delete_vectors={f"data/snap{s2}-0.parquet": [0, 1]})
+    return path
 
 
 def _evolved(spark, sf_dir, path):
@@ -111,6 +162,7 @@ def _registry(name):
     pytest.param(_padawan_feeds, _evolved, id="evolved"),
     pytest.param(_delta_feeds, _registry("src_delta_cdf_read"),
                  id="src_delta_cdf_read"),
+    pytest.param(_iceberg_feeds, _iceberg, id="iceberg"),
     pytest.param(_padawan_feeds, _registry("op_read_changes"),
                  id="op_read_changes", marks=pytest.mark.slow),
     pytest.param(_padawan_feeds, _registry("streaming_cdf_tail"),
@@ -121,6 +173,11 @@ def _registry(name):
                  id="src_delta_cdf_checkpoint", marks=pytest.mark.slow),
     pytest.param(_delta_feeds, _registry("streaming_delta_cdf"),
                  id="streaming_delta_cdf", marks=pytest.mark.slow),
+    *[pytest.param(_iceberg_feeds, _registry(name), id=name,
+                   marks=pytest.mark.slow)
+      for name in ("src_iceberg_changelog", "src_iceberg_changelog_deletes",
+                   "streaming_iceberg_changes",
+                   "streaming_iceberg_changes_deletes")],
 ])
 def test_cdf_stream_matches_batch(spark, sf_dir, tmp_path, feeds, build):
     """For each change-feed fixture, the stream drained from a start
@@ -213,3 +270,47 @@ def test_delta_cdf_mapped_field_without_physical_name(spark, tmp_path):
         read_delta_changes(spark, t)
     with pytest.raises(Exception, match="NotImplementedError.*physicalName"):
         _drain(spark, "padawan_delta_cdf", t, 0)
+
+
+def test_iceberg_changes_build_runs_no_job(spark, tmp_path, count_jobs):
+    """``read_iceberg_changes`` over two position-delete snapshots plans
+    their targets on the driver: building the query runs no Spark job,
+    and the rows are the inserts and each snapshot's newly dead rows."""
+    from padawan_spark.functions.iceberg import (read_iceberg_changes,
+                                                 write_iceberg_fixture)
+    t = str(tmp_path / "pos")
+    s1 = write_iceberg_fixture(spark, spark.range(6).withColumnRenamed(
+        "id", "k"), t, order_by=("k",))
+    fp = f"data/snap{s1}-0.parquet"
+    s2 = write_iceberg_fixture(spark, None, t, delete_positions={fp: [1, 3]})
+    s3 = write_iceberg_fixture(spark, None, t, delete_positions={fp: [3, 4]})
+    df, jobs = count_jobs(read_iceberg_changes, spark, t)
+    assert jobs == 0
+    assert sorted(tuple(r) for r in df.collect()) == sorted(
+        [(k, "insert", 0, s1) for k in range(6)]
+        + [(1, "delete", 1, s2), (3, "delete", 1, s2), (4, "delete", 2, s3)])
+
+
+def test_delta_fixture_schema_string_parses(spark, tmp_path):
+    """The Delta fixture writes its schemaString as the protocol's JSON
+    (``long``, ``integer``, not ``bigint``/``int``): Spark's own parser
+    reads the one of a flat, a partitioned and a column-mapped table."""
+    import json
+    import os
+
+    from pyspark.sql.types import StructType
+
+    from padawan_spark.functions.delta import write_delta_fixture
+    df = spark.createDataFrame(
+        [(1, 2, 3, 4, 1.5, datetime.date(2024, 1, 2))],
+        "a bigint, b int, c smallint, d tinyint, e double, f date")
+    for name, kw in (("flat", {}), ("part", {"partition_by": ("b",)}),
+                     ("mapped", {"column_mapping": True})):
+        t = str(tmp_path / name)
+        write_delta_fixture(spark, df, t, **kw)
+        with open(os.path.join(t, "_delta_log", f"{0:020d}.json")) as fh:
+            meta = next(json.loads(line)["metaData"] for line in fh
+                        if "metaData" in json.loads(line))
+        schema = StructType.fromJson(json.loads(meta["schemaString"]))
+        assert schema.simpleString() == ("struct<a:bigint,b:int,c:smallint,"
+                                         "d:tinyint,e:double,f:date>"), name

@@ -4302,7 +4302,7 @@ def test_delta_type_widening_reads(spark, tmp_path):
                      ["metaData"]["schemaString"])
     a_fld = next(f for f in sch["fields"] if f["name"] == "a")
     assert a_fld["metadata"]["delta.typeChanges"] == [
-        {"fromType": "int", "toType": "long"}]
+        {"fromType": "integer", "toType": "long"}]
     proto = next(a for a in acts if "protocol" in a)["protocol"]
     assert "typeWidening" in proto["readerFeatures"]
     assert proto["minReaderVersion"] == 3

@@ -1,6 +1,8 @@
 """The registry's temporary inputs: every query that writes files does so
 under one per-process root that :mod:`padawan_spark.queries.registry`
-creates and removes, and a read-only input is built once per process."""
+creates and removes, and a read-only input is built once per process.
+The per-process Spark warehouse ``get_spark`` sets is removed the same
+way."""
 
 import ast
 import os
@@ -112,3 +114,37 @@ def test_child_process_removes_its_root(sf_dir):
     root = out.stdout.strip().splitlines()[-1]
     assert os.path.basename(root).startswith("padawan_")
     assert not os.path.exists(root)
+
+
+_WAREHOUSE_CHILD = """
+import os, sys
+from urllib.parse import urlparse
+from padawan_spark import get_spark
+
+own = {"spark.sql.warehouse.dir": sys.argv[1]} if sys.argv[1:] else None
+spark = get_spark(master="local[1]", extra_conf=own)
+spark.range(3).write.saveAsTable("t")
+wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+assert os.path.isdir(os.path.join(wh, "t")), wh
+print(wh)
+"""
+
+
+def test_child_process_removes_its_warehouse(tmp_path):
+    """A process whose session uses the default per-process warehouse
+    removes it at exit, tables and all; a session given its own
+    ``spark.sql.warehouse.dir`` keeps it."""
+    def run(*args):
+        out = subprocess.run(
+            [sys.executable, "-c", _WAREHOUSE_CHILD, *args], cwd=_ROOT,
+            capture_output=True, text=True, timeout=300,
+            env=dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g"))
+        assert out.returncode == 0, out.stderr
+        return out.stdout.strip().splitlines()[-1]
+
+    wh = run()
+    assert os.path.basename(wh).startswith("padawan_warehouse_")
+    assert not os.path.exists(wh)
+    own = str(tmp_path / "wh")
+    assert run(own) == own
+    assert os.path.isdir(os.path.join(own, "t"))
